@@ -181,7 +181,8 @@ final class GraftCollection(s: GraftSession, val ns: Namespace)
       val (stages0, outOpt) = PipelineCompiler.splitOut(pipeline)
       val (stages, mergeOpt) = PipelineCompiler.splitMerge(stages0)
       val result = PipelineCompiler.compile(stages, tables =
-        other => s.spark.read.parquet(Namespace(ns.db, other).path(s.root)))(df)
+        other => graft.sources.Tables.load(s.spark,
+          Namespace(ns.db, other).path(s.root)))(df)
       if (outOpt.isDefined) {
         // doc form {$out: {db, coll}} may target a sibling DATABASE
         val out = outOpt.get
@@ -195,7 +196,7 @@ final class GraftCollection(s: GraftSession, val ns: Namespace)
         val p = new org.apache.hadoop.fs.Path(targetPath)
         if (fs.exists(p)) fs.delete(p, true)
         fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-        s.spark.read.parquet(targetPath)
+        graft.sources.Tables.load(s.spark, targetPath)
       } else mergeOpt match {
         case None => result
         case Some(m) =>
@@ -205,7 +206,8 @@ final class GraftCollection(s: GraftSession, val ns: Namespace)
             s.spark.sparkContext.hadoopConfiguration)
           val exists = fs.exists(new org.apache.hadoop.fs.Path(targetPath))
           val base =
-            if (exists) s.spark.read.parquet(targetPath) else result.limit(0)
+            if (exists) graft.sources.Tables.load(s.spark, targetPath)
+            else result.limit(0)
           val keys = base.select(m.on.map(col): _*).distinct()
           // one pass shared by the matched/unmatched splits below;
           // unpersisted in the finally — a fail-mode throw or a failed
@@ -288,7 +290,7 @@ final class GraftCollection(s: GraftSession, val ns: Namespace)
             val p = new org.apache.hadoop.fs.Path(targetPath)
             if (fs.exists(p)) fs.delete(p, true)
             fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-            s.spark.read.parquet(targetPath)
+            graft.sources.Tables.load(s.spark, targetPath)
           } finally res.unpersist()
       }
     }(_ => 0L)

@@ -524,30 +524,76 @@ final class NamespaceLease(spark: SparkSession, root: String,
 
 /** Migration metadata ledger — reference MigrationHelper.SaveMigrationEvent
   * + anser.migrations.metadata (migration_helper_iterator.go:56-107,
-  * environment.go:26-29). Small state table, upserted by id. */
+  * environment.go:26-29). Small state table, upserted by id.
+  *
+  * The rows are bounded by the number of migrations, not the data, so the
+  * ledger is one JSON-lines file (one [[MigrationMetadata]] object per
+  * line) that the driver reads and rewrites through the Hadoop
+  * `FileSystem` of its path: recording or checking a migration launches
+  * no Spark job. */
 final class MetadataLedger(spark: SparkSession, path: String) {
-  import spark.implicits._
+  import org.apache.hadoop.fs.Path
 
   // resolved from the ledger path (not fs.defaultFS, not java.io) so
   // the ledger works on whatever filesystem the root names
-  private def fs = new org.apache.hadoop.fs.Path(path)
+  private def fs = new Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val file = new Path(path)
+  private val tmp = new Path(path + ".tmp")
+  private val bak = new Path(path + ".bak")
 
-  def all(): DataFrame =
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.parquet(path)
-    else Seq.empty[MigrationMetadata].toDF()
+  /** Every recorded row. A `.tmp` left by a crashed writer is never read;
+    * `.bak` is read only while a writer that had to move the old file
+    * aside (see [[record]]) has not put the new one in place. */
+  def rows(): Seq[MigrationMetadata] =
+    read(file).orElse(read(bak)).getOrElse(Nil)
 
-  def record(m: MigrationMetadata): Unit = withLock {
-    // tiny state table: rows bounded by the number of migrations, not the
-    // data — collect + rewrite wholesale is the right scale trade-off.
-    val existing = all().as[MigrationMetadata].collect().toSeq
-      .filterNot(_._id == m._id)
-    (existing :+ m).toDF().coalesce(1).write.mode("overwrite").parquet(path)
+  private def read(p: Path): Option[Seq[MigrationMetadata]] = {
+    val in = try fs.open(p)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          if (fs.exists(p)) throw new IllegalStateException(s"ledger $p " +
+            "is a directory (the parquet ledger of earlier versions); " +
+            "rewrite its rows as JSON lines or remove it", e)
+          return None
+      }
+    val text = try new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+      finally in.close()
+    Some(text.split('\n').toSeq.filter(_.nonEmpty).map { line =>
+      val n = MetadataLedger.json.readTree(line)
+      MigrationMetadata(n.get("_id").asText, n.get("migration").asText,
+        n.get("has_errors").asBoolean, n.get("completed").asBoolean)
+    })
   }
 
-  // the read-modify-write above is not atomic; a second app sharing the
-  // ledger would lose updates. Guard with an atomically-created lock file
+  /** Upsert by id: the whole file is rewritten to `<path>.tmp` and renamed
+    * over the old one, so a reader sees the old rows or the new, never a
+    * partial file. */
+  def record(m: MigrationMetadata): Unit = withLock {
+    val next = rows().filterNot(_._id == m._id) :+ m
+    val out = fs.create(tmp, true)
+    try next.foreach { r =>
+      val n = MetadataLedger.json.createObjectNode()
+        .put("_id", r._id).put("migration", r.migration)
+        .put("has_errors", r.has_errors).put("completed", r.completed)
+      out.write((MetadataLedger.json.writeValueAsString(n) + "\n")
+        .getBytes("UTF-8"))
+    } finally out.close()
+    // a POSIX rename replaces the destination atomically; HDFS and object
+    // stores refuse an existing one, so there the old file steps aside
+    // to .bak (still readable) until the new file is in place
+    if (!fs.rename(tmp, file)) {
+      fs.delete(bak, false)
+      fs.rename(file, bak)
+      if (!fs.rename(tmp, file))
+        throw new java.io.IOException(s"could not rename $tmp to $file")
+    }
+    fs.delete(bak, false)
+  }
+
+  // the read-modify-write in record is not atomic; a second app sharing
+  // the ledger would lose updates. Guard with an atomically-created lock file
   // (reference relies on mongo's per-document atomicity instead).
   private def withLock[T](body: => T): T = {
     val lock = new org.apache.hadoop.fs.Path(path + ".lock")
@@ -594,7 +640,9 @@ final class MetadataLedger(spark: SparkSession, path: String) {
 
   /** dependency gate — reference Satisfied() model/metadata.go:12 +
     * processEdges dependency_manager.go:60-93. */
-  def satisfied(id: String): Boolean =
-    all().where(col("_id") === id && col("completed") && !col("has_errors"))
-      .limit(1).count() > 0
+  def satisfied(id: String): Boolean = rows().exists(r => r._id == id && r.satisfied)
+}
+
+object MetadataLedger {
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
 }

@@ -6,7 +6,9 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -20,9 +22,16 @@ import scala.jdk.CollectionConverters._
   * same truncation DuckDB applies when it reads ns parquet), so the rest of
   * the engine sees ordinary timestamps.
   *
-  * At 100 TB scale this is a metadata-only operation: one footer read on the
-  * driver plus a codegen'd `timestamp_micros(c div 1000)` projection that
-  * fuses into the scan stage (no extra shuffle or pass).
+  * The same footer also gives the table's schema: Spark's own converter
+  * turns it into the `StructType` that `spark.read.parquet` would infer,
+  * and the read passes it as the user schema. That skips the one-task
+  * schema-inference job Spark runs on every plain `spark.read.parquet`,
+  * so loading a table launches no Spark job.
+  *
+  * At 100 TB scale this is a metadata-only operation: one directory
+  * listing and one footer read on the driver, plus a codegen'd
+  * `timestamp_micros(c div 1000)` projection that fuses into the scan stage
+  * (no extra shuffle or pass).
   */
 object Tables {
 
@@ -31,10 +40,18 @@ object Tables {
 
   def load(spark: SparkSession, path: String): DataFrame = {
     // runtime-settable legacy conf; required before the scan is planned
+    // and before the footer schema is converted
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val nanosCols = nanosTimestampColumns(spark, path)
-    val df = spark.read.parquet(path)
-    nanosCols.foldLeft(df) { (d, c) =>
+    val footer = firstFooter(spark, path)
+    // Spark's inference answers differently when it merges every file's
+    // schema, and when there is no single data file to read (its error
+    // for an empty directory is kept)
+    val merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
+    val df = footer match {
+      case Some(f) if !merge => spark.read.schema(f.schema).parquet(path)
+      case _ => spark.read.parquet(path)
+    }
+    footer.toSeq.flatMap(_.nanosColumns).foldLeft(df) { (d, c) =>
       // integer `div`, not `/`: a double roundtrip would lose precision on
       // ~1.7e18 nanosecond values (53-bit mantissa)
       d.withColumn(c, timestamp_micros(expr(s"`$c` div 1000L")))
@@ -65,28 +82,48 @@ object Tables {
     }.sum
   }
 
-  /** Top-level INT64 TIMESTAMP(NANOS) columns, from the first footer. */
-  private def nanosTimestampColumns(spark: SparkSession, path: String)
-      : Seq[String] = {
+  /** What the footer Spark's inference reads says about a table: the schema
+    * `spark.read.parquet` infers (mergeSchema off, nanos read as longs)
+    * and the top-level INT64 TIMESTAMP(NANOS) columns. */
+  private final case class TableFooter(schema: StructType, nanosColumns: Seq[String])
+
+  /** Reads the footer of the file Spark's inference reads (with
+    * mergeSchema off, `ParquetUtils.inferSchema`): the path itself, or in
+    * a flat directory `_common_metadata`, else `_metadata`, else the first
+    * visible file by path. None for a directory with subdirectories
+    * (partitioned layout, left to Spark) or with no file at all. */
+  private def firstFooter(spark: SparkSession, path: String): Option[TableFooter] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
     val fs = FileSystem.get(p.toUri, conf)
     val file: Path =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-          .getOrElse(return Nil)
-      else p
+      if (fs.getFileStatus(p).isDirectory) {
+        val children = fs.listStatus(p).filterNot(c => hidden(c.getPath.getName))
+        if (children.exists(_.isDirectory)) return None
+        val files = children.map(_.getPath).sortBy(_.toString)
+        files.find(_.getName == "_common_metadata")
+          .orElse(files.find(_.getName == "_metadata"))
+          .orElse(files.find(f => !summary(f.getName)))
+          .getOrElse(return None)
+      } else p
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-        case f if f.isPrimitive &&
-            (f.getLogicalTypeAnnotation match {
-              case t: TimestampLogicalTypeAnnotation =>
-                t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
-              case _ => false
-            }) => f.getName
-      }.toSeq
-    } finally reader.close()
+    val footer = try reader.getFooter finally reader.close()
+    val nanos = footer.getFileMetaData.getSchema.getFields.asScala.collect {
+      case f if f.isPrimitive &&
+          (f.getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation =>
+              t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+            case _ => false
+          }) => f.getName
+    }.toSeq
+    Some(TableFooter(FooterSchema.of(spark, file, footer), nanos))
   }
+
+  // Spark's file-listing rules (InMemoryFileIndex.shouldFilterOutPathName,
+  // ParquetUtils.splitFiles)
+  private def summary(name: String): Boolean =
+    name == "_metadata" || name == "_common_metadata"
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) && !summary(name)
 }

@@ -406,6 +406,38 @@ class BackupSpec extends SparkSpec {
     assert(meta.contains(
       """{"name": "v", "null_count": 1, "min": "10", "max": "30"}"""))
   }
+
+  test("backup writes, counts and gathers stats in one Spark job") {
+    val dir = Files.createTempDirectory("graft-bak-jobs").toString
+    Seq((1L, "x", Some(10)), (2L, "y", None), (3L, "z", Some(30)))
+      .toDF("_id", "s", "v").write.parquet(s"$dir/src.parquet")
+    val df = graft.sources.Tables.load(spark, s"$dir/src.parquet")
+    val (n, jobs) = jobsIn(Backup.collection(spark, df, s"$dir/out"))
+    assert(n == 3 && jobs == 1)
+    val (nj, jobsJ) = jobsIn(Backup.collectionJsonl(spark, df, s"$dir/outj"))
+    assert(nj == 3 && jobsJ == 1)
+    val (nm, jobsM) = jobsIn(Backup.collection(spark, df, s"$dir/outm",
+      BackupOptions(metadataOnly = true)))
+    assert(nm == 3 && jobsM == 1)
+    for (t <- Seq("out", "outj", "outm")) {
+      val meta = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/$t.meta.json")))
+      assert(meta.contains("\"rows\": 3"), t)
+      assert(meta.contains(
+        """{"name": "v", "null_count": 1, "min": "10", "max": "30"}"""), t)
+    }
+  }
+
+  test("an export that matches nothing records zero rows") {
+    val df = Seq((1L, "x"), (2L, "y")).toDF("_id", "s")
+    val target = Files.createTempDirectory("graft-bak-empty").toString + "/out"
+    val n = Backup.collection(spark, df, target,
+      BackupOptions(query = Map("_id" -> Map("$gt" -> 5L))))
+    assert(n == 0 && spark.read.parquet(target).count() == 0)
+    val meta = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(target + ".meta.json")))
+    assert(meta.contains("\"rows\": 0"))
+  }
 }
 
 class ApmSpec extends SparkSpec {
@@ -544,11 +576,174 @@ class ApmSpec extends SparkSpec {
 }
 
 class TablesSpec extends SparkSpec {
+  import spark.implicits._
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types.StructType
+  import TablesSpec.writeNanos
+
+  private val sf = "/root/testdata/sf0.001"
+  private val baseNanos = 1705276800000000000L // 2024-01-15T00:00:00Z
 
   test("nanos timestamps normalize to microsecond TimestampType") {
     // The driver has shipped events.ts as both INT64 TIMESTAMP(NANOS) and
     // plain µs parquet across rounds; synthesize a nanos file so this path
     // stays covered regardless of the current testdata encoding.
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos")
+    val file = s"$dir/nanos.parquet"
+    // a sub-µs remainder that the normalization must floor away
+    writeNanos(file, (0 until 3).map(i => (i.toLong, baseNanos + i * 1000000000L + 123L)))
+    val df = graft.sources.Tables.load(spark, file)
+    assert(df.schema("ts").dataType.typeName == "timestamp")
+    val first = df.orderBy("event_id").select("ts").head().getTimestamp(0)
+    assert(first.toInstant == java.time.Instant.parse("2024-01-15T00:00:00Z"))
+  }
+
+  test("events table loads with a timestamp-typed ts either encoding") {
+    val df = graft.sources.Tables.table(spark, sf, "events")
+    // µs parquet without UTC adjustment reads as timestamp_ntz; nanos reads
+    // normalize to timestamp — both are event-time-usable downstream
+    assert(df.schema("ts").dataType.typeName.startsWith("timestamp"))
+    assert(df.count() > 0)
+  }
+
+  test("tables without nanos columns load unchanged") {
+    val df = graft.sources.Tables.table(spark, sf, "orders")
+    // ms-precision parquet without UTC adjustment reads as timestamp_ntz
+    assert(df.schema("o_orderdate").dataType.typeName.startsWith("timestamp"))
+    assert(df.count() == 1500)
+  }
+
+  /** The loader's schema before it read schemas from footers: Spark's
+    * inference (`spark.read.parquet`), then the nanos conversion of the
+    * top-level TIMESTAMP(NANOS) columns of the first `.parquet` file. */
+  private def inferredSchema(path: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).map(_.getPath)
+        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+      else Some(p)
+    val nanos = file.toSeq.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try r.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
+        case t if t.isPrimitive && (t.getLogicalTypeAnnotation match {
+          case a: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+            a.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+          case _ => false
+        }) => t.getName
+      } finally r.close()
+    }
+    nanos.foldLeft(spark.read.parquet(path)) { (d, c) =>
+      d.withColumn(c, timestamp_micros(expr(s"`$c` div 1000L")))
+    }.schema
+  }
+
+  test("footer-derived schemas equal Spark's inferred ones") {
+    val tables = new java.io.File(sf).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted.toSeq
+    assert(tables.nonEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("graft-schemas").toString
+    // Spark-written: nested, decimal, several files, a partitioned layout
+    spark.range(0, 40, 1, 4).select(
+      col("id").as("_id"),
+      struct(col("id").as("a"), (col("id") * 0.5).as("b"),
+        struct(col("id").cast("string").as("c")).as("inner")).as("st"),
+      array(col("id"), col("id") + 1).as("arr"),
+      array(struct(col("id").as("k"))).as("arr_st"),
+      map(col("id").cast("string"), col("id") * 2.0).as("m"),
+      (col("id") / 3).cast("decimal(20,4)").as("dec"),
+      (col("id") % 2 === 0).as("flag"),
+      when(col("id") % 5 === 0, lit(null)).otherwise(col("id").cast("string"))
+        .as("maybe"),
+      current_date().as("d"), timestamp_micros(col("id")).as("ts"),
+      col("id").cast("string").cast("binary").as("bin"))
+      .write.parquet(s"$dir/spark.parquet")
+    spark.range(0, 20).select(col("id"), (col("id") % 3).as("part"))
+      .write.partitionBy("part").parquet(s"$dir/partitioned.parquet")
+    writeNanos(s"$dir/nanos.parquet", Seq((1L, baseNanos)))
+    // a Spark-written directory holding a nanos file
+    new java.io.File(s"$dir/nanos_dir.parquet").mkdir()
+    writeNanos(s"$dir/nanos_dir.parquet/part-0.parquet", Seq((1L, baseNanos)))
+    val written = Seq("spark", "partitioned", "nanos", "nanos_dir")
+      .map(n => s"$dir/$n.parquet")
+    for (path <- tables ++ written) {
+      val got = graft.sources.Tables.load(spark, path).schema
+      assert(got == inferredSchema(path), path)
+    }
+    assert(graft.sources.Tables.load(spark, s"$dir/nanos_dir.parquet")
+      .schema("ts").dataType.typeName == "timestamp")
+  }
+
+  test("an empty directory keeps Spark's inference error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      graft.sources.Tables.load(spark, dir))
+    assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
+      e.getMessage.contains("Unable to infer schema"))
+  }
+
+  test("mergeSchema still merges every file's schema") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-merge-schema").toString
+    // one flat directory, two files with different columns
+    Seq((1L, "a")).toDF("_id", "s").coalesce(1).write.parquet(s"$dir/a")
+    Seq((2L, 2.0)).toDF("_id", "v").coalesce(1).write.parquet(s"$dir/b")
+    Files.createDirectory(Paths.get(s"$dir/t.parquet"))
+    for (part <- Seq("a", "b")) {
+      val f = new java.io.File(s"$dir/$part").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.move(f.toPath, Paths.get(s"$dir/t.parquet/$part.parquet"))
+    }
+    assert(graft.sources.Tables.load(spark, s"$dir/t.parquet").columns
+      .toSeq == Seq("_id", "s"))
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      val df = graft.sources.Tables.load(spark, s"$dir/t.parquet")
+      assert(df.columns.toSet == Set("_id", "s", "v"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("Tables.load launches no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-load-jobs").toString
+    spark.range(0, 10, 1, 2).write.parquet(s"$dir/t.parquet")
+    writeNanos(s"$dir/nanos.parquet", Seq((1L, baseNanos)))
+    for (path <- Seq(s"$sf/orders.parquet",
+        s"$dir/t.parquet", s"$dir/nanos.parquet")) {
+      val (df, jobs) = jobsIn(graft.sources.Tables.load(spark, path))
+      assert(jobs == 0, path)
+      assert(df.count() > 0)
+    }
+  }
+
+  test("$lookup of a nanos collection yields TimestampType") {
+    val root = java.nio.file.Files.createTempDirectory("graft-lookup-nanos").toString
+    Seq((1L, "a"), (2L, "b")).toDF("event_id", "cat")
+      .write.parquet(s"$root/src.parquet")
+    writeNanos(s"$root/events.parquet",
+      Seq((1L, baseNanos + 123L), (2L, baseNanos + 1000000000L)))
+    val out = new GraftSession(spark, root).db("d").c("src").pipe(Seq(
+      Map("$lookup" -> Map("from" -> "events", "localField" -> "event_id",
+        "foreignField" -> "event_id", "as" -> "ev"))))
+    val ev = out.schema("ev").dataType
+      .asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .elementType.asInstanceOf[StructType]
+    assert(ev("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val ts = out.where($"event_id" === 1L).select(col("ev")(0)("ts"))
+      .head().getTimestamp(0)
+    assert(ts.toInstant == java.time.Instant.parse("2024-01-15T00:00:00Z"))
+  }
+}
+
+object TablesSpec {
+  /** Writes `(event_id, ts)` rows to a parquet file whose `ts` is INT64
+    * TIMESTAMP(NANOS), an encoding Spark itself cannot write. */
+  def writeNanos(file: String, rows: Seq[(Long, Long)]): Unit = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
@@ -556,8 +751,6 @@ class TablesSpec extends SparkSpec {
     import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.hadoop.conf.Configuration
-    val dir = java.nio.file.Files.createTempDirectory("graft-nanos")
-    val file = s"$dir/nanos.parquet"
     val schema = Types.buildMessage()
       .addField(Types.required(PrimitiveTypeName.INT64).named("event_id"))
       .addField(Types.required(PrimitiveTypeName.INT64)
@@ -571,35 +764,12 @@ class TablesSpec extends SparkSpec {
         new org.apache.hadoop.fs.Path(file), conf))
       .withConf(conf).build()
     val gf = new SimpleGroupFactory(schema)
-    // 2024-01-15T00:00:00Z in nanos, plus a sub-µs remainder that the
-    // normalization must floor away
-    val baseNanos = 1705276800000000000L
-    (0 until 3).foreach { i =>
+    try rows.foreach { case (id, ts) =>
       val g = gf.newGroup()
-      g.add("event_id", i.toLong)
-      g.add("ts", baseNanos + i * 1000000000L + 123L)
+      g.add("event_id", id)
+      g.add("ts", ts)
       w.write(g)
-    }
-    w.close()
-    val df = graft.sources.Tables.load(spark, file)
-    assert(df.schema("ts").dataType.typeName == "timestamp")
-    val first = df.orderBy("event_id").select("ts").head().getTimestamp(0)
-    assert(first.toInstant == java.time.Instant.parse("2024-01-15T00:00:00Z"))
-  }
-
-  test("events table loads with a timestamp-typed ts either encoding") {
-    val df = graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "events")
-    // µs parquet without UTC adjustment reads as timestamp_ntz; nanos reads
-    // normalize to timestamp — both are event-time-usable downstream
-    assert(df.schema("ts").dataType.typeName.startsWith("timestamp"))
-    assert(df.count() > 0)
-  }
-
-  test("tables without nanos columns load unchanged") {
-    val df = graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "orders")
-    // ms-precision parquet without UTC adjustment reads as timestamp_ntz
-    assert(df.schema("o_orderdate").dataType.typeName.startsWith("timestamp"))
-    assert(df.count() == 1500)
+    } finally w.close()
   }
 }
 

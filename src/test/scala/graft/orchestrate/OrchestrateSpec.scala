@@ -217,6 +217,77 @@ class MigrationAppSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(lock), "lock released after write")
   }
 
+  test("ledger is a JSON-lines file; record and satisfied launch no job") {
+    val root = freshRoot()
+    val ledger = new MetadataLedger(spark, s"$root/ledger")
+    val (_, jobs) = jobsIn {
+      ledger.record(MigrationMetadata("m1", "m1", has_errors = false,
+        completed = true))
+      ledger.record(MigrationMetadata("m2", "m2", has_errors = true,
+        completed = true))
+      // upsert by id: m2 is replaced, not duplicated
+      ledger.record(MigrationMetadata("m2", "m2", has_errors = false,
+        completed = true))
+      assert(ledger.satisfied("m1") && ledger.satisfied("m2"))
+      assert(!ledger.satisfied("m3"))
+    }
+    assert(jobs == 0)
+    val lines = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(s"$root/ledger"))
+    assert(lines.size == 2)
+    assert(lines.get(0) ==
+      """{"_id":"m1","migration":"m1","has_errors":false,"completed":true}""")
+    assert(ledger.rows().map(_._id) == Seq("m1", "m2"))
+  }
+
+  test("ledger: a crashed writer's leftovers never hide the recorded rows") {
+    val root = freshRoot()
+    val dir = java.nio.file.Paths.get(root)
+    val ledger = new MetadataLedger(spark, s"$root/ledger")
+    ledger.record(MigrationMetadata("m1", "m1", has_errors = false,
+      completed = true))
+    // a writer that died while writing its replacement: a torn .tmp
+    java.nio.file.Files.writeString(dir.resolve("ledger.tmp"),
+      """{"_id":"m2","migr""")
+    assert(ledger.rows().map(_._id) == Seq("m1"))
+    assert(ledger.satisfied("m1") && !ledger.satisfied("m2"))
+    // the next record ignores the leftover and overwrites it
+    ledger.record(MigrationMetadata("m2", "m2", has_errors = false,
+      completed = true))
+    assert(ledger.rows().map(_._id) == Seq("m1", "m2"))
+    assert(!java.nio.file.Files.exists(dir.resolve("ledger.tmp")))
+    // a writer that died between moving the old file aside (filesystems
+    // whose rename refuses an existing destination) and renaming the new
+    // one in: the previous rows stay readable from .bak
+    java.nio.file.Files.move(dir.resolve("ledger"), dir.resolve("ledger.bak"))
+    java.nio.file.Files.writeString(dir.resolve("ledger.tmp"), "")
+    assert(ledger.rows().map(_._id) == Seq("m1", "m2"))
+    ledger.record(MigrationMetadata("m3", "m3", has_errors = false,
+      completed = true))
+    assert(ledger.rows().map(_._id) == Seq("m1", "m2", "m3"))
+    assert(!java.nio.file.Files.exists(dir.resolve("ledger.bak")))
+  }
+
+  test("a ledger left as a directory fails loudly") {
+    val root = freshRoot()
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$root/ledger"))
+    val e = intercept[IllegalStateException](
+      new MetadataLedger(spark, s"$root/ledger").satisfied("m1"))
+    assert(e.getMessage.contains("is a directory"))
+  }
+
+  test("a two-migration run launches only its two write jobs") {
+    val root = freshRoot()
+    val app = new MigrationApp(spark, root)
+    app.setup(Seq(
+      simple("second", deps = Seq("first"), query = Map("cat" -> "warm"),
+        update = Map("$set" -> Map("cat" -> "hot"))),
+      simple("first", update = Map("$set" -> Map("cat" -> "warm")))))
+    val (res, jobs) = jobsIn(app.run())
+    assert(res.forall(!_.hasErrors) && res.map(_.matched) == Seq(3L, 3L))
+    assert(jobs == 2)
+  }
+
   test("matched counts are observed in the write job, not a second scan") {
     val root = freshRoot()
     val app = new MigrationApp(spark, root)
