@@ -1,12 +1,17 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Ad-hoc per-JOB profiler: runs the named queries once and prints every
   * Spark job's wall seconds with its call site — the decisive view at
   * bench scale, where per-query seconds are dominated by the NUMBER of
   * sequential actions (checkpoints, valve probes, store-parameter probes,
-  * persists, writes) rather than data volume.
+  * persists, writes) rather than data volume. Next to the job count it
+  * prints the query's Janino compiles and their milliseconds: a query
+  * whose generated classes overflow Spark's codegen cache recompiles
+  * them on every run.
   * `runMain graft.ProfileProbe q253_embed_curate_incremental` */
 object ProfileProbe {
   def main(args: Array[String]): Unit = {
@@ -42,15 +47,20 @@ object ProfileProbe {
     Thread.sleep(300)
     for (q <- qs) {
       done.clear()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       SparkEntry.queries(q)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       graft.ops.Dedup.releaseCaches()
       spark.catalog.clearCache()
       Thread.sleep(500)
       import scala.jdk.CollectionConverters._
       val ds = done.asScala.toSeq.sortBy(_._1)
       println(f"[profile] $q total $dt%.2f s, ${ds.size} jobs, " +
+        f"$compiles compiles ($compileMs%.0f ms), " +
         f"job-sum ${ds.map(_._3).sum}%.2f s")
       ds.foreach { case (id, tag, s) =>
         println(f"  job $id%4d $s%7.3f s  $tag")

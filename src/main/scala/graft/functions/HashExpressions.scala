@@ -9,10 +9,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Cheap deterministic string hashing for hot hashed-feature paths.
   *
-  * [[TextFunctions.hash60]] (md5 → hex substring → radix conversion) is
-  * oracle-reproducible but pays a digest allocation plus two string
-  * conversions per call — measurable when the call count is "one per
-  * n-gram of a 100 TB corpus" (DSIR's scoring pass). [[Fnv.hash60]] is
+  * [[TextFunctions.hash60]] (the first 60 bits of md5, a native
+  * expression reading the digest bytes) is oracle-reproducible but runs
+  * a full MD5 block compression per call — measurable when the call
+  * count is "one per n-gram of a 100 TB corpus" (DSIR's scoring pass). [[Fnv.hash60]] is
   * the published FNV-1a 64-bit fold, one multiply+xor per character,
   * masked to the same non-negative 60-bit range, and still reproducible
   * in plain integer SQL (DuckDB: HUGEINT multiply mod 2^64 + a low-bits

@@ -137,6 +137,7 @@ case class FloatVecSqDist(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
+      val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val acc = ctx.freshName("acc")
       val diff = ctx.freshName("diff")
@@ -146,12 +147,13 @@ case class FloatVecSqDist(left: Expression, right: Expression)
       val rGet = if (elemIsFloat(right)) s"(double) $y.getFloat($i)"
                  else s"$y.getDouble($i)"
       s"""
-         |if ($x.numElements() != $y.numElements()) {
+         |int $n = $x.numElements();
+         |if ($n != $y.numElements()) {
          |  ${ev.isNull} = true;
          |} else {
          |  double $acc = 0.0;
          |  boolean $bad = false;
-         |  for (int $i = 0; $i < $x.numElements(); $i++) {
+         |  for (int $i = 0; $i < $n; $i++) {
          |    if ($x.isNullAt($i) || $y.isNullAt($i)) { $bad = true; break; }
          |    double $diff = $lGet - $rGet;
          |    $acc += $diff * $diff;

@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   *
   *   language gate → quality floor → exact dedup → deterministic sample
   *
-  * Plan shape at 100 TB: the language and quality gates are codegen'd
-  * Column predicates evaluated IN the scan (they fold into one stage and
-  * push column pruning down), exact dedup is the cascade's single hash
+  * Plan shape at 100 TB: the language and quality gates are native
+  * codegen'd expressions (one pass over the text's bytes each, no
+  * lambdas) evaluated IN the scan stage — they fold into one stage and
+  * push column pruning down; the pushed-down filter and the diagnostic
+  * columns each evaluate them — exact dedup is the cascade's single hash
   * shuffle (first-id survivor per content hash via one window), and the
   * sample is pure hash math on the id. The whole cascade costs one
   * shuffle regardless of corpus size, and every gate is deterministic —

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import TextFunctions._
 
 /** Deduplication operators for training-data pipelines, all shaped for
@@ -374,20 +375,22 @@ object Dedup {
   /** MinHash signatures: for permutation i, h_i(doc) = min over shingles of
     * ((a_i * (H mod M) + b_i) mod M) with deterministic constants
     * a_i = 2i+3, b_i = i²+1, M = 2^31-1 (products stay < 2^40, no
-    * overflow). One explode + one aggregate with numPerms min() columns. */
+    * overflow). Docs with fewer than k tokens have no shingle and no row.
+    *
+    * Shape: the signature is a per-document min-sketch built on the map
+    * side by one native expression ([[graft.functions.MinhashSignature]]
+    * — no shingle explode: shingle rows never exist); one aggregate then
+    * takes the per-coordinate min over rows that share an id (min-sketches
+    * merge by min), exchanging doc-sized rows of numPerms longs. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       k: Int, numPerms: Int): DataFrame = {
-    val sh = df
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
-      .select(col("id"),
-        explode(array_distinct(shinglesOfTokens(col("__toks"), k)))
-          .as("sh"))
-      .withColumn("h", tokenHash(col("sh")))
-    val mins = (0 until numPerms).map { i =>
-      min((col("h") * lit(2L * i + 3) + lit(1L * i * i + 1)) % lit(HashMod))
-        .as(s"mh$i")
-    }
-    sh.groupBy("id").agg(mins.head, mins.tail: _*)
+    val sig = ColumnBridge.column(graft.functions.MinhashSignature(
+      ColumnBridge.expression(col(textCol)), k, numPerms))
+    val sigs = df.select(col(idCol).as("id"), sig.as("__sig"))
+      .where(col("__sig").isNotNull)
+    val mins = (0 until numPerms).map(i =>
+      min(col("__sig").getItem(i)).as(s"mh$i"))
+    sigs.groupBy("id").agg(mins.head, mins.tail: _*)
   }
 
   /** MinHash + LSH candidate pairs: signatures are split into `bands`
@@ -395,8 +398,8 @@ object Dedup {
     * candidates. The band join is a shuffle on the band key — the classic
     * sub-quadratic near-dup plan for 100 TB corpora.
     *
-    * Plan shape matters: signatures are persisted (computing them costs an
-    * explode + wide aggregate; without the persist the band self-join
+    * Plan shape matters: signatures are persisted (computing them costs a
+    * text scan + an aggregate; without the persist the band self-join
     * recomputes that subplan once per side — 8× at 4 bands) and all bands
     * come from ONE pass via a struct explode rather than a per-band union.
     * The persisted frame is registered for [[releaseCaches]]; call it after

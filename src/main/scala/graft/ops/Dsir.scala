@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   * FNV-1a [[graft.functions.Fnv.hash60]] (a native expression — one
   * multiply+xor per character inside codegen, reproduced by the DuckDB
   * oracle in plain integer SQL; the md5-derived
-  * [[TextFunctions.hash60]] it replaced paid a digest allocation plus
-  * two string conversions PER N-GRAM, the dominant constant factor of
-  * the 100× scoring pass) and the Gumbel noise is computed from a
+  * [[TextFunctions.hash60]] it replaced pays an MD5 digest PER N-GRAM,
+  * the dominant constant factor of the 100× scoring pass) and the Gumbel noise is computed from a
   * hashed uniform of the document id + salt, so the "random" sample is
   * a pure function of the data — stable across runs, retries, and
   * engines, like every sampler in [[Sampling]].

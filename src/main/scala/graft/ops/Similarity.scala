@@ -421,10 +421,8 @@ object Similarity {
     * component i of plane j = hash60("plane<j>-<i>") % 2001 - 1000. */
   private[graft] def planeVector(j: Int, dim: Int): Array[Double] =
     Array.tabulate(dim) { i =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"plane$j-$i".getBytes("UTF-8"))
-      val hex = md.map("%02x".format(_)).mkString.take(15)
-      (java.lang.Long.parseLong(hex, 16) % 2001L - 1000L).toDouble
+      (graft.functions.TextKernels.md5Prefix60(s"plane$j-$i") % 2001L -
+        1000L).toDouble
     }
 
   /** Sign-pattern LSH bucket id from `nPlanes` hyperplanes of table

@@ -1,18 +1,26 @@
 package graft.ops
 
+import graft.functions.{LangId, LangIdMargin, MarkerScore, MarkerTable, Md5Prefix60, QualityScore}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, language ID, quality scoring, token counting, document
-  * fingerprinting. All pure `Column` expressions (whole-stage codegen, no
-  * UDFs) so they fuse into the scan stage and cost one pass at 100 TB.
+  * fingerprinting. All `Column` expressions — Spark built-ins or the
+  * engine's native codegen'd expressions (`graft.functions`), no UDFs — so
+  * they fuse into the scan stage and cost one pass at 100 TB.
   *
   * Determinism contract: every function here is reproducible across engines
   * (hashes derived from md5; integer arithmetic; fixed tie-break order) so
   * results can be oracle-checked externally.
   */
 object TextFunctions {
+
+  /** `c` under one of the engine's native expressions. */
+  private def native(c: Column)(mk: Expression => Expression): Column =
+    ColumnBridge.column(mk(ColumnBridge.expression(c)))
 
   /** Large prime modulus for 60-bit md5-derived hashes. */
   val HashMod: Long = 2147483647L // 2^31 - 1
@@ -909,9 +917,10 @@ object TextFunctions {
 
   /** Deterministic 60-bit hash of a string: first 15 hex digits of md5.
     * Reproducible in any engine with md5 (DuckDB: ('0x'||substr(md5(s),1,
-    * 15))::BIGINT). */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
+    * 15))::BIGINT). One native expression ([[graft.functions.Md5Prefix60]])
+    * that reads the value off the digest bytes — no hex string, substring
+    * or radix conversion per call. */
+  def hash60(c: Column): Column = native(c)(Md5Prefix60(_))
 
   /** hash60 reduced mod 2^31-1 (keeps products inside 64-bit range). */
   def tokenHash(c: Column): Column = hash60(c) % HashMod
@@ -971,48 +980,33 @@ object TextFunctions {
     "pl" -> Seq("nie", "się", "jest", "że", "do", "jak", "ale",
       "przez"))
 
+  /** The [[LangMarkers]] groups as the marker table of the native
+    * language kernels. */
+  private lazy val LangTable =
+    MarkerTable(LangMarkers.map(_._1), LangMarkers.map(_._2))
+
   /** Count of tokens of `text` that appear in `markers`. */
   def markerScore(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(text), t => markers.map(m => t === lit(m))
-      .reduce(_ || _)))
+    native(text)(MarkerScore(_, MarkerTable(Seq("markers"), Seq(markers))))
 
-  /** Predicted language code, "und" when no marker hits at all.
-    * Tie-break: LangMarkers order (first language with a maximal
-    * score — `array_position` finds the FIRST index of the max).
+  /** Predicted language code, "und" when no marker hits at all (a null
+    * text included). Tie-break: LangMarkers order (the first language
+    * with a maximal score).
     *
-    * PERF: the token array and the 15-language score array are each
-    * let-bound ONCE per row via the one-element-transform idiom
-    * ([[phraseOccurrences]]' trick) — the naive fold re-tokenized per
-    * language and re-evaluated every score in the total/best/when
-    * chain, which tripled q174's cost when the locale surface grew
-    * from 5 to 15 languages. */
-  def langId(text: Column): Column = {
-    val codes = LangMarkers.map(_._1)
-    element_at(transform(array(tokens(text)), toks => {
-      val scores = array(LangMarkers.map { case (_, ms) =>
-        size(filter(toks, t => t.isin(ms.map(m => m: Any): _*)))
-      }: _*)
-      element_at(transform(array(scores), sc =>
-        when(aggregate(sc, lit(0), (a, e) => a + e) > 0,
-          element_at(typedlit(codes),
-            array_position(sc, array_max(sc)).cast("int")))
-          .otherwise(lit("und"))), 1)
-    }), 1)
-  }
+    * PERF: one native expression ([[graft.functions.LangId]]) — a single
+    * pass over the text's bytes that looks each token up once in a table
+    * of all 15 languages' markers. The Column form it replaced evaluated
+    * 15 `filter`/`isin` lambdas per row, each comparing every token to a
+    * language's markers. */
+  def langId(text: Column): Column = native(text)(LangId(_, LangTable))
 
   /** Language-ID CONFIDENCE margin: best marker score minus
     * second-best (0 on an exact tie, and 0 when nothing matches) —
     * the gate real curation stacks put next to the label, since a
     * da/no-style doc scoring 5/4 is a coin-flip the label alone
-    * hides. Same one-pass let-bound score array as [[langId]]. */
+    * hides. Same one-pass native kernel as [[langId]]. */
   def langIdMargin(text: Column): Column =
-    element_at(transform(array(tokens(text)), toks => {
-      val scores = array(LangMarkers.map { case (_, ms) =>
-        size(filter(toks, t => t.isin(ms.map(m => m: Any): _*)))
-      }: _*)
-      element_at(transform(array(sort_array(scores, asc = false)),
-        sc => element_at(sc, 1) - element_at(sc, 2)), 1)
-    }), 1)
+    native(text)(LangIdMargin(_, LangTable))
 
   // ---- quality scoring ----
 
@@ -1029,17 +1023,15 @@ object TextFunctions {
     "n_stopword" -> markerScore(text, Stopwords).cast("long"),
     "n_alpha" -> length(regexp_replace(text, "[^A-Za-z]", "")).cast("long"))
 
-  /** Scalar quality score in [0,1]-ish: fixed-order double arithmetic
-    * (reproducible bit-for-bit across engines). */
-  def qualityScore(text: Column): Column = {
-    val comps = qualityComponents(text).toMap
-    val nTok = comps("n_tokens").cast("double")
-    val stopRatio = comps("n_stopword").cast("double") / greatest(nTok, lit(1.0))
-    val alphaRatio = comps("n_alpha").cast("double") /
-      greatest(comps("n_chars").cast("double"), lit(1.0))
-    val lenScore = least(nTok / lit(100.0), lit(1.0))
-    stopRatio * lit(0.4) + alphaRatio * lit(0.4) + lenScore * lit(0.2)
-  }
+  /** Scalar quality score in [0,1]-ish from [[qualityComponents]]:
+    * 0.4·stopword ratio + 0.4·ASCII-letter ratio + 0.2·min(tokens/100,
+    * 1), in fixed-order double arithmetic (reproducible bit-for-bit
+    * across engines). One native pass over the text
+    * ([[graft.functions.QualityScore]]). */
+  def qualityScore(text: Column): Column =
+    native(text)(QualityScore(_, StopTable))
+
+  private lazy val StopTable = MarkerTable(Seq("stopwords"), Seq(Stopwords))
 
   /** Positional rolling-hash document fingerprint:
     * sum_i ((tokenHash(t_i) * i) % M) % M with 1-based positions — an

@@ -104,6 +104,49 @@ class FunctionsSpec extends SparkSpec {
     assert(native == lambda)
   }
 
+  test("vec_sqdist and vec_mat_project on raw float arrays equal the " +
+    "float lambda forms") {
+    val rnd = new scala.util.Random(53)
+    val d = 12; val k = 4
+    def v(n: Int) = Array.fill(n)(Float.box(rnd.nextFloat() * 4 - 2))
+    val rows: Seq[(Array[java.lang.Float], Array[java.lang.Float])] = Seq(
+      (v(d), v(d)), (v(d), v(d)),
+      (v(d), v(d - 2)),                                   // ragged
+      (v(d - 1) :+ (null: java.lang.Float), v(d)),        // null elem
+      (null, v(d)))                                       // null array
+    // repartitioned: evaluated by generated code, not folded locally
+    val df = rows.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+      .toDF("id", "a", "b").repartition(2).orderBy("id").select("a", "b")
+    def opt(r: org.apache.spark.sql.Row): Option[Double] =
+      if (r.isNullAt(0)) None else Some(r.getDouble(0))
+    // the lambda widens each float to double exactly as the kernel does
+    val lambda = df.select(aggregate(zip_with($"a", $"b", (x, y) =>
+      (x.cast("double") - y.cast("double")) *
+        (x.cast("double") - y.cast("double"))),
+      lit(0.0), (acc, e) => acc + e)).collect().map(opt).toSeq
+    val native = df.select(VectorFunctions.vec_sqdist($"a", $"b"))
+      .collect().map(opt).toSeq
+    assert(df.schema("a").dataType.toString.contains("Float"))
+    assert(native == lambda && native.count(_.isDefined) == 2)
+    val mu = Array.fill(d)(rnd.nextDouble() - 0.5)
+    val mat = Array.fill(k)(Array.fill(d)(rnd.nextDouble() * 2 - 1))
+    val centered = zip_with($"a", typedlit(mu.toSeq),
+      (x, m) => x.cast("double") - m)
+    def coords(c: org.apache.spark.sql.Column): Seq[Seq[Option[Double]]] =
+      df.select(c).collect().map(_.getSeq[Any](0).map {
+        case null => None
+        case x: Double => Some(x)
+      }.toSeq).toSeq
+    val lambdaProj = coords(array(mat.map { comp =>
+      aggregate(zip_with(centered, typedlit(comp.toSeq), (x, w) => x * w),
+        lit(0.0), (acc, e) => acc + e)
+    }.toIndexedSeq: _*))
+    val nativeProj = coords(VectorFunctions.vec_mat_project($"a",
+      Some(mu.toSeq), mat.map(_.toSeq).toSeq))
+    assert(nativeProj == lambdaProj)
+    assert(nativeProj.count(_.forall(_.isDefined)) == 3)
+  }
+
   test("vec_dot rejects non-array inputs") {
     // a fresh session: Spark 4 posts even failed ANALYSIS to the session
     // listener bus, and the shared session's ObservationManager listener

@@ -252,6 +252,43 @@ class PlanSpec extends SparkSpec {
       "hamming verify must run below the distinct exchange")
   }
 
+  /** Higher-order lambdas and Generate nodes left in an optimized plan —
+    * the interpreted per-row work the native text kernels replace. */
+  private def lambdasAndGenerates(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    val lambdaKinds: Seq[Class[_]] = Seq(classOf[ArrayTransform],
+      classOf[ArrayFilter], classOf[ArrayAggregate], classOf[LambdaFunction])
+    val generates = plan.collect {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate =>
+        s"Generate ${g.generator.prettyName}"
+    }
+    val lambdas = plan.flatMap(_.expressions)
+      .flatMap(_.collect { case e => e })
+      .filter(e => lambdaKinds.exists(_.isInstance(e)))
+      .map(_.getClass.getSimpleName)
+    (generates ++ lambdas).distinct
+  }
+
+  test("curate and minhashSignatures plan no lambdas and no shingle " +
+    "Generate; signatures shuffle once, for the doc-level min-merge") {
+    val docs = graft.sources.Tables.table(spark, sf, "documents")
+    val curated = graft.ops.Curation.curate(docs, "doc_id", "text",
+      minQuality = 0.1, sampleFraction = 0.5, minLangMargin = 1)
+    assert(lambdasAndGenerates(curated.queryExecution.optimizedPlan).isEmpty,
+      lambdasAndGenerates(curated.queryExecution.optimizedPlan))
+    val sigs = graft.ops.Dedup.minhashSignatures(docs, "doc_id", "text",
+      3, 12)
+    assert(lambdasAndGenerates(sigs.queryExecution.optimizedPlan).isEmpty,
+      lambdasAndGenerates(sigs.queryExecution.optimizedPlan))
+    val plan = explain(sigs)
+    val exchanges = plan.linesIterator
+      .count(_.matches("^\\(\\d+\\) Exchange.*"))
+    assert(exchanges == 1 && plan.contains("hashpartitioning(id#"),
+      s"expected one shuffle keyed by id, got $exchanges:\n$plan")
+  }
+
   test("asof join costs exactly one shuffle (union + ordered window)") {
     val ev = graft.sources.Tables.table(spark, sf, "events")
     val snaps = ev.where(col("event_type") === "signup")
