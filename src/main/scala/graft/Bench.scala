@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.queries.Registry
+import graft.queries.Registry.shortKey
 
 /** Benchmark entrypoint. Prints a cumulative MEDIAN-of-rounds JSON line
   * after EVERY completed query (the driver parses the last line), so a run
@@ -14,36 +15,28 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "3").toInt
     val deadlineS = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_S", "1200").toLong
     val startNanos = System.nanoTime()
     def elapsedS: Long = (System.nanoTime() - startNanos) / 1000000000L
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // extra session confs, ';'-separated k=v pairs — e.g. benching with a
     // graft tuning valve set (SPARK_GRAFT_EXTRA_CONF=
     // "spark.graft.jaccard.maxCandidatePairs=1000000000")
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .foreach { kv =>
+      .map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        k -> v
+      }.toMap
+    val spark = Sessions.local(cpus, conf = extraConf)
     // warmup: JIT + codegen + parquet footer caches, so the first measured
     // query isn't charged for session startup
     spark.range(5000000L).selectExpr("sum(id)").collect()
     // tableFilter scale corpora (documents/embeddings-only dirs) lack
     // lineitem — a missing warmup table must not kill the run
-    SparkEntry.queries.get("q12_agg_sum").foreach { q =>
-      try q(spark, sfDir).count()
+    Registry.byName.get("q12_agg_sum").foreach { q =>
+      try q.run(spark, sfDir).count()
       catch { case scala.util.control.NonFatal(_) => () }
     }
     // The host VM has CPU-steal spikes that can inflate a single run
@@ -54,8 +47,8 @@ object Bench {
     // optional comma-separated name filter for bisecting bench behavior
     val only = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
       .map(_.split(",").map(_.trim).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = Registry.all.sortBy(_.name)
+      .filter(q => only.forall(_.contains(q.name)))
     val samples =
       scala.collection.mutable.Map.empty[String, Vector[Double]]
     val errors = scala.collection.mutable.Map.empty[String, String]
@@ -67,8 +60,7 @@ object Bench {
 
     // The driver keeps only a ~2000-char tail of stdout and json-parses a
     // line from it, so the emitted line must stay well under that budget:
-    // short keys ("q93" not "q93_cluster_split") and millisecond precision.
-    def shortKey(name: String): String = name.takeWhile(_ != '_')
+    // short keys and millisecond precision.
     def fmt(v: Double): String = f"$v%.3f"
     def render(): String = {
       // queries that never succeeded are excluded from timings and the
@@ -85,8 +77,8 @@ object Bench {
       // declared-workload revisions ride the artifact (after "queries",
       // so they survive the driver's tail clipping) — benchgate keys its
       // REDECLARED exemption on rev identity, not runtime inference
-      val revs = SparkEntry.queryRevisions.toSeq
-        .map { case (k, v) => s""""${shortKey(k)}":$v""" }
+      val revs = Registry.all.filter(_.rev != 1)
+        .map(q => s""""${shortKey(q.name)}":${q.rev}""")
         .sorted.mkString("{", ",", "}")
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","stat":"median","runs":$rounds,"queries":$qs,"failures":$fails,"rev":$revs,"sf":"$sfDir","elapsed_s":$elapsedS}"""
     }
@@ -103,7 +95,8 @@ object Bench {
 
     var overDeadline = false
     for (round <- 1 to rounds if !overDeadline) {
-      for ((name, fn) <- names if !overDeadline) {
+      for (q <- selected if !overDeadline) {
+        val name = q.name
         if (elapsedS >= deadlineS) {
           // never start a query past the deadline; round 1 guarantees every
           // query at least one attempt unless the deadline already passed
@@ -111,17 +104,18 @@ object Bench {
         } else {
           val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).count()
-            val dt = (System.nanoTime() - t0) / 1e9
+            // the timing stops before runWith drops the query's persisted
+            // frames, so queries are measured standalone
+            val dt = q.runWith(spark, sfDir) { df =>
+              df.count()
+              (System.nanoTime() - t0) / 1e9
+            }
             samples(name) = samples.getOrElse(name, Vector.empty) :+ dt
           } catch {
             // a failed run is recorded as a FAILURE, never as a timing
             case e: Throwable =>
               errors(name) = e.toString.takeWhile(_ != '\n').take(200)
           }
-          // drop per-query persisted frames so queries are measured standalone
-          graft.ops.Dedup.releaseCaches()
-          spark.catalog.clearCache()
           emit()
         }
       }

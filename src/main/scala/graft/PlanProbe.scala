@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.queries.Registry
 
 /** Ad-hoc plan inspector: prints the formatted physical plan of the named
   * queries (args) at sf0.001 — fast feedback on shuffle count / pushdown /
@@ -9,15 +9,10 @@ object PlanProbe {
     val sfDir = if (args.nonEmpty && args.head.startsWith("/")) args.head
                 else "/root/testdata/sf0.001"
     val names = args.filterNot(_.startsWith("/"))
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, logLevel = "ERROR")
     for (q <- names) {
       println(s"========== $q ==========")
-      println(SparkEntry.queries(q)(spark, sfDir).queryExecution
+      println(Registry.byName(q).run(spark, sfDir).queryExecution
         .explainString(org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()

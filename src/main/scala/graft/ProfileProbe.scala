@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import graft.queries.Registry
 
 /** Ad-hoc per-JOB profiler: runs the named queries once and prints every
   * Spark job's wall seconds with its call site — the decisive view at
@@ -17,13 +17,7 @@ object ProfileProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val qs = if (args.nonEmpty) args.toSeq else Seq("q50_dedup_clusters")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     val live = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Double)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -50,12 +44,13 @@ object ProfileProbe {
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
-      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
-      graft.ops.Dedup.releaseCaches()
-      spark.catalog.clearCache()
+      val (dt, compiles, compileMs) =
+        Registry.byName(q).runWith(spark, sfDir) { df =>
+          df.count()
+          ((System.nanoTime() - t0) / 1e9,
+            CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+            (CodeGenerator.compileTime - compileNs0) / 1e6)
+        }
       Thread.sleep(500)
       import scala.jdk.CollectionConverters._
       val ds = done.asScala.toSeq.sortBy(_._1)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic generator for scale-rehearsal data shaped like the
   * driver's `documents` / `events` tables (same schema, vocab size, doc
   * length distribution, ~5% planted near-duplicates), so the heavy dedup
@@ -28,11 +26,7 @@ object ScaleGen {
     val vocabSize = if (args.length > 3) args(3).toInt else vocab.size
     val fullVocab = vocab ++
       (vocab.size until vocabSize).map(i => s"w$i")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
 
     // documents: driver-side build (50k x ~300 chars is a few MB), seeded
     val rnd = new scala.util.Random(42)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale rehearsal for the heavy dedup family over [[ScaleGen]] data:
   * times each op at a given data dir so runs one decade apart yield
   * measured scaling exponents (SCALE.md "Measured").
@@ -43,12 +41,7 @@ object ScaleProbe {
     // 0.7 the ~0.93 "paraphrase" regime, 1.2 the ~0.82 boundary where
     // LSH bucket-collision loss becomes visible
     val amp = if (args.length > 5) args(5).toDouble else 0.05
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
     spark.range(5000000L).selectExpr("sum(id)").collect()
     import graft.ops.{Dedup, Sampling}
     def docs = spark.read.parquet(s"$dir/documents.parquet")

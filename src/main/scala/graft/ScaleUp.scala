@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal generator for the FULL table set: replicates the
@@ -67,12 +67,7 @@ object ScaleUp {
         .mkString(", ")} (known: ${KnownTables.toSeq.sorted.mkString(", ")})" +
         " — a typo here would silently skip the table it meant to build")
     def wants(name: String): Boolean = only.isEmpty || only(name)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32)
 
     def src(name: String): DataFrame =
       graft.sources.Tables.load(spark, s"$srcDir/$name.parquet")

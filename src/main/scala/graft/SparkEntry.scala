@@ -1,167 +1,25 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import java.time.Instant
 
 import graft.model._
-import graft.db.{GraftSession, TableOps}
-import graft.db.TableOps._
 import graft.orchestrate.MigrationApp
-import graft.backup.{Backup, BackupOptions}
-import graft.apm.Apm
-import graft.ops.{Dedup, Decontaminate, Similarity, TextFunctions,
-  Multimodal, Chunking, Quantize, Redaction, TfIdf, TextSearch,
-  LanguageModel, Dsir, Classifier, Sampling}
+import graft.queries.{Fixtures, Registry}
 
-/** Driver contract — one `queries` entry + matching DuckDB `oracleSql` per
-  * implemented operator from SURVEY.md §2 (plus the LLM-pipeline extension
-  * operators). Every query routes through the library (compilers / TableOps /
-  * pipeline / ops), not ad-hoc DataFrame code; outputs are deterministically
-  * ordered and float-exact (decimal-cast sums) so they hash-match DuckDB.
+/** Driver contract: the flagship `entry`, plus one `queries` entry and its
+  * matching DuckDB `oracleSql` per implemented operator from SURVEY.md §2
+  * (plus the LLM-pipeline extension operators). Both maps are read off
+  * [[graft.queries.Registry]], where each query sits next to its oracle.
   */
 object SparkEntry {
-
-  /** The q243/q254 crawl fixture: synthetic (url, html) over the
-    * documents table — 8 URL variants per residue class (case, port,
-    * www, tracking params, session ids, fragments) and HTML with
-    * script/style/comment/entity traps. Shared by the one-shot and
-    * incremental crawl-preset queries so their SHARED oracle replays
-    * one construction. */
-  private def webCurateFixture(s: SparkSession, dir: String): DataFrame = {
-    val pre = Seq(
-      "https://Example.com/p", "https://example.com/p",
-      "https://example.com:443/p", "https://www.example.com/p",
-      "https://example.com/p", "https://example.com/p",
-      "https://example.com/p", "https://other.org/p")
-    val suf = Seq(
-      "/b?utm_source=x&id=7&z=2", "/b?z=2&id=7", "/b?id=7&z=2#frag",
-      "/b/?id=7&z=2", "/b?jsessionid=A9F3&id=7&z=2", "/b?id=8&z=2",
-      "/b?ref=main&id=7&z=2", "/c")
-    tbl(s, dir, "documents").where(col("doc_id") < 360)
-      .withColumn("url", concat(
-        element_at(typedlit(pre), (col("doc_id") % 8 + 1).cast("int")),
-        (col("doc_id") / 8).cast("long").cast("string"),
-        element_at(typedlit(suf), (col("doc_id") % 8 + 1).cast("int"))))
-      .withColumn("html", concat(
-        lit("<html><head><style>p{color:red}</style>" +
-          "<script type=\"text/javascript\">var x=1 && 2;</script>" +
-          "</head><body><h1>Doc "),
-        col("doc_id").cast("string"),
-        lit("</h1><!-- hidden --><p>"), col("text"),
-        lit(" &amp; more &lt;tags&gt;&nbsp;&#39;quoted&#39;" +
-          "</p></body></html>")))
-  }
-
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.sources.Tables.table(s, dir, name)
-  /** Unique memory-sink names so repeated runs (bench rounds) never share
-    * a sink table. */
-  private val streamCounter = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Scratch dirs for queries that exercise write-then-read machinery
-    * (stores, checkpoints, DDL targets). Fresh per invocation — a
-    * REUSED checkpoint dir would make AvailableNow skip data and a
-    * reused store would mix runs — but registered with ONE shutdown
-    * hook that removes them all at JVM exit, so bench's interleaved
-    * rounds stop leaking parquet stores into /tmp (r13 advice
-    * finding). */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val scratchHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      scratchDirs.forEach { root =>
-        try {
-          java.nio.file.Files.walk(root)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        } catch { case _: Throwable => () }
-      }
-    }))
-  private def scratchDir(prefix: String): java.nio.file.Path = {
-    scratchHook
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    scratchDirs.add(p)
-    p
-  }
-
-  /** Partitioned store write, clustered by the partition column first
-    * (r15, guide §6): a `partitionBy(c)` write from N shuffle tasks
-    * opens up to N parquet writers PER partition value — 32 tasks ×
-    * 256 bm25 buckets is ~8k tiny files per store write, and the
-    * read-back pays the footer/open cost again. One hash exchange on
-    * the partition column makes each value land in exactly one task:
-    * one file per partition value, the layout a 100 TB store wants
-    * (bigger files, fewer of them; key-prunable reads unchanged). */
-  private def storeWrite(df: org.apache.spark.sql.DataFrame,
-      partCol: String, path: String,
-      mode: String = "overwrite",
-      preClustered: Boolean = false): Unit = {
-    // EXPLICIT partition count: a bare repartition(col) lets AQE
-    // coalesce the (small) exchange to one task, which then writes
-    // every partition dir serially — measured 2.5x slower than the
-    // un-clustered write it was meant to fix. An explicit count is
-    // respected by AQE: values spread over the session's shuffle
-    // parallelism, each value still landing in exactly one task.
-    // preClustered (r16): frames whose producer already hash-clustered
-    // by the partition column (bm25Index postings) skip the redundant
-    // second exchange.
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val out = if (preClustered) df else df.repartition(n, col(partCol))
-    out.write.mode(mode).partitionBy(partCol).parquet(path)
-  }
-
-  /** Runs INDEPENDENT write actions concurrently (guide §2.6 "overlap
-    * independent jobs"): Spark's FIFO scheduler back-fills the earlier
-    * action's straggler tail with the later actions' tasks, and the
-    * driver-side planning gaps overlap instead of serializing — at any
-    * scale the fixture pays max(writes), not sum(writes). Only for
-    * actions with no ordering dependency: distinct output paths and no
-    * read-after-write between them (an append after an overwrite of the
-    * SAME path stays sequential — see the bm25 store). Every action
-    * completes before return (first failure rethrown), so read-backs
-    * after the call see fully committed stores; shared persisted
-    * upstream frames are safe (the block manager computes each cached
-    * partition once and blocks the other readers). Results unchanged —
-    * this reorders nothing observable. */
-  private def concurrently(actions: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = actions.map(a => Future(a()))
-    fs.foreach(Await.result(_, Duration.Inf))
-  }
-
-  /** q231 fixture: one unambiguous sentence per LangMarkers language
-    * (>= 7 of its own markers, <= 3 of any other language's), shared
-    * by the Spark query and the DuckDB oracle so both classify the
-    * identical text. */
-  private val LangIdSentences: Seq[(String, String)] = Seq(
-    "en" -> "the cat is in the garden and it is quiet",
-    "es" -> "el perro de la casa que veo en un parque",
-    "de" -> "der hund und die katze ist nicht ein problem zu haben",
-    "fr" -> "le chien et les chats dans un jardin est une joie",
-    "zh" -> "我 在 人 的 有 是 不 了",
-    "it" -> "il libro di storia che non leggo per una sera sono anche qui",
-    "pt" -> "não vejo uma casa mais bonita como também são dos meus",
-    "nl" -> "het huis een boom van hout dat niet zijn voor maar",
-    "sv" -> "och huset som är för stort med inte på taket",
-    "da" -> "og huset af træ det skal til ikke hvad også være der",
-    "no" -> "og huset av tre det står på ikke hva fra eller her",
-    "ru" -> "и я не знаю на что это как его для меня",
-    "tr" -> "bir ev ve bu bahçe için ile olarak daha çok güzel",
-    "cs" -> "je se na to že ale jsem tady jako pro tebe",
-    "pl" -> "nie wiem się to jest że do domu jak ale przez okno")
-  private def coll(s: SparkSession, dir: String, name: String) =
-    new GraftSession(s, dir).db("testdata").c(name)
 
   /** Flagship: the reference's own example migration (example_test.go:49-58)
     * — `{time: {$gt: cutoff}}` + `{$rename: {time: timeSince}}` — run
     * end-to-end through the orchestrator (deps, ledger, write-back) on a
     * temp copy of sf0.001 events. */
   def entry(spark: SparkSession): DataFrame = {
-    val tmp = scratchDir("graft-entry")
+    val tmp = Fixtures.scratchDir("graft-entry")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       tmp.resolve("events.parquet"))
@@ -177,9101 +35,9 @@ object SparkEntry {
     spark.read.parquet(s"$tmp/events.parquet")
   }
 
-  // exact decimal-cast sum of a double column, deterministic in both engines
-  private def dsum(c: String): org.apache.spark.sql.Column =
-    sum(col(c).cast(DecimalType(18, 2))).cast("double")
-
-  /** Declared-workload revision per query (absent = 1). Bumped whenever a
-    * query's DECLARED computation changes (not a perf tweak — a different
-    * workload under the same name). [[Bench]] stamps these into the bench
-    * artifact so `tools/benchgate.py` can tell "re-declared" apart from
-    * "regressed" by IDENTITY instead of inferring it from runtimes. */
-  def queryRevisions: Map[String, Int] = Map(
-    // r10: fixed-label semDeDup -> full semDeDupKMeans(auto k)
-    "q130_semdedup" -> 2,
-    // r10: fixed 12-plane embeddingNearDup -> auto-sized planes
-    "q22_embed_neardup" -> 2)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // §2.1 filtered scan through the query compiler + session facade
-    "q01_find" -> ((s, dir) =>
-      coll(s, dir, "lineitem")
-        .find(Map(
-          "l_returnflag" -> "R",
-          "l_quantity" -> Map("$gte" -> 30),
-          "l_linestatus" -> Map("$in" -> Seq("F", "O"))))
-        .sort("l_orderkey", "l_linenumber")
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-        .toDF),
-
-    // §2.1 point lookup (FindId)
-    "q02_find_id" -> ((s, dir) =>
-      coll(s, dir, "orders").findId(42L, "o_orderkey").toDF),
-
-    // §2.6 sort(-field)/skip/limit through the ± sort-string parser
-    "q03_sort_limit_skip" -> ((s, dir) =>
-      coll(s, dir, "lineitem").find()
-        .sort("-l_extendedprice", "l_orderkey", "l_linenumber")
-        .skip(10).limit(20)
-        .select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .toDF),
-
-    // §2.4 filtered count
-    "q04_count" -> ((s, dir) =>
-      coll(s, dir, "orders").find(Map("o_orderstatus" -> "O"))
-        .toDF.agg(count(lit(1)).as("cnt"))),
-
-    // §2.8 update compiler: $set + $inc applied to matching rows
-    "q05_update_set_inc" -> ((s, dir) => {
-      val (res, _) = TableOps.updateAll(
-        tbl(s, dir, "lineitem"),
-        Map("l_returnflag" -> "A"),
-        Map("$set" -> Map("l_linestatus" -> "X"),
-            "$inc" -> Map("l_quantity" -> 5)),
-        "l_orderkey")
-      res.select("l_orderkey", "l_linenumber", "l_linestatus", "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // $push modifier form ($each + $sort + $slice) through the update
-    // compiler on matching rows — map-only, zero shuffles
-    "q111_push_each" -> ((s, dir) => {
-      val src = tbl(s, dir, "part").where(col("p_partkey") <= 500)
-        .withColumn("arr", split(col("p_brand"), "#"))
-      val (res, _) = TableOps.updateAll(src,
-        Map("p_size" -> Map("$lte" -> 20)),
-        Map("$push" -> Map("arr" -> Map("$each" -> Seq("zz", "aa"),
-          "$sort" -> 1, "$slice" -> 3))),
-        "p_partkey")
-      res.select(col("p_partkey"), concat_ws("|", col("arr")).as("arr_s"))
-        .orderBy("p_partkey")
-    }),
-
-    // all-positional $[] element updates + $bit, both codegen'd lambdas /
-    // bitwise ops on matching rows — map-only
-    "q112_positional_bit" -> ((s, dir) => {
-      val src = tbl(s, dir, "part").where(col("p_partkey") <= 500)
-        .withColumn("scores",
-          sequence(lit(1), (col("p_size") % 5 + 1).cast("int")))
-        .withColumn("flags", col("p_size").cast("long"))
-      val (res, _) = TableOps.updateAll(src,
-        Map("p_size" -> Map("$gte" -> 10)),
-        Map("$inc" -> Map("scores.$[]" -> 100),
-          "$bit" -> Map("flags" -> Map("xor" -> 21))),
-        "p_partkey")
-      res.select(col("p_partkey"),
-        array_join(col("scores").cast("array<string>"), ",").as("scores_s"),
-        col("flags"))
-        .orderBy("p_partkey")
-    }),
-
-    // filtered positional $[ident] + arrayFilters: only elements matching
-    // the element-level predicate update — one codegen'd lambda
-    "q113_array_filters" -> ((s, dir) => {
-      val src = tbl(s, dir, "part").where(col("p_partkey") <= 500)
-        .withColumn("grades",
-          array(col("p_size"), col("p_size") % 7 * 10, lit(42)))
-      val (res, _) = TableOps.updateAll(src, Map.empty,
-        Map("$set" -> Map("grades.$[g]" -> -1)),
-        "p_partkey", Seq(Map("g" -> Map("$gte" -> 25))))
-      res.select(col("p_partkey"),
-        array_join(col("grades").cast("array<string>"), ",").as("g_s"))
-        .orderBy("p_partkey")
-    }),
-
-    // first-match positional $: the query's $elemMatch condition picks
-    // the element; only the FIRST matching element per row updates
-    // nested positional updates: arr.$[g].inner.$[i] — per-level
-    // arrayFilters compile to nested transform lambdas (zero shuffles)
-    "q117_nested_positional" -> ((s, dir) => {
-      val src = tbl(s, dir, "part").where(col("p_partkey") <= 300)
-        .withColumn("groups", array(
-          struct(lit("a").as("tag"),
-            array(col("p_size"), lit(5)).as("inner")),
-          struct(lit("b").as("tag"),
-            array(lit(30), col("p_size") % 10).as("inner"))))
-      val (res, _) = TableOps.updateAll(src, Map.empty,
-        Map("$inc" -> Map("groups.$[g].inner.$[i]" -> 100)),
-        "p_partkey",
-        Seq(Map("g.tag" -> "b"), Map("i" -> Map("$lt" -> 10))))
-      res.select(col("p_partkey"),
-        array_join(transform(col("groups"), g =>
-          concat(g.getField("tag"), lit(":"),
-            array_join(g.getField("inner").cast("array<string>"), ","))),
-          "|").as("g_s"))
-        .orderBy("p_partkey")
-    }),
-
-    "q114_positional_first" -> ((s, dir) => {
-      val src = tbl(s, dir, "part").where(col("p_partkey") <= 500)
-        .withColumn("grades",
-          array(col("p_size"), lit(25), col("p_size") % 7 * 10))
-      val (res, _) = TableOps.updateAll(src,
-        Map("grades" -> Map("$elemMatch" -> Map("$gte" -> 20))),
-        Map("$set" -> Map("grades.$" -> -1)),
-        "p_partkey")
-      res.select(col("p_partkey"),
-        array_join(col("grades").cast("array<string>"), ",").as("g_s"))
-        .orderBy("p_partkey")
-    }),
-
-    // §2.8 $rename (the anser example shape) on matching rows
-    "q06_update_rename" -> ((s, dir) => {
-      val (res, _) = TableOps.updateAll(
-        tbl(s, dir, "events"),
-        Map("ts" -> Map("$gt" -> Instant.parse("2024-01-15T00:00:00Z"))),
-        Map("$rename" -> Map("ts" -> "timeSince")),
-        "event_id")
-      res.select("event_id", "ts", "timeSince").orderBy("event_id")
-    }),
-
-    // §2.9 RemoveAll (anti-filter) + rollup of the survivors
-    "q07_remove_all" -> ((s, dir) => {
-      val (res, _) = TableOps.removeAll(
-        tbl(s, dir, "lineitem"), Map("l_quantity" -> Map("$lt" -> 10)))
-      res.groupBy("l_returnflag").agg(count(lit(1)).as("cnt"))
-        .orderBy("l_returnflag")
-    }),
-
-    // §2.9 Upsert: MERGE-shaped last-wins by key (updates + inserts)
-    "q08_upsert" -> ((s, dir) => {
-      val base = tbl(s, dir, "orders")
-      val updates = base.where(col("o_orderstatus") === "F")
-        .withColumn("o_totalprice", col("o_totalprice") * 2)
-      val inserts = base.where(col("o_orderstatus") === "P")
-        .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
-      TableOps.upsert(base, updates.unionByName(inserts), "o_orderkey")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.9 ordered Bulk: update → remove → insert in one batch
-    "q09_bulk" -> ((s, dir) => {
-      val part = tbl(s, dir, "part")
-      val inserts = part.where(col("p_partkey") <= 3)
-        .withColumn("p_partkey", col("p_partkey") + 1000000L)
-      TableOps.runBulk(part, Seq(
-        BulkUpdate(Map("p_size" -> Map("$gte" -> 40)),
-          Map("$set" -> Map("p_brand" -> "Brand#XL"))),
-        BulkRemove(Map("p_retailprice" -> Map("$lt" -> 910.0))),
-        BulkInsert(inserts)), "p_partkey")
-        .select("p_partkey", "p_brand", "p_size")
-        .orderBy("p_partkey")
-    }),
-
-    // §2.3 dependency-state semi-join (broadcast; _id ∈ edges shape)
-    "q10_semijoin" -> ((s, dir) => {
-      val orders = tbl(s, dir, "orders")
-      val edges = tbl(s, dir, "lineitem").where(col("l_quantity") > 45)
-        .select(col("l_orderkey").as("o_orderkey"))
-      orders.join(broadcast(edges), Seq("o_orderkey"), "left_semi")
-        .select("o_orderkey", "o_totalprice").orderBy("o_orderkey")
-    }),
-
-    // §2.4 aggregation pipeline: $match + $group + $sort
-    "q11_pipeline_group" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_totalprice" -> Map("$gt" -> 1000.0))),
-        Map("$group" -> Map(
-          "_id" -> "$o_orderstatus",
-          "n" -> Map("$sum" -> 1),
-          "maxp" -> Map("$max" -> "$o_totalprice"),
-          "minp" -> Map("$min" -> "$o_totalprice"))),
-        Map("$sort" -> Map("_id" -> 1))))),
-
-    // §2.4 headline grouped aggregation (TPC-H Q1 shape, decimal-exact)
-    "q12_agg_sum" -> ((s, dir) =>
-      tbl(s, dir, "lineitem")
-        .where(col("l_shipdate") <= lit(java.sql.Timestamp.from(
-          Instant.parse("1998-09-01T00:00:00Z"))))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum("l_quantity").as("sum_qty"),
-          dsum("l_extendedprice").as("sum_price"),
-          count(lit(1)).as("cnt"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    // §2.4 pipeline $unwind + $sortByCount (word histogram)
-    "q13_unwind_wordcount" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$addFields" -> Map("word" -> Map("$split" -> Seq("$text", " ")))),
-        Map("$unwind" -> "$word"),
-        Map("$sortByCount" -> "$word"),
-        Map("$limit" -> 50)))),
-
-    // §2.3 $lookup + $unwind + $project (join parity layer)
-    "q14_lookup" -> ((s, dir) =>
-      new GraftSession(s, dir).db("testdata").c("orders").pipe(Seq(
-        Map("$lookup" -> Map("from" -> "customer",
-          "localField" -> "o_custkey", "foreignField" -> "c_custkey",
-          "as" -> "cust")),
-        Map("$unwind" -> "$cust"),
-        Map("$project" -> Map("o_orderkey" -> 1, "c_name" -> "$cust.c_name")),
-        Map("$sort" -> Map("o_orderkey" -> 1))))),
-
-    // §2.12 APM event-window rollup (map-side-combining aggregation)
-    "q15_apm_rollup" -> ((s, dir) =>
-      Apm.rollup(
-        tbl(s, dir, "events")
-          .withColumn("ok", col("event_type") =!= "error")
-          .withColumn("dur", col("event_id") % 1000),
-        Seq("event_type"), "ok", "dur")
-        .orderBy("event_type")),
-
-    // §2.1 backup export frame: query + sort + limit
-    "q16_backup" -> ((s, dir) =>
-      Backup.exportFrame(tbl(s, dir, "events"), BackupOptions(
-        query = Map("event_type" -> "click"),
-        sortKeys = Seq("-ts", "event_id"),
-        limit = 100))
-        .select("event_id", "user_id", "ts")),
-
-    // ---- LLM-pipeline extension operators ----
-
-    // exact dedup (hash-groupBy); dups synthesized by unioning a shifted copy
-    // scalar fold expressions: $max clamping idiom, $min, list $sum/$avg
-    // — pure codegen'd projections, zero shuffles
-    "q110_scalar_folds" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 2000))),
-        Map("$project" -> Map(
-          "o_orderkey" -> 1,
-          "clamped" -> Map("$max" -> Seq(50000.0, "$o_totalprice")),
-          "lo" -> Map("$min" -> Seq("$o_totalprice", 100000.0)),
-          "s" -> Map("$sum" -> Seq("$o_totalprice", "$o_custkey")),
-          "m" -> Map("$avg" -> Seq("$o_totalprice", "$o_custkey"))))))
-        .orderBy("o_orderkey")),
-
-    // token-budget source mixing: sample each source to its share of a
-    // token budget — one tiny count agg + a scan-fused deterministic
-    // hash-sample; sources outside the mix drop
-    // §2.2 projection-operator Select forms: exclusion doc + $slice (the
-    // reference's pass-through projection, db/wrapper.go:386,463-465).
-    // The sliced array is declared as double scalar legs (float→double
-    // widening is exact in both engines) so the driver's row comparator
-    // can hash the output; the $slice+exclusion projection itself still
-    // runs through the library.
-    "q116_select_exclude_slice" -> ((s, dir) =>
-      coll(s, dir, "embeddings")
-        .find(Map("vec_id" -> Map("$lt" -> 100)))
-        .select(Map("label" -> 0, "embedding" -> Map("$slice" -> 3)))
-        .sort("vec_id")
-        .toDF
-        .select(col("vec_id"),
-          col("embedding")(0).cast("double").as("e0"),
-          col("embedding")(1).cast("double").as("e1"),
-          col("embedding")(2).cast("double").as("e2"))),
-
-    // cross-document boilerplate line removal (CCNet-style): lines in
-    // > maxDocFreq docs drop; one explode + line-keyed count + semi-join
-    // + ordered reassembly — injected header/footer lines must vanish
-    // SemDeDup (arXiv:2303.09540) on the paper's own clustering: spherical
-    // k-means cells (k stays 0 = the corpus-adaptive default,
-    // Dedup.autoCellCount: k = ceil(corpus/1000)), then within-cell
-    // cosine dedup — a row drops when an earlier same-cell row is >= 0.3
-    // similar. The oracle recomputes k from count(*) and unrolls the same
-    // five Lloyd iterations (q89's CTE machinery: deterministic
-    // smallest-id seed, decimal-exact means, id tie-breaks), so the
-    // checked run is the auto-sized production path that also completes
-    // the 100x rehearsal; the fixed-label semDeDup variant stays
-    // spec-pinned in OpsSpec
-    "q130_semdedup" -> ((s, dir) =>
-      graft.ops.Dedup.semDeDupKMeans(tbl(s, dir, "embeddings"), "vec_id",
-        "embedding", eps = 0.3)
-        .select(col("vec_id"))
-        .orderBy("vec_id")),
-
-    // $geoIntersects: point-in-Polygon-with-hole plus a MultiPolygon, over
-    // coordinates derived from the first two embedding components (scan-
-    // fused ray-cast predicates; shapes chosen so the oracle reduces to
-    // closed-form half-plane tests)
-    "q131_geo_intersects" -> ((s, dir) =>
-      coll(s, dir, "embeddings").pipe(Seq(
-        Map("$addFields" -> Map("pt" -> Seq(
-          Map("$arrayElemAt" -> Seq("$embedding", 0)),
-          Map("$arrayElemAt" -> Seq("$embedding", 1))))),
-        Map("$match" -> Map("$or" -> Seq(
-          Map("pt" -> Map("$geoIntersects" -> Map("$geometry" -> Map(
-            "type" -> "Polygon",
-            "coordinates" -> Seq(
-              // diamond |x|+|y| <= 0.35 with square hole |x|,|y| <= 0.1
-              Seq(Seq(0.35, 0.0), Seq(0.0, 0.35), Seq(-0.35, 0.0),
-                Seq(0.0, -0.35), Seq(0.35, 0.0)),
-              Seq(Seq(-0.1, -0.1), Seq(-0.1, 0.1), Seq(0.1, 0.1),
-                Seq(0.1, -0.1), Seq(-0.1, -0.1))))))),
-          Map("pt" -> Map("$geoIntersects" -> Map("$geometry" -> Map(
-            "type" -> "MultiPolygon",
-            "coordinates" -> Seq(
-              Seq(Seq(Seq(0.4, 0.4), Seq(0.6, 0.4), Seq(0.6, 0.6),
-                Seq(0.4, 0.6), Seq(0.4, 0.4))),
-              Seq(Seq(Seq(-0.6, -0.6), Seq(-0.4, -0.6), Seq(-0.4, -0.4),
-                Seq(-0.6, -0.4), Seq(-0.6, -0.6))))))))))),
-        Map("$project" -> Map("_id" -> 0, "vec_id" -> 1))))
-        .orderBy("vec_id")),
-
-    // $tsSecond / $tsIncrement: BSON-internal-timestamp accessors over a
-    // packed 64-bit carrier built in-pipeline — pure bit ops, scan-fused
-    "q132_ts_parts" -> ((s, dir) =>
-      coll(s, dir, "events").pipe(Seq(
-        Map("$match" -> Map("event_id" -> Map("$lt" -> 500))),
-        Map("$addFields" -> Map("packed" -> Map("$add" -> Seq(
-          Map("$multiply" -> Seq("$event_id", 4294967296L)),
-          Map("$mod" -> Seq("$event_id", 1000)))))),
-        Map("$project" -> Map("_id" -> 0, "event_id" -> 1,
-          "t" -> Map("$tsSecond" -> "$packed"),
-          "i" -> Map("$tsIncrement" -> "$packed")))))
-        .orderBy("event_id")),
-
-    // exact substring (n-gram window) dedup per Lee et al. 2021: a shared
-    // sentence is injected into every 4th doc; 5-token windows occurring
-    // in >= 2 docs are flagged and their token positions removed
-    "q137_dup_spans" -> ((s, dir) => {
-      val framed = tbl(s, dir, "documents").where(col("doc_id") < 300)
-        .withColumn("text", when(col("doc_id") % 4 === 0,
-          concat(col("text"),
-            lit(" shared span alpha beta gamma delta epsilon closing")))
-          .otherwise(col("text")))
-      graft.ops.Dedup.duplicateSpans(framed, "doc_id", "text", n = 5)
-        .select(col("doc_id"), col("n_tokens"), col("dup_tokens"),
-          col("clean"))
-        .orderBy("doc_id")
-    }),
-
-    // dotted-path projection docs over struct columns: inclusion rebuilds
-    // the struct with only the selected members (q135); exclusion drops
-    // just the member via dropFields (q136). Shapes proven via to_json.
-    "q135_select_dotted_incl" -> ((s, dir) => {
-      val base = tbl(s, dir, "customer").where(col("c_custkey") <= 200)
-        .select(col("c_custkey"), struct(col("c_name").as("name"),
-          struct(col("c_acctbal").as("bal"),
-            col("c_mktsegment").as("seg")).as("acct")).as("info"))
-      graft.query.ProjectionCompiler.project(base,
-        Map("c_custkey" -> 1, "info.acct.seg" -> 1, "info.name" -> 1))
-        .select(col("c_custkey"), to_json(col("info")).as("info_json"))
-        .orderBy("c_custkey")
-    }),
-
-    "q136_select_dotted_excl" -> ((s, dir) => {
-      val base = tbl(s, dir, "customer").where(col("c_custkey") <= 200)
-        .select(col("c_custkey"), struct(col("c_name").as("name"),
-          struct(col("c_acctbal").as("bal"),
-            col("c_mktsegment").as("seg")).as("acct")).as("info"))
-      graft.query.ProjectionCompiler.project(base, Map("info.acct.bal" -> 0))
-        .select(col("c_custkey"), to_json(col("info")).as("info_json"))
-        .orderBy("c_custkey")
-    }),
-
-    // $unwind doc form: includeArrayIndex (posexplode, no second pass) +
-    // preserveNullAndEmptyArrays (explode_outer) over expression-length
-    // $slice prefixes — vec_id % 3 == 0 rows survive as null-element rows
-    "q134_unwind_options" -> ((s, dir) =>
-      coll(s, dir, "embeddings").pipe(Seq(
-        Map("$match" -> Map("vec_id" -> Map("$lt" -> 30))),
-        Map("$project" -> Map("_id" -> 0, "vec_id" -> 1,
-          "arr" -> Map("$slice" -> Seq("$embedding",
-            Map("$mod" -> Seq("$vec_id", 3)))))),
-        Map("$unwind" -> Map("path" -> "$arr",
-          "includeArrayIndex" -> "idx",
-          "preserveNullAndEmptyArrays" -> true))))
-        .orderBy("vec_id", "idx")),
-
-    // bitwise expression operators (Mongo 6.3+): n-ary folds + $bitNot,
-    // all scan-fused integer ops
-    "q133_bit_exprs" -> ((s, dir) =>
-      coll(s, dir, "events").pipe(Seq(
-        Map("$match" -> Map("event_id" -> Map("$lt" -> 500))),
-        Map("$project" -> Map("_id" -> 0, "event_id" -> 1,
-          "band" -> Map("$bitAnd" -> Seq("$event_id", 255L)),
-          "bor"  -> Map("$bitOr" -> Seq("$event_id", 4096L)),
-          "bxor" -> Map("$bitXor" -> Seq("$event_id", 255L)),
-          "bnot" -> Map("$bitNot" -> "$event_id")))))
-        .orderBy("event_id")),
-
-    "q129_boilerplate" -> ((s, dir) => {
-      val framed = tbl(s, dir, "documents").where(col("doc_id") < 250)
-        .withColumn("text", concat(
-          lit("hdr "), (col("doc_id") % 5).cast("string"), lit("\n"),
-          col("text"), lit("\ncommon footer")))
-      graft.ops.Dedup.removeBoilerplateLines(
-        framed, "doc_id", "text", maxDocFreq = 10)
-        .select(col("doc_id"), col("clean"))
-        .orderBy("doc_id")
-    }),
-
-    // URL/domain extraction + per-domain rollup (web-corpus curation:
-    // domain quality lists, per-domain caps) — scan-fused regex, one
-    // explode, one hash aggregate
-    "q128_url_domains" -> ((s, dir) => {
-      val injected = concat(col("text"),
-        lit(" see https://site"), (col("doc_id") % 7).cast("string"),
-        lit(".example.com/p/"), col("doc_id").cast("string"),
-        lit(" and http://other"), (col("doc_id") % 3).cast("string"),
-        lit(".org/x"))
-      tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .select(col("doc_id"),
-          explode(TextFunctions.urlDomains(injected)).as("domain"))
-        .groupBy("domain").agg(count(lit(1)).as("n"))
-        .orderBy("domain")
-    }),
-
-    // bigram-LM perplexity quality scoring (CCNet-style filter signal):
-    // model = two distributed count tables, scoring = bucketed equi-joins
-    // of doc bigrams against them — no collect, no quadratic work
-    "q127_lm_perplexity" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 300)
-      LanguageModel.perplexity(docs, "doc_id", "text", docs, "text")
-        .select(col("doc_id"),
-          col("bits_per_token").cast("decimal(18,9)").cast("double")
-            .as("bits_per_token"),
-          col("n_bigrams"))
-        .orderBy("doc_id")
-    }),
-
-    // $pull condition-doc form + $pullAll: element-level removal compiled
-    // to codegen'd array filter lambdas — map-only, no shuffle
-    "q125_pull_forms" -> ((s, dir) => {
-      val src = tbl(s, dir, "part").where(col("p_partkey") <= 500)
-        .withColumn("arr",
-          sequence(lit(1), (col("p_size") % 6 + 2).cast("int")))
-      val (pulled, _) = TableOps.updateAll(src,
-        Map("p_size" -> Map("$gte" -> 10)),
-        Map("$pull" -> Map("arr" -> Map("$gte" -> 4))),
-        "p_partkey")
-      val (res, _) = TableOps.updateAll(pulled,
-        Map("p_size" -> Map("$lt" -> 10)),
-        Map("$pullAll" -> Map("arr" -> Seq(1, 3))),
-        "p_partkey")
-      res.select(col("p_partkey"),
-        array_join(col("arr").cast("array<string>"), ",").as("arr_s"))
-        .orderBy("p_partkey")
-    }),
-
-    // $documents literal source + $redact access-control filter
-    "q126_documents_redact" -> ((s, dir) =>
-      coll(s, dir, "region").pipe(Seq(
-        Map("$documents" -> Seq(
-          Map("k" -> 1, "level" -> "public", "v" -> 10),
-          Map("k" -> 2, "level" -> "secret", "v" -> 20),
-          Map("k" -> 3, "level" -> "public"),
-          Map("k" -> 4, "level" -> "internal", "v" -> 40))),
-        Map("$redact" -> Map("$cond" -> Seq(
-          Map("$eq" -> Seq("$level", "secret")), "$$PRUNE", "$$KEEP"))),
-        Map("$sort" -> Map("k" -> 1))))
-        .toDF),
-
-    // $jsonSchema validation query (pass-through db/wrapper.go:452-481):
-    // presence + enum + range + pattern, property schemas gated on
-    // presence — one scan-fused predicate
-    "q124_jsonschema" -> ((s, dir) =>
-      coll(s, dir, "documents")
-        .find(Map("$jsonSchema" -> Map(
-          "required" -> Seq("text"),
-          "properties" -> Map(
-            "lang" -> Map("enum" -> Seq("en", "de")),
-            "n_chars" -> Map("bsonType" -> "long",
-              "minimum" -> 100, "maximum" -> 300),
-            "text" -> Map("pattern" -> "^[a-z]")))))
-        .select(Map("doc_id" -> 1))
-        .sort("doc_id")
-        .toDF),
-
-    // geo query operators (pass-through db/wrapper.go:452-481): $geoWithin
-    // $box + legacy $near distance bound over the embedding's first two
-    // components as planar coordinates — both fold into scan-fused codegen
-    "q123_geowithin" -> ((s, dir) =>
-      coll(s, dir, "embeddings")
-        .find(Map("$and" -> Seq(
-          Map("embedding" -> Map("$geoWithin" ->
-            Map("$box" -> Seq(Seq(-0.5, -0.5), Seq(0.5, 0.5))))),
-          Map("embedding" -> Map("$near" -> Seq(0.0, 0.0),
-            "$maxDistance" -> 0.45)))))
-        .select(Map("vec_id" -> 1))
-        .sort("vec_id")
-        .toDF),
-
-    // Atlas-style $search (pass-through db/wrapper.go:88-94): BM25 text
-    // operator, score surfaced via {$meta: "searchScore"} — scan-fused
-    // per-row scoring against one broadcast stats row, no per-doc shuffle
-    "q120_search_text" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("index" -> "default", "text" ->
-          Map("query" -> "stream filter shuffle", "path" -> "text"))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(desc("score"), asc("doc_id")).limit(20)),
-
-    // $searchMeta count + $collStats: metadata results as 1-row frames
-    "q121_search_meta" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$searchMeta" -> Map("text" ->
-          Map("query" -> "stream filter shuffle", "path" -> "text")))))
-        .select(col("count.total").as("total"))),
-
-    "q122_collstats" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$collStats" -> Map("count" -> Map.empty[String, Any],
-          "storageStats" -> Map.empty[String, Any]))))
-        .select(col("count"), col("storageStats.nindexes").as("nindexes"))),
-
-    // $search compound: BM25 must-text + phrase mustNot + wildcard filter
-    // + scoring should-phrase; score = must BM25 + matching should
-    // occurrences (filter/mustNot score 0, Lucene-style)
-    "q138_search_compound" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("compound" -> Map(
-          "must" -> Seq(Map("text" ->
-            Map("query" -> "stream filter", "path" -> "text"))),
-          "mustNot" -> Seq(Map("phrase" ->
-            Map("query" -> "slow merge", "path" -> "text"))),
-          "filter" -> Seq(Map("wildcard" ->
-            Map("query" -> "*join*", "path" -> "text"))),
-          "should" -> Seq(Map("phrase" ->
-            Map("query" -> "hash join", "path" -> "text")))))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(desc("score"), asc("doc_id")).limit(25)),
-
-    // $text grammar: OR-term + "quoted phrase" (must be present) +
-    // -term exclusion (must be absent), through the find() surface
-    "q139_text_negation" -> ((s, dir) =>
-      coll(s, dir, "documents").find(Map(
-        "$text" -> Map("$search" -> "spark -slow \"stream filter\"")))
-        .sort("doc_id").select("doc_id", "lang").toDF),
-
-    // $text default case-insensitivity (Mongo parity): upper-cased search
-    // terms fold onto the lowercase corpus; exclusions fold too
-    "q144_text_case" -> ((s, dir) =>
-      coll(s, dir, "documents").find(Map(
-        "$text" -> Map("$search" -> "SPARK -Filter",
-          "$caseSensitive" -> false)))
-        .sort("doc_id").select("doc_id").toDF),
-
-    // sequence packing (pack-then-chunk pretraining batcher): per-source
-    // prefix sum assigns each doc the fixed-size token window its first
-    // token lands in — one window exchange, group-parallel
-    "q145_pack_sequences" -> ((s, dir) =>
-      graft.ops.Packing.packSequences(tbl(s, dir, "documents"),
-        "doc_id", "n_chars", 5000L, "source")
-        .select(col("doc_id"), col("source"), col("start_tok"),
-          col("seq_id"))
-        .orderBy("doc_id")),
-
-    // $searchMeta facet collector: string top-N + number-boundary facets
-    // under a text operator pre-filter; the struct result is flattened to
-    // driver-comparable rows (facet, bucket, cnt)
-    // $searchMeta DATE facets: [boundaries) year buckets keyed by the
-    // lower boundary timestamp, over a range-filtered operator set
-    "q193_searchmeta_date_facet" -> ((s, dir) => {
-      val meta = coll(s, dir, "orders").pipe(Seq(
-        Map("$searchMeta" -> Map("facet" -> Map(
-          "operator" -> Map("range" ->
-            Map("path" -> "o_totalprice", "gte" -> 50000)),
-          "facets" -> Map(
-            "byYear" -> Map("type" -> "date", "path" -> "o_orderdate",
-              "boundaries" -> Seq("1993-01-01", "1995-01-01",
-                "1997-01-01", "1999-01-01"))))))))
-      meta.select(lit("year").as("facet"),
-          explode(col("facet.byYear.buckets")).as("b"))
-        .select(col("facet"), col("b._id").cast("string").as("bucket"),
-          col("b.count").as("cnt"))
-        .unionByName(meta.select(lit("total").as("facet"),
-          lit("all").as("bucket"), col("count.total").as("cnt")))
-        .orderBy("facet", "bucket")
-    }),
-
-    "q142_searchmeta_facet" -> ((s, dir) => {
-      val meta = coll(s, dir, "documents").pipe(Seq(
-        Map("$searchMeta" -> Map("facet" -> Map(
-          "operator" -> Map("text" ->
-            Map("query" -> "stream", "path" -> "text")),
-          "facets" -> Map(
-            "byLang" -> Map("type" -> "string", "path" -> "lang",
-              "numBuckets" -> 3),
-            "byLen" -> Map("type" -> "number", "path" -> "n_chars",
-              "boundaries" -> Seq(0, 200, 400, 600))))))))
-      meta.select(lit("lang").as("facet"),
-          explode(col("facet.byLang.buckets")).as("b"))
-        .select(col("facet"), col("b._id").cast("string").as("bucket"),
-          col("b.count").as("cnt"))
-        .unionByName(meta.select(lit("len").as("facet"),
-            explode(col("facet.byLen.buckets")).as("b"))
-          .select(col("facet"), col("b._id").cast("string").as("bucket"),
-            col("b.count").as("cnt")))
-        .unionByName(meta.select(lit("total").as("facet"),
-          lit("all").as("bucket"), col("count.total").as("cnt")))
-        .orderBy("facet", "bucket")
-    }),
-
-    // $search structured operators (equals/in/range/exists) as compound
-    // filter/must legs plus a boosted should-phrase; constant-score legs
-    // + boost multiplier reproduce exactly in SQL
-    "q143_search_structured" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("compound" -> Map(
-          "filter" -> Seq(
-            Map("in" -> Map("path" -> "lang",
-              "value" -> Seq("en", "fr"))),
-            Map("range" -> Map("path" -> "n_chars",
-              "gte" -> 100, "lt" -> 400))),
-          "must" -> Seq(Map("exists" -> Map("path" -> "source"))),
-          "should" -> Seq(Map("phrase" -> Map(
-            "query" -> "vector scan", "path" -> "text",
-            "score" -> Map("boost" -> Map("value" -> 5.0)))))))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"), col("score").cast("double").as("score"))
-        .orderBy("doc_id")),
-
-    // $rankFusion (Mongo 8.1): RRF over a BM25 lexical ranking and a
-    // length ranking, fused on doc_id (columnar key extension), fused
-    // score exposed through the searchScore carrier
-    "q146_rank_fusion" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$rankFusion" -> Map(
-          "key" -> "doc_id",
-          "input" -> Map("pipelines" -> Map(
-            "lex" -> Seq(
-              Map("$search" -> Map("text" ->
-                Map("query" -> "stream filter", "path" -> "text"))),
-              Map("$sort" -> Map("score" -> Map("$meta" -> "searchScore"),
-                "doc_id" -> 1)),
-              Map("$limit" -> 20)),
-            "len" -> Seq(
-              Map("$sort" -> Map("n_chars" -> -1, "doc_id" -> 1)),
-              Map("$limit" -> 20)))),
-          "combination" -> Map("weights" ->
-            Map("lex" -> 1.0, "len" -> 1.0)))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(desc("score"), asc("doc_id"))),
-
-    // $scoreFusion (Mongo 8.1): minMaxScaler-normalized weighted average
-    // of a BM25 text leg and a phrase-occurrence leg, fused on doc_id
-    "q147_score_fusion" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$scoreFusion" -> Map(
-          "key" -> "doc_id",
-          "input" -> Map(
-            "normalization" -> "minMaxScaler",
-            "pipelines" -> Map(
-              "lex" -> Seq(
-                Map("$search" -> Map("text" ->
-                  Map("query" -> "stream filter", "path" -> "text"))),
-                Map("$sort" -> Map("score" -> Map("$meta" -> "searchScore"),
-                  "doc_id" -> 1)),
-                Map("$limit" -> 20)),
-              "ph" -> Seq(
-                Map("$search" -> Map("phrase" ->
-                  Map("query" -> "hash join", "path" -> "text"))),
-                Map("$sort" -> Map("score" -> Map("$meta" -> "searchScore"),
-                  "doc_id" -> 1)),
-                Map("$limit" -> 20)))),
-          "combination" -> Map("method" -> "avg",
-            "weights" -> Map("lex" -> 2.0)))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(desc("score"), asc("doc_id"))),
-
-    // $vectorSearch pre-filter: MQL match doc applied before the ranking
-    // (pushed into the scan), exact top-k after
-    "q148_vector_filter" -> ((s, dir) =>
-      coll(s, dir, "embeddings").pipe(Seq(
-        Map("$vectorSearch" -> Map("path" -> "embedding",
-          "queryVector" -> q75Vec, "limit" -> 15, "tieBreak" -> "vec_id",
-          "filter" -> Map("label" -> Map("$in" -> Seq(0, 1)),
-            "vec_id" -> Map("$lt" -> 300)))),
-        Map("$project" -> Map("vec_id" -> 1, "label" -> 1))))
-        .orderBy("vec_id")),
-
-    // Mongo 8.1 score-normalization additions: $minMaxScaler window
-    // operator (frame extrema in the SAME one-pass window as min/max)
-    // and the $sigmoid expression — both scan-fused scalar math after
-    // one partition-keyed window exchange
-    "q149_sigmoid_minmax" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 2000))),
-        Map("$setWindowFields" -> Map(
-          "partitionBy" -> "$o_orderpriority",
-          "output" -> Map("scaled" -> Map("$minMaxScaler" -> Map(
-            "input" -> "$o_totalprice", "min" -> 0, "max" -> 100))))),
-        Map("$project" -> Map("o_orderkey" -> 1, "scaled" -> 1,
-          "sig" -> Map("$sigmoid" -> Map("$divide" -> Seq(
-            Map("$subtract" -> Seq("$o_totalprice", 150000.0)),
-            50000.0)))))))
-        .select(col("o_orderkey"),
-          col("scaled").cast("decimal(18,9)").cast("double").as("scaled"),
-          col("sig").cast("decimal(18,9)").cast("double").as("sig"))
-        .orderBy("o_orderkey")),
-
-    // DSIR (arXiv:2302.03169): select raw docs whose hashed
-    // unigram+bigram profile looks like the src0 slice — two tiny model
-    // aggregations, a broadcast ≤buckets-row log-ratio table, one
-    // doc-keyed scoring shuffle, deterministic hashed-Gumbel top-k
-    "q150_dsir" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      Dsir.select(docs, "doc_id", "text",
-        docs.where(col("source") === "src0"),
-        k = 50, buckets = 1000, gumbel = true, salt = "dsir")
-        .select(col("doc_id"), col("source"),
-          col("log_weight").cast("decimal(18,9)").cast("double")
-            .as("log_weight"))
-        .orderBy("doc_id")
-    }),
-
-    // Bloom-prefiltered decontamination: same answer as q108's exact
-    // path (false positives only waste shuffle rows), with the
-    // benchmark-shingle sketch built by catalyst BloomFilterAggregate
-    // and might_contain evaluated scan-side before the join
-    "q151_bloom_decontam" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      Decontaminate.contaminationBloom(
-        docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text",
-        n = 3, minHits = 3L, maxBenchDf = 100L,
-        expectedBenchShingles = 1L << 20)
-        .select(col("doc_id"), col("hits"), col("bench_docs"),
-          col("first_bench"))
-        .orderBy("doc_id")
-    }),
-
-    // $search moreLikeThis: the like docs' analyzed terms become one
-    // BM25 text query — find-similar without a vector index
-    "q159_search_morelikethis" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("moreLikeThis" -> Map(
-          "like" -> Seq(Map("text" -> "stream filter window")),
-          "path" -> "text"))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(col("score").desc, col("doc_id")).limit(20)),
-
-    // $search queryString: Lucene query syntax (AND/OR/NOT, parens,
-    // field: overrides, wildcards) compiled to one scan predicate
-    "q160_search_querystring" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("queryString" -> Map(
-          "defaultPath" -> "text",
-          "query" -> "(spark OR shuffle) AND NOT lang:de AND quer*"))),
-        Map("$project" -> Map("doc_id" -> 1, "lang" -> 1))))
-        .orderBy("doc_id")),
-
-    // $search embeddedDocument: per-element inner operator over an
-    // array-of-documents column (lineitems grouped per order), score =
-    // sum of matching elements' scores. Lambda algebra in the scan — no
-    // explode, no join; the only exchanges are the grouping aggregate
-    // and the final TakeOrdered.
-    "q161_search_embedded" -> ((s, dir) => {
-      val grouped = tbl(s, dir, "lineitem")
-        .groupBy(col("l_orderkey").as("order_key"))
-        .agg(collect_list(struct(col("l_returnflag").as("flag"),
-          col("l_quantity").as("qty"))).as("items"))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map("embeddedDocument" -> Map(
-          "path" -> "items",
-          "operator" -> Map("compound" -> Map(
-            "must" -> Seq(Map("equals" ->
-              Map("path" -> "items.flag", "value" -> "R"))),
-            "filter" -> Seq(Map("range" ->
-              Map("path" -> "items.qty", "gte" -> 30)))))))),
-        Map("$project" -> Map("order_key" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))(grouped)
-        .select(col("order_key"), col("score").cast("double").as("score"))
-        .orderBy(col("score").desc, col("order_key")).limit(50)
-    }),
-
-    // Deterministic k-fold assignment: fold = pure hash of the id —
-    // cross-validation splits stable across runs/engines/growth
-    "q178_kfold" -> ((s, dir) =>
-      graft.ops.Sampling.kFold(tbl(s, dir, "documents"), "doc_id", 5)
-        .select("doc_id", "fold").orderBy("doc_id")),
-
-    // Analyzed-token sloppy phrase: terms must appear IN ORDER with total
-    // inter-term gap <= slop (Lucene sloppy-phrase); score = number of
-    // sloppy occurrences — pure scan-local array algebra
-    "q179_search_phrase_slop" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("phrase" -> Map(
-          "query" -> "stream filter", "path" -> "text", "slop" -> 1))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"), col("score").cast("double").as("score"))
-        .orderBy("doc_id")),
-
-    // Collation on the find surface: strength-2 (case-insensitive)
-    // matching folds BOTH comparison sides — the uppercase query literals
-    // match lowercase stored values — and string sort keys fold likewise
-    "q180_collation_find" -> ((s, dir) =>
-      coll(s, dir, "documents")
-        .find(Map("lang" -> Map("$in" -> Seq("EN", "FR"))))
-        .collation(Map("locale" -> "en", "strength" -> 2))
-        .sort("source", "-doc_id")
-        .select("doc_id", "lang", "source").toDF),
-
-    // Atlas {score: {function}}: the full expression DSL — relevance
-    // multiplied by log1p of a numeric field and a gaussian decay
-    // centered on n_chars 300 (boost-by-popularity + decay-by-distance,
-    // the canonical Atlas function-score idiom); pure scan algebra in
-    // the same score projection as the BM25 terms it modifies
-    "q190_search_function_score" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("text" -> Map(
-          "query" -> "stream", "path" -> "text",
-          "score" -> Map("function" -> Map("multiply" -> Seq(
-            Map("score" -> "relevance"),
-            Map("log1p" -> Map("path" -> Map("value" -> "n_chars"))),
-            Map("gauss" -> Map(
-              "path" -> Map("value" -> "n_chars"),
-              "origin" -> 300, "scale" -> 150, "decay" -> 0.5)))))))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(col("score").desc, col("doc_id")).limit(25)),
-
-    // unigram entropy in nats per document — the low-entropy
-    // repetitive/spam screen; per-term contributions quantize to 1e-6
-    // (micro-nat) longs so the sum is partitioning-invariant and
-    // engine-exact
-    "q196_token_entropy" -> ((s, dir) =>
-      tbl(s, dir, "documents")
-        .where(col("doc_id") < 500)
-        .select(col("doc_id"),
-          TextFunctions.tokenEntropy(col("text")).as("entropy"))
-        .orderBy("doc_id")),
-
-    // per-key cap: at most 10 documents per source, deterministically
-    // hash-ranked — the per-domain cap of web-corpus curation
-    "q195_cap_per_key" -> ((s, dir) =>
-      Sampling.capPerKey(tbl(s, dir, "documents"), "doc_id", "source", 10)
-        .select("doc_id", "source").orderBy("doc_id")),
-
-    // classic $match $text with $language "english": the quoted phrase
-    // "filtering queries" stems to [filter, queri] and adjacency runs
-    // in the STOP-REMOVED stemmed stream on both sides — "filter the
-    // query" matches because 'the' is unindexed
-    "q194_text_language_english" -> ((s, dir) =>
-      coll(s, dir, "documents")
-        .find(Map("$text" -> Map(
-          "$search" -> "\"filtering queries\"",
-          "$language" -> "english")))
-        .select("doc_id").toDF.orderBy("doc_id")),
-
-    // collation alternate "shifted": whitespace + punctuation are
-    // variable characters, ignored at strengths 1-3 — the $match
-    // equality sees "re!USE" ≡ "re-use" ≡ "re use" ≡ "reuse" (strength
-    // 2 folds the case) and the $sort groups all spellings of a word
-    // together, ordered by the stripped key then doc_id. The fixture
-    // spellings come from a $switch on doc_id so the oracle can rebuild
-    // them
-    "q199_collation_shifted" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 300))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 0)), "then" -> "re-use"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 1)), "then" -> "reuse"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 2)), "then" -> "re use"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 3)), "then" -> "refuse"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 4)), "then" -> "re-fuse")),
-          "default" -> "rescue")))),
-        Map("$match" -> Map("tag" -> Map("$in" -> Seq(
-          "re!USE", "REFUSE")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "en", "strength" -> 2,
-          "alternate" -> "shifted"))),
-
-    // collation numericOrdering: digit runs compare as numbers, so
-    // src2 sorts before src10 (binary order would interleave src1,
-    // src10..src19, src2); composed with strength 2 the lang filter
-    // stays case-insensitive
-    "q189_collation_numeric" -> ((s, dir) =>
-      coll(s, dir, "documents")
-        .find(Map("lang" -> Map("$in" -> Seq("EN", "FR"))))
-        .collation(Map("locale" -> "en", "strength" -> 2,
-          "numericOrdering" -> true))
-        .sort("source", "doc_id")
-        .select("doc_id", "source").toDF),
-
-    // Atlas lucene.english analyzer: possessive strip + stop-word
-    // removal + Porter stemming on BOTH sides — the query's inflected
-    // terms ("filtering queries") reduce to the same index terms as the
-    // documents' base forms ("filter", "query" — step1c folds query→
-    // queri exactly like queries→queri), and the stop word "the"
-    // contributes nothing (un-stopped it would match every doc)
-    "q187_search_english_stemming" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.english",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map("query" -> "the filtering queries",
-              "path" -> "text")))))),
-        Map("$project" -> Map("doc_id" -> 1))))
-        .orderBy("doc_id")),
-
-    // Atlas lucene.french analyzer: Snowball French stemming + stop
-    // removal on BOTH sides over a deterministic French fixture column
-    // (the corpus text is English, so the fixture derives three words
-    // from doc_id — inflection groups exercise step-1 suffix chains
-    // [majestueusement→majestu], undoubling [continuelle→continuel] and
-    // er-verb endings; the stop word in the middle must vanish). Query
-    // "la continuelle majestueusement" analyzes to [continuel, majestu];
-    // OR-match semantics like q187
-    "q197_search_french_stemming" -> ((s, dir) => {
-      val w1 = Seq("continuellement", "continuelle", "continuel",
-        "chercher", "cherchez")
-      val w2 = Seq("les", "et", "la", "de")
-      val w3 = Seq("majestueux", "majestueuse", "traitement", "traiter",
-        "nationale", "finissait")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("ftext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 6 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.french",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "la continuelle majestueusement",
-              "path" -> "ftext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // $text $language "german": Snowball German stemming (with umlaut
-    // folding in the postlude) + stop removal, phrase adjacency running
-    // in the stop-removed stemmed stream — "mögliche kinder" matches
-    // "möglichkeiten der kindern" because 'der' is unindexed and both
-    // inflections stem to [moglich, kind]
-    "q198_text_language_german" -> ((s, dir) => {
-      val g1 = Seq("möglichkeiten", "mögliche", "möglich", "laufen",
-        "laufe")
-      val g2 = Seq("der", "die", "und", "das")
-      val g3 = Seq("kinder", "kindes", "kind", "bedürfnisse",
-        "wanderung")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("text", concat_ws(" ",
-          element_at(typedlit(g1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(g2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(g3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$match" -> Map("$text" -> Map(
-          "$search" -> "\"mögliche kinder\"",
-          "$language" -> "german"))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // Atlas $search searchAfter keyset pagination: page 1's last
-    // {$meta: "searchSequenceToken"} (a base64 cursor encoding the
-    // sort-key values) resumes page 2 strictly after that position —
-    // no overlap, no gap. Sort is (BM25 score desc, doc_id asc): a
-    // total order, so the cursor is exact even across score ties. The
-    // single collected token is bounded driver state (one row)
-    "q200_search_after_pagination" -> ((s, dir) => {
-      val sortSpec = Map("s" -> Map("$meta" -> "searchScore"),
-        "doc_id" -> 1)
-      def stages(after: Option[String]) = Seq(
-        Map("$search" -> (Map(
-          "text" -> Map("query" -> "stream filter", "path" -> "text"),
-          "sort" -> sortSpec) ++
-          after.map("searchAfter" -> _).toMap)),
-        Map("$limit" -> 10),
-        Map("$project" -> Map("doc_id" -> 1,
-          "tok" -> Map("$meta" -> "searchSequenceToken"))))
-      val c = coll(s, dir, "documents")
-      val cursor = c.pipe(stages(None)).collect()
-        .last.getAs[String]("tok")
-      c.pipe(stages(Some(cursor))).select("doc_id")
-    }),
-
-    // collation caseFirst "upper": the caseLevel struct key's case-bit
-    // string relabels so uppercase orders before lowercase WITHIN an
-    // equal primary — ALPHA < ALPHa < Alpha < alpha — while the primary
-    // level still decides first (every alpha spelling before beta)
-    "q204_collation_casefirst" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 300))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 0)), "then" -> "alpha"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 1)), "then" -> "Alpha"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 2)), "then" -> "ALPHA"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 3)), "then" -> "beta"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 4)), "then" -> "Beta")),
-          "default" -> "ALPHa")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "en", "strength" -> 2, "caseLevel" -> true,
-          "caseFirst" -> "upper"))),
-
-    // lucene.spanish $search: Snowball Spanish stemming — trabajador /
-    // trabajando / trabaja all index as 'trabaj', generosamente's
-    // amente chain reaches 'gener' (os follow-up in R2), and the stop
-    // slot never matches
-    "q202_search_spanish_stemming" -> ((s, dir) => {
-      val w1 = Seq("trabajando", "trabajadores", "trabaja", "canciones",
-        "atenciones")
-      val w2 = Seq("de", "la", "que", "el")
-      val w3 = Seq("generosidad", "generoso", "lógica", "lógicamente",
-        "comunicación", "niños")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("stext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 6 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.spanish",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "el trabajador generosamente",
-              "path" -> "stext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // $text $language "spanish"/"italian": q203 runs the Italian chain
-    // with phrase adjacency in the stop-removed stemmed stream —
-    // "nazionale possibilità" matches "nazionali della possibile"
-    // because 'della' is unindexed and the inflections stem together
-    // (while nazione stems to nazion ≠ nazional, the published split)
-    "q203_text_language_italian" -> ((s, dir) => {
-      val g1 = Seq("nazionale", "nazionali", "nazione", "mangiare",
-        "mangiando")
-      val g2 = Seq("della", "dello", "delle", "degli")
-      val g3 = Seq("possibilità", "possibile", "abbandonata", "crocchi",
-        "fortunatamente")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("text", concat_ws(" ",
-          element_at(typedlit(g1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(g2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(g3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$match" -> Map("$text" -> Map(
-          "$search" -> "\"nazionale possibilità\"",
-          "$language" -> "italian"))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // lucene.portuguese $search: Snowball Portuguese stemming —
-    // trabalhando / trabalhadores / trabalha meet the query's
-    // 'trabalhador', the cantar verb family (cantando / cantei) meets
-    // 'cantar', and the stop slot never matches
-    "q205_search_portuguese_stemming" -> ((s, dir) => {
-      val w1 = Seq("trabalhando", "trabalhadores", "trabalha",
-        "logicamente", "amabilidade")
-      val w2 = Seq("de", "para", "com", "não")
-      val w3 = Seq("generoso", "cantando", "cantei", "chegue",
-        "generosidade")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("ptext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.portuguese",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "o trabalhador cantar",
-              "path" -> "ptext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // lucene.dutch $search: Snowball Dutch stemming — lichamelijk /
-    // lichamen / lichaam all index as 'licham' (the heden→heid→delete
-    // chain plus the step-4 vowel undouble), gelukkige meets
-    // 'gelukkig', and the stop slot never matches
-    "q206_search_dutch_stemming" -> ((s, dir) => {
-      val w1 = Seq("lichamelijk", "lichamen", "lichaam", "boeken",
-        "bakken")
-      val w2 = Seq("de", "van", "het", "een")
-      val w3 = Seq("gelukkige", "mogelijkheden", "bomen", "maan",
-        "jongens")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("ntext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.dutch",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "de lichamelijkheden gelukkig",
-              "path" -> "ntext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // lucene.swedish $search: Snowball Swedish stemming — the flicka
-    // plural family (orna/or/a) meets 'flicka', the möjlig het+lig
-    // chain meets 'möjligheter' at 'möj', and the stop slot never
-    // matches
-    "q207_search_swedish_stemming" -> ((s, dir) => {
-      val w1 = Seq("flickorna", "flickor", "flicka", "bilarna",
-        "tidning")
-      val w2 = Seq("och", "att", "som", "när")
-      val w3 = Seq("möjligheterna", "möjlighet", "tryckt", "upplöst",
-        "generös")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("svtext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.swedish",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "och flicka möjligheter",
-              "path" -> "svtext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // $text $language da: Snowball Danish stemming through the $text
-    // surface — the hund plural family meets 'hunde', the els chain
-    // meets 'undersøgelser' at 'undersøg', the stop slot never matches
-    "q208_text_language_danish" -> ((s, dir) => {
-      val w1 = Seq("hundene", "hunden", "hunde", "parallelle", "bakker")
-      val w2 = Seq("og", "til", "men", "efter")
-      val w3 = Seq("undersøgelsen", "undersøgelse", "venlig", "billige",
-        "bord")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("text", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$match" -> Map("$text" -> Map(
-          "$search" -> "hunde og undersøgelser",
-          "$language" -> "da"))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // lucene.norwegian $search: Snowball Norwegian stemming — the hus
-    // et/ene/ets family meets 'huset', erte→er meets 'vurdere' at
-    // 'vurder', the stop slot never matches
-    "q209_search_norwegian_stemming" -> ((s, dir) => {
-      val w1 = Seq("huset", "husene", "husets", "gutter", "bord")
-      val w2 = Seq("og", "til", "er", "som")
-      val w3 = Seq("vurderte", "vurdere", "naturlige", "kaster",
-        "kastet")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("notext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.norwegian",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "og huset vurdere",
-              "path" -> "notext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // tailored Swedish collation: å/ä/ö sort as distinct letters AFTER
-    // z (CLDR sv), not as accented a/o — the lower+strip model would
-    // order åker/äpple/ära with the a-words and öga with the o-ish
-    // ones
-    "q210_collation_swedish_tailored" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 280))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 0)), "then" -> "öga"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 1)), "then" -> "zon"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 2)), "then" -> "åker"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 3)), "then" -> "ära"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 4)), "then" -> "arm"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 5)), "then" -> "bok")),
-          "default" -> "äpple")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "sv", "strength" -> 1))),
-
-    // tailored Danish collation at strength 2: æ/ø/å sort after z, the
-    // aa digraph collates EQUAL to å (their difference is tertiary),
-    // and within a primary group the CLDR secondary order holds
-    // (æ before ä, ø before ö — the opposite of binary)
-    "q211_collation_danish_aa" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 280))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 0)), "then" -> "Aalborg"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 1)), "then" -> "Ålborg"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 2)), "then" -> "äble"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 3)), "then" -> "æble"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 4)), "then" -> "ørn")),
-          "default" -> "zebra")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "da", "strength" -> 2))),
-
-    // lucene.russian $search: Snowball Russian stemming — the first
-    // non-Latin ALPHABETIC analysis chain (CJK covers the
-    // no-word-separator case); бегать/бегала/бегали meet on one stem,
-    // возможности/возможностями/возможностей likewise (noun ending +
-    // derivational ость-in-R2), and the stop slot (и/в/не/на) never
-    // matches — nor does the stop query term и
-    "q212_search_russian_stemming" -> ((s, dir) => {
-      val w1 = Seq("бегала", "бегали", "книгами", "красивый", "бегать")
-      val w2 = Seq("и", "в", "не", "на")
-      val w3 = Seq("возможностями", "возможность", "книга",
-        "странное", "возможностей")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("rtext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.russian",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "и бегать возможности",
-              "path" -> "rtext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // tailored Russian collation at strength 2: ё collates as a
-    // secondary variant of е (CLDR ru) — binary order would exile the
-    // ё-words past я; strength 2 orders е << ё inside each primary
-    // group
-    "q213_collation_russian_yo" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 280))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 0)), "then" -> "еж"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 1)), "then" -> "ёж"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 2)), "then" -> "елка"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 3)), "then" -> "ёлка"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 4)), "then" -> "жук")),
-          "default" -> "яблоко")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "ru", "strength" -> 2))),
-
-    // tailored Turkish collation: the dotless-i CASE FOLD itself is
-    // locale-tailored (I→ı, İ→i — Iğdır folds to ığdır, İzmir to
-    // izmir), and ç/ğ/ı/ö/ş/ü re-order as distinct letters
-    // MID-alphabet (ç right after c, ı BEFORE i) — binary would sort
-    // the uppercase words first and ç past z
-    "q214_collation_turkish" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 280))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 0)), "then" -> "cam"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 1)), "then" -> "çam"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 2)), "then" -> "Iğdır"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 3)), "then" -> "ırmak"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 4)),
-              "then" -> "istanbul"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 7)), 5)), "then" -> "İzmir")),
-          "default" -> "şeker")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "tr", "strength" -> 1))),
-
-    // collation backwards (fr_CA's ICU default): the secondary
-    // (accent) level compares from the END of the string — côte
-    // sorts BEFORE coté (the LAST accent difference decides), while
-    // the primary level still dominates (cotre/cozy after the whole
-    // cote family regardless of accents)
-    "q215_collation_fr_backwards" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 280))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 0)), "then" -> "cote"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 1)), "then" -> "coté"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 2)), "then" -> "côte"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 3)), "then" -> "côté"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 4)), "then" -> "cotre")),
-          "default" -> "cozy")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "fr_CA", "strength" -> 2))),
-
-    // collation normalization: true — canonically-equivalent input
-    // (decomposed e + COMBINING ACUTE vs precomposed é) collates
-    // equal: the key composes to NFC before the strength fold, so the
-    // decomposed slots match a precomposed query literal
-    "q216_collation_normalization" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 300))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 5)), 0)), "then" -> "café"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 5)), 1)),
-              "then" -> "café"), // decomposed
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 5)), 2)),
-              "then" -> "CAFÉ"), // decomposed, uppercase
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 5)), 3)), "then" -> "cafe")),
-          "default" -> "latte")))),
-        Map("$match" -> Map("tag" -> "café")),
-        Map("$project" -> Map("doc_id" -> 1))),
-        Map("locale" -> "en", "strength" -> 2,
-          "normalization" -> true))
-        .orderBy("doc_id")),
-
-    // aggregate-level collation applies to $group EQUALITY (Mongo runs
-    // the whole pipeline under the collation): at strength 2 the
-    // case-variant tags are ONE group; the engine surfaces the
-    // deterministic min-original as _id (Mongo's representative is
-    // first-encountered, i.e. unspecified) and the trailing $sort folds
-    // through the same key
-    "q217_group_collation" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 300))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 5)), 0)), "then" -> "Alpha"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 5)), 1)), "then" -> "alpha"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 5)), 2)), "then" -> "ALPHA"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 5)), 3)), "then" -> "Beta")),
-          "default" -> "beta")))),
-        Map("$group" -> Map("_id" -> "$tag",
-          "n" -> Map("$sum" -> 1))),
-        Map("$sort" -> Map("_id" -> 1))),
-        Map("locale" -> "en", "strength" -> 2))),
-
-    // aggregate-level collation applies to $lookup EQUALITY: at
-    // strength 2 the case-variant names join nation's uppercase
-    // n_name ("NATION_3"…); the made-up name matches nothing
-    // (left-outer empty array). Still one hash equi-join — the key folds through
-    // the same scalar collation-key expression as $match/$sort.
-    "q218_lookup_collation" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 300))),
-        Map("$addFields" -> Map("cname" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 4)), 0)), "then" -> "nation_3"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 4)), 1)), "then" -> "Nation_3"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 4)), 2)), "then" -> "NATION_7")),
-          "default" -> "atlantis")))),
-        Map("$lookup" -> Map("from" -> "nation",
-          "localField" -> "cname", "foreignField" -> "n_name",
-          "as" -> "nn")),
-        Map("$project" -> Map("doc_id" -> 1, "cname" -> 1,
-          "n" -> Map("$size" -> "$nn")))),
-        Map("locale" -> "en", "strength" -> 2))
-        .orderBy("doc_id")),
-
-    // tailored Spanish collation: ñ is a DISTINCT letter between n and
-    // o (CLDR es) — the lower+strip model would fold peña onto pena;
-    // accents stay secondary (está groups with esta) and case folds
-    "q219_collation_spanish_enye" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 280))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 0)), "then" -> "pan"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 1)), "then" -> "pena"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 2)), "then" -> "peña"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 3)), "then" -> "peor"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 4)), "then" -> "PEÑA")),
-          "default" -> "está")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "es", "strength" -> 1))),
-
-    // tailored Polish collation: ą/ł/ź/ż are distinct primaries IN
-    // PLACE (a < ą, l < ł, z < ź < ż) — binary would interleave them
-    // past z
-    "q220_collation_polish" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 280))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 0)), "then" -> "luz"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 1)), "then" -> "łaska"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 2)), "then" -> "maj"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 3)), "then" -> "za"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 4)), "then" -> "źle")),
-          "default" -> "żaba")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "pl", "strength" -> 1))),
-
-    // tailored Czech collation: the ch DIGRAPH is one letter between h
-    // and i (chata sorts after hrad, not with the c-words), č/ř after
-    // their bases
-    "q221_collation_czech_ch" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 280))),
-        Map("$addFields" -> Map("tag" -> Map("$switch" -> Map(
-          "branches" -> Seq(
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 0)), "then" -> "cena"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 1)), "then" -> "čaj"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 2)), "then" -> "hrad"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 3)), "then" -> "chata"),
-            Map("case" -> Map("$eq" -> Seq(
-              Map("$mod" -> Seq("$doc_id", 6)), 4)), "then" -> "irsko")),
-          "default" -> "řeka")))),
-        Map("$sort" -> Map("tag" -> 1, "doc_id" -> 1)),
-        Map("$project" -> Map("doc_id" -> 1, "tag" -> 1))),
-        Map("locale" -> "cs", "strength" -> 1))),
-
-    // lucene.turkish $search: Snowball Turkish stemming pairs the
-    // tailored tr collation with stemmed search (the last tailored
-    // locale with a published algorithmic stemmer — pl needs the
-    // dictionary-based Stempel). kitaplarım/kitaplar/kitabı meet on
-    // one stem through possessive/plural/accusative+devoicing chains;
-    // evdekiler/evde/evlerim meet through the -ki chain; the stop
-    // slot (ve/bu/bir/ile) never matches — nor does the stop query
-    // term ve
-    "q222_search_turkish_stemming" -> ((s, dir) => {
-      val w1 = Seq("kitaplarım", "kitaplar", "arabam", "gelmiş",
-        "kitabı")
-      val w2 = Seq("ve", "bu", "bir", "ile")
-      val w3 = Seq("evdekiler", "evde", "gözlerimde", "arabalar",
-        "evlerim")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("rtext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.turkish",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "ve kitaplarımdan evdeki",
-              "path" -> "rtext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // lucene.czech $search: the published Dolamic & Savoy light
-    // stemmer (Czech has no Snowball algorithm) — městech/města/město
-    // meet on one stem through case endings, praze/prahy/praha through
-    // the z→h palatalization normalization; the stop slot never
-    // matches, nor does the stop query term a
-    "q223_search_czech_stemming" -> ((s, dir) => {
-      val w1 = Seq("městech", "města", "pracovníci", "bratrova",
-        "město")
-      val w2 = Seq("a", "je", "na", "to")
-      val w3 = Seq("praze", "prahy", "ženách", "bratrův", "praha")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("rtext", concat_ws(" ",
-          element_at(typedlit(w1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(w2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int")),
-          element_at(typedlit(w3),
-            ((col("doc_id") / 20).cast("long") % 5 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.czech",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "a městě praha",
-              "path" -> "rtext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // SEMANTIC decontamination: embedding-cosine leak detection against
-    // a benchmark set (the paraphrase complement of the n-gram q108 /
-    // bloom q151 decontamination) — benchmark side broadcast-small, one
-    // corpus scan, partial-agg before the exchange
-    "q224_semantic_decontamination" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      graft.ops.Decontaminate.semantic(
-        e.where(col("vec_id") >= 32), "vec_id", "embedding",
-        e.where(col("vec_id") < 32), "vec_id", "embedding",
-        threshold = 0.3)
-        .orderBy("vec_id")
-    }),
-
-    // cluster RESOLUTION: the retention policy over q50's duplicate
-    // clusters — keep the best-quality (longest, tie-break min id) doc
-    // per cluster instead of the arbitrary min-id representative;
-    // singletons survive as their own component
-    "q225_dedup_keep_best" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val clusters = Dedup.duplicateClusters(
-        Dedup.minhashLshPairs(docs, "doc_id", "text",
-          k = 3, numPerms = 12, bands = 4))
-      Dedup.resolveClusters(docs, clusters, "doc_id", "n_chars")
-        .select("doc_id", "component", "cluster_size")
-        .orderBy("doc_id")
-    }),
-
-    // INCREMENTAL keep-best resolve: batch-2 pairs fold into the
-    // batch-1 labeling (q245's mergeClusters), then ONLY the changed
-    // components re-elect survivors — untouched prior survivors pass
-    // through, new singletons ride in — and the result must equal the
-    // one-shot q225 keep-best over the full corpus (SHARED oracle)
-    "q252_resolve_incremental" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      // persisted: the fixture splits this ONE pair frame into prior
-      // and delta halves consumed by four downstream stages — without
-      // the persist each stage re-runs the LSH band join
-      val all = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 3, numPerms = 12, bands = 4).persist()
-      val priorPairs = all.where(col("id_a") < 250 && col("id_b") < 250)
-      val deltaPairs = all.where(col("id_a") >= 250 || col("id_b") >= 250)
-      val priorLabels = Dedup.duplicateClusters(priorPairs)
-      val priorResolved = Dedup.resolveClusters(
-        docs.where(col("doc_id") < 250), priorLabels,
-        "doc_id", "n_chars")
-      val newLabels = Dedup.mergeClusters(priorLabels, deltaPairs)
-      Dedup.resolveClustersIncremental(docs,
-        docs.where(col("doc_id") >= 250), priorResolved, priorLabels,
-        newLabels, "doc_id", "n_chars")
-        .select("doc_id", "component", "cluster_size")
-        .orderBy("doc_id")
-    }),
-
-    // per-domain quality percentile gate: each source keeps its own
-    // >= p50 rows (a global floor over-prunes clean domains); one
-    // aggregate broadcast back, the corpus never shuffles
-    "q226_domain_quality_filter" -> ((s, dir) =>
-      graft.ops.Curation.domainPercentileFilter(
-        tbl(s, dir, "documents"), "source", "n_chars", quantile = 0.5,
-        exact = true) // exact parity vs quantile_cont; library default
-                      // is the bounded-memory approx sketch
-        .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")),
-
-    // INCREMENTAL per-domain quality gate: the prior corpus's exact
-    // per-(source, score) histogram is a saved mergeable sidecar; the
-    // delta batch merges its own counts in and gates itself under the
-    // UNION's exact percentile thresholds — equal to the one-shot
-    // q226 gate on the union restricted to the delta, with the prior
-    // corpus never re-read (thresholds come from histogram rows)
-    "q256_domain_gate_incremental" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val store = scratchDir("graft-histstore").toString
-      graft.ops.Curation.domainScoreHistogram(
-          docs.where(col("doc_id") < 300), "source", "n_chars")
-        .write.mode("overwrite").parquet(store)
-      graft.ops.Curation.domainPercentileFilterIncremental(
-        docs.where(col("doc_id") >= 300), s.read.parquet(store),
-        "source", "n_chars", quantile = 0.5)
-        .kept
-        .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // URL canonicalization dedup: trivially-distinct spellings of one
-    // resource (tracking/session params, param ORDER, case-varied
-    // host, default port, fragment, www., trailing slash) collide on
-    // the normalized key — one scan-fused regex/array chain + the
-    // one-shuffle exact dedup. Variants 5-7 stay distinct: a different
-    // param value, a kept `ref` param (meaningful, NOT a tracker), a
-    // different host.
-    "q227_url_dedup" -> ((s, dir) => {
-      val pre = Seq(
-        "https://Example.com/p", "https://example.com/p",
-        "https://example.com:443/p", "https://www.example.com/p",
-        "https://example.com/p", "https://example.com/p",
-        "https://example.com/p", "https://other.org/p")
-      val suf = Seq(
-        "/b?utm_source=x&id=7&z=2", "/b?z=2&id=7", "/b?id=7&z=2#frag",
-        "/b/?id=7&z=2", "/b?jsessionid=A9F3&id=7&z=2", "/b?id=8&z=2",
-        "/b?ref=main&id=7&z=2", "/c")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 360)
-        .withColumn("url", concat(
-          element_at(typedlit(pre), (col("doc_id") % 8 + 1).cast("int")),
-          (col("doc_id") / 8).cast("long").cast("string"),
-          element_at(typedlit(suf), (col("doc_id") % 8 + 1).cast("int"))))
-        .withColumn("url_canonical",
-          TextFunctions.normalizeUrl(col("url")))
-      Dedup.exact(df, Seq("url_canonical"), "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // incremental-ingest near-dup: the incoming shard (doc_id >= 200)
-    // dedups against the existing corpus (doc_id < 200) on the shared
-    // minhash band join — delta×corpus candidates only, never
-    // corpus×corpus
-    "q228_incremental_neardup" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      Dedup.minhashLshPairsBetween(
-        docs.where(col("doc_id") >= 200), docs.where(col("doc_id") < 200),
-        "doc_id", "text", k = 3, numPerms = 12, bands = 4)
-        .orderBy("new_id", "ref_id")
-    }),
-
-    // incremental ingest with a PERSISTED signature store: the ref
-    // corpus's band signatures are written once (partitioned by band,
-    // the IVF-store pattern) and each delta batch joins against the
-    // SAVED frame — per-batch cost scales with the delta, never a ref
-    // recompute; must produce exactly q228's pairs (same oracle)
-    "q230_incremental_precomputed" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val store = scratchDir("graft-bandstore").toString
-      storeWrite(Dedup.minhashBandSignatures(
-        docs.where(col("doc_id") < 200),
-        "doc_id", "text", k = 3, numPerms = 12, bands = 4),
-        "band", store)
-      Dedup.minhashLshPairsBetweenPrecomputed(
-        docs.where(col("doc_id") >= 200), s.read.parquet(store),
-        "doc_id", "text", k = 3, numPerms = 12, bands = 4)
-        .orderBy("new_id", "ref_id")
-    }),
-
-    // language-ID confidence: best-minus-second marker margin next to
-    // the label — the ambiguous Scandinavian slot (og det ikke) lands
-    // margin 0 where its label alone reads as a confident "da"
-    "q237_langid_margin" -> ((s, dir) => {
-      val sents = LangIdSentences.map(_._2) :+ "og det ikke"
-      tbl(s, dir, "documents").where(col("doc_id") < 480)
-        .withColumn("mtext", element_at(typedlit(sents),
-          (col("doc_id") % 16 + 1).cast("int")))
-        .select(col("doc_id"),
-          TextFunctions.langId(col("mtext")).as("predicted"),
-          TextFunctions.langIdMargin(col("mtext")).cast("long")
-            .as("margin"))
-        .orderBy("doc_id")
-    }),
-
-    // graded n-gram contamination: the share of each corpus doc's
-    // distinct 3-grams appearing anywhere in the benchmark split — the
-    // GPT-3/PaLM "dirty document" fraction (q108 gives the binary
-    // form); bench shingle set dedups once and broadcasts, corpus
-    // scans once
-    "q232_overlap_fraction" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      graft.ops.Decontaminate.overlapFraction(
-        docs.where(col("doc_id") >= 100), "doc_id", "text",
-        docs.where(col("doc_id") < 100), "text", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    // incremental FUZZY dedup: the day's shard (doc_id >= 177, a
-    // split that cuts through a variant group) fuzzy-matches against
-    // the accumulated corpus on the directional PassJoin — ref
-    // segments indexed once, delta substrings probe them; oracle is
-    // the brute-force cross levenshtein, so blocking recall is proven
-    // complete across the frames
-    "q241_incremental_fuzzy" -> ((s, dir) => {
-      val suf = Seq("-alpha", "-alphA", "-alpha7", "-alph", "-beta",
-        "-gamma")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 360)
-        .withColumn("code", concat(lit("prod"),
-          (col("doc_id") / 6).cast("long").cast("string"),
-          element_at(typedlit(suf), (col("doc_id") % 6 + 1).cast("int"))))
-      Dedup.editDistancePairsBetween(
-        df.where(col("doc_id") >= 177), df.where(col("doc_id") < 177),
-        "doc_id", "code", maxDist = 1)
-        .orderBy("new_id", "ref_id")
-    }),
-
-    // incremental fuzzy ingest with a PERSISTED segment store: the ref
-    // corpus's PassJoin segments (+ ridden strings — the store is
-    // self-sufficient, ref text never re-read) are written once
-    // partitioned by segment index, and the delta probes the SAVED
-    // frame — must produce exactly q241's pairs (same oracle)
-    "q255_fuzzy_store" -> ((s, dir) => {
-      val suf = Seq("-alpha", "-alphA", "-alpha7", "-alph", "-beta",
-        "-gamma")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 360)
-        .withColumn("code", concat(lit("prod"),
-          (col("doc_id") / 6).cast("long").cast("string"),
-          element_at(typedlit(suf), (col("doc_id") % 6 + 1).cast("int"))))
-      val store = scratchDir("graft-edstore").toString
-      storeWrite(Dedup.editDistanceSegmentStore(
-        df.where(col("doc_id") < 177), "doc_id", "code", maxDist = 1),
-        "k", store)
-      Dedup.editDistancePairsBetweenPrecomputed(
-        df.where(col("doc_id") >= 177), s.read.parquet(store),
-        "doc_id", "code", maxDist = 1)
-        .orderBy("new_id", "ref_id")
-    }),
-
-    // margin-based mutual-NN bitext mining (the LASER/CCMatrix
-    // recipe): pairs that are each other's nearest neighbor in BOTH
-    // directions and beat their own neighborhoods' average cosine —
-    // the ratio margin filters the hubs a plain threshold keeps
-    "q240_bitext_mining" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.bitextMine(
-        e.where(col("vec_id") < 40),
-        e.where(col("vec_id") >= 40 && col("vec_id") < 80),
-        "vec_id", "embedding", k = 4, minMargin = 1.0)
-        .orderBy("a_id")
-    }),
-
-    // the one-call crawl preset verified END-TO-END: raw (url, html)
-    // pages through extraction, canonical-URL first-fetch dedup,
-    // language + quality gates, and content dedup — the oracle
-    // replays every stage (the q227 URL chain, the q235 HTML chain,
-    // the q25 scores, the q26 quality formula, both dedup windows)
-    // incremental embedding ingest with a PERSISTED bucket store: the
-    // ref corpus's hyperplane buckets are written once (partitioned by
-    // table — the q230 store pattern applied to vectors) and the delta
-    // batch joins the SAVED frame; the ref side is never re-HASHED —
-    // its vectors only join back by id for the exact-cosine verify
-    "q244_embed_store_neardup" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      val store = scratchDir("graft-vecstore").toString
-      storeWrite(Dedup.vectorBucketSignatures(
-        e.where(col("vec_id") < 400),
-        "vec_id", "embedding", blockTables = 4, blockPlanes = 8,
-        dim = 64), "t", store)
-      Dedup.embeddingNearDupBetweenPrecomputed(
-        e.where(col("vec_id") >= 400), s.read.parquet(store),
-        e.where(col("vec_id") < 400), "vec_id", "embedding",
-        threshold = 0.3, blockTables = 4, blockPlanes = 8, dim = 64)
-        .orderBy("new_id", "ref_id")
-    }),
-
-    // incremental cluster maintenance: batch-2 pairs fold into the
-    // batch-1 labeling by contracted label propagation (delta pairs +
-    // touched prior components only — untouched components never
-    // shuffle); the result must equal the full recompute over ALL
-    // pairs, so the oracle is q50's recursive-CTE components on the
-    // whole corpus
-    "q245_merge_clusters" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      // persisted: prior and delta filters below both consume this one
-      // pair frame — one LSH band join instead of two
-      val all = Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 12, 4)
-        .persist()
-      val prior = Dedup.duplicateClusters(
-        all.where(col("id_a") < 250 && col("id_b") < 250))
-      Dedup.mergeClusters(prior,
-        all.where(col("id_a") >= 250 || col("id_b") >= 250))
-        .orderBy("id")
-    }),
-
-    // incremental simhash ingest with a PERSISTED chunk store: the ref
-    // corpus's (simhash, chunk, key) rows are written once and the
-    // delta joins the SAVED frame — even the hamming verify reads the
-    // store's fingerprint column, never ref text. Pigeonhole blocking
-    // is COMPLETE within the radius, so the oracle is brute hamming
-    "q246_simhash_store_neardup" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val store = scratchDir("graft-simstore").toString
-      storeWrite(Dedup.simhashChunkSignatures(
-        docs.where(col("doc_id") < 200),
-        "doc_id", "text", bits = 60, maxHamming = 3), "chunk", store)
-      Dedup.simhashNearDupBetweenPrecomputed(
-        docs.where(col("doc_id") >= 200), s.read.parquet(store),
-        "doc_id", "text", bits = 60, maxHamming = 3)
-        .orderBy("new_id", "ref_id")
-    }),
-
-    // the EMBEDDED-corpus curation preset, one call: LSH near-dup
-    // pairs (pinned 8-plane/4-table space) -> duplicate clusters ->
-    // keep best quality per cluster -> semantic decon vs the first 8
-    // vectors as benchmark -> deterministic 80% hash sample; the
-    // oracle replays every stage (buckets, cosine, recursive CC,
-    // keep-best window, brute decon, hash-sample arithmetic)
-    "q249_embed_curate" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-        .withColumn("quality", (col("vec_id") * 37 % 101).cast("long"))
-      graft.ops.Curation.embedCurate(e, "vec_id", "embedding",
-        "quality", dupThreshold = 0.3,
-        bench = Some((e.where(col("vec_id") < 8), "vec_id",
-          "embedding")),
-        deconThreshold = 0.5, blockTables = 4, blockPlanes = 8,
-        dim = 64, sampleFraction = 0.8)
-        .select("vec_id", "component", "cluster_size")
-        .orderBy("vec_id")
-    }),
-
-    // the INCREMENTAL embed-curation chain end-to-end, exactly as a
-    // production batch runs it: bootstrap on the ref slice (pinned
-    // planes), persist the bucket store + label/resolved state to
-    // parquet, then fold the delta batch through store-fed pairs ->
-    // mergeClusters -> incremental keep-best -> fresh-only decon ->
-    // sample. The output must equal the ONE-SHOT q249 preset on the
-    // union (shared oracle) — the equality the whole chain exists for
-    "q253_embed_curate_incremental" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-        .withColumn("quality", (col("vec_id") * 37 % 101).cast("long"))
-      val bench = Some((e.where(col("vec_id") < 8), "vec_id",
-        "embedding"))
-      val ref = e.where(col("vec_id") < 400)
-      val delta = e.where(col("vec_id") >= 400)
-      val boot = graft.ops.Curation.embedCurateBootstrap(ref,
-        "vec_id", "embedding", "quality", dupThreshold = 0.3,
-        bench = bench, deconThreshold = 0.5, blockTables = 4,
-        blockPlanes = 8, dim = 64, sampleFraction = 0.8)
-      val store = scratchDir("graft-curstore").toString
-      // r16: the bootstrap state carries the ref bucket frame it
-      // already hashed (and persisted) for its own pair join — write
-      // that instead of re-hashing the ref vectors (VERDICT r15 next-1)
-      val labelsPath = scratchDir("graft-curlabels").toString
-      val resolvedPath = scratchDir("graft-curresolved").toString
-      // three independent store writes overlapped (guide §2.6)
-      concurrently(
-        () => storeWrite(boot.buckets, "t", store),
-        () => boot.labels.write.mode("overwrite").parquet(labelsPath),
-        () => boot.resolved.write.mode("overwrite").parquet(resolvedPath))
-      graft.ops.Curation.embedCurateIncremental(delta, ref,
-        s.read.parquet(store), s.read.parquet(labelsPath),
-        s.read.parquet(resolvedPath), "vec_id", "embedding",
-        "quality", dupThreshold = 0.3, bench = bench,
-        deconThreshold = 0.5, blockTables = 4, blockPlanes = 8,
-        dim = 64, sampleFraction = 0.8)
-        .curated
-        .select("vec_id", "component", "cluster_size")
-        .orderBy("vec_id")
-    }),
-
-    // the crawl preset's STRUCTURED entry point, hooks ON: within-doc
-    // line dedup (repeated nav menu) runs BEFORE cross-corpus
-    // paragraph dedup (shared footer survives once per residue class)
-    // which runs BEFORE the language/quality gates and content dedup
-    // — the one ordering the webCurate docstring warns users not to
-    // hand-compose; the oracle replays every stage in sequence
-    "q248_web_curate_structured" -> ((s, dir) => {
-      val shared = Seq("follow us on social media",
-        "all rights reserved worldwide", "contact support for help")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 240)
-        .withColumn("url", concat(lit("https://Example.com/s/"),
-          col("doc_id").cast("string"), lit("?utm_source=x&page=1")))
-        .withColumn("mtext", concat(
-          lit("site navigation menu\n"), col("text"),
-          lit("\nsite navigation menu\n\n"),
-          element_at(typedlit(shared), (col("doc_id") % 3 + 1).cast("int"))))
-      graft.ops.Curation.webCurateStructured(df, "doc_id", "url",
-        "mtext", targetLang = "en", minQuality = 0.3,
-        dedupLinesWithinDoc = true, dedupParagraphs = true)
-        .select("doc_id", "clean_text", "predicted_lang", "quality")
-        .orderBy("doc_id")
-    }),
-
-    // perceptual-hash image near-dup: deterministic 9x7 BMPs (REAL
-    // ImageIO decode, not the stub) where ids >= 100 perturb one pixel
-    // of their id-100 sibling — dHash flips at most two gradient bits,
-    // the pigeonhole-banded hamming join finds the planted pairs; the
-    // oracle replays the hash from the shared pixel formula
-    "q247_media_phash_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val media = tbl(s, dir, "documents").where(col("doc_id") < 200)
-        .select("doc_id").as[Long]
-        .map(id => (id, Multimodal.fixtureBmp(id)))
-        .toDF("media_id", "content")
-      Multimodal.mediaNearDup(media, maxHamming = 3)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // incremental MEDIA ingest with a PERSISTED chunk store (the q246
-    // simhash-store story for images, where DECODE is the expensive
-    // step): the ref corpus's perceptual hashes are decoded + chunked
-    // ONCE into the store, and the delta batch (ids 200-299, one-pixel
-    // perturbations of bases 0-99) decodes only itself — the verify
-    // reads the store's fingerprint column, never ref pixels
-    "q250_media_store_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val media = tbl(s, dir, "documents").where(col("doc_id") < 300)
-        .select("doc_id").as[Long]
-        .map(id => (id, Multimodal.fixtureBmp(id)))
-        .toDF("media_id", "content")
-      val store = scratchDir("graft-mediastore").toString
-      storeWrite(Multimodal.mediaChunkSignatures(
-        media.where(col("media_id") < 200), maxHamming = 3),
-        "chunk", store)
-      Multimodal.mediaNearDupBetween(
-        media.where(col("media_id") >= 200), s.read.parquet(store),
-        maxHamming = 3)
-        .orderBy("new_id", "ref_id")
-    }),
-
-    "q243_web_curate" -> ((s, dir) =>
-      graft.ops.Curation.webCurate(webCurateFixture(s, dir),
-        "doc_id", "url", "html", targetLang = "en", minQuality = 0.3)
-        .select("doc_id", "url_canonical", "predicted_lang", "quality")
-        .orderBy("doc_id")),
-
-    // the INCREMENTAL crawl chain: bootstrap on the first half of the
-    // q243 fixture (ids monotone across batches), persist the two key
-    // stores, fold the second half through the store anti-joins, and
-    // the UNION of the two curated batches must equal the one-shot
-    // q243 preset on the whole fixture (SHARED oracle)
-    "q254_web_curate_incremental" -> ((s, dir) => {
-      val df = webCurateFixture(s, dir)
-      val boot = graft.ops.Curation.webCurateBootstrap(
-        df.where(col("doc_id") < 180), "doc_id", "url", "html",
-        targetLang = "en", minQuality = 0.3)
-      val urlKeys = scratchDir("graft-urlkeys").toString
-      val contentKeys = scratchDir("graft-contentkeys").toString
-      // two independent key-store writes overlapped (guide §2.6)
-      concurrently(
-        () => boot.newUrlKeys.write.mode("overwrite").parquet(urlKeys),
-        () => boot.newContentKeys.write.mode("overwrite")
-          .parquet(contentKeys))
-      val incr = graft.ops.Curation.webCurateIncremental(
-        df.where(col("doc_id") >= 180), s.read.parquet(urlKeys),
-        s.read.parquet(contentKeys), "doc_id", "url", "html",
-        targetLang = "en", minQuality = 0.3)
-      boot.curated.unionByName(incr.curated)
-        .select("doc_id", "url_canonical", "predicted_lang", "quality")
-        .orderBy("doc_id")
-    }),
-
-    // the bitext SCALE path, oracle-verified: shared-plane LSH bucket
-    // candidates (the q24 machinery), then the same mutual-rank +
-    // ratio-margin math — the oracle replays buckets, candidates, and
-    // windows bit-for-bit
-    "q242_bitext_lsh" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.bitextMineLsh(
-        e.where(col("vec_id") < 40),
-        e.where(col("vec_id") >= 40 && col("vec_id") < 80),
-        "vec_id", "embedding", k = 4, minMargin = 1.0,
-        nPlanes = 8, tables = 8, dim = 64)
-        .orderBy("a_id")
-    }),
-
-    // bitext mining against a PRECOMPUTED indexed side: the fixed
-    // corpus's hyperplane buckets are the SAME saved
-    // vectorBucketSignatures store q244 uses (one store format for
-    // dedup, decon, and bitext), the crawl batch hashes here, and the
-    // margin math runs over candidates only — must equal q242's
-    // recompute path bit for bit (shared oracle)
-    "q251_bitext_store" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      val store = scratchDir("graft-bitextstore").toString
-      val indexed = e.where(col("vec_id") >= 40 && col("vec_id") < 80)
-      storeWrite(Dedup.vectorBucketSignatures(indexed, "vec_id",
-        "embedding", blockTables = 8, blockPlanes = 8, dim = 64),
-        "t", store)
-      Similarity.bitextMineLshPrecomputed(
-        e.where(col("vec_id") < 40), s.read.parquet(store), indexed,
-        "vec_id", "embedding", k = 4, minMargin = 1.0,
-        nPlanes = 8, tables = 8, dim = 64)
-        .orderBy("a_id")
-    }),
-
-    // WITHIN-doc repeated-line removal: nav menus/headers repeated in
-    // one page keep only their first occurrence; empty separator lines
-    // survive — zero shuffle, pure scan-local array algebra
-    "q239_line_dedup_in_doc" -> ((s, dir) =>
-      tbl(s, dir, "documents")
-        .withColumn("mtext", concat_ws("\n",
-          lit("site navigation menu"), col("text"),
-          lit("site navigation menu"), lit(""),
-          lit("site navigation menu"), col("text"), lit("footer line")))
-        .select(col("doc_id"),
-          TextFunctions.dedupLinesInDoc(col("mtext")).as("clean"))
-        .orderBy("doc_id")),
-
-    // SURGICAL decontamination: leaked 3-gram windows cut out of the
-    // doc, clean tokens rejoin in order — fully-leaked docs come back
-    // as empty husks with n_tokens_kept = 0
-    "q238_redact_contaminated" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      graft.ops.Decontaminate.redactContaminated(
-        docs.where(col("doc_id") >= 100), "doc_id", "text",
-        docs.where(col("doc_id") < 100), "text", n = 3)
-        .orderBy("doc_id")
-    }),
-
-    // minhash signature-agreement similarity estimate: threshold
-    // near-dups WITHOUT re-touching pair texts — est_jaccard =
-    // (#equal coordinates)/numPerms over the band-join candidates
-    "q233_minhash_estimate" -> ((s, dir) =>
-      Dedup.minhashJaccardEstimate(tbl(s, dir, "documents"),
-        "doc_id", "text", k = 3, numPerms = 12, bands = 4)
-        .orderBy("id_a", "id_b")),
-
-    // Johnson-Lindenstrauss random projection 64 -> 16 dims: the
-    // zero-fit distance-preserving reduction (deterministic +-1 sign
-    // matrix folded to codegen literals; the oracle regenerates the
-    // identical matrix from the same seed recipe)
-    "q234_random_projection" -> ((s, dir) =>
-      graft.ops.RandomProjection.project(
-        tbl(s, dir, "embeddings"), "embedding", "proj",
-        outDim = 16, dim = 64)
-        .select(col("vec_id"), posexplode(transform(col("proj"), x =>
-          x.cast("decimal(14,6)").cast("double"))).as(Seq("j", "coord")))
-        .orderBy("vec_id", "j")),
-
-    // WET-style HTML -> text extraction: script/style/comment blocks
-    // drop, tags strip, the six common entities decode (&amp; last),
-    // whitespace collapses — a lookaround-free regexp chain the RE2
-    // oracle replays verbatim
-    "q235_html_strip" -> ((s, dir) => {
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("html", concat(
-          lit("<html><head><style>p{color:red}</style>" +
-            "<script type=\"text/javascript\">var x=1 && 2;</script>" +
-            "</head><body><h1>Doc "),
-          col("doc_id").cast("string"),
-          lit("</h1><!-- hidden --><p>"), col("text"),
-          lit(" &amp; more &lt;tags&gt;&nbsp;&#39;quoted&#39;" +
-            "</p></body></html>")))
-      df.select(col("doc_id"),
-          TextFunctions.stripHtml(col("html")).as("clean"))
-        .orderBy("doc_id")
-    }),
-
-    // cross-document paragraph dedup (RefinedWeb-style): the shared
-    // footer survives only in its first corpus occurrence, rotating
-    // boilerplate in the first doc of each residue class, unique prose
-    // everywhere — min-(id, pos) winner per md5(paragraph), docs
-    // reassemble in order
-    "q236_paragraph_dedup" -> ((s, dir) => {
-      val rot = Seq("follow us on social media",
-        "all rights reserved worldwide", "contact support for help")
-      val df = tbl(s, dir, "documents")
-        .withColumn("mtext", concat_ws("\n\n", col("text"),
-          lit("subscribe to our newsletter today"),
-          element_at(typedlit(rot), (col("doc_id") % 3 + 1).cast("int"))))
-      Dedup.paragraphDedup(df, "doc_id", "mtext", sep = "\n\n")
-        .orderBy("doc_id")
-    }),
-
-    // edit-distance (character-level) fuzzy dedup on short code fields
-    // via PassJoin segment blocking — typo/insert/delete variants of
-    // one product code meet within distance 1; the oracle is the
-    // BRUTE-FORCE levenshtein ground truth, so this also proves the
-    // blocking recall-complete on real data
-    "q229_fuzzy_dedup" -> ((s, dir) => {
-      val suf = Seq("-alpha", "-alphA", "-alpha7", "-alph", "-beta",
-        "-gamma")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 360)
-        .withColumn("code", concat(lit("prod"),
-          (col("doc_id") / 6).cast("long").cast("string"),
-          element_at(typedlit(suf), (col("doc_id") % 6 + 1).cast("int"))))
-      Dedup.editDistancePairs(df, "doc_id", "code", maxDist = 1)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // lucene.cjk bigram analysis: CJK text has no word separators, so
-    // the analyzer matches on overlapping character bigrams (Lucene
-    // CJKAnalyzer's published algorithm) — "数据处理" analyzes to
-    // [数据, 据处, 处理] and meets any document sharing a bigram, while
-    // "机器学习" shares none; the non-CJK token in the same text field
-    // tokenizes as an ordinary word through the same analyzer
-    "q201_search_cjk_bigrams" -> ((s, dir) => {
-      val c1 = Seq("数据处理", "处理数据", "机器学习", "学习机器",
-        "数据分析")
-      val c2 = Seq("spark", "data", "query", "engine")
-      val df = tbl(s, dir, "documents").where(col("doc_id") < 400)
-        .withColumn("ctext", concat_ws(" ",
-          element_at(typedlit(c1), (col("doc_id") % 5 + 1).cast("int")),
-          element_at(typedlit(c2),
-            ((col("doc_id") / 5).cast("long") % 4 + 1).cast("int"))))
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.cjk",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map(
-              "query" -> "数据处理 engine",
-              "path" -> "ctext")))))),
-        Map("$project" -> Map("doc_id" -> 1))))(df)
-        .orderBy("doc_id")
-    }),
-
-    // Atlas $search scoreDetails: per-clause breakdown through
-    // {$meta: "searchScoreDetails"} — flat {value, description} list of
-    // the scoring clauses with the total on the top struct (documented
-    // simplification of Lucene's explain tree); exploded to rows for
-    // the oracle
-    "q186_search_score_details" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map(
-          "scoreDetails" -> true,
-          "compound" -> Map(
-            "must" -> Seq(Map("text" ->
-              Map("query" -> "stream filter", "path" -> "text"))),
-            "should" -> Seq(Map("phrase" ->
-              Map("query" -> "hash join", "path" -> "text")))))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "sd" -> Map("$meta" -> "searchScoreDetails")))))
-        .select(col("doc_id"),
-          col("sd.value").cast("decimal(18,9)").cast("double")
-            .as("total"),
-          explode(col("sd.details")).as("leg"))
-        .select(col("doc_id"), col("total"),
-          col("leg.description").as("leg_desc"),
-          col("leg.value").cast("decimal(18,9)").cast("double")
-            .as("leg_value"))
-        .orderBy("doc_id", "leg_desc")),
-
-    // Atlas autocomplete tokenOrder: multi-token query, each analyzed
-    // term a PREFIX of document tokens (edgeGram reading) — "sequential"
-    // requires the prefixed tokens adjacent and in order; compared
-    // against the "any" form on count via the oracle
-    // Atlas autocomplete fuzzy: "strae" — one edit off the "strea"
-    // prefix — still completes to stream/streaming; prefixLength 2 pins
-    // the first two characters exact. Some prefix of the token within
-    // maxEdits gram lengths must be within edit distance 1 of the term.
-    "q188_autocomplete_fuzzy" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("autocomplete" ->
-          Map("query" -> "strae", "path" -> "text",
-            "fuzzy" -> Map("maxEdits" -> 1, "prefixLength" -> 2)))),
-        Map("$project" -> Map("doc_id" -> 1))))
-        .orderBy("doc_id")),
-
-    "q185_autocomplete_seq" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("autocomplete" ->
-          Map("query" -> "strea filte", "path" -> "text",
-            "tokenOrder" -> "sequential"))),
-        Map("$project" -> Map("doc_id" -> 1))))
-        .orderBy("doc_id")),
-
-    // Atlas text.matchCriteria "all": every analyzed term must be
-    // present (the default "any" ORs them); scoring is the same BM25 sum
-    "q184_text_matchall" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("text" ->
-          Map("query" -> "stream filter", "path" -> "text",
-            "matchCriteria" -> "all"))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(desc("score"), asc("doc_id")).limit(20)),
-
-    // Mongo array-localField $lookup: the local array is a SET of join
-    // keys ($in-like membership, each matching foreign doc once). Plan:
-    // distinct elements explode into a hash equi-join (here the fused
-    // lookup+unwind form) — never a nested-loop membership join
-    "q183_lookup_array" -> ((s, dir) =>
-      new GraftSession(s, dir).db("testdata").c("documents").pipe(Seq(
-        Map("$set" -> Map("keys" -> Seq(
-          Map("$mod" -> Seq("$doc_id", 25)),
-          Map("$mod" -> Seq(Map("$multiply" -> Seq("$doc_id", 7)), 25))))),
-        Map("$lookup" -> Map("from" -> "nation",
-          "localField" -> "keys", "foreignField" -> "n_nationkey",
-          "as" -> "nats")),
-        Map("$unwind" -> "$nats"),
-        Map("$group" -> Map("_id" -> "$doc_id",
-          "n" -> Map("$sum" -> 1),
-          "nn" -> Map("$min" -> "$nats.n_name"))),
-        Map("$project" -> Map("doc_id" -> "$_id", "n" -> 1, "nn" -> 1,
-          "_id" -> 0)),
-        Map("$sort" -> Map("doc_id" -> 1))))),
-
-    // Multi-field paths: phrase occurrences SUM across a path array, and
-    // near scores each field of its path array and sums (Atlas
-    // multi-field clause reading) — all scan-fused scalar/array math
-    "q182_search_multipath" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("compound" -> Map(
-          "must" -> Seq(Map("phrase" -> Map(
-            "query" -> "stream", "path" -> Seq("text", "source")))),
-          "should" -> Seq(Map("near" -> Map(
-            "path" -> Seq("n_chars", "doc_id"),
-            "origin" -> 300, "pivot" -> 100)))))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy("doc_id")),
-
-    // $search analyzer selection: stage-level lucene.standard (lowercase
-    // + punctuation split — the uppercase query analyzes to the stored
-    // terms) plus a per-leg lucene.keyword multi path (whole-field exact
-    // match on lang)
-    "q181_search_analyzer" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map(
-          "analyzer" -> "lucene.standard",
-          "compound" -> Map("filter" -> Seq(
-            Map("text" -> Map("query" -> "STREAM Filter",
-              "path" -> "text")),
-            Map("text" -> Map("query" -> "en",
-              "path" -> Map("value" -> "lang",
-                "multi" -> "lucene.keyword"))))))),
-        Map("$project" -> Map("doc_id" -> 1))))
-        .orderBy("doc_id")),
-
-    // Continuous IVF-index maintenance: embeddings stream in, each
-    // micro-batch is centroid-assigned in the scan and appended to a
-    // cell-partitioned store (probe-cell pruning at the file listing);
-    // zero streaming state, idempotent per-batch dirs
-    "q177_stream_ivf" -> ((s, dir) => {
-      val tmp = scratchDir("graft-sivf").toString
-      val emb = tbl(s, dir, "embeddings")
-      emb.write.parquet(s"$tmp/src")
-      graft.streaming.StreamingMigrations.ivfIndexMaintenance(
-        graft.streaming.StreamingMigrations.readStream(
-          s, s"$tmp/src", emb.schema),
-        "vec_id", "embedding", emb.where(col("vec_id") < 4),
-        s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-      s.read.parquet(s"$tmp/out")
-        .select(col("vec_id"), col("centroid_id").cast("long"))
-        .orderBy("vec_id")
-    }),
-
-    // $search text with an Atlas synonyms mapping collection: the query
-    // term expands to its equivalent class, BM25 scores the class as one
-    // term — the mapping is a bounded dimension table collected once
-    "q176_search_synonyms" -> ((s, dir) => {
-      import s.implicits._
-      val syn = Seq(Tuple1(Seq("merge", "join"))).toDF("synonyms")
-      graft.pipeline.PipelineCompiler.compile(Seq(
-        Map("$search" -> Map("text" -> Map(
-          "query" -> "merge stream", "path" -> "text",
-          "synonyms" -> "syn"))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))),
-        tables = { case "syn" => syn
-                   case other => tbl(s, dir, other) })(
-        tbl(s, dir, "documents"))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(desc("score"), asc("doc_id")).limit(30)
-    }),
-
-    // BSON Extended-JSON v2 query documents (the mongoexport/driver
-    // config-file form): {$date}/{$numberLong}/… type wrappers decode to
-    // native values before compilation; operators stay documents
-    "q175_extended_json" -> ((s, dir) => {
-      val q = graft.orchestrate.ConfigLoader.parseJson(
-        """{"ts": {"$gt": {"$date": "2024-01-02T00:00:00Z"}},
-          |  "event_type": "error",
-          |  "event_id": {"$lt": {"$numberLong": "4000"}}}""".stripMargin)
-        .asInstanceOf[Map[String, Any]]
-      coll(s, dir, "events").find(q)
-        .select(Map("event_id" -> 1, "event_type" -> 1))
-        .sort("event_id").toDF
-    }),
-
-    // Standard curation cascade in ONE call: langid gate → quality floor
-    // → exact dedup (first-id survivor per content hash) → deterministic
-    // hash-sample — one shuffle end-to-end, every gate scan-fused
-    "q174_curation" -> ((s, dir) =>
-      graft.ops.Curation.curate(tbl(s, dir, "documents"), "doc_id",
-          "text", targetLang = "en", minQuality = 0.5,
-          sampleFraction = 0.5)
-        .select("doc_id", "predicted_lang", "quality")
-        .orderBy("doc_id")),
-
-    // Hard-negative mining for contrastive training: top-k most-similar
-    // non-near-duplicates (cos < ceiling, fused before the ranking
-    // window) — informative negatives with positives excluded
-    "q173_hard_negatives" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.hardNegatives(emb, emb.where(col("vec_id") < 8),
-          "vec_id", "embedding", k = 10, dupCeiling = 0.35)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Temperature-based mixture sampling (p_s ∝ n_s^α, α = 0.5): shares
-    // derived from measured per-source token mass, small sources
-    // up-weighted — one |sources|-row agg + scan-fused hash-sample
-    "q172_temperature_mix" -> ((s, dir) =>
-      graft.ops.Sampling.temperatureMix(tbl(s, dir, "documents"), "doc_id",
-          "source", "n_chars", tokenBudget = 50000L, alpha = 0.5)
-        .select("doc_id", "source")
-        .orderBy("doc_id")),
-
-    // $search count option: match-count metadata carried to later stages
-    // through $$SEARCH_META.count.total (one broadcast count row)
-    "q171_search_count" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map(
-          "text" -> Map("query" -> "vector", "path" -> "text"),
-          "count" -> Map("type" -> "total"))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "total" -> "$$SEARCH_META.count.total"))))
-        .select(col("doc_id"), col("total"))
-        .orderBy("doc_id")),
-
-    // $search highlight option: per-hit passages (pre/hit/post token
-    // windows) through {$meta: "searchHighlights"}, declared as exploded
-    // scalar legs for the driver comparator
-    "q170_search_highlight" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map(
-          "text" -> Map("query" -> "stream filter", "path" -> "text"),
-          "highlight" -> Map("path" -> "text", "maxNumPassages" -> 3))),
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 120))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "hl" -> Map("$meta" -> "searchHighlights")))))
-        .select(col("doc_id"), posexplode(col("hl")).as(Seq("pos", "p")))
-        .select(col("doc_id"), col("pos"),
-          col("p.texts")(0)("value").as("pre"),
-          col("p.texts")(1)("value").as("hit"),
-          col("p.texts")(2)("value").as("post"))
-        .orderBy("doc_id", "pos")),
-
-    // Streaming quality filter: train the NB model once on the batch
-    // corpus, then score a document STREAM against it per micro-batch
-    // (stream-static token join via foreachBatch, zero streaming state)
-    // and keep the positives — the train-once/filter-forever shape of
-    // continuous data curation
-    "q169_stream_quality" -> ((s, dir) => {
-      val tmp = scratchDir("graft-squal").toString
-      val docs = tbl(s, dir, "documents")
-      docs.write.parquet(s"$tmp/src")
-      // the model table is read twice (threshold calibration + the
-      // per-batch scoring joins) — persist it once
-      val model = Classifier.trainLogOdds(docs, "text",
-        col("lang") === "en").persist()
-      val prior = Classifier.priorFrame(docs, col("lang") === "en")
-      // train-time calibration: the keep-threshold is the P50 of the
-      // training corpus's per-token scores (how production filters pick
-      // their knob), so the query is scale-invariant
-      val thr = Classifier.scoreAgainst(docs, "doc_id", "text",
-          model, prior)
-        .agg(median(col("score") / col("n_tokens"))).head().getDouble(0)
-      // r16: per-batch scoring-join/agg partitions sized from the
-      // source (no state store here, but the same fixed-cost rule —
-      // see StreamingMigrations.statePartitionsFor)
-      graft.streaming.StreamingMigrations.withShufflePartitions(s,
-        graft.streaming.StreamingMigrations.statePartitionsFor(
-          s, s"$tmp/src")) {
-        graft.streaming.StreamingMigrations.qualityFilterStream(
-          graft.streaming.StreamingMigrations.readStream(
-            s, s"$tmp/src", docs.schema),
-          "doc_id", "text", model, prior,
-          s"$tmp/out", s"$tmp/ckpt",
-          minScorePerToken = thr).awaitTermination()
-      }
-      s.read.parquet(s"$tmp/out")
-        .select(col("doc_id"), col("n_tokens"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy("doc_id")
-    }),
-
-    // $lookup concise correlated form (Mongo 8.0): equality condition +
-    // row-local shaping pipeline, pre-applied to the from-side scan so
-    // the $match pushes into the parquet read
-    "q168_lookup_concise" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 2000))),
-        Map("$lookup" -> Map(
-          "from" -> "lineitem",
-          "localField" -> "o_orderkey",
-          "foreignField" -> "l_orderkey",
-          "as" -> "big_items",
-          "pipeline" -> Seq(
-            Map("$match" -> Map("l_quantity" -> Map("$gte" -> 45))),
-            Map("$project" -> Map("l_orderkey" -> 1,
-              "l_linenumber" -> 1))))),
-        Map("$project" -> Map("o_orderkey" -> 1,
-          "n_big" -> Map("$size" -> "$big_items")))))
-        .select(col("o_orderkey"), col("n_big"))
-        .orderBy("o_orderkey")),
-
-    // Bucketed co-located join: both sides written bucketBy(orderkey)
-    // once (the shuffle paid at write time), then the fact⋈fact join and
-    // its aggregate run with NO Exchange on either bucketed side
-    // (BucketingSpec pins the plan) — the storage-layout half of the
-    // 100 TB shuffle story
-    "q167_bucketed_join" -> ((s, dir) => {
-      val tmp = scratchDir("graft-bkt-q").toString
-      // the two bucketed fixture tables are independent (distinct
-      // generated names/dirs): overlap their write jobs (guide §2.6);
-      // Await in concurrently() orders the assignments before the join
-      var lt: String = null
-      var rt: String = null
-      concurrently(
-        () => lt = graft.ops.Bucketing.writeBucketed(
-          tbl(s, dir, "lineitem").withColumn("k", col("l_orderkey")),
-          "k", 8, tmp),
-        () => rt = graft.ops.Bucketing.writeBucketed(
-          tbl(s, dir, "orders").withColumn("k", col("o_orderkey")),
-          "k", 8, tmp))
-      graft.ops.Bucketing.bucketedEquiJoin(s, lt, rt, "k")
-        .groupBy("o_orderpriority")
-        // exact decimal arithmetic end-to-end: price and discount each
-        // round unambiguously to their stored 2-decimal values, and the
-        // decimal multiply/sum is exact in both engines
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)) *
-            (lit(1).cast(DecimalType(4, 2)) -
-              col("l_discount").cast(DecimalType(4, 2))))
-            .cast("double").as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // Pipeline-form update (Mongo 4.2 `update: [stage…]`): $set stage
-    // expressions READ the document (classic operators take literals
-    // only), $unset stage removal — one conditional scan transform, same
-    // one-scan matched-count observation as the document form
-    "q166_update_pipeline" -> ((s, dir) => {
-      val (res, _) = TableOps.updateAllPipeline(
-        tbl(s, dir, "lineitem"),
-        Map("l_returnflag" -> "R"),
-        Seq(
-          Map("$set" -> Map(
-            "gross" -> Map("$multiply" -> Seq("$l_extendedprice",
-              Map("$subtract" -> Seq(1, "$l_discount")))),
-            "l_linestatus" ->
-              Map("$concat" -> Seq("$l_linestatus", "-upd")))),
-          Map("$unset" -> "l_tax")),
-        "l_orderkey")
-      res.select(col("l_orderkey"), col("l_linenumber"),
-          col("l_linestatus"), col("l_tax"),
-          col("gross").cast("decimal(18,4)").cast("double").as("gross"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // PCA-accelerated ANN: coarse candidates by projected-space L2 +
-    // exact cosine re-rank. Full-basis configuration (a rotation) makes
-    // the coarse order exactly plain-L2 order, so the whole two-stage
-    // plan is oracle-checkable in SQL; the truncated configuration is
-    // spec-covered (recall vs brute force).
-    "q165_ann_pca" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      graft.ops.Pca.pcaTopK(emb, emb.where(col("vec_id") < 5), "vec_id",
-          "embedding", k = 10, nComponents = 64, overfetch = 4)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Distributed PCA: partition-local Gram accumulation + driver-side
-    // Jacobi on the d×d covariance + scan-fused projection. The oracle
-    // checks the full-basis norm identity ‖P(x−μ)‖² = ‖x−μ‖² — SQL can
-    // compute the right side, so orthonormality and the projection are
-    // verified through the hash gate end-to-end.
-    "q164_pca_norm" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      val model = graft.ops.Pca.fit(emb, "embedding")
-      graft.ops.Pca.project(emb, "embedding", model, "pc")
-        .select(col("vec_id"),
-          aggregate(col("pc"), lit(0.0), (a, e) => a + e * e)
-            .cast("decimal(14,5)").cast("double").as("norm2"))
-        .orderBy("vec_id")
-    }),
-
-    // Naive-Bayes quality classifier (the fastText-classifier role in
-    // CCNet-style curation): self-trained on a heuristic label
-    // (lang = 'en'), one distributed token log-odds table + broadcast
-    // prior, token-join scoring — nothing collected
-    "q163_nb_quality" -> ((s, dir) =>
-      Classifier.naiveBayes(tbl(s, dir, "documents"), "doc_id", "text",
-          col("lang") === "en")
-        .select(col("doc_id"), col("n_tokens"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"),
-          col("predicted"))
-        .orderBy("doc_id")),
-
-    // $search geo legs: geoWithin box filter + geoShape within (diamond
-    // polygon, closed-form containment in the oracle) + boosted geoWithin
-    // circle should-leg (haversine radius) — all scan-fused literal
-    // geometry, no join anywhere
-    "q162_search_geo" -> ((s, dir) =>
-      coll(s, dir, "embeddings").pipe(Seq(
-        Map("$addFields" -> Map("pt" -> Seq(
-          Map("$arrayElemAt" -> Seq("$embedding", 0)),
-          Map("$arrayElemAt" -> Seq("$embedding", 1))))),
-        Map("$search" -> Map("compound" -> Map(
-          "filter" -> Seq(Map("geoWithin" -> Map(
-            "path" -> "pt",
-            "box" -> Map(
-              "bottomLeft" -> Map("type" -> "Point",
-                "coordinates" -> Seq(-0.5, -0.5)),
-              "topRight" -> Map("type" -> "Point",
-                "coordinates" -> Seq(0.5, 0.5)))))),
-          "must" -> Seq(Map("geoShape" -> Map(
-            "path" -> "pt",
-            "relation" -> "within",
-            "geometry" -> Map("type" -> "Polygon",
-              "coordinates" -> Seq(Seq(
-                Seq(0.4, 0.0), Seq(0.0, 0.4), Seq(-0.4, 0.0),
-                Seq(0.0, -0.4), Seq(0.4, 0.0))))))),
-          "should" -> Seq(Map("geoWithin" -> Map(
-            "path" -> "pt",
-            "circle" -> Map(
-              "center" -> Map("type" -> "Point",
-                "coordinates" -> Seq(0.0, 0.2)),
-              "radius" -> 30000),
-            "score" -> Map("boost" -> Map("value" -> 5.0)))))))),
-        Map("$project" -> Map("vec_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("vec_id"), col("score").cast("double").as("score"))
-        .orderBy("vec_id")),
-
-    // $convert format (Mongo 8.0): string <-> binData via hex/base64/utf8
-    // byte encodings — scan-fused codec expressions, round-trip checked
-    "q158_convert_format" -> ((s, dir) => {
-      def conv(in: Any, to: String, format: String): Map[String, Any] =
-        Map("$convert" -> Map("input" -> in, "to" -> to,
-          "format" -> format))
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$match" -> Map("doc_id" -> Map("$lt" -> 50))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "hex_rt" -> conv(conv("$source", "binData", "utf8"),
-            "string", "hex"),
-          "b64_rt" -> conv(conv("$source", "binData", "utf8"),
-            "string", "base64"),
-          "back" -> conv(conv(conv(conv("$source", "binData", "utf8"),
-            "string", "hex"), "binData", "hex"), "string", "utf8")))))
-        .orderBy("doc_id")
-    }),
-
-    // $search regex (anchored Lucene regex over analyzed terms, must leg)
-    // + near (proximity scoring should leg: pivot/(pivot+|x-origin|))
-    "q156_search_regex_near" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("compound" -> Map(
-          "must" -> Seq(Map("regex" ->
-            Map("query" -> "qu.r[yi]", "path" -> "text"))),
-          "should" -> Seq(Map("near" -> Map("path" -> "n_chars",
-            "origin" -> 300, "pivot" -> 100)))))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy("doc_id")),
-
-    // $search text with the fuzzy option: a token hits a term within
-    // maxEdits levenshtein distance; BM25 over fuzzy tf/df
-    "q157_search_fuzzy" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("text" -> Map(
-          "query" -> "stream filtr", "path" -> "text",
-          "fuzzy" -> Map("maxEdits" -> 1)))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"))
-        .orderBy(col("score").desc, col("doc_id")).limit(20)),
-
-    // $rankFusion scoreDetails: true — per-pipeline {pipeline, rank,
-    // weight, value} breakdown on the scoreDetails meta carrier,
-    // flattened to scalar rows for the comparator
-    "q154_rankfusion_details" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$rankFusion" -> Map(
-          "key" -> "doc_id",
-          "input" -> Map("pipelines" -> Map(
-            "len" -> Seq(
-              Map("$sort" -> Map("n_chars" -> -1, "doc_id" -> 1)),
-              Map("$limit" -> 8)),
-            "id" -> Seq(
-              Map("$sort" -> Map("doc_id" -> 1)),
-              Map("$limit" -> 8)))),
-          "combination" -> Map("weights" -> Map("len" -> 2.0)),
-          "scoreDetails" -> true)),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore"),
-          "details" -> Map("$meta" -> "scoreDetails")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"),
-          explode(col("details")).as("d"))
-        .select(col("doc_id"), col("score"),
-          col("d.pipeline").as("pipeline"), col("d.rank").as("rank"),
-          col("d.weight").as("weight"),
-          col("d.value").cast("decimal(18,9)").cast("double").as("value"))
-        .orderBy("doc_id", "pipeline")),
-
-    // $scoreFusion scoreDetails over $score-bearing sub-pipelines:
-    // {pipeline, rawScore, weight, value} per contribution
-    "q155_scorefusion_details" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$scoreFusion" -> Map(
-          "key" -> "doc_id",
-          "input" -> Map(
-            "normalization" -> "none",
-            "pipelines" -> Map(
-              "chars" -> Seq(
-                Map("$score" -> Map("score" -> "$n_chars",
-                  "normalization" -> "minMaxScaler")),
-                Map("$sort" -> Map("s" -> Map("$meta" -> "score"),
-                  "doc_id" -> 1)),
-                Map("$limit" -> 8)),
-              "early" -> Seq(
-                Map("$score" -> Map(
-                  "score" -> Map("$multiply" -> Seq("$doc_id", -1.0)),
-                  "normalization" -> "minMaxScaler")),
-                Map("$sort" -> Map("s" -> Map("$meta" -> "score"),
-                  "doc_id" -> 1)),
-                Map("$limit" -> 8)))),
-          "combination" -> Map("method" -> "sum",
-            "weights" -> Map("chars" -> 3.0)),
-          "scoreDetails" -> true)),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore"),
-          "details" -> Map("$meta" -> "scoreDetails")))))
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"),
-          explode(col("details")).as("d"))
-        .select(col("doc_id"), col("score"),
-          col("d.pipeline").as("pipeline"),
-          col("d.rawScore").cast("decimal(18,9)").cast("double")
-            .as("raw_score"),
-          col("d.weight").as("weight"),
-          col("d.value").cast("decimal(18,9)").cast("double").as("value"))
-        .orderBy("doc_id", "pipeline")),
-
-    // Product quantization ANN (Jégou et al., PAMI 2011): per-subspace
-    // spherical k-means codebooks, scan-fused positional encoding, ADC
-    // scoring via per-query lookup tables — m element_at lookups per
-    // candidate instead of a dim-wide dot
-    "q153_ann_pq" -> ((s, dir) => {
-      import s.implicits._
-      val emb = tbl(s, dir, "embeddings")
-      val cb = Quantize.pqCodebooks(emb, "vec_id", "embedding",
-        dim = 64, m = 2, k = 4, iters = 2)
-      val qdf = Seq((-1L, q75Vec)).toDF("vec_id", "embedding")
-      Quantize.pqTopK(emb, qdf, "vec_id", "embedding", cb,
-        dim = 64, m = 2, k = 10)
-        .select(col("neighbor_id").as("vec_id"),
-          col("score").cast("decimal(18,6)").cast("double").as("score"))
-        .orderBy("vec_id")
-    }),
-
-    // PQ ADC against a PERSISTED code table: the corpus is encoded
-    // once (m·k sub-cosines per vector) into saved (id, codes) rows
-    // a few bytes wide, and each query batch scores the SAVED codes
-    // through its LUT — never a corpus re-encode or float re-read.
-    // Must equal q153 exactly (same oracle)
-    "q262_pq_store" -> ((s, dir) => {
-      import s.implicits._
-      val emb = tbl(s, dir, "embeddings")
-      val cb = Quantize.pqCodebooks(emb, "vec_id", "embedding",
-        dim = 64, m = 2, k = 4, iters = 2)
-      val store = scratchDir("graft-pqstore").toString
-      // r16 (guide §6): REBALANCE before the write — AQE coalesces the
-      // code table to advisory-size output files (one file at bench
-      // scale instead of up-to-32 tiny ones, ~128 MB files at 100 TB)
-      // rather than inheriting the scan/session task count
-      Quantize.pqCodeSignatures(emb, "vec_id", "embedding", cb,
-          dim = 64, m = 2)
-        .hint("rebalance")
-        .write.mode("overwrite").parquet(store)
-      val qdf = Seq((-1L, q75Vec)).toDF("vec_id", "embedding")
-      Quantize.pqTopKPrecomputed(qdf, s.read.parquet(store),
-        "vec_id", "embedding", cb, dim = 64, m = 2, k = 10)
-        .select(col("neighbor_id").as("vec_id"),
-          col("score").cast("decimal(18,6)").cast("double").as("score"))
-        .orderBy("vec_id")
-    }),
-
-    // Mongo 8.1 $score stage: expression-valued score meta with
-    // minMaxScaler normalization over the current result set (1-row
-    // min/max broadcast) and a weight — read back via {$meta: "score"}
-    "q152_score_stage" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 2000))),
-        Map("$score" -> Map(
-          "score" -> Map("$divide" -> Seq("$o_totalprice", 1000.0)),
-          "normalization" -> "minMaxScaler",
-          "weight" -> 0.8)),
-        Map("$project" -> Map("o_orderkey" -> 1,
-          "sc" -> Map("$meta" -> "score")))))
-        .select(col("o_orderkey"),
-          col("sc").cast("decimal(18,9)").cast("double").as("sc"))
-        .orderBy("o_orderkey")),
-
-    // $search wildcard + autocomplete as compound should-legs with
-    // minimumShouldMatch — constant-scored term-expansion operators
-    "q140_search_wildcard_auto" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$search" -> Map("compound" -> Map(
-          "minimumShouldMatch" -> 1,
-          "should" -> Seq(
-            Map("wildcard" ->
-              Map("query" -> "*vector scan*", "path" -> "text")),
-            Map("autocomplete" ->
-              Map("query" -> "custom", "path" -> "text")))))),
-        Map("$project" -> Map("doc_id" -> 1,
-          "score" -> Map("$meta" -> "searchScore")))))
-        .select(col("doc_id"), col("score").cast("double").as("score"))
-        .orderBy("doc_id")),
-
-    // $geoNear (reference pass-through db/wrapper.go:88-94): haversine
-    // distance from a point over derived [lon, lat] coordinates — query
-    // pre-filter pushed to the scan, maxDistance bound, distance emitted;
-    // all scan-fused scalar math, no join
-    "q118_geonear" -> ((s, dir) =>
-      coll(s, dir, "customer").pipe(Seq(
-        Map("$addFields" -> Map("loc" -> Seq(
-          Map("$subtract" -> Seq(Map("$mod" -> Seq("$c_custkey", 360)), 179.5)),
-          Map("$subtract" -> Seq(Map("$mod" -> Seq("$c_custkey", 170)), 84.75))))),
-        Map("$geoNear" -> Map(
-          "near" -> Seq(12.5, 41.9),
-          "key" -> "loc",
-          "distanceField" -> "dist",
-          "spherical" -> true,
-          "maxDistance" -> 8.0e6,
-          "query" -> Map("c_mktsegment" -> "BUILDING"))),
-        Map("$project" -> Map(
-          "_id" -> "$c_custkey",
-          "dist_km" -> Map("$toLong" -> Map("$round" ->
-            Seq(Map("$divide" -> Seq("$dist", 1000.0)), 0)))))))
-        .orderBy("_id")),
-
-    // §2.2 $elemMatch projection (inclusion mode): first embedding
-    // component > 0.5 as a 1-element array, null when none. Declared as a
-    // scalar leg (driver comparators cannot hash array cells).
-    "q119_select_elemmatch" -> ((s, dir) =>
-      coll(s, dir, "embeddings")
-        .find(Map("vec_id" -> Map("$lt" -> 50)))
-        .select(Map("vec_id" -> 1,
-          "embedding" -> Map("$elemMatch" -> Map("$gt" -> 0.5))))
-        .sort("vec_id")
-        .toDF
-        .select(col("vec_id"),
-          element_at(col("embedding"), 1).cast("double").as("hit"))),
-
-    "q115_token_mix" -> ((s, dir) =>
-      graft.ops.Sampling.tokenBudgetMix(
-        tbl(s, dir, "documents"), "doc_id", "source",
-        "n_chars", 10000L,
-        Map("src0" -> 2.0, "src1" -> 1.0, "src2" -> 1.0))
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")),
-
-    // Gopher repetition signals: duplicate-line fractions (scan-fused
-    // array exprs) + most-repeated-2-gram character coverage (one explode
-    // + per-doc agg, a single shuffle)
-    "q109_repetition" -> ((s, dir) =>
-      graft.ops.TextFunctions.repetitionSignals(
-        tbl(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // benchmark decontamination: odd doc_ids are the "corpus", even ones
-    // the "benchmark"; corpus docs sharing >= 3 distinct 3-gram windows
-    // with any benchmark doc are flagged. Shingle equi-join (bench side
-    // broadcast-able) + one agg — no pairwise corpus work.
-    "q108_decontaminate" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      Decontaminate.contamination(
-        docs.where(col("doc_id") % 2 === 1), "doc_id", "text",
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text",
-        n = 3, minHits = 3L, maxBenchDf = 100L)
-        .select(col("doc_id"), col("hits"), col("bench_docs"),
-          col("first_bench"))
-        .orderBy("doc_id")
-    }),
-
-    "q17_dedup_exact" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val copies = docs.where(col("doc_id") < 100)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-      Dedup.exact(docs.unionByName(copies), Seq("text"), "doc_id")
-        .select("doc_id", "n_copies").orderBy("doc_id")
-    }),
-
-    // n-gram (3-shingle) Jaccard near-dup pairs
-    "q18_dedup_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(tbl(s, dir, "documents"), "doc_id", "text",
-        k = 3, threshold = 0.5)
-        .orderBy("id_a", "id_b")),
-
-    // MinHash + LSH candidate pairs (12 perms, 4 bands)
-    "q19_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashLshPairs(tbl(s, dir, "documents"), "doc_id", "text",
-        k = 3, numPerms = 12, bands = 4)
-        .orderBy("id_a", "id_b")),
-
-    // SimHash fingerprints (16-bit here; q32 exercises the 60-bit width)
-    "q20_simhash" -> ((s, dir) =>
-      TextFunctions.simhash(tbl(s, dir, "documents"), "doc_id", "text", 16)
-        .orderBy("doc_id")),
-
-    // positional rolling-hash document fingerprint
-    "q21_fingerprint" -> ((s, dir) =>
-      TextFunctions.fingerprint(tbl(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // embedding cosine near-duplicate pairs (default path: multi-table
-    // hyperplane LSH blocking + exact cosine verify — sub-quadratic).
-    // blockPlanes stays 0 = the corpus-adaptive default
-    // (Dedup.autoBlockPlanes: clamp(ceil(log2(corpus/100)), 4, 24)) — the
-    // oracle recomputes the SAME parameter from count(*) and masks a
-    // 24-plane bucket to it (bit j of the bucket depends only on plane j,
-    // so the p-plane bucket is the 24-plane bucket mod 2^p), making the
-    // checked run the auto-sized production path that also completes the
-    // 100x rehearsal; the explicit-planes pin lives in OpsSpec
-    "q22_embed_neardup" -> ((s, dir) =>
-      Dedup.embeddingNearDup(tbl(s, dir, "embeddings"), "vec_id",
-        "embedding", threshold = 0.3, dim = 64)
-        .orderBy("id_a", "id_b")),
-
-    // exact brute-force cosine top-k (rank output, id tie-break)
-    // binary (1-bit) quantized ANN: sign-bit signatures, hamming
-    // shortlist of 40, exact-cosine rescoring to top-10 — the
-    // auto-quantization flow of a production vector index (word-sized
-    // integer ops per candidate, float math only on the shortlist)
-    "q191_ann_binary" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.binaryAnnTopK(e, e.where(col("vec_id") < 8), "vec_id",
-        "embedding", k = 10, shortlist = 40)
-        .orderBy("query_id", "rank")
-    }),
-
-    "q23_ann_brute" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.bruteForceTopK(e, e.where(col("vec_id") < 8), "vec_id",
-        "embedding", k = 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    // approximate top-k via deterministic hyperplane LSH; the oracle embeds
-    // the same driver-side plane constants as literal dot-product sums
-    "q24_ann_lsh" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.lshTopK(e, e.where(col("vec_id") < 8), "vec_id",
-        "embedding", k = 10, nPlanes = 4, tables = 16, dim = 64)
-        .orderBy("query_id", "rank")
-    }),
-
-    // language ID (stopword-marker heuristic)
-    "q25_langid" -> ((s, dir) =>
-      tbl(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          TextFunctions.langId(col("text")).as("predicted"))
-        .orderBy("doc_id")),
-
-    // corpus data card: per-source counts, exact length quantiles,
-    // content-dup rate, dominant predicted language + share — two
-    // keyed aggregates + one window argmax, nothing corpus-collected
-    "q259_corpus_report" -> ((s, dir) =>
-      graft.ops.Curation.corpusReport(tbl(s, dir, "documents"),
-        "doc_id", "text", "source")
-        .select(col("source"), col("n_docs"), col("n_empty"),
-          col("total_chars"),
-          col("chars_p25").cast("decimal(18,6)").cast("double")
-            .as("chars_p25"),
-          col("chars_p50").cast("decimal(18,6)").cast("double")
-            .as("chars_p50"),
-          col("chars_p75").cast("decimal(18,6)").cast("double")
-            .as("chars_p75"),
-          col("distinct_texts"),
-          col("dup_rate").cast("decimal(18,9)").cast("double")
-            .as("dup_rate"),
-          col("top_lang"),
-          col("top_lang_share").cast("decimal(18,9)").cast("double")
-            .as("top_lang_share"))
-        .orderBy("source")),
-
-    // language ID over the FULL locale surface the engine analyzes/
-    // collates (15 languages incl. the da/no classic discriminators
-    // af/av, hvad/hva) — every language Curation.curate can gate now
-    // has markers, so no locale silently classifies "und"
-    "q231_langid_multilingual" -> ((s, dir) => {
-      val sents = LangIdSentences.map(_._2)
-      val expect = LangIdSentences.map(_._1)
-      tbl(s, dir, "documents").where(col("doc_id") < 450)
-        .withColumn("expected", element_at(typedlit(expect),
-          (col("doc_id") % 15 + 1).cast("int")))
-        .withColumn("mtext", element_at(typedlit(sents),
-          (col("doc_id") % 15 + 1).cast("int")))
-        .select(col("doc_id"), col("expected"),
-          TextFunctions.langId(col("mtext")).as("predicted"))
-        .orderBy("doc_id")
-    }),
-
-    // quality scoring components + composite score
-    "q26_quality" -> ((s, dir) => {
-      val comps = TextFunctions.qualityComponents(col("text"))
-        .map { case (n, c) => c.as(n) }
-      tbl(s, dir, "documents")
-        .select(col("doc_id") +: comps :+
-          TextFunctions.qualityScore(col("text")).as("score"): _*)
-        .orderBy("doc_id")
-    }),
-
-    // token counting: whitespace + BPE-ish regex
-    "q27_tokens" -> ((s, dir) =>
-      tbl(s, dir, "documents").select(
-        col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_ws"),
-        TextFunctions.bpeishTokenCount(col("text")).cast("long").as("n_bpeish"))
-        .orderBy("doc_id")),
-
-    // §2.4 pipeline expression sublanguage ($concat/$toUpper/$cond/$year)
-    "q29_pipeline_expr" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$addFields" -> Map(
-          "key" -> Map("$concat" -> Seq(
-            Map("$toUpper" -> "$o_orderstatus"), "-",
-            Map("$cond" -> Seq(
-              Map("$gte" -> Seq("$o_totalprice", 100000.0)), "big", "small")))),
-          "yr" -> Map("$year" -> "$o_orderdate"))),
-        Map("$group" -> Map("_id" -> "$key",
-          "n" -> Map("$sum" -> 1),
-          "min_year" -> Map("$min" -> "$yr"))),
-        Map("$sort" -> Map("_id" -> 1))))),
-
-    // §2.7 set ops over migration work-lists: union ∪ distinct, except
-    "q30_setops" -> ((s, dir) => {
-      val li = tbl(s, dir, "lineitem")
-      val o = tbl(s, dir, "orders")
-      val a = li.where(col("l_quantity") > 49)
-        .select(col("l_orderkey").as("k"))
-      val b = o.where(col("o_totalprice") > 400000.0)
-        .select(col("o_orderkey").as("k"))
-      val c = o.where(col("o_orderstatus") === "P")
-        .select(col("o_orderkey").as("k"))
-      a.union(b).distinct().except(c).orderBy("k")
-    }),
-
-    // §2.4 EstimatedDocumentCount: parquet footer metadata, no scan
-    "q31_estimated_count" -> ((s, dir) => {
-      val n = coll(s, dir, "lineitem").estimatedCount()
-      s.range(1).select(lit(n).as("cnt"))
-    }),
-
-    // SimHash near-dup pairs (60-bit fingerprints, 15-bit chunk-band join,
-    // hamming verify before the distinct exchange)
-    "q32_simhash_neardup" -> ((s, dir) =>
-      Dedup.simhashNearDup(tbl(s, dir, "documents"), "doc_id", "text",
-        bits = 60, maxHamming = 3)
-        .orderBy("id_a", "id_b")),
-
-    // MinHash signature table (the LSH input, verified directly)
-    "q33_minhash_sig" -> ((s, dir) =>
-      Dedup.minhashSignatures(tbl(s, dir, "documents"), "doc_id", "text",
-        k = 3, numPerms = 4)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")),
-
-    // §2.9 upsert with an update-operator document, insert branch
-    "q34_upsert_doc" -> ((s, dir) =>
-      TableOps.upsertDoc(tbl(s, dir, "orders"),
-        Map("o_orderkey" -> -1L),
-        Map("$set" -> Map("o_orderstatus" -> "Z")), "o_orderkey")
-        .select("o_orderkey", "o_orderstatus")
-        .orderBy("o_orderkey")),
-
-    // §2.9 findAndModify: update the first sorted match
-    "q35_find_and_modify" -> ((s, dir) => {
-      val (out, _) = TableOps.findAndModify(tbl(s, dir, "orders"),
-        Map("o_orderstatus" -> "O"),
-        Seq("-o_totalprice", "o_orderkey"),
-        Map("$set" -> Map("o_orderpriority" -> "0-TOUCHED")),
-        remove = false, "o_orderkey")
-      out.select("o_orderkey", "o_orderpriority").orderBy("o_orderkey")
-    }),
-
-    // semi-structured payloads: JSON column extraction (the schemaless
-    // document escape hatch — SURVEY §1.2 dynamic payloads)
-    "q36_json_extract" -> ((s, dir) =>
-      tbl(s, dir, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy("event_type")
-        .agg(sum("k").as("sum_k"), count(lit(1)).as("n"),
-          min("k").as("min_k"), max("k").as("max_k"))
-        .orderBy("event_type")),
-
-    // §2.4 pipeline $bucket histogram
-    "q37_bucket" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$bucket" -> Map(
-          "groupBy" -> "$o_totalprice",
-          "boundaries" -> Seq(0.0, 50000.0, 150000.0, 300000.0, 1000000.0),
-          "n" -> Map("$sum" -> 1),
-          "maxp" -> Map("$max" -> "$o_totalprice"))),
-        Map("$sort" -> Map("_id" -> 1))))),
-
-    // as-of (point-in-time) join: events against their user's latest
-    // signup snapshot — one shuffle + window, no range explosion
-    "q38_asof_join" -> ((s, dir) => {
-      val ev = tbl(s, dir, "events")
-      val snaps = ev.where(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"),
-          col("value").as("signup_value"))
-      graft.ops.AsofJoin.backward(
-        ev.select("event_id", "user_id", "ts"), snaps,
-        "user_id", "ts", "ts", Seq("signup_value"))
-        .select("event_id", "signup_value")
-        .orderBy("event_id")
-    }),
-
-    // deterministic hash sampling: stable 10% sample by doc_id
-    "q39_hash_sample" -> ((s, dir) =>
-      graft.ops.Sampling.hashSample(tbl(s, dir, "documents"), "doc_id", 0.1)
-        .select("doc_id").orderBy("doc_id")),
-
-    // stratified per-language sampling with a default fraction
-    "q40_stratified_sample" -> ((s, dir) =>
-      graft.ops.Sampling.stratifiedHashSample(
-        tbl(s, dir, "documents"), "doc_id", "lang",
-        Map("en" -> 0.5, "zh" -> 0.25), defaultFraction = 1.0)
-        .groupBy("lang").agg(count(lit(1)).as("n"))
-        .orderBy("lang")),
-
-    // multimodal plumbing: binary column -> batched partition decode (stub)
-    "q28_multimodal" -> ((s, dir) => {
-      val media = Multimodal.asMedia(tbl(s, dir, "documents"), "doc_id", "text")
-      Multimodal.extractFeatures(media, dim = 3)
-        .select(col("media_id"),
-          element_at(col("features"), 1).as("f0"),
-          element_at(col("features"), 2).as("f1"),
-          element_at(col("features"), 3).as("f2"))
-        .orderBy("media_id")
-    }),
-
-    // §2.9 manual migration end-to-end: a registered Row => Row operation
-    // through MigrationApp (migration_job_manual.go:41-93) on a temp copy
-    "q41_manual_migration" -> ((s, dir) => {
-      val tmp = tmpCopy(dir, "supplier", "graft-manual")
-      val regs = new graft.orchestrate.Registries
-      regs.registerOperation("upper-name", r => {
-        val i = r.fieldIndex("s_name")
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq.updated(i, r.getString(i).toUpperCase))
-      })
-      val app = new MigrationApp(s, tmp, registries = regs)
-      app.setup(Seq(ManualMigration(
-        GeneratorOptions("up", ns = Namespace("db", "supplier"),
-          query = Map("s_nationkey" -> Map("$lt" -> 10))), "upper-name")))
-      val res = app.run()
-      require(res.forall(!_.hasErrors), s"manual migration failed: $res")
-      s.read.parquet(s"$tmp/supplier.parquet")
-        .select("s_suppkey", "s_name", "s_nationkey")
-        .orderBy("s_suppkey")
-    }),
-
-    // §2.9 stream migration end-to-end: a registered whole-stream processor
-    // (may drop rows) through MigrationApp (migration_job_stream.go:38-78)
-    "q42_stream_migration" -> ((s, dir) => {
-      val tmp = tmpCopy(dir, "customer", "graft-stream")
-      val regs = new graft.orchestrate.Registries
-      regs.registerProcessor("evens-upper", it =>
-        it.filter(r => r.getLong(r.fieldIndex("c_custkey")) % 2 == 0)
-          .map { r =>
-            val i = r.fieldIndex("c_name")
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq.updated(i, r.getString(i).toUpperCase))
-          })
-      val app = new MigrationApp(s, tmp, registries = regs)
-      app.setup(Seq(StreamMigration(
-        GeneratorOptions("evens", ns = Namespace("db", "customer"),
-          query = Map("c_mktsegment" -> "BUILDING")), "evens-upper")))
-      val res = app.run()
-      require(res.forall(!_.hasErrors), s"stream migration failed: $res")
-      s.read.parquet(s"$tmp/customer.parquet")
-        .select("c_custkey", "c_name", "c_mktsegment")
-        .orderBy("c_custkey")
-    }),
-
-    // §2.1 Insert + read-back through the session facade (db/wrapper.go:
-    // 117-125): append derived rows, then Find over the grown table
-    "q43_insert" -> ((s, dir) => {
-      // seed with a Spark write: collections live in directory layout so
-      // Insert can append files without rewriting the table
-      val tmp = scratchDir("graft-insert").toString
-      tbl(s, dir, "nation").write.parquet(s"$tmp/nation.parquet")
-      val c = new GraftSession(s, tmp).db("db").c("nation")
-      val derived = tbl(s, dir, "nation")
-        .where(col("n_nationkey") < 5)
-        .withColumn("n_nationkey", (col("n_nationkey") + 100).cast("int"))
-      c.insert(derived)
-      c.find().sort("n_nationkey")
-        .select("n_nationkey", "n_name", "n_regionkey").toDF
-    }),
-
-    // §2.1 DDL lifecycle: create with schema, insert twice, list, count,
-    // drop — the environment state changes surface as a one-row result
-    "q44_ddl" -> ((s, dir) => {
-      val tmp = scratchDir("graft-ddlq").toString
-      val db = new GraftSession(s, tmp).db("d")
-      val region = tbl(s, dir, "region")
-      val c = db.createCollection("fresh", region.schema)
-      c.insert(region)
-      c.insert(region)
-      val listed = db.listCollections().mkString(",")
-      val cnt = c.count()
-      db.dropCollection("fresh")
-      val remaining = db.listCollections().size.toLong
-      s.range(1).select(lit(listed).as("listed"), lit(cnt).as("cnt"),
-        lit(remaining).as("after_drop"))
-    }),
-
-    // §2.10 config-file entry point: a YAML configuration drives a simple
-    // migration end-to-end (config.go:16-80, model/config.go yaml tags)
-    "q45_config_yaml" -> ((s, dir) => {
-      val tmp = tmpCopy(dir, "region", "graft-yaml")
-      val yaml =
-        """options:
-          |  dry_run: false
-          |  limit: 0
-          |simple_migrations:
-          |  - options:
-          |      id: tag-regions
-          |      namespace:
-          |        db_name: d
-          |        collection: region
-          |      query: {"r_regionkey": {"$gte": 2}}
-          |    update: {"$set": {"r_name": "TAGGED"}}
-          |""".stripMargin
-      val conf = graft.orchestrate.ConfigLoader.fromYaml(yaml)
-      val app = new MigrationApp(s, tmp, conf.options)
-        .setup(conf.simpleMigrations)
-      val res = app.run()
-      require(res.forall(!_.hasErrors), s"config migration failed: $res")
-      s.read.parquet(s"$tmp/region.parquet")
-        .select("r_regionkey", "r_name").orderBy("r_regionkey")
-    }),
-
-    // streaming extension: the same SimpleMigration spec applied through
-    // Structured Streaming (readStream -> transform -> writeStream,
-    // AvailableNow), proving batch/stream compilation can't drift
-    "q47_streaming_migration" -> ((s, dir) => {
-      val tmp = scratchDir("graft-sstream").toString
-      val ev = tbl(s, dir, "events")
-      ev.write.parquet(s"$tmp/src")
-      val spec = SimpleMigration(
-        GeneratorOptions("sm", ns = Namespace("d", "events"),
-          query = Map("event_type" -> "click")),
-        Map("$set" -> Map("props" -> "CLICKED")))
-      graft.streaming.StreamingMigrations.continuousMigration(
-        s, spec, s"$tmp/src", ev.schema, s"$tmp/out", s"$tmp/ckpt")
-        .awaitTermination()
-      s.read.parquet(s"$tmp/out")
-        .select("event_id", "event_type", "props").orderBy("event_id")
-    }),
-
-    // streaming exact dedup: the source directory holds every event TWICE;
-    // dropDuplicatesWithinWatermark keeps one copy per event_id with
-    // watermark-bounded state (AvailableNow, checkpointed)
-    "q87_streaming_dedup" -> ((s, dir) => {
-      val tmp = scratchDir("graft-sdedup").toString
-      val ev = tbl(s, dir, "events").select("event_id", "event_type", "ts")
-      ev.write.parquet(s"$tmp/src")
-      ev.write.mode("append").parquet(s"$tmp/src") // duplicate arrival
-      // watermark wider than the events table's full ts span: if the
-      // duplicated files ever split across AvailableNow micro-batches,
-      // late copies must still dedup rather than drop as late data
-      // r16: state partitions sized from the source (one state store
-      // per partition pays load/commit per batch whatever the data —
-      // see StreamingMigrations.statePartitionsFor; session conf
-      // restored after the stream)
-      graft.streaming.StreamingMigrations.withShufflePartitions(s,
-        graft.streaming.StreamingMigrations.statePartitionsFor(
-          s, s"$tmp/src")) {
-        graft.streaming.StreamingMigrations.streamingDedup(
-          graft.streaming.StreamingMigrations.readStream(
-            s, s"$tmp/src", ev.schema), "ts", Seq("event_id"),
-          watermark = "3650 days")
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start().awaitTermination()
-      }
-      s.read.parquet(s"$tmp/out")
-        .select("event_id", "event_type").orderBy("event_id")
-    }),
-
-    // statistical window accumulators over full partitions: population /
-    // sample stddev, covariance, exact median — one Window pass each
-    "q103_window_stats" -> ((s, dir) => {
-      // The variance family (stddev/covariance) differs from DuckDB by
-      // ~1 ulp (different accumulation algorithms), and the cent-quantized
-      // inputs put true values exactly ON any fixed rounding boundary —
-      // no rounding width is safe. So the hash-compared columns are
-      // derived from EXACT integer window sums (identical longs → the
-      // same IEEE expression in both engines → bit-identical doubles),
-      // and the Mongo accumulators stay exercised through `acc_ok`, an
-      // in-row tolerance check the oracle expects to be uniformly true.
-      import org.apache.spark.sql.expressions.Window
-      val piped = coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 3000))),
-        Map("$setWindowFields" -> Map(
-          "partitionBy" -> "$o_custkey",
-          "sortBy" -> Map("o_orderkey" -> 1),
-          "output" -> Map(
-            "sp" -> Map("$stdDevPop" -> "$o_totalprice",
-              "window" -> Map("documents" ->
-                Seq("unbounded", "unbounded"))),
-            "ss" -> Map("$stdDevSamp" -> "$o_totalprice",
-              "window" -> Map("documents" ->
-                Seq("unbounded", "unbounded"))),
-            "cp" -> Map("$covariancePop" ->
-              Seq("$o_totalprice", "$o_orderkey"),
-              "window" -> Map("documents" ->
-                Seq("unbounded", "unbounded"))),
-            "md" -> Map("$median" -> "$o_totalprice"))))))
-      val w = Window.partitionBy("o_custkey")
-      val cents = round(col("o_totalprice") * 100, 0).cast("long")
-      val n = count(lit(1)).over(w).cast("double")
-      val sx = sum(cents).over(w).cast("double")
-      val sxx = sum(cents * cents).over(w).cast("double")
-      val sxy = sum(cents * col("o_orderkey")).over(w).cast("double")
-      val sy = sum(col("o_orderkey")).over(w).cast("double")
-      val varPop = greatest((sxx - sx * sx / n) / n, lit(0.0))
-      val spx = sqrt(varPop) / 100
-      val ssx = when(n > 1,
-        sqrt(greatest((sxx - sx * sx / n) / (n - 1), lit(0.0))) / 100)
-      val cpx = (sxy - sx * sy / n) / n / 100
-      piped
-        .withColumn("sp_x", spx).withColumn("ss_x", ssx)
-        .withColumn("cp_x", cpx)
-        .select(col("o_orderkey"), col("o_custkey"),
-          col("sp_x").as("sp"), col("ss_x").as("ss"), col("cp_x").as("cp"),
-          (floor(col("md") * 1e2 + 0.5) / 1e2).as("md"),
-          (abs(col("sp") - col("sp_x")) < 1e-4 &&
-            (n === 1 || abs(col("ss") - col("ss_x")) < 1e-4) &&
-            abs(col("cp") - col("cp_x")) < 1e-2).as("acc_ok"))
-        .orderBy("o_orderkey")
-    }),
-
-    // $merge whenMatched UPDATE-PIPELINE form: per matched pair the input
-    // doc is the EXISTING target row and $$new binds to the incoming one
-    // — accumulate counts and bump a generation field in one keyed merge
-    "q104_merge_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      val root = tmpCopy(dir, "orders", "graft-merge-pipe")
-      Seq(("F", 1000L, 2L), ("Z", 5L, 1L)).toDF("status", "cnt", "gen")
-        .write.parquet(root + "/summary.parquet")
-      new GraftSession(s, root).db("d").c("orders").pipe(Seq(
-        Map("$group" -> Map("_id" -> "$o_orderstatus",
-          "cnt" -> Map("$sum" -> 1))),
-        Map("$project" -> Map("status" -> "$_id", "cnt" -> 1)),
-        Map("$merge" -> Map("into" -> "summary", "on" -> "status",
-          "whenMatched" -> Seq(Map("$set" -> Map(
-            "cnt" -> Map("$add" -> Seq("$cnt", "$$new.cnt")),
-            "gen" -> Map("$add" -> Seq("$gen", 1))))),
-          "whenNotMatched" -> "insert"))))
-        .select(col("status"), col("cnt").cast("long").as("cnt"),
-          col("gen").cast("long").as("gen"))
-        .orderBy("status")
-    }),
-
-    // calendar-unit $densify: per-month order counts (Jan/Apr/Jul only, so
-    // the grid has real gaps) densified over a month grid — the grid is
-    // sequence(timestamp, timestamp, INTERVAL 1 MONTH), real calendar
-    // arithmetic, distributed explode + anti-join
-    "q105_densify_month" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("$expr" -> Map("$in" ->
-          Seq(Map("$month" -> "$o_orderdate"), Seq(1, 4, 7))))),
-        Map("$group" -> Map("_id" -> Map("$dateTrunc" ->
-          Map("date" -> "$o_orderdate", "unit" -> "month")),
-          "n" -> Map("$sum" -> 1))),
-        Map("$project" -> Map("month" -> "$_id", "n" -> 1)),
-        Map("$densify" -> Map("field" -> "month",
-          "range" -> Map("step" -> 1, "unit" -> "month",
-            "bounds" -> "full")))))
-        .select(col("month"), col("n").cast("long").as("n"))
-        .orderBy("month")),
-
-    // date-keyed range window: trailing-90-day revenue per customer —
-    // window: {range: [-90, 0], unit: "day"} maps to a rangeBetween over
-    // epoch-micros with the offsets scaled into micros (exact for fixed
-    // units). Cent-integer sums for float determinism vs the oracle.
-    "q106_range_window_unit" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 5000))),
-        Map("$addFields" -> Map("cents" -> Map("$toLong" -> Map("$round" ->
-          Seq(Map("$multiply" -> Seq("$o_totalprice", 100)), 0))))),
-        Map("$setWindowFields" -> Map(
-          "partitionBy" -> "$o_custkey",
-          "sortBy" -> Map("o_orderdate" -> 1),
-          "output" -> Map("rs" -> Map("$sum" -> "$cents",
-            "window" -> Map("range" -> Seq(-90, 0), "unit" -> "day")))))))
-        .select(col("o_orderkey"), col("o_custkey"),
-          (col("rs") / 100.0).as("rsum"))
-        .orderBy("o_orderkey")),
-
-    // binned $dateTrunc (2-month bins anchored at 2000-01-01, Mongo's
-    // reference point) + sunday-start week trunc + calendar $dateAdd with
-    // month-end clamping — all scalar expressions fused into the scan,
-    // one shuffle for the group
-    "q107_datetrunc_bins" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 20000))),
-        Map("$addFields" -> Map(
-          "bin2m" -> Map("$dateTrunc" -> Map("date" -> "$o_orderdate",
-            "unit" -> "month", "binSize" -> 2)),
-          "wk" -> Map("$dateTrunc" -> Map("date" -> "$o_orderdate",
-            "unit" -> "week")),
-          "due" -> Map("$dateAdd" -> Map("startDate" -> "$o_orderdate",
-            "unit" -> "month", "amount" -> 3)))),
-        Map("$group" -> Map("_id" -> "$bin2m",
-          "n" -> Map("$sum" -> 1),
-          "max_wk" -> Map("$max" -> "$wk"),
-          "min_due" -> Map("$min" -> "$due")))))
-        .select(col("_id").as("bin"), col("n").cast("long").as("n"),
-          col("max_wk"), col("min_due"))
-        .orderBy("bin")),
-
-    // $$ROOT round-trip: push whole documents into per-status arrays,
-    // unwind them back, project fields out of the nested doc — the
-    // group-docs idiom, exercised end-to-end
-    "q102_root_roundtrip" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 100))),
-        Map("$group" -> Map("_id" -> "$o_orderstatus",
-          "docs" -> Map("$push" -> "$$ROOT"))),
-        Map("$unwind" -> "$docs"),
-        Map("$project" -> Map(
-          "status" -> "$_id",
-          "ok" -> "$docs.o_orderkey",
-          "tp" -> "$docs.o_totalprice"))))
-        .orderBy("ok")),
-
-    // time-series window operators: $locf / $linearFill over a gappy
-    // column, $derivative / $integral / $expMovingAvg over the dense one —
-    // all single-window plans, no self-joins
-    "q100_window_timeseries" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 3000))),
-        Map("$addFields" -> Map("v" -> Map("$cond" -> Seq(
-          Map("$eq" -> Seq(Map("$mod" -> Seq("$o_orderkey", 3)), 0)),
-          "$o_totalprice", Map("$literal" -> null))))),
-        Map("$setWindowFields" -> Map(
-          "partitionBy" -> "$o_custkey",
-          "sortBy" -> Map("o_orderkey" -> 1),
-          "output" -> Map(
-            "lo" -> Map("$locf" -> "$v"),
-            "lf" -> Map("$linearFill" -> "$v"),
-            "dv" -> Map(
-              "$derivative" -> Map("input" -> "$o_totalprice"),
-              "window" -> Map("documents" ->
-                Seq("unbounded", "unbounded"))),
-            "ig" -> Map(
-              "$integral" -> Map("input" -> "$o_totalprice"),
-              "window" -> Map("documents" -> Seq("unbounded", "current"))),
-            "ema" -> Map("$expMovingAvg" ->
-              Map("input" -> "$o_totalprice", "N" -> 3)))))))
-        .select(col("o_orderkey"), col("o_custkey"),
-          (floor(col("lo") * 1e6 + 0.5) / 1e6).as("lo"),
-          (floor(col("lf") * 1e6 + 0.5) / 1e6).as("lf"),
-          (floor(col("dv") * 1e6 + 0.5) / 1e6).as("dv"),
-          (floor(col("ig") * 1e6 + 0.5) / 1e6).as("ig"),
-          (floor(col("ema") * 1e6 + 0.5) / 1e6).as("ema"))
-        .orderBy("o_orderkey")),
-
-    // scalar expression completions: inverse hyperbolics, three-way
-    // compares, byte substrings, decimal conversion, type introspection,
-    // raw-document size — all codegen'd, zero shuffles
-    "q101_scalar_expr" -> ((s, dir) =>
-      coll(s, dir, "part").pipe(Seq(
-        Map("$match" -> Map("p_partkey" -> Map("$lte" -> 500))),
-        Map("$addFields" -> Map(
-          "ash" -> Map("$asinh" -> Map("$divide" ->
-            Seq("$p_retailprice", 1000.0))),
-          "ach" -> Map("$acosh" -> Map("$add" -> Seq("$p_size", 1.0))),
-          "ath" -> Map("$atanh" -> Map("$divide" ->
-            Seq(Map("$mod" -> Seq("$p_size", 9)), 10.0))),
-          "c1" -> Map("$cmp" -> Seq("$p_type", "$p_brand")),
-          "sc" -> Map("$strcasecmp" -> Seq("$p_type", "$p_type")),
-          "sb" -> Map("$substr" -> Seq("$p_name", 2, 5)),
-          "dec" -> Map("$toDouble" -> Map("$toDecimal" -> "$p_retailprice")),
-          "ia" -> Map("$isArray" -> Map("$split" -> Seq("$p_name", " "))),
-          "ns" -> Map("$isArray" -> "$p_name"),
-          "sz" -> Map("$bsonSize" -> Map("pk" -> "$p_partkey"))))))
-        .select(col("p_partkey"),
-          (floor(col("ash") * 1e6 + 0.5) / 1e6).as("ash"),
-          (floor(col("ach") * 1e6 + 0.5) / 1e6).as("ach"),
-          (floor(col("ath") * 1e6 + 0.5) / 1e6).as("ath"),
-          col("c1"), col("sc"), col("sb"), col("dec"), col("ia"),
-          col("ns"), col("sz").cast("long").as("sz"))
-        .orderBy("p_partkey")),
-
-    // $bucketAuto with granularity: values quantize UP to the R10
-    // preferred-number series BEFORE the boundary window, so the distinct-
-    // value window input is bounded by the series domain even on this
-    // near-unique continuous column
-    "q99_bucket_auto_granularity" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$bucketAuto" -> Map("groupBy" -> "$o_totalprice",
-          "buckets" -> 6, "granularity" -> "R10"))))
-        .select(col("_id.min").as("b_min"), col("_id.max").as("b_max"),
-          col("count"))
-        .orderBy("b_min")),
-
-    // $merge whenMatched mode matrix: field-wise "merge" (pipeline columns
-    // overwrite, target-only columns kept, inserts get nulls) and
-    // "keepExisting" (only new keys land) — one keyed shuffle each
-    "q98_merge_modes" -> ((s, dir) => {
-      import s.implicits._
-      val root = tmpCopy(dir, "orders", "graft-merge-modes")
-      Seq(("F", 0L, "seed"), ("Z", 99L, "seed")).toDF("status", "cnt", "src")
-        .write.parquet(root + "/summary.parquet")
-      Seq(("F", 0L)).toDF("status", "cnt")
-        .write.parquet(root + "/summary2.parquet")
-      val db = new GraftSession(s, root).db("d")
-      val agg = Seq(
-        Map("$group" -> Map("_id" -> "$o_orderstatus",
-          "cnt" -> Map("$sum" -> 1))),
-        Map("$project" -> Map("status" -> "$_id", "cnt" -> 1)))
-      val m = db.c("orders").pipe(agg :+ Map("$merge" ->
-        Map("into" -> "summary", "on" -> "status",
-          "whenMatched" -> "merge", "whenNotMatched" -> "insert")))
-      val k = db.c("orders").pipe(agg :+ Map("$merge" ->
-        Map("into" -> "summary2", "on" -> "status",
-          "whenMatched" -> "keepExisting", "whenNotMatched" -> "insert")))
-      m.select(lit("merge").as("mode"), col("status"), col("cnt"),
-          col("src"))
-        .unionByName(k.select(lit("keep").as("mode"), col("status"),
-          col("cnt"), lit(null).cast("string").as("src")))
-        .orderBy("mode", "status")
-    }),
-
-    // $merge whenMatched update-pipeline stage set beyond $set: $unset
-    // drops fields on matched rows (null-filled against the unmatched
-    // remainder), $replaceWith rebuilds the matched doc from target +
-    // $$new bindings
-    "q141_merge_pipeline_stages" -> ((s, dir) => {
-      import s.implicits._
-      val root = tmpCopy(dir, "orders", "graft-merge-stages")
-      Seq(("F", 5L, "seed"), ("Z", 99L, "seed")).toDF("status", "cnt", "note")
-        .write.parquet(root + "/sum_unset.parquet")
-      Seq(("F", 5L, "seed"), ("Z", 99L, "seed")).toDF("status", "cnt", "note")
-        .write.parquet(root + "/sum_repl.parquet")
-      val db = new GraftSession(s, root).db("d")
-      val agg = Seq(
-        Map("$group" -> Map("_id" -> "$o_orderstatus",
-          "cnt" -> Map("$sum" -> 1))),
-        Map("$project" -> Map("status" -> "$_id", "cnt" -> 1)))
-      val u = db.c("orders").pipe(agg :+ Map("$merge" ->
-        Map("into" -> "sum_unset", "on" -> "status",
-          "whenMatched" -> Seq(
-            Map("$set" -> Map("cnt" ->
-              Map("$add" -> Seq("$cnt", "$$new.cnt")))),
-            Map("$unset" -> "note")),
-          "whenNotMatched" -> "insert")))
-      val r = db.c("orders").pipe(agg :+ Map("$merge" ->
-        Map("into" -> "sum_repl", "on" -> "status",
-          "whenMatched" -> Seq(Map("$replaceWith" -> Map(
-            "status" -> "$status",
-            "cnt" -> Map("$add" -> Seq("$cnt", "$$new.cnt")),
-            "note" -> Map("$concat" -> Seq("$note", "+"))))),
-          "whenNotMatched" -> "insert")))
-      u.select(lit("unset").as("mode"), col("status"), col("cnt"),
-          col("note"))
-        .unionByName(r.select(lit("repl").as("mode"), col("status"),
-          col("cnt"), col("note")))
-        .orderBy("mode", "status")
-    }),
-
-    // $fill linear interpolation: gaps filled proportional to the sortBy
-    // distance between surrounding known values, per partition
-    "q97_fill_linear" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 5000))),
-        Map("$addFields" -> Map("v" -> Map("$cond" -> Seq(
-          Map("$eq" -> Seq(Map("$mod" -> Seq("$o_orderkey", 3)), 0)),
-          "$o_totalprice", Map("$literal" -> null))))),
-        Map("$fill" -> Map("partitionBy" -> "$o_custkey",
-          "sortBy" -> Map("o_orderkey" -> 1),
-          "output" -> Map("v" -> Map("method" -> "linear"))))))
-        .select(col("o_orderkey"), col("o_custkey"),
-          // explicit half-up rounding: decimal casts differ in rounding
-          // MODE between engines on exact ...5 ties (HALF_UP vs half-even)
-          (floor(col("v") * 1e6 + 0.5) / 1e6).as("v"))
-        .orderBy("o_orderkey")),
-
-    // chars-aware trims, byte-offset indexOf, expression-level $type /
-    // $isNumber (static-schema type introspection)
-    "q96_trim_type" -> ((s, dir) =>
-      coll(s, dir, "part").pipe(Seq(
-        Map("$match" -> Map("p_partkey" -> Map("$lte" -> 500))),
-        Map("$addFields" -> Map(
-          "lt" -> Map("$ltrim" -> Map("input" -> "$p_name",
-            "chars" -> "clod ")),
-          "rt" -> Map("$rtrim" -> Map("input" -> "$p_name",
-            "chars" -> "te")),
-          "iob" -> Map("$indexOfBytes" -> Seq("$p_name", "widget")),
-          "tname" -> Map("$type" -> "$p_name"),
-          "tsize" -> Map("$type" -> "$p_size"),
-          "tprice" -> Map("$type" -> "$p_retailprice"),
-          "numn" -> Map("$isNumber" -> "$p_name"),
-          "nums" -> Map("$isNumber" -> "$p_size")))))
-        .select("p_partkey", "lt", "rt", "iob", "tname", "tsize",
-          "tprice", "numn", "nums")
-        .orderBy("p_partkey")),
-
-    // calendar-unit $dateDiff (month/quarter/year boundary crossings) and
-    // first-occurrence $replaceOne
-    "q95_datediff_replace" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 2000))),
-        Map("$addFields" -> Map(
-          "dm" -> Map("$dateDiff" -> Map(
-            "startDate" -> Map("$literal" ->
-              java.time.Instant.parse("2024-06-15T00:00:00Z")),
-            "endDate" -> "$o_orderdate", "unit" -> "month")),
-          "dq" -> Map("$dateDiff" -> Map(
-            "startDate" -> Map("$literal" ->
-              java.time.Instant.parse("2024-06-15T00:00:00Z")),
-            "endDate" -> "$o_orderdate", "unit" -> "quarter")),
-          "dy" -> Map("$dateDiff" -> Map(
-            "startDate" -> Map("$literal" ->
-              java.time.Instant.parse("2024-06-15T00:00:00Z")),
-            "endDate" -> "$o_orderdate", "unit" -> "year")),
-          "rp" -> Map("$replaceOne" -> Map("input" -> "$o_orderpriority",
-            "find" -> "E", "replacement" -> "*")),
-          "rpn" -> Map("$replaceOne" -> Map("input" -> "$o_orderpriority",
-            "find" -> "ZZZ", "replacement" -> "*"))))))
-        .select("o_orderkey", "dm", "dq", "dy", "rp", "rpn")
-        .orderBy("o_orderkey")),
-
-    // Gopher-rule quality filtering: the published heuristics as one
-    // scan-fused projection (word count, mean word length, alpha ratio,
-    // stopword presence) + the composite keep decision
-    "q94_gopher_quality" -> ((s, dir) => {
-      val flags = TextFunctions.gopherQualityFlags(col("text"))
-        .map { case (n, c) => c.as(n) }
-      tbl(s, dir, "documents")
-        .select(col("doc_id") +: flags :+
-          TextFunctions.gopherKeep(col("text")).as("keep"): _*)
-        .orderBy("doc_id")
-    }),
-
-    // leakage-preventing split: near-dup clusters (MinHash-LSH graph)
-    // always land on one side — the split hashes the cluster representative
-    "q93_cluster_split" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        k = 3, numPerms = 12, bands = 4)
-      val (train, test) = graft.ops.Sampling.clusterAwareSplit(
-        docs, "doc_id", pairs, testFraction = 0.3)
-      train.select(col("doc_id"), lit("train").as("side"))
-        .unionByName(test.select(col("doc_id"), lit("test").as("side")))
-        .orderBy("doc_id")
-    }),
-
-    // $text query predicate: OR-of-terms token match over the text column
-    // (the engine's text-index convention), composed with other clauses
-    "q91_text_search" -> ((s, dir) =>
-      coll(s, dir, "documents").find(Map(
-        "$text" -> Map("$search" -> "spark shuffle"),
-        "lang" -> "en"))
-        .sort("doc_id").select("doc_id", "lang").toDF),
-
-    // vocabulary pruning (min-count): tokens below global corpus frequency
-    // 500 removed, order preserved; hash-keyed vocab join, never collected
-    "q92_prune_rare" -> ((s, dir) =>
-      TextFunctions.pruneRareTokens(tbl(s, dir, "documents"), "doc_id",
-        "text", minCount = 500)
-        .orderBy("doc_id")),
-
-    // ordered $firstN/$lastN window accumulators (deterministic under
-    // sortBy, unlike Mongo's document-order $group forms)
-    "q90_window_firstn" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 3000))),
-        Map("$setWindowFields" -> Map(
-          "partitionBy" -> "$o_custkey",
-          "sortBy" -> Map("o_orderkey" -> 1),
-          "output" -> Map(
-            "f2" -> Map(
-              "$firstN" -> Map("input" -> "$o_orderkey", "n" -> 2),
-              "window" -> Map("documents" -> Seq("unbounded", "current"))),
-            "l2" -> Map(
-              "$lastN" -> Map("input" -> "$o_orderkey", "n" -> 2),
-              "window" -> Map("documents" ->
-                Seq("unbounded", "current"))))))))
-        .select(col("o_orderkey"), col("o_custkey"),
-          // stringified: the driver's pandas comparator cannot sort/hash
-          // raw array columns, so join to a deterministic CSV form
-          concat_ws(",", transform(col("f2"), _.cast("string"))).as("f2"),
-          concat_ws(",", transform(col("l2"), _.cast("string"))).as("l2"))
-        .orderBy("o_orderkey")),
-
-    // distributed spherical k-means (trains the IVF coarse centroids):
-    // broadcast-join assignment + decimal-exact component means, 2 Lloyd
-    // iterations, checkpoint-truncated lineage
-    "q89_kmeans" -> ((s, dir) =>
-      graft.ops.Clustering.kmeans(tbl(s, dir, "embeddings"), "vec_id",
-        "embedding", k = 8, iters = 2)
-        .select(col("centroid_id"),
-          // stringified as integer nano-units: driver comparator can't
-          // hash arrays, and decimal→string risks sci-notation for tiny
-          // values; floor(x*1e9+0.5) is the engine-agnostic rounding
-          concat_ws(",", transform(col("centroid"),
-            x => floor(x * 1e9 + 0.5).cast("long").cast("string")))
-            .as("centroid"))
-        .orderBy("centroid_id")),
-
-    // hybrid retrieval: reciprocal-rank fusion of the exact float ranking
-    // and the int8-quantized ranking (rank-only consensus, score-scale-free)
-    "q88_hybrid_rrf" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      val q = e.where(col("vec_id") < 8)
-      graft.ops.Hybrid.rrfFuse(Seq(
-        Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10),
-        Quantize.quantizedTopK(e, q, "vec_id", "embedding", k = 10)),
-        k = 10)
-        .select(col("query_id"), col("neighbor_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"),
-          col("fused_rank"))
-        .orderBy("query_id", "fused_rank")
-    }),
-
-    // dedup survivor selection: connected components over the MinHash-LSH
-    // near-dup pair graph (hash-min label propagation)
-    "q50_dedup_clusters" -> ((s, dir) =>
-      Dedup.duplicateClusters(
-        Dedup.minhashLshPairs(tbl(s, dir, "documents"), "doc_id", "text",
-          k = 3, numPerms = 12, bands = 4))
-        .orderBy("id")),
-
-    // §2.8 dotted-path semantics (GetDottedKeyName, bsonutil/helpers.go):
-    // an embedded-doc $addFields builds a struct, then a dotted-path
-    // $match resolves into it
-    "q51_dotted_path" -> ((s, dir) =>
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$addFields" -> Map("nested" ->
-          Map("lang" -> "$lang", "chars" -> "$n_chars"))),
-        Map("$match" -> Map(
-          "nested.lang" -> "en",
-          "nested.chars" -> Map("$gte" -> 200))),
-        Map("$project" -> Map("doc_id" -> 1)),
-        Map("$sort" -> Map("doc_id" -> 1))))),
-
-    // §2.1 RunCommand escape hatch: raw SQL through the session
-    // (client/wrapper.go:32-40)
-    "q48_run_command" -> ((s, dir) => {
-      tbl(s, dir, "lineitem").createOrReplaceTempView("lineitem_cmd_v")
-      new GraftSession(s, dir).runCommand(
-        """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS cnt
-          |FROM lineitem_cmd_v GROUP BY l_returnflag
-          |ORDER BY l_returnflag""".stripMargin)
-    }),
-
-    // §2.4 PendingMigrationOperations: count of documents a migration's
-    // query still matches (migration_helper_legacy.go:101-120)
-    "q49_pending_migrations" -> ((s, dir) => {
-      val app = new MigrationApp(s, dir)
-      val n = app.pendingMigrationOperations(SimpleMigration(
-        GeneratorOptions("pending", ns = Namespace("d", "orders"),
-          query = Map("o_orderstatus" -> "O")),
-        Map("$set" -> Map("o_orderpriority" -> "X"))))
-      s.range(1).select(lit(n).as("pending"))
-    }),
-
-    // §2.1 Query.All: collect through the facade's action path, rebuilt as
-    // a frame (db/wrapper.go:571-587)
-    "q46_query_all" -> ((s, dir) => {
-      val q = coll(s, dir, "orders").find(Map("o_orderstatus" -> "F"))
-        .sort("-o_totalprice", "o_orderkey").limit(25)
-        .select("o_orderkey", "o_totalprice")
-      val rows = q.all()
-      s.createDataFrame(
-        java.util.Arrays.asList(rows: _*), q.toDF.schema)
-    }),
-
-    // §2.9 UNORDERED Bulk (db/wrapper.go:335-344): ops arrive scrambled;
-    // type-batching reorders them insert -> upsert -> update -> remove and
-    // collapses each class into ONE plan layer (one union / one merge
-    // window / one anti-filter) instead of a layer per op
-    "q52_bulk_unordered" -> ((s, dir) => {
-      val part = tbl(s, dir, "part")
-      val inserts = part.where(col("p_partkey") <= 3)
-        .withColumn("p_partkey", col("p_partkey") + 1000000L)
-      val upserts = part.where(col("p_partkey").between(10, 20))
-          .withColumn("p_retailprice", col("p_retailprice") + 1000.0)
-        .unionByName(part.where(col("p_partkey") <= 2)
-          .withColumn("p_partkey", col("p_partkey") + 2000000L))
-      TableOps.runBulk(part, Seq(
-        BulkRemove(Map("p_retailprice" -> Map("$lt" -> 910.0))),
-        BulkInsert(inserts),
-        BulkUpdate(Map("p_size" -> Map("$gte" -> 40)),
-          Map("$set" -> Map("p_brand" -> "Brand#XL"))),
-        BulkUpsert((), upserts)), "p_partkey", unordered = true)
-        .select("p_partkey", "p_brand", "p_size", "p_retailprice")
-        .orderBy("p_partkey")
-    }),
-
-    // §2.9 findAndModify with Change.ReturnNew (db/data.go:19-26): the
-    // returned image is the POST-update row, not the pre-image
-    "q53_fam_return_new" -> ((s, dir) => {
-      val (_, img) = TableOps.findAndModify(tbl(s, dir, "orders"),
-        Map("o_orderstatus" -> "P"), Seq("o_orderkey"),
-        Map("$set" -> Map("o_orderpriority" -> "RUSH"),
-            "$inc" -> Map("o_totalprice" -> 1000)),
-        remove = false, "o_orderkey", returnNew = true)
-      img.select("o_orderkey", "o_orderstatus", "o_orderpriority",
-        "o_totalprice")
-    }),
-
-    // §2.8 transformDocument round-trip (db/wrapper.go:599-610): typed rows
-    // -> raw JSON docs -> typed rows; the oracle mirrors the trip through
-    // DuckDB's to_json/json_extract so BOTH engines prove the identity
-    "q54_transform_doc" -> ((s, dir) => {
-      val nation = tbl(s, dir, "nation")
-      val raw = TableOps.toRawDocs(nation)
-      TableOps.fromRawDocs(raw, "doc", nation.schema)
-        .select("n_nationkey", "n_name", "n_regionkey")
-        .orderBy("n_nationkey")
-    }),
-
-    // §2.1 ListDatabaseNames (client/wrapper.go:21-23): a flat root holding
-    // tables plus two multi-db subdirectories (an empty dir is not a db)
-    "q55_list_databases" -> ((s, dir) => {
-      val tmp = scratchDir("graft-lsdb")
-      val root = tmp.resolve("dbroot")
-      java.nio.file.Files.createDirectory(root)
-      val src = java.nio.file.Paths.get(s"$dir/region.parquet")
-      java.nio.file.Files.copy(src, root.resolve("region.parquet"))
-      for (db <- Seq("alpha", "beta")) {
-        val d = root.resolve(db)
-        java.nio.file.Files.createDirectory(d)
-        java.nio.file.Files.copy(src, d.resolve("region.parquet"))
-      }
-      java.nio.file.Files.createDirectory(root.resolve("empty"))
-      val names = new GraftSession(s, root.toString).listDatabaseNames()
-      s.range(1).select(lit(names.mkString(",")).as("dbs"),
-        lit(names.size.toLong).as("n_dbs"))
-    }),
-
-    // §2.4 $facet: multiple sub-pipelines over ONE input, one output row;
-    // the facet arrays are flattened to deterministic scalars for hashing
-    "q56_facet" -> ((s, dir) => {
-      val out = coll(s, dir, "orders").pipe(Seq(
-        Map("$facet" -> Map(
-          "by_status" -> Seq(
-            Map("$group" -> Map("_id" -> "$o_orderstatus",
-              "cnt" -> Map("$sum" -> 1)))),
-          "big" -> Seq(
-            Map("$match" -> Map("o_totalprice" ->
-              Map("$gte" -> 300000.0))),
-            Map("$count" -> "n"))))))
-      out.select(
-        concat_ws("|", sort_array(expr(
-          "transform(by_status, x -> concat(x._id, ':', cast(x.cnt as string)))")))
-          .as("statuses"),
-        element_at(col("big"), 1).getField("n").as("n_big"))
-    }),
-
-    // §2.4 $merge: pipeline result upserted into a sibling collection
-    // (replace existing keys, insert new, leave untouched keys alone)
-    "q57_merge" -> ((s, dir) => {
-      import s.implicits._
-      val root = tmpCopy(dir, "orders", "graft-merge")
-      // stale row for F (will be replaced) + a key the pipeline won't touch
-      Seq(("F", 0L), ("Z", 99L)).toDF("status", "cnt")
-        .write.parquet(root + "/summary.parquet")
-      new GraftSession(s, root).db("d").c("orders").pipe(Seq(
-        Map("$group" -> Map("_id" -> "$o_orderstatus",
-          "cnt" -> Map("$sum" -> 1))),
-        Map("$project" -> Map("status" -> "$_id", "cnt" -> 1)),
-        Map("$merge" -> Map("into" -> "summary", "on" -> "status"))))
-        .orderBy("status")
-    }),
-
-    // §2.3 $lookup pipeline form (let + correlated $expr $eq + row-local
-    // sub-stages) compiled to ONE equi-join — never a per-row rescan
-    "q58_lookup_pipeline" -> ((s, dir) => {
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 200))),
-        Map("$lookup" -> Map(
-          "from" -> "lineitem",
-          "let" -> Map("ok" -> "$o_orderkey"),
-          "pipeline" -> Seq(
-            Map("$match" -> Map("$expr" ->
-              Map("$eq" -> Seq("$l_orderkey", "$$ok")))),
-            Map("$match" -> Map("l_quantity" -> Map("$gte" -> 30.0))),
-            Map("$project" -> Map("l_linenumber" -> 1))),
-          "as" -> "lines"))))
-        .select(col("o_orderkey"),
-          size(col("lines")).cast("long").as("n_lines"),
-          concat_ws(",", expr(
-            "transform(sort_array(transform(lines, x -> x.l_linenumber)), " +
-              "x -> cast(x as string))")).as("line_nums"))
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.4 $graphLookup: recursive ancestor walk (parent = id - 5 chain
-    // derived from nation) as iterated checkpointed equi-joins; the oracle
-    // is DuckDB's recursive CTE over the same derived edge table
-    "q59_graph_lookup" -> ((s, dir) => {
-      val tmp = scratchDir("graft-graph")
-      tbl(s, dir, "nation").select(
-        col("n_nationkey").as("id"),
-        when(col("n_nationkey") >= 5, col("n_nationkey") - 5).as("parent"))
-        .write.parquet(tmp.toString + "/nodes.parquet")
-      new GraftSession(s, tmp.toString).db("d").c("nodes").pipe(Seq(
-        Map("$graphLookup" -> Map(
-          "from" -> "nodes", "startWith" -> "$parent",
-          "connectFromField" -> "parent", "connectToField" -> "id",
-          "as" -> "anc"))))
-        .select(col("id"),
-          size(col("anc")).cast("long").as("n_anc"),
-          concat_ws(",", expr(
-            "transform(sort_array(transform(anc, x -> x.id)), " +
-              "x -> cast(x as string))")).as("anc_ids"))
-        .orderBy("id")
-    }),
-
-    // §2.5 $setWindowFields: Mongo window functions straight onto Spark
-    // Window — one shuffle on the partition key, codegen'd aggregates
-    "q60_window_fields" -> ((s, dir) => {
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$setWindowFields" -> Map(
-          "partitionBy" -> "$o_orderstatus",
-          "sortBy" -> Map("o_orderkey" -> 1),
-          "output" -> Map(
-            "rn" -> Map("$documentNumber" -> Map.empty),
-            "running_cnt" -> Map("$count" -> 1,
-              "window" -> Map("documents" -> Seq("unbounded", "current"))),
-            "prev_key" -> Map("$shift" -> Map("output" -> "$o_orderkey",
-              "by" -> -1, "default" -> -1)))))))
-        .select(col("o_orderkey"), col("o_orderstatus"),
-          col("rn").cast("long").as("rn"), col("running_cnt"),
-          col("prev_key").cast("long").as("prev_key"))
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.7 $unionWith: union with a piped sibling collection
-    "q61_union_with" -> ((s, dir) => {
-      coll(s, dir, "customer").pipe(Seq(
-        Map("$project" -> Map("key" -> "$c_custkey", "name" -> "$c_name")),
-        Map("$unionWith" -> Map("coll" -> "supplier", "pipeline" -> Seq(
-          Map("$project" -> Map(
-            "key" -> Map("$add" -> Seq("$s_suppkey", 1000000)),
-            "name" -> "$s_name")))))))
-        .orderBy("key")
-    }),
-
-    // §2.5 $fill locf: last-observation-carried-forward over an ordered
-    // window (nulls synthesized in-pipeline; TPC-H has none)
-    "q62_fill_locf" -> ((s, dir) => {
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$addFields" -> Map("v" -> Map("$cond" -> Seq(
-          Map("$lt" -> Seq("$o_totalprice", 100000.0)),
-          null, "$o_totalprice")))),
-        Map("$fill" -> Map(
-          "partitionBy" -> "$o_orderstatus",
-          "sortBy" -> Map("o_orderkey" -> 1),
-          "output" -> Map("v" -> Map("method" -> "locf"))))))
-        .select("o_orderkey", "o_orderstatus", "v")
-        .orderBy("o_orderkey")
-    }),
-
-    // IVF coarse assignment: nearest of 4 deterministic centroids (the
-    // first 4 vectors) by cosine, centroid-id tie-break; centroids
-    // broadcast, corpus scanned once
-    "q64_ivf_assign" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.ivfAssign(e, "vec_id", "embedding",
-        e.where(col("vec_id") < 4))
-        .select("vec_id", "centroid_id")
-        .orderBy("vec_id")
-    }),
-
-    // §2.12 query fingerprinting + OTel statement formatting: the oracle is
-    // the expected constant — both are deterministic driver-side renderings
-    // of a fixed command document (apm/otel_monitor.go:222-250)
-    "q65_fingerprint" -> ((s, dir) => {
-      val doc = Map("find" -> "users",
-        "filter" -> scala.collection.immutable.ListMap(
-          "age" -> Map("$gte" -> 21), "tags" -> Seq(1, 2, "x")))
-      val fp = graft.apm.Fingerprint.fingerprint(
-        doc("filter").asInstanceOf[Map[String, Any]])
-      val full = graft.apm.OtelMonitor.formatStatement(doc, stripped = false)
-      val stripped = graft.apm.OtelMonitor.formatStatement(doc,
-        stripped = true)
-      s.range(1).select(lit(fp).as("fp"),
-        lit(full.contains("21")).as("full_has_values"),
-        lit(stripped.contains("21")).as("stripped_has_values"))
-    }),
-
-    // §2.5/§2.12 streaming windowed rollup: the APM rotation window as an
-    // event-time tumbling window over a file stream (AvailableNow), complete
-    // mode to a memory sink; oracle = the equivalent batch hour-bucket agg
-    "q66_stream_rollup" -> ((s, dir) => {
-      val tmp = scratchDir("graft-swin").toString
-      val ev = tbl(s, dir, "events")
-      ev.write.parquet(s"$tmp/src")
-      val name = s"graft_q66_${streamCounter.incrementAndGet()}"
-      val stream = graft.streaming.StreamingMigrations
-        .readStream(s, s"$tmp/src", ev.schema)
-        .withColumn("ok", col("event_type") =!= "error")
-        .withColumn("dur", col("event_id") % 1000)
-      // r16: state partitions sized from the source (the windowed agg
-      // is the stateful stage; see StreamingMigrations.statePartitionsFor)
-      graft.streaming.StreamingMigrations.withShufflePartitions(s,
-        graft.streaming.StreamingMigrations.statePartitionsFor(
-          s, s"$tmp/src")) {
-        graft.streaming.StreamingMigrations
-          .windowedRollup(stream, "ts", Seq("event_type"), "ok", "dur",
-            windowLen = "1 hour", watermark = "2 hours")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start().awaitTermination()
-      }
-      s.table(name)
-        .select(col("window.start").as("ts_hour"), col("event_type"),
-          col("succeeded"), col("failed"), col("duration_ns"))
-        .orderBy("ts_hour", "event_type")
-    }),
-
-    // §2.5 $densify: per-supplier-count nation grid — missing nation keys
-    // in [0, 25) appear as null-count rows; oracle = generate_series
-    "q68_densify" -> ((s, dir) => {
-      coll(s, dir, "supplier").pipe(Seq(
-        Map("$match" -> Map("s_suppkey" -> Map("$lte" -> 30))),
-        Map("$group" -> Map("_id" -> "$s_nationkey",
-          "n_sup" -> Map("$sum" -> 1))),
-        Map("$project" -> Map("nk" -> "$_id", "n_sup" -> 1)),
-        Map("$densify" -> Map("field" -> "nk",
-          "range" -> Map("step" -> 1, "bounds" -> Seq(0, 25))))))
-        .select(col("nk").cast("long").as("nk"), col("n_sup"))
-        .orderBy("nk")
-    }),
-
-    // §2.4 $out sink: the pipeline result REPLACES the sibling collection
-    // (vs $merge's keyed upsert); output = the replaced table read back
-    "q69_out" -> ((s, dir) => {
-      val root = tmpCopy(dir, "orders", "graft-out")
-      new GraftSession(s, root).db("d").c("orders").pipe(Seq(
-        Map("$match" -> Map("o_orderstatus" -> "F")),
-        Map("$project" -> Map("o_orderkey" -> 1, "o_totalprice" -> 1)),
-        Map("$out" -> "ordsum")))
-        .orderBy("o_orderkey")
-    }),
-
-    // §2.4 higher-order expression operators ($map/$filter/$reduce with
-    // $$var lambda binding) — all codegen'd Spark lambda functions
-    "q70_expr_lang" -> ((s, dir) => {
-      coll(s, dir, "documents").pipe(Seq(
-        Map("$addFields" -> Map(
-          "toks" -> Map("$filter" -> Map(
-            "input" -> Map("$split" -> Seq("$text", " ")), "as" -> "t",
-            "cond" -> Map("$ne" -> Seq("$$t", "")))))),
-        Map("$addFields" -> Map(
-          "lens" -> Map("$map" -> Map("input" -> "$toks", "as" -> "t",
-            "in" -> Map("$strLenCP" -> "$$t"))))),
-        Map("$addFields" -> Map(
-          "n_toks" -> Map("$toLong" -> Map("$size" -> "$toks")),
-          "total_chars" -> Map("$toLong" -> Map("$reduce" -> Map(
-            "input" -> "$lens", "initialValue" -> 0,
-            "in" -> Map("$add" -> Seq("$$value", "$$this"))))),
-          "long_toks" -> Map("$toLong" -> Map("$size" ->
-            Map("$filter" -> Map("input" -> "$lens", "as" -> "l",
-              "cond" -> Map("$gte" -> Seq("$$l", 6)))))))),
-        Map("$project" -> Map("doc_id" -> 1, "n_toks" -> 1,
-          "total_chars" -> 1, "long_toks" -> 1))))
-        .orderBy("doc_id")
-    }),
-
-    // §2.4 $topN accumulator + $expr query predicate: first-3
-    // total-prices per status ordered by the unique order key
-    "q71_topn_expr" -> ((s, dir) => {
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("$expr" ->
-          Map("$eq" -> Seq(Map("$mod" -> Seq("$o_orderkey", 2)), 0L)))),
-        Map("$group" -> Map("_id" -> "$o_orderstatus",
-          "top3" -> Map("$topN" -> Map("output" -> "$o_totalprice",
-            "sortBy" -> Map("o_orderkey" -> 1), "n" -> 3))))))
-        .select(col("_id").as("status"),
-          element_at(col("top3"), 1).as("t1"),
-          element_at(col("top3"), 2).as("t2"),
-          element_at(col("top3"), 3).as("t3"))
-        .orderBy("status")
-    }),
-
-    // exact $median/$percentile per group — integral quantities at dyadic
-    // ranks make interpolation bit-exact across engines
-    "q72_percentile" -> ((s, dir) => {
-      coll(s, dir, "lineitem").pipe(Seq(
-        Map("$group" -> Map("_id" -> "$l_returnflag",
-          "med" -> Map("$median" -> Map("input" -> "$l_quantity")),
-          "ps" -> Map("$percentile" -> Map("input" -> "$l_quantity",
-            "p" -> Seq(0.25, 0.75)))))))
-        .select(col("_id").as("flag"), col("med"),
-          element_at(col("ps"), 1).as("p25"),
-          element_at(col("ps"), 2).as("p75"))
-        .orderBy("flag")
-    }),
-
-    // covariance + bitwise accumulators; covariance over integral-valued
-    // doubles decimal-cast for cross-engine exactness
-    "q73_covar_bits" -> ((s, dir) => {
-      coll(s, dir, "part").pipe(Seq(
-        Map("$group" -> Map("_id" -> "$p_brand",
-          "cv" -> Map("$covariancePop" -> Seq("$p_size", "$p_partkey")),
-          "ba" -> Map("$bitAnd" -> "$p_size"),
-          "bo" -> Map("$bitOr" -> "$p_size"),
-          "bx" -> Map("$bitXor" -> "$p_size")))))
-        .select(col("_id").as("brand"),
-          col("cv").cast("decimal(28,6)").cast("double").as("cv"),
-          col("ba"), col("bo"), col("bx"))
-        .orderBy("brand")
-    }),
-
-    // skew-mitigated two-stage aggregation: salted partial sums must be
-    // indistinguishable from the plain aggregate (the oracle)
-    "q67_salted_agg" -> ((s, dir) =>
-      graft.ops.Skew.saltedSumCount(tbl(s, dir, "lineitem"), "l_returnflag",
-        "l_quantity", salt = 8)
-        .select(col("l_returnflag"),
-          col("sum").cast("long").as("sum_qty"), col("count").as("cnt"))
-        .orderBy("l_returnflag")),
-
-    // §2.4 $bucketAuto: ~equal-count buckets via cumulative counts over
-    // DISTINCT values (window over |distinct| rows, data never
-    // single-partition-sorted); oracle mirrors the same construction
-    "q63_bucket_auto" -> ((s, dir) => {
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$bucketAuto" -> Map("groupBy" -> "$o_totalprice",
-          "buckets" -> 5))))
-        .select(col("_id.min").as("bucket_min"),
-          col("_id.max").as("bucket_max"), col("count"))
-        .orderBy("bucket_min")
-    }),
-
-    // full IVF ANN search: shuffle-free coarse assignment (centroid
-    // constants folded into codegen), nprobe query probing, cell-key
-    // equi-join candidates, exact cosine re-rank
-    "q74_ann_ivf" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Similarity.ivfTopK(e, e.where(col("vec_id") < 8), "vec_id",
-        "embedding", centroids = e.where(col("vec_id") < 16),
-        k = 10, nprobe = 4)
-        .orderBy("query_id", "rank")
-    }),
-
-    // IVF ANN against a PERSISTED cell-partitioned index (the q244
-    // store story for vector search): assignments + vectors + self-
-    // dots are written once partitioned by cell, queries probe and
-    // read ONLY their cells' partitions, the corpus is never
-    // re-assigned or re-read — must equal q74 exactly (same oracle)
-    "q261_ivf_store" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      val cents = e.where(col("vec_id") < 16)
-      val store = scratchDir("graft-ivfstore").toString
-      storeWrite(
-        Similarity.ivfCellSignatures(e, "vec_id", "embedding", cents),
-        "cell", store)
-      Similarity.ivfTopKPrecomputed(e.where(col("vec_id") < 8),
-        s.read.parquet(store), "vec_id", "embedding", cents,
-        k = 10, nprobe = 4)
-        .orderBy("query_id", "rank")
-    }),
-
-    // $vectorSearch pipeline stage: literal query vector folded into the
-    // scan, TakeOrdered top-limit — no join anywhere in the plan
-    // $vectorSearch with index-level binary quantization: hamming
-    // shortlist of numCandidates over sign-bit signatures, exact-cosine
-    // rescore to the limit — Atlas's auto-quantized search flow as a
-    // stage option
-    "q192_vector_search_binary" -> ((s, dir) =>
-      coll(s, dir, "embeddings").pipe(Seq(
-        Map("$vectorSearch" -> Map("path" -> "embedding",
-          "queryVector" -> q75Vec, "limit" -> 25,
-          "numCandidates" -> 60, "quantization" -> "binary",
-          "tieBreak" -> "vec_id")),
-        Map("$project" -> Map("vec_id" -> 1))))
-        .orderBy("vec_id")),
-
-    "q75_vector_search" -> ((s, dir) =>
-      coll(s, dir, "embeddings").pipe(Seq(
-        Map("$vectorSearch" -> Map("path" -> "embedding",
-          "queryVector" -> q75Vec, "limit" -> 25, "tieBreak" -> "vec_id")),
-        Map("$project" -> Map("vec_id" -> 1))))
-        .orderBy("vec_id")),
-
-    // ISO calendar + date construction/deconstruction expression ops
-    "q76_datetime" -> ((s, dir) =>
-      coll(s, dir, "orders").pipe(Seq(
-        Map("$match" -> Map("o_orderkey" -> Map("$lte" -> 2000))),
-        Map("$addFields" -> Map(
-          "dow" -> Map("$dayOfWeek" -> "$o_orderdate"),
-          "idow" -> Map("$isoDayOfWeek" -> "$o_orderdate"),
-          "iwk" -> Map("$isoWeek" -> "$o_orderdate"),
-          "iwy" -> Map("$isoWeekYear" -> "$o_orderdate"),
-          "rebuilt" -> Map("$dateFromParts" -> Map(
-            "year" -> Map("$year" -> "$o_orderdate"),
-            "month" -> Map("$month" -> "$o_orderdate"),
-            "day" -> Map("$dayOfMonth" -> "$o_orderdate"),
-            "hour" -> 12, "minute" -> 30, "second" -> 15,
-            "millisecond" -> 250)))),
-        Map("$addFields" -> Map(
-          "ms" -> Map("$millisecond" -> "$rebuilt"),
-          "parts" -> Map("$dateToParts" -> Map("date" -> "$rebuilt"))))))
-        .select(col("o_orderkey"), col("dow"), col("idow"), col("iwk"),
-          col("iwy"), col("rebuilt"), col("ms"),
-          col("parts.second").as("psec"),
-          col("parts.millisecond").as("pms"))
-        .orderBy("o_orderkey")),
-
-    // trigonometric / logarithmic expression ops; irrational outputs
-    // decimal-rounded in BOTH engines (libm last-ulp differences)
-    "q77_trig" -> ((s, dir) => {
-      def r9(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        c.cast("decimal(18,9)").cast("double")
-      coll(s, dir, "nation").pipe(Seq(
-        Map("$addFields" -> Map(
-          "x" -> Map("$divide" -> Seq("$n_nationkey", 25.0)),
-          "y" -> Map("$divide" -> Seq("$n_nationkey", 10.0)))),
-        Map("$addFields" -> Map(
-          "vsin" -> Map("$sin" -> "$y"), "vcos" -> Map("$cos" -> "$y"),
-          "vtan" -> Map("$tan" -> "$x"),
-          "vasin" -> Map("$asin" -> "$x"), "vacos" -> Map("$acos" -> "$x"),
-          "vatan" -> Map("$atan" -> "$y"),
-          "vatan2" -> Map("$atan2" -> Seq("$y", Map("$add" -> Seq("$x", 1.0)))),
-          "vsinh" -> Map("$sinh" -> "$x"), "vcosh" -> Map("$cosh" -> "$x"),
-          "vtanh" -> Map("$tanh" -> "$x"),
-          "vrad" -> Map("$degreesToRadians" ->
-            Map("$multiply" -> Seq("$n_nationkey", 15))),
-          "vdeg" -> Map("$radiansToDegrees" -> "$x"),
-          "vlog" -> Map("$log" ->
-            Seq(Map("$add" -> Seq("$n_nationkey", 2)), 2.0))))))
-        .select(col("n_nationkey") +: Seq("vsin", "vcos", "vtan", "vasin",
-          "vacos", "vatan", "vatan2", "vsinh", "vcosh", "vtanh", "vrad",
-          "vdeg", "vlog").map(n => r9(col(n)).as(n)): _*)
-        .orderBy("n_nationkey")
-    }),
-
-    // set predicates ($setEquals/$setIsSubset/$allElementsTrue/
-    // $anyElementTrue), array literals, struct field surgery
-    "q78_sets" -> ((s, dir) =>
-      coll(s, dir, "nation").pipe(Seq(
-        Map("$addFields" -> Map(
-          "a" -> Seq(Map("$mod" -> Seq("$n_nationkey", 5)),
-            "$n_regionkey", 2),
-          "b" -> Seq(0, 1, 2, 3, 4),
-          "o" -> Map("x" -> "$n_nationkey", "y" -> "$n_name"))),
-        Map("$addFields" -> Map(
-          "subset" -> Map("$setIsSubset" -> Seq("$a", "$b")),
-          "eq" -> Map("$setEquals" -> Seq("$a",
-            Seq(2, "$n_regionkey", Map("$mod" -> Seq("$n_nationkey", 5))))),
-          "anyBig" -> Map("$anyElementTrue" -> Seq(Map("$map" -> Map(
-            "input" -> "$a", "as" -> "v",
-            "in" -> Map("$gte" -> Seq("$$v", 3)))))),
-          "allNonNeg" -> Map("$allElementsTrue" -> Seq(Map("$map" -> Map(
-            "input" -> "$a", "as" -> "v",
-            "in" -> Map("$gte" -> Seq("$$v", 0)))))),
-          "gf" -> Map("$getField" -> Map("field" -> "y", "input" -> "$o")),
-          "sf" -> Map("$setField" -> Map("field" -> "x", "input" -> "$o",
-            "value" -> Map("$multiply" -> Seq("$n_nationkey", 2)))),
-          "uf" -> Map("$unsetField" ->
-            Map("field" -> "x", "input" -> "$o"))))))
-        .select(col("n_nationkey"), col("subset"), col("eq"),
-          col("anyBig"), col("allNonNeg"), col("gf"),
-          col("sf.x").as("sfx"), col("uf.y").as("ufy"))
-        .orderBy("n_nationkey")),
-
-    // training-pipeline chunking: fixed-size token windows with overlap —
-    // one posexplode fused into the scan, zero shuffles
-    "q79_chunking" -> ((s, dir) =>
-      Chunking.tokenChunks(
-        tbl(s, dir, "documents").where(col("doc_id") < 40),
-        "doc_id", "text", chunkSize = 8, overlap = 2)
-        .orderBy("doc_id", "chunk_idx")),
-
-    // int8 scalar quantization + top-k over the quantized codes: per-vector
-    // scales cancel in cosine, so candidate math is exact integer arithmetic
-    "q80_quantized_ann" -> ((s, dir) => {
-      val e = tbl(s, dir, "embeddings")
-      Quantize.quantizedTopK(e, e.where(col("vec_id") < 8),
-        "vec_id", "embedding", k = 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    // PII redaction: deterministic pii injected into the text (the corpus
-    // itself is synthetic), then redacted + counted per category — one
-    // codegen'd regex pass, zero shuffles
-    "q81_pii_redact" -> ((s, dir) => {
-      val injected = concat(col("text"),
-        lit(" contact user"), col("doc_id").cast("string"),
-        lit("@example.com or 555-123-4567 ssn 123-45-6789 at 10.0.0."),
-        ((col("doc_id") % 250) + 1).cast("string"))
-      tbl(s, dir, "documents").where(col("doc_id") < 50)
-        .select(col("doc_id"),
-          Redaction.redactPii(injected).as("clean"),
-          Redaction.piiCount(injected, "email").cast("long").as("n_email"),
-          Redaction.piiCount(injected, "ssn").cast("long").as("n_ssn"),
-          Redaction.piiCount(injected, "phone").cast("long").as("n_phone"),
-          Redaction.piiCount(injected, "ip").cast("long").as("n_ip"))
-        .orderBy("doc_id")
-    }),
-
-    // regex find/findAll, checked $convert, $dateFromString, byte-level
-    // string ops — all codegen'd scalar expressions, zero shuffles
-    "q83_string_convert" -> ((s, dir) => {
-      val rf = Map("$regexFind" ->
-        Map("input" -> "$p_brand", "regex" -> "#([0-9]+)"))
-      coll(s, dir, "part").pipe(Seq(
-        Map("$match" -> Map("p_partkey" -> Map("$lte" -> 500))),
-        Map("$addFields" -> Map(
-          "rf_match" -> Map("$getField" ->
-            Map("field" -> "match", "input" -> rf)),
-          "cap" -> Map("$arrayElemAt" -> Seq(Map("$getField" ->
-            Map("field" -> "captures", "input" -> rf)), 0)),
-          "rfa" -> Map("$regexFindAll" ->
-            Map("input" -> "$p_name", "regex" -> "[a-z]{4,}")),
-          "bnum" -> Map("$convert" -> Map(
-            "input" -> Map("$arrayElemAt" -> Seq(Map("$getField" ->
-              Map("field" -> "captures", "input" -> rf)), 0)),
-            "to" -> "int")),
-          "conv_err" -> Map("$convert" -> Map("input" -> "$p_type",
-            "to" -> "int", "onError" -> -1)),
-          "parsed" -> Map("$dateFromString" -> Map(
-            "dateString" -> Map("$concat" -> Seq("2024-0", Map("$toString" ->
-              Map("$add" -> Seq(Map("$mod" -> Seq("$p_size", 9)), 1))),
-              "-15")),
-            "format" -> "%Y-%m-%d")),
-          "blen" -> Map("$strLenBytes" -> "$p_name"),
-          "bsub" -> Map("$substrBytes" -> Seq("$p_name", 2, 6))))))
-        .select(col("p_partkey"), col("rf_match"), col("cap"),
-          // stringified: driver comparator can't sort/hash raw arrays
-          concat_ws(",", col("rfa")).as("rfa"),
-          col("bnum"), col("conv_err"), col("parsed"),
-          col("blen").cast("long").as("blen"), col("bsub"))
-        .orderBy("p_partkey")
-    }),
-
-    // document-shape surgery: build maps from entry arrays, merge with
-    // last-wins override, explode back to sorted entries — all Column math
-    "q86_object_surgery" -> ((s, dir) =>
-      coll(s, dir, "nation").pipe(Seq(
-        Map("$addFields" -> Map(
-          "m1" -> Map("$arrayToObject" -> Seq(Seq(
-            Map("k" -> "a", "v" -> Map("$toLong" -> "$n_nationkey")),
-            Map("k" -> "b", "v" -> Map("$toLong" -> "$n_regionkey"))))),
-          "m2" -> Map("$arrayToObject" -> Seq(Seq(
-            Map("k" -> "b", "v" -> Map("$multiply" ->
-              Seq(Map("$toLong" -> "$n_regionkey"), 2L))),
-            Map("k" -> "c", "v" -> 7L)))))),
-        Map("$addFields" -> Map(
-          "ents" -> Map("$sortArray" -> Map(
-            "input" -> Map("$objectToArray" ->
-              Map("$mergeObjects" -> Seq("$m1", "$m2"))),
-            "sortBy" -> 1))))))
-        .select(col("n_nationkey"),
-          // stringified k:v entries — driver comparator can't hash
-          // array<struct> columns
-          concat_ws(",", transform(col("ents"),
-            e => concat(e.getField("k"), lit(":"),
-              e.getField("v").cast("string")))).as("ents"))
-        .orderBy("n_nationkey")),
-
-    // bitwise query predicates + $type through the query compiler
-    "q84_query_bits_type" -> ((s, dir) =>
-      coll(s, dir, "part").find(Map(
-        "p_size" -> Map("$bitsAllSet" -> Seq(0, 2)),
-        "p_partkey" -> Map("$bitsAnyClear" -> 6),
-        "p_name" -> Map("$type" -> "string"),
-        "p_retailprice" -> Map("$type" -> "double")))
-        .sort("p_partkey")
-        .select("p_partkey", "p_size")
-        .toDF),
-
-    // BM25 keyword retrieval: query-term filter fused into the explode,
-    // broadcast corpus stats, term-window df, decimal-exact score sum
-    "q85_bm25" -> ((s, dir) =>
-      TextSearch.bm25(tbl(s, dir, "documents"), "doc_id", "text",
-        Seq("data", "query", "spark"), k = 20)
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"),
-          col("matched"))
-        .orderBy(col("score").desc, col("doc_id"))),
-
-    // BM25 against a PERSISTED term-bucketed postings index built in
-    // TWO appended batches (index once / append daily / query many):
-    // postings append under their bkt partitions, the one-row stats
-    // sidecar key-sums, and scoring reads ONLY the query terms'
-    // bucket partitions + the sidecar — never corpus text. Must equal
-    // the one-shot q85 scoring (same oracle).
-    "q257_bm25_store" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val store = scratchDir("graft-bm25store").toString
-      val b1 = TextSearch.bm25Index(
-        docs.where(col("doc_id") < 300), "doc_id", "text")
-      val b2 = TextSearch.bm25Index(
-        docs.where(col("doc_id") >= 300), "doc_id", "text")
-      // per-batch phases: postings and stats land in DIFFERENT dirs, so
-      // each batch's two writes overlap (guide §2.6); batch 2's appends
-      // stay AFTER batch 1's overwrites of the same paths
-      concurrently(
-        () => storeWrite(b1.postings, "bkt", s"$store/postings",
-          preClustered = true),
-        () => b1.stats.write.mode("overwrite").parquet(s"$store/stats"))
-      concurrently(
-        () => storeWrite(b2.postings, "bkt", s"$store/postings",
-          mode = "append", preClustered = true),
-        () => b2.stats.write.mode("append").parquet(s"$store/stats"))
-      val idx = TextSearch.Bm25Index(
-        s.read.parquet(s"$store/postings"),
-        TextSearch.mergeBm25Stats(s.read.parquet(s"$store/stats")))
-      TextSearch.bm25Precomputed(idx, "doc_id",
-        Seq("data", "query", "spark"), k = 20)
-        .select(col("doc_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"),
-          col("matched"))
-        .orderBy(col("score").desc, col("doc_id"))
-    }),
-
-    // hybrid retrieval for ONE query: BM25 lexical leg from the SAVED
-    // postings index (corpus text never read at query time) + exact-
-    // cosine vector leg over the embedding sidecar, RRF-fused — the
-    // RAG-retrieval preset over a curated corpus
-    "q260_hybrid_search" -> ((s, dir) => {
-      // lexical corpus bounded: q257 already pays the full-corpus
-      // index build; this query demonstrates the FUSION preset
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 1000)
-      val e = tbl(s, dir, "embeddings")
-      val store = scratchDir("graft-hybstore").toString
-      val idx = TextSearch.bm25Index(docs, "doc_id", "text")
-      // postings + stats land in different dirs: overlap (guide §2.6)
-      concurrently(
-        () => storeWrite(idx.postings, "bkt", s"$store/postings",
-          preClustered = true),
-        () => idx.stats.write.mode("overwrite").parquet(s"$store/stats"))
-      graft.ops.Hybrid.hybridSearch(
-        TextSearch.Bm25Index(s.read.parquet(s"$store/postings"),
-          s.read.parquet(s"$store/stats")),
-        "doc_id", Seq("data", "query", "spark"),
-        e, "vec_id", "embedding", q75Vec, k = 15)
-        .select(col("neighbor_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"),
-          col("fused_rank"))
-        .orderBy("fused_rank")
-    }),
-
-    // hybrid retrieval with BOTH legs index-served (the deployed
-    // shape): lexical from the saved postings' bucket partitions,
-    // vector from the saved IVF cell index — the corpus is neither
-    // re-tokenized nor re-assigned at query time
-    "q264_hybrid_ivf" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 1000)
-      val e = tbl(s, dir, "embeddings")
-      val cents = e.where(col("vec_id") < 16)
-      val store = scratchDir("graft-hybivf").toString
-      val idx = TextSearch.bm25Index(docs, "doc_id", "text")
-      // three independent index writes overlapped (guide §2.6)
-      concurrently(
-        () => storeWrite(idx.postings, "bkt", s"$store/postings",
-          preClustered = true),
-        () => idx.stats.write.mode("overwrite").parquet(s"$store/stats"),
-        () => storeWrite(
-          Similarity.ivfCellSignatures(e, "vec_id", "embedding", cents),
-          "cell", s"$store/cells"))
-      graft.ops.Hybrid.hybridSearchIvf(
-        TextSearch.Bm25Index(s.read.parquet(s"$store/postings"),
-          s.read.parquet(s"$store/stats")),
-        "doc_id", Seq("data", "query", "spark"),
-        s.read.parquet(s"$store/cells"), "vec_id", "embedding",
-        cents, q75Vec, k = 15)
-        .select(col("neighbor_id"),
-          col("score").cast("decimal(18,9)").cast("double").as("score"),
-          col("fused_rank"))
-        .orderBy("fused_rank")
-    }),
-
-    // the data card WITHOUT re-reading the corpus: prior batches live
-    // as three mergeable sidecars (length histogram, lang counts,
-    // distinct content hashes — persisted), the delta merges in, and
-    // the card derives from counts alone — equal to the one-shot
-    // q259 report on the union (same oracle)
-    "q263_report_incremental" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val store = scratchDir("graft-reportstore").toString
-      val s1 = graft.ops.Curation.corpusReportSidecars(
-        docs.where(col("doc_id") < 300), "doc_id", "text", "source")
-      // three independent sidecar writes overlapped (guide §2.6)
-      concurrently(
-        () => s1.lenHist.write.mode("overwrite").parquet(s"$store/len"),
-        () => s1.langCounts.write.mode("overwrite")
-          .parquet(s"$store/lang"),
-        () => s1.hashes.write.mode("overwrite").parquet(s"$store/hash"))
-      val prior = graft.ops.Curation.CorpusReportState(
-        s.read.parquet(s"$store/len"), s.read.parquet(s"$store/lang"),
-        s.read.parquet(s"$store/hash"))
-      graft.ops.Curation.corpusReportIncremental(
-        docs.where(col("doc_id") >= 300), prior, "doc_id", "text",
-        "source")._1
-        .select(col("source"), col("n_docs"), col("n_empty"),
-          col("total_chars"),
-          col("chars_p25").cast("decimal(18,6)").cast("double")
-            .as("chars_p25"),
-          col("chars_p50").cast("decimal(18,6)").cast("double")
-            .as("chars_p50"),
-          col("chars_p75").cast("decimal(18,6)").cast("double")
-            .as("chars_p75"),
-          col("distinct_texts"),
-          col("dup_rate").cast("decimal(18,9)").cast("double")
-            .as("dup_rate"),
-          col("top_lang"),
-          col("top_lang_share").cast("decimal(18,9)").cast("double")
-            .as("top_lang_share"))
-        .orderBy("source")
-    }),
-
-    // TF-IDF top terms per document: one explode + one (doc,term) aggregate
-    // + one term-keyed window — df/N over the WHOLE corpus, output filtered
-    "q82_tfidf" -> ((s, dir) =>
-      TfIdf.topTerms(tbl(s, dir, "documents"), "doc_id", "text", 3)
-        .where(col("doc_id") < 30)
-        .select(col("doc_id"), col("term"), col("tf"), col("df"),
-          col("tfidf").cast("decimal(18,9)").cast("double").as("tfidf"),
-          col("rank").cast("long").as("rank"))
-        .orderBy("doc_id", "rank")),
-
-    // TF-IDF top terms for a DELTA batch under the UNION's document
-    // frequencies, from the SAVED postings index (one store format
-    // serves BM25 retrieval and term weighting): df = saved per-term
-    // row counts + the delta's own, N = sidecar + delta — corpus
-    // text is never re-read. Equal to the one-shot topTerms on the
-    // union restricted to the delta's docs.
-    "q258_tfidf_incremental" -> ((s, dir) => {
-      val docs = tbl(s, dir, "documents")
-      val store = scratchDir("graft-tfidfstore").toString
-      val idx = TextSearch.bm25Index(
-        docs.where(col("doc_id") < 300), "doc_id", "text")
-      // postings + stats land in different dirs: overlap (guide §2.6)
-      concurrently(
-        () => storeWrite(idx.postings, "bkt", s"$store/postings",
-          preClustered = true),
-        () => idx.stats.write.mode("overwrite").parquet(s"$store/stats"))
-      TfIdf.topTermsPrecomputed(
-        docs.where(col("doc_id") >= 300 && col("doc_id") < 400),
-        TextSearch.Bm25Index(s.read.parquet(s"$store/postings"),
-          s.read.parquet(s"$store/stats")),
-        "doc_id", "text", 3)
-        .select(col("doc_id"), col("term"), col("tf"), col("df"),
-          col("tfidf").cast("decimal(18,9)").cast("double").as("tfidf"),
-          col("rank").cast("long").as("rank"))
-        .orderBy("doc_id", "rank")
-    }),
-  )
-
-  /** Deterministic 64-dim query vector for q75 (tenths — exact doubles
-    * that round-trip through SQL text). */
-  private val q75Vec: Seq[Double] =
-    Seq.tabulate(64)(i => ((i * 37) % 19 - 9) / 10.0)
-
-  /** Copy one table's parquet into a fresh temp root so write-back queries
-    * never touch the shared (read-only) testdata. */
-  private def tmpCopy(dir: String, table: String, prefix: String): String = {
-    val tmp = scratchDir(prefix)
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/$table.parquet"),
-      tmp.resolve(s"$table.parquet"))
-    tmp.toString
-  }
-
-  /** DuckDB mirror of TextFunctions.tokens. */
-  private val toksCte =
-    "toks AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t FROM documents)"
-  /** DuckDB mirror of TextFunctions.shingles(k=3) + distinct. */
-  private val shingleCte =
-    """sh AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS sh
-      |  FROM toks, UNNEST(range(1, len(t)-1)) AS u(i) WHERE len(t) >= 3)""".stripMargin
-  /** DuckDB mirror of TextFunctions.tokenHash. */
-  private def sqlHash(e: String): String =
-    s"(('0x'||substr(md5($e),1,15))::BIGINT % 2147483647)"
-
-  /** Shared oracle for the exact (q108) and Bloom-prefiltered (q151)
-    * decontamination paths — the Bloom sketch only prunes rows the exact
-    * join would drop anyway, so both must produce THIS answer. */
-  private val decontamSql =
-    """WITH ct AS (SELECT doc_id, list_filter(string_split(text, ' '),
-      |    x -> x <> '') AS t FROM documents WHERE doc_id % 2 = 1),
-      |bt AS (SELECT doc_id, list_filter(string_split(text, ' '),
-      |    x -> x <> '') AS t FROM documents WHERE doc_id % 2 = 0),
-      |cs AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+2], ' ') AS sh
-      |  FROM ct, UNNEST(range(1, len(t)-1)) AS u(i) WHERE len(t) >= 3),
-      |bs0 AS (SELECT DISTINCT doc_id AS b_id,
-      |    array_to_string(t[i:i+2], ' ') AS sh
-      |  FROM bt, UNNEST(range(1, len(t)-1)) AS u(i) WHERE len(t) >= 3),
-      |-- the engine's maxBenchDf=100 stop-shingle cap, applied on the
-      |-- benchmark side BEFORE the join (rows are distinct (doc, sh))
-      |kept AS (SELECT sh FROM bs0 GROUP BY sh HAVING COUNT(*) <= 100),
-      |bs AS (SELECT bs0.b_id, bs0.sh FROM bs0 JOIN kept USING (sh))
-      |SELECT cs.doc_id AS doc_id,
-      |  CAST(COUNT(DISTINCT cs.sh) AS BIGINT) AS hits,
-      |  CAST(COUNT(DISTINCT bs.b_id) AS BIGINT) AS bench_docs,
-      |  MIN(bs.b_id) AS first_bench
-      |FROM cs JOIN bs USING (sh)
-      |GROUP BY 1 HAVING COUNT(DISTINCT cs.sh) >= 3
-      |ORDER BY doc_id""".stripMargin
-
-  /** MinHash-LSH oracle generated from the same constants as
-    * Dedup.minhashLshPairs (a_i=2i+3, b_i=i^2+1, M=2^31-1). */
-  /** The WITH-body through `bands(doc_id, band, sig)` — the ONE SQL
-    * mirror of Dedup.minhashSignatures+bandFrame (permutation
-    * constants live here and in Dedup only); q19/q50/q225/q228 all
-    * build on it. */
-  private def minhashBandsCtes(numPerms: Int, bands: Int): String = {
-    val rows = numPerms / bands
-    val minExprs = (0 until numPerms).map { i =>
-      s"MIN((h * ${2 * i + 3} + ${i.toLong * i + 1}) % 2147483647) AS mh$i"
-    }.mkString(", ")
-    val bandSelects = (0 until bands).map { b =>
-      val cols = (0 until rows).map(r => s"mh${b * rows + r}::VARCHAR")
-      s"SELECT doc_id, $b AS band, concat_ws(',', ${cols.mkString(", ")}) AS sig FROM sigs"
-    }.mkString("\nUNION ALL\n")
-    s"""$toksCte,
-       |$shingleCte,
-       |h AS (SELECT doc_id, ${sqlHash("sh")} AS h FROM sh),
-       |sigs AS (SELECT doc_id, $minExprs FROM h GROUP BY doc_id),
-       |bands AS ($bandSelects)""".stripMargin
-  }
-
-  private def minhashOracle(numPerms: Int, bands: Int): String =
-    s"""WITH ${minhashBandsCtes(numPerms, bands)}
-       |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |FROM bands a JOIN bands b
-       |  ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-       |ORDER BY id_a, id_b""".stripMargin
-
-  /** DuckDB mirror of TextFunctions.simhash(bits): raw 60-bit md5 token
-    * hash reduced mod 2^bits, per-bit signed votes, positive bits set.
-    * Expects `toks` in scope; yields CTEs ending in sim(doc_id, simhash). */
-  private def simhashCtes(bits: Int): String =
-    s"""tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
-       |hh AS (SELECT doc_id,
-       |  ('0x'||substr(md5(tok),1,15))::BIGINT % (1::BIGINT << $bits) AS h FROM tok),
-       |votes AS (
-       |  SELECT doc_id, j, SUM(CASE WHEN (h >> CAST(j AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM hh, UNNEST(range(0, $bits)) AS u(j) GROUP BY doc_id, j),
-       |sim AS (SELECT doc_id,
-       |  CAST(SUM(CASE WHEN v > 0 THEN (1::BIGINT << CAST(j AS INT)) ELSE 0 END) AS BIGINT) AS simhash
-       |  FROM votes GROUP BY doc_id)""".stripMargin
-
-  /** DuckDB mirror of Similarity.hyperplaneBucket: the dot products are
-    * explicit left-associated sums so double rounding matches FloatVecDot's
-    * index-ordered accumulation bit-for-bit (the >= 0 sign test must agree
-    * exactly between engines). */
-  private def hyperBucketSql(vecExpr: String, table: Int, nPlanes: Int,
-      dim: Int): String =
-    (0 until nPlanes).map { j =>
-      val plane = Similarity.planeVector(table * 1000 + j, dim)
-      val dot = plane.zipWithIndex.map { case (p, i) =>
-        s"CAST($vecExpr[${i + 1}] AS DOUBLE)*($p)" }.mkString(" + ")
-      s"(CASE WHEN $dot >= 0.0 THEN ${1L << j} ELSE 0 END)"
-    }.mkString("\n + ")
-
-  /** (vec_id, t, bkt) rows for every embedding across `tables` LSH tables —
-    * the DuckDB side of the multi-table hyperplane bucketing used by
-    * Similarity.lshTopK and Dedup.embeddingNearDup. */
-  private def lshBucketsCte(tables: Int, nPlanes: Int, dim: Int): String =
-    (0 until tables).map { t =>
-      s"SELECT vec_id, $t AS t, ${hyperBucketSql("embedding", t, nPlanes, dim)} AS bkt FROM embeddings"
-    }.mkString("\nUNION ALL\n")
-
-  /** DuckDB double-precision cosine between two float lists, via unnested
-    * positions (cosine gaps dwarf float-association noise; ties broken by
-    * id in every ranked query). */
-  private def cosineCtes(pairsFrom: String): String =
-    s"""d AS (SELECT ia, ib,
-       |  SUM(CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS dot,
-       |  SUM(CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)) AS na,
-       |  SUM(CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS nb
-       |  FROM $pairsFrom, UNNEST(range(1, len(ea)+1)) AS u(i)
-       |  GROUP BY ia, ib)""".stripMargin
-
-  /** Flat (left-associated, ascending-index) dot product against literal
-    * constants — the exact FP evaluation order of FloatVecDot. */
-  // the data-card replay: q25's langId argmax per doc -> per-source
-  // top-lang window; quantile_cont for the exact percentile (the
-  // q226 parity); md5 distinct for the dup rate — shared by q259
-  // (one-shot) and q263 (sidecar-derived on the union)
-  private lazy val corpusReportOracle: String = {
-    val scores = TextFunctions.LangMarkers.map { case (lang, ms) =>
-      val lst = ms.map(m => s"'$m'").mkString(", ")
-      s"len(list_filter(t, x -> list_contains([$lst], x))) AS s_$lang"
-    }.mkString(",\n  ")
-    val langs = TextFunctions.LangMarkers.map(_._1)
-    val best = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-    val total = langs.map("s_" + _).mkString(" + ")
-    val cases = langs.map(l =>
-      s"WHEN ($total) > 0 AND s_$l = $best THEN '$l'").mkString("\n    ")
-    s"""WITH $toksCte,
-       |s AS (SELECT doc_id, $scores FROM toks),
-       |pl AS (
-       |  SELECT d.doc_id, d.source,
-       |    CASE $cases ELSE 'und' END AS lang
-       |  FROM documents d JOIN s ON s.doc_id = d.doc_id
-       |  WHERE d.text IS NOT NULL),
-       |lc AS (SELECT source, lang, COUNT(*) AS n
-       |  FROM pl GROUP BY source, lang),
-       |tl AS (SELECT source, lang AS top_lang, n,
-       |    row_number() OVER (PARTITION BY source
-       |      ORDER BY n DESC, lang) AS r
-       |  FROM lc),
-       |st AS (
-       |  SELECT source, COUNT(*) AS n_docs,
-       |    COUNT(CASE WHEN text IS NULL OR text = '' THEN 1 END)
-       |      AS n_empty,
-       |    COALESCE(CAST(SUM(len(text)) AS BIGINT), 0) AS total_chars,
-       |    quantile_cont(len(text), 0.25) AS chars_p25,
-       |    quantile_cont(len(text), 0.5) AS chars_p50,
-       |    quantile_cont(len(text), 0.75) AS chars_p75,
-       |    COUNT(DISTINCT md5(text)) AS distinct_texts
-       |  FROM documents GROUP BY source)
-       |SELECT st.source, st.n_docs, st.n_empty, st.total_chars,
-       |  CAST(CAST(st.chars_p25 AS DECIMAL(18,6)) AS DOUBLE) AS chars_p25,
-       |  CAST(CAST(st.chars_p50 AS DECIMAL(18,6)) AS DOUBLE) AS chars_p50,
-       |  CAST(CAST(st.chars_p75 AS DECIMAL(18,6)) AS DOUBLE) AS chars_p75,
-       |  st.distinct_texts,
-       |  CAST(CAST(1.0 - CAST(st.distinct_texts AS DOUBLE) / st.n_docs
-       |    AS DECIMAL(18,9)) AS DOUBLE) AS dup_rate,
-       |  tl.top_lang,
-       |  CAST(CAST(CAST(tl.n AS DOUBLE) / st.n_docs
-       |    AS DECIMAL(18,9)) AS DOUBLE) AS top_lang_share
-       |FROM st LEFT JOIN tl
-       |  ON tl.source IS NOT DISTINCT FROM st.source AND tl.r = 1
-       |ORDER BY st.source""".stripMargin
-  }
-
-  // the IVF replay: brute assignment, probes, cell candidates, exact
-  // cosine re-rank — shared by q74 (recompute) and q261 (saved index)
-  private lazy val ivfOracle: String =
-    s"""WITH cents AS (
-       |  SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 16),
-       |pc AS (
-       |  SELECT e.vec_id AS ia, c.cid AS ib, e.embedding AS ea, c.cv AS eb
-       |  FROM embeddings e CROSS JOIN cents c),
-       |dc AS (SELECT ia, ib,
-       |  SUM(CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS dot,
-       |  SUM(CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)) AS na,
-       |  SUM(CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS nb
-       |  FROM pc, UNNEST(range(1, len(ea)+1)) AS u(i)
-       |  GROUP BY ia, ib),
-       |asgn AS (SELECT ia, ib AS cell,
-       |  row_number() OVER (PARTITION BY ia
-       |    ORDER BY dot/(sqrt(na)*sqrt(nb)) DESC, ib ASC) AS rn FROM dc),
-       |cellof AS (SELECT ia AS nid, cell FROM asgn WHERE rn = 1),
-       |probes AS (SELECT ia AS qid, cell FROM asgn WHERE ia < 8 AND rn <= 4),
-       |cand AS (
-       |  SELECT p.qid AS ia, c.nid AS ib FROM probes p
-       |  JOIN cellof c ON c.cell = p.cell AND c.nid <> p.qid),
-       |p AS (
-       |  SELECT ia, ib, x.embedding AS ea, y.embedding AS eb FROM cand
-       |  JOIN embeddings x ON x.vec_id = ia
-       |  JOIN embeddings y ON y.vec_id = ib),
-       |${cosineCtes("p")},
-       |r AS (
-       |  SELECT ia AS query_id, ib AS neighbor_id,
-       |    CAST(row_number() OVER (
-       |      PARTITION BY ia ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib) AS INT) AS rank
-       |  FROM d)
-       |SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 10
-       |ORDER BY query_id, rank""".stripMargin
-
-  private def litDotSql(vecExpr: String, v: Seq[Double]): String =
-    v.zipWithIndex.map { case (p, i) =>
-      s"CAST($vecExpr[${i + 1}] AS DOUBLE)*($p)" }.mkString(" + ")
-  private def selfDotSql(vecExpr: String, dim: Int): String =
-    (0 until dim).map { i =>
-      s"CAST($vecExpr[${i + 1}] AS DOUBLE)*CAST($vecExpr[${i + 1}] AS DOUBLE)"
-    }.mkString(" + ")
-
-  /** One unrolled Lloyd iteration for the q89 oracle: assignment by cosine
-    * against `prev` centroids (id tie-break), decimal-exact component
-    * means, empty cells keep the previous centroid. Emits CTEs named
-    * `p$i s$i a$i m$i c$i`. */
-  private def kmeansIterCtes(i: Int, prev: String, data: String = "data",
-      pfx: String = ""): String =
-    s"""${pfx}p$i AS (SELECT d.vec_id, d.v, pc.cid, pc.c FROM $data d CROSS JOIN $prev pc),
-       |${pfx}s$i AS (SELECT vec_id, cid,
-       |  SUM(v[u.i]*c[u.i]) AS dot, SUM(v[u.i]*v[u.i]) AS nv,
-       |  SUM(c[u.i]*c[u.i]) AS nc
-       |  FROM ${pfx}p$i, UNNEST(range(1, len(v)+1)) u(i) GROUP BY vec_id, cid),
-       |${pfx}a$i AS (SELECT vec_id, cid FROM (
-       |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY CASE WHEN nv = 0 OR nc = 0 THEN 0.0
-       |                  ELSE dot / (sqrt(nv) * sqrt(nc)) END DESC, cid) AS rn
-       |  FROM ${pfx}s$i) WHERE rn = 1),
-       |${pfx}m$i AS (SELECT ${pfx}a$i.cid, u.i AS pos,
-       |  CAST(SUM(CAST(d.v[u.i] AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS m
-       |  FROM ${pfx}a$i JOIN $data d USING (vec_id),
-       |    UNNEST(range(1, len(d.v)+1)) u(i)
-       |  GROUP BY ${pfx}a$i.cid, u.i),
-       |${pfx}c$i AS (SELECT pc.cid, COALESCE(n.c, pc.c) AS c FROM $prev pc
-       |  LEFT JOIN (SELECT cid, list(m ORDER BY pos) AS c FROM ${pfx}m$i
-       |             GROUP BY cid) n USING (cid))""".stripMargin
-
-  /** Oracle for q153: PQ with m=2 subspaces — per-subspace spherical
-    * k-means (the SAME unrolled Lloyd CTEs as q89), assignment of every
-    * sub-vector to its final codebook entry, and the ADC score as the sum
-    * of per-subspace centroid·query-slice dots. */
-  private def pqOracleSql: String = {
-    val (m, sub, kc) = (2, 32, 4)
-    val subs = (0 until m).map { j =>
-      val d = s"data${j + 1}"
-      val p = s"k${j + 1}"
-      val seed =
-        s"""${p}c0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS c
-           |  FROM $d ORDER BY vec_id LIMIT $kc)""".stripMargin
-      val iters = Seq(
-        kmeansIterCtes(1, s"${p}c0", d, p),
-        kmeansIterCtes(2, s"${p}c1", d, p),
-        // extra unrolled block only for its assignment CTE ${p}a3:
-        // codes against the FINAL centroids (m3/c3 are never referenced)
-        kmeansIterCtes(3, s"${p}c2", d, p))
-      s"""$d AS (SELECT vec_id, v[${j * sub + 1}:${(j + 1) * sub}] AS v
-         |  FROM data),
-         |$seed,
-         |${iters.mkString(",\n")}""".stripMargin
-    }
-    val dots = (0 until m).map { j =>
-      litDotSql(s"c${j + 1}.c", q75Vec.slice(j * sub, (j + 1) * sub))
-    }
-    s"""WITH data AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |${subs.mkString(",\n")},
-       |sel AS (SELECT a1.vec_id,
-       |    (${dots(0)}) + (${dots(1)}) AS score
-       |  FROM k1a3 a1 JOIN k1c2 c1 ON a1.cid = c1.cid
-       |  JOIN k2a3 a2 ON a2.vec_id = a1.vec_id
-       |  JOIN k2c2 c2 ON a2.cid = c2.cid),
-       |top AS (SELECT vec_id, score FROM sel
-       |  ORDER BY score DESC, vec_id LIMIT 10)
-       |SELECT vec_id, CAST(CAST(score AS DECIMAL(18,6)) AS DOUBLE) AS score
-       |FROM top ORDER BY vec_id""".stripMargin
-  }
-
-  /** The q242 bitext-LSH replay, shared verbatim by q251: the store
-    * path must produce EXACTLY what the recompute path produces, so
-    * the two queries check against one oracle text — bucket replay
-    * via bit-exact sign tests, candidate equi-join, then the q240
-    * margin windows over candidates only. */
-  private def bitextLshOracle: String = {
-    def buckets(cte: String): String =
-      (0 until 8).map { t =>
-        s"SELECT vec_id, $t AS t, " +
-          s"${hyperBucketSql("embedding", t, 8, 64)} AS bkt FROM $cte"
-      }.mkString("\nUNION ALL\n")
-    s"""WITH a AS (SELECT vec_id, embedding FROM embeddings
-       |  WHERE vec_id < 40),
-       |b AS (SELECT vec_id, embedding FROM embeddings
-       |  WHERE vec_id >= 40 AND vec_id < 80),
-       |ba AS (${buckets("a")}),
-       |bb AS (${buckets("b")}),
-       |cand AS (SELECT DISTINCT ba.vec_id AS ia, bb.vec_id AS ib
-       |  FROM ba JOIN bb ON ba.t = bb.t AND ba.bkt = bb.bkt),
-       |p AS (SELECT cand.ia, cand.ib,
-       |  a.embedding AS ea, b.embedding AS eb
-       |  FROM cand JOIN a ON a.vec_id = cand.ia
-       |  JOIN b ON b.vec_id = cand.ib),
-       |${cosineCtes("p")},
-       |s AS (SELECT ia AS a_id, ib AS b_id,
-       |  dot / (sqrt(na) * sqrt(nb)) AS cos FROM d),
-       |r AS (SELECT a_id, b_id, cos,
-       |  row_number() OVER (PARTITION BY a_id
-       |    ORDER BY cos DESC, b_id) AS rab,
-       |  row_number() OVER (PARTITION BY b_id
-       |    ORDER BY cos DESC, a_id) AS rba FROM s),
-       |av AS (SELECT a_id, b_id, cos, rab, rba,
-       |  avg(CASE WHEN rab <= 4 THEN cos END)
-       |    OVER (PARTITION BY a_id) AS avga,
-       |  avg(CASE WHEN rba <= 4 THEN cos END)
-       |    OVER (PARTITION BY b_id) AS avgb FROM r),
-       |m AS (SELECT a_id, b_id, cos,
-       |  cos / (avga / 2 + avgb / 2) AS margin
-       |  FROM av WHERE rab = 1 AND rba = 1)
-       |SELECT a_id, b_id,
-       |  CAST(CAST(cos AS DECIMAL(18,9)) AS DOUBLE) AS cos,
-       |  CAST(CAST(margin AS DECIMAL(18,9)) AS DOUBLE) AS margin
-       |FROM m WHERE margin >= 1.0 ORDER BY a_id""".stripMargin
-  }
-
-  /** The q225 keep-best replay (recursive-CTE components + per-cluster
-    * window), shared verbatim by q252: the incremental resolve must
-    * produce EXACTLY the one-shot resolution of the full corpus. */
-  private def keepBestOracle: String =
-    s"""WITH RECURSIVE p AS (
-       |${minhashOracle(12, 4)}
-       |),
-       |und AS (SELECT id_a AS a, id_b AS b FROM p
-       |        UNION SELECT id_b, id_a FROM p),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM und
-       |  UNION
-       |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-       |comp AS (SELECT a AS id, LEAST(a, MIN(b)) AS component
-       |         FROM reach GROUP BY a),
-       |lab AS (
-       |  SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component,
-       |    d.n_chars
-       |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
-       |r AS (
-       |  SELECT doc_id, component,
-       |    count(*) OVER (PARTITION BY component) AS cluster_size,
-       |    row_number() OVER (PARTITION BY component
-       |      ORDER BY n_chars DESC, doc_id) AS rn
-       |  FROM lab)
-       |SELECT doc_id, component, cluster_size FROM r WHERE rn = 1
-       |ORDER BY doc_id""".stripMargin
-
-  /** The q249 whole-preset replay (pinned-plane buckets, exact-cosine
-    * pairs, recursive CC, keep-best window, brute decon, hash-sample
-    * arithmetic), shared verbatim by q253: the incremental chain must
-    * produce EXACTLY the one-shot preset's output on the union. */
-  private def embedCurateOracle: String =
-    s"""WITH RECURSIVE raw AS (
-         |${lshBucketsCte(4, 8, 64)}),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS ia, b.vec_id AS ib
-         |  FROM raw a JOIN raw b
-         |    ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id < b.vec_id),
-         |pp AS (
-         |  SELECT ia, ib, x.embedding AS ea, y.embedding AS eb FROM cand
-         |  JOIN embeddings x ON x.vec_id = ia
-         |  JOIN embeddings y ON y.vec_id = ib),
-         |${cosineCtes("pp")},
-         |p AS (SELECT ia AS id_a, ib AS id_b FROM d
-         |  WHERE dot / (sqrt(na) * sqrt(nb)) >= 0.3),
-         |und AS (SELECT id_a AS a, id_b AS b FROM p
-         |        UNION SELECT id_b, id_a FROM p),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |comp AS (SELECT a AS id, LEAST(a, MIN(b)) AS component
-         |         FROM reach GROUP BY a),
-         |lab AS (
-         |  SELECT e.vec_id,
-         |    COALESCE(c.component, e.vec_id) AS component,
-         |    (e.vec_id * 37) % 101 AS q
-         |  FROM embeddings e LEFT JOIN comp c ON c.id = e.vec_id),
-         |r AS (
-         |  SELECT vec_id, component,
-         |    count(*) OVER (PARTITION BY component) AS cluster_size,
-         |    row_number() OVER (PARTITION BY component
-         |      ORDER BY q DESC, vec_id) AS rn
-         |  FROM lab),
-         |kept AS (SELECT vec_id, component, cluster_size FROM r
-         |  WHERE rn = 1),
-         |bp AS (
-         |  SELECT c.vec_id AS ia, b.vec_id AS ib,
-         |    c.embedding AS ea, b.embedding AS eb
-         |  FROM embeddings c, embeddings b WHERE b.vec_id < 8),
-         |d2 AS (SELECT ia, ib,
-         |  SUM(CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS dot,
-         |  SUM(CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)) AS na,
-         |  SUM(CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS nb
-         |  FROM bp, UNNEST(range(1, len(ea) + 1)) AS u(i)
-         |  GROUP BY ia, ib),
-         |flag AS (SELECT DISTINCT ia AS vec_id FROM d2
-         |  WHERE dot / (sqrt(na) * sqrt(nb)) >= 0.5)
-         |SELECT k.vec_id, k.component, k.cluster_size FROM kept k
-         |WHERE k.vec_id NOT IN (SELECT vec_id FROM flag)
-         |  AND ('0x' || substr(md5(k.vec_id::VARCHAR), 1, 15))::BIGINT
-         |      % 1000000 < 800000
-         |ORDER BY k.vec_id""".stripMargin
-
-  /** The q243 crawl-preset replay (URL chain, HTML chain, first-fetch
-    * window, marker scores, quality formula, content-dedup window),
-    * shared verbatim by q254: the incremental chain must equal the
-    * one-shot preset on the union. */
-  private def webCurateOracle: String = {
-      val scores = TextFunctions.LangMarkers.map { case (lang, ms) =>
-        val lst = ms.map(m => s"'$m'").mkString(", ")
-        s"len(list_filter(t, x -> list_contains([$lst], x))) AS s_$lang"
-      }.mkString(",\n  ")
-      val langs = TextFunctions.LangMarkers.map(_._1)
-      val best = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-      val total = langs.map("s_" + _).mkString(" + ")
-      val cases = langs.map(l =>
-        s"WHEN ($total) > 0 AND s_$l = $best THEN '$l'").mkString("\n    ")
-      val stop = TextFunctions.Stopwords.map(m => s"'$m'").mkString(", ")
-      s"""WITH d0 AS (SELECT doc_id, text,
-         |  CASE doc_id % 8
-         |    WHEN 0 THEN 'https://Example.com/p' || (doc_id // 8)
-         |      || '/b?utm_source=x&id=7&z=2'
-         |    WHEN 1 THEN 'https://example.com/p' || (doc_id // 8)
-         |      || '/b?z=2&id=7'
-         |    WHEN 2 THEN 'https://example.com:443/p' || (doc_id // 8)
-         |      || '/b?id=7&z=2#frag'
-         |    WHEN 3 THEN 'https://www.example.com/p' || (doc_id // 8)
-         |      || '/b/?id=7&z=2'
-         |    WHEN 4 THEN 'https://example.com/p' || (doc_id // 8)
-         |      || '/b?jsessionid=A9F3&id=7&z=2'
-         |    WHEN 5 THEN 'https://example.com/p' || (doc_id // 8)
-         |      || '/b?id=8&z=2'
-         |    WHEN 6 THEN 'https://example.com/p' || (doc_id // 8)
-         |      || '/b?ref=main&id=7&z=2'
-         |    ELSE 'https://other.org/p' || (doc_id // 8) || '/c'
-         |  END AS url,
-         |  '<html><head><style>p{color:red}</style>' ||
-         |  '<script type="text/javascript">var x=1 && 2;</script>' ||
-         |  '</head><body><h1>Doc ' || doc_id ||
-         |  '</h1><!-- hidden --><p>' || text ||
-         |  ' &amp; more &lt;tags&gt;&nbsp;&#39;quoted&#39;' ||
-         |  '</p></body></html>' AS html
-         |  FROM documents WHERE doc_id < 360),
-         |u1 AS (SELECT doc_id, html,
-         |  regexp_replace(url, '#.*', '') AS u FROM d0),
-         |usp AS (SELECT doc_id, html,
-         |  regexp_extract(u, '^([^?]*)', 1) AS p,
-         |  regexp_replace(u, '^[^?]*', '') AS q FROM u1),
-         |u2a AS (SELECT doc_id, html, p, regexp_replace(regexp_replace(
-         |  regexp_replace(regexp_replace(q,
-         |    '([?&])(?i:utm_[a-z0-9_]+|fbclid|gclid|jsessionid|phpsessid)=[^&]*',
-         |    '\\1', 'g'), '&&+', '&', 'g'), '^\\?&', '?'), '[?&]$$', '')
-         |  AS q FROM usp),
-         |u2 AS (SELECT doc_id, html, p,
-         |  CASE WHEN qb = '' THEN '' ELSE '?' ||
-         |    array_to_string(list_sort(string_split(qb, '&')), '&') END
-         |  AS q
-         |  FROM (SELECT doc_id, html, p,
-         |        regexp_replace(q, '^\\?', '') AS qb FROM u2a)),
-         |u3 AS (SELECT doc_id, html,
-         |  regexp_replace(p, '/+$$', '') AS p, q FROM u2),
-         |u4 AS (SELECT doc_id, html,
-         |  lower(regexp_extract(p,
-         |    '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1)) ||
-         |  regexp_replace(p, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*', '')
-         |  AS p, q FROM u3),
-         |u5 AS (SELECT doc_id, html, regexp_replace(regexp_replace(p,
-         |  '^(http://[^/?#]*):80([/?#]|$$)', '\\1\\2'),
-         |  '^(https://[^/?#]*):443([/?#]|$$)', '\\1\\2') AS p, q FROM u4),
-         |u6 AS (SELECT doc_id, html,
-         |  regexp_replace(p, '^(https?://)www\\.', '\\1') || q AS canon
-         |  FROM u5),
-         |h1 AS (SELECT doc_id, canon, regexp_replace(html,
-         |  '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS c FROM u6),
-         |h2 AS (SELECT doc_id, canon, regexp_replace(c,
-         |  '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS c FROM h1),
-         |h3 AS (SELECT doc_id, canon, regexp_replace(c,
-         |  '(?s)<!--.*?-->', ' ', 'g') AS c FROM h2),
-         |h4 AS (SELECT doc_id, canon, regexp_replace(c,
-         |  '<[^>]*>', ' ', 'g') AS c FROM h3),
-         |h5 AS (SELECT doc_id, canon, regexp_replace(regexp_replace(
-         |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-         |  c, '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'),
-         |  '&#39;', CHR(39), 'g'), '&nbsp;', ' ', 'g'), '&amp;', '&',
-         |  'g') AS c FROM h4),
-         |ex AS (SELECT doc_id, canon,
-         |  trim(regexp_replace(c, '\\s+', ' ', 'g')) AS ct FROM h5),
-         |ud AS (SELECT doc_id, canon, ct, row_number() OVER (
-         |  PARTITION BY canon ORDER BY doc_id) AS urn FROM ex),
-         |tk AS (SELECT doc_id, canon, ct,
-         |  list_filter(string_split(ct, ' '), x -> x <> '') AS t
-         |  FROM ud WHERE urn = 1),
-         |sc AS (SELECT doc_id, canon, ct, t, $scores FROM tk),
-         |lg AS (SELECT doc_id, canon, ct, t,
-         |  CASE $cases ELSE 'und' END AS predicted FROM sc),
-         |ql AS (SELECT doc_id, canon, ct, predicted,
-         |  CAST(len(list_filter(t, x -> list_contains([$stop], x)))
-         |    AS DOUBLE) / greatest(CAST(len(t) AS DOUBLE), 1.0) * 0.4
-         |  + CAST(length(regexp_replace(ct, '[^A-Za-z]', '', 'g'))
-         |    AS DOUBLE) / greatest(CAST(length(ct) AS DOUBLE), 1.0)
-         |    * 0.4
-         |  + least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) * 0.2
-         |  AS quality FROM lg),
-         |g AS (SELECT * FROM ql
-         |  WHERE predicted = 'en' AND quality >= 0.3),
-         |dd AS (SELECT *, row_number() OVER (
-         |  PARTITION BY md5(ct) ORDER BY doc_id) AS rn FROM g)
-         |SELECT doc_id, canon AS url_canonical,
-         |  predicted AS predicted_lang, quality
-         |FROM dd WHERE rn = 1 ORDER BY doc_id""".stripMargin
-    }
-
-  def oracleSql: Map[String, String] = Map(
-
-    "q104_merge_pipeline" ->
-      """WITH g AS (
-        |  SELECT o_orderstatus AS status, COUNT(*) AS cnt
-        |  FROM orders GROUP BY o_orderstatus),
-        |seed AS (SELECT * FROM (VALUES
-        |  ('F', CAST(1000 AS BIGINT), CAST(2 AS BIGINT)),
-        |  ('Z', CAST(5 AS BIGINT), CAST(1 AS BIGINT))) s(status, cnt, gen))
-        |SELECT COALESCE(s.status, g.status) AS status,
-        |  CASE WHEN s.status IS NOT NULL AND g.status IS NOT NULL
-        |      THEN s.cnt + g.cnt
-        |    WHEN s.status IS NOT NULL THEN s.cnt ELSE g.cnt END AS cnt,
-        |  CASE WHEN s.status IS NOT NULL AND g.status IS NOT NULL
-        |      THEN s.gen + 1
-        |    WHEN s.status IS NOT NULL THEN s.gen
-        |    ELSE CAST(NULL AS BIGINT) END AS gen
-        |FROM seed s FULL OUTER JOIN g ON g.status = s.status
-        |ORDER BY status""".stripMargin,
-
-    "q105_densify_month" ->
-      """WITH g AS (
-        |  SELECT date_trunc('month', o_orderdate) AS month,
-        |    COUNT(*) AS n
-        |  FROM orders WHERE month(o_orderdate) IN (1, 4, 7)
-        |  GROUP BY 1),
-        |grid AS (
-        |  SELECT unnest(generate_series(
-        |    (SELECT min(month) FROM g), (SELECT max(month) FROM g),
-        |    INTERVAL 1 MONTH)) AS month)
-        |SELECT grid.month AS month, g.n AS n
-        |FROM grid LEFT JOIN g USING (month)
-        |ORDER BY month""".stripMargin,
-
-    "q106_range_window_unit" ->
-      """SELECT o_orderkey, o_custkey,
-        |  SUM(CAST(round(o_totalprice * 100, 0) AS BIGINT)) OVER
-        |    (PARTITION BY o_custkey ORDER BY o_orderdate
-        |     RANGE BETWEEN INTERVAL 90 DAY PRECEDING AND CURRENT ROW)
-        |    / 100.0 AS rsum
-        |FROM orders WHERE o_orderkey <= 5000
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q107_datetrunc_bins" ->
-      """WITH b AS (
-        |  SELECT
-        |    TIMESTAMP '2000-01-01' + INTERVAL (CAST(
-        |      floor(((year(o_orderdate) - 2000) * 12
-        |             + month(o_orderdate) - 1) / 2.0) * 2 AS INT))
-        |      MONTH AS bin,
-        |    date_trunc('week', o_orderdate + INTERVAL 1 DAY)
-        |      - INTERVAL 1 DAY AS wk,
-        |    o_orderdate + INTERVAL 3 MONTH AS due
-        |  FROM orders WHERE o_orderkey <= 20000)
-        |SELECT bin, COUNT(*) AS n, max(wk) AS max_wk, min(due) AS min_due
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-
-    "q103_window_stats" ->
-      """WITH b AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice,
-        |    CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-        |  FROM orders WHERE o_orderkey <= 3000),
-        |w AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CAST(COUNT(*) OVER win AS DOUBLE) AS n,
-        |    CAST(SUM(cents) OVER win AS DOUBLE) AS sx,
-        |    CAST(SUM(cents * cents) OVER win AS DOUBLE) AS sxx,
-        |    CAST(SUM(cents * o_orderkey) OVER win AS DOUBLE) AS sxy,
-        |    CAST(SUM(o_orderkey) OVER win AS DOUBLE) AS sy,
-        |    median(o_totalprice) OVER win AS md
-        |  FROM b WINDOW win AS (PARTITION BY o_custkey))
-        |SELECT o_orderkey, o_custkey,
-        |  sqrt(greatest((sxx - sx * sx / n) / n, 0.0)) / 100 AS sp,
-        |  CASE WHEN n > 1 THEN
-        |    sqrt(greatest((sxx - sx * sx / n) / (n - 1), 0.0)) / 100
-        |  END AS ss,
-        |  (sxy - sx * sy / n) / n / 100 AS cp,
-        |  floor(md * 1e2 + 0.5) / 1e2 AS md,
-        |  true AS acc_ok
-        |FROM w ORDER BY o_orderkey""".stripMargin,
-
-    "q102_root_roundtrip" ->
-      """SELECT o_orderstatus AS status, o_orderkey AS ok,
-        |  o_totalprice AS tp
-        |FROM orders WHERE o_orderkey <= 100 ORDER BY ok""".stripMargin,
-
-    "q100_window_timeseries" ->
-      """WITH b AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice END AS v
-        |  FROM orders WHERE o_orderkey <= 3000),
-        |w AS (
-        |  SELECT o_orderkey, o_custkey, o_totalprice, v,
-        |    last_value(v IGNORE NULLS) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lo,
-        |    last_value(v IGNORE NULLS) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN o_orderkey END
-        |      IGNORE NULLS) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pk,
-        |    first_value(v IGNORE NULLS) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN o_orderkey END
-        |      IGNORE NULLS) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nk,
-        |    first_value(o_totalprice) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS fv,
-        |    last_value(o_totalprice) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS lv,
-        |    first_value(o_orderkey) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS fk,
-        |    last_value(o_orderkey) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS lk,
-        |    (o_totalprice + lag(o_totalprice) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey)) / 2 *
-        |      (o_orderkey - lag(o_orderkey) OVER
-        |        (PARTITION BY o_custkey ORDER BY o_orderkey)) AS seg,
-        |    array_agg(CAST(o_totalprice AS DOUBLE)) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-        |  FROM b),
-        |f AS (
-        |  SELECT o_orderkey, o_custkey, lo,
-        |    CASE WHEN v IS NOT NULL THEN v
-        |         WHEN pv IS NULL OR nv IS NULL THEN NULL
-        |         WHEN nk = pk THEN pv
-        |         ELSE pv + (nv - pv) * (o_orderkey - pk) / (nk - pk)
-        |    END AS lf,
-        |    (lv - fv) / (lk - fk) AS dv,
-        |    SUM(COALESCE(seg, 0)) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderkey
-        |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ig,
-        |    list_reduce(pre, (a, x) -> x * 0.5 + a * 0.5) AS ema
-        |  FROM w)
-        |SELECT o_orderkey, o_custkey,
-        |  floor(lo * 1e6 + 0.5) / 1e6 AS lo,
-        |  floor(lf * 1e6 + 0.5) / 1e6 AS lf,
-        |  floor(dv * 1e6 + 0.5) / 1e6 AS dv,
-        |  floor(ig * 1e6 + 0.5) / 1e6 AS ig,
-        |  floor(ema * 1e6 + 0.5) / 1e6 AS ema
-        |FROM f ORDER BY o_orderkey""".stripMargin,
-
-    "q101_scalar_expr" ->
-      """SELECT p_partkey,
-        |  floor(ln(p_retailprice / 1000.0 +
-        |    sqrt(p_retailprice / 1000.0 * (p_retailprice / 1000.0) + 1.0))
-        |    * 1e6 + 0.5) / 1e6 AS ash,
-        |  floor(ln(p_size + 1.0 +
-        |    sqrt((p_size + 1.0) * (p_size + 1.0) - 1.0)) * 1e6 + 0.5) / 1e6
-        |    AS ach,
-        |  floor(0.5 * ln((1.0 + (p_size % 9) / 10.0) /
-        |    (1.0 - (p_size % 9) / 10.0)) * 1e6 + 0.5) / 1e6 AS ath,
-        |  CASE WHEN p_type = p_brand THEN 0
-        |       WHEN p_type < p_brand THEN -1 ELSE 1 END AS c1,
-        |  0 AS sc,
-        |  substr(p_name, 3, 5) AS sb,
-        |  CAST(CAST(p_retailprice AS DECIMAL(38,10)) AS DOUBLE) AS dec,
-        |  true AS ia,
-        |  false AS ns,
-        |  CAST(strlen('{"pk":' || p_partkey || '}') AS BIGINT) AS sz
-        |FROM part WHERE p_partkey <= 500 ORDER BY p_partkey""".stripMargin,
-
-    "q99_bucket_auto_granularity" ->
-      s"""WITH b AS (SELECT o_totalprice AS v FROM orders),
-         |q AS (SELECT v,
-         |  ${graft.functions.Granularity.sqlCase("v", "R10")} AS qv
-         |  FROM b),
-         |freq AS (SELECT qv, COUNT(*) AS f FROM q GROUP BY qv),
-         |wcum AS (SELECT qv, f,
-         |  SUM(f) OVER (ORDER BY qv) - f AS cum,
-         |  SUM(f) OVER () AS n FROM freq),
-         |asg AS (SELECT qv, f,
-         |  CAST(least(floor(cum * 6 / n), 5) AS INT) AS bucket FROM wcum),
-         |g AS (SELECT bucket, MIN(qv) AS b_min, MAX(qv) AS b_max,
-         |  CAST(SUM(f) AS BIGINT) AS count FROM asg GROUP BY bucket)
-         |SELECT b_min, b_max, count FROM g ORDER BY b_min""".stripMargin,
-
-    "q141_merge_pipeline_stages" ->
-      """WITH c AS (
-        |  SELECT o_orderstatus AS status, COUNT(*) AS cnt
-        |  FROM orders GROUP BY 1)
-        |SELECT 'unset' AS mode, status,
-        |       CASE WHEN status = 'F' THEN cnt + 5 ELSE cnt END AS cnt,
-        |       CAST(NULL AS VARCHAR) AS note
-        |FROM c
-        |UNION ALL SELECT 'unset', 'Z', 99, 'seed'
-        |UNION ALL
-        |SELECT 'repl', status,
-        |       CASE WHEN status = 'F' THEN cnt + 5 ELSE cnt END,
-        |       CASE WHEN status = 'F' THEN 'seed+' END
-        |FROM c
-        |UNION ALL SELECT 'repl', 'Z', 99, 'seed'
-        |ORDER BY mode, status""".stripMargin,
-
-    "q98_merge_modes" ->
-      """WITH g AS (
-        |  SELECT o_orderstatus AS status, COUNT(*) AS cnt
-        |  FROM orders GROUP BY o_orderstatus),
-        |seed AS (SELECT * FROM (VALUES
-        |  ('F', CAST(0 AS BIGINT), 'seed'),
-        |  ('Z', CAST(99 AS BIGINT), 'seed')) s(status, cnt, src)),
-        |m AS (
-        |  SELECT COALESCE(g.status, s.status) AS status,
-        |    CASE WHEN g.status IS NOT NULL THEN g.cnt ELSE s.cnt END AS cnt,
-        |    s.src AS src
-        |  FROM seed s FULL OUTER JOIN g ON g.status = s.status),
-        |k AS (
-        |  SELECT 'F' AS status, CAST(0 AS BIGINT) AS cnt
-        |  UNION ALL
-        |  SELECT status, cnt FROM g WHERE status <> 'F')
-        |SELECT 'merge' AS mode, status, cnt, src FROM m
-        |UNION ALL
-        |SELECT 'keep' AS mode, status, cnt, NULL AS src FROM k
-        |ORDER BY mode, status""".stripMargin,
-
-    "q97_fill_linear" ->
-      """WITH b AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    CASE WHEN o_orderkey % 3 = 0 THEN o_totalprice END AS v
-        |  FROM orders WHERE o_orderkey <= 5000),
-        |w AS (
-        |  SELECT o_orderkey, o_custkey, v,
-        |    CAST(o_orderkey AS DOUBLE) AS key,
-        |    last_value(v IGNORE NULLS) OVER (PARTITION BY o_custkey
-        |      ORDER BY o_orderkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL
-        |        THEN CAST(o_orderkey AS DOUBLE) END IGNORE NULLS)
-        |      OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pk,
-        |    first_value(v IGNORE NULLS) OVER (PARTITION BY o_custkey
-        |      ORDER BY o_orderkey
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL
-        |        THEN CAST(o_orderkey AS DOUBLE) END IGNORE NULLS)
-        |      OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nk
-        |  FROM b)
-        |SELECT o_orderkey, o_custkey,
-        |  floor((CASE WHEN v IS NOT NULL THEN v
-        |    WHEN pv IS NULL OR nv IS NULL THEN NULL
-        |    ELSE pv + (nv - pv) * (key - pk) / (nk - pk) END)
-        |    * 1e6 + 0.5) / 1e6 AS v
-        |FROM w ORDER BY o_orderkey""".stripMargin,
-
-    "q96_trim_type" ->
-      """SELECT p_partkey,
-        |  ltrim(p_name, 'clod ') AS lt,
-        |  rtrim(p_name, 'te') AS rt,
-        |  CAST(strpos(p_name, 'widget') - 1 AS INT) AS iob,
-        |  'string' AS tname,
-        |  'int' AS tsize,
-        |  'double' AS tprice,
-        |  FALSE AS numn,
-        |  TRUE AS nums
-        |FROM part WHERE p_partkey <= 500 ORDER BY p_partkey""".stripMargin,
-
-    "q95_datediff_replace" ->
-      """SELECT o_orderkey,
-        |  datediff('month', TIMESTAMP '2024-06-15', o_orderdate) AS dm,
-        |  datediff('quarter', TIMESTAMP '2024-06-15', o_orderdate) AS dq,
-        |  datediff('year', TIMESTAMP '2024-06-15', o_orderdate) AS dy,
-        |  regexp_replace(o_orderpriority, 'E', '*') AS rp,
-        |  o_orderpriority AS rpn
-        |FROM orders WHERE o_orderkey <= 2000
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q94_gopher_quality" -> {
-      val stops = TextFunctions.Stopwords.map(s => s"'$s'").mkString(", ")
-      s"""WITH tk AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-         |  FROM documents),
-         |m AS (
-         |  SELECT doc_id, len(t) AS nw,
-         |    CASE WHEN len(t) > 0 THEN
-         |      CAST(list_sum(list_transform(t, w -> strlen(w))) AS DOUBLE)
-         |        / len(t) ELSE 0.0 END AS meanlen,
-         |    CASE WHEN len(t) > 0 THEN
-         |      CAST(len(list_filter(t, w -> regexp_matches(w, '[A-Za-z]')))
-         |        AS DOUBLE) / len(t) ELSE 0.0 END AS alpharatio,
-         |    len(list_intersect(t, [$stops])) AS stophits
-         |  FROM tk)
-         |SELECT doc_id,
-         |  nw >= 50 AND nw <= 100000 AS flag_word_count,
-         |  meanlen >= 3.0 AND meanlen <= 10.0 AS flag_mean_word_len,
-         |  alpharatio > 0.8 AS flag_alpha_ratio,
-         |  stophits >= 2 AS flag_stopwords,
-         |  (nw >= 50 AND nw <= 100000) AND (meanlen >= 3.0 AND meanlen <= 10.0)
-         |    AND alpharatio > 0.8 AND stophits >= 2 AS keep
-         |FROM m ORDER BY doc_id""".stripMargin
-    },
-
-    "q93_cluster_split" ->
-      s"""WITH RECURSIVE p AS (
-         |${minhashOracle(12, 4)}
-         |),
-         |und AS (SELECT id_a AS a, id_b AS b FROM p
-         |        UNION SELECT id_b, id_a FROM p),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-         |comp AS (SELECT a AS id, LEAST(a, MIN(b)) AS component
-         |         FROM reach GROUP BY a),
-         |rep AS (SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS r
-         |        FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
-         |SELECT doc_id,
-         |  CASE WHEN ('0x'||substr(md5(r::VARCHAR || 'split'),1,15))::BIGINT
-         |         % 1000000 < 300000
-         |       THEN 'test' ELSE 'train' END AS side
-         |FROM rep ORDER BY doc_id""".stripMargin,
-
-    "q91_text_search" ->
-      """WITH tk AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents)
-        |SELECT doc_id, lang FROM tk
-        |WHERE lang = 'en'
-        |  AND (list_contains(t, 'spark') OR list_contains(t, 'shuffle'))
-        |ORDER BY doc_id""".stripMargin,
-
-    "q92_prune_rare" -> {
-      s"""WITH base AS (
-         |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '')
-         |    AS t
-         |  FROM documents),
-         |toks AS (
-         |  SELECT doc_id, u.i - 1 AS pos, t[u.i] AS tok,
-         |    ${sqlHash("t[u.i]")} AS th
-         |  FROM base, UNNEST(range(1, len(t) + 1)) u(i)),
-         |freq AS (SELECT th, COUNT(*) AS freq FROM toks GROUP BY th),
-         |kept AS (
-         |  SELECT doc_id, array_to_string(list(tok ORDER BY pos), ' ')
-         |    AS pruned
-         |  FROM toks JOIN freq USING (th) WHERE freq >= 500
-         |  GROUP BY doc_id)
-         |SELECT d.doc_id, COALESCE(k.pruned, '') AS pruned
-         |FROM documents d LEFT JOIN kept k USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    "q90_window_firstn" ->
-      """WITH b AS (
-        |  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey <= 3000),
-        |w AS (
-        |  SELECT o_orderkey, o_custkey,
-        |    array_agg(o_orderkey) OVER (PARTITION BY o_custkey
-        |      ORDER BY o_orderkey
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS acc
-        |  FROM b)
-        |SELECT o_orderkey, o_custkey,
-        |  array_to_string(list_transform(acc[1:2], x -> x::VARCHAR), ',')
-        |    AS f2,
-        |  array_to_string(list_transform(
-        |    acc[greatest(len(acc) - 1, 1) : len(acc)], x -> x::VARCHAR), ',')
-        |    AS l2
-        |FROM w ORDER BY o_orderkey""".stripMargin,
-
-    "q89_kmeans" ->
-      s"""WITH data AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |c0 AS (SELECT CAST(vec_id AS BIGINT) AS cid, v AS c FROM data
-         |  ORDER BY vec_id LIMIT 8),
-         |${kmeansIterCtes(1, "c0")},
-         |${kmeansIterCtes(2, "c1")}
-         |SELECT cid AS centroid_id,
-         |  array_to_string(list_transform(c, x ->
-         |    CAST(CAST(floor(x * 1e9 + 0.5) AS BIGINT) AS VARCHAR)), ',')
-         |    AS centroid
-         |FROM c2 ORDER BY cid""".stripMargin,
-    "q01_find" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
-        |FROM lineitem
-        |WHERE l_returnflag = 'R' AND l_quantity >= 30
-        |  AND l_linestatus IN ('F', 'O')
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q02_find_id" ->
-      "SELECT * FROM orders WHERE o_orderkey = 42",
-
-    "q03_sort_limit_skip" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
-        |LIMIT 20 OFFSET 10""".stripMargin,
-
-    "q04_count" ->
-      "SELECT COUNT(*) AS cnt FROM orders WHERE o_orderstatus = 'O'",
-
-    "q05_update_set_inc" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN l_returnflag = 'A' THEN 'X' ELSE l_linestatus END AS l_linestatus,
-        |  CASE WHEN l_returnflag = 'A' THEN l_quantity + 5 ELSE l_quantity END AS l_quantity
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q06_update_rename" ->
-      """SELECT event_id,
-        |  CASE WHEN ts > TIMESTAMP '2024-01-15 00:00:00' THEN NULL ELSE ts END AS ts,
-        |  CASE WHEN ts > TIMESTAMP '2024-01-15 00:00:00' THEN ts ELSE NULL END AS timeSince
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q07_remove_all" ->
-      """SELECT l_returnflag, COUNT(*) AS cnt FROM lineitem
-        |WHERE NOT (l_quantity < 10)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q08_upsert" ->
-      """WITH updates AS (
-        |  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice * 2 AS o_totalprice,
-        |         o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderstatus = 'F'
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_custkey, o_orderstatus, o_totalprice,
-        |         o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderstatus = 'P'
-        |)
-        |SELECT o_orderkey, o_orderstatus, o_totalprice FROM (
-        |  SELECT * FROM updates
-        |  UNION ALL
-        |  SELECT * FROM orders
-        |  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM updates)
-        |) ORDER BY o_orderkey""".stripMargin,
-
-    "q09_bulk" ->
-      """WITH u AS (
-        |  SELECT p_partkey, p_name,
-        |         CASE WHEN p_size >= 40 THEN 'Brand#XL' ELSE p_brand END AS p_brand,
-        |         p_type, p_size, p_retailprice
-        |  FROM part
-        |), r AS (
-        |  SELECT * FROM u WHERE NOT (p_retailprice < 910.0)
-        |), i AS (
-        |  SELECT * FROM r
-        |  UNION ALL
-        |  SELECT p_partkey + 1000000, p_name, p_brand, p_type, p_size, p_retailprice
-        |  FROM part WHERE p_partkey <= 3
-        |)
-        |SELECT p_partkey, p_brand, p_size FROM i ORDER BY p_partkey""".stripMargin,
-
-    "q10_semijoin" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem WHERE l_quantity > 45)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q11_pipeline_group" ->
-      """SELECT o_orderstatus AS _id, CAST(COUNT(*) AS BIGINT) AS n,
-        |       MAX(o_totalprice) AS maxp, MIN(o_totalprice) AS minp
-        |FROM orders WHERE o_totalprice > 1000.0
-        |GROUP BY o_orderstatus ORDER BY _id""".stripMargin,
-
-    "q12_agg_sum" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  CAST(COUNT(*) AS BIGINT) AS cnt
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q13_unwind_wordcount" ->
-      """SELECT word AS _id, CAST(COUNT(*) AS BIGINT) AS count
-        |FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |GROUP BY word ORDER BY count DESC, _id LIMIT 50""".stripMargin,
-
-    "q14_lookup" ->
-      """SELECT o_orderkey, c_name FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q15_apm_rollup" ->
-      """SELECT event_type,
-        |  CAST(SUM(CASE WHEN event_type <> 'error' THEN 1 ELSE 0 END) AS BIGINT) AS succeeded,
-        |  CAST(SUM(CASE WHEN event_type <> 'error' THEN 0 ELSE 1 END) AS BIGINT) AS failed,
-        |  CAST(SUM(event_id % 1000) AS BIGINT) AS duration_ns
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q16_backup" ->
-      """SELECT event_id, user_id, ts FROM events
-        |WHERE event_type = 'click'
-        |ORDER BY ts DESC, event_id LIMIT 100""".stripMargin,
-
-    "q17_dedup_exact" ->
-      """SELECT MIN(doc_id) AS doc_id, CAST(COUNT(*) AS BIGINT) AS n_copies
-        |FROM (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 100
-        |) GROUP BY text ORDER BY doc_id""".stripMargin,
-
-    "q114_positional_first" ->
-      """WITH src AS (SELECT p_partkey,
-        |    [CAST(p_size AS BIGINT), CAST(25 AS BIGINT),
-        |     CAST((p_size % 7) * 10 AS BIGINT)] AS g
-        |  FROM part WHERE p_partkey <= 500),
-        |ex AS (SELECT p_partkey, i, g[i] AS v
-        |  FROM src, UNNEST(range(1, len(g)+1)) AS u(i)),
-        |fi AS (SELECT p_partkey, MIN(i) AS first_i FROM ex
-        |  WHERE v >= 20 GROUP BY 1)
-        |SELECT s.p_partkey, array_to_string(list_transform(
-        |    range(1, len(s.g)+1),
-        |    i -> CAST(CASE WHEN f.first_i IS NOT NULL AND i = f.first_i
-        |      THEN -1 ELSE s.g[i] END AS VARCHAR)), ',') AS g_s
-        |FROM src s LEFT JOIN fi f USING (p_partkey)
-        |ORDER BY s.p_partkey""".stripMargin,
-
-    "q117_nested_positional" ->
-      """SELECT p_partkey,
-        |  concat('a:', array_to_string([p_size, 5], ','), '|b:',
-        |    array_to_string(list_transform([30, p_size % 10],
-        |      x -> CASE WHEN x < 10 THEN x + 100 ELSE x END), ','))
-        |    AS g_s
-        |FROM part WHERE p_partkey <= 300
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q113_array_filters" ->
-      """SELECT p_partkey, array_to_string(list_transform(
-        |    [p_size, (p_size % 7) * 10, 42],
-        |    x -> CASE WHEN x >= 25 THEN -1 ELSE x END), ',') AS g_s
-        |FROM part WHERE p_partkey <= 500
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q112_positional_bit" ->
-      """SELECT p_partkey,
-        |  array_to_string(CASE WHEN p_size >= 10
-        |    THEN list_transform(range(1, (p_size % 5 + 1) + 1),
-        |                        x -> x + 100)
-        |    ELSE range(1, (p_size % 5 + 1) + 1) END, ',') AS scores_s,
-        |  CASE WHEN p_size >= 10 THEN xor(CAST(p_size AS BIGINT), 21)
-        |    ELSE CAST(p_size AS BIGINT) END AS flags
-        |FROM part WHERE p_partkey <= 500
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q111_push_each" ->
-      """SELECT p_partkey,
-        |  CASE WHEN p_size <= 20 THEN
-        |    array_to_string(list_slice(list_sort(list_concat(
-        |      string_split(p_brand, '#'), ['zz', 'aa'])), 1, 3), '|')
-        |  ELSE array_to_string(string_split(p_brand, '#'), '|')
-        |  END AS arr_s
-        |FROM part WHERE p_partkey <= 500
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q110_scalar_folds" ->
-      """SELECT o_orderkey,
-        |  greatest(50000.0, o_totalprice) AS clamped,
-        |  least(o_totalprice, 100000.0) AS lo,
-        |  o_totalprice + CAST(o_custkey AS DOUBLE) AS s,
-        |  (o_totalprice + CAST(o_custkey AS DOUBLE)) / 2.0 AS m
-        |FROM orders WHERE o_orderkey <= 2000
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q116_select_exclude_slice" ->
-      """SELECT vec_id,
-        |  CAST(embedding[1] AS DOUBLE) AS e0,
-        |  CAST(embedding[2] AS DOUBLE) AS e1,
-        |  CAST(embedding[3] AS DOUBLE) AS e2
-        |FROM embeddings WHERE vec_id < 100 ORDER BY vec_id""".stripMargin,
-
-    // auto-sized SemDeDup reproduced end-to-end: k = Dedup.autoCellCount
-    // recomputed from count(*), five unrolled Lloyd iterations (the q89
-    // CTE machinery — smallest-id seed, decimal-exact means, cosine
-    // assignment with id tie-break, empty cells keep their centroid), a
-    // sixth assignment block against the FINAL centroids (m6/c6 unused),
-    // then the within-cell earlier-row cosine drop rule
-    "q130_semdedup" ->
-      s"""WITH data AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         |  FROM embeddings),
-         |kk AS (SELECT GREATEST(1, CAST(ceil(count(*) / 1000.0) AS INT))
-         |  AS k FROM data),
-         |c0 AS (
-         |  SELECT CAST(r.vec_id AS BIGINT) AS cid, r.v AS c
-         |  FROM (SELECT vec_id, v,
-         |          row_number() OVER (ORDER BY vec_id) AS rn FROM data) r,
-         |    kk
-         |  WHERE r.rn <= kk.k),
-         |${kmeansIterCtes(1, "c0")},
-         |${kmeansIterCtes(2, "c1")},
-         |${kmeansIterCtes(3, "c2")},
-         |${kmeansIterCtes(4, "c3")},
-         |${kmeansIterCtes(5, "c4")},
-         |${kmeansIterCtes(6, "c5")},
-         |p AS (
-         |  SELECT a.vec_id AS ia, b.vec_id AS ib,
-         |         x.embedding AS ea, y.embedding AS eb
-         |  FROM a6 a JOIN a6 b ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |  JOIN embeddings x ON x.vec_id = a.vec_id
-         |  JOIN embeddings y ON y.vec_id = b.vec_id),
-         |${cosineCtes("p")}
-         |SELECT vec_id FROM data
-         |WHERE vec_id NOT IN (
-         |  SELECT ib FROM d WHERE dot / (sqrt(na) * sqrt(nb)) >= 0.3)
-         |ORDER BY vec_id""".stripMargin,
-
-    "q131_geo_intersects" ->
-      """SELECT vec_id FROM (
-        |  SELECT vec_id,
-        |    CAST(embedding[1] AS DOUBLE) AS x,
-        |    CAST(embedding[2] AS DOUBLE) AS y
-        |  FROM embeddings)
-        |WHERE (abs(x) + abs(y) <= 0.35
-        |       AND NOT (abs(x) <= 0.1 AND abs(y) <= 0.1))
-        |   OR (x >= 0.4 AND x <= 0.6 AND y >= 0.4 AND y <= 0.6)
-        |   OR (x >= -0.6 AND x <= -0.4 AND y >= -0.6 AND y <= -0.4)
-        |ORDER BY vec_id""".stripMargin,
-
-    "q132_ts_parts" ->
-      """SELECT event_id,
-        |  event_id AS t,
-        |  event_id % 1000 AS i
-        |FROM events WHERE event_id < 500 ORDER BY event_id""".stripMargin,
-
-    "q137_dup_spans" ->
-      """WITH d AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 4 = 0
-        |    THEN text || ' shared span alpha beta gamma delta epsilon closing'
-        |    ELSE text END AS t
-        |  FROM documents WHERE doc_id < 300),
-        |tk AS (SELECT doc_id,
-        |  list_filter(string_split(t, ' '), x -> x <> '') AS toks FROM d),
-        |tok AS (SELECT doc_id, unnest(toks) AS tok,
-        |  generate_subscripts(toks, 1) AS pos FROM tk),
-        |g AS (
-        |  SELECT doc_id, i AS pos, array_to_string(toks[i:i+4], chr(1)) AS gram
-        |  FROM tk, UNNEST(range(1, len(toks) - 3)) AS u(i)),
-        |dup AS (SELECT gram FROM g GROUP BY gram
-        |  HAVING COUNT(DISTINCT doc_id) >= 2),
-        |hit AS (SELECT doc_id, pos FROM g
-        |  WHERE gram IN (SELECT gram FROM dup)),
-        |cov AS (SELECT DISTINCT doc_id, pos + o AS pos
-        |  FROM hit, UNNEST(range(0, 5)) AS v(o)),
-        |j AS (SELECT tok.doc_id, tok.pos, tok.tok,
-        |    cov.doc_id IS NOT NULL AS c
-        |  FROM tok LEFT JOIN cov
-        |    ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos)
-        |SELECT doc_id,
-        |  COUNT(*) AS n_tokens,
-        |  CAST(COALESCE(SUM(CASE WHEN c THEN 1 ELSE 0 END), 0) AS BIGINT)
-        |    AS dup_tokens,
-        |  COALESCE(string_agg(CASE WHEN NOT c THEN tok END, ' '
-        |    ORDER BY pos), '') AS clean
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q135_select_dotted_incl" ->
-      """SELECT c_custkey, to_json(struct_pack(
-        |    name := c_name,
-        |    acct := struct_pack(seg := c_mktsegment))) AS info_json
-        |FROM customer WHERE c_custkey <= 200 ORDER BY c_custkey""".stripMargin,
-
-    "q136_select_dotted_excl" ->
-      """SELECT c_custkey, to_json(struct_pack(
-        |    name := c_name,
-        |    acct := struct_pack(seg := c_mktsegment))) AS info_json
-        |FROM customer WHERE c_custkey <= 200 ORDER BY c_custkey""".stripMargin,
-
-    "q134_unwind_options" ->
-      """WITH a AS (
-        |  SELECT vec_id, embedding[1:(vec_id % 3)] AS arr
-        |  FROM embeddings WHERE vec_id < 30),
-        |x AS (
-        |  SELECT vec_id, unnest(arr) AS v,
-        |    generate_subscripts(arr, 1) - 1 AS i
-        |  FROM a)
-        |SELECT a.vec_id, x.v AS arr, CAST(x.i AS BIGINT) AS idx
-        |FROM a LEFT JOIN x USING (vec_id)
-        |ORDER BY vec_id, idx""".stripMargin,
-
-    "q133_bit_exprs" ->
-      """SELECT event_id,
-        |  event_id & 255 AS band,
-        |  event_id | 4096 AS bor,
-        |  xor(event_id, 255) AS bxor,
-        |  ~event_id AS bnot
-        |FROM events WHERE event_id < 500 ORDER BY event_id""".stripMargin,
-
-    "q129_boilerplate" ->
-      """WITH d AS (
-        |  SELECT doc_id, 'hdr ' || (doc_id % 5) || chr(10) || text
-        |    || chr(10) || 'common footer' AS t
-        |  FROM documents WHERE doc_id < 250),
-        |l AS (
-        |  SELECT doc_id, z.pos AS pos, z.line AS line FROM (
-        |    SELECT doc_id, unnest(list_transform(
-        |      range(1, len(string_split(t, chr(10))) + 1),
-        |      i -> struct_pack(pos := i,
-        |        line := string_split(t, chr(10))[i]))) AS z
-        |    FROM d)),
-        |rare AS (
-        |  SELECT line FROM (
-        |    SELECT line, COUNT(DISTINCT doc_id) AS df FROM l GROUP BY 1)
-        |  WHERE df <= 10),
-        |k AS (SELECT doc_id, pos, line FROM l
-        |  WHERE line IN (SELECT line FROM rare)),
-        |o AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean
-        |  FROM k GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(o.clean, '') AS clean
-        |FROM d LEFT JOIN o USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    "q128_url_domains" ->
-      """WITH u AS (
-        |  SELECT unnest(regexp_extract_all(
-        |    text || ' see https://site' || (doc_id % 7)
-        |      || '.example.com/p/' || doc_id
-        |      || ' and http://other' || (doc_id % 3) || '.org/x',
-        |    'https?://([^/\s]+)', 1)) AS domain
-        |  FROM documents WHERE doc_id < 400)
-        |SELECT domain, COUNT(*) AS n FROM u
-        |GROUP BY domain ORDER BY domain""".stripMargin,
-
-    "q127_lm_perplexity" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_prepend('<s>',
-        |    list_filter(string_split(text, ' '), x -> x <> '')) AS t
-        |  FROM documents WHERE doc_id < 300),
-        |bg AS (
-        |  SELECT doc_id, z.w1 AS w1, z.w2 AS w2 FROM (
-        |    SELECT doc_id, unnest(list_transform(range(1, len(t)),
-        |      i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS z
-        |    FROM tk)),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |c1 AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY 1),
-        |v AS (SELECT COUNT(DISTINCT w2) AS vv FROM c12),
-        |sc AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CAST(-log2((c12.c12 + 0.5) / (c1.c1 + 0.5 * vv))
-        |      AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS bits,
-        |    COUNT(*) AS n_bigrams
-        |  FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1), v
-        |  GROUP BY doc_id)
-        |SELECT doc_id,
-        |  CAST(CAST(bits AS DECIMAL(18,9)) AS DOUBLE) AS bits_per_token,
-        |  n_bigrams
-        |FROM sc ORDER BY doc_id""".stripMargin,
-
-    "q125_pull_forms" ->
-      """SELECT p_partkey,
-        |  array_to_string(
-        |    CASE WHEN p_size >= 10 THEN
-        |      list_filter(generate_series(1, p_size % 6 + 2), x -> x < 4)
-        |    ELSE
-        |      list_filter(generate_series(1, p_size % 6 + 2),
-        |        x -> x NOT IN (1, 3))
-        |    END, ',') AS arr_s
-        |FROM part WHERE p_partkey <= 500
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q126_documents_redact" ->
-      """SELECT * FROM (VALUES
-        |  (1, 'public', 10), (3, 'public', NULL), (4, 'internal', 40))
-        |  t(k, level, v)
-        |ORDER BY k""".stripMargin,
-
-    "q124_jsonschema" ->
-      """SELECT doc_id FROM documents
-        |WHERE text IS NOT NULL
-        |  AND (lang IS NULL OR lang IN ('en', 'de'))
-        |  AND (n_chars IS NULL OR (n_chars >= 100 AND n_chars <= 300))
-        |  AND (text IS NULL OR regexp_matches(text, '^[a-z]'))
-        |ORDER BY doc_id""".stripMargin,
-
-    "q123_geowithin" ->
-      """SELECT vec_id FROM embeddings
-        |WHERE embedding[1] >= -0.5 AND embedding[1] <= 0.5
-        |  AND embedding[2] >= -0.5 AND embedding[2] <= 0.5
-        |  AND sqrt(pow(CAST(embedding[1] AS DOUBLE), 2)
-        |         + pow(CAST(embedding[2] AS DOUBLE), 2)) <= 0.45
-        |ORDER BY vec_id""".stripMargin,
-
-    "q120_search_text" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('stream', 'filter', 'shuffle')
-        |  GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |sc AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS score
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM sc ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q121_search_meta" ->
-      """SELECT COUNT(*) AS total FROM (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents)
-        |WHERE len(list_filter(t,
-        |  x -> x IN ('stream', 'filter', 'shuffle'))) > 0""".stripMargin,
-
-    "q122_collstats" ->
-      """SELECT COUNT(*) AS count, 0 AS nindexes FROM documents""".stripMargin,
-
-    "q138_search_compound" ->
-      """WITH tk AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('stream', 'filter')
-        |  GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |bm AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS mscore
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id),
-        |matched AS (
-        |  SELECT tk.doc_id,
-        |    bm.mscore + CASE WHEN contains(tk.text, 'hash join')
-        |      THEN (len(tk.text) - len(replace(tk.text, 'hash join', '')))
-        |           / 9.0
-        |      ELSE 0 END AS score
-        |  FROM tk JOIN bm USING (doc_id)
-        |  WHERE NOT contains(tk.text, 'slow merge')
-        |    AND contains(tk.text, 'join'))
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM matched ORDER BY score DESC, doc_id LIMIT 25""".stripMargin,
-
-    "q139_text_negation" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE list_contains(
-        |    list_filter(string_split(text, ' '), x -> x <> ''), 'spark')
-        |  AND contains(text, 'stream filter')
-        |  AND NOT list_contains(
-        |    list_filter(string_split(text, ' '), x -> x <> ''), 'slow')
-        |ORDER BY doc_id""".stripMargin,
-
-    "q144_text_case" ->
-      """SELECT doc_id FROM documents
-        |WHERE list_contains(
-        |    list_filter(string_split(lower(text), ' '), x -> x <> ''),
-        |    'spark')
-        |  AND NOT list_contains(
-        |    list_filter(string_split(lower(text), ' '), x -> x <> ''),
-        |    'filter')
-        |ORDER BY doc_id""".stripMargin,
-
-    "q145_pack_sequences" ->
-      """SELECT doc_id, source,
-        |  CAST(SUM(n_chars) OVER w - n_chars AS BIGINT) AS start_tok,
-        |  CAST(floor((SUM(n_chars) OVER w - n_chars) / 5000.0) AS BIGINT)
-        |    AS seq_id
-        |FROM documents
-        |WINDOW w AS (PARTITION BY source ORDER BY doc_id
-        |  ROWS UNBOUNDED PRECEDING)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q147_score_fusion" ->
-      """WITH tk AS (
-        |  SELECT doc_id, text,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('stream', 'filter')
-        |  GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |bm AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS score
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id),
-        |lex20 AS (
-        |  SELECT doc_id, score FROM (
-        |    SELECT doc_id, score,
-        |      row_number() OVER (ORDER BY score DESC, doc_id) AS rn
-        |    FROM bm) WHERE rn <= 20),
-        |lexmm AS (SELECT min(score) AS mn, max(score) AS mx FROM lex20),
-        |lexc AS (
-        |  SELECT doc_id, CAST(2.0 * (CASE WHEN mx = mn THEN 0.0
-        |    ELSE (score - mn) / (mx - mn) END) AS DECIMAL(28,12)) AS c
-        |  FROM lex20, lexmm),
-        |ph AS (
-        |  SELECT doc_id,
-        |    (len(text) - len(replace(text, 'hash join', ''))) / 9.0 AS score
-        |  FROM tk WHERE contains(text, 'hash join')),
-        |ph20 AS (
-        |  SELECT doc_id, score FROM (
-        |    SELECT doc_id, score,
-        |      row_number() OVER (ORDER BY score DESC, doc_id) AS rn
-        |    FROM ph) WHERE rn <= 20),
-        |phmm AS (SELECT min(score) AS mn, max(score) AS mx FROM ph20),
-        |phc AS (
-        |  SELECT doc_id, CAST(1.0 * (CASE WHEN mx = mn THEN 0.0
-        |    ELSE (score - mn) / (mx - mn) END) AS DECIMAL(28,12)) AS c
-        |  FROM ph20, phmm),
-        |u AS (SELECT doc_id, c FROM lexc UNION ALL SELECT doc_id, c FROM phc),
-        |f AS (
-        |  SELECT doc_id, CAST(SUM(c) / 2.0 AS DOUBLE) AS score
-        |  FROM u GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM f ORDER BY score DESC, doc_id""".stripMargin,
-
-    "q148_vector_filter" -> {
-      val normQ = math.sqrt(q75Vec.map(x => x * x).sum)
-      s"""WITH s AS (SELECT vec_id, label,
-         |  (${litDotSql("embedding", q75Vec)})
-         |  / (sqrt(${selfDotSql("embedding", 64)}) * $normQ) AS cos
-         |  FROM embeddings WHERE label IN (0, 1) AND vec_id < 300),
-         |r AS (SELECT vec_id, label FROM s ORDER BY cos DESC, vec_id
-         |  LIMIT 15)
-         |SELECT vec_id, label FROM r ORDER BY vec_id""".stripMargin
-    },
-
-    "q149_sigmoid_minmax" ->
-      """WITH w AS (
-        |  SELECT o_orderkey, o_totalprice,
-        |    min(o_totalprice) OVER (PARTITION BY o_orderpriority) AS mn,
-        |    max(o_totalprice) OVER (PARTITION BY o_orderpriority) AS mx
-        |  FROM orders WHERE o_orderkey <= 2000)
-        |SELECT o_orderkey,
-        |  CAST(CAST(CASE WHEN mx - mn = 0 THEN 0.0
-        |    ELSE (o_totalprice - mn) / (mx - mn) * 100.0 + 0.0 END
-        |    AS DECIMAL(18,9)) AS DOUBLE) AS scaled,
-        |  CAST(CAST(1.0 / (1.0 + exp(-((o_totalprice - 150000.0)
-        |    / 50000.0))) AS DECIMAL(18,9)) AS DOUBLE) AS sig
-        |FROM w ORDER BY o_orderkey""".stripMargin,
-
-    // the n-gram bucket reproduces the engine's code-point FNV-1a 64
-    // fold in integer SQL: the xor touches only the low 21 bits (every
-    // code point < 2^21), so h XOR c = (h - h%2^21) + xor(h%2^21, c),
-    // and the multiply wraps mod 2^64 through a HUGEINT intermediate;
-    // the 60-bit mask is a modulo (validated char-exact vs the JVM,
-    // including non-ASCII)
-    "q150_dsir" ->
-      """WITH toks AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, unnest(t) AS g FROM toks
-        |  UNION ALL
-        |  SELECT doc_id, array_to_string(t[i:i+1], ' ') AS g
-        |  FROM toks, UNNEST(range(1, len(t))) AS u(i) WHERE len(t) >= 2),
-        |gb AS (SELECT doc_id,
-        |    CAST(list_reduce(
-        |      [CAST(14695981039346656037 AS HUGEINT)] ||
-        |      list_transform(range(1, length(g) + 1),
-        |        i -> CAST(ord(substr(g, i, 1)) AS HUGEINT)),
-        |      (h, c) -> ((h // 2097152 * 2097152 +
-        |         xor(CAST(h % 2097152 AS BIGINT), CAST(c AS BIGINT)))
-        |        * 1099511628211)
-        |        % CAST(18446744073709551616 AS HUGEINT))
-        |     % 1152921504606846976 % 1000 AS BIGINT) AS bucket FROM g),
-        |tc AS (SELECT bucket, COUNT(*) AS c FROM gb
-        |  JOIN documents USING (doc_id) WHERE source = 'src0' GROUP BY 1),
-        |rc AS (SELECT bucket, COUNT(*) AS c FROM gb GROUP BY 1),
-        |ratio AS (SELECT sp.bucket,
-        |    ln((coalesce(tc.c, 0) + 1.0)
-        |       / ((SELECT SUM(c) FROM tc) + 1000.0))
-        |  - ln((coalesce(rc.c, 0) + 1.0)
-        |       / ((SELECT SUM(c) FROM rc) + 1000.0)) AS lr
-        |  FROM (SELECT unnest(range(0, 1000)) AS bucket) sp
-        |  LEFT JOIN tc USING (bucket) LEFT JOIN rc USING (bucket)),
-        |-- quantized-long sum (the engine's partitioning-invariant form)
-        |w AS (SELECT gb.doc_id,
-        |    SUM(CAST(floor(r.lr * 1000000000.0 + 0.5) AS BIGINT))
-        |      / 1000000000.0 AS lw
-        |  FROM gb JOIN ratio r USING (bucket) GROUP BY 1),
-        |sel AS (SELECT d.doc_id, d.source, coalesce(w.lw, 0.0) AS lw
-        |  FROM documents d LEFT JOIN w USING (doc_id)
-        |  ORDER BY coalesce(w.lw, 0.0)
-        |    - ln(-ln((('0x'||substr(md5(d.doc_id::VARCHAR || 'dsir'),
-        |        1,15))::BIGINT % 1000000 + 0.5) / 1000000.0)) DESC,
-        |    d.doc_id
-        |  LIMIT 50)
-        |SELECT doc_id, source,
-        |  CAST(CAST(lw AS DECIMAL(18,9)) AS DOUBLE) AS log_weight
-        |FROM sel ORDER BY doc_id""".stripMargin,
-
-    // Bloom pre-filter never changes the answer (the exact join runs on
-    // the survivors), so the oracle IS q108's exact-path SQL
-    "q151_bloom_decontam" -> decontamSql,
-
-    "q153_ann_pq" -> pqOracleSql,
-
-    // the saved code table scores exactly like the in-line encode —
-    // SAME replay as q153 (shared helper)
-    "q262_pq_store" -> pqOracleSql,
-
-    "q159_search_morelikethis" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('stream', 'filter', 'window')
-        |  GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |sc AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS score
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM sc ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q160_search_querystring" ->
-      """WITH tk AS (SELECT doc_id, lang,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents)
-        |SELECT doc_id, lang FROM tk
-        |WHERE (list_contains(t, 'spark') OR list_contains(t, 'shuffle'))
-        |  AND NOT (lang = 'de')
-        |  AND len(list_filter(t,
-        |    x -> regexp_full_match(x, 'quer.*'))) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "q178_kfold" ->
-      """SELECT doc_id,
-        |  CAST(('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT
-        |    % 1000000 % 5 AS INT) AS fold
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q179_search_phrase_slop" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |occ AS (
-        |  SELECT doc_id, len(list_filter(range(1, len(t)+1),
-        |    i -> t[i] = 'stream' AND len(list_filter(
-        |      range(i+1, least(i+3, len(t)+1)), j -> t[j] = 'filter')) > 0))
-        |    AS occs
-        |  FROM tk)
-        |SELECT doc_id, CAST(occs AS DOUBLE) AS score FROM occ
-        |WHERE occs > 0 ORDER BY doc_id""".stripMargin,
-
-    "q180_collation_find" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE lower(lang) IN ('en', 'fr')
-        |ORDER BY lower(source), doc_id DESC""".stripMargin,
-
-    // BM25(stream) recomputed as in q120, then the same function
-    // algebra: x log10(n_chars+1) x 0.5^((|n_chars-300|/150)^2)
-    "q190_search_function_score" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term = 'stream' GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |sc AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS rel
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id),
-        |fn AS (
-        |  SELECT d.doc_id,
-        |    rel * log10(d.n_chars + 1.0)
-        |        * pow(0.5, pow(greatest(0.0, abs(d.n_chars - 300.0))
-        |            / 150.0, 2)) AS score
-        |  FROM sc JOIN documents d USING (doc_id))
-        |SELECT doc_id,
-        |  CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM fn ORDER BY score DESC, doc_id LIMIT 25""".stripMargin,
-
-    "q196_token_entropy" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents WHERE doc_id < 500),
-        |tok AS (SELECT doc_id, len(t) AS n, unnest(t) AS w FROM tk),
-        |cnt AS (SELECT doc_id, n, w, COUNT(*) AS c FROM tok
-        |  GROUP BY 1, 2, 3),
-        |e AS (SELECT doc_id,
-        |    CAST(SUM(CAST(floor((c / CAST(n AS DOUBLE)) *
-        |      ln(c / CAST(n AS DOUBLE)) * 1e6 + 0.5) AS BIGINT))
-        |      AS DOUBLE) / -1e6 AS entropy
-        |  FROM cnt GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(e.entropy, 0.0) AS entropy
-        |FROM (SELECT doc_id FROM documents WHERE doc_id < 500) d
-        |LEFT JOIN e USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q195_cap_per_key" ->
-      """WITH r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source ORDER BY
-        |      ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT
-        |        % 1000000,
-        |      doc_id) AS rn
-        |  FROM documents)
-        |SELECT doc_id, source FROM r WHERE rn <= 10
-        |ORDER BY doc_id""".stripMargin,
-
-    // stop-filtered adjacency: on this base-form corpus the only tokens
-    // stemming to (filter, queri) are 'filter' and 'query', so the
-    // stemmed-stream adjacency reduces to adjacency of those two words
-    // in the stop-removed token list
-    "q194_text_language_english" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(list_filter(
-        |      regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-        |      x -> x <> ''),
-        |      x -> x NOT IN ('a','an','and','are','as','at','be','but',
-        |        'by','for','if','in','into','is','it','no','not','of',
-        |        'on','or','such','that','the','their','then','there',
-        |        'these','they','this','to','was','will','with')) AS t
-        |  FROM documents)
-        |SELECT doc_id FROM tk
-        |WHERE len(list_filter(range(1, len(t) + 1), i ->
-        |  i + 1 <= len(t) AND t[i] = 'filter' AND t[i + 1] = 'query'))
-        |  > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    // the shifted key strips variables then lowers; on this fixture the
-    // variable set reduces to [^a-z0-9] after lowercasing (the spellings
-    // only carry '-', ' ' and '!'), so the oracle's strip is exact.
-    // 'refuse' < 'reuse' on the stripped key, hence the refuse group
-    // leads
-    "q199_collation_shifted" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    (['re-use','reuse','re use','refuse','re-fuse','rescue'])
-        |      [(doc_id % 6) + 1] AS tag
-        |  FROM documents WHERE doc_id < 300),
-        |k AS (SELECT doc_id, tag,
-        |    lower(regexp_replace(tag, '[^a-zA-Z0-9]+', '', 'g')) AS key
-        |  FROM d)
-        |SELECT doc_id, tag FROM k
-        |WHERE key IN ('reuse', 'refuse')
-        |ORDER BY key, doc_id""".stripMargin,
-
-    // numeric collation order on this corpus = (non-digit part, numeric
-    // value of the digit run): every source is 'src' + digits
-    "q189_collation_numeric" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE lower(lang) IN ('en', 'fr')
-        |ORDER BY regexp_replace(source, '[0-9]+', '', 'g'),
-        |  CAST(coalesce(nullif(regexp_extract(source, '[0-9]+'), ''),
-        |    '0') AS BIGINT),
-        |  doc_id""".stripMargin,
-
-    // the corpus vocabulary is 31 fixed base-form words, so the Porter
-    // stem-equivalence the engine computes reduces, ON THIS CORPUS, to
-    // exact membership: the only vocabulary tokens stemming to the
-    // analyzed query terms (filter, queri) are 'filter' and 'query';
-    // the stop word 'the' is dropped by the analyzer (were it not,
-    // every doc containing 'the' would match and this oracle would fail)
-    "q187_search_english_stemming" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-        |      x -> x <> '') AS t
-        |  FROM documents)
-        |SELECT doc_id FROM tk
-        |WHERE list_contains(t, 'filter') OR list_contains(t, 'query')
-        |ORDER BY doc_id""".stripMargin,
-
-    // the fixture derives its words from doc_id, so the oracle rebuilds
-    // the same selection and the Snowball stem-equivalence the engine
-    // computes reduces, ON THIS FIXTURE, to membership in the inflection
-    // group whose stem matches an analyzed query term (continuel /
-    // majestu); the stemmer behavior itself is pinned by unit specs on
-    // published-algorithm pairs, and the stop word slot must never match
-    "q197_search_french_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (['continuellement','continuelle','continuel','chercher',
-        |    'cherchez'])[(doc_id % 5) + 1]
-        |    IN ('continuellement', 'continuelle', 'continuel')
-        |  OR (['majestueux','majestueuse','traitement','traiter',
-        |      'nationale','finissait'])[((doc_id // 20) % 6) + 1]
-        |    IN ('majestueux', 'majestueuse'))
-        |ORDER BY doc_id""".stripMargin,
-
-    // phrase adjacency in the stop-removed stemmed stream: the middle
-    // slot is always a stop word, so the phrase [moglich, kind] matches
-    // exactly when slot 1 is in the möglich group AND slot 3 is in the
-    // kind group
-    "q198_text_language_german" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND
-        |  (['möglichkeiten','mögliche','möglich','laufen','laufe'])
-        |    [(doc_id % 5) + 1]
-        |    IN ('möglichkeiten', 'mögliche', 'möglich')
-        |  AND (['kinder','kindes','kind','bedürfnisse','wanderung'])
-        |    [((doc_id // 20) % 5) + 1]
-        |    IN ('kinder', 'kindes', 'kind')
-        |ORDER BY doc_id""".stripMargin,
-
-    // page 2 of the (bm25 desc, doc_id) ordering = rows 11-20: keyset
-    // pagination must equal OFFSET pagination on a total order. Same
-    // BM25 CTEs as q186; per-doc scores sum at most two terms, so the
-    // double addition is order-exact in both engines
-    "q200_search_after_pagination" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('stream', 'filter')
-        |  GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |bm AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS s
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id)
-        |SELECT doc_id FROM bm
-        |ORDER BY s DESC, doc_id LIMIT 10 OFFSET 10""".stripMargin,
-
-    // honest-reduction (the q197/q202 pattern): stem-equivalence
-    // reduces ON THIS FIXTURE to inflection-group membership — the
-    // trabalh group in slot 1, the cant verb family in slot 3; the
-    // stemmer itself is pinned by unit specs
-    "q205_search_portuguese_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 2)
-        |  OR ((doc_id // 20) % 5) IN (1, 2))
-        |ORDER BY doc_id""".stripMargin,
-
-    // honest-reduction: stem-equivalence reduces ON THIS FIXTURE to
-    // inflection-group membership — the licham group in slot 1
-    // (boeken/bakken stem elsewhere), the gelukk group in slot 3
-    // (mogelijkheden → mogelijk, bomen → bom, maan → man, jongens →
-    // jongen all miss); the stemmer itself is pinned by unit specs
-    "q206_search_dutch_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 2)
-        |  OR ((doc_id // 20) % 5) = 0)
-        |ORDER BY doc_id""".stripMargin,
-
-    // honest-reduction (the q197/q205 pattern): stem-equivalence
-    // reduces ON THIS FIXTURE to inflection-group membership — the
-    // flick group in slot 1 (bilarna → bil, tidning unstemmed), the
-    // möj group in slot 3 (tryckt → tryck, upplöst → upplös,
-    // generös unstemmed); the stemmer itself is pinned by unit specs
-    "q207_search_swedish_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 2)
-        |  OR ((doc_id // 20) % 5) IN (0, 1))
-        |ORDER BY doc_id""".stripMargin,
-
-    // honest-reduction: the hund group in slot 1 (parallelle →
-    // parallel, bakker → bakk), the undersøg group in slot 3
-    // (venlig → ven, billige → bil, bord unstemmed)
-    "q208_text_language_danish" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 2)
-        |  OR ((doc_id // 20) % 5) IN (0, 1))
-        |ORDER BY doc_id""".stripMargin,
-
-    // honest-reduction: the hus group in slot 1 (gutter → gutt, bord
-    // unstemmed), the vurder group in slot 3 (naturlige → natur,
-    // kaster/kastet → kast)
-    "q209_search_norwegian_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 2)
-        |  OR ((doc_id // 20) % 5) IN (0, 1))
-        |ORDER BY doc_id""".stripMargin,
-
-    // the oracle rebuilds the tailored sv primary key in SQL: lower,
-    // then the CLDR letter routing (å/ä-group/ö-group → stand-ins
-    // above z, ü/ű → y, ð → d) — DuckDB's translate is per-character
-    // like Spark's; the generic accent strip that follows in the
-    // engine is the identity on this fixture (every accent is already
-    // consumed by the tailoring)
-    "q210_collation_swedish_tailored" ->
-      ("""WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 7 WHEN 0 THEN 'öga' WHEN 1 THEN 'zon'
-        |      WHEN 2 THEN 'åker' WHEN 3 THEN 'ära' WHEN 4 THEN 'arm'
-        |      WHEN 5 THEN 'bok' ELSE 'äpple' END AS tag
-        |  FROM documents WHERE doc_id < 280)
-        |SELECT doc_id, tag FROM t
-        |ORDER BY translate(lower(tag), 'åäæęöøőœüűð',
-        |  '""".stripMargin +
-        "yyd" +
-        """'), doc_id"""),
-
-    // strength-2 tailored da key = (primary, secondary): primary folds
-    // aa → å then routes æ/ä, ø/ö/ő, å to post-z stand-ins; the
-    // secondary string swaps ä↔æ and ö↔ø so binary order agrees with
-    // CLDR's within-group order; Aalborg/Ålborg tie on BOTH levels and
-    // fall to doc_id
-    "q211_collation_danish_aa" ->
-      ("""WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6 WHEN 0 THEN 'Aalborg' WHEN 1 THEN 'Ålborg'
-        |      WHEN 2 THEN 'äble' WHEN 3 THEN 'æble' WHEN 4 THEN 'ørn'
-        |      ELSE 'zebra' END AS tag
-        |  FROM documents WHERE doc_id < 280),
-        |k AS (SELECT doc_id, tag,
-        |  replace(lower(tag), 'aa', 'å') AS pre FROM t)
-        |SELECT doc_id, tag FROM k
-        |ORDER BY translate(pre, 'æäøöőåüűð',
-        |  '""".stripMargin +
-        "yyd" +
-        """'), translate(pre, 'äæöø', 'æäøö'), doc_id"""),
-
-    // honest-reduction (the q197/q205 pattern): Snowball Russian
-    // stem-equivalence reduces ON THIS FIXTURE to membership in the
-    // inflection groups whose stems match the analyzed query terms
-    // (бега / возможн); the stemmer itself is pinned by unit specs on
-    // published-algorithm pairs, the stop term (и) must never match
-    "q212_search_russian_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 4)
-        |  OR ((doc_id // 20) % 5) IN (0, 1, 4))
-        |ORDER BY doc_id""".stripMargin,
-
-    // strength-2 tailored ru key = (primary, secondary): primary folds
-    // ё→е (CLDR: ё is a secondary variant of е), secondary is the raw
-    // text (binary е < ё matches CLDR's within-group order); Cyrillic
-    // base letters are already in CLDR primary order in code points
-    "q213_collation_russian_yo" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6 WHEN 0 THEN 'еж' WHEN 1 THEN 'ёж'
-        |      WHEN 2 THEN 'елка' WHEN 3 THEN 'ёлка' WHEN 4 THEN 'жук'
-        |      ELSE 'яблоко' END AS tag
-        |  FROM documents WHERE doc_id < 280)
-        |SELECT doc_id, tag FROM t
-        |ORDER BY replace(lower(tag), 'ё', 'е'), lower(tag), doc_id"""
-        .stripMargin,
-
-    // strength-1 tailored tr key: the Turkish case fold FIRST (İ→i,
-    // I→ı — NOT the root fold), then the whole letter sequence routes
-    // to consecutive private-use stand-ins in CLDR tr order (ç right
-    // after c, ı BEFORE i, ş after s, ü after u); the oracle rebuilds
-    // the identical stand-in page with the same translate
-    "q214_collation_turkish" ->
-      ("""WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 7 WHEN 0 THEN 'cam' WHEN 1 THEN 'çam'
-        |      WHEN 2 THEN 'Iğdır' WHEN 3 THEN 'ırmak'
-        |      WHEN 4 THEN 'istanbul' WHEN 5 THEN 'İzmir'
-        |      ELSE 'şeker' END AS tag
-        |  FROM documents WHERE doc_id < 280)
-        |SELECT doc_id, tag FROM t
-        |ORDER BY translate(
-        |  lower(replace(replace(tag, 'İ', 'i'), 'I', 'ı')),
-        |  '""".stripMargin + "abcçdefgğhıijklmnoöpqrsştuüvwxyz" +
-        "', '" + (0 until 32).map(i => (0xE100 + i).toChar).mkString +
-        "'), doc_id"),
-
-    // fr_CA backwards key = (primary, reversed secondary): primary
-    // strips accents; the secondary swaps acute↔grave (DUCET order)
-    // and is REVERSED, so the binary comparison reads the accents from
-    // the END of the string — côte before coté
-    "q215_collation_fr_backwards" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6 WHEN 0 THEN 'cote' WHEN 1 THEN 'coté'
-        |      WHEN 2 THEN 'côte' WHEN 3 THEN 'côté' WHEN 4 THEN 'cotre'
-        |      ELSE 'cozy' END AS tag
-        |  FROM documents WHERE doc_id < 280)
-        |SELECT doc_id, tag FROM t
-        |ORDER BY translate(lower(tag), 'ôé', 'oe'),
-        |  reverse(translate(lower(tag), 'àáèéìíòóùú', 'áàéèíìóòúù')),
-        |  doc_id""".stripMargin,
-
-    // normalization: true — the oracle composes with DuckDB's own
-    // nfc_normalize, the same canonical composition the engine's
-    // native expression applies (JDK Normalizer); strength 2 then
-    // folds case only, so the two decomposed slots match the
-    // precomposed literal and the accent-less 'cafe' slot does NOT
-    "q216_collation_normalization" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 5 WHEN 0 THEN 'café'
-        |      WHEN 1 THEN 'cafe' || chr(769)
-        |      WHEN 2 THEN 'CAFE' || chr(769)
-        |      WHEN 3 THEN 'cafe' ELSE 'latte' END AS tag
-        |  FROM documents WHERE doc_id < 300)
-        |SELECT doc_id FROM t
-        |WHERE lower(nfc_normalize(tag)) = 'café'
-        |ORDER BY doc_id""".stripMargin,
-
-    // collated $group: GROUP BY the folded key, min(original) as the
-    // deterministic _id representative, count as the accumulator; the
-    // trailing sort folds through the same key
-    "q217_group_collation" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 5 WHEN 0 THEN 'Alpha' WHEN 1 THEN 'alpha'
-        |      WHEN 2 THEN 'ALPHA' WHEN 3 THEN 'Beta' ELSE 'beta'
-        |      END AS tag
-        |  FROM documents WHERE doc_id < 300)
-        |SELECT min(tag) AS _id, count(*) AS n FROM t
-        |GROUP BY lower(tag)
-        |ORDER BY lower(min(tag))""".stripMargin,
-
-    // collated $lookup: the oracle joins on the folded (lowercased)
-    // key; $size of the matched array = the per-row join match count
-    "q218_lookup_collation" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 4 WHEN 0 THEN 'nation_3' WHEN 1 THEN 'Nation_3'
-        |      WHEN 2 THEN 'NATION_7' ELSE 'atlantis' END AS cname
-        |  FROM documents WHERE doc_id < 300)
-        |SELECT t.doc_id, t.cname, count(n.n_name) AS n
-        |FROM t LEFT JOIN nation n
-        |  ON lower(n.n_name) = lower(t.cname)
-        |GROUP BY t.doc_id, t.cname
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // strength-1 tailored es key: the whole alphabet (ñ between n and
-    // o) routes to the private-use page; accented á folds to a's
-    // stand-in; the oracle rebuilds the identical page
-    "q219_collation_spanish_enye" ->
-      ("""WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6 WHEN 0 THEN 'pan' WHEN 1 THEN 'pena'
-        |      WHEN 2 THEN 'peña' WHEN 3 THEN 'peor' WHEN 4 THEN 'PEÑA'
-        |      ELSE 'está' END AS tag
-        |  FROM documents WHERE doc_id < 280)
-        |SELECT doc_id, tag FROM t
-        |ORDER BY translate(lower(tag),
-        |  '""".stripMargin + "abcdefghijklmnñopqrstuvwxyzá" +
-        "', '" + ((0 until 27).map(i => (0xE200 + i).toChar).mkString
-          + 0xE200.toChar) + "'), doc_id"),
-
-    "q220_collation_polish" ->
-      ("""WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6 WHEN 0 THEN 'luz' WHEN 1 THEN 'łaska'
-        |      WHEN 2 THEN 'maj' WHEN 3 THEN 'za' WHEN 4 THEN 'źle'
-        |      ELSE 'żaba' END AS tag
-        |  FROM documents WHERE doc_id < 280)
-        |SELECT doc_id, tag FROM t
-        |ORDER BY translate(lower(tag),
-        |  '""".stripMargin + "aąbcćdeęfghijklłmnńoópqrsśtuvwxyzźż" +
-        "', '" + (0 until 35).map(i => (0xE300 + i).toChar).mkString +
-        "'), doc_id"),
-
-    // cs: the ch digraph replaces to its own page slot (between h and
-    // i) on the LOWERED text, then the single letters translate
-    "q221_collation_czech_ch" ->
-      ("""WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6 WHEN 0 THEN 'cena' WHEN 1 THEN 'čaj'
-        |      WHEN 2 THEN 'hrad' WHEN 3 THEN 'chata' WHEN 4 THEN 'irsko'
-        |      ELSE 'řeka' END AS tag
-        |  FROM documents WHERE doc_id < 280)
-        |SELECT doc_id, tag FROM t
-        |ORDER BY translate(
-        |  replace(lower(tag), 'ch', '""".stripMargin +
-        (0xE400 + 9).toChar +
-        "'), '" + "abcčdefghijklmnopqrřsštuvwxyzž" + "', '" +
-        "abcčdefgh ijklmnopqrřsštuvwxyzž".zipWithIndex.collect {
-          case (ch, i) if ch != ' ' => (0xE400 + i).toChar
-        }.mkString + "'), doc_id"),
-
-    // honest-reduction (the q212 pattern): Snowball Turkish
-    // stem-equivalence reduces ON THIS FIXTURE to membership in the
-    // inflection groups whose stems match the analyzed query terms
-    // (kitap / ev); the stemmer itself is pinned by unit specs on
-    // hand-verified inflection families, the stop term (ve) must
-    // never match
-    "q222_search_turkish_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 4)
-        |  OR ((doc_id // 20) % 5) IN (0, 1, 4))
-        |ORDER BY doc_id""".stripMargin,
-
-    // honest-reduction (the q212/q222 pattern): stem-equivalence
-    // reduces ON THIS FIXTURE to inflection-group membership (měst /
-    // prah); the stemmer is pinned by unit specs on published pairs,
-    // the stop term (a) must never match
-    "q223_search_czech_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 4)
-        |  OR ((doc_id // 20) % 5) IN (0, 1, 4))
-        |ORDER BY doc_id""".stripMargin,
-
-    // brute-force cosine over the full bench×corpus product (the
-    // broadcast path IS exact, so the oracle is the plain definition)
-    "q224_semantic_decontamination" ->
-      s"""WITH b AS (
-         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id < 32),
-         |c AS (
-         |  SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 32),
-         |p AS (
-         |  SELECT c.vec_id AS ia, b.vec_id AS ib,
-         |    c.embedding AS ea, b.embedding AS eb FROM c, b),
-         |${cosineCtes("p")}
-         |SELECT ia AS vec_id, count(*) AS matches, min(ib) AS first_bench
-         |FROM d WHERE dot / (sqrt(na) * sqrt(nb)) >= 0.3
-         |GROUP BY ia ORDER BY vec_id""".stripMargin,
-
-    // the q50 component recursion, then argmax quality per component
-    // (n_chars DESC, doc_id ASC) with unclustered docs as singletons
-    "q225_dedup_keep_best" -> keepBestOracle,
-
-    // the incremental resolve must equal the one-shot keep-best over
-    // the full corpus — SAME oracle text as q225 (shared helper)
-    "q252_resolve_incremental" -> keepBestOracle,
-
-    // quantile_cont IS Spark's exact interpolated percentile (both
-    // evaluate at rank (n-1)*q with linear interpolation; integer
-    // scores make the midpoint exactly representable)
-    "q226_domain_quality_filter" ->
-      """WITH th AS (
-        |  SELECT source, quantile_cont(n_chars, 0.5) AS th
-        |  FROM documents GROUP BY source)
-        |SELECT d.doc_id, d.source, d.n_chars
-        |FROM documents d JOIN th ON th.source IS NOT DISTINCT FROM d.source
-        |WHERE CAST(d.n_chars AS DOUBLE) >= th.th
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // UNION thresholds (the full corpus), delta rows only — the
-    // incremental gate's contract; q226's replay plus the doc_id gate
-    "q256_domain_gate_incremental" ->
-      """WITH th AS (
-        |  SELECT source, quantile_cont(n_chars, 0.5) AS th
-        |  FROM documents GROUP BY source)
-        |SELECT d.doc_id, d.source, d.n_chars
-        |FROM documents d JOIN th ON th.source IS NOT DISTINCT FROM d.source
-        |WHERE d.doc_id >= 300 AND CAST(d.n_chars AS DOUBLE) >= th.th
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // the oracle runs the IDENTICAL normalization chain in RE2 (the
-    // Spark regexes deliberately avoid lookaround for this) — an
-    // independent re-implementation, then min-id per canonical key
-    "q227_url_dedup" ->
-      """WITH u AS (SELECT doc_id,
-        |  CASE doc_id % 8
-        |    WHEN 0 THEN 'https://Example.com/p' || (doc_id // 8)
-        |      || '/b?utm_source=x&id=7&z=2'
-        |    WHEN 1 THEN 'https://example.com/p' || (doc_id // 8)
-        |      || '/b?z=2&id=7'
-        |    WHEN 2 THEN 'https://example.com:443/p' || (doc_id // 8)
-        |      || '/b?id=7&z=2#frag'
-        |    WHEN 3 THEN 'https://www.example.com/p' || (doc_id // 8)
-        |      || '/b/?id=7&z=2'
-        |    WHEN 4 THEN 'https://example.com/p' || (doc_id // 8)
-        |      || '/b?jsessionid=A9F3&id=7&z=2'
-        |    WHEN 5 THEN 'https://example.com/p' || (doc_id // 8)
-        |      || '/b?id=8&z=2'
-        |    WHEN 6 THEN 'https://example.com/p' || (doc_id // 8)
-        |      || '/b?ref=main&id=7&z=2'
-        |    ELSE 'https://other.org/p' || (doc_id // 8) || '/c'
-        |  END AS url
-        |  FROM documents WHERE doc_id < 360),
-        |s1 AS (SELECT doc_id, regexp_replace(url, '#.*', '') AS u
-        |  FROM u),
-        |sp AS (SELECT doc_id, regexp_extract(u, '^([^?]*)', 1) AS p,
-        |  regexp_replace(u, '^[^?]*', '') AS q FROM s1),
-        |s2a AS (SELECT doc_id, p, regexp_replace(regexp_replace(
-        |  regexp_replace(regexp_replace(q,
-        |    '([?&])(?i:utm_[a-z0-9_]+|fbclid|gclid|jsessionid|phpsessid)=[^&]*',
-        |    '\1', 'g'), '&&+', '&', 'g'), '^\?&', '?'), '[?&]$', '')
-        |  AS q FROM sp),
-        |s2 AS (SELECT doc_id, p,
-        |  CASE WHEN qb = '' THEN '' ELSE '?' ||
-        |    array_to_string(list_sort(string_split(qb, '&')), '&') END
-        |  AS q
-        |  FROM (SELECT doc_id, p, regexp_replace(q, '^\?', '') AS qb
-        |        FROM s2a)),
-        |s3 AS (SELECT doc_id, regexp_replace(p, '/+$', '') AS p, q
-        |  FROM s2),
-        |s4 AS (SELECT doc_id,
-        |  lower(regexp_extract(p,
-        |    '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1)) ||
-        |  regexp_replace(p, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*', '')
-        |  AS p, q FROM s3),
-        |s5 AS (SELECT doc_id, regexp_replace(regexp_replace(p,
-        |  '^(http://[^/?#]*):80([/?#]|$)', '\1\2'),
-        |  '^(https://[^/?#]*):443([/?#]|$)', '\1\2') AS p, q FROM s4),
-        |s6 AS (SELECT doc_id,
-        |  regexp_replace(p, '^(https?://)www\.', '\1') || q AS u
-        |  FROM s5)
-        |SELECT u AS url_canonical, min(doc_id) AS doc_id,
-        |  count(*) AS n_copies
-        |FROM s6 GROUP BY u ORDER BY doc_id""".stripMargin,
-
-    // the q19/q50 minhash machinery with the self-join's id ordering
-    // replaced by the frame split (new >= 200 vs ref < 200)
-    "q228_incremental_neardup" ->
-      s"""WITH ${minhashBandsCtes(12, 4)}
-         |SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS ref_id
-         |FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig
-         |WHERE a.doc_id >= 200 AND b.doc_id < 200
-         |ORDER BY new_id, ref_id""".stripMargin,
-
-    // the signature-store path must produce exactly the recompute
-    // path's pairs — same oracle as q228
-    "q230_incremental_precomputed" ->
-      s"""WITH ${minhashBandsCtes(12, 4)}
-         |SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS ref_id
-         |FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig
-         |WHERE a.doc_id >= 200 AND b.doc_id < 200
-         |ORDER BY new_id, ref_id""".stripMargin,
-
-    // the q231 score replay plus the sorted-scores margin
-    "q237_langid_margin" -> {
-      val sents = LangIdSentences.map(_._2) :+ "og det ikke"
-      val textCase = sents.zipWithIndex.map { case (t, i) =>
-        s"WHEN $i THEN '$t'" }.mkString("\n    ")
-      val scores = TextFunctions.LangMarkers.map { case (lang, ms) =>
-        val lst = ms.map(m => s"'$m'").mkString(", ")
-        s"len(list_filter(t, x -> list_contains([$lst], x))) AS s_$lang"
-      }.mkString(",\n  ")
-      val langs = TextFunctions.LangMarkers.map(_._1)
-      val best = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-      val total = langs.map("s_" + _).mkString(" + ")
-      val cases = langs.map(l =>
-        s"WHEN ($total) > 0 AND s_$l = $best THEN '$l'").mkString("\n    ")
-      val lst = langs.map("s_" + _).mkString(", ")
-      s"""WITH f AS (SELECT doc_id,
-         |  CASE doc_id % 16
-         |    $textCase
-         |  END AS mtext
-         |  FROM documents WHERE doc_id < 480),
-         |s AS (SELECT doc_id,
-         |  list_filter(string_split(mtext, ' '), x -> x <> '') AS t
-         |  FROM f),
-         |sc AS (SELECT doc_id, $scores FROM s),
-         |m AS (SELECT doc_id, $total AS total,
-         |  CASE $cases ELSE 'und' END AS predicted,
-         |  list_sort([$lst], 'DESC') AS l FROM sc)
-         |SELECT doc_id, predicted,
-         |  CAST(l[1] - l[2] AS BIGINT) AS margin
-         |FROM m ORDER BY doc_id""".stripMargin
-    },
-
-    // independent replay: distinct corpus 3-grams LEFT join the
-    // deduped benchmark shingle set, fraction per doc
-    "q232_overlap_fraction" ->
-      s"""WITH $toksCte,
-         |$shingleCte,
-         |b AS (SELECT DISTINCT sh FROM sh WHERE doc_id < 100),
-         |c AS (SELECT doc_id, sh FROM sh WHERE doc_id >= 100)
-         |SELECT c.doc_id,
-         |  CAST(COUNT(*) AS BIGINT) AS n_shingles,
-         |  CAST(SUM(CASE WHEN b.sh IS NOT NULL THEN 1 ELSE 0 END)
-         |    AS BIGINT) AS n_matched,
-         |  CAST(CAST(SUM(CASE WHEN b.sh IS NOT NULL THEN 1 ELSE 0 END)
-         |    / CAST(COUNT(*) AS DOUBLE) AS DECIMAL(18,9)) AS DOUBLE)
-         |    AS overlap_frac
-         |FROM c LEFT JOIN b ON b.sh = c.sh
-         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
-
-    // every stage replayed: URL chain (q227), HTML chain (q235),
-    // first-fetch window, marker scores (q25), quality formula (q26),
-    // content-dedup window (q174) — assembled end-to-end
-    // pinned 8-plane/4-table buckets replayed with literal plane
-    // constants (the q22/q24 machinery), candidates split new >= 400
-    // vs ref < 400, exact-cosine verify — the store path must produce
-    // exactly what a from-scratch cross-frame run produces
-    "q244_embed_store_neardup" ->
-      s"""WITH raw AS (
-         |${lshBucketsCte(4, 8, 64)}),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS ia, b.vec_id AS ib
-         |  FROM raw a JOIN raw b
-         |    ON a.t = b.t AND a.bkt = b.bkt
-         |   AND a.vec_id >= 400 AND b.vec_id < 400),
-         |p AS (
-         |  SELECT ia, ib, x.embedding AS ea, y.embedding AS eb FROM cand
-         |  JOIN embeddings x ON x.vec_id = ia
-         |  JOIN embeddings y ON y.vec_id = ib),
-         |${cosineCtes("p")}
-         |SELECT ia AS new_id, ib AS ref_id FROM d
-         |WHERE dot / (sqrt(na) * sqrt(nb)) >= 0.3
-         |ORDER BY new_id, ref_id""".stripMargin,
-
-    // the merge must equal the FULL recompute: q50's recursive-CTE
-    // connected components over the complete pair set (both batches)
-    "q245_merge_clusters" ->
-      s"""WITH RECURSIVE p AS (
-         |${minhashOracle(12, 4)}
-         |),
-         |und AS (SELECT id_a AS a, id_b AS b FROM p
-         |        UNION SELECT id_b, id_a FROM p),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
-         |SELECT a AS id, LEAST(a, MIN(b)) AS component
-         |FROM reach GROUP BY a ORDER BY id""".stripMargin,
-
-    // brute hamming over the fingerprints, directional (new >= 200 vs
-    // ref < 200) — pigeonhole chunk blocking is complete within the
-    // radius, so the store path must match the exhaustive join
-    "q246_simhash_store_neardup" ->
-      s"""WITH $toksCte,
-         |${simhashCtes(60)}
-         |SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS ref_id
-         |FROM sim a JOIN sim b
-         |  ON a.doc_id >= 200 AND b.doc_id < 200
-         | AND bit_count(xor(a.simhash, b.simhash)) <= 3
-         |ORDER BY new_id, ref_id""".stripMargin,
-
-    // every preset stage replayed: pinned-plane buckets (q22/q244
-    // machinery), exact-cosine pair verify, q50's recursive CC,
-    // q225's keep-best window, brute-cosine decon vs the bench slice
-    // (the broadcast path IS exact), q39's hash-sample arithmetic
-    "q249_embed_curate" -> embedCurateOracle,
-
-    // the incremental chain (bootstrap on ref + one delta batch) must
-    // equal the one-shot preset on the union — SAME oracle as q249
-    "q253_embed_curate_incremental" -> embedCurateOracle,
-
-    // every hook stage replayed in the engine's order: line dedup
-    // (q239 chain) -> paragraph dedup (q236 chain) -> langId ->
-    // quality -> content dedup. The URL canon stage is a no-op on
-    // this fixture (all urls distinct) and not part of the output,
-    // so the oracle does not repeat the q227/q243 chain replay.
-    "q248_web_curate_structured" -> {
-      val scores = TextFunctions.LangMarkers.map { case (lang, ms) =>
-        val lst = ms.map(m => s"'$m'").mkString(", ")
-        s"len(list_filter(t, x -> list_contains([$lst], x))) AS s_$lang"
-      }.mkString(",\n  ")
-      val langs = TextFunctions.LangMarkers.map(_._1)
-      val best = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-      val total = langs.map("s_" + _).mkString(" + ")
-      val cases = langs.map(l =>
-        s"WHEN ($total) > 0 AND s_$l = $best THEN '$l'").mkString("\n    ")
-      val stop = TextFunctions.Stopwords.map(m => s"'$m'").mkString(", ")
-      s"""WITH d0 AS (SELECT doc_id, text,
-         |  'site navigation menu' || chr(10) || text || chr(10) ||
-         |  'site navigation menu' || chr(10) || chr(10) ||
-         |  CASE doc_id % 3 WHEN 0 THEN 'follow us on social media'
-         |    WHEN 1 THEN 'all rights reserved worldwide'
-         |    ELSE 'contact support for help' END AS mtext
-         |  FROM documents WHERE doc_id < 240),
-         |ld AS (SELECT doc_id, array_to_string(list_filter(
-         |    string_split(mtext, chr(10)),
-         |    (x, i) -> x = '' OR NOT list_contains(
-         |      string_split(mtext, chr(10))[1:i-1], x)), chr(10)) AS lt
-         |  FROM d0),
-         |sp AS (SELECT doc_id,
-         |  string_split(lt, chr(10) || chr(10)) AS parts FROM ld),
-         |p AS (SELECT doc_id, i AS pos, parts[i] AS para
-         |  FROM sp, UNNEST(range(1, len(parts) + 1)) AS u(i)
-         |  WHERE trim(parts[i]) <> ''),
-         |k AS (SELECT doc_id, pos, para, row_number() OVER (
-         |    PARTITION BY md5(para) ORDER BY doc_id, pos) AS rk FROM p),
-         |cl AS (SELECT doc_id,
-         |  string_agg(para, chr(10) || chr(10) ORDER BY pos) AS ct
-         |  FROM k WHERE rk = 1 GROUP BY doc_id),
-         |tk AS (SELECT doc_id, ct,
-         |  list_filter(string_split(ct, ' '), x -> x <> '') AS t
-         |  FROM cl),
-         |sc AS (SELECT doc_id, ct, t, $scores FROM tk),
-         |lg AS (SELECT doc_id, ct, t,
-         |  CASE $cases ELSE 'und' END AS predicted FROM sc),
-         |ql AS (SELECT doc_id, ct, predicted,
-         |  CAST(len(list_filter(t, x -> list_contains([$stop], x)))
-         |    AS DOUBLE) / greatest(CAST(len(t) AS DOUBLE), 1.0) * 0.4
-         |  + CAST(length(regexp_replace(ct, '[^A-Za-z]', '', 'g'))
-         |    AS DOUBLE) / greatest(CAST(length(ct) AS DOUBLE), 1.0)
-         |    * 0.4
-         |  + least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) * 0.2
-         |  AS quality FROM lg),
-         |g AS (SELECT * FROM ql
-         |  WHERE predicted = 'en' AND quality >= 0.3),
-         |dd AS (SELECT *, row_number() OVER (
-         |  PARTITION BY md5(ct) ORDER BY doc_id) AS rn FROM g)
-         |SELECT doc_id, ct AS clean_text,
-         |  predicted AS predicted_lang, quality
-         |FROM dd WHERE rn = 1 ORDER BY doc_id""".stripMargin
-    },
-
-    // the dHash replayed from the pixel formula: 9x7 grayscale cells
-    // map 1:1 onto the 8x7 gradient grid, and r=g=b makes the
-    // luminance compare monotonic in the formula value — so the
-    // oracle never decodes an image, it rebuilds the 56-bit hash with
-    // integer sums and brute-joins on hamming
-    "q247_media_phash_neardup" ->
-      """WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 200),
-        |px AS (
-        |  SELECT doc_id, u.x, w.y,
-    |    CASE WHEN doc_id >= 100
-        |           AND u.x = (doc_id % 100) % 9
-        |           AND w.y = (doc_id % 100) % 7
-        |      THEN (((doc_id % 100)*31
-        |             + u.x*(17 + (doc_id % 100) % 13 * 29)
-        |             + w.y*13) % 251 + 3) % 251
-        |      ELSE ((doc_id % 100)*31
-        |            + u.x*(17 + (doc_id % 100) % 13 * 29)
-        |            + w.y*13) % 251 END AS v
-        |  FROM d, UNNEST(range(0, 9)) u(x), UNNEST(range(0, 7)) w(y)),
-        |bits AS (
-        |  SELECT a.doc_id, (a.y * 8 + a.x) AS j,
-        |    CASE WHEN b.v > a.v THEN 1 ELSE 0 END AS bit
-        |  FROM px a JOIN px b
-        |    ON b.doc_id = a.doc_id AND b.y = a.y AND b.x = a.x + 1
-        |  WHERE a.x < 8),
-        |ph AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CASE WHEN bit = 1
-        |      THEN (1::BIGINT << CAST(j AS INT)) ELSE 0 END) AS BIGINT)
-        |      AS phash
-        |  FROM bits GROUP BY doc_id)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-        |FROM ph a JOIN ph b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.phash, b.phash)) <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // the q247 pixel-formula hash replay extended to the delta ids,
-    // then brute DIRECTIONAL hamming (new >= 200 vs ref < 200) —
-    // pigeonhole chunk blocking is complete within the radius, so the
-    // store path must match the exhaustive join
-    "q250_media_store_neardup" ->
-      """WITH d AS (SELECT doc_id FROM documents WHERE doc_id < 300),
-        |px AS (
-        |  SELECT doc_id, u.x, w.y,
-        |    CASE WHEN doc_id >= 100
-        |           AND u.x = (doc_id % 100) % 9
-        |           AND w.y = (doc_id % 100) % 7
-        |      THEN (((doc_id % 100)*31
-        |             + u.x*(17 + (doc_id % 100) % 13 * 29)
-        |             + w.y*13) % 251 + 3) % 251
-        |      ELSE ((doc_id % 100)*31
-        |            + u.x*(17 + (doc_id % 100) % 13 * 29)
-        |            + w.y*13) % 251 END AS v
-        |  FROM d, UNNEST(range(0, 9)) u(x), UNNEST(range(0, 7)) w(y)),
-        |bits AS (
-        |  SELECT a.doc_id, (a.y * 8 + a.x) AS j,
-        |    CASE WHEN b.v > a.v THEN 1 ELSE 0 END AS bit
-        |  FROM px a JOIN px b
-        |    ON b.doc_id = a.doc_id AND b.y = a.y AND b.x = a.x + 1
-        |  WHERE a.x < 8),
-        |ph AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CASE WHEN bit = 1
-        |      THEN (1::BIGINT << CAST(j AS INT)) ELSE 0 END) AS BIGINT)
-        |      AS phash
-        |  FROM bits GROUP BY doc_id)
-        |SELECT a.doc_id AS new_id, b.doc_id AS ref_id,
-        |  CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-        |FROM ph a JOIN ph b ON a.doc_id >= 200 AND b.doc_id < 200
-        |WHERE bit_count(xor(a.phash, b.phash)) <= 3
-        |ORDER BY new_id, ref_id""".stripMargin,
-
-    "q243_web_curate" -> webCurateOracle,
-
-    // the incremental crawl chain must equal the one-shot preset on
-    // the union — SAME oracle text as q243 (shared helper)
-    "q254_web_curate_incremental" -> webCurateOracle,
-
-    // bucket replay via hyperBucketSql (bit-exact sign tests, the q24
-    // pattern), candidate equi-join, then the q240 margin windows
-    // over candidates only
-    "q242_bitext_lsh" -> bitextLshOracle,
-
-    // the store path is bit-identical to the recompute path by
-    // construction — SAME oracle text as q242 (shared helper)
-    "q251_bitext_store" -> bitextLshOracle,
-
-    // the store path replays q241's pairs from saved segments — SAME
-    // oracle (shared helper would hide the q241 text; it is one string)
-    "q255_fuzzy_store" ->
-      """WITH u AS (SELECT doc_id,
-        |  'prod' || (doc_id // 6) ||
-        |  CASE doc_id % 6 WHEN 0 THEN '-alpha' WHEN 1 THEN '-alphA'
-        |    WHEN 2 THEN '-alpha7' WHEN 3 THEN '-alph' WHEN 4 THEN '-beta'
-        |    ELSE '-gamma' END AS code
-        |  FROM documents WHERE doc_id < 360)
-        |SELECT a.doc_id AS new_id, b.doc_id AS ref_id
-        |FROM u a JOIN u b ON a.doc_id >= 177 AND b.doc_id < 177
-        |WHERE abs(len(a.code) - len(b.code)) <= 1
-        |  AND levenshtein(a.code, b.code) <= 1
-        |ORDER BY new_id, ref_id""".stripMargin,
-
-    // brute-force cross levenshtein ground truth (proves the
-    // directional blocking recall-complete)
-    "q241_incremental_fuzzy" ->
-      """WITH u AS (SELECT doc_id,
-        |  'prod' || (doc_id // 6) ||
-        |  CASE doc_id % 6 WHEN 0 THEN '-alpha' WHEN 1 THEN '-alphA'
-        |    WHEN 2 THEN '-alpha7' WHEN 3 THEN '-alph' WHEN 4 THEN '-beta'
-        |    ELSE '-gamma' END AS code
-        |  FROM documents WHERE doc_id < 360)
-        |SELECT a.doc_id AS new_id, b.doc_id AS ref_id
-        |FROM u a JOIN u b ON a.doc_id >= 177 AND b.doc_id < 177
-        |WHERE abs(len(a.code) - len(b.code)) <= 1
-        |  AND levenshtein(a.code, b.code) <= 1
-        |ORDER BY new_id, ref_id""".stripMargin,
-
-    // independent replay: brute cross cosines, both rank directions,
-    // neighborhood averages, ratio margin — all in SQL windows
-    "q240_bitext_mining" ->
-      s"""WITH a AS (SELECT vec_id, embedding FROM embeddings
-         |  WHERE vec_id < 40),
-         |b AS (SELECT vec_id, embedding FROM embeddings
-         |  WHERE vec_id >= 40 AND vec_id < 80),
-         |p AS (SELECT a.vec_id AS ia, b.vec_id AS ib,
-         |  a.embedding AS ea, b.embedding AS eb FROM a, b),
-         |${cosineCtes("p")},
-         |s AS (SELECT ia AS a_id, ib AS b_id,
-         |  dot / (sqrt(na) * sqrt(nb)) AS cos FROM d),
-         |r AS (SELECT a_id, b_id, cos,
-         |  row_number() OVER (PARTITION BY a_id
-         |    ORDER BY cos DESC, b_id) AS rab,
-         |  row_number() OVER (PARTITION BY b_id
-         |    ORDER BY cos DESC, a_id) AS rba FROM s),
-         |av AS (SELECT a_id, b_id, cos, rab, rba,
-         |  avg(CASE WHEN rab <= 4 THEN cos END)
-         |    OVER (PARTITION BY a_id) AS avga,
-         |  avg(CASE WHEN rba <= 4 THEN cos END)
-         |    OVER (PARTITION BY b_id) AS avgb FROM r),
-         |m AS (SELECT a_id, b_id, cos,
-         |  cos / (avga / 2 + avgb / 2) AS margin
-         |  FROM av WHERE rab = 1 AND rba = 1)
-         |SELECT a_id, b_id,
-         |  CAST(CAST(cos AS DECIMAL(18,9)) AS DOUBLE) AS cos,
-         |  CAST(CAST(margin AS DECIMAL(18,9)) AS DOUBLE) AS margin
-         |FROM m WHERE margin >= 1.0 ORDER BY a_id""".stripMargin,
-
-    // DuckDB's 1-based index lambda replays the prefix check exactly
-    "q239_line_dedup_in_doc" ->
-      """WITH d AS (SELECT doc_id,
-        |  'site navigation menu' || chr(10) || text || chr(10) ||
-        |  'site navigation menu' || chr(10) || '' || chr(10) ||
-        |  'site navigation menu' || chr(10) || text || chr(10) ||
-        |  'footer line' AS mtext
-        |  FROM documents)
-        |SELECT doc_id, array_to_string(list_filter(
-        |  string_split(mtext, chr(10)),
-        |  (x, i) -> x = '' OR NOT list_contains(
-        |    string_split(mtext, chr(10))[1:i-1], x)), chr(10)) AS clean
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // positional window replay: 1-based starts, covered = [j, j+2],
-    // anti-join on (doc, pos), ordered reassembly, husks filled empty
-    "q238_redact_contaminated" ->
-      s"""WITH $toksCte,
-         |w AS (SELECT doc_id, i AS j, array_to_string(t[i:i+2], ' ')
-         |    AS sh
-         |  FROM toks, UNNEST(range(1, len(t) - 1)) AS u(i)
-         |  WHERE len(t) >= 3),
-         |b AS (SELECT DISTINCT sh FROM w WHERE doc_id < 100),
-         |cw AS (SELECT doc_id, j FROM w
-         |  WHERE doc_id >= 100 AND sh IN (SELECT sh FROM b)),
-         |cov AS (SELECT DISTINCT doc_id, j + o AS pos
-         |  FROM cw, UNNEST(range(0, 3)) AS v(o)),
-         |tp AS (SELECT doc_id, i AS pos, t[i] AS tok
-         |  FROM toks, UNNEST(range(1, len(t) + 1)) AS u(i)
-         |  WHERE doc_id >= 100),
-         |k AS (SELECT tp.doc_id, tp.pos, tp.tok FROM tp
-         |  LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.pos = tp.pos
-         |  WHERE cov.pos IS NULL),
-         |agg AS (SELECT doc_id,
-         |  string_agg(tok, ' ' ORDER BY pos) AS clean,
-         |  CAST(count(*) AS BIGINT) AS n_tokens_kept
-         |  FROM k GROUP BY doc_id)
-         |SELECT d.doc_id, COALESCE(agg.clean, '') AS clean,
-         |  CAST(COALESCE(agg.n_tokens_kept, 0) AS BIGINT)
-         |    AS n_tokens_kept
-         |FROM documents d LEFT JOIN agg ON agg.doc_id = d.doc_id
-         |WHERE d.doc_id >= 100 ORDER BY d.doc_id""".stripMargin,
-
-    // the q19 band-join candidates, then the per-coordinate agreement
-    // count against the signature CTE — an independent estimate replay
-    "q233_minhash_estimate" -> {
-      val eq = (0 until 12).map(i =>
-        s"(CASE WHEN sa.mh$i = sb.mh$i THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH ${minhashBandsCtes(12, 4)},
-         |p AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM bands a JOIN bands b
-         |  ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id)
-         |SELECT p.id_a, p.id_b,
-         |  CAST(CAST(($eq) / 12.0 AS DECIMAL(18,9)) AS DOUBLE)
-         |    AS est_jaccard
-         |FROM p JOIN sigs sa ON sa.doc_id = p.id_a
-         |JOIN sigs sb ON sb.doc_id = p.id_b
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    // the oracle regenerates the +-1 sign matrix from the same md5
-    // parity recipe (driver-folded literals on the Spark side) and
-    // sums in the identical index order
-    "q234_random_projection" -> {
-      val scale = 1.0 / math.sqrt(16.0)
-      val legs = (0 until 16).map { j =>
-        val row = graft.ops.RandomProjection.signRow(0, j, 64)
-        val dot = row.zipWithIndex.map { case (sgn, i) =>
-          s"CAST(embedding[${i + 1}] AS DOUBLE)*($sgn)" }.mkString(" + ")
-        s"SELECT vec_id, $j AS j, CAST(CAST(($dot) * $scale " +
-          s"AS DECIMAL(14,6)) AS DOUBLE) AS coord FROM embeddings"
-      }.mkString("\nUNION ALL\n")
-      s"""SELECT vec_id, j, coord FROM (
-         |$legs
-         |) ORDER BY vec_id, j""".stripMargin
-    },
-
-    // identical lookaround-free chain in RE2: script/style/comment
-    // blocks, tag strip, entity decode (&amp; last), whitespace fold
-    "q235_html_strip" ->
-      """WITH h AS (SELECT doc_id,
-        |  '<html><head><style>p{color:red}</style>' ||
-        |  '<script type="text/javascript">var x=1 && 2;</script>' ||
-        |  '</head><body><h1>Doc ' || doc_id ||
-        |  '</h1><!-- hidden --><p>' || text ||
-        |  ' &amp; more &lt;tags&gt;&nbsp;&#39;quoted&#39;' ||
-        |  '</p></body></html>' AS html
-        |  FROM documents WHERE doc_id < 400),
-        |s1 AS (SELECT doc_id, regexp_replace(html,
-        |  '(?is)<script[^>]*>.*?</script>', ' ', 'g') AS c FROM h),
-        |s2 AS (SELECT doc_id, regexp_replace(c,
-        |  '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS c FROM s1),
-        |s3 AS (SELECT doc_id, regexp_replace(c,
-        |  '(?s)<!--.*?-->', ' ', 'g') AS c FROM s2),
-        |s4 AS (SELECT doc_id, regexp_replace(c,
-        |  '<[^>]*>', ' ', 'g') AS c FROM s3),
-        |s5 AS (SELECT doc_id, regexp_replace(regexp_replace(
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |  c, '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'),
-        |  '&#39;', CHR(39), 'g'), '&nbsp;', ' ', 'g'), '&amp;', '&',
-        |  'g') AS c FROM s4)
-        |SELECT doc_id,
-        |  trim(regexp_replace(c, '\s+', ' ', 'g')) AS clean
-        |FROM s5 ORDER BY doc_id""".stripMargin,
-
-    // paragraph-granularity replay: 1-based unnest with position,
-    // min-(doc, pos) winner per md5(paragraph), ordered reassembly
-    "q236_paragraph_dedup" ->
-      """WITH d AS (SELECT doc_id,
-        |  text || chr(10) || chr(10) ||
-        |  'subscribe to our newsletter today' || chr(10) || chr(10) ||
-        |  CASE doc_id % 3 WHEN 0 THEN 'follow us on social media'
-        |    WHEN 1 THEN 'all rights reserved worldwide'
-        |    ELSE 'contact support for help' END AS mtext
-        |  FROM documents),
-        |sp AS (SELECT doc_id,
-        |  string_split(mtext, chr(10) || chr(10)) AS parts FROM d),
-        |p AS (SELECT doc_id, i AS pos, parts[i] AS para
-        |  FROM sp, UNNEST(range(1, len(parts) + 1)) AS u(i)
-        |  WHERE trim(parts[i]) <> ''),
-        |k AS (SELECT doc_id, pos, para, row_number() OVER (
-        |    PARTITION BY md5(para) ORDER BY doc_id, pos) AS rk FROM p)
-        |SELECT doc_id,
-        |  string_agg(para, chr(10) || chr(10) ORDER BY pos) AS clean,
-        |  CAST(COUNT(*) AS BIGINT) AS n_kept
-        |FROM k WHERE rk = 1
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // brute-force levenshtein over all id-ordered pairs (the length
-    // prefilter only skips pairs the distance bound already excludes)
-    "q229_fuzzy_dedup" ->
-      """WITH u AS (SELECT doc_id,
-        |  'prod' || (doc_id // 6) ||
-        |  CASE doc_id % 6 WHEN 0 THEN '-alpha' WHEN 1 THEN '-alphA'
-        |    WHEN 2 THEN '-alpha7' WHEN 3 THEN '-alph' WHEN 4 THEN '-beta'
-        |    ELSE '-gamma' END AS code
-        |  FROM documents WHERE doc_id < 360)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        |FROM u a JOIN u b ON a.doc_id < b.doc_id
-        |WHERE abs(len(a.code) - len(b.code)) <= 1
-        |  AND levenshtein(a.code, b.code) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // the oracle rebuilds the caseLevel struct key in SQL: primary =
-    // lower(tag), case level = the per-letter bit pattern with the
-    // caseFirst-upper relabeling ('0' for uppercase, '1' otherwise —
-    // the fixture is pure ASCII letters, so [A-Z] IS \p{Lu} here)
-    "q204_collation_casefirst" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CASE doc_id % 6 WHEN 0 THEN 'alpha' WHEN 1 THEN 'Alpha'
-        |      WHEN 2 THEN 'ALPHA' WHEN 3 THEN 'beta' WHEN 4 THEN 'Beta'
-        |      ELSE 'ALPHa' END AS tag
-        |  FROM documents WHERE doc_id < 300)
-        |SELECT doc_id, tag FROM t
-        |ORDER BY lower(tag),
-        |  regexp_replace(regexp_replace(tag, '[^A-Z]', '1', 'g'),
-        |    '[A-Z]', '0', 'g'),
-        |  doc_id""".stripMargin,
-
-    // same honest-reduction pattern as q197: the fixture derives its
-    // words from doc_id, so Snowball stem-equivalence reduces to
-    // membership in the inflection group whose stem matches an analyzed
-    // query term (trabaj / gener); the stemmer itself is pinned by unit
-    // specs on published-algorithm pairs, and the stop slot must never
-    // match
-    "q202_search_spanish_stemming" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 2)
-        |  OR ((doc_id // 20) % 6) IN (0, 1))
-        |ORDER BY doc_id""".stripMargin,
-
-    // phrase adjacency in the stop-removed stemmed stream: the middle
-    // slot is always a stop word, so the phrase [nazional, possibil]
-    // matches exactly when slot 1 is in the nazionale group (nazione
-    // stems to nazion — NOT a member, the published ale/e split) AND
-    // slot 3 is in the possibilità group
-    "q203_text_language_italian" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND
-        |  (doc_id % 5) IN (0, 1)
-        |  AND ((doc_id // 20) % 5) IN (0, 1)
-        |ORDER BY doc_id""".stripMargin,
-
-    // the fixture derives its words from doc_id, so the oracle rebuilds
-    // the same selection and bigram OVERLAP reduces, ON THIS FIXTURE,
-    // to slot membership: of the five CJK slots only 数据处理 / 处理数据
-    // / 数据分析 share a bigram with the query's [数据, 据处, 处理]
-    // (机器学习 and 学习机器 share none — same characters reordered is
-    // NOT enough, the bigrams differ), plus the English word slot
-    // matching 'engine' through the same analyzer; the tokenizer itself
-    // is pinned by unit specs
-    "q201_search_cjk_bigrams" ->
-      """SELECT doc_id FROM documents
-        |WHERE doc_id < 400 AND (
-        |  (doc_id % 5) IN (0, 1, 4)
-        |  OR ((doc_id // 5) % 4) = 3)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q186_search_score_details" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('stream', 'filter')
-        |  GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |bm AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS bm25
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id),
-        |ph AS (
-        |  SELECT doc_id, CAST(len(list_filter(range(1, len(t)), i ->
-        |    t[i] = 'hash' AND t[i + 1] = 'join')) AS DOUBLE) AS occ
-        |  FROM tk),
-        |m AS (
-        |  SELECT b.doc_id, b.bm25, COALESCE(p.occ, 0) AS occ
-        |  FROM bm b JOIN ph p USING (doc_id)),
-        |legs AS (
-        |  SELECT doc_id, bm25 + occ AS total,
-        |    'must.text' AS leg_desc, bm25 AS lv FROM m
-        |  UNION ALL
-        |  SELECT doc_id, bm25 + occ, 'should.phrase', occ FROM m)
-        |SELECT doc_id,
-        |  CAST(CAST(total AS DECIMAL(18,9)) AS DOUBLE) AS total,
-        |  leg_desc,
-        |  CAST(CAST(lv AS DECIMAL(18,9)) AS DOUBLE) AS leg_value
-        |FROM legs ORDER BY doc_id, leg_desc""".stripMargin,
-
-    // same predicate in DuckDB terms: token starts with the pinned 'st'
-    // and one of its prefixes of length 4/5/6 (term length 5 ± 1) is
-    // within levenshtein distance 1 of 'strae'
-    "q188_autocomplete_fuzzy" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents)
-        |SELECT doc_id FROM tk
-        |WHERE len(list_filter(t, x -> x[1:2] = 'st'
-        |  AND (levenshtein(x[1:4], 'strae') <= 1
-        |    OR levenshtein(x[1:5], 'strae') <= 1
-        |    OR levenshtein(x[1:6], 'strae') <= 1))) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "q185_autocomplete_seq" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents)
-        |SELECT doc_id FROM tk
-        |WHERE len(list_filter(range(1, len(t) + 1), i ->
-        |  i + 1 <= len(t) AND starts_with(t[i], 'strea')
-        |  AND starts_with(t[i + 1], 'filte'))) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "q184_text_matchall" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('stream', 'filter')
-        |  GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |sc AS (
-        |  SELECT doc_id, COUNT(*) AS nterms,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS score
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE)
-        |  AS score
-        |FROM sc WHERE nterms = 2
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q183_lookup_array" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    [doc_id % 25, (doc_id * 7) % 25] AS keys FROM documents),
-        |e AS (SELECT doc_id, unnest(keys) AS k FROM d),
-        |e2 AS (SELECT DISTINCT doc_id, k FROM e),
-        |m AS (SELECT e2.doc_id, n.n_name
-        |      FROM e2 JOIN nation n ON n.n_nationkey = e2.k)
-        |SELECT doc_id, COUNT(*) AS n, MIN(n_name) AS nn
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q182_search_multipath" ->
-      """WITH tk AS (
-        |  SELECT doc_id, n_chars, source,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |sc AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(t, x -> x = 'stream'))
-        |      + CASE WHEN source = 'stream' THEN 1 ELSE 0 END AS DOUBLE)
-        |    + (100.0/(100.0 + abs(n_chars - 300))
-        |      + 100.0/(100.0 + abs(doc_id - 300))) AS score,
-        |    len(list_filter(t, x -> x = 'stream'))
-        |      + CASE WHEN source = 'stream' THEN 1 ELSE 0 END AS occ
-        |  FROM tk)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE)
-        |  AS score
-        |FROM sc WHERE occ > 0 ORDER BY doc_id""".stripMargin,
-
-    "q181_search_analyzer" ->
-      """WITH tk AS (
-        |  SELECT doc_id, lang,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        |  FROM documents)
-        |SELECT doc_id FROM tk
-        |WHERE (list_contains(t, 'stream') OR list_contains(t, 'filter'))
-        |  AND lang = 'en'
-        |ORDER BY doc_id""".stripMargin,
-
-    "q177_stream_ivf" ->
-      s"""WITH c AS (
-         |  SELECT vec_id AS cid, embedding AS ce FROM embeddings
-         |  WHERE vec_id < 4),
-         |p AS (
-         |  SELECT e.vec_id AS ia, c.cid AS ib,
-         |         e.embedding AS ea, c.ce AS eb
-         |  FROM embeddings e, c),
-         |${cosineCtes("p")},
-         |r AS (
-         |  SELECT ia AS vec_id, ib AS centroid_id,
-         |    row_number() OVER (PARTITION BY ia
-         |      ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib) AS rn
-         |  FROM d)
-         |SELECT vec_id, centroid_id FROM r WHERE rn = 1
-         |ORDER BY vec_id""".stripMargin,
-
-    "q176_search_synonyms" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl,
-        |    CASE WHEN term IN ('merge', 'join') THEN 'merge'
-        |         WHEN term = 'stream' THEN 'stream' END AS qterm,
-        |    COUNT(*) AS tf
-        |  FROM toks
-        |  WHERE term IN ('merge', 'join', 'stream')
-        |  GROUP BY doc_id, dl, qterm),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT qterm, COUNT(*) AS df FROM hits GROUP BY qterm),
-        |sc AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS score
-        |  FROM hits JOIN dfreq USING (qterm), stats GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM sc ORDER BY score DESC, doc_id LIMIT 30""".stripMargin,
-
-    "q175_extended_json" ->
-      """SELECT event_id, event_type FROM events
-        |WHERE ts > TIMESTAMP '2024-01-02 00:00:00'
-        |  AND event_type = 'error' AND event_id < 4000
-        |ORDER BY event_id""".stripMargin,
-
-    "q174_curation" -> {
-      val scores = TextFunctions.LangMarkers.map { case (lang, ms) =>
-        val lst = ms.map(m => s"'$m'").mkString(", ")
-        s"len(list_filter(t, x -> list_contains([$lst], x))) AS s_$lang"
-      }.mkString(",\n  ")
-      val langs = TextFunctions.LangMarkers.map(_._1)
-      val best = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-      val total = langs.map("s_" + _).mkString(" + ")
-      val cases = langs.map(l =>
-        s"WHEN ($total) > 0 AND s_$l = $best THEN '$l'").mkString("\n    ")
-      val stop = TextFunctions.Stopwords.map(m => s"'$m'").mkString(", ")
-      s"""WITH $toksCte,
-         |s AS (SELECT doc_id, $scores FROM toks),
-         |lid AS (SELECT doc_id,
-         |  CASE $cases ELSE 'und' END AS predicted_lang FROM s),
-         |q AS (SELECT d.doc_id,
-         |  CAST(len(list_filter(t, x -> list_contains([$stop], x)))
-         |    AS DOUBLE) / greatest(CAST(len(t) AS DOUBLE), 1.0) * 0.4
-         |  + CAST(length(regexp_replace(d.text, '[^A-Za-z]', '', 'g'))
-         |    AS DOUBLE) / greatest(CAST(length(d.text) AS DOUBLE), 1.0)
-         |    * 0.4
-         |  + least(CAST(len(t) AS DOUBLE) / 100.0, 1.0) * 0.2 AS quality
-         |  FROM documents d JOIN toks ON toks.doc_id = d.doc_id),
-         |gated AS (SELECT d.doc_id, lid.predicted_lang, q.quality, d.text
-         |  FROM documents d
-         |  JOIN lid ON lid.doc_id = d.doc_id
-         |  JOIN q ON q.doc_id = d.doc_id
-         |  WHERE lid.predicted_lang = 'en' AND q.quality >= 0.5),
-         |dd AS (SELECT *, row_number() OVER (
-         |    PARTITION BY md5(text) ORDER BY doc_id) AS rn FROM gated)
-         |SELECT doc_id, predicted_lang, quality FROM dd
-         |WHERE rn = 1
-         |  AND ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 1000000
-         |    < 500000
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q173_hard_negatives" ->
-      s"""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8),
-         |p AS (
-         |  SELECT q.vec_id AS ia, c.vec_id AS ib, q.embedding AS ea, c.embedding AS eb
-         |  FROM q, embeddings c WHERE c.vec_id <> q.vec_id),
-         |${cosineCtes("p")},
-         |r AS (
-         |  SELECT ia AS query_id, ib AS neighbor_id,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY ia ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib) AS INT) AS rank
-         |  FROM d WHERE dot / (sqrt(na) * sqrt(nb)) < 0.35)
-         |SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q172_temperature_mix" ->
-      """WITH totals AS (SELECT source, CAST(SUM(n_chars) AS BIGINT) AS tok
-        |  FROM documents GROUP BY 1 HAVING SUM(n_chars) > 0),
-        |p AS (SELECT source, tok,
-        |    pow(CAST(tok AS DOUBLE), 0.5) AS w FROM totals),
-        |n AS (SELECT SUM(w) AS norm FROM p),
-        |fr AS (SELECT source, CAST(floor(least(1.0,
-        |    (50000.0 * (w / norm)) / CAST(tok AS DOUBLE)) * 1000000)
-        |    AS BIGINT) AS cutoff FROM p, n)
-        |SELECT d.doc_id, d.source FROM documents d JOIN fr USING (source)
-        |WHERE ('0x'||substr(md5(d.doc_id::VARCHAR),1,15))::BIGINT % 1000000
-        |  < fr.cutoff
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q171_search_count" ->
-      """WITH m AS (SELECT doc_id FROM documents
-        |  WHERE list_contains(list_filter(string_split(text, ' '),
-        |    x -> x <> ''), 'vector'))
-        |SELECT doc_id, (SELECT COUNT(*) FROM m) AS total
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    "q170_search_highlight" ->
-      """WITH tk AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents WHERE doc_id < 120),
-        |hit AS (SELECT doc_id, i, t
-        |  FROM tk, UNNEST(range(1, len(t) + 1)) u(i)
-        |  WHERE t[i] IN ('stream', 'filter')),
-        |rk AS (SELECT doc_id, i, t,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1 AS pos
-        |  FROM hit)
-        |SELECT doc_id, CAST(pos AS INT) AS pos,
-        |  COALESCE(array_to_string(t[greatest(i-2, 1) : i-1], ' '), '')
-        |    AS pre,
-        |  t[i] AS hit,
-        |  COALESCE(array_to_string(t[i+1 : least(i+2, len(t))], ' '), '')
-        |    AS post
-        |FROM rk WHERE pos < 3
-        |ORDER BY doc_id, pos""".stripMargin,
-
-    "q169_stream_quality" ->
-      """WITH tk AS (SELECT doc_id, lang = 'en' AS pos,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |tok AS (SELECT doc_id, pos, unnest(t) AS w FROM tk),
-        |voc AS (SELECT w,
-        |    SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS cp,
-        |    SUM(CASE WHEN NOT pos THEN 1 ELSE 0 END) AS cn
-        |  FROM tok GROUP BY w),
-        |pri AS (SELECT ln(
-        |    (SUM(CASE WHEN pos THEN 1 ELSE 0 END) + 1.0) /
-        |    (SUM(CASE WHEN NOT pos THEN 1 ELSE 0 END) + 1.0)) AS prior
-        |  FROM tk),
-        |sc AS (SELECT doc_id, COUNT(*) AS n,
-        |    CAST(SUM(CAST(ln((cp + 1.0) / (cn + 1.0))
-        |      AS DECIMAL(28,12))) AS DOUBLE) AS s
-        |  FROM tok JOIN voc USING (w) GROUP BY doc_id)
-        |SELECT doc_id, n AS n_tokens,
-        |  CAST(CAST(s + prior AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM sc, pri,
-        |  (SELECT median((s2.s + p2.prior) / s2.n) AS thr
-        |     FROM sc s2, pri p2) t
-        |WHERE (s + prior) / n > t.thr
-        |ORDER BY doc_id""".stripMargin,
-
-    "q168_lookup_concise" ->
-      """SELECT o_orderkey,
-        |  CAST((SELECT COUNT(*) FROM lineitem
-        |    WHERE l_orderkey = o_orderkey AND l_quantity >= 45)
-        |    AS INT) AS n_big
-        |FROM orders WHERE o_orderkey <= 2000
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q167_bucketed_join" ->
-      """SELECT o_orderpriority,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-        |    (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2))))
-        |    AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q166_update_pipeline" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN l_returnflag = 'R' THEN l_linestatus || '-upd'
-        |       ELSE l_linestatus END AS l_linestatus,
-        |  CASE WHEN l_returnflag = 'R' THEN NULL ELSE l_tax END AS l_tax,
-        |  CASE WHEN l_returnflag = 'R' THEN CAST(CAST(
-        |      l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))
-        |      AS DOUBLE) ELSE NULL END AS gross
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q165_ann_pca" ->
-      s"""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
-         |p AS (
-         |  SELECT q.vec_id AS ia, c.vec_id AS ib, q.embedding AS ea, c.embedding AS eb
-         |  FROM q, embeddings c WHERE c.vec_id <> q.vec_id),
-         |d AS (SELECT ia, ib,
-         |  SUM(CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS dot,
-         |  SUM(CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)) AS na,
-         |  SUM(CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS nb,
-         |  SUM((CAST(ea[i] AS DOUBLE) - CAST(eb[i] AS DOUBLE))
-         |    * (CAST(ea[i] AS DOUBLE) - CAST(eb[i] AS DOUBLE))) AS d2
-         |  FROM p, UNNEST(range(1, len(ea)+1)) AS u(i)
-         |  GROUP BY ia, ib),
-         |coarse AS (SELECT *, row_number() OVER (
-         |    PARTITION BY ia ORDER BY d2 ASC, ib ASC) AS cr FROM d),
-         |rr AS (SELECT ia AS query_id, ib AS neighbor_id,
-         |    CAST(row_number() OVER (PARTITION BY ia
-         |      ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib ASC) AS INT)
-         |      AS rank
-         |  FROM coarse WHERE cr <= 40)
-         |SELECT query_id, neighbor_id, rank FROM rr WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q164_pca_norm" ->
-      """WITH e AS (SELECT vec_id,
-        |    unnest(embedding) AS v,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |m AS (SELECT i, AVG(CAST(v AS DOUBLE)) AS mu FROM e GROUP BY i)
-        |SELECT vec_id,
-        |  CAST(CAST(SUM((CAST(v AS DOUBLE) - mu) * (CAST(v AS DOUBLE) - mu))
-        |    AS DECIMAL(14,5)) AS DOUBLE) AS norm2
-        |FROM e JOIN m USING (i)
-        |GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    "q163_nb_quality" ->
-      """WITH tk AS (SELECT doc_id, lang = 'en' AS pos,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |tok AS (SELECT doc_id, pos, unnest(t) AS w FROM tk),
-        |voc AS (SELECT w,
-        |    SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS cp,
-        |    SUM(CASE WHEN NOT pos THEN 1 ELSE 0 END) AS cn
-        |  FROM tok GROUP BY w),
-        |pri AS (SELECT ln(
-        |    (SUM(CASE WHEN pos THEN 1 ELSE 0 END) + 1.0) /
-        |    (SUM(CASE WHEN NOT pos THEN 1 ELSE 0 END) + 1.0)) AS prior
-        |  FROM tk),
-        |sc AS (SELECT doc_id, COUNT(*) AS n,
-        |    CAST(SUM(CAST(ln((cp + 1.0) / (cn + 1.0))
-        |      AS DECIMAL(28,12))) AS DOUBLE) AS s
-        |  FROM tok JOIN voc USING (w) GROUP BY doc_id)
-        |SELECT doc_id, n AS n_tokens,
-        |  CAST(CAST(s + prior AS DECIMAL(18,9)) AS DOUBLE) AS score,
-        |  (s + prior) > 0 AS predicted
-        |FROM sc, pri ORDER BY doc_id""".stripMargin,
-
-    "q162_search_geo" ->
-      """WITH p AS (
-        |  SELECT vec_id,
-        |    CAST(embedding[1] AS DOUBLE) AS x,
-        |    CAST(embedding[2] AS DOUBLE) AS y
-        |  FROM embeddings),
-        |h AS (
-        |  SELECT vec_id, x, y,
-        |    2 * 6371008.8 * asin(sqrt(
-        |      pow(sin(radians(y - 0.2) * 0.5), 2) +
-        |      cos(radians(0.2)) * cos(radians(y)) *
-        |      pow(sin(radians(x - 0.0) * 0.5), 2))) AS hav
-        |  FROM p)
-        |SELECT vec_id,
-        |  CAST(1.0 + CASE WHEN hav <= 30000 THEN 5.0 ELSE 0.0 END
-        |    AS DOUBLE) AS score
-        |FROM h
-        |WHERE x >= -0.5 AND x <= 0.5 AND y >= -0.5 AND y <= 0.5
-        |  AND abs(x) + abs(y) <= 0.4
-        |ORDER BY vec_id""".stripMargin,
-
-    "q161_search_embedded" ->
-      """SELECT l_orderkey AS order_key, CAST(COUNT(*) AS DOUBLE) AS score
-        |FROM lineitem WHERE l_returnflag = 'R' AND l_quantity >= 30
-        |GROUP BY 1 ORDER BY score DESC, order_key LIMIT 50""".stripMargin,
-
-    "q158_convert_format" ->
-      """SELECT doc_id, lower(hex(encode(source))) AS hex_rt,
-        |  to_base64(encode(source)) AS b64_rt, source AS back
-        |FROM documents WHERE doc_id < 50 ORDER BY doc_id""".stripMargin,
-
-    "q156_search_regex_near" ->
-      """WITH tk AS (SELECT doc_id, n_chars,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(CAST(1.0 + 100.0 / (100.0
-        |    + abs(CAST(n_chars AS DOUBLE) - 300.0))
-        |    AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM tk
-        |WHERE len(list_filter(t,
-        |  x -> regexp_full_match(x, 'qu.r[yi]'))) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "q157_search_fuzzy" ->
-      """WITH tk AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-        |    avg(CAST(len(t) AS DOUBLE)) AS avgdl FROM tk),
-        |h AS (
-        |  SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl, 'stream' AS term,
-        |    CAST(len(list_filter(t,
-        |      x -> levenshtein(x, 'stream') <= 1)) AS DOUBLE) AS tf
-        |  FROM tk
-        |  UNION ALL
-        |  SELECT doc_id, CAST(len(t) AS DOUBLE), 'filtr',
-        |    CAST(len(list_filter(t,
-        |      x -> levenshtein(x, 'filtr') <= 1)) AS DOUBLE)
-        |  FROM tk),
-        |dfreq AS (SELECT term,
-        |    CAST(COUNT(*) FILTER (WHERE tf > 0) AS DOUBLE) AS df
-        |  FROM h GROUP BY term),
-        |sc AS (SELECT doc_id,
-        |    SUM(CASE WHEN tf > 0
-        |      THEN ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |        / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-        |      ELSE 0.0 END) AS score
-        |  FROM h JOIN dfreq USING (term), stats GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM sc WHERE score > 0
-        |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q154_rankfusion_details" ->
-      """WITH l AS (SELECT doc_id,
-        |    row_number() OVER (ORDER BY n_chars DESC, doc_id) AS r
-        |  FROM documents QUALIFY r <= 8),
-        |i AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS r
-        |  FROM documents QUALIFY r <= 8),
-        |c AS (SELECT doc_id, 'len' AS pipeline, r, 2.0 AS weight FROM l
-        |  UNION ALL
-        |  SELECT doc_id, 'id' AS pipeline, r, 1.0 AS weight FROM i),
-        |sc AS (SELECT doc_id,
-        |    CAST(SUM(CAST(weight / (60 + r) AS DECIMAL(28,12)))
-        |      AS DOUBLE) AS score
-        |  FROM c GROUP BY 1)
-        |SELECT c.doc_id,
-        |  CAST(CAST(sc.score AS DECIMAL(18,9)) AS DOUBLE) AS score,
-        |  c.pipeline, CAST(c.r AS BIGINT) AS "rank", c.weight,
-        |  CAST(CAST(c.weight / (60 + c.r) AS DECIMAL(18,9)) AS DOUBLE)
-        |    AS value
-        |FROM c JOIN sc USING (doc_id)
-        |ORDER BY doc_id, pipeline""".stripMargin,
-
-    "q155_scorefusion_details" ->
-      """WITH s1 AS (SELECT doc_id,
-        |    CASE WHEN max(CAST(n_chars AS DOUBLE)) OVER ()
-        |        = min(CAST(n_chars AS DOUBLE)) OVER () THEN 0.0
-        |      ELSE (CAST(n_chars AS DOUBLE)
-        |        - min(CAST(n_chars AS DOUBLE)) OVER ())
-        |      / (max(CAST(n_chars AS DOUBLE)) OVER ()
-        |        - min(CAST(n_chars AS DOUBLE)) OVER ()) END AS sc
-        |  FROM documents),
-        |p1 AS (SELECT doc_id, sc,
-        |    row_number() OVER (ORDER BY sc DESC, doc_id) AS rn
-        |  FROM s1 QUALIFY rn <= 8),
-        |s2 AS (SELECT doc_id,
-        |    CASE WHEN max(CAST(doc_id AS DOUBLE) * (-1.0)) OVER ()
-        |        = min(CAST(doc_id AS DOUBLE) * (-1.0)) OVER () THEN 0.0
-        |      ELSE (CAST(doc_id AS DOUBLE) * (-1.0)
-        |        - min(CAST(doc_id AS DOUBLE) * (-1.0)) OVER ())
-        |      / (max(CAST(doc_id AS DOUBLE) * (-1.0)) OVER ()
-        |        - min(CAST(doc_id AS DOUBLE) * (-1.0)) OVER ()) END AS sc
-        |  FROM documents),
-        |p2 AS (SELECT doc_id, sc,
-        |    row_number() OVER (ORDER BY sc DESC, doc_id) AS rn
-        |  FROM s2 QUALIFY rn <= 8),
-        |c AS (SELECT doc_id, 'chars' AS pipeline, sc AS raw,
-        |    3.0 AS weight FROM p1
-        |  UNION ALL
-        |  SELECT doc_id, 'early' AS pipeline, sc, 1.0 AS weight FROM p2),
-        |f AS (SELECT doc_id,
-        |    CAST(SUM(CAST(raw * weight AS DECIMAL(28,12))) AS DOUBLE)
-        |      AS score
-        |  FROM c GROUP BY 1)
-        |SELECT c.doc_id,
-        |  CAST(CAST(f.score AS DECIMAL(18,9)) AS DOUBLE) AS score,
-        |  c.pipeline,
-        |  CAST(CAST(c.raw AS DECIMAL(18,9)) AS DOUBLE) AS raw_score,
-        |  c.weight,
-        |  CAST(CAST(c.raw * c.weight AS DECIMAL(18,9)) AS DOUBLE) AS value
-        |FROM c JOIN f USING (doc_id)
-        |ORDER BY doc_id, pipeline""".stripMargin,
-
-    "q152_score_stage" ->
-      """WITH w AS (SELECT o_orderkey, o_totalprice / 1000.0 AS r
-        |  FROM orders WHERE o_orderkey <= 2000),
-        |m AS (SELECT min(r) AS mn, max(r) AS mx FROM w)
-        |SELECT o_orderkey,
-        |  CAST(CAST((CASE WHEN mx = mn THEN 0.0
-        |    ELSE (r - mn) / (mx - mn) END) * 0.8
-        |    AS DECIMAL(18,9)) AS DOUBLE) AS sc
-        |FROM w, m ORDER BY o_orderkey""".stripMargin,
-
-    "q146_rank_fusion" ->
-      """WITH tk AS (
-        |  SELECT doc_id, n_chars,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('stream', 'filter')
-        |  GROUP BY doc_id, dl, term),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |dfreq AS (
-        |  SELECT term, COUNT(*) AS df FROM hits GROUP BY term),
-        |bm AS (
-        |  SELECT doc_id,
-        |    SUM(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))) AS score
-        |  FROM hits JOIN dfreq USING (term), stats GROUP BY doc_id),
-        |lex AS (
-        |  SELECT doc_id, rr FROM (
-        |    SELECT doc_id,
-        |      row_number() OVER (ORDER BY score DESC, doc_id) AS rr
-        |    FROM bm) WHERE rr <= 20),
-        |len_r AS (
-        |  SELECT doc_id, rr FROM (
-        |    SELECT doc_id,
-        |      row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rr
-        |    FROM tk) WHERE rr <= 20),
-        |u AS (
-        |  SELECT doc_id, rr FROM lex
-        |  UNION ALL SELECT doc_id, rr FROM len_r),
-        |f AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CAST(1.0 / (rr + 60) AS DECIMAL(28,12))) AS DOUBLE)
-        |      AS score
-        |  FROM u GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score
-        |FROM f ORDER BY score DESC, doc_id""".stripMargin,
-
-    "q193_searchmeta_date_facet" ->
-      """WITH m AS (
-        |  SELECT o_orderdate FROM orders WHERE o_totalprice >= 50000),
-        |yb AS (
-        |  SELECT CASE
-        |      WHEN o_orderdate < TIMESTAMP '1995-01-01'
-        |        THEN TIMESTAMP '1993-01-01'
-        |      WHEN o_orderdate < TIMESTAMP '1997-01-01'
-        |        THEN TIMESTAMP '1995-01-01'
-        |      ELSE TIMESTAMP '1997-01-01' END AS b, COUNT(*) AS cnt
-        |  FROM m
-        |  WHERE o_orderdate >= TIMESTAMP '1993-01-01'
-        |    AND o_orderdate < TIMESTAMP '1999-01-01'
-        |  GROUP BY 1)
-        |SELECT 'year' AS facet, CAST(b AS VARCHAR) AS bucket, cnt FROM yb
-        |UNION ALL SELECT 'total', 'all', COUNT(*) FROM m
-        |ORDER BY facet, bucket""".stripMargin,
-
-    "q142_searchmeta_facet" ->
-      """WITH m AS (
-        |  SELECT lang, n_chars FROM documents
-        |  WHERE len(list_filter(list_filter(string_split(text, ' '),
-        |    x -> x <> ''), x -> x = 'stream')) > 0),
-        |lang_b AS (
-        |  SELECT lang AS bucket, COUNT(*) AS cnt FROM m GROUP BY 1
-        |  ORDER BY cnt DESC, bucket LIMIT 3),
-        |len_b AS (
-        |  SELECT CASE WHEN n_chars < 200 THEN 0.0
-        |              WHEN n_chars < 400 THEN 200.0
-        |              ELSE 400.0 END AS b, COUNT(*) AS cnt
-        |  FROM m WHERE n_chars >= 0 AND n_chars < 600 GROUP BY 1)
-        |SELECT 'lang' AS facet, bucket, cnt FROM lang_b
-        |UNION ALL SELECT 'len', CAST(b AS VARCHAR), cnt FROM len_b
-        |UNION ALL SELECT 'total', 'all', COUNT(*) FROM m
-        |ORDER BY facet, bucket""".stripMargin,
-
-    "q143_search_structured" ->
-      """SELECT doc_id, CAST(1.0 +
-        |  CASE WHEN contains(text, 'vector scan')
-        |    THEN ((len(text) - len(replace(text, 'vector scan', '')))
-        |          / 11.0) * 5.0
-        |    ELSE 0 END AS DOUBLE) AS score
-        |FROM documents
-        |WHERE lang IN ('en', 'fr')
-        |  AND n_chars >= 100 AND n_chars < 400
-        |  AND source IS NOT NULL
-        |ORDER BY doc_id""".stripMargin,
-
-    "q140_search_wildcard_auto" ->
-      """SELECT doc_id, CAST(
-        |    (CASE WHEN contains(text, 'vector scan') THEN 1.0 ELSE 0 END)
-        |  + (CASE WHEN len(list_filter(string_split(text, ' '),
-        |        x -> x LIKE 'custom%')) > 0 THEN 1.0 ELSE 0 END)
-        |  AS DOUBLE) AS score
-        |FROM documents
-        |WHERE contains(text, 'vector scan')
-        |   OR len(list_filter(string_split(text, ' '),
-        |        x -> x LIKE 'custom%')) > 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "q118_geonear" ->
-      """WITH c AS (
-        |  SELECT c_custkey,
-        |    (c_custkey % 360) - 179.5 AS lon,
-        |    (c_custkey % 170) - 84.75 AS lat
-        |  FROM customer WHERE c_mktsegment = 'BUILDING'
-        |), d AS (
-        |  SELECT c_custkey AS _id,
-        |    2 * 6371008.8 * asin(sqrt(
-        |      pow(sin(radians(lat - 41.9) * 0.5), 2) +
-        |      cos(radians(41.9)) * cos(radians(lat)) *
-        |      pow(sin(radians(lon - 12.5) * 0.5), 2))) AS dist
-        |  FROM c
-        |)
-        |SELECT _id, CAST(round(dist / 1000.0, 0) AS BIGINT) AS dist_km
-        |FROM d WHERE dist <= 8000000.0 ORDER BY _id""".stripMargin,
-
-    "q119_select_elemmatch" ->
-      """SELECT vec_id,
-        |  CASE WHEN len(list_filter(embedding, x -> x > 0.5)) > 0
-        |       THEN CAST(list_filter(embedding, x -> x > 0.5)[1] AS DOUBLE)
-        |  END AS hit
-        |FROM embeddings WHERE vec_id < 50 ORDER BY vec_id""".stripMargin,
-
-    "q115_token_mix" ->
-      """WITH totals AS (SELECT source, CAST(SUM(n_chars) AS DOUBLE) AS tok
-        |  FROM documents GROUP BY 1),
-        |fr AS (SELECT source, CAST(floor(least(1.0,
-        |    (10000.0 * (CASE source WHEN 'src0' THEN 2.0/4.0
-        |                            WHEN 'src1' THEN 1.0/4.0
-        |                            WHEN 'src2' THEN 1.0/4.0 END)) / tok)
-        |    * 1000000) AS BIGINT) AS cutoff
-        |  FROM totals WHERE source IN ('src0', 'src1', 'src2'))
-        |SELECT d.doc_id, d.source FROM documents d JOIN fr USING (source)
-        |WHERE ('0x'||substr(md5(d.doc_id::VARCHAR),1,15))::BIGINT % 1000000
-        |  < fr.cutoff
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q109_repetition" ->
-      s"""WITH $toksCte,
-        |lines AS (SELECT doc_id, string_split(text, chr(10)) AS l,
-        |    length(text) AS chars FROM documents),
-        |base AS (SELECT doc_id, chars,
-        |  CASE WHEN len(l) > 0 THEN (len(l) - len(list_distinct(l)))
-        |    / CAST(len(l) AS DOUBLE) ELSE 0.0 END AS dup_line_frac,
-        |  CASE WHEN list_sum(list_transform(l, x -> length(x))) > 0 THEN
-        |    (list_sum(list_transform(l, x -> length(x)))
-        |     - list_sum(list_transform(list_distinct(l), x -> length(x))))
-        |    / CAST(list_sum(list_transform(l, x -> length(x))) AS DOUBLE)
-        |    ELSE 0.0 END AS dup_line_char_frac
-        |  FROM lines),
-        |g AS (SELECT doc_id, array_to_string(t[i:i+1], ' ') AS g
-        |  FROM toks, UNNEST(range(1, len(t))) AS u(i) WHERE len(t) >= 2),
-        |cnts AS (SELECT doc_id, g, COUNT(*) AS c FROM g GROUP BY 1, 2),
-        |top AS (SELECT doc_id, MAX(c * length(g)) AS cover FROM cnts
-        |  GROUP BY 1)
-        |SELECT b.doc_id, b.dup_line_frac, b.dup_line_char_frac,
-        |  CASE WHEN b.chars > 0
-        |    THEN COALESCE(t.cover, 0) / CAST(b.chars AS DOUBLE)
-        |    ELSE 0.0 END AS top_2gram_char_frac
-        |FROM base b LEFT JOIN top t USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    "q108_decontaminate" -> decontamSql,
-
-    "q18_dedup_jaccard" ->
-      s"""WITH $toksCte,
-         |$shingleCte,
-         |shh0 AS (SELECT doc_id, ${sqlHash("sh")} AS sh FROM sh),
-         |-- the engine's AUTO stop-shingle cap: max(1000, n_docs/1000);
-         |-- shingles above the doc-frequency cap are dropped BEFORE sizes
-         |-- and pairs, mirroring ngramJaccardPairs exactly
-         |kept AS (SELECT sh FROM shh0 GROUP BY sh
-         |  HAVING COUNT(*) <= greatest(1000,
-         |    (SELECT COUNT(*) // 1000 FROM documents))),
-         |shh AS (SELECT shh0.doc_id, shh0.sh FROM shh0 JOIN kept USING (sh)),
-         |sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM shh GROUP BY doc_id),
-         |pairs AS (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(COUNT(*) AS BIGINT) AS inter
-         |  FROM shh a JOIN shh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT id_a, id_b, inter, sa.sz AS size_a, sb.sz AS size_b,
-         |       CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE) AS jaccard
-         |FROM pairs
-         |JOIN sizes sa ON sa.doc_id = id_a
-         |JOIN sizes sb ON sb.doc_id = id_b
-         |WHERE CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    "q19_dedup_minhash" -> minhashOracle(12, 4),
-
-    "q20_simhash" ->
-      s"""WITH $toksCte,
-         |${simhashCtes(16)}
-         |SELECT doc_id, simhash FROM sim ORDER BY doc_id""".stripMargin,
-
-    "q21_fingerprint" ->
-      s"""WITH $toksCte,
-         |tok AS (SELECT doc_id, i, t[i] AS tok FROM toks, UNNEST(range(1, len(t)+1)) AS u(i))
-         |SELECT doc_id,
-         |  CAST(SUM((${sqlHash("tok")} * i) % 2147483647) % 2147483647 AS BIGINT) AS fingerprint
-         |FROM tok GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the auto-sized run reproduced exactly: np = Dedup.autoBlockPlanes
-    // recomputed from count(*) in INTEGER arithmetic (bit length of
-    // ceil(cells)-1 == ceil(log2(cells)) — the divide+ceil are exact
-    // IEEE ops, while a floating log2 could flip by an ulp between
-    // libm implementations at exact powers of two), +1 skew-headroom
-    // plane, and the p-plane bucket recovered from a full 24-plane
-    // bucket by masking — plane j's constants depend only on
-    // (table, j), so bit j is the same at any plane count and
-    // bkt_p = bkt_24 & (2^p - 1)
-    "q22_embed_neardup" ->
-      s"""WITH pl AS (
-         |  SELECT LEAST(24, GREATEST(4,
-         |    CASE WHEN cc <= 1 THEN 0
-         |         ELSE length(bin(cc - 1)) END + 1)) AS np
-         |  FROM (SELECT GREATEST(1,
-         |      CAST(ceil(count(*) / 100.0) AS BIGINT)) AS cc
-         |    FROM embeddings)),
-         |raw AS (
-         |${lshBucketsCte(4, 24, 64)}),
-         |bkts AS (
-         |  SELECT vec_id, t, raw.bkt & ((CAST(1 AS BIGINT) << pl.np) - 1)
-         |    AS bkt
-         |  FROM raw, pl),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS ia, b.vec_id AS ib
-         |  FROM bkts a JOIN bkts b
-         |    ON a.t = b.t AND a.bkt = b.bkt AND a.vec_id < b.vec_id),
-         |p AS (
-         |  SELECT ia, ib, x.embedding AS ea, y.embedding AS eb FROM cand
-         |  JOIN embeddings x ON x.vec_id = ia
-         |  JOIN embeddings y ON y.vec_id = ib),
-         |${cosineCtes("p")}
-         |SELECT ia AS id_a, ib AS id_b FROM d
-         |WHERE dot / (sqrt(na) * sqrt(nb)) >= 0.3
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // the oracle recomputes the 32-bit-word sign packing, hamming
-    // shortlist, and cosine rescoring bit-for-bit (weights stay off the
-    // sign bit precisely so this SQL is expressible)
-    "q191_ann_binary" ->
-      s"""WITH sig AS (
-         |  SELECT vec_id, embedding,
-         |    list_transform(range(0, 2), w ->
-         |      list_reduce(list_transform(range(1, 33), j ->
-         |        CASE WHEN embedding[w * 32 + j] > 0
-         |          THEN CAST(1 AS BIGINT) << (j - 1)
-         |          ELSE CAST(0 AS BIGINT) END),
-         |        (a, b) -> a | b)) AS s
-         |  FROM embeddings),
-         |q AS (SELECT vec_id AS qid, embedding AS qe, s AS qs
-         |  FROM sig WHERE vec_id < 8),
-         |h AS (
-         |  SELECT qid, c.vec_id AS nid, c.embedding AS ce, qe,
-         |    bit_count(xor(c.s[1], qs[1])) + bit_count(xor(c.s[2], qs[2]))
-         |      AS ham
-         |  FROM sig c, q WHERE c.vec_id <> qid),
-         |short AS (
-         |  SELECT qid, nid, ce, qe FROM (
-         |    SELECT qid, nid, ce, qe,
-         |      row_number() OVER (PARTITION BY qid ORDER BY ham, nid)
-         |        AS hr FROM h)
-         |  WHERE hr <= 40),
-         |p AS (
-         |  SELECT qid AS ia, nid AS ib, qe AS ea, ce AS eb FROM short),
-         |${cosineCtes("p")},
-         |r AS (
-         |  SELECT ia AS query_id, ib AS neighbor_id,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY ia
-         |      ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib) AS INT)
-         |      AS rank
-         |  FROM d)
-         |SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q23_ann_brute" ->
-      s"""WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8),
-         |p AS (
-         |  SELECT q.vec_id AS ia, c.vec_id AS ib, q.embedding AS ea, c.embedding AS eb
-         |  FROM q, embeddings c WHERE c.vec_id <> q.vec_id),
-         |${cosineCtes("p")},
-         |r AS (
-         |  SELECT ia AS query_id, ib AS neighbor_id,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY ia ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib) AS INT) AS rank
-         |  FROM d)
-         |SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q24_ann_lsh" ->
-      s"""WITH bkts AS (
-         |${lshBucketsCte(16, 4, 64)}),
-         |cand AS (
-         |  SELECT DISTINCT q.vec_id AS ia, c.vec_id AS ib
-         |  FROM bkts c JOIN bkts q ON c.t = q.t AND c.bkt = q.bkt
-         |  WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id),
-         |p AS (
-         |  SELECT ia, ib, x.embedding AS ea, y.embedding AS eb FROM cand
-         |  JOIN embeddings x ON x.vec_id = ia
-         |  JOIN embeddings y ON y.vec_id = ib),
-         |${cosineCtes("p")},
-         |r AS (
-         |  SELECT ia AS query_id, ib AS neighbor_id,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY ia ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib) AS INT) AS rank
-         |  FROM d)
-         |SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 10
-         |ORDER BY query_id, rank""".stripMargin,
-
-    "q74_ann_ivf" -> ivfOracle,
-
-    // the saved-index path is bit-identical to the recompute path by
-    // construction — SAME replay as q74 (shared helper)
-    "q261_ivf_store" -> ivfOracle,
-
-    // the query signature is packed at oracle-build time with the same
-    // 32-bit-word rule the engine uses; hamming + rescore recomputed
-    "q192_vector_search_binary" -> {
-      val qSig = Array.tabulate(2) { w =>
-        var acc = 0L
-        var j = 0
-        while (j < 32) {
-          if (q75Vec(w * 32 + j) > 0) acc |= 1L << j; j += 1
-        }
-        acc
-      }
-      val normQ = math.sqrt(q75Vec.map(x => x * x).sum)
-      s"""WITH sig AS (
-         |  SELECT vec_id, embedding,
-         |    list_transform(range(0, 2), w ->
-         |      list_reduce(list_transform(range(1, 33), j ->
-         |        CASE WHEN embedding[w * 32 + j] > 0
-         |          THEN CAST(1 AS BIGINT) << (j - 1)
-         |          ELSE CAST(0 AS BIGINT) END),
-         |        (a, b) -> a | b)) AS s
-         |  FROM embeddings),
-         |h AS (SELECT vec_id, embedding,
-         |    bit_count(xor(s[1], CAST(${qSig(0)} AS BIGINT)))
-         |      + bit_count(xor(s[2], CAST(${qSig(1)} AS BIGINT))) AS ham
-         |  FROM sig),
-         |short AS (SELECT vec_id, embedding FROM h
-         |  ORDER BY ham, vec_id LIMIT 60),
-         |sc AS (SELECT vec_id,
-         |  (${litDotSql("embedding", q75Vec)})
-         |  / (sqrt(${selfDotSql("embedding", 64)}) * $normQ) AS cos
-         |  FROM short),
-         |r AS (SELECT vec_id FROM sc ORDER BY cos DESC, vec_id LIMIT 25)
-         |SELECT vec_id FROM r ORDER BY vec_id""".stripMargin
-    },
-
-    "q75_vector_search" -> {
-      val normQ = math.sqrt(q75Vec.map(x => x * x).sum)
-      s"""WITH s AS (SELECT vec_id,
-         |  (${litDotSql("embedding", q75Vec)})
-         |  / (sqrt(${selfDotSql("embedding", 64)}) * $normQ) AS cos
-         |  FROM embeddings),
-         |r AS (SELECT vec_id FROM s ORDER BY cos DESC, vec_id LIMIT 25)
-         |SELECT vec_id FROM r ORDER BY vec_id""".stripMargin
-    },
-
-    "q76_datetime" ->
-      """WITH b AS (
-        |  SELECT o_orderkey,
-        |    CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow,
-        |    CAST(isodow(o_orderdate) AS INT) AS idow,
-        |    CAST(week(o_orderdate) AS INT) AS iwk,
-        |    CAST(isoyear(o_orderdate) AS BIGINT) AS iwy,
-        |    make_timestamp(year(o_orderdate), month(o_orderdate),
-        |      day(o_orderdate), 12, 30, 15.250) AS rebuilt
-        |  FROM orders WHERE o_orderkey <= 2000)
-        |SELECT o_orderkey, dow, idow, iwk, iwy, rebuilt,
-        |  CAST((epoch_us(rebuilt) % 1000000) // 1000 AS INT) AS ms,
-        |  CAST(second(rebuilt) AS BIGINT) AS psec,
-        |  CAST((epoch_us(rebuilt) % 1000000) // 1000 AS BIGINT) AS pms
-        |FROM b ORDER BY o_orderkey""".stripMargin,
-
-    "q77_trig" -> {
-      def r9(e: String): String = s"CAST(CAST($e AS DECIMAL(18,9)) AS DOUBLE)"
-      s"""WITH b AS (SELECT n_nationkey,
-         |  CAST(n_nationkey AS DOUBLE)/25.0 AS x,
-         |  CAST(n_nationkey AS DOUBLE)/10.0 AS y FROM nation)
-         |SELECT n_nationkey,
-         |  ${r9("sin(y)")} AS vsin, ${r9("cos(y)")} AS vcos,
-         |  ${r9("tan(x)")} AS vtan,
-         |  ${r9("asin(x)")} AS vasin, ${r9("acos(x)")} AS vacos,
-         |  ${r9("atan(y)")} AS vatan, ${r9("atan2(y, x + 1.0)")} AS vatan2,
-         |  ${r9("(exp(x) - exp(-x)) / 2.0")} AS vsinh,
-         |  ${r9("(exp(x) + exp(-x)) / 2.0")} AS vcosh,
-         |  ${r9("(exp(x) - exp(-x)) / (exp(x) + exp(-x))")} AS vtanh,
-         |  ${r9("radians(n_nationkey * 15)")} AS vrad,
-         |  ${r9("degrees(x)")} AS vdeg,
-         |  ${r9("ln(n_nationkey + 2) / ln(2.0)")} AS vlog
-         |FROM b ORDER BY n_nationkey""".stripMargin
-    },
-
-    "q78_sets" ->
-      """WITH b AS (SELECT n_nationkey, n_name, n_regionkey,
-        |  [n_nationkey % 5, n_regionkey, 2] AS a,
-        |  [0, 1, 2, 3, 4] AS bb FROM nation)
-        |SELECT n_nationkey,
-        |  len(list_filter(list_distinct(a), v -> NOT list_contains(bb, v))) = 0 AS subset,
-        |  list_sort(list_distinct(a)) =
-        |    list_sort(list_distinct([2, n_regionkey, n_nationkey % 5])) AS eq,
-        |  len(list_filter(a, v -> v >= 3)) > 0 AS "anyBig",
-        |  len(list_filter(a, v -> v >= 0)) = len(a) AS "allNonNeg",
-        |  n_name AS gf,
-        |  CAST(n_nationkey * 2 AS INT) AS sfx,
-        |  n_name AS ufy
-        |FROM b ORDER BY n_nationkey""".stripMargin,
-
-    "q79_chunking" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents WHERE doc_id < 40),
-        |st AS (
-        |  SELECT doc_id, t, u.s
-        |  FROM toks, UNNEST(range(1, greatest(len(t) - 2, 1) + 1, 6)) AS u(s)
-        |  WHERE len(t) > 0)
-        |SELECT doc_id, (s - 1) // 6 AS chunk_idx,
-        |  array_to_string(t[s : s + 7], ' ') AS chunk_text,
-        |  least(8, len(t) - s + 1) AS n_tokens
-        |FROM st ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "q80_quantized_ann" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |mm AS (
-        |  SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS m
-        |  FROM base),
-        |qq AS (
-        |  SELECT vec_id, CAST(list_transform(e, x -> floor(
-        |    x / (CASE WHEN m > 0 THEN m / 127.0 ELSE 1.0 END) + 0.5))
-        |    AS DOUBLE[]) AS qv
-        |  FROM mm),
-        |n AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS nn FROM qq),
-        |pairs AS (
-        |  SELECT q.vec_id AS ia, c.vec_id AS ib,
-        |    list_dot_product(q.qv, c.qv) AS dot, q.nn AS na, c.nn AS nb
-        |  FROM n q JOIN n c ON c.vec_id <> q.vec_id
-        |  WHERE q.vec_id < 8),
-        |r AS (
-        |  SELECT ia AS query_id, ib AS neighbor_id,
-        |    CAST(row_number() OVER (PARTITION BY ia ORDER BY
-        |      CASE WHEN na = 0 OR nb = 0 THEN 0.0
-        |           ELSE dot / (sqrt(na) * sqrt(nb)) END DESC, ib) AS INT)
-        |      AS rank
-        |  FROM pairs)
-        |SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "q81_pii_redact" -> {
-      val Seq(email, ssn, phone, ip) = Redaction.Rules.map(_._2)
-      // DuckDB string literals are standard-conforming: '\.' IS backslash-dot
-      def esc(p: String) = p
-      s"""WITH b AS (
-         |  SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR)
-         |    || '@example.com or 555-123-4567 ssn 123-45-6789 at 10.0.0.'
-         |    || CAST(doc_id % 250 + 1 AS VARCHAR) AS t
-         |  FROM documents WHERE doc_id < 50),
-         |r1 AS (SELECT doc_id, t,
-         |  regexp_replace(t, '${esc(email)}', '<EMAIL>', 'g') AS s1 FROM b),
-         |r2 AS (SELECT doc_id, t, s1,
-         |  regexp_replace(s1, '${esc(ssn)}', '<SSN>', 'g') AS s2 FROM r1),
-         |r3 AS (SELECT doc_id, t, s1, s2,
-         |  regexp_replace(s2, '${esc(phone)}', '<PHONE>', 'g') AS s3 FROM r2)
-         |SELECT doc_id,
-         |  regexp_replace(s3, '${esc(ip)}', '<IP>', 'g') AS clean,
-         |  len(regexp_extract_all(t, '${esc(email)}')) AS n_email,
-         |  len(regexp_extract_all(s1, '${esc(ssn)}')) AS n_ssn,
-         |  len(regexp_extract_all(s2, '${esc(phone)}')) AS n_phone,
-         |  len(regexp_extract_all(s3, '${esc(ip)}')) AS n_ip
-         |FROM r3 ORDER BY doc_id""".stripMargin
-    },
-
-    "q85_bm25" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('data', 'query', 'spark')
-        |  GROUP BY doc_id, dl, term),
-        |wd AS (
-        |  SELECT doc_id, dl, term, tf,
-        |    COUNT(*) OVER (PARTITION BY term) AS df
-        |  FROM hits),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |sc AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CAST(
-        |      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-        |      AS DECIMAL(28,12))) AS DOUBLE) AS score,
-        |    COUNT(*) AS matched
-        |  FROM wd, stats GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score,
-        |  matched
-        |FROM sc ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    // both legs replayed with the VECTOR leg through the IVF
-    // machinery: brute corpus cell assignment (q74's asgn), the
-    // literal query's probe cells, candidates from probed cells only,
-    // exact cosine ranks within candidates, then the q88 RRF fusion
-    "q264_hybrid_ivf" -> {
-      val normQ = math.sqrt(q75Vec.map(x => x * x).sum)
-      s"""WITH tk AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-         |  FROM documents WHERE doc_id < 1000),
-         |toks AS (
-         |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-         |hits AS (
-         |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-         |  WHERE term IN ('data', 'query', 'spark')
-         |  GROUP BY doc_id, dl, term),
-         |wd AS (
-         |  SELECT doc_id, dl, term, tf,
-         |    COUNT(*) OVER (PARTITION BY term) AS df
-         |  FROM hits),
-         |stats AS (
-         |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-         |  FROM tk),
-         |lexsc AS (
-         |  SELECT doc_id,
-         |    CAST(SUM(CAST(
-         |      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-         |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-         |      AS DECIMAL(28,12))) AS DOUBLE) AS score
-         |  FROM wd, stats GROUP BY doc_id),
-         |lex AS (
-         |  SELECT doc_id AS neighbor_id,
-         |    row_number() OVER (ORDER BY score DESC, doc_id) AS rank
-         |  FROM lexsc),
-         |cents AS (
-         |  SELECT vec_id AS cid, embedding AS cv FROM embeddings
-         |  WHERE vec_id < 16),
-         |pc AS (
-         |  SELECT e.vec_id AS ia, c.cid AS ib, e.embedding AS ea,
-         |    c.cv AS eb
-         |  FROM embeddings e CROSS JOIN cents c),
-         |dc AS (SELECT ia, ib,
-         |  SUM(CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS dot,
-         |  SUM(CAST(ea[i] AS DOUBLE) * CAST(ea[i] AS DOUBLE)) AS na,
-         |  SUM(CAST(eb[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)) AS nb
-         |  FROM pc, UNNEST(range(1, len(ea)+1)) AS u(i)
-         |  GROUP BY ia, ib),
-         |asgn AS (SELECT ia, ib AS cell,
-         |  row_number() OVER (PARTITION BY ia
-         |    ORDER BY dot/(sqrt(na)*sqrt(nb)) DESC, ib ASC) AS rn FROM dc),
-         |cellof AS (SELECT ia AS nid, cell FROM asgn WHERE rn = 1),
-         |qp AS (SELECT cid AS cell,
-         |    row_number() OVER (ORDER BY
-         |      (${litDotSql("cv", q75Vec)})
-         |      / (sqrt(${selfDotSql("cv", 64)}) * $normQ) DESC, cid)
-         |      AS rn
-         |  FROM cents),
-         |cand AS (
-         |  SELECT c.nid FROM qp JOIN cellof c ON c.cell = qp.cell
-         |  WHERE qp.rn <= 4),
-         |vs AS (SELECT vec_id,
-         |  (${litDotSql("embedding", q75Vec)})
-         |  / (sqrt(${selfDotSql("embedding", 64)}) * $normQ) AS cos
-         |  FROM embeddings WHERE vec_id IN (SELECT nid FROM cand)),
-         |vec AS (
-         |  SELECT vec_id AS neighbor_id,
-         |    row_number() OVER (ORDER BY cos DESC, vec_id) AS rank
-         |  FROM vs),
-         |u AS (
-         |  SELECT neighbor_id, rank FROM lex WHERE rank <= 30
-         |  UNION ALL
-         |  SELECT neighbor_id, rank FROM vec WHERE rank <= 30),
-         |f AS (
-         |  SELECT neighbor_id,
-         |    CAST(SUM(CAST(1.0 / (rank + 60) AS DECIMAL(28,12)))
-         |      AS DOUBLE) AS score
-         |  FROM u GROUP BY neighbor_id),
-         |o AS (
-         |  SELECT neighbor_id, score,
-         |    CAST(row_number() OVER (
-         |      ORDER BY score DESC, neighbor_id) AS INT) AS fused_rank
-         |  FROM f)
-         |SELECT neighbor_id,
-         |  CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score,
-         |  fused_rank
-         |FROM o WHERE fused_rank <= 15
-         |ORDER BY fused_rank""".stripMargin
-    },
-
-    // both legs replayed (q85's BM25 chain -> ranks; q75's literal-
-    // vector cosine -> ranks) then the q88 RRF decimal-sum fusion
-    "q260_hybrid_search" -> {
-      val normQ = math.sqrt(q75Vec.map(x => x * x).sum)
-      s"""WITH tk AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-         |  FROM documents WHERE doc_id < 1000),
-         |toks AS (
-         |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-         |hits AS (
-         |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-         |  WHERE term IN ('data', 'query', 'spark')
-         |  GROUP BY doc_id, dl, term),
-         |wd AS (
-         |  SELECT doc_id, dl, term, tf,
-         |    COUNT(*) OVER (PARTITION BY term) AS df
-         |  FROM hits),
-         |stats AS (
-         |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-         |  FROM tk),
-         |lexsc AS (
-         |  SELECT doc_id,
-         |    CAST(SUM(CAST(
-         |      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-         |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-         |      AS DECIMAL(28,12))) AS DOUBLE) AS score
-         |  FROM wd, stats GROUP BY doc_id),
-         |lex AS (
-         |  SELECT doc_id AS neighbor_id,
-         |    row_number() OVER (ORDER BY score DESC, doc_id) AS rank
-         |  FROM lexsc),
-         |vecs AS (SELECT vec_id,
-         |  (${litDotSql("embedding", q75Vec)})
-         |  / (sqrt(${selfDotSql("embedding", 64)}) * $normQ) AS cos
-         |  FROM embeddings),
-         |vec AS (
-         |  SELECT vec_id AS neighbor_id,
-         |    row_number() OVER (ORDER BY cos DESC, vec_id) AS rank
-         |  FROM vecs),
-         |u AS (
-         |  SELECT neighbor_id, rank FROM lex WHERE rank <= 30
-         |  UNION ALL
-         |  SELECT neighbor_id, rank FROM vec WHERE rank <= 30),
-         |f AS (
-         |  SELECT neighbor_id,
-         |    CAST(SUM(CAST(1.0 / (rank + 60) AS DECIMAL(28,12)))
-         |      AS DOUBLE) AS score
-         |  FROM u GROUP BY neighbor_id),
-         |o AS (
-         |  SELECT neighbor_id, score,
-         |    CAST(row_number() OVER (
-         |      ORDER BY score DESC, neighbor_id) AS INT) AS fused_rank
-         |  FROM f)
-         |SELECT neighbor_id,
-         |  CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score,
-         |  fused_rank
-         |FROM o WHERE fused_rank <= 15
-         |ORDER BY fused_rank""".stripMargin
-    },
-
-    // the two-batch appended index scores exactly like the one-shot
-    // pass — SAME replay as q85 (postings/stats are a pure refactor
-    // of the same math; the decimal(18,9) cast absorbs the batch-sum
-    // association of avgdl, which Spark's own partial aggregation
-    // does not fix either)
-    "q257_bm25_store" ->
-      """WITH tk AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, len(t) AS dl, unnest(t) AS term FROM tk),
-        |hits AS (
-        |  SELECT doc_id, dl, term, COUNT(*) AS tf FROM toks
-        |  WHERE term IN ('data', 'query', 'spark')
-        |  GROUP BY doc_id, dl, term),
-        |wd AS (
-        |  SELECT doc_id, dl, term, tf,
-        |    COUNT(*) OVER (PARTITION BY term) AS df
-        |  FROM hits),
-        |stats AS (
-        |  SELECT COUNT(*) AS n_docs, avg(CAST(len(t) AS DOUBLE)) AS avgdl
-        |  FROM tk),
-        |sc AS (
-        |  SELECT doc_id,
-        |    CAST(SUM(CAST(
-        |      ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * (tf * 2.2)
-        |      / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-        |      AS DECIMAL(28,12))) AS DOUBLE) AS score,
-        |    COUNT(*) AS matched
-        |  FROM wd, stats GROUP BY doc_id)
-        |SELECT doc_id, CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score,
-        |  matched
-        |FROM sc ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q83_string_convert" ->
-      """SELECT p_partkey,
-        |  regexp_extract(p_brand, '#([0-9]+)', 0) AS rf_match,
-        |  regexp_extract(p_brand, '#([0-9]+)', 1) AS cap,
-        |  COALESCE(
-        |    array_to_string(regexp_extract_all(p_name, '[a-z]{4,}'), ','),
-        |    '') AS rfa,
-        |  CAST(regexp_extract(p_brand, '#([0-9]+)', 1) AS INT) AS bnum,
-        |  COALESCE(TRY_CAST(p_type AS INT), -1) AS conv_err,
-        |  strptime('2024-0' || CAST(p_size % 9 + 1 AS VARCHAR) || '-15',
-        |    '%Y-%m-%d') AS parsed,
-        |  strlen(p_name) AS blen,
-        |  substr(p_name, 3, 6) AS bsub
-        |FROM part WHERE p_partkey <= 500 ORDER BY p_partkey""".stripMargin,
-
-    "q87_streaming_dedup" ->
-      "SELECT event_id, event_type FROM events ORDER BY event_id",
-
-    "q88_hybrid_rrf" ->
-      s"""WITH p AS (
-         |  SELECT q.vec_id AS ia, c.vec_id AS ib,
-         |    q.embedding AS ea, c.embedding AS eb
-         |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-         |  WHERE q.vec_id < 8),
-         |${cosineCtes("p")},
-         |r1 AS (
-         |  SELECT ia AS query_id, ib AS neighbor_id,
-         |    row_number() OVER (PARTITION BY ia
-         |      ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib) AS rank
-         |  FROM d),
-         |qbase AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-         |qmm AS (
-         |  SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) AS m
-         |  FROM qbase),
-         |qqv AS (
-         |  SELECT vec_id, CAST(list_transform(e, x -> floor(
-         |    x / (CASE WHEN m > 0 THEN m / 127.0 ELSE 1.0 END) + 0.5))
-         |    AS DOUBLE[]) AS qv
-         |  FROM qmm),
-         |qn AS (SELECT vec_id, qv, list_dot_product(qv, qv) AS nn FROM qqv),
-         |qpairs AS (
-         |  SELECT q.vec_id AS ia, c.vec_id AS ib,
-         |    list_dot_product(q.qv, c.qv) AS dot, q.nn AS na, c.nn AS nb
-         |  FROM qn q JOIN qn c ON c.vec_id <> q.vec_id
-         |  WHERE q.vec_id < 8),
-         |r2 AS (
-         |  SELECT ia AS query_id, ib AS neighbor_id,
-         |    row_number() OVER (PARTITION BY ia ORDER BY
-         |      CASE WHEN na = 0 OR nb = 0 THEN 0.0
-         |           ELSE dot / (sqrt(na) * sqrt(nb)) END DESC, ib) AS rank
-         |  FROM qpairs),
-         |u AS (
-         |  SELECT query_id, neighbor_id, rank FROM r1 WHERE rank <= 10
-         |  UNION ALL
-         |  SELECT query_id, neighbor_id, rank FROM r2 WHERE rank <= 10),
-         |f AS (
-         |  SELECT query_id, neighbor_id,
-         |    CAST(SUM(CAST(1.0 / (rank + 60) AS DECIMAL(28,12)))
-         |      AS DOUBLE) AS score
-         |  FROM u GROUP BY query_id, neighbor_id),
-         |o AS (
-         |  SELECT query_id, neighbor_id, score,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, neighbor_id) AS INT) AS fused_rank
-         |  FROM f)
-         |SELECT query_id, neighbor_id,
-         |  CAST(CAST(score AS DECIMAL(18,9)) AS DOUBLE) AS score, fused_rank
-         |FROM o WHERE fused_rank <= 10 ORDER BY query_id, fused_rank""".stripMargin,
-
-    "q86_object_surgery" ->
-      """SELECT n_nationkey,
-        |  'a:' || CAST(n_nationkey AS BIGINT)
-        |    || ',b:' || (CAST(n_regionkey AS BIGINT) * 2)
-        |    || ',c:7' AS ents
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "q84_query_bits_type" ->
-      """SELECT p_partkey, p_size FROM part
-        |WHERE (p_size & 5) = 5 AND (p_partkey & 6) <> 6
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q82_tfidf" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-        |wd AS (
-        |  SELECT doc_id, term, tf, COUNT(*) OVER (PARTITION BY term) AS df
-        |  FROM tf),
-        |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-        |sc AS (
-        |  SELECT doc_id, term, tf, df,
-        |    tf * (ln(CAST(n_docs + 1 AS DOUBLE) / (df + 1)) + 1.0) AS tfidf
-        |  FROM wd, n),
-        |r AS (
-        |  SELECT doc_id, term, tf, df, tfidf,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY tfidf DESC, term) AS rank
-        |  FROM sc)
-        |SELECT doc_id, term, tf, df,
-        |  CAST(CAST(tfidf AS DECIMAL(18,9)) AS DOUBLE) AS tfidf, rank
-        |FROM r WHERE rank <= 3 AND doc_id < 30
-        |ORDER BY doc_id, rank""".stripMargin,
-
-    // q82's replay over the UNION (docs < 400 = indexed 0-299 plus
-    // the 300-399 delta), output restricted to the delta — union
-    // statistics, delta rows: the incremental face's contract
-    "q258_tfidf_incremental" ->
-      """WITH docs4 AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id < 400),
-        |toks AS (
-        |  SELECT doc_id,
-        |    unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
-        |  FROM docs4),
-        |tf AS (
-        |  SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-        |wd AS (
-        |  SELECT doc_id, term, tf, COUNT(*) OVER (PARTITION BY term) AS df
-        |  FROM tf),
-        |n AS (SELECT COUNT(*) AS n_docs FROM docs4),
-        |sc AS (
-        |  SELECT doc_id, term, tf, df,
-        |    tf * (ln(CAST(n_docs + 1 AS DOUBLE) / (df + 1)) + 1.0) AS tfidf
-        |  FROM wd, n),
-        |r AS (
-        |  SELECT doc_id, term, tf, df, tfidf,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY tfidf DESC, term) AS rank
-        |  FROM sc)
-        |SELECT doc_id, term, tf, df,
-        |  CAST(CAST(tfidf AS DECIMAL(18,9)) AS DOUBLE) AS tfidf, rank
-        |FROM r WHERE rank <= 3 AND doc_id >= 300
-        |ORDER BY doc_id, rank""".stripMargin,
-
-    "q25_langid" -> {
-      val scores = TextFunctions.LangMarkers.map { case (lang, ms) =>
-        val lst = ms.map(m => s"'$m'").mkString(", ")
-        s"len(list_filter(t, x -> list_contains([$lst], x))) AS s_$lang"
-      }.mkString(",\n  ")
-      val langs = TextFunctions.LangMarkers.map(_._1)
-      val best = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-      val total = langs.map("s_" + _).mkString(" + ")
-      val cases = langs.map(l =>
-        s"WHEN ($total) > 0 AND s_$l = $best THEN '$l'").mkString("\n    ")
-      s"""WITH $toksCte,
-         |s AS (SELECT doc_id, $scores FROM toks)
-         |SELECT d.doc_id, d.lang,
-         |  CASE $cases ELSE 'und' END AS predicted
-         |FROM documents d JOIN s ON s.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    // the data card replayed: q25's langId argmax per doc -> per-
-    // source top-lang window; quantile_cont for the exact percentile
-    // (the q226 parity); md5 distinct for the dup rate
-    "q259_corpus_report" -> corpusReportOracle,
-
-    // sidecar-derived card == one-shot card on the union — SAME
-    // replay as q259 (shared helper)
-    "q263_report_incremental" -> corpusReportOracle,
-
-    "q231_langid_multilingual" -> {
-      val textCase = LangIdSentences.zipWithIndex.map { case ((_, t), i) =>
-        s"WHEN $i THEN '$t'" }.mkString("\n    ")
-      val expCase = LangIdSentences.zipWithIndex.map { case ((l, _), i) =>
-        s"WHEN $i THEN '$l'" }.mkString(" ")
-      val scores = TextFunctions.LangMarkers.map { case (lang, ms) =>
-        val lst = ms.map(m => s"'$m'").mkString(", ")
-        s"len(list_filter(t, x -> list_contains([$lst], x))) AS s_$lang"
-      }.mkString(",\n  ")
-      val langs = TextFunctions.LangMarkers.map(_._1)
-      val best = s"greatest(${langs.map("s_" + _).mkString(", ")})"
-      val total = langs.map("s_" + _).mkString(" + ")
-      val cases = langs.map(l =>
-        s"WHEN ($total) > 0 AND s_$l = $best THEN '$l'").mkString("\n    ")
-      s"""WITH f AS (SELECT doc_id,
-         |  CASE doc_id % 15 $expCase END AS expected,
-         |  CASE doc_id % 15
-         |    $textCase
-         |  END AS mtext
-         |  FROM documents WHERE doc_id < 450),
-         |s AS (SELECT doc_id, expected,
-         |  list_filter(string_split(mtext, ' '), x -> x <> '') AS t
-         |  FROM f),
-         |sc AS (SELECT doc_id, expected, $scores FROM s)
-         |SELECT doc_id, expected,
-         |  CASE $cases ELSE 'und' END AS predicted
-         |FROM sc ORDER BY doc_id""".stripMargin
-    },
-
-    "q26_quality" -> {
-      val stop = TextFunctions.Stopwords.map(m => s"'$m'").mkString(", ")
-      s"""WITH $toksCte,
-         |c AS (SELECT d.doc_id,
-         |  CAST(length(d.text) AS BIGINT) AS n_chars,
-         |  CAST(len(t) AS BIGINT) AS n_tokens,
-         |  CAST(length(regexp_replace(d.text, '[^.!?,;:]', '', 'g')) AS BIGINT) AS n_punct,
-         |  CAST(len(list_filter(t, x -> list_contains([$stop], x))) AS BIGINT) AS n_stopword,
-         |  CAST(length(regexp_replace(d.text, '[^A-Za-z]', '', 'g')) AS BIGINT) AS n_alpha
-         |  FROM documents d JOIN toks ON toks.doc_id = d.doc_id)
-         |SELECT doc_id, n_chars, n_tokens, n_punct, n_stopword, n_alpha,
-         |  CAST(n_stopword AS DOUBLE) / greatest(CAST(n_tokens AS DOUBLE), 1.0) * 0.4
-         |  + CAST(n_alpha AS DOUBLE) / greatest(CAST(n_chars AS DOUBLE), 1.0) * 0.4
-         |  + least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.2 AS score
-         |FROM c ORDER BY doc_id""".stripMargin
-    },
-
-    "q27_tokens" ->
-      """SELECT doc_id,
-        |  CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_ws,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpeish
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q29_pipeline_expr" ->
-      """SELECT upper(o_orderstatus) || '-' ||
-        |  CASE WHEN o_totalprice >= 100000.0 THEN 'big' ELSE 'small' END AS _id,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(MIN(year(o_orderdate)) AS INT) AS min_year
-        |FROM orders GROUP BY 1 ORDER BY _id""".stripMargin,
-
-    "q30_setops" ->
-      """WITH a AS (SELECT l_orderkey AS k FROM lineitem WHERE l_quantity > 49),
-        |b AS (SELECT o_orderkey AS k FROM orders WHERE o_totalprice > 400000.0),
-        |c AS (SELECT o_orderkey AS k FROM orders WHERE o_orderstatus = 'P'),
-        |u AS (SELECT k FROM a UNION SELECT k FROM b)
-        |SELECT k FROM u EXCEPT SELECT k FROM c ORDER BY k""".stripMargin,
-
-    "q31_estimated_count" ->
-      "SELECT CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem",
-
-    "q32_simhash_neardup" -> {
-      // direct O(n^2)-over-fingerprints oracle; the engine's chunk-band
-      // plan must produce exactly the same pair set
-      s"""WITH $toksCte,
-         |${simhashCtes(60)}
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         |FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "q33_minhash_sig" -> {
-      val minExprs = (0 until 4).map { i =>
-        s"CAST(MIN((h * ${2 * i + 3} + ${i.toLong * i + 1}) % 2147483647) AS BIGINT) AS mh$i"
-      }.mkString(", ")
-      s"""WITH $toksCte,
-         |$shingleCte,
-         |h AS (SELECT doc_id, ${sqlHash("sh")} AS h FROM sh)
-         |SELECT doc_id, $minExprs FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-
-    "q34_upsert_doc" ->
-      """SELECT o_orderkey, o_orderstatus FROM (
-        |  SELECT o_orderkey, o_orderstatus FROM orders
-        |  UNION ALL SELECT -1, 'Z'
-        |) ORDER BY o_orderkey""".stripMargin,
-
-    "q35_find_and_modify" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey = (
-        |    SELECT o_orderkey FROM orders WHERE o_orderstatus = 'O'
-        |    ORDER BY o_totalprice DESC, o_orderkey LIMIT 1)
-        |  THEN '0-TOUCHED' ELSE o_orderpriority END AS o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q36_json_extract" ->
-      """SELECT event_type,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
-        |  CAST(MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q37_bucket" ->
-      """SELECT CASE
-        |    WHEN o_totalprice >= 0.0 AND o_totalprice < 50000.0 THEN 0.0
-        |    WHEN o_totalprice >= 50000.0 AND o_totalprice < 150000.0 THEN 50000.0
-        |    WHEN o_totalprice >= 150000.0 AND o_totalprice < 300000.0 THEN 150000.0
-        |    WHEN o_totalprice >= 300000.0 AND o_totalprice < 1000000.0 THEN 300000.0
-        |    ELSE NULL END AS _id,
-        |  CAST(COUNT(*) AS BIGINT) AS n, MAX(o_totalprice) AS maxp
-        |FROM orders GROUP BY 1 ORDER BY _id""".stripMargin,
-
-    "q38_asof_join" ->
-      """WITH r AS (
-        |  SELECT user_id, ts, value AS signup_value FROM events
-        |  WHERE event_type = 'signup')
-        |SELECT l.event_id, r.signup_value FROM events l
-        |ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    "q39_hash_sample" ->
-      """SELECT doc_id FROM documents
-        |WHERE ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 1000000 < 100000
-        |ORDER BY doc_id""".stripMargin,
-
-    "q40_stratified_sample" ->
-      """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n FROM documents
-        |WHERE ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 1000000 <
-        |  CASE WHEN lang = 'en' THEN 500000
-        |       WHEN lang = 'zh' THEN 250000 ELSE 1000000 END
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "q28_multimodal" ->
-      """SELECT doc_id AS media_id,
-        |  ('0x'||substr(md5(text), 1, 8))::BIGINT / 4294967295.0 AS f0,
-        |  ('0x'||substr(md5(text), 9, 8))::BIGINT / 4294967295.0 AS f1,
-        |  ('0x'||substr(md5(text), 17, 8))::BIGINT / 4294967295.0 AS f2
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "q41_manual_migration" ->
-      """SELECT s_suppkey,
-        |  CASE WHEN s_nationkey < 10 THEN upper(s_name) ELSE s_name END
-        |    AS s_name,
-        |  s_nationkey
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
-
-    "q42_stream_migration" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-        |WHERE c_mktsegment <> 'BUILDING'
-        |UNION ALL
-        |SELECT c_custkey, upper(c_name), c_mktsegment FROM customer
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey % 2 = 0
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q43_insert" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM (
-        |  SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |  UNION ALL
-        |  SELECT CAST(n_nationkey + 100 AS INTEGER), n_name, n_regionkey
-        |  FROM nation WHERE n_nationkey < 5)
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "q44_ddl" ->
-      """SELECT 'fresh' AS listed, 2 * COUNT(*) AS cnt,
-        |  CAST(0 AS BIGINT) AS after_drop
-        |FROM region""".stripMargin,
-
-    "q45_config_yaml" ->
-      """SELECT r_regionkey,
-        |  CASE WHEN r_regionkey >= 2 THEN 'TAGGED' ELSE r_name END AS r_name
-        |FROM region ORDER BY r_regionkey""".stripMargin,
-
-    "q46_query_all" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_orderstatus = 'F'
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin,
-
-    "q47_streaming_migration" ->
-      """SELECT event_id, event_type,
-        |  CASE WHEN event_type = 'click' THEN 'CLICKED' ELSE props END
-        |    AS props
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q48_run_command" ->
-      """SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS cnt
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q51_dotted_path" ->
-      """SELECT doc_id FROM documents
-        |WHERE lang = 'en' AND n_chars >= 200
-        |ORDER BY doc_id""".stripMargin,
-
-    "q49_pending_migrations" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS pending FROM orders
-        |WHERE o_orderstatus = 'O'""".stripMargin,
-
-    // transitive closure over the same pair set the engine's label
-    // propagation converges on; component = min id reachable
-    "q50_dedup_clusters" ->
-      s"""WITH RECURSIVE p AS (
-         |${minhashOracle(12, 4)}
-         |),
-         |und AS (SELECT id_a AS a, id_b AS b FROM p
-         |        UNION SELECT id_b, id_a FROM p),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
-         |SELECT a AS id, LEAST(a, MIN(b)) AS component
-         |FROM reach GROUP BY a ORDER BY id""".stripMargin,
-
-    // unordered bulk = type-batched insert -> upsert -> update -> remove,
-    // regardless of the order ops were queued in
-    "q52_bulk_unordered" ->
-      """WITH ins AS (
-        |  SELECT * FROM part
-        |  UNION ALL
-        |  SELECT p_partkey + 1000000, p_name, p_brand, p_type, p_size,
-        |         p_retailprice
-        |  FROM part WHERE p_partkey <= 3
-        |), ups AS (
-        |  SELECT p_partkey, p_name, p_brand, p_type, p_size,
-        |         p_retailprice + 1000.0 AS p_retailprice
-        |  FROM part WHERE p_partkey BETWEEN 10 AND 20
-        |  UNION ALL
-        |  SELECT p_partkey + 2000000, p_name, p_brand, p_type, p_size,
-        |         p_retailprice
-        |  FROM part WHERE p_partkey <= 2
-        |), m AS (
-        |  SELECT * FROM ups
-        |  UNION ALL
-        |  SELECT * FROM ins
-        |  WHERE p_partkey NOT IN (SELECT p_partkey FROM ups)
-        |), u AS (
-        |  SELECT p_partkey,
-        |    CASE WHEN p_size >= 40 THEN 'Brand#XL' ELSE p_brand END AS p_brand,
-        |    p_size, p_retailprice
-        |  FROM m
-        |)
-        |SELECT p_partkey, p_brand, p_size, p_retailprice FROM u
-        |WHERE NOT (p_retailprice < 910.0)
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q53_fam_return_new" ->
-      """SELECT o_orderkey, o_orderstatus, 'RUSH' AS o_orderpriority,
-        |       o_totalprice + 1000 AS o_totalprice
-        |FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY o_orderkey LIMIT 1""".stripMargin,
-
-    "q54_transform_doc" ->
-      """WITH raw AS (
-        |  SELECT to_json(struct_pack(n_nationkey := n_nationkey,
-        |    n_name := n_name, n_regionkey := n_regionkey)) AS doc
-        |  FROM nation)
-        |SELECT CAST(json_extract_string(doc, '$.n_nationkey') AS INTEGER)
-        |         AS n_nationkey,
-        |       json_extract_string(doc, '$.n_name') AS n_name,
-        |       CAST(json_extract_string(doc, '$.n_regionkey') AS INTEGER)
-        |         AS n_regionkey
-        |FROM raw ORDER BY n_nationkey""".stripMargin,
-
-    "q55_list_databases" ->
-      "SELECT 'dbroot,alpha,beta' AS dbs, CAST(3 AS BIGINT) AS n_dbs",
-
-    "q56_facet" ->
-      """SELECT
-        |  (SELECT string_agg(s, '|' ORDER BY s) FROM (
-        |     SELECT o_orderstatus || ':' || CAST(COUNT(*) AS VARCHAR) AS s
-        |     FROM orders GROUP BY o_orderstatus)) AS statuses,
-        |  (SELECT COUNT(*) FROM orders
-        |   WHERE o_totalprice >= 300000.0) AS n_big""".stripMargin,
-
-    "q57_merge" ->
-      """SELECT status, cnt FROM (
-        |  SELECT o_orderstatus AS status, COUNT(*) AS cnt
-        |  FROM orders GROUP BY o_orderstatus
-        |  UNION ALL
-        |  SELECT 'Z' AS status, CAST(99 AS BIGINT) AS cnt
-        |) ORDER BY status""".stripMargin,
-
-    "q58_lookup_pipeline" ->
-      """SELECT o.o_orderkey,
-        |  COALESCE(l.n, 0) AS n_lines,
-        |  COALESCE(l.nums, '') AS line_nums
-        |FROM orders o
-        |LEFT JOIN (
-        |  SELECT l_orderkey, COUNT(*) AS n,
-        |    string_agg(CAST(l_linenumber AS VARCHAR), ','
-        |      ORDER BY l_linenumber) AS nums
-        |  FROM lineitem WHERE l_quantity >= 30.0 GROUP BY l_orderkey
-        |) l ON o.o_orderkey = l.l_orderkey
-        |WHERE o.o_orderkey <= 200
-        |ORDER BY o.o_orderkey""".stripMargin,
-
-    "q59_graph_lookup" ->
-      """WITH RECURSIVE nodes AS (
-        |  SELECT n_nationkey AS id,
-        |    CASE WHEN n_nationkey >= 5 THEN n_nationkey - 5 END AS parent
-        |  FROM nation),
-        |anc AS (
-        |  SELECT id, parent AS aid FROM nodes WHERE parent IS NOT NULL
-        |  UNION
-        |  SELECT a.id, n.parent FROM anc a JOIN nodes n ON a.aid = n.id
-        |  WHERE n.parent IS NOT NULL
-        |)
-        |SELECT n.id, COALESCE(c.n, 0) AS n_anc,
-        |       COALESCE(c.ids, '') AS anc_ids
-        |FROM nodes n LEFT JOIN (
-        |  SELECT id, COUNT(*) AS n,
-        |    string_agg(CAST(aid AS VARCHAR), ',' ORDER BY aid) AS ids
-        |  FROM anc GROUP BY id) c ON n.id = c.id
-        |ORDER BY n.id""".stripMargin,
-
-    "q60_window_fields" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |  ROW_NUMBER() OVER
-        |    (PARTITION BY o_orderstatus ORDER BY o_orderkey) AS rn,
-        |  COUNT(*) OVER (PARTITION BY o_orderstatus ORDER BY o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_cnt,
-        |  COALESCE(LAG(o_orderkey) OVER
-        |    (PARTITION BY o_orderstatus ORDER BY o_orderkey), -1) AS prev_key
-        |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q61_union_with" ->
-      """SELECT key, name FROM (
-        |  SELECT c_custkey AS key, c_name AS name FROM customer
-        |  UNION ALL
-        |  SELECT s_suppkey + 1000000 AS key, s_name AS name FROM supplier
-        |) ORDER BY key""".stripMargin,
-
-    "q62_fill_locf" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |  LAST_VALUE(v IGNORE NULLS) OVER (
-        |    PARTITION BY o_orderstatus ORDER BY o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v
-        |FROM (SELECT o_orderkey, o_orderstatus,
-        |        CASE WHEN o_totalprice < 100000.0 THEN NULL
-        |             ELSE o_totalprice END AS v
-        |      FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q63_bucket_auto" ->
-      """WITH freq AS (
-        |  SELECT o_totalprice AS bv, COUNT(*) AS f FROM orders GROUP BY bv),
-        |cum AS (
-        |  SELECT bv, f,
-        |    SUM(f) OVER (ORDER BY bv
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - f AS c,
-        |    SUM(f) OVER () AS n
-        |  FROM freq),
-        |assigned AS (
-        |  SELECT bv, f,
-        |    LEAST(CAST(FLOOR(c * 5 / n) AS BIGINT), 4) AS bucket
-        |  FROM cum)
-        |SELECT MIN(bv) AS bucket_min, MAX(bv) AS bucket_max,
-        |       CAST(SUM(f) AS BIGINT) AS count
-        |FROM assigned GROUP BY bucket ORDER BY bucket_min""".stripMargin,
-
-    "q64_ivf_assign" ->
-      s"""WITH c AS (
-         |  SELECT vec_id AS cid, embedding AS ce FROM embeddings
-         |  WHERE vec_id < 4),
-         |p AS (
-         |  SELECT e.vec_id AS ia, c.cid AS ib,
-         |         e.embedding AS ea, c.ce AS eb
-         |  FROM embeddings e, c),
-         |${cosineCtes("p")},
-         |r AS (
-         |  SELECT ia AS vec_id, ib AS centroid_id,
-         |    row_number() OVER (PARTITION BY ia
-         |      ORDER BY dot / (sqrt(na) * sqrt(nb)) DESC, ib) AS rn
-         |  FROM d)
-         |SELECT vec_id, centroid_id FROM r WHERE rn = 1
-         |ORDER BY vec_id""".stripMargin,
-
-    "q65_fingerprint" ->
-      """SELECT '{"age": {"$gte": <int>}, "tags": [<int>, <string>]}' AS fp,
-        |       true AS full_has_values, false AS stripped_has_values"""
-        .stripMargin,
-
-    "q66_stream_rollup" ->
-      """SELECT date_trunc('hour', ts) AS ts_hour, event_type,
-        |  CAST(SUM(CASE WHEN event_type <> 'error' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS succeeded,
-        |  CAST(SUM(CASE WHEN event_type <> 'error' THEN 0 ELSE 1 END)
-        |    AS BIGINT) AS failed,
-        |  CAST(SUM(event_id % 1000) AS BIGINT) AS duration_ns
-        |FROM events GROUP BY ts_hour, event_type
-        |ORDER BY ts_hour, event_type""".stripMargin,
-
-    "q67_salted_agg" ->
-      """SELECT l_returnflag, CAST(SUM(l_quantity) AS BIGINT) AS sum_qty,
-        |       COUNT(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q69_out" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_orderstatus = 'F' ORDER BY o_orderkey""".stripMargin,
-
-    "q73_covar_bits" ->
-      """SELECT p_brand AS brand,
-        |  CAST(CAST(covar_pop(p_size, p_partkey) AS DECIMAL(28,6))
-        |    AS DOUBLE) AS cv,
-        |  bit_and(p_size) AS ba, bit_or(p_size) AS bo,
-        |  bit_xor(p_size) AS bx
-        |FROM part GROUP BY p_brand
-        |ORDER BY brand""".stripMargin,
-
-    "q72_percentile" ->
-      """SELECT l_returnflag AS flag,
-        |  quantile_cont(l_quantity, 0.5) AS med,
-        |  quantile_cont(l_quantity, 0.25) AS p25,
-        |  quantile_cont(l_quantity, 0.75) AS p75
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY flag""".stripMargin,
-
-    "q71_topn_expr" ->
-      """SELECT o_orderstatus AS status,
-        |  MAX(CASE WHEN rn = 1 THEN o_totalprice END) AS t1,
-        |  MAX(CASE WHEN rn = 2 THEN o_totalprice END) AS t2,
-        |  MAX(CASE WHEN rn = 3 THEN o_totalprice END) AS t3
-        |FROM (
-        |  SELECT o_orderstatus, o_totalprice,
-        |    ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-        |      ORDER BY o_orderkey) AS rn
-        |  FROM orders WHERE o_orderkey % 2 = 0)
-        |WHERE rn <= 3 GROUP BY o_orderstatus
-        |ORDER BY status""".stripMargin,
-
-    "q70_expr_lang" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split(text, ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |lens AS (
-        |  SELECT doc_id, list_transform(t, x -> length(x)) AS ls FROM toks)
-        |SELECT t.doc_id,
-        |  CAST(len(t.t) AS BIGINT) AS n_toks,
-        |  CAST(COALESCE(list_sum(l.ls), 0) AS BIGINT) AS total_chars,
-        |  CAST(len(list_filter(l.ls, x -> x >= 6)) AS BIGINT) AS long_toks
-        |FROM toks t JOIN lens l ON t.doc_id = l.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-
-    "q68_densify" ->
-      """WITH counts AS (
-        |  SELECT s_nationkey AS nk, COUNT(*) AS n_sup
-        |  FROM supplier WHERE s_suppkey <= 30 GROUP BY s_nationkey)
-        |SELECT g.nk, c.n_sup
-        |FROM (SELECT UNNEST(range(0, 25)) AS nk) g
-        |LEFT JOIN counts c ON g.nk = c.nk
-        |ORDER BY g.nk""".stripMargin,
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.map(q => q.name -> q.run).toMap
+
+  def oracleSql: Map[String, String] =
+    Registry.all.map(q => q.name -> q.oracle).toMap
 }

@@ -1,36 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+import graft.queries.Registry
+
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val Usage = "usage: graft.Verify <sfDir> <outDir> [query,query,...]"
+
+  /** (sfDir, outDir, optional query-name filter), or the message to exit
+    * with: the usage line when a directory is missing, or the filter's
+    * names that are not registered (a typo would otherwise run nothing). */
+  def parseArgs(args: Array[String])
+      : Either[String, (String, String, Option[Set[String]])] = args match {
+    case Array(sfDir, outDir, rest @ _*) =>
+      val only = rest.headOption.map(_.split(',').toSet)
+      val unknown = only.getOrElse(Set.empty) -- Registry.byName.keySet
+      if (unknown.nonEmpty)
+        Left(s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      else Right((sfDir, outDir, only))
+    case _ => Left(Usage)
+  }
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg: comma-separated query-name filter (local iteration)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, outDir, only) = parseArgs(args) match {
+      case Right(parsed) => parsed
+      case Left(msg) =>
+        System.err.println(s"[verify] $msg")
+        sys.exit(2)
+    }
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    Registry.all
+      .filter(q => only.forall(_.contains(q.name)))
+      .foreach { q =>
+      try q.runWith(spark, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}"))
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
-      // queries may persist intermediates for intra-query reuse; drop
-      // them so 264 sequential queries don't accumulate cached frames
-      graft.ops.Dedup.releaseCaches()
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

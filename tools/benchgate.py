@@ -23,7 +23,7 @@ import sys
 # Same-name queries whose DECLARED computation changed in a later round:
 # the same-name comparison is meaningless across the change (it would
 # compare two different workloads). Since r11 the bench artifact carries
-# a per-query "rev" map (SparkEntry.queryRevisions): the gate NOTEs
+# a per-query "rev" map (each registry entry's `rev`): the gate NOTEs
 # exactly when cur-rev != prev-rev — workload IDENTITY, no runtime
 # inference — and resumes normal gating the moment the baseline records
 # the same rev. This table is the fallback for PRE-rev prior artifacts
