@@ -236,7 +236,6 @@ object ScaleProbe {
           else if (cap > 1L)
             spark.conf.set("spark.graft.skewSalt", cap.toString)
           else spark.conf.unset("spark.graft.skewSalt")
-          import org.apache.spark.sql.functions._
           val outer = spark.range(40000000L).selectExpr("id AS _id",
             "CASE WHEN id % 10 < 9 THEN 'hot' " +
               "ELSE concat('k', id % 100000) END AS k")
@@ -469,7 +468,6 @@ object ScaleProbe {
           // Ranked doc ids must agree exactly (scores can differ in
           // the last ulp across aggregation orders, so parity checks
           // ids + matched counts).
-          import org.apache.spark.sql.functions._
           import graft.ops.TextSearch
           val terms = Seq("data", "query", "spark")
           val t1 = System.nanoTime()

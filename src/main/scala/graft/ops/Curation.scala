@@ -208,11 +208,11 @@ object Curation {
     * corpus-adaptive bucket sizing (pin it for reproducibility / when
     * feeding saved [[Dedup.vectorBucketSignatures]] stores upstream).
     *
-    * Shape at 100 TB: the pair stage is the banded LSH equi-join
-    * (valved), clustering is star contraction with full path
-    * compression over the PAIR graph (O(log n) rounds for any id
-    * layout — [[Dedup.duplicateClusters]]), keep-best is one shared
-    * component exchange,
+    * Shape at 100 TB: the pair stage is one native bucket pass and one
+    * grouped pair scan over the LSH buckets (valved), clustering is
+    * star contraction with full path compression over the PAIR graph
+    * (O(log n) rounds for any id layout — [[Dedup.duplicateClusters]]),
+    * keep-best is one shared component exchange,
     * decon broadcasts a ≤65536-vector bench (LSH above), the sample is
     * scan-side hash math. Output: surviving rows + `component` +
     * `cluster_size`. */

@@ -1192,10 +1192,7 @@ object Dedup {
     val driverLimit = pairs.sparkSession.conf
       .getOption("spark.graft.clusters.driverEdgeLimit")
       .map(_.toLong).getOrElse(200000L)
-    val idType = {
-      import org.apache.spark.sql.types._
-      pairs.schema(idA).dataType
-    }
+    val idType = pairs.schema(idA).dataType
     val integralId = {
       import org.apache.spark.sql.types._
       idType match {
@@ -1607,31 +1604,6 @@ object Dedup {
       members, nl)
   }
 
-  /** Embedding cosine near-duplicates.
-    *
-    * Default path is sub-quadratic: candidates are generated by multi-table
-    * random-hyperplane LSH blocking ([[Similarity.hyperplaneBucket]] —
-    * `blockTables` independent tables of `blockPlanes` sign bits, all from
-    * ONE struct-explode pass), joined on the (table, bucket) key, then
-    * verified with the exact cosine. Pairs sharing a bucket in ANY table are
-    * candidates, so recall grows with `blockTables` while each join stays a
-    * bucket equi-join that scales with bucket occupancy, not n².
-    *
-    * `blockPlanes <= 0` (the DEFAULT) sizes the bucket space from the
-    * corpus ([[autoBlockPlanes]] — planes ≈ log2(corpus/targetBucket),
-    * targetBucket via `spark.graft.embed.targetBucket`, default 100), so
-    * the same call stays linear from 10³ to 10¹⁰ rows with no tuning; an
-    * explicit value pins the space for reproducibility.
-    *
-    * `blockCol` overrides the blocker with a caller-provided key (e.g. a
-    * domain column). `blockTables = 0` opts IN to the brute-force broadcast
-    * O(n²) path — only for bounded n or per-bucket verification; it is
-    * deliberately not the default (a BroadcastNestedLoopJoin over the corpus
-    * is a scale-killer).
-    *
-    * Norms are computed once per row; the dot product is the native
-    * codegen'd expression. `dim` = embedding dimensionality (0 = infer from
-    * the first row). Output: (id_a, id_b), cosine >= threshold. */
   /** Corpus-adaptive hyperplane count for the LSH blocker: each plane
     * halves expected bucket occupancy, so `planes ≈ log2(corpus /
     * targetBucket)` keeps per-bucket candidate pairs bounded (≈
@@ -1661,118 +1633,52 @@ object Dedup {
     math.min(24, math.max(4, ceilLog2 + 1))
   }
 
-  /** Fused within-group qualifying-pair scan (the [[semDeDup]] fused
-    * shape, emitting PAIRS): one hash shuffle on the group key, then
-    * each group's upper-triangular scan runs as a tight in-memory loop
-    * — no candidate-row materialization, no vector re-attach joins.
-    * Emits (id_a, id_b), id_a < id_b, cosine ≥ threshold; the caller
-    * `distinct()`s across groups (multi-table LSH emits the same pair
-    * from several tables). Identical arithmetic to the join form
-    * (sequential widen-multiply-accumulate dot, per-row sqrt'd norms,
-    * denom==0 → 0), so the pair SET is bit-identical — including two
-    * edges the join's SQL comparisons imply: rows SHARING an id never
-    * pair with each other (the join's strict `id_a < id_b`), and a
-    * NaN cosine QUALIFIES (Spark's nan-safe `>=` ranks NaN above
-    * every threshold — nanSafeCompareDoubles). Ids are a documented
-    * UNIQUE precondition of the dedup APIs; if violated, the pair SET
-    * still matches the join form but the multiset may not (the join
-    * form re-attaches vectors by id, emitting a qualifying pair once
-    * per duplicate-row combination where this path's distinct()
-    * emits it once).
+  /** The grouped pair scan behind both blocked branches of
+    * [[embeddingNearDup]]: `rows` holds (id, v) plus the group key
+    * columns `keys`. ONE hash exchange on the key gathers each group's
+    * (id, v) structs (`collect_list`), the
+    * [[graft.functions.CosinePairs]] generator runs the group's
+    * upper-triangular cosine loop in memory and streams the qualifying
+    * pairs out, and a `distinct` merges a pair found in several groups
+    * (multi-table LSH finds one pair in up to `blockTables` buckets).
+    * No candidate row is materialized, no vector re-attaches by a join,
+    * and no typed Dataset or UDF boundary sits in the plan.
     *
-    * Pairs stream out lazily (an iterator over the upper triangle),
-    * never buffered per group: a duplicate-dense group's O(n²)
-    * qualifying pairs flow straight into the shuffle write and spill
-    * like the join form's pair stream would. `maxCellRows` bounds the
-    * INPUT side; the OUTPUT side has its own valve,
-    * `spark.graft.semdedup.maxGroupPairs` (default 2e9 emitted pairs
-    * per group), so a degenerate corpus fails fast with a remedy
-    * instead of writing an unbounded shuffle. */
-  private def fusedPairScan(
-      groups: org.apache.spark.sql.Dataset[(String, Long, Array[Double])],
+    * The pair SET is the candidate join's (kept as the reference in
+    * OpsSpec): identical arithmetic (sequential widen-multiply-
+    * accumulate dot, per-row sqrt'd norms, denom == 0 → 0) and the SQL
+    * edges that join implies — ids compare in SQL ordering (any
+    * orderable id type), strict `id_a < id_b` (equal ids never pair), a
+    * NaN cosine qualifies (Spark's nan-safe `>=`), null keys, ids and
+    * vectors never pair, and the grouping merges -0.0/0.0 keys and
+    * groups NaN with NaN as an equi-join does. Ids are a documented
+    * UNIQUE precondition; under duplicates the SET still matches, but
+    * the join emitted one row per duplicate-row combination where this
+    * emits the pair once.
+    *
+    * Valves, read here on the driver: `spark.graft.semdedup.maxCellRows`
+    * (default 500k) bounds a group's rows and
+    * `spark.graft.semdedup.maxGroupPairs` (default 2e9) the pairs out of
+    * one group; either fails the job fast with its remedy. */
+  private def groupedPairScan(rows: DataFrame, keys: Seq[String],
       threshold: Double): DataFrame = {
-    val spark = groups.sparkSession
-    import spark.implicits._
-    val maxCell = spark.conf
-      .getOption("spark.graft.semdedup.maxCellRows")
+    val conf = rows.sparkSession.conf
+    val maxCell = conf.getOption("spark.graft.semdedup.maxCellRows")
       .map(_.toLong).getOrElse(500000L)
-    val maxPairs = spark.conf
-      .getOption("spark.graft.semdedup.maxGroupPairs")
+    val maxPairs = conf.getOption("spark.graft.semdedup.maxGroupPairs")
       .map(_.toLong).getOrElse(2000000000L)
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
-    groups.groupByKey(_._1).flatMapGroups { (g, it) =>
-      val arr = it.toArray
-      if (arr.length > maxCell) throw new IllegalStateException(
-        s"embeddingNearDup: block '$g' holds ${arr.length} rows > " +
-          s"spark.graft.semdedup.maxCellRows=$maxCell — the block " +
-          "domain is degenerate for this corpus. Use blocks that " +
-          "scale with the data, or raise the valve.")
-      java.util.Arrays.sort(arr,
-        Ordering.by((t: (String, Long, Array[Double])) => t._2))
-      val n = arr.length
-      val norms = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        norms(i) = math.sqrt(dot(arr(i)._3, arr(i)._3)); i += 1
-      }
-      new Iterator[(Long, Long)] {
-        private var j = 1
-        private var a = 0
-        private var emitted = 0L
-        private var pair: (Long, Long) = _
-        private var ready = false
-        private def advance(): Unit = {
-          while (!ready && j < n) {
-            while (!ready && a < j) {
-              val ia = arr(a)._2
-              val ib = arr(j)._2
-              // join parity: strict id_a < id_b — equal ids (a
-              // duplicated key, or a row against itself via two
-              // sorted copies) form no pair
-              if (ia != ib) {
-                val denom = norms(a) * norms(j)
-                val c = if (denom == 0.0) 0.0
-                  else dot(arr(a)._3, arr(j)._3) / denom
-                // join parity: SQL `cos >= t` is nan-safe (NaN sorts
-                // above every value), so a NaN cosine qualifies
-                if (c >= threshold || java.lang.Double.isNaN(c)) {
-                  emitted += 1
-                  if (emitted > maxPairs) throw new IllegalStateException(
-                    s"embeddingNearDup: block '$g' emitted more than " +
-                      s"spark.graft.semdedup.maxGroupPairs=$maxPairs " +
-                      "qualifying pairs — the corpus is duplicate-" +
-                      "degenerate at this threshold. Raise the " +
-                      "threshold, dedup exactly first, or raise the " +
-                      "valve.")
-                  pair = (ia, ib)
-                  ready = true
-                }
-              }
-              a += 1
-            }
-            if (!ready) { j += 1; a = 0 }
-          }
-        }
-        advance()
-        override def hasNext: Boolean = ready
-        override def next(): (Long, Long) = {
-          val p = pair
-          ready = false
-          advance()
-          p
-        }
-      }
-    }.toDF("id_a", "id_b").distinct()
+    val present = (Seq("id", "v") ++ keys).map(col(_).isNotNull)
+    rows.where(present.reduce(_ && _))
+      .groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("id"), col("v"))).as("_rows"))
+      .select(graft.functions.VectorFunctions.cosine_pairs(
+        concat_ws(":", keys.map(col(_).cast("string")): _*), col("_rows"),
+        threshold, maxCell, maxPairs))
+      .distinct()
   }
 
-  /** The fused paths carry the group key as a STRING (one encoder for
-    * any key type); for float/double keys the cast must first fold
+  /** [[semDeDupFused]] carries the group key as a STRING (one encoder
+    * for any key type); for float/double keys the cast must first fold
     * -0.0 into 0.0 — SQL equi-joins (the join form) treat them as ONE
     * key, while their strings ("-0.0"/"0.0") would split the group.
     * NaN needs no help: every NaN renders "NaN", matching Spark's
@@ -1787,127 +1693,80 @@ object Dedup {
     norm.cast("string")
   }
 
-  /** True when [[fusedPairScan]] can represent this frame (numeric id,
-    * float/double vector) and the fused path is not disabled. */
-  private def fusedEligible(df: DataFrame, idCol: String,
-      vecCol: String): Boolean = {
-    import org.apache.spark.sql.types._
-    val idNumeric = df.schema(idCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val vecOk = df.schema(vecCol).dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    df.sparkSession.conf
-      .getOption("spark.graft.semdedup.fusedWithinCell")
-      .forall(_.toBoolean) && idNumeric && vecOk
-  }
-
+  /** Embedding cosine near-duplicates.
+    *
+    * Default path is sub-quadratic: multi-table random-hyperplane LSH
+    * blocking ([[Similarity.withAllTableBuckets]] — `blockTables`
+    * independent tables of `blockPlanes` sign bits, all from ONE native
+    * bucket pass), then the grouped pair scan over the (table, bucket)
+    * groups ([[groupedPairScan]]: one exchange on the bucket key, the
+    * exact cosine verified in memory per bucket, one `distinct`). Pairs
+    * sharing a bucket in ANY table are candidates, so recall grows with
+    * `blockTables` while the work stays within buckets — it scales with
+    * bucket occupancy, not n².
+    *
+    * `blockPlanes <= 0` (the DEFAULT) sizes the bucket space from the
+    * corpus ([[autoBlockPlanes]] — planes ≈ log2(corpus/targetBucket),
+    * targetBucket via `spark.graft.embed.targetBucket`, default 100), so
+    * the same call stays linear from 10³ to 10¹⁰ rows with no tuning; an
+    * explicit value pins the space for reproducibility.
+    *
+    * `blockCol` overrides the blocker with a caller-provided key (e.g. a
+    * domain column); the same grouped pair scan runs over its groups.
+    * `blockTables = 0` opts IN to the brute-force broadcast O(n²) path —
+    * only for bounded n or per-bucket verification; it is deliberately
+    * not the default (a BroadcastNestedLoopJoin over the corpus is a
+    * scale-killer).
+    *
+    * Norms are computed once per row. `dim` = embedding dimensionality
+    * (0 = infer from the first row). Output: distinct (id_a, id_b),
+    * id_a < id_b, cosine >= threshold. */
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, blockCol: Option[String] = None,
       blockTables: Int = 4, blockPlanes: Int = 0, dim: Int = 0): DataFrame = {
     import graft.functions.VectorFunctions.vec_dot
-    // norms are sqrt'd ONCE PER ROW before the pair join — the per-pair
-    // work is one multiply + divide (bit-identical: the product of the
-    // same two doubles either way, but ~10^9-pair blocks pay two fewer
-    // sqrts each)
-    def cos(na: Column, nb: Column, d: Column): Column = {
-      val denom = na * nb
-      when(denom === 0.0, lit(0.0)).otherwise(d / denom)
-    }
-    if (blockCol.isDefined || blockTables <= 0) {
-      val base = df.select(
-        col(idCol).as("id"), col(vecCol).as("v"),
-        blockCol.map(col).getOrElse(lit(0)).as("blk"))
-        .withColumn("nsq", sqrt(vec_dot(col("v"), col("v"))))
-      // same valve family as the jaccard path, and ON BY DEFAULT for
-      // the same reason (2e9; 0 disables): with a FIXED block domain
-      // (e.g. a label column) block sizes grow linearly with the corpus
-      // and the within-block all-pairs join quadratically — the remedy
-      // is blocks that scale with the corpus (semDeDupKMeans cells,
-      // k ~ n/target)
-      val maxCandB = df.sparkSession.conf
-        .getOption("spark.graft.embed.maxCandidatePairs")
-        .map(_.toLong).getOrElse(2000000000L)
-      if (maxCandB > 0 && blockCol.isDefined) {
-        val vol = base.groupBy("blk").agg(count(lit(1)).as("s"))
-          .agg(coalesce(sum(col("s").cast("double") *
-            (col("s") - 1) / 2), lit(0.0)).as("cand")).head().getDouble(0)
-        if (vol > maxCandB) throw new IllegalStateException(
-          f"embeddingNearDup: candidate volume $vol%.3g exceeds " +
-            s"spark.graft.embed.maxCandidatePairs=$maxCandB — the " +
-            "block domain is too coarse for this corpus (block sizes " +
-            "grow with the data). Use blocks that scale with the " +
-            "corpus — semDeDupKMeans cells with k ~ corpus/targetCell " +
-            "— or raise the valve.")
-      }
-      val fusedMinRowsB = df.sparkSession.conf
-        .getOption("spark.graft.semdedup.fusedMinRows")
-        .map(_.toLong).getOrElse(100000L)
-      if (blockCol.isDefined && fusedEligible(df, idCol, vecCol) &&
-        fusedMinRowsB < Int.MaxValue - 1 &&
-        base.limit((fusedMinRowsB + 1).toInt).count() > fusedMinRowsB) {
-        // fused per-block scan (round 11): one shuffle of the rows to
-        // their blocks, upper-triangular loop in memory — see
-        // [[fusedPairScan]]; the join form below remains the fallback
-        // for non-numeric ids / exotic vector types and for small
-        // corpora (the fused object boundary's fixed overhead loses
-        // below ~10⁵ rows — same gate as the LSH branch)
-        val spark = df.sparkSession
-        import spark.implicits._
-        val idT = df.schema(idCol).dataType
-        // `blk` aliases the user's block column here, so normalize the
-        // string key the same way semDeDupFused does (-0.0 → 0.0 for
-        // float/double keys — SQL would merge those groups)
-        val blkKey = normalizedGroupKey(base.schema("blk").dataType,
-          col("blk"))
-        val groups = base
-          .select(blkKey.as("_g"),
-            col("id").cast("long").as("_id"),
-            col("v").cast("array<double>").as("_v"))
-          .where(col("_g").isNotNull && col("_id").isNotNull &&
-            col("_v").isNotNull)
-          .as[(String, Long, Array[Double])]
-        fusedPairScan(groups, threshold)
-          .select(col("id_a").cast(idT).as("id_a"),
-            col("id_b").cast(idT).as("id_b"))
-      } else if (blockCol.isDefined) {
-        // NARROW candidate frame (the LSH branch's lesson, round 10):
-        // the pair join shuffles only (id, blk) — ~16 B/candidate — and
-        // the vectors re-attach afterwards by id equi-joins against the
-        // corpus-sized (not candidate-sized) frame, which AQE broadcasts
-        // when it fits. The earlier form carried both 64-float vectors
-        // THROUGH the pair join (~512 B/candidate): at 10⁸ within-cell
-        // candidates that is a 50 GB shuffle for 1.6 GB of information,
-        // and it is what the embed valve had to be sized against.
-        val ids = base.select(col("id"), col("blk"))
-        val cand = Partitioning.ensureMinPartitions(ids.toDF("id_a", "blk"))
-          .join(ids.toDF("id_b", "blk"), Seq("blk"))
-          .where(col("id_a") < col("id_b"))
-          .select("id_a", "id_b")
-        val va = base.select(col("id").as("id_a"), col("v").as("va"),
-          col("nsq").as("na"))
-        val vb = base.select(col("id").as("id_b"), col("v").as("vb"),
-          col("nsq").as("nb"))
-        cand.join(va, "id_a").join(vb, "id_b")
-          .withColumn("cos", cos(col("na"), col("nb"),
-            vec_dot(col("va"), col("vb"))))
-          .where(col("cos") >= threshold)
-          .select(col("id_a"), col("id_b"))
-      } else {
-        val a = Partitioning.ensureMinPartitions(
-          base.drop("blk").toDF("id_a", "va", "na"))
-        val b = base.drop("blk").toDF("id_b", "vb", "nb")
+    blockCol match {
+      case Some(bc) =>
+        val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
+          col(bc).as("blk"))
+        // same valve family as the jaccard path, and ON BY DEFAULT for
+        // the same reason (2e9; 0 disables): with a FIXED block domain
+        // (e.g. a label column) block sizes grow linearly with the
+        // corpus and the within-block pair work quadratically — the
+        // remedy is blocks that scale with the corpus (semDeDupKMeans
+        // cells, k ~ n/target)
+        val maxCandB = df.sparkSession.conf
+          .getOption("spark.graft.embed.maxCandidatePairs")
+          .map(_.toLong).getOrElse(2000000000L)
+        if (maxCandB > 0) {
+          val vol = base.groupBy("blk").agg(count(lit(1)).as("s"))
+            .agg(coalesce(sum(col("s").cast("double") *
+              (col("s") - 1) / 2), lit(0.0)).as("cand")).head().getDouble(0)
+          if (vol > maxCandB) throw new IllegalStateException(
+            f"embeddingNearDup: candidate volume $vol%.3g exceeds " +
+              s"spark.graft.embed.maxCandidatePairs=$maxCandB — the " +
+              "block domain is too coarse for this corpus (block sizes " +
+              "grow with the data). Use blocks that scale with the " +
+              "corpus — semDeDupKMeans cells with k ~ corpus/targetCell " +
+              "— or raise the valve.")
+        }
+        groupedPairScan(base, Seq("blk"), threshold)
+      case None if blockTables <= 0 =>
+        // norms are sqrt'd ONCE PER ROW before the pair join — the
+        // per-pair work is one multiply + divide
+        val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
+          .withColumn("nsq", sqrt(vec_dot(col("v"), col("v"))))
+        val a = Partitioning.ensureMinPartitions(base.toDF("id_a", "va", "na"))
+        val b = base.toDF("id_b", "vb", "nb")
+        val denom = col("na") * col("nb")
         a.join(broadcast(b), col("id_a") < col("id_b"))
-          .withColumn("cos", cos(col("na"), col("nb"),
-            vec_dot(col("va"), col("vb"))))
+          .withColumn("cos", when(denom === 0.0, lit(0.0))
+            .otherwise(vec_dot(col("va"), col("vb")) / denom))
           .where(col("cos") >= threshold)
           .select(col("id_a"), col("id_b"))
-      }
-    } else embeddingNearDupLsh(df, idCol, vecCol, threshold,
-      blockTables, blockPlanes, dim, sharedBuckets = None)
+      case None => embeddingNearDupLsh(df, idCol, vecCol, threshold,
+        blockTables, blockPlanes, dim, sharedBuckets = None)
+    }
   }
 
   /** The multi-table LSH branch of [[embeddingNearDup]], callable with
@@ -1919,136 +1778,71 @@ object Dedup {
     * must be a (persisted) frame built with exactly these
     * blockTables/blockPlanes/dim — the preset callers build it from
     * the same parameters one line above — and `blockPlanes` must be
-    * explicit (a store pins its space). Without it, the bucket frame
-    * is persisted HERE (r16, guide §2.4): it feeds the candidate-volume
-    * valve AND both sides of the bucket self-join, and the valve's
-    * eager aggregate was already materializing it once per call — the
-    // cache makes the join read that work instead of re-hashing. */
+    * explicit (a store pins its space); its (id, t, bkt) rows meet the
+    * vectors by one id equi-join. Without it, the buckets are computed
+    * inline in the scan that feeds [[groupedPairScan]] — nothing is
+    * persisted, and the pair plan has exactly two exchanges (bucket
+    * key, pair distinct). */
   private[ops] def embeddingNearDupLsh(df: DataFrame, idCol: String,
       vecCol: String, threshold: Double, blockTables: Int,
       blockPlanes: Int, dim: Int,
       sharedBuckets: Option[DataFrame]): DataFrame = {
-    import graft.functions.VectorFunctions.vec_dot
-    def cos(na: Column, nb: Column, dd: Column): Column = {
-      val denom = na * nb
-      when(denom === 0.0, lit(0.0)).otherwise(dd / denom)
-    }
     require(sharedBuckets.isEmpty || blockPlanes > 0,
       "embeddingNearDupLsh: a shared bucket frame pins its space — " +
         "blockPlanes must be explicit")
-    locally {
-      val d = if (dim > 0) dim
-        else Similarity.probeDim(df, vecCol).getOrElse(1)
-      val base = Partitioning.ensureMinPartitions(
-        df.select(col(idCol).as("id"), col(vecCol).as("v")))
-      // blockPlanes <= 0 (the default) = ADAPTIVE: size the bucket space
-      // from the corpus so the plan stays linear at any scale with no
-      // conf — one cheap metadata-friendly count picks the parameter;
-      // the candidate-volume valve below stays as the backstop. An
-      // explicit blockPlanes pins the space (the oracle queries do).
-      var nRows = -1L
-      val planes = if (blockPlanes > 0) blockPlanes else {
-        val target = df.sparkSession.conf
-          .getOption("spark.graft.embed.targetBucket")
-          .map(_.toLong).getOrElse(100L)
-        nRows = base.count()
-        autoBlockPlanes(nRows, target)
-      }
-      val ownBkts = sharedBuckets.isEmpty
-      val bkts = sharedBuckets match {
-        case Some(b) => b.select("id", "t", "bkt")
-        case None => tracked(Similarity.withAllTableBuckets(
-            base.select("id", "v"), "v", blockTables, planes, d)
-          .select(col("id"), col("t"), col("bkt")).persist())
-      }
-      // spark.graft.embed.maxCandidatePairs: PRE-JOIN volume valve, ON
-      // BY DEFAULT (2e9; 0 disables) like the jaccard valve — the same
-      // disk-full failure mode, the same family. With
-      // 2^blockPlanes buckets per table, bucket occupancy grows linearly
-      // with the corpus and per-bucket candidates quadratically — the
-      // 100x rehearsal saturated the default 8-plane space (256 buckets,
-      // ~2000 ids each) into ~10^9 candidates and died on spill disk.
-      // The valve runs one cheap occupancy aggregate over the narrow
-      // (id, t, bkt) frame and fails FAST with the named remedy: each
-      // extra plane HALVES expected occupancy (candidates drop ~4x), so
-      // size blockPlanes ~ log2(corpus / target-bucket-size); metadata
-      // blocking (blockCol) bounds buckets by construction.
-      val maxCand = df.sparkSession.conf
-        .getOption("spark.graft.embed.maxCandidatePairs")
-        .map(_.toLong).getOrElse(2000000000L)
-      if (maxCand > 0) {
-        val vol = bkts.groupBy("t", "bkt")
-          .agg(count(lit(1)).as("s"))
-          .agg(coalesce(sum(col("s").cast("double") *
-            (col("s") - 1) / 2), lit(0.0)).as("cand")).head().getDouble(0)
-        if (vol > maxCand) throw new IllegalStateException(
-          f"embeddingNearDup: candidate volume $vol%.3g exceeds " +
-            s"spark.graft.embed.maxCandidatePairs=$maxCand — the " +
-            s"$planes-plane bucket space is saturated at this " +
-            "corpus size. Raise blockPlanes (each plane halves bucket " +
-            "occupancy; size ~ log2(corpus/targetBucket)), pass " +
-            "blockCol for metadata blocking, or raise the valve.")
-      }
-      // fused is a SCALE path: the per-group object boundary has a
-      // fixed encode/decode overhead that loses to the join form on
-      // small corpora (measured at sf0.1: 1.4 → 2.3 s) and wins big
-      // above it (100×: 139 → 104 s) — gate on corpus size. The count
-      // is already in hand when planes were auto-derived; an explicit
-      // blockPlanes pays one BOUNDED limit(n+1) probe instead.
-      val fusedMinRows = df.sparkSession.conf
-        .getOption("spark.graft.semdedup.fusedMinRows")
-        .map(_.toLong).getOrElse(100000L)
-      // a threshold at/above Int.MaxValue cannot be probed with a
-      // bounded limit — it reads as "never fuse", not as an overflowed
-      // negative limit
-      val bigCorpus =
-        if (blockPlanes <= 0) nRows > fusedMinRows
-        else fusedMinRows < Int.MaxValue - 1 &&
-          base.limit((fusedMinRows + 1).toInt).count() > fusedMinRows
-      val pairsOut = if (bigCorpus && fusedEligible(df, idCol, vecCol)) {
-        // fused per-bucket scan (round 11): each row's vector travels
-        // ONCE per table to its bucket's reducer; the upper-triangular
-        // cosine loop runs in memory and the cross-table distinct is
-        // over the (small) qualifying-pair output, not the candidate
-        // volume — see [[fusedPairScan]]. The buckets ride the fused
-        // scan inline (deriving them from `bkts` would add a corpus
-        // join-back shuffle for what is scan-side hashing).
-        val spark = df.sparkSession
-        import spark.implicits._
-        val idT = df.schema(idCol).dataType
-        val groups = base
-          .select(col("id"), col("v"),
-            explode(array((0 until blockTables).map { t =>
-              concat_ws(":", lit(t),
-                Similarity.hyperplaneBucket(col("v"), planes, d, t))
-            }: _*)).as("_g"))
-          .select(col("_g"), col("id").cast("long").as("_id"),
-            col("v").cast("array<double>").as("_v"))
-          .where(col("_g").isNotNull && col("_id").isNotNull &&
-            col("_v").isNotNull)
-          .as[(String, Long, Array[Double])]
-        fusedPairScan(groups, threshold)
-          .select(col("id_a").cast(idT).as("id_a"),
-            col("id_b").cast(idT).as("id_b"))
-      } else {
-        val cand = bkts.as("a")
-          .join(bkts.as("b"),
-            col("a.t") === col("b.t") && col("a.bkt") === col("b.bkt") &&
-              col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-          .distinct()
-        val va = base.toDF("id_a", "va")
-          .withColumn("na", sqrt(vec_dot(col("va"), col("va"))))
-        val vb = base.toDF("id_b", "vb")
-          .withColumn("nb", sqrt(vec_dot(col("vb"), col("vb"))))
-        cand.join(va, "id_a").join(vb, "id_b")
-          .withColumn("cos", cos(col("na"), col("nb"),
-            vec_dot(col("va"), col("vb"))))
-          .where(col("cos") >= threshold)
-          .select(col("id_a"), col("id_b"))
-      }
-      if (ownBkts) autoRelease(pairsOut, bkts) else pairsOut
+    val d = if (dim > 0) dim
+      else Similarity.probeDim(df, vecCol).getOrElse(1)
+    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
+    // blockPlanes <= 0 (the default) = ADAPTIVE: size the bucket space
+    // from the corpus so the plan stays linear at any scale with no
+    // conf — one cheap metadata-friendly count picks the parameter; the
+    // candidate-volume valve below stays as the backstop. An explicit
+    // blockPlanes pins the space (the oracle queries do).
+    val nRows = if (blockPlanes > 0) None else Some(base.count())
+    val planes = nRows.fold(blockPlanes) { n =>
+      autoBlockPlanes(n, df.sparkSession.conf
+        .getOption("spark.graft.embed.targetBucket")
+        .map(_.toLong).getOrElse(100L))
     }
+    val keyed = sharedBuckets match {
+      case Some(b) => b.select("id", "t", "bkt").join(base, "id")
+      case None =>
+        Similarity.withAllTableBuckets(base, "v", blockTables, planes, d)
+    }
+    // spark.graft.embed.maxCandidatePairs: PRE-SCAN volume valve, ON BY
+    // DEFAULT (2e9; 0 disables) like the jaccard valve — the same
+    // disk-full failure mode, the same family. With 2^blockPlanes
+    // buckets per table, bucket occupancy grows linearly with the
+    // corpus and per-bucket candidates quadratically — the 100x
+    // rehearsal saturated the default 8-plane space (256 buckets, ~2000
+    // ids each) into ~10^9 candidates and died on spill disk. Every
+    // table pairs at most all n rows, so Σ_{t,bkt} s(s−1)/2 ≤
+    // tables·n(n−1)/2: when the row count is in hand (adaptive planes)
+    // and that bound is under the limit, the valve is proven safe
+    // without a job. Otherwise one occupancy aggregate over the bucket
+    // keys fails FAST, before any pair work, with the named remedy:
+    // each extra plane HALVES expected occupancy (candidates drop ~4x),
+    // so size blockPlanes ~ log2(corpus / target-bucket-size); metadata
+    // blocking (blockCol) bounds buckets by construction.
+    val maxCand = df.sparkSession.conf
+      .getOption("spark.graft.embed.maxCandidatePairs")
+      .map(_.toLong).getOrElse(2000000000L)
+    val bound = nRows.fold(Double.PositiveInfinity) { n =>
+      blockTables.toDouble * n * (n - 1) / 2 }
+    if (maxCand > 0 && bound > maxCand) {
+      val vol = sharedBuckets.getOrElse(keyed).groupBy("t", "bkt")
+        .agg(count(lit(1)).as("s"))
+        .agg(coalesce(sum(col("s").cast("double") *
+          (col("s") - 1) / 2), lit(0.0)).as("cand")).head().getDouble(0)
+      if (vol > maxCand) throw new IllegalStateException(
+        f"embeddingNearDup: candidate volume $vol%.3g exceeds " +
+          s"spark.graft.embed.maxCandidatePairs=$maxCand — the " +
+          s"$planes-plane bucket space is saturated at this " +
+          "corpus size. Raise blockPlanes (each plane halves bucket " +
+          "occupancy; size ~ log2(corpus/targetBucket)), pass " +
+          "blockCol for metadata blocking, or raise the valve.")
+    }
+    groupedPairScan(keyed, Seq("t", "bkt"), threshold)
   }
 
   /** The persistable (id, t, bkt [, p_*]) hyperplane-bucket frame of an
@@ -2305,9 +2099,10 @@ object Dedup {
     * numeric id and a float/double vector column (always true from
     * [[semDeDupKMeans]]); anything else — and
     * `spark.graft.semdedup.fusedWithinCell=false` — falls back to the
-    * candidate-join form. Arithmetic parity: the fused loop performs
-    * the IDENTICAL double operations in the identical order as the
-    * join path's `vec_dot`/`sqrt`/product expressions (sequential
+    * SQL forms: [[embeddingNearDup]]'s grouped pair scan without an
+    * order column, the candidate join with one. Arithmetic parity: the
+    * fused loop performs the IDENTICAL double operations in the
+    * identical order as the join path's `vec_dot`/`sqrt`/product expressions (sequential
     * widen-multiply-accumulate, per-row sqrt'd norms, denom==0 → 0),
     * so the survivor set is bit-identical and the oracle contract is
     * untouched. SQL comparison edges are mirrored explicitly: -0.0
@@ -2344,12 +2139,9 @@ object Dedup {
     val fused = df.sparkSession.conf
       .getOption("spark.graft.semdedup.fusedWithinCell")
       .forall(_.toBoolean) && idNumeric && vecOk && ordOk
-    // deliberately NO fusedMinRows gate here (unlike embeddingNearDup's
-    // branches): the join alternative for THIS shape carries two
-    // re-attach joins + a distinct + an anti-join, and the fused scan
-    // measured faster at every scale tried (sf0.1 3.9 vs 4.8 s, 100×
-    // 50 vs 348 s) — the crossover exists only where the join form is
-    // lighter (the LSH bucket shape)
+    // no corpus-size gate: the fused scan measured faster than the
+    // join form (two re-attach joins + a distinct + an anti-join) at
+    // every scale tried (sf0.1 3.9 vs 4.8 s, 100× 50 vs 348 s)
     if (fused)
       return semDeDupFused(df, idCol, vecCol, clusterCol, eps, orderCol)
     val dropped = orderCol match {

@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.awt.image.BufferedImage
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

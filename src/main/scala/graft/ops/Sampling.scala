@@ -47,11 +47,16 @@ object Sampling {
       .drop("__cap_rn")
   }
 
-  /** Keep ~`fraction` of rows, deterministically by id. */
+  /** Keep ~`fraction` of rows, deterministically by id. A null id has
+    * no bucket and never survives. Fractions 1 and 0 decide every row
+    * without hashing it: every bucket is below 10⁶ and none below 0,
+    * so they keep exactly the non-null ids, or nothing. */
   def hashSample(df: DataFrame, idCol: String, fraction: Double,
       salt: String = ""): DataFrame = {
     require(fraction >= 0 && fraction <= 1, "fraction in [0,1]")
-    df.where(hashBucket(col(idCol), salt) < (fraction * Buckets).toLong)
+    if (fraction == 1.0) df.where(col(idCol).isNotNull)
+    else if (fraction == 0.0) df.where(lit(false))
+    else df.where(hashBucket(col(idCol), salt) < (fraction * Buckets).toLong)
   }
 
   /** Token-budget source mixing — the data-mixture step of a pre-training

@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions.vec_dot
+import graft.functions.VectorKernels
+import graft.functions.VectorFunctions.{hyperplane_buckets, vec_dot}
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -420,35 +421,30 @@ object Similarity {
     * driver (the per-row md5 formulation burned 200+ s at sf0.1):
     * component i of plane j = hash60("plane<j>-<i>") % 2001 - 1000. */
   private[graft] def planeVector(j: Int, dim: Int): Array[Double] =
-    Array.tabulate(dim) { i =>
-      (graft.functions.TextKernels.md5Prefix60(s"plane$j-$i") % 2001L -
-        1000L).toDouble
-    }
+    VectorKernels.planeVector(j, dim)
 
   /** Sign-pattern LSH bucket id from `nPlanes` hyperplanes of table
-    * `table`: bit j set when dot(v, plane_{table,j}) >= 0. Plane constants
-    * fold into the generated code. */
+    * `table`: bit j set when dot(v, plane_{table,j}) >= 0 (or NaN);
+    * bucket 0 for a null vector. One table of the native
+    * [[graft.functions.HyperplaneBuckets]] kernel. */
   def hyperplaneBucket(vec: Column, nPlanes: Int, dim: Int, table: Int = 0)
       : Column =
-    (0 until nPlanes).map { j =>
-      val plane = typedlit(planeVector(table * 1000 + j, dim))
-      when(vec_dot(vec, plane) >= 0.0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    hyperplane_buckets(vec, nPlanes, dim, table, 1).getItem(0)
 
-  /** All `tables` hyperplane bucket ids in ONE scan pass (struct
-    * explode): the input columns plus (t, bkt) — ONE join on (table,
-    * bucket) instead of `tables` separate joins over re-scanned
+  /** All `tables` hyperplane bucket ids in ONE scan pass: the input
+    * columns plus (t, bkt), one row per table, from one
+    * [[graft.functions.HyperplaneBuckets]] call per row (one loop over
+    * the plane matrix) and a `posexplode` — ONE join or group on
+    * (table, bucket) instead of `tables` separate ones over re-scanned
     * input. THE bucket-emission shape: [[lshTopK]], the embedding
-    * near-dup blocker, and semantic decontamination all resolve here,
-    * so the shared-plane candidate joins can never drift apart. */
+    * near-dup blocker, semantic decontamination and the bucket stores
+    * all resolve here, so the shared-plane buckets can never drift
+    * apart. */
   def withAllTableBuckets(df: DataFrame, vecCol: String, tables: Int,
       nPlanes: Int, dim: Int): DataFrame =
-    df.select(col("*"), explode(array((0 until tables).map { t =>
-      struct(lit(t).as("t"),
-        hyperplaneBucket(col(vecCol), nPlanes, dim, t).as("bkt"))
-    }: _*)).as("tb"))
-      .select((df.columns.map(col) :+ col("tb.t").as("t") :+
-        col("tb.bkt").as("bkt")): _*)
+    df.select(col("*"), posexplode(
+      hyperplane_buckets(col(vecCol), nPlanes, dim, 0, tables))
+      .as(Seq("t", "bkt")))
 
   /** Approximate top-k via multi-table hyperplane LSH: `tables`
     * independent hash tables of `nPlanes` bits; candidates share the

@@ -2,7 +2,6 @@ package graft.update
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.query.QueryCompiler.{toLit, toScalaLit}
 
 /** Compiles MongoDB-style update documents into DataFrame transformations.
@@ -248,7 +247,6 @@ object UpdateCompiler {
     * field is rewritten — `{$set: {a: "$b", b: "$a"}}` swaps). */
   def applyUpdatePipeline(df: DataFrame, pred: Column,
       stages: Seq[Any], idCol: String = "_id"): DataFrame = {
-    import graft.pipeline.PipelineCompiler.expr2col
     implicit val af: ArrayFilters = ArrayFilters.empty
     def asDoc(x: Any, what: String): Map[String, Any] = x match {
       case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]

@@ -454,41 +454,75 @@ class DedupSpec extends SparkSpec {
       ids(Dedup.semDeDup(
         pts.withColumn("sord", concat(lit("k"), $"ord".cast("string"))),
         "vec_id", "embedding", "cell", 0.95, orderCol = Some("sord"))
-        .drop("sord")),
-      // pair outputs compare as SETS: ids are a documented-unique
-      // precondition, and under the fixture's deliberate duplicates
-      // the join form re-attaches vectors BY ID — it emits a
-      // qualifying pair once per row-combination (here (910,911) ×4)
-      // where the fused scan's explicit distinct() emits it once
-      Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95,
-        blockCol = Some("cell"))
-        .as[(Long, Long)].collect().toSet.toSeq.sorted,
-      Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95, dim = 8)
-        .as[(Long, Long)].collect().toSet.toSeq.sorted)
-    // force the fused branches on despite the tiny fixture (the
-    // size gate would otherwise route everything to the join form)
-    spark.conf.set("spark.graft.semdedup.fusedMinRows", "0")
-    val fused = try runAll()
-      finally spark.conf.unset("spark.graft.semdedup.fusedMinRows")
+        .drop("sord")))
+    // pair outputs compare as SETS: ids are a documented-unique
+    // precondition, and under the fixture's deliberate duplicates the
+    // join form re-attaches vectors BY ID — it emits a qualifying pair
+    // once per row-combination (here (910,911) ×4) where the grouped
+    // scan's distinct() emits it once
+    def pairSet(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      d.as[(Long, Long)].collect().toSet.toSeq.sorted
+    val fused = runAll() ++ Seq(
+      pairSet(Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95,
+        blockCol = Some("cell"))),
+      pairSet(Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95,
+        dim = 8)))
     spark.conf.set("spark.graft.semdedup.fusedWithinCell", "false")
     val joined = try runAll()
       finally spark.conf.unset("spark.graft.semdedup.fusedWithinCell")
+    val reference = joined ++ Seq(
+      pairSet(NearDupJoinForm.blocked(pts, "vec_id", "embedding", 0.95,
+        "cell")),
+      pairSet(NearDupJoinForm.lsh(pts, "vec_id", "embedding", 0.95,
+        dim = 8)))
     fused.indices.foreach { i =>
-      val (f, j) = (fused(i), joined(i))
+      val (f, j) = (fused(i), reference(i))
       assert(f.size == j.size && f.toSet == j.toSet && f == j,
         s"entry $i: fusedOnly=${f.diff(j)} joinOnly=${j.diff(f)}")
     }
     // the results are non-trivial (some rows actually dropped / paired)
     assert(fused(0).size < 123 && fused(3).nonEmpty)
-    // degenerate-cell guard fails fast with the remedy
+    // degenerate-cell guard fails fast with the remedy, on both scans
     spark.conf.set("spark.graft.semdedup.maxCellRows", "10")
     try {
-      val e = intercept[org.apache.spark.SparkException] {
-        Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95).count()
+      Seq(() => Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95),
+        () => Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95,
+          blockCol = Some("cell"))).foreach { run =>
+        val e = intercept[org.apache.spark.SparkException](run().count())
+        assert(e.getMessage.contains("maxCellRows") ||
+          Option(e.getCause).exists(_.getMessage.contains("maxCellRows")))
       }
-      assert(e.getMessage.contains("maxCellRows") ||
-        Option(e.getCause).exists(_.getMessage.contains("maxCellRows")))
     } finally spark.conf.unset("spark.graft.semdedup.maxCellRows")
+  }
+
+  test("grouped pair scan: string ids compare in SQL order, and " +
+      "array<double> vectors pair exactly as the join form does") {
+    val rnd = new scala.util.Random(11)
+    val raw = (0 until 90).map { i =>
+      val v = Array.tabulate(6)(d => math.cos(i % 9 + d) +
+        rnd.nextDouble() * 0.2)
+      // "k10" < "k9" in SQL order, the opposite of the numbers
+      (s"k$i", v.toSeq, i % 4)
+    } ++ Seq(("z1", Seq(1.0, 0.0, Double.NaN, 0.0, 0.0, 0.0), 0),
+      ("z0", Seq(1.0, 0.0, 0.0, 0.0, 0.0, 0.0), 0))
+    val pts = raw.toDF("sid", "vd", "cell")
+    def pairSet(d: org.apache.spark.sql.DataFrame): Set[(String, String)] =
+      d.as[(String, String)].collect().toSet
+    val blocked = Dedup.embeddingNearDup(pts, "sid", "vd", 0.97,
+      blockCol = Some("cell"))
+    val cases = Seq(
+      (blocked, NearDupJoinForm.blocked(pts, "sid", "vd", 0.97, "cell")),
+      (Dedup.embeddingNearDup(pts, "sid", "vd", 0.97, blockTables = 3),
+        NearDupJoinForm.lsh(pts, "sid", "vd", 0.97, blockTables = 3)))
+    cases.foreach { case (scan, join) =>
+      assert(scan.schema("id_a").dataType ==
+        org.apache.spark.sql.types.StringType)
+      val (got, want) = (pairSet(scan), pairSet(join))
+      assert(got == want, s"scanOnly=${got -- want} joinOnly=${want -- got}")
+      assert(got.nonEmpty && got.forall { case (a, b) => a < b })
+    }
+    // same block: the NaN cosine qualifies, oriented by SQL order
+    assert(pairSet(blocked).contains(("z0", "z1")))
   }
 
   test("fused scan: float group keys (-0.0/0.0 merge, NaN cell) and NaN " +
@@ -504,21 +538,46 @@ class DedupSpec extends SparkSpec {
       (84L, Seq(0f, 0f, 1f, 0f), 7.0),
       (85L, Seq(0f, 0f, Float.NaN, 0f), 7.0)) // NaN cosine → qualifies
       .toDF("vec_id", "embedding", "cell")
-    def run(): (Seq[Long], Seq[(Long, Long)]) = (
+    def pairs(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      d.as[(Long, Long)].collect().sorted.toSeq
+    def survivors(): Seq[Long] =
       Dedup.semDeDup(rows, "vec_id", "embedding", "cell", 0.95)
-        .select("vec_id").as[Long].collect().sorted.toSeq,
-      Dedup.embeddingNearDup(rows, "vec_id", "embedding", 0.95,
-        blockCol = Some("cell"))
-        .as[(Long, Long)].collect().sorted.toSeq)
-    spark.conf.set("spark.graft.semdedup.fusedMinRows", "0")
-    val fused = try run()
-      finally spark.conf.unset("spark.graft.semdedup.fusedMinRows")
+        .select("vec_id").as[Long].collect().sorted.toSeq
+    val fused = (survivors(), pairs(Dedup.embeddingNearDup(rows, "vec_id",
+      "embedding", 0.95, blockCol = Some("cell"))))
     spark.conf.set("spark.graft.semdedup.fusedWithinCell", "false")
-    val joined = try run()
+    val joined = try (survivors(), pairs(NearDupJoinForm.blocked(rows,
+        "vec_id", "embedding", 0.95, "cell")))
       finally spark.conf.unset("spark.graft.semdedup.fusedWithinCell")
     assert(fused == joined)
     assert(fused._1 == Seq(80L, 82L, 84L))
     assert(fused._2 == Seq((80L, 81L), (82L, 83L), (84L, 85L)))
+  }
+
+  test("embeddingNearDup candidate valve: no job when the row bound " +
+      "proves it safe, the same remedy when the volume is over") {
+    val vecs = (0 until 200).map { i =>
+      (i.toLong, Seq.tabulate(8)(d => math.sin(i * 0.37 + d).toFloat))
+    }.toDF("vec_id", "embedding").repartition(2)
+    val key = "spark.graft.embed.maxCandidatePairs"
+    def jobs(limit: String): Int = {
+      spark.conf.set(key, limit)
+      try jobsIn(Dedup.embeddingNearDup(vecs, "vec_id", "embedding", 0.95,
+        dim = 8))._2
+      finally spark.conf.unset(key)
+    }
+    // 4 tables · 200·199/2 = 79,600 pairs at most
+    val off = jobs("0")
+    assert(jobs("79600") == off && jobs("2000000000") == off)
+    // under the bound the occupancy aggregate runs, and passes
+    assert(jobs("79599") > off)
+    spark.conf.set(key, "1")
+    try {
+      val e = intercept[IllegalStateException](
+        Dedup.embeddingNearDup(vecs, "vec_id", "embedding", 0.95, dim = 8))
+      assert(e.getMessage.contains(s"$key=1") &&
+        e.getMessage.contains("Raise blockPlanes"), e.getMessage)
+    } finally spark.conf.unset(key)
   }
 
   test("fused scan output valve: maxGroupPairs fails fast with a remedy") {
@@ -526,7 +585,6 @@ class DedupSpec extends SparkSpec {
     // at 100 must trip on the blockCol pair path
     val rows = (0 until 40).map(i => (i.toLong, Seq(1f, 0f)))
       .toDF("vec_id", "embedding").withColumn("cell", lit(0))
-    spark.conf.set("spark.graft.semdedup.fusedMinRows", "0")
     spark.conf.set("spark.graft.semdedup.maxGroupPairs", "100")
     try {
       val e = intercept[org.apache.spark.SparkException] {
@@ -536,10 +594,7 @@ class DedupSpec extends SparkSpec {
       val msg = e.getMessage +
         Option(e.getCause).map(_.getMessage).getOrElse("")
       assert(msg.contains("maxGroupPairs"))
-    } finally {
-      spark.conf.unset("spark.graft.semdedup.fusedMinRows")
-      spark.conf.unset("spark.graft.semdedup.maxGroupPairs")
-    }
+    } finally spark.conf.unset("spark.graft.semdedup.maxGroupPairs")
   }
 
   test("semDeDup drops later rows similar to an earlier same-cluster row") {
@@ -1542,5 +1597,61 @@ class MultimodalSpec extends SparkSpec {
     val stubPairs = Multimodal.mediaNearDup(stubMedia, maxHamming = 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(stubPairs == Set((1L, 2L))) // identical bytes only
+  }
+}
+
+/** The candidate-join forms the grouped pair scan replaced in
+  * [[Dedup.embeddingNearDup]], kept only as the reference its pair set
+  * must equal: a narrow (id, key) self-join on the block or (table,
+  * bucket) key with `id_a < id_b`, then the vectors re-attached by two
+  * id equi-joins and the cosine filtered in SQL. The LSH form hashes
+  * with the Column bucket form, so it checks the native kernel too. */
+object NearDupJoinForm {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import graft.functions.VectorColumnForms
+  import graft.functions.VectorFunctions.vec_dot
+
+  private def verified(cand: DataFrame, base: DataFrame,
+      threshold: Double): DataFrame = {
+    val va = base.select(col("id").as("id_a"), col("v").as("va"))
+      .withColumn("na", sqrt(vec_dot(col("va"), col("va"))))
+    val vb = base.select(col("id").as("id_b"), col("v").as("vb"))
+      .withColumn("nb", sqrt(vec_dot(col("vb"), col("vb"))))
+    val denom: Column = col("na") * col("nb")
+    cand.join(va, "id_a").join(vb, "id_b")
+      .withColumn("cos", when(denom === 0.0, lit(0.0))
+        .otherwise(vec_dot(col("va"), col("vb")) / denom))
+      .where(col("cos") >= threshold)
+      .select(col("id_a"), col("id_b"))
+  }
+
+  def blocked(df: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, blockCol: String): DataFrame = {
+    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
+      col(blockCol).as("blk"))
+    val ids = base.select(col("id"), col("blk"))
+    val cand = ids.toDF("id_a", "blk").join(ids.toDF("id_b", "blk"),
+        Seq("blk"))
+      .where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+    verified(cand, base, threshold)
+  }
+
+  def lsh(df: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, blockTables: Int = 4, blockPlanes: Int = 0,
+      dim: Int = 0): DataFrame = {
+    val d = if (dim > 0) dim
+      else Similarity.probeDim(df, vecCol).getOrElse(1)
+    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val planes = if (blockPlanes > 0) blockPlanes
+      else Dedup.autoBlockPlanes(base.count())
+    val bkts = VectorColumnForms.withAllTableBuckets(base, "v",
+      blockTables, planes, d).select("id", "t", "bkt")
+    val cand = bkts.as("a").join(bkts.as("b"),
+        col("a.t") === col("b.t") && col("a.bkt") === col("b.bkt") &&
+          col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+    verified(cand, base, threshold)
   }
 }

@@ -15,6 +15,23 @@ class SamplingSpec extends SparkSpec {
     assert(a.size > 300 && a.size < 500) // ~400 expected
   }
 
+  test("hashSample fractions 1 and 0 keep exactly the hash form's rows, " +
+      "null ids included, without hashing") {
+    import org.apache.spark.sql.functions.col
+    val mixed = Seq(Some(1L), None, Some(-7L), Some(Long.MaxValue), None)
+      .toDF("id").withColumn("s", col("id").cast("string"))
+    for (idCol <- Seq("id", "s"); salt <- Seq("", "x");
+        fraction <- Seq(1.0, 0.0)) {
+      val hashed = mixed.where(Sampling.hashBucket(col(idCol), salt) <
+        (fraction * 1000000L).toLong)
+      val fast = Sampling.hashSample(mixed, idCol, fraction, salt)
+      assert(fast.collect().toSeq.sortBy(_.toString) ==
+        hashed.collect().toSeq.sortBy(_.toString), s"$idCol $fraction")
+      assert(!fast.queryExecution.optimizedPlan.toString.contains("md5"))
+    }
+    assert(Sampling.hashSample(mixed, "id", 1.0).count() == 3)
+  }
+
   test("capPerKey keeps at most n per key, deterministically") {
     val capped = Sampling.capPerKey(df, "id", "lang", 100)
     val byLang = capped.groupBy("lang").count()

@@ -138,6 +138,29 @@ class PlanSpec extends SparkSpec {
     assert(explain(brute).contains("BroadcastNestedLoopJoin"))
   }
 
+  test("adaptive embeddingNearDup pair plan: native buckets, one " +
+      "grouped scan, no (t, bkt) join or typed groups, exactly 2 " +
+      "Exchanges") {
+    val e = graft.sources.Tables.table(spark, sf, "embeddings")
+    val df = graft.ops.Dedup.embeddingNearDup(e, "vec_id", "embedding",
+      threshold = 0.9, dim = 64)
+    val plan = explain(df)
+    assert(plan.contains("hyperplane_buckets") &&
+      plan.contains("cosine_pairs") && plan.contains("collect_list"),
+      plan)
+    assert(!plan.contains("Join") && !plan.contains("floatvecdot"), plan)
+    assert(!plan.contains("AppendColumns") && !plan.contains("MapGroups") &&
+      !plan.contains("DeserializeToObject"), plan)
+    // one exchange on the bucket key, one for the pair distinct
+    val exchanges = plan.linesIterator.count(_.contains(") Exchange"))
+    assert(exchanges == 2, plan)
+    // the blockCol branch is the same scan over its own key
+    val blocked = explain(graft.ops.Dedup.embeddingNearDup(e, "vec_id",
+      "embedding", threshold = 0.9, blockCol = Some("label")))
+    assert(blocked.contains("cosine_pairs") && !blocked.contains("Join") &&
+      blocked.linesIterator.count(_.contains(") Exchange")) == 2, blocked)
+  }
+
   test("semantic decontamination: broadcast path is the bounded " +
       "product, LSH path has no nested loop") {
     val e = graft.sources.Tables.table(spark, sf, "embeddings")
@@ -543,7 +566,7 @@ class PlanSpec extends SparkSpec {
     val plan = explain(df)
     assert(plan.contains("vecstore-spec"),
       "saved bucket frame missing from the plan")
-    // bucket emission is the struct-explode Generate: exactly ONE in
+    // bucket emission is the posexplode Generate: exactly ONE in
     // the whole plan — the DELTA's. A second Generate would mean the
     // reference corpus is re-paying tables×planes dot products per
     // batch, the exact cost the store exists to eliminate. (The ref
@@ -585,7 +608,7 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("bitextstore-spec"),
       "saved bucket frame missing from the plan")
     // the indexed side's tables x planes dot products must never be
-    // re-paid: exactly one struct-explode Generate in the MAIN plan —
+    // re-paid: exactly one posexplode Generate in the MAIN plan —
     // the batch's. (A dynamic-partition-pruning Subquery section may
     // repeat the batch's Generate to prune the t-partitioned store's
     // file listing — that's delta-sized work that SAVES store I/O at
