@@ -355,13 +355,22 @@ object VectorKernels {
     * or NaN, the cosine being dot / (norm_a · norm_b) with norms
     * sqrt(dot(v, v)), and 0 when that product is 0. Structs with a null
     * id or vector take no part; equal ids never pair. Pairs stream out
-    * of an iterator over the upper triangle, never buffered, and the
-    * two valves fail fast: more than `maxCellRows` rows in the group, or
-    * more than `maxGroupPairs` qualifying pairs out of it. `group` names
-    * the group in their messages. */
+    * of an iterator over the upper triangle, never buffered.
+    *
+    * `firstHit` (semDeDup's rule) emits, for each row b, only its first
+    * qualifying pair, the earliest id_a in `ordering`, and stops
+    * scanning b's earlier rows there: the set of id_b is the all-pairs
+    * one, and a cell full of duplicates costs about one cosine per row.
+    *
+    * Two valves fail fast: more than `maxCellRows` rows in the group, or
+    * (all-pairs only; first-hit emits at most one pair per row) more
+    * than `maxGroupPairs` qualifying pairs out of it. Their messages name
+    * the caller, semDeDup for `firstHit` and embeddingNearDup otherwise,
+    * with its remedy, and `group` names the group. */
   def cosinePairs(rows: ArrayData, idType: DataType, ordering: Ordering[Any],
-      isFloat: Boolean, threshold: Double, maxCellRows: Long,
-      maxGroupPairs: Long, group: => String): Iterator[InternalRow] = {
+      isFloat: Boolean, threshold: Double, firstHit: Boolean,
+      maxCellRows: Long, maxGroupPairs: Long,
+      group: => String): Iterator[InternalRow] = {
     val ids = new scala.collection.mutable.ArrayBuffer[Any]
     val vecs = new scala.collection.mutable.ArrayBuffer[Array[Double]]
     var k = 0
@@ -377,10 +386,17 @@ object VectorKernels {
     }
     val n = ids.length
     if (n > maxCellRows) throw new IllegalStateException(
-      s"embeddingNearDup: block '$group' holds $n rows > " +
-        s"spark.graft.semdedup.maxCellRows=$maxCellRows — the block " +
-        "domain is degenerate for this corpus. Use blocks that " +
-        "scale with the data, or raise the valve.")
+      if (firstHit)
+        s"semDeDup: cell '$group' holds $n rows > " +
+          s"spark.graft.semdedup.maxCellRows=$maxCellRows — the " +
+          "clustering is degenerate for this corpus (cells should stay " +
+          "near targetCell). Re-cluster with a larger k / smaller " +
+          "targetCell, or raise the valve."
+      else
+        s"embeddingNearDup: block '$group' holds $n rows > " +
+          s"spark.graft.semdedup.maxCellRows=$maxCellRows — the block " +
+          "domain is degenerate for this corpus. Use blocks that " +
+          "scale with the data, or raise the valve.")
     val order = Array.range(0, n).sortBy(ids(_))(ordering)
     val id = order.map(ids(_))
     val v = order.map(vecs(_))
@@ -405,13 +421,16 @@ object VectorKernels {
             val c = if (denom == 0.0) 0.0 else dot(v(a), v(b)) / denom
             if (c >= threshold || java.lang.Double.isNaN(c)) {
               emitted += 1
-              if (emitted > maxGroupPairs) throw new IllegalStateException(
-                s"embeddingNearDup: block '$group' emitted more than " +
-                  s"spark.graft.semdedup.maxGroupPairs=$maxGroupPairs " +
-                  "qualifying pairs — the corpus is duplicate-" +
-                  "degenerate at this threshold. Raise the " +
-                  "threshold, dedup exactly first, or raise the valve.")
+              if (!firstHit && emitted > maxGroupPairs)
+                throw new IllegalStateException(
+                  s"embeddingNearDup: block '$group' emitted more than " +
+                    s"spark.graft.semdedup.maxGroupPairs=$maxGroupPairs " +
+                    "qualifying pairs — the corpus is duplicate-" +
+                    "degenerate at this threshold. Raise the " +
+                    "threshold, dedup exactly first, or raise the valve.")
               pair = InternalRow(id(a), id(b))
+              // first hit: the rest of b's earlier rows are skipped
+              if (firstHit) a = b - 1
             }
           }
           a += 1
@@ -489,12 +508,16 @@ case class HyperplaneBuckets(child: Expression, nPlanes: Int, dim: Int,
 
 /** `cosine_pairs(group, rows)`: a generator of the (id_a, id_b) pairs of
   * one group's `rows`, an array<struct<id, vec>> with `vec` a float or
-  * double array (see [[VectorKernels.cosinePairs]]). Ids compare in SQL
-  * ordering, so any orderable id type works. `group` is read only for a
-  * valve's message. Interpreted on purpose: the work is the in-memory
-  * pair loop, and the pairs stream out of an iterator. */
+  * double array (see [[VectorKernels.cosinePairs]]; `firstHit` keeps
+  * each id_b's first pair only). Ids compare in SQL ordering, so any
+  * orderable id type works, a struct too: a struct(order, id) id ranks
+  * rows lexicographically with SQL's float edges (-0.0 equals 0.0, NaN
+  * equals NaN and ranks highest). `group` is read only for a valve's
+  * message. Interpreted on purpose: the work is the in-memory pair
+  * loop, and the pairs stream out of an iterator. */
 case class CosinePairs(group: Expression, rows: Expression,
-    threshold: Double, maxCellRows: Long, maxGroupPairs: Long)
+    threshold: Double, firstHit: Boolean, maxCellRows: Long,
+    maxGroupPairs: Long)
     extends Generator with CodegenFallback {
 
   override def children: Seq[Expression] = Seq(group, rows)
@@ -528,7 +551,7 @@ case class CosinePairs(group: Expression, rows: Expression,
     rows.eval(input) match {
       case null => Iterator.empty
       case a: ArrayData => VectorKernels.cosinePairs(a, idType, ordering,
-        isFloat, threshold, maxCellRows, maxGroupPairs,
+        isFloat, threshold, firstHit, maxCellRows, maxGroupPairs,
         String.valueOf(group.eval(input)))
     }
 
@@ -563,7 +586,8 @@ object VectorFunctions {
 
   /** Column-level pair generator (see [[CosinePairs]]). */
   def cosine_pairs(group: Column, rows: Column, threshold: Double,
-      maxCellRows: Long, maxGroupPairs: Long): Column =
+      firstHit: Boolean, maxCellRows: Long, maxGroupPairs: Long): Column =
     ColumnBridge.column(CosinePairs(ColumnBridge.expression(group),
-      ColumnBridge.expression(rows), threshold, maxCellRows, maxGroupPairs))
+      ColumnBridge.expression(rows), threshold, firstHit, maxCellRows,
+      maxGroupPairs))
 }

@@ -146,8 +146,8 @@ object Clustering {
     * (centroid_id, centroid) with `centroid` an array<double>. Cells that
     * lose all members keep their previous centroid. */
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int, checkpointDir: Option[String] = None): DataFrame = {
-    val centSeq = kmeansSeq(df, idCol, vecCol, k, iters, checkpointDir)
+      iters: Int): DataFrame = {
+    val centSeq = kmeansSeq(df, idCol, vecCol, k, iters)
     val spark = df.sparkSession
     import spark.implicits._
     centSeq.map { case (cid, v) => (cid, v.toSeq) }
@@ -159,8 +159,7 @@ object Clustering {
     * into a scan ([[Dedup.semDeDupKMeans]]) skip a pointless
     * round-trip through a DataFrame + collect. */
   def kmeansSeq(df: DataFrame, idCol: String, vecCol: String, k: Int,
-      iters: Int, checkpointDir: Option[String] = None)
-      : Seq[(Long, Array[Double])] = {
+      iters: Int): Seq[(Long, Array[Double])] = {
     require(k > 0 && iters >= 0, "kmeans: k > 0, iters >= 0")
     // centroid ids are longs (they seed ivfAssign's tie-break); a string id
     // would cast to null and silently merge every cell into one group
@@ -181,8 +180,6 @@ object Clustering {
     // into the scan, one (cell, dim) aggregate, k·dim rows collected).
     // No checkpoints and no growing lineage — every step's plan restarts
     // from the scan with this generation's centroids as literals.
-    // `checkpointDir` is accepted for API stability; nothing needs it.
-    val _ = checkpointDir
     // deterministic seed: the k smallest-id vectors
     var centSeq: Seq[(Long, Array[Double])] = data.orderBy("__vid")
       .limit(k)
@@ -231,12 +228,11 @@ object Clustering {
     * group is the global k smallest ids' vectors.
     *
     * Versus |groups| independent [[kmeans]] fits this is |groups|× fewer
-    * corpus scans and checkpoint jobs per iteration — the difference
+    * corpus scans and jobs per iteration — the difference
     * between m passes and one pass over 100 TB per Lloyd step.
     * Returns (grpCol, centroid_id, centroid). */
   def kmeansGrouped(df: DataFrame, idCol: String, grpCol: String,
-      vecCol: String, k: Int, iters: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      vecCol: String, k: Int, iters: Int): DataFrame = {
     require(k > 0 && iters >= 0, "kmeansGrouped: k > 0, iters >= 0")
     require(df.schema(idCol).dataType.isInstanceOf[
       org.apache.spark.sql.types.NumericType],
@@ -246,7 +242,6 @@ object Clustering {
       df.select(col(grpCol).cast("int").as("__g"),
         col(idCol).as("__vid"),
         col(vecCol).cast("array<double>").as("__v")))
-    val _ = checkpointDir // driver-held centroids: no lineage to cut
     // seed: the global k smallest ids' vectors, per group —
     // |groups|·k rows, the PQ-codebook driver-side class
     val seedIds = data.select(col("__vid")).distinct()

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -1634,63 +1634,50 @@ object Dedup {
   }
 
   /** The grouped pair scan behind both blocked branches of
-    * [[embeddingNearDup]]: `rows` holds (id, v) plus the group key
-    * columns `keys`. ONE hash exchange on the key gathers each group's
-    * (id, v) structs (`collect_list`), the
+    * [[embeddingNearDup]] and behind [[semDeDup]]: `rows` holds (id, v)
+    * plus the group key columns `keys`. ONE hash exchange on the key
+    * gathers each group's (id, v) structs (`collect_list`), the
     * [[graft.functions.CosinePairs]] generator runs the group's
     * upper-triangular cosine loop in memory and streams the qualifying
-    * pairs out, and a `distinct` merges a pair found in several groups
-    * (multi-table LSH finds one pair in up to `blockTables` buckets).
-    * No candidate row is materialized, no vector re-attaches by a join,
-    * and no typed Dataset or UDF boundary sits in the plan.
+    * pairs out, and, for all pairs, a `distinct` merges a pair found in
+    * several groups (multi-table LSH finds one pair in up to
+    * `blockTables` buckets). `firstHit` keeps each id_b's first pair
+    * only (see [[graft.functions.VectorKernels.cosinePairs]]); a row
+    * sits in one group there, so nothing needs merging. No candidate row
+    * is materialized, no vector re-attaches by a join, and no typed
+    * Dataset or UDF boundary sits in the plan.
     *
     * The pair SET is the candidate join's (kept as the reference in
     * OpsSpec): identical arithmetic (sequential widen-multiply-
     * accumulate dot, per-row sqrt'd norms, denom == 0 → 0) and the SQL
     * edges that join implies — ids compare in SQL ordering (any
-    * orderable id type), strict `id_a < id_b` (equal ids never pair), a
-    * NaN cosine qualifies (Spark's nan-safe `>=`), null keys, ids and
-    * vectors never pair, and the grouping merges -0.0/0.0 keys and
-    * groups NaN with NaN as an equi-join does. Ids are a documented
-    * UNIQUE precondition; under duplicates the SET still matches, but
-    * the join emitted one row per duplicate-row combination where this
-    * emits the pair once.
+    * orderable id type, structs included), strict `id_a < id_b` (equal
+    * ids never pair), a NaN cosine qualifies (Spark's nan-safe `>=`),
+    * null keys, ids and vectors never pair, and the grouping merges
+    * -0.0/0.0 keys and groups NaN with NaN as an equi-join does. Ids are
+    * a documented UNIQUE precondition; under duplicates the SET still
+    * matches, but the join emitted one row per duplicate-row combination
+    * where this emits the pair once.
     *
     * Valves, read here on the driver: `spark.graft.semdedup.maxCellRows`
     * (default 500k) bounds a group's rows and
     * `spark.graft.semdedup.maxGroupPairs` (default 2e9) the pairs out of
-    * one group; either fails the job fast with its remedy. */
+    * one group; either fails the job fast with its caller's remedy. */
   private def groupedPairScan(rows: DataFrame, keys: Seq[String],
-      threshold: Double): DataFrame = {
+      threshold: Double, firstHit: Boolean = false): DataFrame = {
     val conf = rows.sparkSession.conf
     val maxCell = conf.getOption("spark.graft.semdedup.maxCellRows")
       .map(_.toLong).getOrElse(500000L)
     val maxPairs = conf.getOption("spark.graft.semdedup.maxGroupPairs")
       .map(_.toLong).getOrElse(2000000000L)
     val present = (Seq("id", "v") ++ keys).map(col(_).isNotNull)
-    rows.where(present.reduce(_ && _))
+    val pairs = rows.where(present.reduce(_ && _))
       .groupBy(keys.map(col): _*)
       .agg(collect_list(struct(col("id"), col("v"))).as("_rows"))
       .select(graft.functions.VectorFunctions.cosine_pairs(
         concat_ws(":", keys.map(col(_).cast("string")): _*), col("_rows"),
-        threshold, maxCell, maxPairs))
-      .distinct()
-  }
-
-  /** [[semDeDupFused]] carries the group key as a STRING (one encoder
-    * for any key type); for float/double keys the cast must first fold
-    * -0.0 into 0.0 — SQL equi-joins (the join form) treat them as ONE
-    * key, while their strings ("-0.0"/"0.0") would split the group.
-    * NaN needs no help: every NaN renders "NaN", matching Spark's
-    * grouped-NaN join-key semantics. */
-  private def normalizedGroupKey(
-      dt: org.apache.spark.sql.types.DataType, c: Column): Column = {
-    import org.apache.spark.sql.types._
-    val norm = dt match {
-      case DoubleType | FloatType => when(c === 0.0, lit(0.0)).otherwise(c)
-      case _ => c
-    }
-    norm.cast("string")
+        threshold, firstHit, maxCell, maxPairs))
+    if (firstHit) pairs else pairs.distinct()
   }
 
   /** Embedding cosine near-duplicates.
@@ -1856,8 +1843,9 @@ object Dedup {
     * delta's buckets, and feed it to
     * [[embeddingNearDupBetweenPrecomputed]] — the per-batch hash cost
     * then scales with the DELTA. Plane constants are deterministic in
-    * (table, plane index) ([[Similarity.planeVector]]), so saved
-    * buckets can never drift from what a later session hashes.
+    * (table, plane index)
+    * ([[graft.functions.VectorKernels.planeVector]]), so saved buckets
+    * can never drift from what a later session hashes.
     *
     * `blockPlanes` is REQUIRED (> 0), unlike [[embeddingNearDup]]'s
     * corpus-adaptive default: a store must pin its bucket space — a
@@ -2083,193 +2071,54 @@ object Dedup {
     * this for the paper's centroid-proximity keep-rule.
     *
     * Cost is the published one: O(Σ cᵢ²) pairwise work inside clusters
-    * only. Execution shape (round 11, measured): the pairwise work is
-    * FUSED per cell — ONE hash shuffle on the cluster key moves each
-    * row (id, order, vector) to its cell's reducer, and the cell's
-    * upper-triangular scan runs as a tight in-memory loop with an
-    * early exit on the first ≥`eps` hit. The earlier join form
-    * materialized every candidate PAIR as a row (Σ cᵢ²/2 rows through
-    * a join, then two more joins to re-attach vectors): at the 100×
-    * rehearsal that was 10⁸ join rows and 298 of q130's 317 seconds
-    * for what is ~6×10⁹ multiplies of actual math — the fused scan
-    * runs it in seconds. Cells are bounded (≈ targetCell rows) by the
-    * [[autoCellCount]] design; a degenerate clustering fails FAST on
+    * only, and less on duplicate-heavy cells. One path for every id,
+    * order and vector type: the [[groupedPairScan]] over the cluster key
+    * with the generator's id field set to struct(order, id) — ONE hash
+    * exchange gathers each cell, its upper-triangular scan runs in
+    * memory and stops at each row's first ≥`eps` earlier row
+    * (first-hit), and a `left_anti` on the id drops the hits. SQL struct
+    * ordering IS the "earlier" relation, in the order's native type
+    * (strings, and longs past 2^53, compare exactly): lexicographic,
+    * -0.0 equals 0.0, NaN equals NaN and ranks above everything, and a
+    * row whose (order, id) equals another's is earlier in NEITHER
+    * direction. A NaN cosine qualifies. A row with a null cluster key,
+    * id, vector or order can neither drop a row nor be dropped. Cells
+    * are bounded (≈ targetCell rows) by the [[autoCellCount]] design; a
+    * degenerate clustering fails FAST on
     * `spark.graft.semdedup.maxCellRows` (default 500k) instead of
-    * silently materializing an unbounded group. The fused path needs a
-    * numeric id and a float/double vector column (always true from
-    * [[semDeDupKMeans]]); anything else — and
-    * `spark.graft.semdedup.fusedWithinCell=false` — falls back to the
-    * SQL forms: [[embeddingNearDup]]'s grouped pair scan without an
-    * order column, the candidate join with one. Arithmetic parity: the
-    * fused loop performs the IDENTICAL double operations in the
-    * identical order as the join path's `vec_dot`/`sqrt`/product expressions (sequential
-    * widen-multiply-accumulate, per-row sqrt'd norms, denom==0 → 0),
-    * so the survivor set is bit-identical and the oracle contract is
-    * untouched. SQL comparison edges are mirrored explicitly: -0.0
-    * orders/cluster keys fold into 0.0, NaN orders compare NaN-safe
-    * (above everything, equal to each other), a NaN cosine qualifies,
-    * and a row whose (order, id) exactly equals another's is "earlier"
-    * for NEITHER direction. Ids are a documented UNIQUE precondition:
-    * under duplicate ids both forms anti-join every copy of a dropped
-    * id, but the join form's re-attach-by-id can evaluate cosines
-    * across the duplicates' vectors where the fused scan evaluates
-    * each physical row pair once. */
+    * silently materializing an unbounded group.
+    *
+    * The survivor set is the candidate join's (kept as the reference in
+    * OpsSpec): the same double operations in the same order as its
+    * `vec_dot`/`sqrt`/product expressions, so the oracle contract is
+    * untouched, and no candidate pair becomes a row (a join puts
+    * Σcᵢ²/2 rows through the shuffle: 10⁸ rows and 298 of q130's 317
+    * seconds at the 100× rehearsal). Ids are a documented UNIQUE
+    * precondition: under duplicate ids every copy of a dropped id is
+    * anti-joined, and each physical row pair is evaluated once where the
+    * join form's re-attach-by-id crossed the duplicates' vectors. */
   def semDeDup(df: DataFrame, idCol: String, vecCol: String,
       clusterCol: String, eps: Double,
       orderCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.types._
-    val idNumeric = df.schema(idCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val vecOk = df.schema(vecCol).dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    // the fused scan compares orders as doubles, so the order column
-    // must be a type whose double form is EXACT (a long can exceed
-    // 2^53 and a string casts to null — both silently change which row
-    // is "earlier"); anything else keeps the join form's native-type
-    // comparison
-    val ordOk = orderCol.forall(c => df.schema(c).dataType match {
-      case DoubleType | FloatType | IntegerType | ShortType | ByteType =>
-        true
-      case _ => false
-    })
-    val fused = df.sparkSession.conf
-      .getOption("spark.graft.semdedup.fusedWithinCell")
-      .forall(_.toBoolean) && idNumeric && vecOk && ordOk
-    // no corpus-size gate: the fused scan measured faster than the
-    // join form (two re-attach joins + a distinct + an anti-join) at
-    // every scale tried (sf0.1 3.9 vs 4.8 s, 100× 50 vs 348 s)
-    if (fused)
-      return semDeDupFused(df, idCol, vecCol, clusterCol, eps, orderCol)
-    val dropped = orderCol match {
-      case None =>
-        embeddingNearDup(df, idCol, vecCol, threshold = eps,
-          blockCol = Some(clusterCol))
-          .select(col("id_b").as(idCol)).distinct()
-      case Some(oc) =>
-        // same blocked pair join as embeddingNearDup's blockCol path, with
-        // the pair orientation decided by (orderCol, id) instead of id —
-        // and the same NARROW candidate frame: the pair join shuffles
-        // (id, blk, ord) only, vectors re-attach by id equi-joins
-        // afterwards (the round-10 lesson: carrying two 64-float vectors
-        // through a 10⁸-pair join is a ~50 GB shuffle for 1.6 GB of
-        // information)
-        import graft.functions.VectorFunctions.vec_dot
-        val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-            col(clusterCol).as("blk"), col(oc).as("ord"))
-          .withColumn("nsq", sqrt(vec_dot(col("v"), col("v"))))
-        val ids = base.select(col("id"), col("blk"), col("ord"))
-        val earlier = (col("ord_a") < col("ord_b")) ||
-          (col("ord_a") === col("ord_b") && col("id_a") < col("id_b"))
-        val cand = Partitioning.ensureMinPartitions(
-          ids.toDF("id_a", "blk", "ord_a"))
-          .join(ids.toDF("id_b", "blk", "ord_b"), Seq("blk"))
-          .where(earlier)
-          .select("id_a", "id_b")
-        val va = base.select(col("id").as("id_a"), col("v").as("va"),
-          col("nsq").as("na"))
-        val vb = base.select(col("id").as("id_b"), col("v").as("vb"),
-          col("nsq").as("nb"))
-        val denom = col("na") * col("nb")
-        val cosv = when(denom === 0.0, lit(0.0))
-          .otherwise(vec_dot(col("va"), col("vb")) / denom)
-        cand.join(va, "id_a").join(vb, "id_b")
-          .where(cosv >= eps)
-          .select(col("id_b").as(idCol)).distinct()
-    }
+    val rows = df.where((orderCol.toSeq :+ idCol).map(col(_).isNotNull)
+        .reduce(_ && _))
+      .select(struct(orderCol.map(col(_).as("o")).toSeq :+
+          col(idCol).as("i"): _*).as("id"),
+        col(vecCol).as("v"), col(clusterCol).as("blk"))
+    val dropped = groupedPairScan(rows, Seq("blk"), eps, firstHit = true)
+      .select(col("id_b.i").as(idCol))
     df.join(dropped, Seq(idCol), "left_anti")
   }
 
-  /** The fused within-cell scan behind [[semDeDup]] (see its scaladoc
-    * for the shape + parity contract). Null handling mirrors the join
-    * form exactly: a null cluster key, vector, or order value can
-    * neither drop a row nor be dropped (equi-joins and null
-    * comparisons discard those pairs), so such rows are simply left
-    * out of the scan and survive. */
-  private def semDeDupFused(df: DataFrame, idCol: String, vecCol: String,
-      clusterCol: String, eps: Double,
-      orderCol: Option[String]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val maxCell = spark.conf
-      .getOption("spark.graft.semdedup.maxCellRows")
-      .map(_.toLong).getOrElse(500000L)
-    // -0.0 normalizes to 0.0 BEFORE the scan: SQL comparisons (the
-    // join form) treat them as equal keys/orders, while the in-memory
-    // sort's Double.compare would rank -0.0 strictly earlier and the
-    // string-cast group key would split "-0.0"/"0.0" into two cells
-    val rawOrd = orderCol.map(c => col(c).cast("double")).getOrElse(lit(0.0))
-    val ordC = when(rawOrd === 0.0, lit(0.0)).otherwise(rawOrd)
-    val rows = df
-      .select(normalizedGroupKey(df.schema(clusterCol).dataType,
-          col(clusterCol)).as("_blk"),
-        col(idCol).cast("long").as("_id"), ordC.as("_ord"),
-        col(vecCol).cast("array<double>").as("_v"))
-      .where(col("_blk").isNotNull && col("_id").isNotNull &&
-        col("_v").isNotNull && col("_ord").isNotNull)
-      .as[(String, Long, Double, Array[Double])]
-    // identical accumulation order to FloatVecDot: sequential
-    // widen-multiply-accumulate in a double (float→double widening is
-    // exact, so pre-cast arrays give the same products)
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var acc = 0.0
-      var i = 0
-      while (i < n) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
-    val dropped = rows.groupByKey(_._1).flatMapGroups { (blk, it) =>
-      val arr = it.toArray
-      if (arr.length > maxCell) throw new IllegalStateException(
-        s"semDeDup: cell '$blk' holds ${arr.length} rows > " +
-          s"spark.graft.semdedup.maxCellRows=$maxCell — the clustering " +
-          "is degenerate for this corpus (cells should stay near " +
-          "targetCell). Re-cluster with a larger k / smaller " +
-          "targetCell, or raise the valve.")
-      // "earlier" = (order, id) lexicographic — the default order
-      // (constant 0.0) reduces to smaller-id
-      java.util.Arrays.sort(arr,
-        Ordering.by((t: (String, Long, Double, Array[Double])) =>
-          (t._3, t._2)))
-      val n = arr.length
-      val norms = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        norms(i) = math.sqrt(dot(arr(i)._4, arr(i)._4)); i += 1
-      }
-      val out = Seq.newBuilder[Long]
-      var j = 1
-      while (j < n) {
-        var a = 0
-        var hit = false
-        while (a < j && !hit) {
-          // join parity: "earlier" is STRICT (ord, id) — a row whose
-          // (ord, id) equals another's can neither drop it nor be
-          // dropped by it (the NaN-safe compare makes two NaN orders
-          // equal, exactly like SQL's nan-safe `===`)
-          val sameKey =
-            java.lang.Double.compare(arr(a)._3, arr(j)._3) == 0 &&
-              arr(a)._2 == arr(j)._2
-          if (!sameKey) {
-            val denom = norms(a) * norms(j)
-            val c =
-              if (denom == 0.0) 0.0 else dot(arr(a)._4, arr(j)._4) / denom
-            // join parity: SQL `cos >= eps` is nan-safe — NaN qualifies
-            if (c >= eps || java.lang.Double.isNaN(c)) hit = true
-          }
-          a += 1
-        }
-        if (hit) out += arr(j)._2
-        j += 1
-      }
-      out.result().iterator
-    }
-    df.join(dropped.toDF("__sdd_id"),
-      col(idCol).cast("long") === col("__sdd_id"), "left_anti")
-  }
+  /** Corpus-adaptive cell count for [[semDeDupKMeans]]: `k ≈ corpus /
+    * targetCell` keeps cells near targetCell rows, so within-cell pair
+    * work is ≈ corpus·targetCell/2 — LINEAR in the corpus (a FIXED k
+    * grows cells linearly and pair work quadratically, the weak-at-scale
+    * parameterization the 100× rehearsal flagged). The paper's LAION run
+    * is this rule at targetCell ≈ 2000 (k = 50k). */
+  def autoCellCount(corpusRows: Long, targetCell: Long = 1000L): Int =
+    math.max(1, math.ceil(
+      corpusRows.toDouble / math.max(1L, targetCell)).toInt)
 
   /** [[semDeDup]] with the paper's own clustering: spherical k-means
     * ([[Clustering.kmeans]]) assigns each row to its nearest centroid
@@ -2281,16 +2130,6 @@ object Dedup {
     * centroid — keeping the "edge" examples preserves diversity. False
     * (default) keeps lowest-id, matching the published code path that the
     * oracle checks. */
-  /** Corpus-adaptive cell count for [[semDeDupKMeans]]: `k ≈ corpus /
-    * targetCell` keeps cells near targetCell rows, so within-cell pair
-    * work is ≈ corpus·targetCell/2 — LINEAR in the corpus (a FIXED k
-    * grows cells linearly and pair work quadratically, the weak-at-scale
-    * parameterization the 100× rehearsal flagged). The paper's LAION run
-    * is this rule at targetCell ≈ 2000 (k = 50k). */
-  def autoCellCount(corpusRows: Long, targetCell: Long = 1000L): Int =
-    math.max(1, math.ceil(
-      corpusRows.toDouble / math.max(1L, targetCell)).toInt)
-
   def semDeDupKMeans(df: DataFrame, idCol: String, vecCol: String,
       eps: Double, k: Int = 0, iters: Int = 5,
       keepFarthestFromCentroid: Boolean = false): DataFrame = {

@@ -122,21 +122,19 @@ object Quantize {
     * against a query with m table lookups instead of a full-dimension
     * dot: the memory/bandwidth format for billion-vector search. */
   def pqCodebooks(df: DataFrame, idCol: String, vecCol: String,
-      dim: Int, m: Int, k: Int, iters: Int,
-      checkpointDir: Option[String] = None): DataFrame = {
+      dim: Int, m: Int, k: Int, iters: Int): DataFrame = {
     require(m > 0 && dim % m == 0, s"pq: dim $dim must split into m=$m")
     val sub = dim / m
     // all m subspaces in ONE grouped fit: the sub-slices explode in the
     // scan and [[Clustering.kmeansGrouped]] trains every codebook per
-    // Lloyd pass — m× fewer corpus scans and checkpoint jobs than m
+    // Lloyd pass — m× fewer corpus scans and jobs than m
     // independent fits, with identical centroids (same seeds, argmax,
     // and decimal means per subspace)
     val bySub = df.select(col(idCol),
       posexplode(array((0 until m).map(j =>
         slice(col(vecCol).cast("array<double>"), j * sub + 1, sub)): _*))
         .as(Seq("subspace", "__sub")))
-    Clustering.kmeansGrouped(bySub, idCol, "subspace", "__sub", k, iters,
-      checkpointDir)
+    Clustering.kmeansGrouped(bySub, idCol, "subspace", "__sub", k, iters)
       .select(col("subspace"), col("centroid_id"), col("centroid"))
   }
 

@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   * arithmetic over the input floats.
   *
   * The matrix is DETERMINISTIC — md5("jl&lt;seed&gt;-j-i") parity, the
-  * [[Similarity.planeVector]] recipe — and the driver folds it to
-  * codegen literals exactly like the k-means centroids: projection is
-  * ONE scan-fused expression per output coordinate, no fit job, no
-  * shuffle, no stored model, and any engine (or the DuckDB oracle)
-  * regenerates the identical matrix from the seed.
+  * [[graft.functions.VectorKernels.planeVector]] recipe — and the driver
+  * folds it to codegen literals exactly like the k-means centroids:
+  * projection is ONE scan-fused expression per output coordinate, no
+  * fit job, no shuffle, no stored model, and any engine (or the DuckDB
+  * oracle) regenerates the identical matrix from the seed.
   */
 object RandomProjection {
 

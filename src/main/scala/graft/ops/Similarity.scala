@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorKernels
 import graft.functions.VectorFunctions.{hyperplane_buckets, vec_dot}
 
 /** Similarity search over embedding columns (`Array[Float]`).
@@ -416,12 +415,6 @@ object Similarity {
       .where(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank")
   }
-
-  /** Deterministic pseudo-random hyperplane for LSH, computed once on the
-    * driver (the per-row md5 formulation burned 200+ s at sf0.1):
-    * component i of plane j = hash60("plane<j>-<i>") % 2001 - 1000. */
-  private[graft] def planeVector(j: Int, dim: Int): Array[Double] =
-    VectorKernels.planeVector(j, dim)
 
   /** Sign-pattern LSH bucket id from `nPlanes` hyperplanes of table
     * `table`: bit j set when dot(v, plane_{table,j}) >= 0 (or NaN);

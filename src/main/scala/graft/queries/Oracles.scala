@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.Similarity
+import graft.functions.VectorKernels
 
 /** DuckDB SQL builders shared by the oracles of several query families:
   * each mirrors one engine primitive (tokens, shingles, hashes, LSH
@@ -28,7 +28,7 @@ private[queries] object Oracles {
   def hyperBucketSql(vecExpr: String, table: Int, nPlanes: Int,
       dim: Int): String =
     (0 until nPlanes).map { j =>
-      val plane = Similarity.planeVector(table * 1000 + j, dim)
+      val plane = VectorKernels.planeVector(table * 1000 + j, dim)
       val dot = plane.zipWithIndex.map { case (p, i) =>
         s"CAST($vecExpr[${i + 1}] AS DOUBLE)*($p)" }.mkString(" + ")
       s"(CASE WHEN $dot >= 0.0 THEN ${1L << j} ELSE 0 END)"

@@ -246,7 +246,7 @@ class TextKernelsSpec extends SparkSpec {
       (java.lang.Long.parseLong(hex, 16) % 2001L - 1000L).toDouble
     }
     for (j <- 0 until 100)
-      assert(graft.ops.Similarity.planeVector(j, 64).toSeq ==
+      assert(graft.functions.VectorKernels.planeVector(j, 64).toSeq ==
         old(j, 64).toSeq, s"plane $j")
   }
 }

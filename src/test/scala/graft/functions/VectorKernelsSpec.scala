@@ -127,4 +127,39 @@ class VectorKernelsSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       VectorFunctions.hyperplane_buckets(col("v"), 65, 4, 0, 1))
   }
+
+  test("cosine pairs first-hit: each id_b once, paired with its " +
+      "earliest qualifying id_a, the same id_b set as all pairs") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val rnd = new scala.util.Random(3)
+    // three loose direction clusters plus 40 exact copies of the first
+    // cluster's direction, in a shuffled order: the kernel sorts by id
+    val vecs = (0L until 60L).map { i =>
+      i -> Array.tabulate(3)(d =>
+        math.cos(i % 3 + d) + rnd.nextDouble() * 0.3)
+    } ++ (100L until 140L).map(i => i -> Array(math.cos(0), math.cos(1),
+      math.cos(2)))
+    val rows = new GenericArrayData(rnd.shuffle(vecs).map { case (i, v) =>
+      InternalRow(i, UnsafeArrayData.fromPrimitiveArray(v)) }.toArray[Any])
+    def run(firstHit: Boolean): Seq[(Long, Long)] =
+      VectorKernels.cosinePairs(rows, LongType,
+        Ordering.Long.asInstanceOf[Ordering[Any]], isFloat = false, 0.97,
+        firstHit, maxCellRows = 1000, maxGroupPairs = 1, "g")
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val first = run(firstHit = true)
+    // maxGroupPairs = 1 bounds the all-pairs mode only
+    val e = intercept[IllegalStateException](run(firstHit = false))
+    assert(e.getMessage.contains("embeddingNearDup: block 'g'") &&
+      e.getMessage.contains("maxGroupPairs=1"), e.getMessage)
+    val all = VectorKernels.cosinePairs(rows, LongType,
+        Ordering.Long.asInstanceOf[Ordering[Any]], isFloat = false, 0.97,
+        firstHit = false, 1000, Long.MaxValue, "g")
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val want = all.groupBy(_._2).toSeq
+      .map { case (b, ps) => (ps.map(_._1).min, b) }
+    assert(first.map(_._2).distinct.size == first.size)
+    assert(first.toSet == want.toSet && first.size > 40)
+  }
 }

@@ -411,8 +411,8 @@ class DedupSpec extends SparkSpec {
         (Option(900L), Option.empty[Seq[Float]], Option(1), Option(0.5)),
         (Option(901L), Option(Seq(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)),
           Option.empty[Int], Option(0.5)),
-        // a null ID must neither crash the fused encoder nor be
-        // dropped (the join form's equi-keys discard it too)
+        // a null ID must neither crash the scan nor be dropped (the
+        // join form's equi-keys discard it too)
         (Option.empty[Long], Option(Seq(0f, 1f, 0f, 0f, 0f, 0f, 0f, 0f)),
           Option(2), Option(0.5)))
         .toDF("vec_id", "embedding", "cell", "ord"))
@@ -444,17 +444,11 @@ class DedupSpec extends SparkSpec {
     def ids(d: org.apache.spark.sql.DataFrame): Seq[Long] =
       d.select("vec_id").collect()
         .map(r => if (r.isNullAt(0)) -1L else r.getLong(0)).sorted.toSeq
-    def runAll(): Seq[Seq[Any]] = Seq(
-      ids(Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95)),
-      ids(Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95,
-        orderCol = Some("ord"))),
-      // a STRING order column has no exact double form: both runs must
-      // route to the join path's native-type comparison (a fused run
-      // would cast to null and silently exempt every row)
-      ids(Dedup.semDeDup(
-        pts.withColumn("sord", concat(lit("k"), $"ord".cast("string"))),
-        "vec_id", "embedding", "cell", 0.95, orderCol = Some("sord"))
-        .drop("sord")))
+    // a STRING order column compares in its native type on the one
+    // path, as it does in the join form (a cast to double would be
+    // null and silently exempt every row)
+    val stringOrdered =
+      pts.withColumn("sord", concat(lit("k"), $"ord".cast("string")))
     // pair outputs compare as SETS: ids are a documented-unique
     // precondition, and under the fixture's deliberate duplicates the
     // join form re-attaches vectors BY ID — it emits a qualifying pair
@@ -462,15 +456,22 @@ class DedupSpec extends SparkSpec {
     // scan's distinct() emits it once
     def pairSet(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
       d.as[(Long, Long)].collect().toSet.toSeq.sorted
-    val fused = runAll() ++ Seq(
+    val fused = Seq(
+      ids(Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95)),
+      ids(Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95,
+        orderCol = Some("ord"))),
+      ids(Dedup.semDeDup(stringOrdered, "vec_id", "embedding", "cell",
+        0.95, orderCol = Some("sord"))),
       pairSet(Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95,
         blockCol = Some("cell"))),
       pairSet(Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95,
         dim = 8)))
-    spark.conf.set("spark.graft.semdedup.fusedWithinCell", "false")
-    val joined = try runAll()
-      finally spark.conf.unset("spark.graft.semdedup.fusedWithinCell")
-    val reference = joined ++ Seq(
+    val reference = Seq(
+      ids(SemDeDupJoinForm(pts, "vec_id", "embedding", "cell", 0.95)),
+      ids(SemDeDupJoinForm(pts, "vec_id", "embedding", "cell", 0.95,
+        orderCol = Some("ord"))),
+      ids(SemDeDupJoinForm(stringOrdered, "vec_id", "embedding", "cell",
+        0.95, orderCol = Some("sord"))),
       pairSet(NearDupJoinForm.blocked(pts, "vec_id", "embedding", 0.95,
         "cell")),
       pairSet(NearDupJoinForm.lsh(pts, "vec_id", "embedding", 0.95,
@@ -482,15 +483,27 @@ class DedupSpec extends SparkSpec {
     }
     // the results are non-trivial (some rows actually dropped / paired)
     assert(fused(0).size < 123 && fused(3).nonEmpty)
-    // degenerate-cell guard fails fast with the remedy, on both scans
+    // degenerate-cell guard fails fast on both callers, each message
+    // naming its caller and that caller's remedy
     spark.conf.set("spark.graft.semdedup.maxCellRows", "10")
     try {
-      Seq(() => Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95),
-        () => Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95,
-          blockCol = Some("cell"))).foreach { run =>
+      Seq(
+        (() => Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95),
+          Seq("semDeDup: cell", "Re-cluster with a larger k / smaller " +
+            "targetCell")),
+        (() => Dedup.semDeDup(pts, "vec_id", "embedding", "cell", 0.95,
+            orderCol = Some("ord")),
+          Seq("semDeDup: cell", "Re-cluster with a larger k / smaller " +
+            "targetCell")),
+        (() => Dedup.embeddingNearDup(pts, "vec_id", "embedding", 0.95,
+            blockCol = Some("cell")),
+          Seq("embeddingNearDup: block", "Use blocks that scale with " +
+            "the data"))).foreach { case (run, texts) =>
         val e = intercept[org.apache.spark.SparkException](run().count())
-        assert(e.getMessage.contains("maxCellRows") ||
-          Option(e.getCause).exists(_.getMessage.contains("maxCellRows")))
+        val msg = e.getMessage +
+          Option(e.getCause).map(_.getMessage).getOrElse("")
+        assert(msg.contains("maxCellRows"), msg)
+        texts.foreach(t => assert(msg.contains(t), msg))
       }
     } finally spark.conf.unset("spark.graft.semdedup.maxCellRows")
   }
@@ -540,18 +553,61 @@ class DedupSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "cell")
     def pairs(d: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
       d.as[(Long, Long)].collect().sorted.toSeq
-    def survivors(): Seq[Long] =
-      Dedup.semDeDup(rows, "vec_id", "embedding", "cell", 0.95)
-        .select("vec_id").as[Long].collect().sorted.toSeq
-    val fused = (survivors(), pairs(Dedup.embeddingNearDup(rows, "vec_id",
-      "embedding", 0.95, blockCol = Some("cell"))))
-    spark.conf.set("spark.graft.semdedup.fusedWithinCell", "false")
-    val joined = try (survivors(), pairs(NearDupJoinForm.blocked(rows,
-        "vec_id", "embedding", 0.95, "cell")))
-      finally spark.conf.unset("spark.graft.semdedup.fusedWithinCell")
+    def survivors(d: org.apache.spark.sql.DataFrame): Seq[Long] =
+      d.select("vec_id").as[Long].collect().sorted.toSeq
+    val fused = (
+      survivors(Dedup.semDeDup(rows, "vec_id", "embedding", "cell", 0.95)),
+      pairs(Dedup.embeddingNearDup(rows, "vec_id", "embedding", 0.95,
+        blockCol = Some("cell"))))
+    val joined = (
+      survivors(SemDeDupJoinForm(rows, "vec_id", "embedding", "cell", 0.95)),
+      pairs(NearDupJoinForm.blocked(rows, "vec_id", "embedding", 0.95,
+        "cell")))
     assert(fused == joined)
     assert(fused._1 == Seq(80L, 82L, 84L))
     assert(fused._2 == Seq((80L, 81L), (82L, 83L), (84L, 85L)))
+  }
+
+  test("semDeDup on the grouped pair scan: string ids, string orders " +
+      "and long orders past 2^53 match the join form, with no job at " +
+      "plan build") {
+    val big = 1L << 53
+    // (sid, vector, cell, sord, lord); near-identical vectors per cell
+    val rows = Seq(
+      // string ids, default order: "k10" < "k9" in SQL order, so k9 drops
+      ("k9", Seq(1f, 0f, 0f, 0f), 0, "x", 1L),
+      ("k10", Seq(1f, 0.01f, 0f, 0f), 0, "x", 1L),
+      // string order: "a" < "b", so k21 is earlier than k20 there
+      ("k21", Seq(0f, 1f, 0f, 0f), 1, "a", 1L),
+      ("k20", Seq(0f, 1f, 0.01f, 0f), 1, "b", 1L),
+      // long orders 2^53+1 and 2^53 are one double; natively k31 is
+      // earlier and k30 drops (a double compare would tie and keep k30)
+      ("k30", Seq(0f, 0f, 1f, 0f), 2, "x", big + 1),
+      ("k31", Seq(0f, 0f, 1f, 0.01f), 2, "x", big),
+      // a null order takes no part: k41 neither drops nor is dropped
+      ("k40", Seq(0f, 0f, 0f, 1f), 3, null, big),
+      ("k41", Seq(0f, 0f, 0.01f, 1f), 3, "x", big),
+      ("k42", Seq(0f, 0f, 0.02f, 1f), 3, "y", big + 2))
+      .toDF("sid", "embedding", "cell", "sord", "lord")
+      .withColumn("lord", when($"sid" === "k40", lit(null))
+        .otherwise($"lord"))
+    def ids(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.select("sid").as[String].collect().sorted.toSeq
+    val orders = Seq(None, Some("sord"), Some("lord"))
+    val got = orders.map(o => ids(Dedup.semDeDup(rows, "sid", "embedding",
+      "cell", 0.95, orderCol = o)))
+    orders.zip(got).foreach { case (o, g) =>
+      val want = ids(SemDeDupJoinForm(rows, "sid", "embedding", "cell",
+        0.95, orderCol = o))
+      assert(g == want, s"order $o: scan $g, join $want")
+    }
+    assert(got == Seq(
+      Seq("k10", "k20", "k30", "k40"),
+      Seq("k10", "k21", "k30", "k40", "k41"),
+      Seq("k10", "k20", "k31", "k40", "k41")))
+    // a string id builds the plan without a job (no occupancy aggregate)
+    assert(jobsIn(Dedup.semDeDup(rows, "sid", "embedding", "cell",
+      0.95))._2 == 0)
   }
 
   test("embeddingNearDup candidate valve: no job when the row bound " +
@@ -1611,7 +1667,7 @@ object NearDupJoinForm {
   import graft.functions.VectorColumnForms
   import graft.functions.VectorFunctions.vec_dot
 
-  private def verified(cand: DataFrame, base: DataFrame,
+  private[ops] def verified(cand: DataFrame, base: DataFrame,
       threshold: Double): DataFrame = {
     val va = base.select(col("id").as("id_a"), col("v").as("va"))
       .withColumn("na", sqrt(vec_dot(col("va"), col("va"))))
@@ -1653,5 +1709,33 @@ object NearDupJoinForm {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
     verified(cand, base, threshold)
+  }
+}
+
+/** The order-aware candidate join the grouped pair scan replaced in
+  * [[Dedup.semDeDup]], kept only as the reference its survivors must
+  * equal: a narrow (id, cell, order) self-join on the cell key with
+  * "earlier" = (order, id) compared in SQL, the cosines verified as in
+  * [[NearDupJoinForm]], and the later ids anti-joined away. Without an
+  * order column every row's order is the same constant, so earlier is
+  * smaller id. */
+object SemDeDupJoinForm {
+  import org.apache.spark.sql.DataFrame
+
+  def apply(df: DataFrame, idCol: String, vecCol: String,
+      clusterCol: String, eps: Double,
+      orderCol: Option[String] = None): DataFrame = {
+    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
+      col(clusterCol).as("blk"), orderCol.fold(lit(0))(col).as("ord"))
+    val ids = base.select(col("id"), col("blk"), col("ord"))
+    val earlier = (col("ord_a") < col("ord_b")) ||
+      (col("ord_a") === col("ord_b") && col("id_a") < col("id_b"))
+    val cand = ids.toDF("id_a", "blk", "ord_a")
+      .join(ids.toDF("id_b", "blk", "ord_b"), Seq("blk"))
+      .where(earlier)
+      .select("id_a", "id_b")
+    val dropped = NearDupJoinForm.verified(cand, base, eps)
+      .select(col("id_b").as(idCol))
+    df.join(dropped, Seq(idCol), "left_anti")
   }
 }

@@ -161,6 +161,24 @@ class PlanSpec extends SparkSpec {
       blocked.linesIterator.count(_.contains(") Exchange")) == 2, blocked)
   }
 
+  test("semDeDup plan, both keep rules: one grouped pair scan, no " +
+      "typed groups, at most the one Exchange of the typed scan it " +
+      "replaced") {
+    val e = graft.sources.Tables.table(spark, sf, "embeddings")
+    Seq(false, true).foreach { far =>
+      val plan = explain(graft.ops.Dedup.semDeDupKMeans(e, "vec_id",
+        "embedding", eps = 0.3, k = 4, iters = 2,
+        keepFarthestFromCentroid = far))
+      assert(plan.contains("cosine_pairs") && plan.contains("collect_list"),
+        plan)
+      assert(!plan.contains("AppendColumns") && !plan.contains("MapGroups") &&
+        !plan.contains("DeserializeToObject"), plan)
+      // the groupByKey scan planned exactly 1 Exchange (the cell key)
+      // plus a broadcast anti-join on this fixture
+      assert(plan.linesIterator.count(_.contains(") Exchange")) <= 1, plan)
+    }
+  }
+
   test("semantic decontamination: broadcast path is the bounded " +
       "product, LSH path has no nested loop") {
     val e = graft.sources.Tables.table(spark, sf, "embeddings")
