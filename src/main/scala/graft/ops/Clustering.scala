@@ -11,10 +11,15 @@ import org.apache.spark.sql.functions._
   * tie-break), then recompute each centroid as the component-wise mean
   * of its members.
   *
-  * Scale shape per iteration: exactly ONE job — assignment folded into
-  * the scan (never shuffles; the earlier broadcast-join + per-vector
-  * window form exchanged k×|corpus| rows per iteration), one
-  * (cell, dim) aggregate, and a k·dim-row collect. The centroid table
+  * Scale shape per iteration: ONE collect with ONE Exchange of its
+  * own — assignment folded into the scan (never shuffles; the earlier
+  * broadcast-join + per-vector window form exchanged k×|corpus| rows
+  * per iteration), one (cell, dim) aggregate, and a k·dim-row collect.
+  * A source with fewer splits than the default parallelism adds the
+  * [[Partitioning.ensureMinPartitions]] round-robin Exchange, and
+  * adaptive execution runs each Exchange as its own job: ProfileProbe
+  * q130_semdedup at sf0.01 (a one-split source) lists three jobs per
+  * step (1, 2 and 3 stages). The centroid table
   * is bounded driver state (the same class as the IVF/PQ literal
   * folds), so there is no growing lineage and nothing to checkpoint —
   * every step's plan restarts from the scan with the current
@@ -176,8 +181,12 @@ object Clustering {
         col(vecCol).cast("array<double>").as("__v")))
     // The centroid table is k rows — bounded DRIVER state (the class the
     // IVF/PQ literal fold already puts it in), so the whole loop holds it
-    // driver-side: each Lloyd step is exactly ONE job (assignment folded
-    // into the scan, one (cell, dim) aggregate, k·dim rows collected).
+    // driver-side: each Lloyd step is one collect with one Exchange of
+    // its own (assignment folded into the scan, one (cell, dim)
+    // aggregate, k·dim rows collected); a one-split source adds the
+    // round-robin Exchange above, and adaptive execution runs each
+    // Exchange as its own job — three jobs per step in ProfileProbe
+    // q130_semdedup at sf0.01.
     // No checkpoints and no growing lineage — every step's plan restarts
     // from the scan with this generation's centroids as literals.
     // deterministic seed: the k smallest-id vectors

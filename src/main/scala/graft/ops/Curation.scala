@@ -22,12 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  /** Run the cascade; returns surviving rows with the diagnostic columns
-    * `predicted_lang` and `quality`. `minLangMargin` > 0 additionally
-    * requires the language label to WIN by that many marker hits
-    * ([[TextFunctions.langIdMargin]]) — a da/no coin-flip doc scoring
-    * 3/3 carries a confident-looking label the margin exposes; 0 (the
-    * default) keeps the historical label-only gate. */
   /** The language + margin + quality gate shared by every curate
     * face: scan-side codegen'd predicates, adds the
     * `predicted_lang` / `quality` diagnostic columns. */
@@ -42,6 +36,12 @@ object Curation {
           TextFunctions.langIdMargin(col(textCol)) >= minLangMargin
         else lit(true)))
 
+  /** Run the cascade; returns surviving rows with the diagnostic columns
+    * `predicted_lang` and `quality`. `minLangMargin` > 0 additionally
+    * requires the language label to WIN by that many marker hits
+    * ([[TextFunctions.langIdMargin]]) — a da/no coin-flip doc scoring
+    * 3/3 carries a confident-looking label the margin exposes; 0 (the
+    * default) keeps the historical label-only gate. */
   def curate(df: DataFrame, idCol: String, textCol: String,
       targetLang: String = "en", minQuality: Double = 0.0,
       sampleFraction: Double = 1.0, salt: String = "",

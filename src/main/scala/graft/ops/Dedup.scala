@@ -13,15 +13,15 @@ import TextFunctions._
   */
 object Dedup {
 
-  /** Frames persisted by the operators below (shingle/signature subplans
-    * that would otherwise recompute once per self-join side). They are
-    * tracked here so callers can release them deterministically —
-    * `spark.catalog.clearCache()` also works but nukes unrelated caches. */
   /** Sink for the dense-shingle scale warning — injectable so specs can
     * assert it fires (same pattern as PipelineCompiler.scaleWarnSink). */
   @volatile private[graft] var denseWarnSink: String => Unit = msg =>
     org.apache.log4j.Logger.getLogger(Dedup.getClass).warn(msg)
 
+  /** Frames persisted by the operators below (shingle/signature subplans
+    * that would otherwise recompute once per self-join side). They are
+    * tracked here so callers can release them deterministically —
+    * `spark.catalog.clearCache()` also works but nukes unrelated caches. */
   private val cachedFrames =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
   private def tracked(df: DataFrame): DataFrame = { cachedFrames.add(df); df }
@@ -393,17 +393,6 @@ object Dedup {
     sigs.groupBy("id").agg(mins.head, mins.tail: _*)
   }
 
-  /** MinHash + LSH candidate pairs: signatures are split into `bands`
-    * bands of numPerms/bands rows; docs sharing any band signature become
-    * candidates. The band join is a shuffle on the band key — the classic
-    * sub-quadratic near-dup plan for 100 TB corpora.
-    *
-    * Plan shape matters: signatures are persisted (computing them costs a
-    * text scan + an aggregate; without the persist the band self-join
-    * recomputes that subplan once per side — 8× at 4 bands) and all bands
-    * come from ONE pass via a struct explode rather than a per-band union.
-    * The persisted frame is registered for [[releaseCaches]]; call it after
-    * materializing the result. Output: distinct (id_a, id_b), id_a < id_b. */
   /** (id, band, sig) band-signature frame from a [[minhashSignatures]]
     * output — THE band format: the self-join ([[minhashLshPairs]]) and
     * the cross-frame join ([[minhashLshPairsBetween]]) both resolve
@@ -423,6 +412,17 @@ object Dedup {
         col("bs.sig").as("sig"))
   }
 
+  /** MinHash + LSH candidate pairs: signatures are split into `bands`
+    * bands of numPerms/bands rows; docs sharing any band signature become
+    * candidates. The band join is a shuffle on the band key — the classic
+    * sub-quadratic near-dup plan for 100 TB corpora.
+    *
+    * Plan shape matters: signatures are persisted (computing them costs a
+    * text scan + an aggregate; without the persist the band self-join
+    * recomputes that subplan once per side — 8× at 4 bands) and all bands
+    * come from ONE pass via a struct explode rather than a per-band union.
+    * The persisted frame is registered for [[releaseCaches]]; call it after
+    * materializing the result. Output: distinct (id_a, id_b), id_a < id_b. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numPerms: Int = 12, bands: Int = 4): DataFrame = {
     require(numPerms % bands == 0, "numPerms must be divisible by bands")
@@ -437,20 +437,6 @@ object Dedup {
       .distinct(), sigs)
   }
 
-  /** CROSS-FRAME MinHash LSH: near-dup candidates between an incoming
-    * shard and an existing reference corpus — the incremental-ingest
-    * form of [[minhashLshPairs]] (a daily crawl delta dedups against
-    * the accumulated corpus WITHOUT re-pairing the corpus against
-    * itself). Both sides hash with the SAME permutation constants, so
-    * a reference side whose signatures are precomputed and stored
-    * (the IVF-maintenance pattern) joins identically — recompute here
-    * is one scan over each side, never corpus×delta.
-    *
-    * Plan shape at 100 TB: band signatures from one struct-explode
-    * pass per side, candidates meet on the (band, sig) equi-join —
-    * the delta side is small, so AQE broadcasts it and the reference
-    * corpus never shuffles. Output: distinct (new_id, ref_id); rows
-    * whose new_id never appears are novel documents. */
   /** LSH candidate pairs WITH the signature-agreement similarity
     * estimate: est_jaccard = (#equal minhash coordinates)/numPerms,
     * the classic unbiased estimator of J(a,b) — so pipelines can
@@ -492,6 +478,20 @@ object Dedup {
       .select("id_a", "id_b", "est_jaccard"), sigs)
   }
 
+  /** CROSS-FRAME MinHash LSH: near-dup candidates between an incoming
+    * shard and an existing reference corpus — the incremental-ingest
+    * form of [[minhashLshPairs]] (a daily crawl delta dedups against
+    * the accumulated corpus WITHOUT re-pairing the corpus against
+    * itself). Both sides hash with the SAME permutation constants, so
+    * a reference side whose signatures are precomputed and stored
+    * (the IVF-maintenance pattern) joins identically — recompute here
+    * is one scan over each side, never corpus×delta.
+    *
+    * Plan shape at 100 TB: band signatures from one struct-explode
+    * pass per side, candidates meet on the (band, sig) equi-join —
+    * the delta side is small, so AQE broadcasts it and the reference
+    * corpus never shuffles. Output: distinct (new_id, ref_id); rows
+    * whose new_id never appears are novel documents. */
   def minhashLshPairsBetween(newDf: DataFrame, refDf: DataFrame,
       idCol: String, textCol: String, k: Int = 3, numPerms: Int = 12,
       bands: Int = 4): DataFrame =
@@ -548,24 +548,34 @@ object Dedup {
       .distinct()
   }
 
-  /** PassJoin index side: the d+1 balanced segments of each string of
-    * a (id, s, n) base frame → (id_i, l, k, sub). */
-  private def edSegFrame(base: DataFrame, d: Int): DataFrame = {
+  /** THE PassJoin segment format (Li, Deng, Feng — VLDB 2011): every
+    * string of a (id, s, n) base frame → (id, l, k, sub, s) rows. A
+    * string of length l >= d+1 emits its d+1 contiguous balanced
+    * segments (k = 0..d); at most d edits cannot touch all of them, so
+    * any within-distance partner contains one of them EXACTLY, shifted
+    * by at most d. A shorter string has no such guarantee and emits
+    * one `k = -1` row (`sub` null) for the short bucket. The string
+    * rides every row, so the verify never re-reads the source. One
+    * explode, no union: the self and cross-frame faces index with it,
+    * and [[editDistanceSegmentStore]] persists it. */
+  private def edSegments(base: DataFrame, d: Int): DataFrame = {
     val parts = lit(d + 1)
-    base.where(col("n") >= d + 1)
-      .select(col("id"), col("s"), col("n"),
-        explode(sequence(lit(0), lit(d))).as("k"))
-      .withColumn("st", floor(col("k") * col("n") / parts).cast("int"))
+    base.select(col("id"), col("s"), col("n").as("l"),
+        explode(when(col("n") >= d + 1, sequence(lit(0), lit(d)))
+          .otherwise(array(lit(-1)))).as("k"))
+      .withColumn("st", floor(col("k") * col("l") / parts).cast("int"))
       .withColumn("en",
-        floor((col("k") + 1) * col("n") / parts).cast("int"))
-      .select(col("id").as("id_i"), col("n").as("l"), col("k"),
-        col("s").substr(col("st") + 1, col("en") - col("st")).as("sub"))
+        floor((col("k") + 1) * col("l") / parts).cast("int"))
+      .select(col("id"), col("l"), col("k"),
+        when(col("k") >= 0,
+          col("s").substr(col("st") + 1, col("en") - col("st"))).as("sub"),
+        col("s"))
   }
 
   /** PassJoin probe side: the substrings a length-l source's segment k
     * could match in this string, for every l within ±d (n >= 1 keeps
     * the probe sequence ascending — empty strings pair via the short
-    * bucket) → (id_p, l, k, sub). */
+    * bucket) → (id_p, s_p, l, k, sub). */
   private def edProbeFrame(base: DataFrame, d: Int): DataFrame = {
     val parts = lit(d + 1)
     base.where(col("n") >= 1)
@@ -583,151 +593,153 @@ object Dedup {
         explode(sequence(lit(-d), lit(d))).as("sh"))
       .withColumn("st", col("st0") + col("sh"))
       .where(col("st") >= 0 && col("st") + col("slen") <= col("n"))
-      .select(col("id").as("id_p"), col("l"), col("k"),
-        col("s").substr(col("st") + 1, col("slen")).as("sub"))
+      .select(col("id").as("id_p"), col("s").as("s_p"), col("l"),
+        col("k"), col("s").substr(col("st") + 1, col("slen")).as("sub"))
   }
 
-  /** (id, s, n) narrow base frame for the PassJoin family. */
+  /** (id, s, n) narrow base frame for the PassJoin family; rows with a
+    * null id or a null string take no part in any face. */
   private def edBase(df: DataFrame, idCol: String, strCol: String)
       : DataFrame =
     df.select(col(idCol).as("id"), col(strCol).as("s"))
-      .where(col("s").isNotNull)
+      .where(col("id").isNotNull && col("s").isNotNull)
       .withColumn("n", length(col("s")))
 
-  /** Edit-distance near-dup pairs: all (id_a, id_b) with
-    * levenshtein(s_a, s_b) <= `maxDist` — CHARACTER-level fuzz (typos,
-    * OCR noise, trailing junk) that the token-set family (jaccard/
-    * minhash/simhash) cannot see on short fields like titles, names,
-    * or product codes.
+  /** The one PassJoin core behind the three edit-distance faces:
+    * `index` is a segment frame in the [[edSegments]] format (built on
+    * the fly, or a saved [[editDistanceSegmentStore]]) and `probeBase`
+    * the (id, s, n) strings probed against it. Output: distinct
+    * (id_i, id_p) — an index id and a probe id some string of which
+    * lie within `d` edits of each other. `self` adds `id_i < id_p`:
+    * the self face indexes and probes one base, and every qualifying
+    * pair exists in its smaller-id-as-index orientation (a long index
+    * string finds its partner by the segment guarantee; a short one
+    * through the short bucket, since its partner is at most 2d long).
     *
-    * Blocking is the published PassJoin segment scheme (Li, Deng, Feng
-    * — VLDB 2011): split every string into `maxDist`+1 contiguous
-    * balanced segments; at most `maxDist` edits cannot touch all of
-    * them, so any within-distance pair shares one segment EXACTLY,
-    * shifted by at most `maxDist`. The index side emits its d+1
-    * segments, the probe side emits the substrings a source of length
-    * l in [n-d, n+d] could have contributed (a ±d position window — a
-    * SUPERSET of PassJoin's tight multi-match window, trading a few
-    * extra candidates for a simpler plan), and candidates meet on the
-    * (segment index, source length, content) equi-join — never
-    * all-pairs. Exact levenshtein verifies candidates, so recall is
-    * complete and precision exact.
+    * Candidates meet on the (source length, segment index, content)
+    * equi-join — the probe side emits the substrings a source of
+    * length l in [n-d, n+d] could have contributed (a ±d position
+    * window, a SUPERSET of PassJoin's tight multi-match window) —
+    * never all-pairs. Index strings shorter than d+1 (`k = -1` rows)
+    * pair through one nested-loop bucket against probe strings of
+    * length <= 2d (anything longer is out of range); that branch only
+    * enters the plan when such rows EXIST (bounded limit probe, the
+    * binaryAnnTopK pattern). The strings ride both sides, and the
+    * exact levenshtein verify runs per string pair BEFORE the id
+    * distinct, so an id carrying several strings pairs when any of
+    * them qualifies, and each id pair is output once.
     *
-    * Strings shorter than d+1 chars have no nonempty segment
-    * guarantee; they pair through one tiny nested-loop bucket against
-    * strings of length <= 2d (anything longer is out of range by the
-    * length filter). That branch only enters the plan when short
-    * strings EXIST (bounded limit-probe, the binaryAnnTopK pattern),
-    * and `spark.graft.editdist.shortBucketLimit` (default 10000, 0
-    * disables) fails fast with a remedy when the short side is large
-    * enough to make the product a scale risk.
-    *
-    * Scale shape: ONE source scan (the narrow (id, s, n) projection is
-    * persisted and re-read by the segment/probe/short/verify subplans
-    * and the valve probes), explode factors (d+1) on the segment side
-    * and at most (2d+1)²(d+1) on the probe side, one narrow equi-join,
-    * distinct id pairs, then the levenshtein verify on candidates only. Skewed
-    * shared segments (common prefixes/tails) concentrate buckets the
-    * way every LSH family here does — and like that family, a
-    * DEFAULT-ON valve (`spark.graft.editdist.maxCandidatePairs`, 2e9,
-    * 0 disables) measures the exact segment-join volume eagerly (two
-    * narrow aggregates over the persisted base) and fails fast with
-    * named remedies before the join can spill a disk full. */
-  def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-      maxDist: Int = 1): DataFrame = {
-    val d = maxDist
-    require(d >= 1 && d <= 4, s"editDistancePairs: maxDist in [1,4], got $d")
-    // the narrow (id, s, n) projection feeds EIGHT subplans (segments,
-    // probes, shorts, short partners, both verify join-backs, two
-    // valve probes) — persist it once so the source scans once
-    val base = tracked(edBase(df, idCol, strCol).persist())
-    val seg = edSegFrame(base, d)
-    val probe = edProbeFrame(base, d)
-    // spark.graft.editdist.maxCandidatePairs: PRE-JOIN volume valve on
-    // the segment equi-join, ON BY DEFAULT (2e9; 0 disables) — the
-    // jaccard-family lesson applied here. Shared tails concentrate
-    // (l, k, segment) buckets the way common prefixes concentrate
-    // shingle buckets (a corpus of "<anything>-v1" codes puts every
-    // same-length string in ONE "-v1" bucket, and the join degrades
-    // toward O(n²) inside the length class). The estimate is exact —
-    // Σ over buckets of |seg|·|probe| — computed from two narrow
-    // aggregates over the persisted base, so it fails FAST with named
-    // remedies instead of spilling the join to a disk-full crash.
-    val maxCand = df.sparkSession.conf
-      .getOption("spark.graft.editdist.maxCandidatePairs")
+    * Two valves, read here on the driver; each message names `face`:
+    *  - `spark.graft.editdist.maxCandidatePairs` (default 2e9, 0
+    *    disables): shared tails concentrate (l, k, segment) buckets the
+    *    way common prefixes concentrate shingle buckets (a corpus of
+    *    "<anything>-v1" codes puts every same-length string in ONE
+    *    "-v1" bucket), so the exact join volume Σ |seg|·|probe| over
+    *    buckets is measured eagerly from two narrow aggregates and the
+    *    call fails fast with named remedies before the join can spill
+    *    a disk full. When the inputs are provably small — index rows
+    *    <= safeN(d+1) and probe strings <= safeN bound the volume by
+    *    safeN²·(d+1)²(2d+1)² <= the valve — one or two limit probes
+    *    replace the estimate. The self face's probe bound implies its
+    *    index bound (at most d+1 index rows per string), so it probes
+    *    once.
+    *  - `spark.graft.editdist.shortBucketLimit` (default 10000, 0
+    *    disables the valve AND its probes — the branch is then always
+    *    planned): both factors of the nested-loop product are probed,
+    *    bounded (never a full count). */
+  private def passJoin(face: String, index: DataFrame,
+      probeBase: DataFrame, d: Int, self: Boolean): DataFrame = {
+    val conf = probeBase.sparkSession.conf
+    val segs = index.where(col("k") >= 0)
+      .select(col("id").as("id_i"), col("s").as("s_i"), col("l"),
+        col("k"), col("sub"))
+    val probe = edProbeFrame(probeBase, d)
+    val maxCand = conf.getOption("spark.graft.editdist.maxCandidatePairs")
       .map(_.toLong).getOrElse(2000000000L)
-    // bounded pre-probe (the binaryAnnTopK pattern): when n rows make
-    // even the single-bucket WORST case — n(d+1) segment rows times
-    // n(2d+1)²(d+1) probe rows — fit under the valve, skip the
-    // estimate jobs entirely; a 360-row fixture then pays one narrow
-    // limit-probe instead of two exploded aggregations
     val worstPerPair = (d + 1).toDouble * (2 * d + 1) * (2 * d + 1) *
       (d + 1)
     val safeN = math.sqrt(maxCand.toDouble / worstPerPair).toLong
+    def atMost(df: DataFrame, n: Long): Boolean =
+      n < Int.MaxValue - 1 && df.limit(n.toInt + 1).count() <= n
     val provablySmall = maxCand > 0 && safeN > 0 &&
-      safeN < Int.MaxValue - 1 &&
-      base.limit(safeN.toInt + 1).count() <= safeN
+      (self || atMost(index, safeN * (d + 1))) && atMost(probeBase, safeN)
     if (maxCand > 0 && !provablySmall) {
-      val candVol = seg.groupBy("l", "k", "sub")
+      val candVol = segs.groupBy("l", "k", "sub")
         .agg(count(lit(1)).as("__ns"))
         .join(probe.groupBy("l", "k", "sub")
           .agg(count(lit(1)).as("__np")), Seq("l", "k", "sub"))
         .agg(coalesce(sum(col("__ns").cast("double") * col("__np")),
           lit(0.0)).as("cand")).head().getDouble(0)
       if (candVol > maxCand) throw new IllegalStateException(
-        f"editDistancePairs: segment-join candidate volume $candVol%.3g " +
-          s"exceeds spark.graft.editdist.maxCandidatePairs=$maxCand — " +
-          "shared prefixes/suffixes are concentrating the (length, " +
-          "segment) buckets. Strip common boilerplate from the strings " +
-          "first, run exact dedup before the fuzzy pass, lower maxDist, " +
-          "or raise the valve (0 disables).")
+        f"$face: segment-join candidate volume $candVol%.3g exceeds " +
+          s"spark.graft.editdist.maxCandidatePairs=$maxCand — shared " +
+          "prefixes/suffixes are concentrating the (length, segment) " +
+          "buckets. Strip common boilerplate from the strings first, " +
+          "run exact dedup before the fuzzy pass, lower maxDist, or " +
+          "raise the valve (0 disables).")
     }
-    val longCand = seg.join(probe, Seq("l", "k", "sub"))
-      .where(col("id_i") =!= col("id_p"))
-      .select(least(col("id_i"), col("id_p")).as("id_a"),
-        greatest(col("id_i"), col("id_p")).as("id_b"))
-    // short strings (< d+1 chars): nested-loop bucket vs length <= 2d,
-    // entered only when shorts exist and valve-bounded
-    val shorts = base.where(col("n") <= d)
-    val shortLimit = df.sparkSession.conf
-      .getOption("spark.graft.editdist.shortBucketLimit")
+    val shortLimit = conf.getOption("spark.graft.editdist.shortBucketLimit")
       .map(_.toLong).getOrElse(10000L)
-    // bounded probes (never a full count); 0 disables the valve AND
-    // the probes — the branch is then always planned, caller's choice.
-    // BOTH factors of the nested-loop product are probed: a passing
-    // shorts count against millions of <=2d-char partners is the same
-    // scale cliff from the other side.
     val valveOff = shortLimit <= 0 || shortLimit >= Int.MaxValue - 1
+    val shorts = index.where(col("k") < 0)
+    val partners = probeBase.where(col("n") <= 2 * d)
     val nShort =
       if (valveOff) 1L else shorts.limit(shortLimit.toInt + 1).count()
     val nPartner =
       if (valveOff || nShort == 0) 0L
-      else base.where(col("n") <= 2 * d)
-        .limit(shortLimit.toInt + 1).count()
+      else partners.limit(shortLimit.toInt + 1).count()
     require(valveOff ||
       (nShort <= shortLimit && nPartner <= shortLimit),
-      s"editDistancePairs: the short-string bucket (len <= $d vs " +
-        s"len <= ${2 * d}) exceeds $shortLimit rows on a side — its " +
+      s"$face: the short-string bucket (index len <= $d vs probe len " +
+        s"<= ${2 * d}) exceeds $shortLimit rows on a side — its " +
         "nested-loop product would dominate. Filter degenerate " +
         "strings out first, or raise " +
         "spark.graft.editdist.shortBucketLimit (0 disables the valve).")
+    val order = if (self) col("id_i") < col("id_p") else lit(true)
+    val longCand = segs.join(probe, Seq("l", "k", "sub")).where(order)
+      .select("id_i", "s_i", "id_p", "s_p")
     val cand =
       if (nShort == 0) longCand
-      else {
-        val shortCand = shorts.as("a")
-          .join(base.where(col("n") <= 2 * d).as("b"),
-            abs(col("a.n") - col("b.n")) <= d &&
-              col("a.id") =!= col("b.id"))
-          .select(least(col("a.id"), col("b.id")).as("id_a"),
-            greatest(col("a.id"), col("b.id")).as("id_b"))
-        longCand.unionByName(shortCand)
-      }
-    val strsA = base.select(col("id").as("id_a"), col("s").as("__sa"))
-    val strsB = base.select(col("id").as("id_b"), col("s").as("__sb"))
-    autoRelease(cand.distinct()
-      .join(strsA, "id_a").join(strsB, "id_b")
-      .where(levenshtein(col("__sa"), col("__sb")) <= d)
-      .select("id_a", "id_b"), base)
+      else longCand.unionByName(shorts
+        .select(col("id").as("id_i"), col("s").as("s_i"), col("l"))
+        .join(partners.select(col("id").as("id_p"), col("s").as("s_p"),
+          col("n")), abs(col("l") - col("n")) <= d && order)
+        .select("id_i", "s_i", "id_p", "s_p"))
+    cand.where(levenshtein(col("s_i"), col("s_p")) <= d)
+      .select("id_i", "id_p")
+      .distinct()
+  }
+
+  /** Edit-distance near-dup pairs: all (id_a, id_b), id_a < id_b, whose
+    * strings lie within `maxDist` Levenshtein edits — CHARACTER-level
+    * fuzz (typos, OCR noise, trailing junk) that the token-set family
+    * (jaccard/minhash/simhash) cannot see on short fields like titles,
+    * names, or product codes. An id carrying several strings pairs
+    * when any of them is within `maxDist` of any string of the other
+    * id.
+    *
+    * The [[passJoin]] core with the base as both index and probe side
+    * (exact: see the core for why `id_i < id_p` loses no pair), under
+    * both of its valves. Scale shape: ONE source scan into the
+    * persisted segment frame, which every subplan re-reads — its
+    * k <= 0 rows (one per string) are the probe side's base — then
+    * explode factors (d+1) on the segment side and at most
+    * (2d+1)²(d+1) on the probe side, one narrow equi-join, the
+    * levenshtein verify, and one distinct over the surviving id pairs.
+    * Reading the persisted frame also keeps the explode out of the
+    * valves' limit probes: a limit fused into an explode stage
+    * recompiles its generated class on every call. */
+  def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
+      maxDist: Int = 1): DataFrame = {
+    val d = maxDist
+    require(d >= 1 && d <= 4, s"editDistancePairs: maxDist in [1,4], got $d")
+    val index = tracked(edSegments(edBase(df, idCol, strCol), d).persist())
+    // one row per string: k = 0 of a long one, k = -1 of a short one
+    val base = index.where(col("k") <= 0)
+      .select(col("id"), col("s"), col("l").as("n"))
+    autoRelease(
+      passJoin("editDistancePairs", index, base, d, self = true)
+        .select(col("id_i").as("id_a"), col("id_p").as("id_b")), index)
   }
 
   /** CROSS-FRAME edit-distance near-dup: fuzzy matches between an
@@ -736,87 +748,27 @@ object Dedup {
     * [[minhashLshPairsBetween]] counterpart for short code/title
     * fields). The PassJoin guarantee is DIRECTIONAL — any pair within
     * `maxDist` contains one of the INDEX string's segments inside the
-    * probe string — so indexing the REFERENCE side's segments and
-    * probing the DELTA side's substrings is complete on its own; the
-    * only extra branch is reference strings shorter than d+1 chars
-    * (no segment guarantee), which pair through the valve-bounded
-    * nested-loop bucket against delta strings of length <= 2d
-    * (delta-shorts against longer references are already covered by
-    * the delta probes, whose l range starts at d+1). Same valves and
-    * probe gates as the self-join. Output: distinct (new_id, ref_id),
+    * probe string — so the [[passJoin]] core indexes the REFERENCE
+    * side's [[edSegments]] and probes the DELTA side: complete on its
+    * own (reference shorts pair through the core's short bucket; delta
+    * shorts against longer references are covered by the delta probes,
+    * whose l range starts at d+1). Same valves as the self-join; the
+    * reference segment frame and the delta strings are each persisted
+    * once (one scan per side). Output: distinct (new_id, ref_id),
     * exact-verified. */
   def editDistancePairsBetween(newDf: DataFrame, refDf: DataFrame,
       idCol: String, strCol: String, maxDist: Int = 1): DataFrame = {
     val d = maxDist
     require(d >= 1 && d <= 4,
       s"editDistancePairsBetween: maxDist in [1,4], got $d")
-    val refBase = tracked(edBase(refDf, idCol, strCol).persist())
+    val refIndex =
+      tracked(edSegments(edBase(refDf, idCol, strCol), d).persist())
     val newBase = tracked(edBase(newDf, idCol, strCol).persist())
-    val seg = edSegFrame(refBase, d)
-    val probe = edProbeFrame(newBase, d)
-    val maxCand = newDf.sparkSession.conf
-      .getOption("spark.graft.editdist.maxCandidatePairs")
-      .map(_.toLong).getOrElse(2000000000L)
-    val worstPerPair = (d + 1).toDouble * (2 * d + 1) * (2 * d + 1) *
-      (d + 1)
-    val safeN = math.sqrt(maxCand.toDouble / worstPerPair).toLong
-    val provablySmall = maxCand > 0 && safeN > 0 &&
-      safeN < Int.MaxValue - 1 &&
-      refBase.limit(safeN.toInt + 1).count() <= safeN &&
-      newBase.limit(safeN.toInt + 1).count() <= safeN
-    if (maxCand > 0 && !provablySmall) {
-      val candVol = seg.groupBy("l", "k", "sub")
-        .agg(count(lit(1)).as("__ns"))
-        .join(probe.groupBy("l", "k", "sub")
-          .agg(count(lit(1)).as("__np")), Seq("l", "k", "sub"))
-        .agg(coalesce(sum(col("__ns").cast("double") * col("__np")),
-          lit(0.0)).as("cand")).head().getDouble(0)
-      if (candVol > maxCand) throw new IllegalStateException(
-        f"editDistancePairsBetween: segment-join candidate volume " +
-          f"$candVol%.3g exceeds " +
-          s"spark.graft.editdist.maxCandidatePairs=$maxCand — shared " +
-          "prefixes/suffixes are concentrating the (length, segment) " +
-          "buckets. Strip common boilerplate first, exact-dedup the " +
-          "delta before the fuzzy pass, lower maxDist, or raise the " +
-          "valve (0 disables).")
-    }
-    val longCand = seg.join(probe, Seq("l", "k", "sub"))
-      .select(col("id_p").as("new_id"), col("id_i").as("ref_id"))
-    val shortLimit = newDf.sparkSession.conf
-      .getOption("spark.graft.editdist.shortBucketLimit")
-      .map(_.toLong).getOrElse(10000L)
-    val valveOff = shortLimit <= 0 || shortLimit >= Int.MaxValue - 1
-    val refShorts = refBase.where(col("n") <= d)
-    val nShort =
-      if (valveOff) 1L else refShorts.limit(shortLimit.toInt + 1).count()
-    val nPartner =
-      if (valveOff || nShort == 0) 0L
-      else newBase.where(col("n") <= 2 * d)
-        .limit(shortLimit.toInt + 1).count()
-    require(valveOff ||
-      (nShort <= shortLimit && nPartner <= shortLimit),
-      s"editDistancePairsBetween: the short-string bucket (ref len " +
-        s"<= $d vs delta len <= ${2 * d}) exceeds $shortLimit rows on " +
-        "a side — its nested-loop product would dominate. Filter " +
-        "degenerate strings out first, or raise " +
-        "spark.graft.editdist.shortBucketLimit (0 disables the valve).")
-    val cand =
-      if (nShort == 0) longCand
-      else {
-        val shortCand = refShorts.as("r")
-          .join(newBase.where(col("n") <= 2 * d).as("p"),
-            abs(col("r.n") - col("p.n")) <= d)
-          .select(col("p.id").as("new_id"), col("r.id").as("ref_id"))
-        longCand.unionByName(shortCand)
-      }
-    val strsN = newBase.select(col("id").as("new_id"),
-      col("s").as("__sn"))
-    val strsR = refBase.select(col("id").as("ref_id"),
-      col("s").as("__sr"))
-    autoRelease(cand.distinct()
-      .join(strsN, "new_id").join(strsR, "ref_id")
-      .where(levenshtein(col("__sn"), col("__sr")) <= d)
-      .select("new_id", "ref_id"), refBase, newBase)
+    autoRelease(
+      passJoin("editDistancePairsBetween", refIndex, newBase, d,
+        self = false)
+        .select(col("id_p").as("new_id"), col("id_i").as("ref_id")),
+      refIndex, newBase)
   }
 
   /** PassJoin segment STORE for the reference corpus: the persistable
@@ -826,15 +778,17 @@ object Dedup {
     * reference strings per ingest (the q230/q244/q246 store story for
     * the edit-distance family).
     *
-    * SELF-SUFFICIENT like the simhash chunk store: the reference
-    * string `s` rides with its segments, so the exact-levenshtein
-    * verify reads the store and the reference corpus is NEVER
-    * re-scanned — at the price of (d+1)× string duplication, the
-    * right trade for the short code/title/name fields PassJoin is
-    * built for. Reference strings shorter than d+1 chars have no
-    * segment guarantee and ride as one `k = -1` row (`sub` null, `l`
-    * = length) so the store is complete on its own: the precomputed
-    * face replays the short-bucket branch from the store too.
+    * It is the [[edSegments]] frame the cross-frame face indexes on the
+    * fly, plus the build stamp. SELF-SUFFICIENT like the simhash chunk
+    * store: the reference string `s` rides with its segments, so the
+    * exact-levenshtein verify reads the store and the reference corpus
+    * is NEVER re-scanned — at the price of (d+1)× string duplication,
+    * the right trade for the short code/title/name fields PassJoin is
+    * built for. Reference strings shorter than d+1 chars ride as one
+    * `k = -1` row (`sub` null, `l` = length), so the store is complete
+    * on its own: the precomputed face replays the short bucket from it.
+    * Appending batches is safe, also when an id reappears with another
+    * string: the verify runs per stored string.
     *
     * Schema: (id, l, k, sub, s, p_maxdist) — `p_maxdist` stamps the
     * build parameter and the precomputed face REQUIRES it to match
@@ -845,128 +799,41 @@ object Dedup {
     val d = maxDist
     require(d >= 1 && d <= 4,
       s"editDistanceSegmentStore: maxDist in [1,4], got $d")
-    val base = edBase(refDf, idCol, strCol)
-    val parts = lit(d + 1)
-    val segs = base.where(col("n") >= d + 1)
-      .select(col("id"), col("s"), col("n"),
-        explode(sequence(lit(0), lit(d))).as("k"))
-      .withColumn("st", floor(col("k") * col("n") / parts).cast("int"))
-      .withColumn("en",
-        floor((col("k") + 1) * col("n") / parts).cast("int"))
-      .select(col("id"), col("n").as("l"), col("k"),
-        col("s").substr(col("st") + 1, col("en") - col("st")).as("sub"),
-        col("s"))
-    val shorts = base.where(col("n") <= d)
-      .select(col("id"), col("n").as("l"), lit(-1).as("k"),
-        lit(null).cast("string").as("sub"), col("s"))
-    segs.unionByName(shorts)
+    edSegments(edBase(refDf, idCol, strCol), d)
       .withColumn("p_maxdist", lit(d))
   }
 
   /** CROSS-FRAME edit-distance near-dup against a PRECOMPUTED segment
-    * store ([[editDistanceSegmentStore]]): per-batch cost scales with
-    * the delta — the delta side segments/probes per call, the
-    * reference side is read back as saved (l, k, sub) rows and its
-    * strings ride the store into the verify, never a reference
-    * re-scan. Output is exactly [[editDistancePairsBetween]]'s
-    * distinct (new_id, ref_id), same valves (the candidate-volume
-    * estimate aggregates the SAVED segment frame — a narrow
-    * columnar scan — against the delta probes). */
+    * store ([[editDistanceSegmentStore]]): the [[passJoin]] core with
+    * the saved store as its index, so per-batch cost scales with the
+    * delta — the delta side probes per call, the reference side is read
+    * back as saved (l, k, sub) rows and its strings ride the store into
+    * the verify, never a reference re-scan. Output is exactly
+    * [[editDistancePairsBetween]]'s distinct (new_id, ref_id), same
+    * valves (the candidate-volume estimate aggregates the SAVED segment
+    * frame — a narrow columnar scan — against the delta probes). The
+    * store must carry (id, l, k, sub, s), and its `p_maxdist` stamp,
+    * when present, must equal `maxDist`. */
   def editDistancePairsBetweenPrecomputed(newDf: DataFrame,
       refStore: DataFrame, idCol: String, strCol: String,
       maxDist: Int = 1): DataFrame = {
     val d = maxDist
     require(d >= 1 && d <= 4,
       s"editDistancePairsBetweenPrecomputed: maxDist in [1,4], got $d")
+    require(Seq("id", "l", "k", "sub", "s").forall(refStore.columns.contains),
+      "editDistancePairsBetweenPrecomputed: refStore needs (id, l, k, " +
+        "sub, s) — an editDistanceSegmentStore frame; got " +
+        refStore.columns.mkString("(", ", ", ")"))
     requireStoreParams(refStore, "editDistancePairsBetweenPrecomputed",
       "p_maxdist" -> d)
     val newBase = tracked(edBase(newDf, idCol, strCol).persist())
-    val seg = refStore.where(col("k") >= 0)
-      .select(col("id").as("id_i"), col("l"), col("k"), col("sub"),
-        col("s").as("__sr"))
-    val probe = edProbeFrame(newBase, d)
-    val maxCand = newDf.sparkSession.conf
-      .getOption("spark.graft.editdist.maxCandidatePairs")
-      .map(_.toLong).getOrElse(2000000000L)
-    val worstPerPair = (d + 1).toDouble * (2 * d + 1) * (2 * d + 1) *
-      (d + 1)
-    val safeN = math.sqrt(maxCand.toDouble / worstPerPair).toLong
-    // the store has up to d+1 rows per reference string, so bounding
-    // STORE rows under safeN is strictly tighter than bounding base
-    // rows — the small-fixture fast path stays safe
-    val provablySmall = maxCand > 0 && safeN > 0 &&
-      safeN < Int.MaxValue - 1 &&
-      refStore.limit(safeN.toInt + 1).count() <= safeN &&
-      newBase.limit(safeN.toInt + 1).count() <= safeN
-    if (maxCand > 0 && !provablySmall) {
-      val candVol = seg.groupBy("l", "k", "sub")
-        .agg(count(lit(1)).as("__ns"))
-        .join(probe.groupBy("l", "k", "sub")
-          .agg(count(lit(1)).as("__np")), Seq("l", "k", "sub"))
-        .agg(coalesce(sum(col("__ns").cast("double") * col("__np")),
-          lit(0.0)).as("cand")).head().getDouble(0)
-      if (candVol > maxCand) throw new IllegalStateException(
-        f"editDistancePairsBetweenPrecomputed: segment-join candidate " +
-          f"volume $candVol%.3g exceeds " +
-          s"spark.graft.editdist.maxCandidatePairs=$maxCand — shared " +
-          "prefixes/suffixes are concentrating the (length, segment) " +
-          "buckets. Strip common boilerplate first, exact-dedup the " +
-          "delta before the fuzzy pass, lower maxDist, or raise the " +
-          "valve (0 disables).")
-    }
-    val longCand = seg.join(probe, Seq("l", "k", "sub"))
-      .select(col("id_p").as("new_id"), col("id_i").as("ref_id"),
-        col("__sr"))
-    val shortLimit = newDf.sparkSession.conf
-      .getOption("spark.graft.editdist.shortBucketLimit")
-      .map(_.toLong).getOrElse(10000L)
-    val valveOff = shortLimit <= 0 || shortLimit >= Int.MaxValue - 1
-    val refShorts = refStore.where(col("k") < 0)
-      .select(col("id").as("ref_id"), col("l").as("__rn"),
-        col("s").as("__sr"))
-    val nShort =
-      if (valveOff) 1L else refShorts.limit(shortLimit.toInt + 1).count()
-    val nPartner =
-      if (valveOff || nShort == 0) 0L
-      else newBase.where(col("n") <= 2 * d)
-        .limit(shortLimit.toInt + 1).count()
-    require(valveOff ||
-      (nShort <= shortLimit && nPartner <= shortLimit),
-      s"editDistancePairsBetweenPrecomputed: the short-string bucket " +
-        s"(ref len <= $d vs delta len <= ${2 * d}) exceeds " +
-        s"$shortLimit rows on a side — its nested-loop product would " +
-        "dominate. Filter degenerate strings out first, or raise " +
-        "spark.graft.editdist.shortBucketLimit (0 disables the valve).")
-    val cand =
-      if (nShort == 0) longCand
-      else {
-        val shortCand = refShorts
-          .join(newBase.where(col("n") <= 2 * d).as("p"),
-            abs(col("__rn") - col("p.n")) <= d)
-          .select(col("p.id").as("new_id"), col("ref_id"), col("__sr"))
-        longCand.unionByName(shortCand)
-      }
-    val strsN = newBase.select(col("id").as("new_id"),
-      col("s").as("__sn"))
-    // __sr is functionally determined by ref_id, so deduping on the id
-    // pair keeps one ridden string per candidate
-    autoRelease(cand.dropDuplicates("new_id", "ref_id")
-      .join(strsN, "new_id")
-      .where(levenshtein(col("__sn"), col("__sr")) <= d)
-      .select("new_id", "ref_id"), newBase)
+    autoRelease(
+      passJoin("editDistancePairsBetweenPrecomputed", refStore, newBase, d,
+        self = false)
+        .select(col("id_p").as("new_id"), col("id_i").as("ref_id")),
+      newBase)
   }
 
-  /** SimHash near-duplicate pairs within `maxHamming` bit flips, using the
-    * band trick: split the fingerprint into maxHamming+1 chunks — any pair
-    * within the radius must agree exactly on at least one chunk (pigeonhole)
-    * — join per chunk, then verify the true Hamming distance.
-    *
-    * Scale shape: 60-bit fingerprints by default, so with maxHamming=3 the
-    * 4 chunk keys are 15 bits wide (2^15 buckets per chunk — candidate
-    * volume ∝ 4·n²/2^15, vs n²/16 at the old 16-bit/4-bit layout). All
-    * chunks come from ONE struct-explode pass over the fingerprint frame,
-    * and the hamming verify runs BEFORE the distinct so only surviving
-    * pairs shuffle through the dedup exchange. */
   /** The (id, simhash, chunk, key) pigeonhole-chunk frame shared by
     * the self-join and cross-frame simhash paths — one struct-explode
     * pass over the fingerprint frame. */
@@ -991,6 +858,17 @@ object Dedup {
         col("ck.chunk").as("chunk"), col("ck.key").as("key"))
   }
 
+  /** SimHash near-duplicate pairs within `maxHamming` bit flips, using the
+    * band trick: split the fingerprint into maxHamming+1 chunks — any pair
+    * within the radius must agree exactly on at least one chunk (pigeonhole)
+    * — join per chunk, then verify the true Hamming distance.
+    *
+    * Scale shape: 60-bit fingerprints by default, so with maxHamming=3 the
+    * 4 chunk keys are 15 bits wide (2^15 buckets per chunk — candidate
+    * volume ∝ 4·n²/2^15, vs n²/16 at the old 16-bit/4-bit layout). All
+    * chunks come from ONE struct-explode pass over the fingerprint frame,
+    * and the hamming verify runs BEFORE the distinct so only surviving
+    * pairs shuffle through the dedup exchange. */
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
       bits: Int = 60, maxHamming: Int = 3): DataFrame =
     hammingNearDup(

@@ -34,8 +34,6 @@ object Similarity {
     when(denom === 0.0, lit(0.0)).otherwise(d / denom)
   }
 
-  /** Cosine from a precomputed dot and squared norms (so norms are
-    * computed once per row, not once per candidate pair). */
   /** Empty-safe embedding-dimension probe: the first non-null
     * vector's length, or None on an empty / all-null-vector frame —
     * the eager `.head()` form threw NoSuchElementException on an
@@ -46,6 +44,8 @@ object Similarity {
     df.select(size(col(vecCol)).as("__d")).where(col("__d").isNotNull)
       .limit(1).collect().headOption.map(_.getInt(0))
 
+  /** Cosine from a precomputed dot and squared norms (so norms are
+    * computed once per row, not once per candidate pair). */
   private def cosineFromParts(d: Column, nsqA: Column, nsqB: Column): Column = {
     val denom = sqrt(nsqA) * sqrt(nsqB)
     when(denom === 0.0, lit(0.0)).otherwise(d / denom)
@@ -502,18 +502,6 @@ object Similarity {
       struct(cosine(vec, plane).as("c"), lit(-cid).as("nid"))
     }: _*)
 
-  /** Full IVF (inverted-file) ANN search: every corpus vector lives in
-    * exactly ONE cell (its nearest centroid); every query probes its
-    * `nprobe` nearest cells; candidates meet on a cell-id equi-join and
-    * exact cosine re-ranks. Like `lshTopK` this is approximate (recall
-    * depends on nprobe / centroid quality) but the plan is the 100 TB
-    * shape: assignment is shuffle-free (centroid constants are folded into
-    * codegen), the only joins are a broadcast of the probed queries and a
-    * cell-key equi-join — never |corpus|·|queries|.
-    *
-    * `centroids` must be broadcast-small (they are collected to the driver
-    * and embedded as literals, exactly like the LSH plane constants).
-    * Output: (query_id, neighbor_id, rank). */
   /** Collect a broadcast-small centroid frame to sorted driver
     * literals (the LSH-plane constant discipline). */
   private def collectCentroids(centroids: DataFrame, idCol: String,
@@ -540,6 +528,18 @@ object Similarity {
     java.nio.ByteBuffer.wrap(md.digest(), 0, 4).getInt & 0x7fffffff
   }
 
+  /** Full IVF (inverted-file) ANN search: every corpus vector lives in
+    * exactly ONE cell (its nearest centroid); every query probes its
+    * `nprobe` nearest cells; candidates meet on a cell-id equi-join and
+    * exact cosine re-ranks. Like `lshTopK` this is approximate (recall
+    * depends on nprobe / centroid quality) but the plan is the 100 TB
+    * shape: assignment is shuffle-free (centroid constants are folded into
+    * codegen), the only joins are a broadcast of the probed queries and a
+    * cell-key equi-join — never |corpus|·|queries|.
+    *
+    * `centroids` must be broadcast-small (they are collected to the driver
+    * and embedded as literals, exactly like the LSH plane constants).
+    * Output: (query_id, neighbor_id, rank). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, k: Int, nprobe: Int = 4)
       : DataFrame = {

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DataPipelineOpsSpec extends SparkSpec {
@@ -770,6 +771,135 @@ class DataPipelineOpsSpec extends SparkSpec {
       assert(n == brute && brute > 0L)
     } finally
       spark.conf.unset("spark.graft.editdist.maxCandidatePairs")
+  }
+
+  test("editDistance candidate valve names the Between and store " +
+      "faces and keeps the remedy") {
+    val docs = (0 until 40).map(i => (i.toLong, f"p$i%03d-alpha"))
+      .toDF("doc_id", "s")
+    val ref = docs.where($"doc_id" < 20)
+    val neu = docs.where($"doc_id" >= 20)
+    spark.conf.set("spark.graft.editdist.maxCandidatePairs", "100")
+    try {
+      val faces = Seq[(String, () => Any)](
+        "editDistancePairsBetween:" -> (() => graft.ops.Dedup
+          .editDistancePairsBetween(neu, ref, "doc_id", "s", 1).count()),
+        "editDistancePairsBetweenPrecomputed:" -> (() => graft.ops.Dedup
+          .editDistancePairsBetweenPrecomputed(neu,
+            graft.ops.Dedup.editDistanceSegmentStore(ref, "doc_id", "s", 1),
+            "doc_id", "s", 1).count()))
+      for ((face, run) <- faces) {
+        val ex = intercept[IllegalStateException](run())
+        assert(ex.getMessage.startsWith(face) &&
+          ex.getMessage.contains("maxCandidatePairs") &&
+          ex.getMessage.contains("boilerplate"), ex.getMessage)
+      }
+    } finally
+      spark.conf.unset("spark.graft.editdist.maxCandidatePairs")
+    graft.ops.Dedup.releaseCaches()
+  }
+
+  test("PassJoin faces agree on duplicate ids: a pair qualifies when " +
+      "any string of one id is within maxDist of any string of the " +
+      "other, and each id pair is output once") {
+    // each new id j carries two strings, both within 1 edit of ref id
+    // 20+j's last string; ref id 20+j also carries three strings that
+    // share a segment with the new strings but sit 2 edits away. The
+    // store is appended in two batches, so one ref id has several
+    // store strings and the qualifying one arrives last.
+    val neu = (0 until 10).flatMap { j =>
+      Seq((j.toLong, s"$j${j}ac"), (j.toLong, s"$j${j}bb"))
+    }.toDF("doc_id", "s")
+    val refBad = (0 until 10).flatMap { j =>
+      Seq("xy", "yx", "zz").map(t => ((20 + j).toLong, s"$j$j$t"))
+    }.toDF("doc_id", "s")
+    val refGood = (0 until 10)
+      .map(j => ((20 + j).toLong, s"$j${j}ab")).toDF("doc_id", "s")
+    val ref = refBad.unionByName(refGood)
+    def brute(a: DataFrame, b: DataFrame, self: Boolean) =
+      a.as("x").crossJoin(b.as("y"))
+        .where(levenshtein($"x.s", $"y.s") <= 1 &&
+          (if (self) $"x.doc_id" < $"y.doc_id" else lit(true)))
+        .select($"x.doc_id", $"y.doc_id").distinct()
+        .as[(Long, Long)].collect().toSeq.sorted
+    val want = (0 until 10).map(j => (j.toLong, (20 + j).toLong))
+    val all = neu.unionByName(ref)
+    assert(brute(all, all, self = true) == want)
+    assert(brute(neu, ref, self = false) == want)
+    val store = graft.ops.Dedup.editDistanceSegmentStore(
+      refBad, "doc_id", "s", 1).unionByName(
+      graft.ops.Dedup.editDistanceSegmentStore(refGood, "doc_id", "s", 1))
+    val got = Seq(
+      "self" -> graft.ops.Dedup.editDistancePairs(all, "doc_id", "s", 1),
+      "between" -> graft.ops.Dedup.editDistancePairsBetween(
+        neu, ref, "doc_id", "s", 1),
+      "store" -> graft.ops.Dedup.editDistancePairsBetweenPrecomputed(
+        neu, store, "doc_id", "s", 1))
+      .map { case (face, df) =>
+        face -> df.as[(Long, Long)].collect().toSeq.sorted }
+    val wrong = got.filter(_._2 != want)
+    assert(wrong.isEmpty, wrong.map { case (face, pairs) =>
+      s"$face: ${pairs.mkString(" ")}" }.mkString("; "))
+    graft.ops.Dedup.releaseCaches()
+  }
+
+  test("editDistancePairsBetweenPrecomputed rejects a store without " +
+      "its (id, l, k, sub, s) columns, naming the face") {
+    val ref = Seq((1L, "prod-alpha"), (2L, "x")).toDF("doc_id", "s")
+    val store = graft.ops.Dedup.editDistanceSegmentStore(
+      ref, "doc_id", "s", 1)
+    val ex = intercept[IllegalArgumentException] {
+      graft.ops.Dedup.editDistancePairsBetweenPrecomputed(
+        ref, store.drop("s"), "doc_id", "s", 1)
+    }
+    assert(ex.getMessage.contains("editDistancePairsBetweenPrecomputed") &&
+      ex.getMessage.contains("(id, l, k, sub, s)") &&
+      ex.getMessage.contains("editDistanceSegmentStore"), ex.getMessage)
+  }
+
+  test("PassJoin plan build launches at most the probe jobs of each " +
+      "face (limit probes, the store stamp read; no estimate on a " +
+      "small input)") {
+    val all = Seq(
+      (1L, "prod-alpha"), (2L, "prod-alphA"), (3L, "prod-alpha7"),
+      (4L, "prod-alph"), (5L, "prod-beta"), (6L, "x"), (7L, "xy"),
+      (8L, ""), (9L, "prod-alpha"), (10L, "entirely-else")
+    ).toDF("doc_id", "s")
+    val ref = all.where($"doc_id" < 6 || $"doc_id" === 8L)
+    val neu = all.where($"doc_id" >= 6 && $"doc_id" =!= 8L)
+    val longs = all.where(length($"s") > 2)
+    val store = graft.ops.Dedup.editDistanceSegmentStore(
+      ref, "doc_id", "s", 1)
+    val longStore = graft.ops.Dedup.editDistanceSegmentStore(
+      longs, "doc_id", "s", 1)
+    // budgets: the plan-build job counts of the three separate face
+    // bodies that preceded the shared core, measured on these inputs,
+    // but for the one case marked below
+    val faces = Seq[(String, Int, () => DataFrame)](
+      ("self", 7, () =>
+        graft.ops.Dedup.editDistancePairs(all, "doc_id", "s", 1)),
+      ("self, no shorts", 5, () =>
+        graft.ops.Dedup.editDistancePairs(longs, "doc_id", "s", 1)),
+      ("between", 10, () => graft.ops.Dedup.editDistancePairsBetween(
+        neu, ref, "doc_id", "s", 1)),
+      ("between, no shorts", 8, () => graft.ops.Dedup
+        .editDistancePairsBetween(longs.where($"doc_id" >= 5),
+          longs.where($"doc_id" < 5), "doc_id", "s", 1)),
+      // the one exception, 7 against 6: the separate bodies persisted
+      // two identical (id, s, n) bases here, which shared one cache;
+      // the core persists the reference segment frame, a second cache
+      ("between, one frame on both sides", 7, () => graft.ops.Dedup
+        .editDistancePairsBetween(longs, longs, "doc_id", "s", 1)),
+      ("store", 9, () => graft.ops.Dedup
+        .editDistancePairsBetweenPrecomputed(neu, store, "doc_id", "s", 1)),
+      ("store, no shorts", 7, () => graft.ops.Dedup
+        .editDistancePairsBetweenPrecomputed(longs, longStore, "doc_id",
+          "s", 1)))
+    for ((face, limit, build) <- faces) {
+      val (_, jobs) = jobsIn(build())
+      assert(jobs <= limit, s"$face: $jobs plan-build jobs > $limit")
+    }
+    graft.ops.Dedup.releaseCaches()
   }
 
   test("normalizeUrl canonicalizes equivalent spellings and keeps " +

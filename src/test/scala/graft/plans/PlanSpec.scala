@@ -225,6 +225,36 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.editdist.shortBucketLimit")
   }
 
+  test("editDistancePairsBetween and the store face: the short " +
+      "bucket is planned when reference shorts exist and the valve " +
+      "names the face") {
+    import spark.implicits._
+    val withShorts = Seq((1L, "x"), (2L, "y"), (3L, "prod-long-code"))
+      .toDF("doc_id", "code")
+    val store = graft.ops.Dedup.editDistanceSegmentStore(
+      withShorts, "doc_id", "code", 1)
+    val faces = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "editDistancePairsBetween:" -> (() => graft.ops.Dedup
+        .editDistancePairsBetween(withShorts, withShorts, "doc_id",
+          "code", 1)),
+      "editDistancePairsBetweenPrecomputed:" -> (() => graft.ops.Dedup
+        .editDistancePairsBetweenPrecomputed(withShorts, store, "doc_id",
+          "code", 1)))
+    for ((_, build) <- faces)
+      assert(explain(build()).contains("BroadcastNestedLoopJoin"))
+    spark.conf.set("spark.graft.editdist.shortBucketLimit", "1")
+    try {
+      for ((face, build) <- faces) {
+        val err = intercept[IllegalArgumentException](build())
+        assert(err.getMessage.contains(face) &&
+          err.getMessage.contains("shortBucketLimit") &&
+          err.getMessage.contains("Filter degenerate strings"),
+          err.getMessage)
+      }
+    } finally spark.conf.unset("spark.graft.editdist.shortBucketLimit")
+    graft.ops.Dedup.releaseCaches()
+  }
+
   test("minhashLshPairsBetween: band equi-join, no nested loop; " +
       "domainPercentileFilter: thresholds broadcast back") {
     val docs = graft.sources.Tables.table(spark, sf, "documents")
