@@ -44,6 +44,7 @@ object ScaleProbe {
     val spark = Sessions.local(32)
     spark.range(5000000L).selectExpr("sum(id)").collect()
     import graft.ops.{Dedup, Sampling}
+    import graft.queries.Fixtures.scratchDir
     def docs = spark.read.parquet(s"$dir/documents.parquet")
     // ONE-TIME fixtures shared across reps (r14 ask 8: the 100x gate
     // pays the OP per rep, not the fixture) — lazy, built on the
@@ -51,8 +52,7 @@ object ScaleProbe {
     // includes the build, use later reps for the op cost.
     lazy val mergeFixture: (String, String, Long) = {
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-mergefix").toString
+      val tmp = scratchDir("graft-mergefix").toString
       val tB = System.nanoTime()
       Dedup.minhashLshPairs(docs, "doc_id", "text", 3, 12, 4)
         .write.mode("overwrite").parquet(s"$tmp/pairs")
@@ -70,8 +70,7 @@ object ScaleProbe {
     }
     lazy val curateFixture: (String, String, String, Long) = {
       import org.apache.spark.sql.functions._
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-curatefix").toString
+      val tmp = scratchDir("graft-curatefix").toString
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
         .withColumn("quality", (col("vec_id") * 37 % 101).cast("long"))
       val planes = if (cap > 0) cap.toInt else 12
@@ -115,8 +114,7 @@ object ScaleProbe {
           val (tr, te) = Sampling.clusterAwareSplit(d, "doc_id", pairs, 0.3)
           tr.count() + te.count()
         case "sdedup" =>
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft-sdedup").toString
+          val tmp = scratchDir("graft-sdedup").toString
           val ev = spark.read.parquet(s"$dir/events.parquet")
             .select("event_id", "event_type", "ts")
           ev.write.parquet(s"$tmp/src")
@@ -369,8 +367,7 @@ object ScaleProbe {
           val nRecompute = Dedup.minhashLshPairsBetween(
             delta, docs, "doc_id", "text", 3, 12, 4).count()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-bandstore-probe").toString
+          val store = scratchDir("graft-bandstore-probe").toString
           val t2 = System.nanoTime()
           Dedup.minhashBandSignatures(docs, "doc_id", "text", 3, 12, 4)
             .write.mode("overwrite").partitionBy("band").parquet(store)
@@ -407,8 +404,7 @@ object ScaleProbe {
           val nRecompute = Dedup.editDistancePairsBetween(
             delta, coded, "doc_id", "code", 1).count()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-edstore-probe").toString
+          val store = scratchDir("graft-edstore-probe").toString
           val t2 = System.nanoTime()
           Dedup.editDistanceSegmentStore(coded, "doc_id", "code", 1)
             .write.mode("overwrite").partitionBy("k").parquet(store)
@@ -441,8 +437,7 @@ object ScaleProbe {
               exact = true)
             .where(col("doc_id") < 200).count()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-histstore-probe").toString
+          val store = scratchDir("graft-histstore-probe").toString
           val t2 = System.nanoTime()
           graft.ops.Curation.domainScoreHistogram(prior, "source",
               "n_chars")
@@ -474,8 +469,7 @@ object ScaleProbe {
           val oneShot = TextSearch.bm25(docs, "doc_id", "text",
             terms, k = 20).select("doc_id", "matched").collect()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-bm25-probe").toString
+          val store = scratchDir("graft-bm25-probe").toString
           val t2 = System.nanoTime()
           val idx = TextSearch.bm25Index(docs, "doc_id", "text")
           idx.postings.write.mode("overwrite").partitionBy("bkt")
@@ -510,8 +504,7 @@ object ScaleProbe {
           val viaFull = Similarity.ivfTopK(e, queries, "vec_id",
             "embedding", cents, k = 10, nprobe = 4).collect()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-ivf-probe").toString
+          val store = scratchDir("graft-ivf-probe").toString
           val t2 = System.nanoTime()
           Similarity.ivfCellSignatures(e, "vec_id", "embedding", cents)
             .write.mode("overwrite").partitionBy("cell").parquet(store)
@@ -544,8 +537,7 @@ object ScaleProbe {
             prior.unionByName(delta), "doc_id", "text", "source")
             .collect()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-report-probe").toString
+          val store = scratchDir("graft-report-probe").toString
           val t2 = System.nanoTime()
           val sc0 = graft.ops.Curation.corpusReportSidecars(prior,
             "doc_id", "text", "source")
@@ -586,8 +578,7 @@ object ScaleProbe {
             "embedding", cb, dim = 64, m = 4, k = 10)
             .select("query_id", "neighbor_id", "rank").collect()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-pq-probe").toString
+          val store = scratchDir("graft-pq-probe").toString
           val t2 = System.nanoTime()
           Quantize.pqCodeSignatures(e, "vec_id", "embedding", cb,
               dim = 64, m = 4)
@@ -627,8 +618,7 @@ object ScaleProbe {
             delta, e, "vec_id", "embedding", thr,
             blockTables = 4, blockPlanes = planes, dim = 64).count()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-vecstore-probe").toString
+          val store = scratchDir("graft-vecstore-probe").toString
           val t2 = System.nanoTime()
           Dedup.vectorBucketSignatures(e, "vec_id", "embedding",
               blockTables = 4, blockPlanes = planes, dim = 64)
@@ -813,8 +803,7 @@ object ScaleProbe {
             "vec_id", "embedding", k = 4, minMargin = margin,
             nPlanes = planes, tables = 8, dim = 64).count()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-bitextstore-probe").toString
+          val store = scratchDir("graft-bitextstore-probe").toString
           val t2 = System.nanoTime()
           Dedup.vectorBucketSignatures(e, "vec_id", "embedding",
               blockTables = 8, blockPlanes = planes, dim = 64)
@@ -848,8 +837,7 @@ object ScaleProbe {
           val nRec = graft.ops.Multimodal.mediaNearDupBetween(delta,
             graft.ops.Multimodal.mediaChunkSignatures(ref)).count()
           val tRec = (System.nanoTime() - t1) / 1e9
-          val store = java.nio.file.Files
-            .createTempDirectory("graft-mediastore-probe").toString
+          val store = scratchDir("graft-mediastore-probe").toString
           val t2 = System.nanoTime()
           graft.ops.Multimodal.mediaChunkSignatures(ref)
             .write.mode("overwrite").partitionBy("chunk")

@@ -26,8 +26,9 @@ object Dedup {
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
   private def tracked(df: DataFrame): DataFrame = { cachedFrames.add(df); df }
   /** Persist + track under [[releaseCaches]] — the shared-subplan reuse
-    * discipline for sibling ops packages (Decontaminate, Curation). */
-  private[ops] def trackedPersist(df: DataFrame): DataFrame =
+    * discipline for sibling ops packages (Decontaminate, Curation) and
+    * the per-batch caches of the streaming store loops. */
+  private[graft] def trackedPersist(df: DataFrame): DataFrame =
     tracked(df.persist())
   /** [[autoRelease]] for sibling ops packages. */
   private[ops] def releaseOnMaterialize(result: DataFrame,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Decontaminate, Similarity, TextFunctions, Multimodal,
   Chunking, Redaction, LanguageModel, Dsir, Classifier, Sampling}
+import graft.sources.Tables.storeWrite
 
 import Fixtures._
 import Oracles._

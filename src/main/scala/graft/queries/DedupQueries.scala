@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, TextFunctions, Multimodal}
+import graft.sources.Tables.storeWrite
 
 import Fixtures._
 import Oracles._

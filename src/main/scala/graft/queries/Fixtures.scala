@@ -7,7 +7,8 @@ import org.apache.spark.sql.types._
 import graft.db.GraftSession
 
 /** Fixture helpers shared across the query families: table and
-  * collection handles, scratch dirs, store writes and overlapped writes. */
+  * collection handles, scratch dirs and overlapped writes. Partitioned
+  * store writes are [[graft.sources.Tables.storeWrite]]. */
 private[graft] object Fixtures {
 
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
@@ -37,32 +38,6 @@ private[graft] object Fixtures {
     val p = java.nio.file.Files.createTempDirectory(prefix)
     scratchDirs.add(p)
     p
-  }
-
-  /** Partitioned store write, clustered by the partition column first
-    * (r15, guide §6): a `partitionBy(c)` write from N shuffle tasks
-    * opens up to N parquet writers PER partition value — 32 tasks ×
-    * 256 bm25 buckets is ~8k tiny files per store write, and the
-    * read-back pays the footer/open cost again. One hash exchange on
-    * the partition column makes each value land in exactly one task:
-    * one file per partition value, the layout a 100 TB store wants
-    * (bigger files, fewer of them; key-prunable reads unchanged). */
-  def storeWrite(df: DataFrame,
-      partCol: String, path: String,
-      mode: String = "overwrite",
-      preClustered: Boolean = false): Unit = {
-    // EXPLICIT partition count: a bare repartition(col) lets AQE
-    // coalesce the (small) exchange to one task, which then writes
-    // every partition dir serially — measured 2.5x slower than the
-    // un-clustered write it was meant to fix. An explicit count is
-    // respected by AQE: values spread over the session's shuffle
-    // parallelism, each value still landing in exactly one task.
-    // preClustered (r16): frames whose producer already hash-clustered
-    // by the partition column (bm25Index postings) skip the redundant
-    // second exchange.
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val out = if (preClustered) df else df.repartition(n, col(partCol))
-    out.write.mode(mode).partitionBy(partCol).parquet(path)
   }
 
   /** Runs INDEPENDENT write actions concurrently (guide §2.6 "overlap

@@ -1,10 +1,15 @@
 package graft.streaming
 
+import scala.util.Try
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.SimpleMigration
 import graft.query.QueryCompiler
+import graft.sources.Tables.storeWrite
 import graft.update.UpdateCompiler
 
 /** Structured-Streaming extension of the migration engine.
@@ -70,20 +75,20 @@ object StreamingMigrations {
     * cluster admin's `spark.sql.shuffle.partitions` in charge; on a
     * small source it stops 32 near-empty state stores from costing
     * more than the data. `spark.graft.streaming.statePartitions`
-    * overrides the rule outright. */
+    * overrides the rule outright. A source whose size cannot be read
+    * (missing, unreadable) gets the session parallelism. */
   def statePartitionsFor(spark: SparkSession, srcPath: String,
       targetBytes: Long = 64L << 20): Int =
     spark.conf.getOption("spark.graft.streaming.statePartitions")
       .map(_.toInt).getOrElse {
-        val p = new org.apache.hadoop.fs.Path(srcPath)
-        val bytes =
-          try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val cap = spark.sessionState.conf.numShufflePartitions
+        val p = new Path(srcPath)
+        try {
+          val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .getContentSummary(p).getLength
-          catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-        val bySize = math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-        math.min(
-          spark.sessionState.conf.numShufflePartitions.toLong,
-          bySize).toInt
+          math.min(cap.toLong,
+            math.max(1L, (bytes + targetBytes - 1) / targetBytes)).toInt
+        } catch { case NonFatal(_) => cap }
       }
 
   /** Run `f` with `spark.sql.shuffle.partitions` pinned to `n`,
@@ -123,36 +128,90 @@ object StreamingMigrations {
     ensureEventTime(stream, tsCol).withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
+  /** The one sink of the micro-batch store streams below. Every stream
+    * keeps the same contract, stated here once:
+    *  - each batch OVERWRITES its own `batch=N` subdirs (outputs and
+    *    store appends alike), so a retried batch replaces its output
+    *    instead of double-appending: exactly-once sinks under
+    *    foreachBatch's at-least-once contract;
+    *  - each batch reads priors only from batch ids STRICTLY BELOW its
+    *    own ([[priorBatches]]), so a retried batch re-derives from the
+    *    same priors it saw first;
+    *  - a store and its checkpoint are one unit of state: reset them
+    *    TOGETHER or not at all. After a checkpoint reset over a
+    *    retained store the batch ids restart at 0, and the strictly-
+    *    below rule makes early replayed batches see fewer priors than
+    *    the store holds (a loud undercount) instead of pairing against
+    *    stale higher-numbered batches (a silent double-count);
+    *  - each batch releases the [[graft.ops.Dedup]]-tracked caches it
+    *    made, in a `finally`, so a failed batch leaks none of them.
+    *    The release is process-global. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        try body(batch, batchId)
+        finally graft.ops.Dedup.releaseCaches()
+      }
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** Ascending ids of the `batch=<long>` directories under `root` whose
+    * id is strictly below `batchId` (the [[eachBatch]] contract); empty
+    * when `root` does not exist yet. Store readers read every listed
+    * batch; generation readers take the `.lastOption`; both read them
+    * back through [[readPrior]]. */
+  private def priorBatches(spark: SparkSession, root: String,
+      batchId: Long): Seq[Long] = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
+      .flatMap(s => Try(s.getPath.getName.stripPrefix("batch=").toLong)
+        .toOption)
+      .filter(_ < batchId).sorted
+  }
+
+  /** Read back the `batch=N` directories of `root` for `ids` (from
+    * [[priorBatches]]). */
+  private def readPrior(spark: SparkSession, root: String,
+      ids: Seq[Long]): DataFrame =
+    spark.read.parquet(ids.map(n => s"$root/batch=$n"): _*)
+
+  /** The pair streams' output: (new_id, ref_id, within_batch) under
+    * `pairsPath/batch=N`. Without a store yet, the cross side is the
+    * empty `within.limit(0)` — an empty frame with the CALLER'S id
+    * type (a long-typed literal frame would fail the union on
+    * string-keyed corpora). */
+  private def writePairs(within: DataFrame, cross: Option[DataFrame],
+      pairsPath: String, batchId: Long): Unit =
+    cross.getOrElse(within.limit(0)).withColumn("within_batch", lit(false))
+      .unionByName(within.withColumn("within_batch", lit(true)))
+      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
+
   /** Continuous quality filtering: score each arriving micro-batch of
     * documents against a BATCH-trained Naive-Bayes model (the
     * train-once / filter-forever shape of production data curation) and
-    * append rows clearing `minScore` to `outPath`. The per-batch work is
-    * a stream-static token equi-join + hash aggregate via `foreachBatch`
-    * — the standard pattern for joins-with-aggregation on streams; state
-    * is zero (each batch scores independently), so a 100 TB/day feed
-    * holds nothing but the model table. Returns the started query. */
+    * append rows clearing `minScorePerToken` to `outPath/batch=N`. The
+    * per-batch work is a stream-static token equi-join + hash aggregate
+    * via `foreachBatch` — the standard pattern for joins-with-aggregation
+    * on streams; state is zero (each batch scores independently), so a
+    * 100 TB/day feed holds nothing but the model table. Returns the
+    * started query. */
   def qualityFilterStream(stream: DataFrame, idCol: String,
       textCol: String, model: DataFrame, prior: DataFrame,
       outPath: String, checkpoint: String,
-      minScorePerToken: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Classifier
-          .scoreAgainst(batch, idCol, textCol, model, prior)
-          // per-token normalization: the raw sum scales with document
-          // length, so a length-free threshold is the usable knob
-          .where(col("score") / col("n_tokens") > minScorePerToken)
-          // one overwritten subdir per micro-batch: a RETRIED batch
-          // replaces its own output instead of double-appending, so the
-          // sink is exactly-once under foreachBatch's at-least-once
-          // contract (readers see it as a `batch` partition column)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      minScorePerToken: Double = 0.0): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      graft.ops.Classifier
+        .scoreAgainst(batch, idCol, textCol, model, prior)
+        // per-token normalization: the raw sum scales with document
+        // length, so a length-free threshold is the usable knob
+        .where(col("score") / col("n_tokens") > minScorePerToken)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+    }
 
   /** Continuous incremental near-dup against a PERSISTED signature
     * store — the streaming face of [[graft.ops.Dedup.minhashBandSignatures]]
@@ -167,73 +226,26 @@ object StreamingMigrations {
     * Pair output: (new_id, ref_id, within_batch) under
     * `pairsPath/batch=N`; store layout `storePath/batch=N/band=B`
     * (band-partitioned — the pruning layout
-    * [[graft.ops.Dedup.minhashBandSignatures]] prescribes). Both
-    * writes OVERWRITE their own `batch=` subdir, so a retried batch
-    * replaces its output instead of double-appending — exactly-once
-    * sinks under foreachBatch's at-least-once contract (the
-    * qualityFilterStream pattern). State is zero: the store IS the
-    * state, durable and shared. */
+    * [[graft.ops.Dedup.minhashBandSignatures]] prescribes). State is
+    * zero: the store IS the state, durable and shared. */
   def incrementalNearDupStream(stream: DataFrame, idCol: String,
       textCol: String, storePath: String, pairsPath: String,
       checkpoint: String, k: Int = 3, numPerms: Int = 12,
-      bands: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hadoop = new org.apache.hadoop.fs.Path(storePath)
-        val fs = hadoop.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        // prior bands = batch dirs with id STRICTLY BELOW this one —
-        // not merely "except this one". A retried batch must not dedup
-        // against its own half-written bands, AND a batch replayed
-        // after a checkpoint reset (batch ids restart at 0 while
-        // storePath retains old dirs) must not silently dedup against
-        // STALE higher-numbered batches and double-count pairs (r13
-        // advice finding). storePath and checkpoint are one unit of
-        // state: reset them TOGETHER or not at all — with a fresh
-        // checkpoint over a retained store, the < filter makes early
-        // replayed batches see fewer priors than the store holds,
-        // which is the loud-undercount failure, not the silent
-        // double-count one.
-        val priorDirs =
-          if (!fs.exists(hadoop)) Array.empty[String]
-          else fs.listStatus(hadoop)
-            .filter { s =>
-              val n = s.getPath.getName
-              s.isDirectory && n.startsWith("batch=") &&
-                scala.util.Try(n.stripPrefix("batch=").toLong)
-                  .toOption.exists(_ < batchId)
-            }
-            .map(_.getPath.toString)
-        val within = graft.ops.Dedup.minhashLshPairs(
-            batch, idCol, textCol, k, numPerms, bands)
-          .select(col("id_a").as("new_id"), col("id_b").as("ref_id"))
-        val cross =
-          if (priorDirs.isEmpty)
-            // first batch: no store yet — an empty frame with the
-            // CALLER'S id type (a long-typed literal frame would fail
-            // the union on string-keyed corpora)
-            within.limit(0)
-          else graft.ops.Dedup.minhashLshPairsBetweenPrecomputed(
-            batch, spark.read.parquet(priorDirs: _*),
-            idCol, textCol, k, numPerms, bands)
-        cross.withColumn("within_batch", lit(false))
-          .unionByName(within.withColumn("within_batch", lit(true)))
-          .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-        graft.ops.Dedup.minhashBandSignatures(
-            batch, idCol, textCol, k, numPerms, bands)
-          .repartition(batch.sparkSession.sessionState.conf
-            .numShufflePartitions,
-            org.apache.spark.sql.functions.col("band"))
-          .write.mode("overwrite").partitionBy("band")
-          .parquet(s"$storePath/batch=$batchId")
-        graft.ops.Dedup.releaseCaches()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      bands: Int = 4): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val prior = priorBatches(spark, storePath, batchId)
+      val within = graft.ops.Dedup.minhashLshPairs(
+          batch, idCol, textCol, k, numPerms, bands)
+        .select(col("id_a").as("new_id"), col("id_b").as("ref_id"))
+      writePairs(within, Option.when(prior.nonEmpty)(
+        graft.ops.Dedup.minhashLshPairsBetweenPrecomputed(batch,
+          readPrior(spark, storePath, prior),
+          idCol, textCol, k, numPerms, bands)), pairsPath, batchId)
+      storeWrite(graft.ops.Dedup.minhashBandSignatures(
+          batch, idCol, textCol, k, numPerms, bands),
+        "band", s"$storePath/batch=$batchId")
+    }
 
   /** Continuous incremental EMBEDDING near-dup against a persisted
     * bucket store — [[incrementalNearDupStream]] for vectors, the
@@ -250,11 +262,7 @@ object StreamingMigrations {
     * the [[graft.ops.Dedup.vectorBucketSignatures]] layout) and
     * `storePath/vectors/batch=N` (the narrow (id, vec) sidecar the
     * exact-cosine verify joins back by id). Pair output: (new_id,
-    * ref_id, within_batch) under `pairsPath/batch=N`. Every write
-    * OVERWRITES its own `batch=` subdir (idempotent under
-    * foreachBatch's at-least-once contract) and priors are batch ids
-    * STRICTLY BELOW the current one — reset storePath and checkpoint
-    * TOGETHER, they are one unit of state.
+    * ref_id, within_batch) under `pairsPath/batch=N`.
     *
     * `blockPlanes` is pinned by the caller (store discipline — see
     * [[graft.ops.Dedup.vectorBucketSignatures]]): size it for the
@@ -262,58 +270,28 @@ object StreamingMigrations {
   def incrementalEmbeddingDedupStream(stream: DataFrame, idCol: String,
       vecCol: String, storePath: String, pairsPath: String,
       checkpoint: String, threshold: Double, blockTables: Int = 4,
-      blockPlanes: Int = 12, dim: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val bktRoot = new org.apache.hadoop.fs.Path(
-          s"$storePath/buckets")
-        val fs = bktRoot.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val priorIds =
-          if (!fs.exists(bktRoot)) Array.empty[String]
-          else fs.listStatus(bktRoot)
-            .filter { s =>
-              val n = s.getPath.getName
-              s.isDirectory && n.startsWith("batch=") &&
-                scala.util.Try(n.stripPrefix("batch=").toLong)
-                  .toOption.exists(_ < batchId)
-            }
-            .map(_.getPath.getName)
-        val within = graft.ops.Dedup.embeddingNearDup(
-            batch, idCol, vecCol, threshold,
-            blockTables = blockTables, blockPlanes = blockPlanes,
-            dim = dim)
-          .select(col("id_a").as("new_id"), col("id_b").as("ref_id"))
-        val cross =
-          if (priorIds.isEmpty) within.limit(0)
-          else graft.ops.Dedup.embeddingNearDupBetweenPrecomputed(
-            batch,
-            spark.read.parquet(
-              priorIds.map(n => s"$storePath/buckets/$n"): _*),
-            spark.read.parquet(
-              priorIds.map(n => s"$storePath/vectors/$n"): _*),
-            idCol, vecCol, threshold, blockTables, blockPlanes, dim)
-        cross.withColumn("within_batch", lit(false))
-          .unionByName(within.withColumn("within_batch", lit(true)))
-          .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-        graft.ops.Dedup.vectorBucketSignatures(
-            batch, idCol, vecCol, blockTables, blockPlanes, dim)
-          .repartition(batch.sparkSession.sessionState.conf
-            .numShufflePartitions,
-            org.apache.spark.sql.functions.col("t"))
-          .write.mode("overwrite").partitionBy("t")
-          .parquet(s"$storePath/buckets/batch=$batchId")
-        batch.select(col(idCol), col(vecCol))
-          .write.mode("overwrite")
-          .parquet(s"$storePath/vectors/batch=$batchId")
-        graft.ops.Dedup.releaseCaches()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      blockPlanes: Int = 12, dim: Int = 0): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val prior = priorBatches(spark, s"$storePath/buckets", batchId)
+      val within = graft.ops.Dedup.embeddingNearDup(
+          batch, idCol, vecCol, threshold,
+          blockTables = blockTables, blockPlanes = blockPlanes,
+          dim = dim)
+        .select(col("id_a").as("new_id"), col("id_b").as("ref_id"))
+      writePairs(within, Option.when(prior.nonEmpty)(
+        graft.ops.Dedup.embeddingNearDupBetweenPrecomputed(batch,
+          readPrior(spark, s"$storePath/buckets", prior),
+          readPrior(spark, s"$storePath/vectors", prior),
+          idCol, vecCol, threshold, blockTables, blockPlanes, dim)),
+        pairsPath, batchId)
+      storeWrite(graft.ops.Dedup.vectorBucketSignatures(
+          batch, idCol, vecCol, blockTables, blockPlanes, dim),
+        "t", s"$storePath/buckets/batch=$batchId")
+      batch.select(col(idCol), col(vecCol))
+        .write.mode("overwrite")
+        .parquet(s"$storePath/vectors/batch=$batchId")
+    }
 
   /** Continuous duplicate-cluster maintenance — the final stage of the
     * fully-incremental dedup loop: [[incrementalNearDupStream]] /
@@ -326,51 +304,30 @@ object StreamingMigrations {
     * merge path by the second decade).
     *
     * Labels are GENERATIONS: each batch writes the complete updated
-    * labeling to `labelsPath/batch=N` (overwriting its own subdir —
-    * idempotent on retry) and reads the HIGHEST generation strictly
-    * below its id as the prior, so a retried batch re-derives from
-    * the same prior it saw first. The first batch seeds with a full
-    * [[graft.ops.Dedup.duplicateClusters]] over its own pairs.
+    * labeling to `labelsPath/batch=N` and reads the HIGHEST generation
+    * strictly below its id as the prior. The first batch seeds with a
+    * full [[graft.ops.Dedup.duplicateClusters]] over its own pairs.
     * Readers take the max-id generation; superseded generations are
     * retention history (prune externally). At very large node counts
     * the full-generation write is the simplicity/IO trade — the
     * labels frame is two longs per ever-paired doc, orders of
-    * magnitude narrower than the corpus. Reset labelsPath and
-    * checkpoint TOGETHER — one unit of state. */
+    * magnitude narrower than the corpus. */
   def clusterMaintenanceStream(pairs: DataFrame, idA: String,
       idB: String, labelsPath: String, checkpoint: String,
-      maxIter: Int = 20)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    pairs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = new org.apache.hadoop.fs.Path(labelsPath)
-        val fs = root.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val prior =
-          if (!fs.exists(root)) None
-          else fs.listStatus(root)
-            .filter(_.isDirectory)
-            .flatMap(s => scala.util.Try(
-              s.getPath.getName.stripPrefix("batch=").toLong).toOption)
-            .filter(_ < batchId)
-            .sorted.lastOption
-        val labels = prior match {
-          case None =>
-            graft.ops.Dedup.duplicateClusters(batch, idA, idB, maxIter)
-          case Some(k) =>
-            graft.ops.Dedup.mergeClusters(
-              spark.read.parquet(s"$labelsPath/batch=$k"),
-              batch, idA, idB, maxIter)
-        }
-        labels.write.mode("overwrite")
-          .parquet(s"$labelsPath/batch=$batchId")
-        graft.ops.Dedup.releaseCaches()
-        ()
+      maxIter: Int = 20): StreamingQuery =
+    eachBatch(pairs, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val labels = priorBatches(spark, labelsPath, batchId).lastOption match {
+        case None =>
+          graft.ops.Dedup.duplicateClusters(batch, idA, idB, maxIter)
+        case Some(k) =>
+          graft.ops.Dedup.mergeClusters(
+            readPrior(spark, labelsPath, Seq(k)),
+            batch, idA, idB, maxIter)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      labels.write.mode("overwrite")
+        .parquet(s"$labelsPath/batch=$batchId")
+    }
 
   /** Continuous CRAWL CURATION — the [[graft.ops.Curation.webCurateIncremental]]
     * chain as one stream: each arriving (url, html) micro-batch runs
@@ -380,58 +337,35 @@ object StreamingMigrations {
     * cost scales with the batch; the accumulated corpus text is never
     * re-read. Store layout: `storePath/urlkeys/batch=N` and
     * `storePath/contentkeys/batch=N` (narrow single-column frames);
-    * curated output under `outPath/batch=N`. Priors are batch ids
-    * STRICTLY BELOW the current one and every write overwrites its
-    * own subdir (idempotent on retry — the [[incrementalNearDupStream]]
-    * contract; reset storePath and checkpoint together). One-shot
-    * equivalence needs ids monotone across batches — see
+    * curated output under `outPath/batch=N`. One-shot equivalence
+    * needs ids monotone across batches — see
     * [[graft.ops.Curation.webCurateIncremental]]. */
   def webCurateStream(stream: DataFrame, idCol: String,
       urlCol: String, htmlCol: String, storePath: String,
       outPath: String, checkpoint: String, targetLang: String = "en",
       minQuality: Double = 0.0, minLangMargin: Int = 0,
-      sampleFraction: Double = 1.0, salt: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def priorDirs(sub: String): Array[String] = {
-          val p = new org.apache.hadoop.fs.Path(s"$storePath/$sub")
-          if (!fs.exists(p)) Array.empty
-          else fs.listStatus(p)
-            .filter { s =>
-              val n = s.getPath.getName
-              s.isDirectory && n.startsWith("batch=") &&
-                scala.util.Try(n.stripPrefix("batch=").toLong)
-                  .toOption.exists(_ < batchId)
-            }
-            .map(_.getPath.toString)
-        }
-        val (urlDirs, contentDirs) =
-          (priorDirs("urlkeys"), priorDirs("contentkeys"))
-        val state =
-          if (urlDirs.isEmpty)
-            graft.ops.Curation.webCurateBootstrap(batch, idCol,
-              urlCol, htmlCol, targetLang, minQuality, minLangMargin,
-              sampleFraction, salt)
-          else graft.ops.Curation.webCurateIncremental(batch,
-            spark.read.parquet(urlDirs: _*),
-            spark.read.parquet(contentDirs: _*),
-            idCol, urlCol, htmlCol, targetLang, minQuality,
-            minLangMargin, sampleFraction, salt)
-        state.curated.write.mode("overwrite")
-          .parquet(s"$outPath/batch=$batchId")
-        state.newUrlKeys.write.mode("overwrite")
-          .parquet(s"$storePath/urlkeys/batch=$batchId")
-        state.newContentKeys.write.mode("overwrite")
-          .parquet(s"$storePath/contentkeys/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      sampleFraction: Double = 1.0, salt: String = ""): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val urlIds = priorBatches(spark, s"$storePath/urlkeys", batchId)
+      val state =
+        if (urlIds.isEmpty)
+          graft.ops.Curation.webCurateBootstrap(batch, idCol,
+            urlCol, htmlCol, targetLang, minQuality, minLangMargin,
+            sampleFraction, salt)
+        else graft.ops.Curation.webCurateIncremental(batch,
+          readPrior(spark, s"$storePath/urlkeys", urlIds),
+          readPrior(spark, s"$storePath/contentkeys",
+            priorBatches(spark, s"$storePath/contentkeys", batchId)),
+          idCol, urlCol, htmlCol, targetLang, minQuality,
+          minLangMargin, sampleFraction, salt)
+      state.curated.write.mode("overwrite")
+        .parquet(s"$outPath/batch=$batchId")
+      state.newUrlKeys.write.mode("overwrite")
+        .parquet(s"$storePath/urlkeys/batch=$batchId")
+      state.newContentKeys.write.mode("overwrite")
+        .parquet(s"$storePath/contentkeys/batch=$batchId")
+    }
 
   /** Continuous incremental per-domain quality gate — the streaming
     * face of [[graft.ops.Curation.domainPercentileFilterIncremental]]:
@@ -440,49 +374,29 @@ object StreamingMigrations {
     * under thresholds computed over every PRIOR generation plus its
     * own counts (the corpus-so-far percentile — prior batches' rows
     * are never re-read, only their bounded histograms). Kept rows
-    * land under `outPath/batch=N`. Same idempotent-overwrite /
-    * strictly-below-batchId prior contract as every store stream
-    * here, so a retried batch re-gates identically. */
+    * land under `outPath/batch=N`. */
   def domainGateStream(stream: DataFrame, sourceCol: String,
       scoreCol: String, storePath: String, outPath: String,
-      checkpoint: String, quantile: Double)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val root = new org.apache.hadoop.fs.Path(storePath)
-        val priorDirs: Array[String] =
-          if (!fs.exists(root)) Array.empty
-          else fs.listStatus(root)
-            .filter { s =>
-              val n = s.getPath.getName
-              s.isDirectory && n.startsWith("batch=") &&
-                scala.util.Try(n.stripPrefix("batch=").toLong)
-                  .toOption.exists(_ < batchId)
-            }
-            .map(_.getPath.toString)
-        val priorHist =
-          if (priorDirs.isEmpty)
-            graft.ops.Curation.domainScoreHistogram(batch.limit(0),
-              sourceCol, scoreCol)
-          else spark.read.parquet(priorDirs: _*)
-        val state = graft.ops.Curation.domainPercentileFilterIncremental(
-          batch, priorHist, sourceCol, scoreCol, quantile)
-        state.kept.write.mode("overwrite")
-          .parquet(s"$outPath/batch=$batchId")
-        // append THIS batch's generation only (state.hist is the
-        // merge — writing it would double-count on the next batch)
-        graft.ops.Curation.domainScoreHistogram(batch, sourceCol,
-            scoreCol)
-          .write.mode("overwrite")
-          .parquet(s"$storePath/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      checkpoint: String, quantile: Double): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val prior = priorBatches(spark, storePath, batchId)
+      val priorHist =
+        if (prior.isEmpty)
+          graft.ops.Curation.domainScoreHistogram(batch.limit(0),
+            sourceCol, scoreCol)
+        else readPrior(spark, storePath, prior)
+      val state = graft.ops.Curation.domainPercentileFilterIncremental(
+        batch, priorHist, sourceCol, scoreCol, quantile)
+      state.kept.write.mode("overwrite")
+        .parquet(s"$outPath/batch=$batchId")
+      // append THIS batch's generation only (state.hist is the
+      // merge — writing it would double-count on the next batch)
+      graft.ops.Curation.domainScoreHistogram(batch, sourceCol,
+          scoreCol)
+        .write.mode("overwrite")
+        .parquet(s"$storePath/batch=$batchId")
+    }
 
   /** Continuous incremental MEDIA near-dup against a persisted chunk
     * store — [[incrementalNearDupStream]] for images, the streaming
@@ -493,56 +407,30 @@ object StreamingMigrations {
     * own within-batch pairs, and appends its chunk signatures — the
     * reference corpus is never re-DECODED (the expensive step for
     * images). Pair output: (new_id, ref_id, within_batch) under
-    * `pairsPath/batch=N`; store layout `storePath/batch=N/chunk=C`.
-    * Same idempotent-overwrite / strictly-below-priors contract as
-    * every store stream here. */
+    * `pairsPath/batch=N`; store layout `storePath/batch=N/chunk=C`. */
   def mediaDedupStream(stream: DataFrame, storePath: String,
       pairsPath: String, checkpoint: String, maxHamming: Int = 3)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val root = new org.apache.hadoop.fs.Path(storePath)
-        val fs = root.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val priorDirs =
-          if (!fs.exists(root)) Array.empty[String]
-          else fs.listStatus(root)
-            .filter { s =>
-              val n = s.getPath.getName
-              s.isDirectory && n.startsWith("batch=") &&
-                scala.util.Try(n.stripPrefix("batch=").toLong)
-                  .toOption.exists(_ < batchId)
-            }
-            .map(_.getPath.toString)
-        // decode the batch ONCE: the fingerprints feed the store
-        // write, the within-batch join, and the cross-frame join
-        val fp = graft.ops.Multimodal.perceptualHash(batch).persist()
-        val within = graft.ops.Dedup.hammingNearDup(fp, "media_id",
-            "phash", graft.ops.Multimodal.PHashBits, maxHamming)
-          .select(col("id_a").as("new_id"), col("id_b").as("ref_id"),
-            col("hamming"))
-        val cross =
-          if (priorDirs.isEmpty) within.limit(0)
-          else graft.ops.Dedup.hammingNearDupBetweenPrecomputed(fp,
-            spark.read.parquet(priorDirs: _*), "media_id", "phash",
-            graft.ops.Multimodal.PHashBits, maxHamming)
-        cross.withColumn("within_batch", lit(false))
-          .unionByName(within.withColumn("within_batch", lit(true)))
-          .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-        graft.ops.Dedup.hammingChunkSignatures(fp, "media_id",
-            "phash", graft.ops.Multimodal.PHashBits, maxHamming)
-          .repartition(batch.sparkSession.sessionState.conf
-            .numShufflePartitions,
-            org.apache.spark.sql.functions.col("chunk"))
-          .write.mode("overwrite").partitionBy("chunk")
-          .parquet(s"$storePath/batch=$batchId")
-        fp.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      : StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val prior = priorBatches(spark, storePath, batchId)
+      // decode the batch ONCE: the fingerprints feed the store
+      // write, the within-batch join, and the cross-frame join
+      val fp = graft.ops.Dedup.trackedPersist(
+        graft.ops.Multimodal.perceptualHash(batch))
+      val within = graft.ops.Dedup.hammingNearDup(fp, "media_id",
+          "phash", graft.ops.Multimodal.PHashBits, maxHamming)
+        .select(col("id_a").as("new_id"), col("id_b").as("ref_id"),
+          col("hamming"))
+      writePairs(within, Option.when(prior.nonEmpty)(
+        graft.ops.Dedup.hammingNearDupBetweenPrecomputed(fp,
+          readPrior(spark, storePath, prior), "media_id",
+          "phash", graft.ops.Multimodal.PHashBits, maxHamming)),
+        pairsPath, batchId)
+      storeWrite(graft.ops.Dedup.hammingChunkSignatures(fp, "media_id",
+          "phash", graft.ops.Multimodal.PHashBits, maxHamming),
+        "chunk", s"$storePath/batch=$batchId")
+    }
 
   /** Continuous EMBEDDED-CORPUS CURATION — the full incremental
     * preset as one stream: each arriving micro-batch flows through
@@ -560,113 +448,72 @@ object StreamingMigrations {
     * label/resolved GENERATIONS `labels/batch=N` /
     * `resolved/batch=N` (each batch reads the highest generation
     * strictly below its id — the [[clusterMaintenanceStream]]
-    * pattern, so a retried batch re-derives from the same prior it
-    * saw first). Curated output lands under `outPath/batch=N`; every
-    * write overwrites its own subdir (idempotent under foreachBatch's
-    * at-least-once contract). Reset storePath and checkpoint
-    * TOGETHER — one unit of state. `bench`/`deconThreshold`/plane
-    * parameters must stay constant for the chain's life (the
-    * one-shot-equivalence contract; the store stamp enforces the
-    * plane space). */
+    * pattern). Curated output lands under `outPath/batch=N`.
+    * `bench`/`deconThreshold`/plane parameters must stay constant for
+    * the chain's life (the one-shot-equivalence contract; the store
+    * stamp enforces the plane space). */
   def embedCurateStream(stream: DataFrame, idCol: String,
       vecCol: String, qualityCol: String, dupThreshold: Double,
       storePath: String, outPath: String, checkpoint: String,
       bench: Option[(DataFrame, String, String)] = None,
       deconThreshold: Double = 0.9, blockTables: Int = 4,
       blockPlanes: Int = 12, dim: Int = 0,
-      sampleFraction: Double = 1.0, salt: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(storePath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def gens(sub: String): Array[Long] = {
-          val p = new org.apache.hadoop.fs.Path(s"$storePath/$sub")
-          if (!fs.exists(p)) Array.empty
-          else fs.listStatus(p)
-            .filter(_.isDirectory)
-            .flatMap(s => scala.util.Try(
-              s.getPath.getName.stripPrefix("batch=").toLong).toOption)
-            .filter(_ < batchId)
-            .sorted
-        }
-        val priorGen = gens("labels").lastOption
-        val state = priorGen match {
-          case None =>
-            graft.ops.Curation.embedCurateBootstrap(batch, idCol,
-              vecCol, qualityCol, dupThreshold, bench, deconThreshold,
-              blockTables, blockPlanes, dim, sampleFraction, salt)
-          case Some(k) =>
-            val bucketDirs = gens("buckets")
-              .map(n => s"$storePath/buckets/batch=$n")
-            val docDirs = gens("docs")
-              .map(n => s"$storePath/docs/batch=$n")
-            graft.ops.Curation.embedCurateIncremental(batch,
-              spark.read.parquet(docDirs: _*),
-              spark.read.parquet(bucketDirs: _*),
-              spark.read.parquet(s"$storePath/labels/batch=$k"),
-              spark.read.parquet(s"$storePath/resolved/batch=$k"),
-              idCol, vecCol, qualityCol, dupThreshold, bench,
-              deconThreshold, blockTables, blockPlanes, dim,
-              sampleFraction, salt)
-        }
-        state.labels.write.mode("overwrite")
-          .parquet(s"$storePath/labels/batch=$batchId")
-        val resolvedPath = s"$storePath/resolved/batch=$batchId"
-        state.resolved.write.mode("overwrite").parquet(resolvedPath)
-        // curated = a deterministic hash filter over resolved: derive
-        // it from the JUST-WRITTEN parquet instead of state.curated —
-        // re-executing the resolved lineage a second time would
-        // re-pay the pair join and the re-elect window per batch
-        graft.ops.Sampling.hashSample(
-            spark.read.parquet(resolvedPath), idCol, sampleFraction,
-            salt)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        // r16: the state carries the batch's (persisted) bucket frame —
-        // the same one that fed the pair joins — so the store append
-        // reads the cache instead of re-running the plane hash
-        state.buckets
-          .repartition(batch.sparkSession.sessionState.conf
-            .numShufflePartitions,
-            org.apache.spark.sql.functions.col("t"))
-          .write.mode("overwrite").partitionBy("t")
-          .parquet(s"$storePath/buckets/batch=$batchId")
-        batch.write.mode("overwrite")
-          .parquet(s"$storePath/docs/batch=$batchId")
-        graft.ops.Dedup.releaseCaches()
-        ()
+      sampleFraction: Double = 1.0, salt: String = ""): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val prior = priorBatches(spark, s"$storePath/labels", batchId)
+      val state = prior.lastOption match {
+        case None =>
+          graft.ops.Curation.embedCurateBootstrap(batch, idCol,
+            vecCol, qualityCol, dupThreshold, bench, deconThreshold,
+            blockTables, blockPlanes, dim, sampleFraction, salt)
+        case Some(k) =>
+          def store(sub: String) = readPrior(spark, s"$storePath/$sub",
+            priorBatches(spark, s"$storePath/$sub", batchId))
+          def generation(sub: String) =
+            readPrior(spark, s"$storePath/$sub", Seq(k))
+          graft.ops.Curation.embedCurateIncremental(batch,
+            store("docs"), store("buckets"),
+            generation("labels"), generation("resolved"),
+            idCol, vecCol, qualityCol, dupThreshold, bench,
+            deconThreshold, blockTables, blockPlanes, dim,
+            sampleFraction, salt)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      state.labels.write.mode("overwrite")
+        .parquet(s"$storePath/labels/batch=$batchId")
+      val resolvedPath = s"$storePath/resolved/batch=$batchId"
+      state.resolved.write.mode("overwrite").parquet(resolvedPath)
+      // curated = a deterministic hash filter over resolved: derive
+      // it from the JUST-WRITTEN parquet instead of state.curated —
+      // re-executing the resolved lineage a second time would
+      // re-pay the pair join and the re-elect window per batch
+      graft.ops.Sampling.hashSample(
+          spark.read.parquet(resolvedPath), idCol, sampleFraction,
+          salt)
+        .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      // r16: the state carries the batch's (persisted) bucket frame —
+      // the same one that fed the pair joins — so the store append
+      // reads the cache instead of re-running the plane hash
+      storeWrite(state.buckets, "t", s"$storePath/buckets/batch=$batchId")
+      batch.write.mode("overwrite")
+        .parquet(s"$storePath/docs/batch=$batchId")
+    }
 
   /** Continuous ANN-index maintenance: each arriving embedding
     * micro-batch is assigned to its nearest IVF centroid (the scan-fused
     * literal-centroid compare of `Similarity.ivfAssign`) and appended to
-    * a CELL-PARTITIONED store — `centroid_id=` partition directories let
-    * later searches prune their probe cells at the file listing, so the
-    * index grows in place with zero reorganization. Each batch writes an
-    * overwritten `batch=` subdir (idempotent on retry, same contract as
-    * `qualityFilterStream`); state is zero. */
+    * a CELL-PARTITIONED store under `outPath/batch=N` —
+    * `centroid_id=` partition directories let later searches prune their
+    * probe cells at the file listing, so the index grows in place with
+    * zero reorganization; state is zero. */
   def ivfIndexMaintenance(stream: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, outPath: String,
-      checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Similarity
-          .ivfAssign(batch, idCol, vecCol, centroids)
-          .repartition(batch.sparkSession.sessionState.conf
-            .numShufflePartitions,
-            org.apache.spark.sql.functions.col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      checkpoint: String): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      storeWrite(graft.ops.Similarity
+          .ivfAssign(batch, idCol, vecCol, centroids),
+        "centroid_id", s"$outPath/batch=$batchId")
+    }
 
   /** Event-time windowed success/fail/duration rollup with watermark —
     * the streaming analog of Apm.rollup + window rotation. */

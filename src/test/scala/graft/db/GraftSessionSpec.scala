@@ -482,7 +482,6 @@ class ApmSpec extends SparkSpec {
     // below WITHOUT the bus — a failed-analysis execution event makes
     // Spark's own ObservationManager listener re-raise and spam ERROR.
     val monitor = Apm.install(spark)
-    import spark.implicits._
     // the task failure is intentional; keep its executor-side ERROR spam
     // out of otherwise-green test logs
     spark.sparkContext.setLogLevel("OFF")

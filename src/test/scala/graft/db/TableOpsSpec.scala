@@ -1,7 +1,6 @@
 package graft.db
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class TableOpsSpec extends SparkSpec {
   import spark.implicits._

@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 class BucketingSpec extends graft.SparkSpec {
   import spark.implicits._
 

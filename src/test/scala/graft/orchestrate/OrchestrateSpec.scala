@@ -3,7 +3,6 @@ package graft.orchestrate
 import graft.SparkSpec
 import graft.model._
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class DependencyNetworkSpec extends SparkSpec {

@@ -519,4 +519,94 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSeq
     assert(kept == Seq(10L)) // the junk doc scores negative and is dropped
   }
+
+  test("clusterMaintenanceStream: a checkpoint reset over retained " +
+      "label generations replays the same generations") {
+    val tmp = Files.createTempDirectory("cluster-reset").toString
+    val schema = Seq((1L, 2L)).toDF("id_a", "id_b").schema
+    Seq((1L, 2L), (10L, 11L)).toDF("id_a", "id_b")
+      .coalesce(1).write.parquet(s"$tmp/src")
+    Seq((2L, 10L), (11L, 30L)).toDF("id_a", "id_b")
+      .coalesce(1).write.mode("append").parquet(s"$tmp/src")
+    def run(ck: String) = StreamingMigrations.clusterMaintenanceStream(
+      StreamingMigrations.readStream(spark, s"$tmp/src", schema,
+        maxFilesPerTrigger = Some(1)),
+      "id_a", "id_b", s"$tmp/labels", ck)
+      .awaitTermination(120000)
+    def gens() = Seq(0, 1).map(n =>
+      spark.read.parquet(s"$tmp/labels/batch=$n")
+        .as[(Long, Long)].collect().toMap)
+    run(s"$tmp/ck")
+    val first = gens()
+    assert(first.head == Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L))
+    // replayed batch 0 must seed from its own pairs, not merge into
+    // the stale generation batch=1 the labels dir still holds
+    run(s"$tmp/ck2")
+    assert(gens() == first)
+  }
+
+  test("mediaDedupStream: a checkpoint reset over a retained chunk " +
+      "store replays the same pairs") {
+    val tmp = Files.createTempDirectory("media-reset").toString
+    def media(ids: Seq[Long]) = ids
+      .map(id => (id, graft.ops.Multimodal.fixtureBmp(id)))
+      .toDF("media_id", "content")
+    val schema = media(Seq(1L)).schema
+    media(Seq(1L, 2L)).coalesce(1).write.parquet(s"$tmp/src")
+    media(Seq(101L, 50L)).coalesce(1).write.mode("append")
+      .parquet(s"$tmp/src")
+    def run(ck: String) = StreamingMigrations.mediaDedupStream(
+      StreamingMigrations.readStream(spark, s"$tmp/src", schema,
+        maxFilesPerTrigger = Some(1)),
+      s"$tmp/store", s"$tmp/pairs", ck, maxHamming = 3)
+      .awaitTermination(120000)
+    def pairs() = spark.read.parquet(s"$tmp/pairs")
+      .select("new_id", "ref_id", "within_batch")
+      .as[(Long, Long, Boolean)].collect().toSet
+    run(s"$tmp/ck")
+    val first = pairs()
+    assert(first == Set((101L, 1L, false)))
+    // replayed batch 0 must not pair 1 against the stale batch=1
+    // chunks of its sibling 101
+    run(s"$tmp/ck2")
+    assert(pairs() == first)
+  }
+
+  test("mediaDedupStream: a failed batch leaves no fingerprint cache " +
+      "behind") {
+    val tmp = Files.createTempDirectory("media-fail").toString
+    Seq(1L, 2L).map(id => (id, graft.ops.Multimodal.fixtureBmp(id)))
+      .toDF("media_id", "content").coalesce(1).write.parquet(s"$tmp/src")
+    // a regular file where the pair output dir belongs: the batch's
+    // pair write fails after its fingerprints were persisted
+    val pairsPath = Files.createFile(
+      java.nio.file.Paths.get(s"$tmp/pairs")).toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the failure is intentional; keep the stream's ERROR log out of
+    // otherwise-green test output
+    spark.sparkContext.setLogLevel("OFF")
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingMigrations.mediaDedupStream(
+        StreamingMigrations.readStream(spark, s"$tmp/src",
+          spark.read.parquet(s"$tmp/src").schema),
+        s"$tmp/store", pairsPath, s"$tmp/ck")
+        .awaitTermination(120000)
+    } finally spark.sparkContext.setLogLevel("ERROR")
+    // no releaseCaches() here: the stream's own per-batch `finally`
+    // must already have dropped the fingerprints
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
+  test("statePartitionsFor: one partition for a tiny source, the " +
+      "session parallelism past the cap or for an unlistable source") {
+    val tmp = Files.createTempDirectory("state-parts").toString
+    Seq((1L, "x")).toDF("id", "v").coalesce(1).write.parquet(s"$tmp/src")
+    val cap = spark.sessionState.conf.numShufflePartitions
+    assert(StreamingMigrations.statePartitionsFor(spark, s"$tmp/src") == 1)
+    // a few hundred bytes at one byte per partition: far past the cap
+    assert(StreamingMigrations.statePartitionsFor(spark, s"$tmp/src",
+      targetBytes = 1L) == cap)
+    assert(StreamingMigrations.statePartitionsFor(spark,
+      s"$tmp/missing") == cap)
+  }
 }

@@ -1,7 +1,6 @@
 package graft.update
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 class UpdateCompilerSpec extends SparkSpec {
