@@ -171,7 +171,7 @@ final class GraftCollection(s: GraftSession, val ns: Namespace)
     }(_ => 0L)
   /** Aggregation pipeline — reference db/wrapper.go:88-94. A trailing
     * `$merge` stage upserts the result into the sibling collection (one
-    * key-shuffle merge, atomic tmp+rename swap) and returns the merged
+    * key-shuffle merge, tmp/bak rename swap) and returns the merged
     * table; a trailing `$out` REPLACES the sibling collection with the
     * result. */
   def pipe(pipeline: Seq[Map[String, Any]]): DataFrame =
@@ -188,14 +188,7 @@ final class GraftCollection(s: GraftSession, val ns: Namespace)
         val out = outOpt.get
         val targetPath =
           Namespace(out.db.getOrElse(ns.db), out.coll).path(s.root)
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new org.apache.hadoop.fs.Path(targetPath).toUri,
-          s.spark.sparkContext.hadoopConfiguration)
-        val tmp = targetPath + ".tmp"
-        result.write.mode("overwrite").parquet(tmp)
-        val p = new org.apache.hadoop.fs.Path(targetPath)
-        if (fs.exists(p)) fs.delete(p, true)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
+        graft.sources.Tables.replace(result, targetPath)
         graft.sources.Tables.load(s.spark, targetPath)
       } else mergeOpt match {
         case None => result
@@ -284,12 +277,7 @@ final class GraftCollection(s: GraftSession, val ns: Namespace)
               if (m.whenNotMatched == "insert")
                 afterMatched.unionByName(newRes, allowMissingColumns = true)
               else afterMatched
-            // write via tmp + rename so a failed job never corrupts the target
-            val tmp = targetPath + ".tmp"
-            merged.write.mode("overwrite").parquet(tmp)
-            val p = new org.apache.hadoop.fs.Path(targetPath)
-            if (fs.exists(p)) fs.delete(p, true)
-            fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
+            graft.sources.Tables.replace(merged, targetPath)
             graft.sources.Tables.load(s.spark, targetPath)
           } finally res.unpersist()
       }

@@ -167,10 +167,16 @@ final class MigrationApp(
       }
       // the limit path validates AFTER the write (the matched count only
       // exists once the write job ran), so its pre-swap backup must outlive
-      // writeBack: on validation failure the original table is restored —
-      // a non-unique idColumn errors AND leaves the data un-migrated
+      // the swap: on validation failure the original table is restored —
+      // a non-unique idColumn errors AND leaves the data un-migrated.
+      // `fence` is the data-path fencing check
+      // ([[NamespaceLease.verifyHeld]]), run after the (long) tmp write
+      // and immediately before the first commit rename: if the lease
+      // changed hands while this app was paused or slow, the swap aborts
+      // with NOTHING mutated (only the orphaned `.tmp` remains, and the
+      // next swap's mode("overwrite") replaces it).
       val keepBackup = workListKeys >= 0
-      writeBack(out.drop("__hit"), path, keepBackup,
+      graft.sources.Tables.replace(out.drop("__hit"), path, keepBackup,
         fence = () => lease.verifyHeld(spec.options.ns))
       // blocking get: the write above executed the CollectMetrics node, the
       // listener delivers the row asynchronously moments later
@@ -218,34 +224,13 @@ final class MigrationApp(
   private def fs = new org.apache.hadoop.fs.Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Atomic-ish write-back: write tmp dir, swap via rename. With
-    * `keepBackup` the displaced original survives as `<path>.bak` so a
-    * post-write validation failure can roll back via [[restoreBackup]].
-    * `fence` runs after the (long) tmp write and immediately before the
-    * first commit rename — the data-path fencing check
-    * ([[NamespaceLease.verifyHeld]]): if the lease changed hands while
-    * this app was paused or slow, the swap aborts with NOTHING mutated
-    * (only the orphaned `.tmp` remains, and the next writeBack's
-    * mode("overwrite") replaces it). */
-  private def writeBack(df: DataFrame, path: String,
-      keepBackup: Boolean = false, fence: () => Unit = () => ()): Unit = {
-    val tmp = path + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    fence()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + ".bak")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (fs.exists(p)) fs.rename(p, bak)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
-    if (!keepBackup) fs.delete(bak, true)
-  }
-
-  /** Crash recovery for [[writeBack]]'s swap, run under the namespace
-    * lease before touching the table. The only torn state a crash can
-    * leave (every step is an atomic rename) is "table renamed away to
-    * `.bak`, replacement not yet renamed in": roll BACK to the old table.
+  /** Crash recovery for the table swap ([[graft.sources.Tables.replace]]),
+    * run under the namespace lease before touching the table. The only
+    * torn state a crash can leave (every step is an atomic rename) is
+    * "table renamed away to `.bak`, replacement not yet renamed in": roll
+    * BACK to the old table.
     * Roll-back, not roll-forward, because the metadata ledger records a
-    * migration AFTER its writeBack — rolling the orphaned `.tmp` forward
+    * migration AFTER its swap — rolling the orphaned `.tmp` forward
     * would apply a migration the ledger still thinks is pending, and the
     * re-run would double-apply it. A stale-lease takeover therefore sees
     * either the old table or the new, never a torn directory. */
@@ -275,11 +260,11 @@ final class MigrationApp(
 /** Per-namespace write lease making the atomic-swap write path safe under
   * CONCURRENT migration applications: two apps migrating the same
   * namespace would otherwise race the tmp/bak/rename directory swap
-  * ([[MigrationApp.writeBack]]) and could tear the table. The lease is an
-  * atomically-created file next to the metadata ledger (the reference
-  * leans on per-document atomicity in its metadata collection instead;
-  * migration_helper_iterator.go:80-107) — `FileSystem.create(overwrite =
-  * false)` is atomic on HDFS and local filesystems alike.
+  * ([[graft.sources.Tables.replace]]) and could tear the table. The
+  * lease is an atomically-created file next to the metadata ledger (the
+  * reference leans on per-document atomicity in its metadata collection
+  * instead; migration_helper_iterator.go:80-107), made by the same
+  * exclusive create as the ledger lock ([[ExclusiveFile.create]]).
   *
   * Semantics: acquire blocks up to `waitMs` (concurrent runs SERIALIZE),
   * then throws (fail fast — surfaced as an errored MigrationResult, never
@@ -303,8 +288,8 @@ final class MigrationApp(
   *   - release deletes only a lease that still carries the owner token,
   *     so a usurped holder cannot free the usurper's lease.
   *
-  * The advisory lock is backed by a data-path fencing check:
-  * [[MigrationApp.writeBack]] calls [[verifyHeld]] after the
+  * The advisory lock is backed by a data-path fencing check: the
+  * migration's table swap calls [[verifyHeld]] after the
   * replacement data is written and immediately before the first commit
   * rename, on the SAME filesystem that holds the lease. A holder paused
   * past staleMs is usurped while asleep; on wake-up its commit is
@@ -369,9 +354,7 @@ final class NamespaceLease(spark: SparkSession, root: String,
     var acquired = false
     while (!acquired) {
       try {
-        val out = fs.create(p, false) // atomic create-if-absent
-        out.write(owner.getBytes("UTF-8"))
-        out.close()
+        ExclusiveFile.create(fs, p, owner.getBytes("UTF-8"))
         // read-back: if a breaker replaced the file in the window, the
         // token differs and this acquirer backs off instead of running.
         // Retried reads: abandoning a SUCCEEDED create on one transient
@@ -421,7 +404,7 @@ final class NamespaceLease(spark: SparkSession, root: String,
     * (stale leases never break, the advisor finding this replaced),
     * while a wrongly-broken live lease is now SAFE: the holder's
     * heartbeat detects the token change and logs, and the data path is
-    * fenced ([[verifyHeld]] before writeBack's commit rename), so the
+    * fenced ([[verifyHeld]] before the swap's commit rename), so the
     * usurped holder cannot publish. */
   private def breakStale(p: Path, observedAge: Long): Unit = {
     // re-observe right before acting: the heartbeat refreshes every
@@ -495,7 +478,7 @@ final class NamespaceLease(spark: SparkSession, root: String,
   }
 
   /** Data-path fencing check — throws unless the lease still carries
-    * this app's token. [[MigrationApp.writeBack]] calls it immediately
+    * this app's token. The migration's table swap calls it immediately
     * before the commit rename: a holder paused past staleMs was usurped
     * while asleep, and this same-filesystem check makes its wake-up
     * commit abort instead of publishing over the usurper. Retried reads
@@ -520,6 +503,28 @@ final class NamespaceLease(spark: SparkSession, root: String,
     // own lease until staleMs)
     if (readTokenRetry(p).contains(owner)) fs.delete(p, false)
   }
+}
+
+/** Exclusive create-if-absent of a small file: the one primitive under
+  * the namespace lease and the ledger lock. Hadoop's RawLocalFileSystem
+  * implements `create(overwrite = false)` as exists-then-create — NOT
+  * O_EXCL — so on file:// paths two local processes could both "win";
+  * there the file is created through java.nio `CREATE_NEW`, which IS an
+  * atomic exclusive create. Elsewhere `create(overwrite = false)`:
+  * atomic on HDFS (namenode CAS), best-effort on object stores, where
+  * the lease's read-back and data-path fence are the real guard. Throws
+  * an IOException when the file already exists. */
+private[orchestrate] object ExclusiveFile {
+  def create(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path,
+      content: Array[Byte] = Array.emptyByteArray): Unit =
+    if ("file".equalsIgnoreCase(Option(fs.getUri.getScheme).getOrElse("")))
+      java.nio.file.Files.write(java.nio.file.Paths.get(p.toUri.getPath),
+        content, java.nio.file.StandardOpenOption.CREATE_NEW)
+    else {
+      val out = fs.create(p, false)
+      try out.write(content) finally out.close()
+    }
 }
 
 /** Migration metadata ledger — reference MigrationHelper.SaveMigrationEvent
@@ -593,33 +598,19 @@ final class MetadataLedger(spark: SparkSession, path: String) {
   }
 
   // the read-modify-write in record is not atomic; a second app sharing
-  // the ledger would lose updates. Guard with an atomically-created lock file
-  // (reference relies on mongo's per-document atomicity instead).
+  // the ledger would lose updates. Guard with an exclusively-created lock
+  // file, ExclusiveFile (reference relies on mongo's per-document
+  // atomicity instead).
   private def withLock[T](body: => T): T = {
     val lock = new org.apache.hadoop.fs.Path(path + ".lock")
     fs.mkdirs(lock.getParent)
     val deadline = System.currentTimeMillis() + 30000
-    // create-if-absent. Hadoop's RawLocalFileSystem implements
-    // create(overwrite=false) as exists-then-create — NOT O_EXCL — so
-    // on file:// paths two local processes could both "win"; there we
-    // go through java.nio Files.createFile, which IS an atomic
-    // exclusive create. Elsewhere: atomic on HDFS (namenode CAS),
-    // documented best-effort on object stores, where the namespace
-    // lease is the real guard.
-    val localLock: Option[java.nio.file.Path] =
-      if ("file".equalsIgnoreCase(Option(fs.getUri.getScheme).getOrElse("")))
-        Some(java.nio.file.Paths.get(lock.toUri.getPath))
-      else None
-    def tryCreate(): Unit = localLock match {
-      case Some(p) => java.nio.file.Files.createFile(p)
-      case None => fs.create(lock, false).close()
-    }
     var acquired = false
     while (!acquired) {
       // Only CONTENTION (the lock file actually existing) waits; a
       // connectivity/permission IOException surfaces immediately
       // instead of masquerading as a 30s-stale lock
-      try { tryCreate(); acquired = true }
+      try { ExclusiveFile.create(fs, lock); acquired = true }
       catch {
         case e: java.io.IOException =>
           val contended = e.isInstanceOf[

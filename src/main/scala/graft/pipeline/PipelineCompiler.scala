@@ -62,26 +62,31 @@ object PipelineCompiler {
       st.keys.find(firstOnly).foreach(k => throw new IllegalArgumentException(
         s"$k must be the first pipeline stage (found at position $i)"))
     }
-    df => fuse(pipeline).foldLeft(df)((acc, st) => stage(acc, st, tables))
+    df => fuse(pipeline, tables).foldLeft(df)((acc, step) => step(acc))
   }
 
   /** Peephole rewrite: `$lookup(as: X)` immediately followed by
-    * `$unwind: "$X"` is semantically an inner join — compile it to one,
+    * `$unwind: "$X"` is semantically a join — compile it to one,
     * skipping the collect_list → explode round-trip (array build + extra
-    * shuffle). The classic Mongo idiom costs ~10× the join at scale. */
-  private def fuse(pipeline: Seq[Map[String, Any]]): Seq[Map[String, Any]] =
+    * shuffle). The classic Mongo idiom costs ~10× the join at scale.
+    * Every `$lookup` spelling fuses: [[lookup]] keeps each form's
+    * semantics in the [[Unwound]] shape. */
+  private def fuse(pipeline: Seq[Map[String, Any]], tables: TableResolver)
+      : Seq[DataFrame => DataFrame] =
     pipeline match {
-      case lookup +: unwind +: rest
-        if lookup.keySet == Set("$lookup") && unwind.keySet == Set("$unwind") =>
-        val lkSpec = lookup("$lookup").asInstanceOf[Map[String, Any]]
-        fusableUnwind(unwind("$unwind"), lkSpec("as")) match {
+      case lk +: uw +: rest
+        if lk.keySet == Set("$lookup") && uw.keySet == Set("$unwind") =>
+        val spec = doc(lk("$lookup"))
+        fusableUnwind(uw("$unwind"), spec("as")) match {
           case Some(preserve) =>
-            Map("$__lookupUnwind" ->
-              (lkSpec + ("__preserve" -> preserve))) +: fuse(rest)
-          case None => lookup +: fuse(unwind +: rest)
+            ((df: DataFrame) => lookup(df, spec, tables, Unwound(preserve))) +:
+              fuse(rest, tables)
+          case None =>
+            ((df: DataFrame) => stage(df, lk, tables)) +: fuse(uw +: rest, tables)
         }
-      case head +: rest => head +: fuse(rest)
-      case _ => pipeline
+      case st +: rest =>
+        ((df: DataFrame) => stage(df, st, tables)) +: fuse(rest, tables)
+      case _ => Nil
     }
 
   /** Is this $unwind spec fusable with a preceding $lookup(as)? Returns
@@ -413,61 +418,7 @@ object PipelineCompiler {
               .drop("__uw_pos", "__uw_val")
         }
 
-      case "$lookup" if doc(spec).contains("pipeline") &&
-          doc(spec).contains("localField") =>
-        lookupConcise(df, doc(spec), tables)
-
-      case "$lookup" if doc(spec).contains("pipeline") =>
-        lookupPipeline(df, doc(spec), tables)
-
-      case "$lookup" =>
-        val d = doc(spec)
-        lookupEquality(df, d, tables(d("from").toString))
-
-      case "$__lookupUnwind" => // fused $lookup + $unwind = join
-        val d = doc(spec)
-        val from = tables(d("from").toString)
-        val foreign = d("foreignField").toString
-        val as = d("as").toString
-        // preserveNullAndEmptyArrays on the unwind = keep rows with no
-        // match = left outer instead of inner; the as-field is then a
-        // null struct (Mongo removes the field — documented null stance)
-        val joinType = if (d.get("__preserve").contains(true)) "left_outer"
-                       else "inner"
-        val fStruct = struct(from.columns.map(from(_)).toSeq: _*)
-        // array foreignField: one key row per distinct element (see
-        // lookupEquality) — a foreign doc still pairs once with each
-        // matching outer row because its elements are distinct
-        val right =
-          if (from.select(from(foreign)).schema.head.dataType
-              .isInstanceOf[org.apache.spark.sql.types.ArrayType])
-            from.select(explode(array_distinct(from(foreign)))
-              .as("__lk"), fStruct.as(as))
-          else from.select(from(foreign).as("__lk"), fStruct.as(as))
-        val lcol = df(d("localField").toString)
-        val localIsArray = df.select(lcol).schema.head.dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]
-        val foreignIsArray = from.select(from(foreign)).schema.head
-          .dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
-        if (localIsArray && !foreignIsArray && joinType == "inner")
-          // array localField, non-preserving unwind: one output row per
-          // (outer row, matched foreign doc) — explode the DISTINCT
-          // elements straight into the equi-join, no regroup needed
-          // (with an array foreignField too this would double-count a
-          // doc reachable through two shared elements — grouped path)
-          df.select(col("*"), explode(array_distinct(lcol)).as("__el"))
-            .join(right, col("__el") === right("__lk"), "inner")
-            .drop("__lk", "__el")
-        else if (localIsArray) {
-          // grouped lookup (dedups multi-element matches), then unwind:
-          // a naive exploded left join would fabricate a null row PER
-          // unmatched element in the preserving case
-          val full = lookupEquality(df, d - "__preserve", from)
-          if (joinType == "inner") full.withColumn(as, explode(col(as)))
-          else full.withColumn(as, explode_outer(col(as)))
-        } else
-          df.join(right, lcol === right("__lk"), joinType)
-            .drop("__lk")
+      case "$lookup" => lookup(df, doc(spec), tables, Grouped)
 
       case "$sortByCount" =>
         val ref = spec.toString
@@ -2686,175 +2637,103 @@ object PipelineCompiler {
     }
   }
 
-  /** `$lookup` pipeline form (`from` + `let` + `pipeline` + `as`) — the
-    * correlated-subquery shape. Supported subset, compiled to ONE equi-join
-    * (never a per-outer-row rescan):
-    *   - stage 1 of the sub-pipeline must be the correlated
-    *     `{$match: {$expr: {$eq: [..]}}}` (or `$and` of `$eq`s), each `$eq`
-    *     pairing one `$$var` (from `let`) with one `$`-field of `from`;
-    *   - remaining stages must be row-local (`$match` without `$$`,
-    *     `$project`/`$addFields`/`$set`/`$unset`), which commute with the
-    *     equality — they run on the `from` side BEFORE the join, keeping the
-    *     join equi-shaped and broadcast-eligible.
-    * Anything beyond that (correlated `$lt`, per-key `$limit`) throws
-    * rather than silently degrading to a nested-loop join. */
-  /** Classic equality `$lookup`: left join + re-group, joined docs as an
-    * array of structs (Mongo shape); `from` may be pre-shaped by the
-    * concise-correlated pipeline form. */
-  private def lookupEquality(df: DataFrame, d: Map[String, Any],
-      from: DataFrame): DataFrame = {
-    val local = d("localField").toString
-    val foreign = d("foreignField").toString
+  /** How a `$lookup` hands over its matches: one array per outer row
+    * (the stage on its own), or one row per match, as if followed by
+    * `$unwind` — `preserve` keeps outer rows without a match, with a
+    * null `as` (Mongo removes the field; documented null stance). */
+  private sealed trait LookupShape
+  private case object Grouped extends LookupShape
+  private final case class Unwound(preserve: Boolean) extends LookupShape
+
+  /** `$lookup`, however it is spelled, compiled to ONE keyed equi-join
+    * (never a per-outer-row rescan, never a nested-loop join). Each
+    * spelling only names its key pairs (outer expression, `from`
+    * expression), its sub-pipeline and its `let`:
+    *   - equality (`localField` + `foreignField`) and Mongo 8.0 concise
+    *     (the same plus `pipeline`, optionally `let`): one key pair with
+    *     array MEMBERSHIP — an array on either side is a SET of keys, a
+    *     foreign doc matches when any element equals, and appears once;
+    *   - pipeline form (`let` + `pipeline`): stage 1 must be the
+    *     correlated `{$match: {$expr: {$eq: [..]}}}` (or `$and` of
+    *     `$eq`s), each `$eq` pairing one `$$var` with one `$`-field of
+    *     `from`; each pair is a key (whole-value equality, as `$expr`
+    *     compares).
+    * The rest of the sub-pipeline must be row-local (`$match`,
+    * `$project`/`$set`/`$addFields`/`$unset`, `$replaceRoot`/
+    * `$replaceWith`), which commutes with the equality: it runs on the
+    * `from` side BEFORE the join (filters push into the scan; the join
+    * stays equi-shaped and broadcast-eligible). The join keys are taken
+    * before it runs, so a `$project` that omits them — legal in Mongo,
+    * where the join happens first — still joins. A `$match` that reads a
+    * `let` variable is a correlated predicate: it must use `$expr` and
+    * precede the shaping stages, and it evaluates against the raw `from`
+    * doc (a sidecar struct) — over the collected array when grouped, in
+    * the join condition when unwound, so a preserving unwind still keeps
+    * outer rows whose matches it rejects. Per-group stages ($limit,
+    * $sort, $group, …) and correlated non-equality keys throw rather
+    * than silently degrade. Under an aggregate-level collation (Mongo
+    * runs the join comparison under it) string keys fold through the
+    * collation key — still a hash join on a scalar key expression. */
+  private def lookup(df: DataFrame, d: Map[String, Any],
+      tables: TableResolver, shape: LookupShape): DataFrame = {
+    val from = tables(d("from").toString)
+    val let = d.get("let").map(doc).getOrElse(Map.empty[String, Any])
+    val sub = d.get("pipeline").map(pipelineSeq).getOrElse(Nil)
     val as = d("as").toString
-    val fStruct = struct(from.columns.map(from(_)).toSeq: _*)
-    // Mongo array-foreignField semantics mirror the local side: a foreign
-    // doc with an ARRAY foreignField matches any of its elements — the
-    // from side explodes its distinct elements before grouping, so each
-    // foreign doc lands in every key group it belongs to (still a hash
-    // equi-join; a doc matching through multiple elements appears once
-    // per group, and Mongo returns it once per matching outer doc)
-    val foreignIsArray = from.select(from(foreign)).schema.head.dataType
-      .isInstanceOf[org.apache.spark.sql.types.ArrayType]
-    // Aggregate-level collation applies to $lookup EQUALITY (Mongo runs
-    // the join comparison under the collation): when BOTH key sides are
-    // strings, each folds through the collation key — still a plain
-    // hash equi-join on a scalar (or struct) key expression.
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    def keyElemType(dfx: DataFrame, c: Column) =
-      dfx.select(c).schema.head.dataType match {
-        case ArrayType(e, _) => e
-        case t => t
+    if (d.contains("localField"))
+      keyedJoin(df, from,
+        Seq(df(d("localField").toString) -> from(d("foreignField").toString)),
+        membership = true, sub, let, as, shape, tables)
+    else {
+      require(sub.nonEmpty && sub.head.keySet == Set("$match"),
+        "$lookup pipeline form: first stage must be the correlated $match")
+      val exprDoc = doc(sub.head("$match")).getOrElse("$expr",
+        throw new IllegalArgumentException(
+          "$lookup pipeline form: correlated $match must use $expr"))
+      def one(m: Map[String, Any]): (Column, Column) = m.toSeq match {
+        case Seq(("$eq", args: Seq[_])) =>
+          val sides = args.map {
+            case s: String if s.startsWith("$$") =>
+              Left(expr2col(let.getOrElse(s.drop(2),
+                throw new IllegalArgumentException(
+                  s"$$lookup: unbound let variable $s"))))
+            case s: String if s.startsWith("$") => Right(col(s.drop(1)))
+            case other => throw new IllegalArgumentException(
+              s"$$lookup correlated $$eq side: $other")
+          }
+          (sides.collect { case Left(c) => c },
+            sides.collect { case Right(c) => c }) match {
+            case (Seq(o), Seq(f)) => (o, f)
+            case _ => throw new IllegalArgumentException(
+              "$lookup: each $eq must pair one $$var with one $from-field")
+          }
+        case other => throw new IllegalArgumentException(
+          s"$$lookup correlated condition must be $$eq: $other")
       }
-    val lookupFold = graft.query.QueryCompiler.activeCollation.value
-      .filter { _ =>
-        keyElemType(from, from(foreign)) == StringType &&
-          keyElemType(df, df(local)) == StringType
+      val keys = doc(exprDoc).toSeq match {
+        case Seq(("$and", cs: Seq[_])) => cs.map(c => one(doc(c)))
+        case _ => Seq(one(doc(exprDoc)))
       }
-    def foldK(c: Column): Column = lookupFold.map(_.key(c)).getOrElse(c)
-    // fold each array element BEFORE the distinct: two binary-distinct
-    // but collation-EQUAL elements ("Red"/"red") must collapse to one
-    // key, or the matched doc would appear twice (Mongo: once per doc)
-    def distinctKeys(arr: Column): Column =
-      array_distinct(transform(arr, e => foldK(e)))
-    val keyed =
-      (if (foreignIsArray)
-        from.select(explode(distinctKeys(from(foreign))).as("__lk"),
-          fStruct.as("__fs"))
-      else from.select(foldK(from(foreign)).as("__lk"),
-        fStruct.as("__fs")))
-    val grouped = keyed.groupBy("__lk")
-      .agg(collect_list(col("__fs")).as(as))
-    // Mongo array-localField semantics: the array is a SET of join keys —
-    // a foreign doc matches when its foreignField equals ANY element
-    // ($in-like membership; each matching doc appears once). Explode the
-    // DISTINCT elements, equi-join, re-aggregate per outer row — never a
-    // nested-loop membership join. The row identity is plan-internal
-    // (attached directly above the outer plan, dropped before returning);
-    // the matched array is sort_array'd for a deterministic order (Mongo
-    // specifies none). skewSalt does not apply to this branch.
-    val lcol = df(local)
-    val localIsArray = df.select(lcol).schema.head.dataType
-      .isInstanceOf[org.apache.spark.sql.types.ArrayType]
-    if (localIsArray) {
-      // The row id fans out into a self-join (exploded side vs outer
-      // side). monotonically_increasing_id is nondeterministic across
-      // re-evaluations once an upstream shuffle makes partition order
-      // unstable — the two sides could assign DIFFERENT ids to the same
-      // logical row and rows would silently get the wrong lookup array.
-      // Freeze the ids eagerly (same stance as $graphLookup's __gid).
-      val df2 = graft.ops.Checkpoints.truncate(
-        df.withColumn("__rid", monotonically_increasing_id()))
-      // when BOTH sides are arrays a foreign doc reachable through two
-      // shared elements lands in two key groups — dedup by value then
-      // (Mongo returns each matching doc once; full-duplicate foreign
-      // docs collapsing under value identity is the documented columnar
-      // stance — there is no row identity to distinguish them)
-      val merged = flatten(collect_list(col(as)))
-      val matched = df2
-        .select(col("__rid"), explode(distinctKeys(lcol)).as("__el"))
-        .join(grouped, col("__el") === grouped("__lk"))
-        .groupBy("__rid")
-        .agg(sort_array(
-          if (foreignIsArray) array_distinct(merged) else merged)
-          .as("__m"))
-      return df2.join(matched, Seq("__rid"), "left_outer")
-        .withColumn(as, coalesce(col("__m"), array()))
-        .drop("__rid", "__m")
+      keyedJoin(df, from, keys, membership = false, sub.tail, let, as,
+        shape, tables)
     }
-    // spark.graft.skewSalt opt-in (> 1): a hot local key would land every
-    // matching outer row on ONE join task (the grouped right side is one
-    // row per key). Salting scatters outer rows over `salt` buckets and
-    // replicates the matching right row per bucket (Skew.saltedJoin
-    // shape) — complements AQE's runtime skew splitting for the known-
-    // hot-key case.
-    // "auto" = let the engine decide: with AQE skew-join on, the
-    // runtime split handles the hot key better than static salting in
-    // every measured configuration (ScaleProbe saltlookup, 40M rows 90%
-    // hot: 4.9 s unsalted+AQE vs 6.9 s hand-salt 8 vs 10.5 s
-    // always-salt-auto — replication overhead exceeds the spread gain),
-    // so auto defers. Only when AQE is disabled does the sketch
-    // (Skew.autoSalt) size a static salt — there a cluster-scale hot
-    // task has no other spread.
-    val saltN = df.sparkSession.conf.getOption("spark.graft.skewSalt")
-      match {
-      case Some("auto") =>
-        val c = df.sparkSession.conf
-        val aqeSkew =
-          c.get("spark.sql.adaptive.enabled", "true").toBoolean &&
-          c.get("spark.sql.adaptive.skewJoin.enabled", "true").toBoolean
-        if (aqeSkew) 0 else graft.ops.Skew.autoSalt(df, df(local))
-      case Some(s) => s.toInt
-      case None => 0
-    }
-    if (saltN > 1) {
-      // Deterministic per-row salt (hash of the full payload, not
-      // monotonically_increasing_id) so task retries re-salt identically.
-      val sl = df.withColumn("__sl",
-        graft.ops.Skew.deterministicSalt(df, saltN))
-      val sr = grouped.withColumn("__sr",
-        explode(sequence(lit(0), lit(saltN - 1))))
-      sl.join(sr, foldK(sl(local)) === sr("__lk") && sl("__sl") === sr("__sr"),
-          "left_outer")
-        .drop("__lk", "__sl", "__sr")
-        .withColumn(as, coalesce(col(as), array()))
-    } else
-      df.join(grouped, foldK(df(local)) === grouped("__lk"), "left_outer")
-        .drop("__lk")
-        .withColumn(as, coalesce(col(as), array()))
   }
 
-  /** Mongo 8.0 concise correlated `$lookup`: equality condition PLUS a
-    * shaping sub-pipeline (and optionally `let`). Row-local stages
-    * commute with the equality join, so they pre-apply to the from-side
-    * scan (filters push down); per-group stages ($limit/$sort/$group/…)
-    * would need the grouped subsets and are rejected toward the $expr
-    * pipeline form. The join key is kept INTERNALLY (a hidden copy of
-    * foreignField carried through the sub-pipeline), so a `$project`
-    * that omits foreignField — legal in Mongo, where the join happens
-    * before the pipeline shapes docs — still joins correctly.
-    * `let`-referencing `$match` stages are correlated predicates: they
-    * must precede shaping stages, use `$expr`, and evaluate POST-join as
-    * a scan-local `filter()` over the collected array (the from-doc
-    * binds via a raw-doc sidecar, let vars bind to outer columns) — no
-    * extra shuffle versus the plain concise form. */
-  private def lookupConcise(df: DataFrame, d: Map[String, Any],
-      tables: TableResolver): DataFrame = {
-    val from = tables(d("from").toString)
-    val local = d("localField").toString
-    val foreign = d("foreignField").toString
-    val as = d("as").toString
-    val sub = pipelineSeq(d("pipeline"))
+  /** The one `$lookup` join (see [[lookup]]). */
+  private def keyedJoin(df: DataFrame, from: DataFrame,
+      keys: Seq[(Column, Column)], membership: Boolean,
+      sub: Seq[Map[String, Any]], let: Map[String, Any], as: String,
+      shape: LookupShape, tables: TableResolver): DataFrame = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
     val rowLocal = Set("$match", "$project", "$set", "$addFields",
       "$unset", "$replaceRoot", "$replaceWith")
     sub.foreach { st =>
       require(st.size == 1 && rowLocal(st.head._1),
-        s"$$lookup localField+pipeline: stage ${st.head._1} is " +
-          "per-joined-group; use the pipeline-only form with a " +
-          "$match/$expr first stage")
+        s"$$lookup sub-pipeline: stage ${st.head._1} is per-joined-group; " +
+          "only row-local stages run inside a $lookup")
     }
-    val letDoc = d.get("let").map(doc).getOrElse(Map.empty[String, Any])
     def usesLet(e: Any): Boolean = e match {
-      case s: String => letDoc.keys.exists(k => s.contains("$$" + k))
+      case s: String => let.keys.exists(k => s.contains("$$" + k))
       case m: Map[_, _] =>
         m.asInstanceOf[Map[String, Any]].values.exists(usesLet)
       case s: Seq[_] => s.exists(usesLet)
@@ -2869,24 +2748,26 @@ object PipelineCompiler {
           "$lookup let: the correlated $match must use $expr")
         require(shapeIdx < 0 || i < shapeIdx,
           "$lookup let: correlated $match must precede shaping stages " +
-            "($project/$set/…) — move it first, or use the pipeline-only " +
-            "form")
+            "($project/$set/…) — move it first")
       }
     }
-    val kc = "__graft_lkc"
-    val kraw = "__graft_lkraw"
-    val needRaw = sub.exists(usesLet)
-    val reserved = if (needRaw) Seq(kc, kraw) else Seq(kc)
+    val corr = sub.filter(usesLet)
+
+    // the from side, keyed (and its raw doc kept for the correlated
+    // predicates) BEFORE the row-local stages run
+    val keyCols = keys.indices.map(i => if (i == 0) "__lk" else s"__lk$i")
+    val raw = "__graft_lkraw"
+    val reserved = if (corr.isEmpty) keyCols else keyCols :+ raw
     reserved.foreach(r => require(!from.columns.contains(r),
       s"$$lookup: from-collection already has reserved column $r"))
-    val keyed0 = from.withColumn(kc, col(foreign))
-    val keyed = if (needRaw)
-      keyed0.withColumn(kraw, struct(from.columns.map(col).toSeq: _*))
-    else keyed0
+    val keyed0 = keys.zip(keyCols).foldLeft(from) {
+      case (f, ((_, fk), k)) => f.withColumn(k, fk) }
+    val keyed = if (corr.isEmpty) keyed0
+      else keyed0.withColumn(raw, struct(from.columns.map(from(_)).toSeq: _*))
     val processed = sub.filterNot(usesLet).foldLeft(keyed) { (acc, st) =>
       st.head._1 match {
         // $replaceRoot/$replaceWith replace the whole doc — re-select the
-        // hidden key (and raw sidecar) around the new root's fields
+        // hidden keys (and raw sidecar) around the new root's fields
         case "$replaceRoot" | "$replaceWith" =>
           val ref = (if (st.head._1 == "$replaceRoot")
             doc(st.head._2)("newRoot") else st.head._2).toString
@@ -2895,110 +2776,153 @@ object PipelineCompiler {
         case _ => stage(acc, retainKeys(st, reserved), tables)
       }
     }
-    val payload = processed.columns.filterNot(reserved.contains).toSeq
-    val docStruct = struct(payload.map(processed(_)): _*)
-    val elem = if (needRaw)
-      struct(processed(kraw).as(kraw), docStruct.as("__graft_lkdoc"))
-    else docStruct
-    // the concise form's equality also folds under an aggregate-level
-    // collation (same Mongo rule as the plain equality form)
-    val conciseFold = graft.query.QueryCompiler.activeCollation.value
-      .filter { _ =>
-        stringTyped(processed, processed(kc)) && stringTyped(df, df(local))
-      }
-    def conciseK(c: Column): Column =
-      conciseFold.map(_.key(c)).getOrElse(c)
-    val grouped = processed.groupBy(conciseK(processed(kc)).as("__lk"))
-      .agg(collect_list(elem).as(as))
-    val joined = df.join(grouped, conciseK(df(local)) === grouped("__lk"),
-        "left_outer")
-      .drop("__lk")
-      .withColumn(as, coalesce(col(as), array()))
-    if (!needRaw) joined
-    else {
-      // rebase bare "$field" refs onto the element's raw-doc sidecar so
-      // the correlated predicate evaluates per collected element
-      def rebase(e: Any): Any = e match {
-        case s: String if s.startsWith("$$") => s
-        case s: String if s.startsWith("$") => "$$__lkdoc." + s.drop(1)
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-          .map { case (k, v) => k -> rebase(v) }
-        case s: Seq[_] => s.map(rebase)
-        case other => other
-      }
-      val letEnv: Map[String, Column] =
-        letDoc.map { case (v, e) => v -> expr2col(e) }
-      val preds = sub.filter(usesLet).map(st => rebase(doc(st.head._2)("$expr")))
-      joined
-        .withColumn(as, filter(col(as), x => preds.map(p =>
-          expr2col(p, letEnv ++ Map(
-            "__lkdoc" -> x.getField(kraw),
-            "ROOT" -> x.getField(kraw),
-            "CURRENT" -> x.getField(kraw)))).reduce(_ && _)))
-        .withColumn(as,
-          transform(col(as), x => x.getField("__graft_lkdoc")))
-    }
-  }
+    val payload = struct(processed.columns.filterNot(reserved.contains)
+      .map(processed(_)).toSeq: _*)
+    val elem = if (corr.isEmpty) payload
+      else struct(processed(raw).as(raw), payload.as("__graft_lkdoc"))
 
-  private def lookupPipeline(df: DataFrame, d: Map[String, Any],
-      tables: TableResolver): DataFrame = {
-    val from = tables(d("from").toString)
-    val as = d("as").toString
-    val lets: Map[String, Column] = d.get("let").map(doc)
-      .getOrElse(Map.empty).map { case (v, e) => v -> expr2col(e) }
-    val sub = pipelineSeq(d("pipeline"))
-    require(sub.nonEmpty && sub.head.keySet == Set("$match"),
-      "$lookup pipeline form: first stage must be the correlated $match")
-    val exprDoc = doc(sub.head("$match")).getOrElse("$expr",
-      throw new IllegalArgumentException(
-        "$lookup pipeline form: correlated $match must use $expr"))
-    // (outer key expr, from-side key expr) pairs from $eq / $and-of-$eq
-    val eqs: Seq[(Column, Column)] = {
-      def one(m: Map[String, Any]): (Column, Column) = m.toSeq match {
-        case Seq(("$eq", args: Seq[_])) =>
-          val sides = args.map {
-            case s: String if s.startsWith("$$") =>
-              Left(lets.getOrElse(s.drop(2), throw new IllegalArgumentException(
-                s"$$lookup: unbound let variable $s")))
-            case s: String if s.startsWith("$") => Right(col(s.drop(1)))
-            case other => throw new IllegalArgumentException(
-              s"$$lookup correlated $$eq side: $other")
-          }
-          (sides.collect { case Left(c) => c },
-            sides.collect { case Right(c) => c }) match {
-            case (Seq(o), Seq(f)) => (o, f)
-            case _ => throw new IllegalArgumentException(
-              "$lookup: each $eq must pair one $$var with one $from-field")
-          }
-        case other => throw new IllegalArgumentException(
-          s"$$lookup correlated condition must be $$eq: $other")
-      }
-      doc(exprDoc).toSeq match {
-        case Seq(("$and", cs: Seq[_])) => cs.map(c => one(doc(c)))
-        case _ => Seq(one(doc(exprDoc)))
-      }
+    // key folds: array membership (localField forms) and the collation
+    def typeOf(dfx: DataFrame, c: Column): DataType =
+      dfx.select(c).schema.head.dataType
+    def isArray(dfx: DataFrame, c: Column) =
+      membership && typeOf(dfx, c).isInstanceOf[ArrayType]
+    def keyType(dfx: DataFrame, c: Column) = typeOf(dfx, c) match {
+      case ArrayType(e, _) if membership => e
+      case t => t
     }
-    val rest = sub.tail
-    require(!rest.exists(_.toString.contains("$$")),
-      "$lookup pipeline form: only the first $match may be correlated")
-    // derive the join keys BEFORE the row-local stages so a $project can't
-    // drop them; include-style $project is rewritten to retain them
-    val keyCols = eqs.indices.map(i => s"__lk$i")
-    val keyed = eqs.zipWithIndex.foldLeft(from) {
-      case (f, ((_, fk), i)) => f.withColumn(s"__lk$i", fk) }
-    val processed = rest.foldLeft(keyed) { (acc, st) =>
-      val allowed = Set("$match", "$project", "$addFields", "$set", "$unset")
-      require(st.size == 1 && allowed(st.head._1),
-        s"$$lookup pipeline form: row-local stages only, got ${st.head._1}")
-      stage(acc, retainKeys(st, keyCols), tables)
+    val collation = QueryCompiler.activeCollation.value
+    val folds: Seq[Column => Column] = keys.map { case (ok, fk) =>
+      collation.filter(_ => keyType(df, ok) == StringType &&
+          keyType(from, fk) == StringType)
+        .map(sp => (c: Column) => sp.key(c)).getOrElse((c: Column) => c)
     }
-    val payload = processed.columns.filterNot(keyCols.contains).toSeq
-    val grouped = processed.groupBy(keyCols.map(processed(_)): _*)
-      .agg(collect_list(struct(payload.map(processed(_)): _*)).as(as))
-    val cond = eqs.zipWithIndex.map { case ((ok, _), i) =>
-      ok === grouped(s"__lk$i") }.reduce(_ && _)
-    df.join(grouped, cond, "left_outer").drop(keyCols: _*)
-      .withColumn(as, coalesce(col(as), array()))
+    // fold each array element BEFORE the distinct: two binary-distinct
+    // but collation-EQUAL elements ("Red"/"red") must collapse to one
+    // key, or the matched doc would appear twice (Mongo: once per doc)
+    def distinctKeys(arr: Column): Column =
+      array_distinct(transform(arr, e => folds.head(e)))
+    val localArray = isArray(df, keys.head._1)
+    val foreignArray = isArray(from, keys.head._2)
+    // an array foreignField: one key row per distinct element, so each
+    // foreign doc lands in every key group it belongs to
+    val right = processed.select(keyCols.zip(folds).map { case (k, f) =>
+      (if (foreignArray) explode(distinctKeys(processed(k)))
+       else f(processed(k))).as(k) } :+ elem.as(as): _*)
+    def on(r: DataFrame): Column = keys.zip(keyCols).zip(folds)
+      .map { case (((ok, _), k), f) => f(ok) === r(k) }.reduce(_ && _)
+
+    // the correlated predicates, over one collected element
+    def rebase(e: Any): Any = e match {
+      case s: String if s.startsWith("$$") => s
+      case s: String if s.startsWith("$") => "$$__lkdoc." + s.drop(1)
+      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
+        .map { case (k, v) => k -> rebase(v) }
+      case s: Seq[_] => s.map(rebase)
+      case other => other
+    }
+    val letEnv = let.map { case (v, e) => v -> expr2col(e) }
+    def admits(x: Column): Column = corr.map { st =>
+      val r = x.getField(raw)
+      expr2col(rebase(doc(st.head._2)("$expr")), letEnv ++
+        Map("__lkdoc" -> r, "ROOT" -> r, "CURRENT" -> r))
+    }.reduce(_ && _)
+    def admitted(r: DataFrame, cond: Column): Column =
+      if (corr.isEmpty) cond else cond && admits(r(as))
+    def docOf(x: Column): Column = x.getField("__graft_lkdoc")
+    def unwrapped(d: DataFrame): DataFrame =
+      if (corr.isEmpty) d else d.withColumn(as, docOf(col(as)))
+
+    def gather(d: DataFrame, by: Seq[String]): DataFrame =
+      d.groupBy(by.map(col): _*).agg(collect_list(col(as)).as(as))
+    def grouped: DataFrame = {
+      val joined = if (localArray) {
+        // The matched array per outer row: explode the outer row's
+        // DISTINCT elements, equi-join, re-aggregate per row. The row
+        // id fans out into a self-join (exploded side vs outer side).
+        // monotonically_increasing_id is nondeterministic across
+        // re-evaluations once an upstream shuffle makes partition order
+        // unstable — the two sides could assign DIFFERENT ids to the
+        // same logical row and rows would silently get the wrong
+        // lookup array. Freeze the ids eagerly (same stance as
+        // $graphLookup's __gid). sort_array gives a deterministic order
+        // (Mongo specifies none); skewSalt does not apply here.
+        val df2 = graft.ops.Checkpoints.truncate(
+          df.withColumn("__rid", monotonically_increasing_id()))
+        // when BOTH sides are arrays a foreign doc reachable through two
+        // shared elements matches twice — dedup by value then (Mongo
+        // returns each matching doc once; full-duplicate foreign docs
+        // collapsing under value identity is the documented columnar
+        // stance — there is no row identity to distinguish them)
+        val matched = gather(df2
+          .select(col("__rid"), explode(distinctKeys(keys.head._1)).as("__el"))
+          .join(right, col("__el") === right(keyCols.head)), Seq("__rid"))
+          .withColumn(as, sort_array(
+            if (foreignArray) array_distinct(col(as)) else col(as)))
+        df2.join(matched, Seq("__rid"), "left_outer").drop("__rid")
+      } else {
+        val g = gather(right, keyCols)
+        // spark.graft.skewSalt opt-in (> 1): a hot outer key would land
+        // every matching outer row on ONE join task (the grouped right
+        // side is one row per key). Salting scatters outer rows over
+        // `salt` buckets and replicates the matching right row per
+        // bucket (Skew.saltedJoin shape) — complements AQE's runtime
+        // skew splitting for the known-hot-key case.
+        // "auto" = let the engine decide: with AQE skew-join on, the
+        // runtime split handles the hot key better than static salting
+        // in every measured configuration (ScaleProbe saltlookup, 40M
+        // rows 90% hot: 4.9 s unsalted+AQE vs 6.9 s hand-salt 8 vs
+        // 10.5 s always-salt-auto — replication overhead exceeds the
+        // spread gain), so auto defers. Only when AQE is disabled does
+        // the sketch (Skew.autoSalt) size a static salt — there a
+        // cluster-scale hot task has no other spread.
+        val conf = df.sparkSession.conf
+        val saltN = conf.getOption("spark.graft.skewSalt") match {
+          case Some("auto") =>
+            val aqeSkew =
+              conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&
+              conf.get("spark.sql.adaptive.skewJoin.enabled", "true").toBoolean
+            if (aqeSkew) 0 else graft.ops.Skew.autoSalt(df, keys.head._1)
+          case Some(s) => s.toInt
+          case None => 0
+        }
+        if (saltN > 1) {
+          // deterministic per-row salt (hash of the full payload, not
+          // monotonically_increasing_id) so task retries re-salt
+          // identically
+          val sl = df.withColumn("__sl",
+            graft.ops.Skew.deterministicSalt(df, saltN))
+          val sr = g.withColumn("__sr",
+            explode(sequence(lit(0), lit(saltN - 1))))
+          sl.join(sr, on(sr) && sl("__sl") === sr("__sr"), "left_outer")
+            .drop(keyCols :+ "__sl" :+ "__sr": _*)
+        } else df.join(g, on(g), "left_outer").drop(keyCols: _*)
+      }
+      val all = joined.withColumn(as, coalesce(col(as), array()))
+      if (corr.isEmpty) all
+      else all.withColumn(as, transform(filter(col(as), admits(_)), docOf(_)))
+    }
+
+    shape match {
+      case Grouped => grouped
+      case Unwound(false) if localArray && !foreignArray =>
+        // one output row per (outer row, matched foreign doc): explode
+        // the DISTINCT elements straight into the equi-join, no regroup
+        // (with an array foreignField too this would double-count a doc
+        // reachable through two shared elements — grouped path)
+        unwrapped(df
+          .select(col("*"), explode(distinctKeys(keys.head._1)).as("__el"))
+          .join(right, admitted(right, col("__el") === right(keyCols.head)))
+          .drop(keyCols :+ "__el": _*))
+      case Unwound(preserve) if localArray =>
+        // grouped (dedups multi-element matches), then unwind: a naive
+        // exploded left join would fabricate a null row PER unmatched
+        // element in the preserving case
+        grouped.withColumn(as,
+          if (preserve) explode_outer(col(as)) else explode(col(as)))
+      case Unwound(preserve) =>
+        unwrapped(df.join(right, admitted(right, on(right)),
+          if (preserve) "left_outer" else "inner").drop(keyCols: _*))
+    }
   }
 
   /** `$graphLookup` — recursive graph traversal. Spark-first shape: BFS as

@@ -113,6 +113,33 @@ object Tables {
     out.write.mode(mode).partitionBy(partCol).parquet(path)
   }
 
+  /** Replaces the table at `path` with `df` without ever losing it —
+    * the one table swap (`$out`, `$merge`, migration write-back). `df` is
+    * written to `<path>.tmp`; `fence` runs (a migration's lease check);
+    * the old table steps aside to `<path>.bak`; the tmp is renamed in;
+    * `.bak` is deleted unless `keepBackup`. Every step is a rename, so
+    * the old table survives a failure anywhere: a failed rename in moves
+    * it back here, and a crash between the renames leaves it at `.bak`
+    * (MigrationApp rolls that back before its next write). */
+  def replace(df: DataFrame, path: String, keepBackup: Boolean = false,
+      fence: () => Unit = () => ()): Unit = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val tmp = new Path(path + ".tmp")
+    val bak = new Path(path + ".bak")
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"could not rename $from to $to")
+    df.write.mode("overwrite").parquet(tmp.toString)
+    fence()
+    if (fs.exists(bak)) fs.delete(bak, true)
+    val moved = fs.exists(p)
+    if (moved) rename(p, bak)
+    try rename(tmp, p)
+    catch { case e: Throwable => if (moved) fs.rename(bak, p); throw e }
+    if (!keepBackup) fs.delete(bak, true)
+  }
+
   /** What the footer Spark's inference reads says about a table: the schema
     * `spark.read.parquet` infers (mergeSchema off, nanos read as longs)
     * and the top-level INT64 TIMESTAMP(NANOS) columns. */

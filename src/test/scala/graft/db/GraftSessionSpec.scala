@@ -337,6 +337,37 @@ class GraftSessionSpec extends SparkSpec {
     assert(out.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
     assert(spark.read.parquet(s"$dir/tgt2.parquet").count() == 1)
   }
+
+  test("$out and $merge keep the target when the swap's rename in fails") {
+    val dir = Files.createTempDirectory("graft-swap").toString
+    Seq((1L, "a"), (2L, "b")).toDF("_id", "cat")
+      .write.parquet(s"$dir/src.parquet")
+    Seq((99L, "old")).toDF("_id", "cat").write.parquet(s"$dir/tgt.parquet")
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.renamefail.impl", classOf[RenameFailFileSystem].getName)
+    try {
+      val src = new GraftSession(spark, s"renamefail://$dir").db("d").c("src")
+      for (sink <- Seq[Map[String, Any]](Map("$out" -> "tgt"),
+          Map("$merge" -> Map("into" -> "tgt", "on" -> "_id")))) {
+        intercept[java.io.IOException](src.pipe(Seq(sink)))
+        assert(spark.read.parquet(s"$dir/tgt.parquet").as[(Long, String)]
+          .collect().toSeq == Seq((99L, "old")), s"target lost by $sink")
+      }
+    } finally hc.unset("fs.renamefail.impl")
+  }
+}
+
+/** The local filesystem under the `renamefail` scheme, whose rename of a
+  * `*.tmp` path fails — the step of a table swap that renames the new
+  * table in. */
+class RenameFailFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("renamefail:///")
+  override def getScheme: String = "renamefail"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (src.getName.endsWith(".tmp"))
+      throw new java.io.IOException(s"rename of $src fails")
+    else super.rename(src, dst)
 }
 
 class BackupSpec extends SparkSpec {

@@ -216,6 +216,33 @@ class MigrationAppSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(lock), "lock released after write")
   }
 
+  test("exclusive create: of racing creators exactly one wins") {
+    // the race itself cannot be forced; this pins the contract the lease
+    // and the ledger lock share: the loser gets an IOException, the
+    // winner's content is the file's
+    val root = freshRoot()
+    val p = new org.apache.hadoop.fs.Path(s"$root/x.lock")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val wins = new java.util.concurrent.atomic.AtomicInteger
+    val threads = (0 until 4).map { i =>
+      val t = new Thread(() => {
+        start.await()
+        try {
+          ExclusiveFile.create(fs, p, s"owner-$i".getBytes("UTF-8"))
+          wins.incrementAndGet()
+        } catch { case _: java.io.IOException => () }
+      })
+      t.start(); t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(wins.get == 1)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/x.lock")), "UTF-8").startsWith("owner-"))
+    intercept[java.io.IOException](ExclusiveFile.create(fs, p))
+  }
+
   test("ledger is a JSON-lines file; record and satisfied launch no job") {
     val root = freshRoot()
     val ledger = new MetadataLedger(spark, s"$root/ledger")

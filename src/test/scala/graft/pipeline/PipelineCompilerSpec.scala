@@ -588,6 +588,116 @@ class PipelineCompilerSpec extends SparkSpec {
     assert(e2.getMessage.contains("precede shaping"))
   }
 
+  // $lookup parity table: every spelling × (grouped, + $unwind,
+  // + preserving $unwind) × (no collation, strength-2 collation). The
+  // reference for the unwound shapes is the grouped $lookup followed by
+  // an $unwind with includeArrayIndex, which is never fused; the
+  // expected matches pin the reference itself.
+  private def lkOuter = Seq(
+    (1L, "a", Seq("a", "B"), 40),
+    (2L, "A", Seq("b"), 6),
+    (3L, "c", Seq.empty[String], 100),
+    (4L, "b", Seq("A", "a"), 100)).toDF("id", "k", "ks", "cap")
+  private def lkForeign = Seq(
+    (10L, "a", Seq("a", "b"), 5),
+    (11L, "A", Seq("A"), 50),
+    (12L, "b", Seq("c"), 7),
+    (13L, "B", Seq("b", "B"), 30)).toDF("fid", "k", "ks", "qty")
+  private val shaping = Seq(
+    Map("$match" -> Map("qty" -> Map("$lt" -> 40))),
+    Map("$project" -> Map("fid" -> 1)))
+  // (form, $lookup spec, outer id -> matched fids: plain, collated)
+  private val lookupForms: Seq[(String, Map[String, Any],
+      Map[Long, Seq[Long]], Map[Long, Seq[Long]])] = Seq(
+    ("equality",
+      Map("localField" -> "k", "foreignField" -> "k"),
+      Map(1L -> Seq(10L), 2L -> Seq(11L), 4L -> Seq(12L)),
+      Map(1L -> Seq(10L, 11L), 2L -> Seq(10L, 11L), 4L -> Seq(12L, 13L))),
+    ("array localField",
+      Map("localField" -> "ks", "foreignField" -> "k"),
+      Map(1L -> Seq(10L, 13L), 2L -> Seq(12L), 4L -> Seq(10L, 11L)),
+      Map(1L -> Seq(10L, 11L, 12L, 13L), 2L -> Seq(12L, 13L),
+        4L -> Seq(10L, 11L))),
+    ("array foreignField",
+      Map("localField" -> "k", "foreignField" -> "ks"),
+      Map(1L -> Seq(10L), 2L -> Seq(11L), 3L -> Seq(12L),
+        4L -> Seq(10L, 13L)),
+      Map(1L -> Seq(10L, 11L), 2L -> Seq(10L, 11L), 3L -> Seq(12L),
+        4L -> Seq(10L, 13L))),
+    ("concise",
+      Map("localField" -> "k", "foreignField" -> "k", "pipeline" -> shaping),
+      Map(1L -> Seq(10L), 4L -> Seq(12L)),
+      Map(1L -> Seq(10L), 2L -> Seq(10L), 4L -> Seq(12L, 13L))),
+    ("concise + let",
+      Map("localField" -> "k", "foreignField" -> "k",
+        "let" -> Map("cap" -> "$cap"),
+        "pipeline" -> Seq(
+          Map("$match" -> Map("$expr" ->
+            Map("$lt" -> Seq("$qty", "$$cap")))),
+          Map("$project" -> Map("fid" -> 1)))),
+      Map(1L -> Seq(10L), 4L -> Seq(12L)),
+      Map(1L -> Seq(10L), 2L -> Seq(10L), 4L -> Seq(12L, 13L))),
+    ("pipeline",
+      Map("let" -> Map("lk" -> "$k"),
+        "pipeline" -> (Map("$match" -> Map("$expr" ->
+          Map("$eq" -> Seq("$k", "$$lk")))) +: shaping)),
+      Map(1L -> Seq(10L), 4L -> Seq(12L)),
+      Map(1L -> Seq(10L), 2L -> Seq(10L), 4L -> Seq(12L, 13L))),
+    ("pipeline + let-correlated $match",
+      Map("let" -> Map("lk" -> "$k", "cap" -> "$cap"),
+        "pipeline" -> Seq(
+          Map("$match" -> Map("$expr" -> Map("$eq" -> Seq("$k", "$$lk")))),
+          Map("$match" -> Map("$expr" ->
+            Map("$lt" -> Seq("$qty", "$$cap")))),
+          Map("$project" -> Map("fid" -> 1)))),
+      Map(1L -> Seq(10L), 4L -> Seq(12L)),
+      Map(1L -> Seq(10L), 2L -> Seq(10L), 4L -> Seq(12L, 13L))))
+
+  for ((form, spec, plainWant, collWant) <- lookupForms;
+       collated <- Seq(false, true)) {
+    test(s"$$lookup parity: $form, " +
+        (if (collated) "strength-2 collation" else "no collation")) {
+      val lk = Map("$lookup" ->
+        (spec ++ Map("from" -> "f", "as" -> "m")))
+      def run(stages: Map[String, Any]*) =
+        graft.query.QueryCompiler.activeCollation.withValue(
+          if (collated) Some(graft.query.Collation.parse(
+            Map("locale" -> "en", "strength" -> 2))) else None) {
+          PipelineCompiler.compile(stages, tables = _ => lkForeign)(lkOuter)
+        }
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.select($"id", $"m.fid").as[(Long, Option[Long])]
+          .collect().toSeq.sorted
+      def unwindRef(preserve: Boolean) = pairs(run(lk,
+        Map("$unwind" -> Map("path" -> "$m", "includeArrayIndex" -> "i",
+          "preserveNullAndEmptyArrays" -> preserve))).drop("i"))
+      val want = if (collated) collWant else plainWant
+      val wantPairs = want.toSeq
+        .flatMap { case (id, fs) => fs.map(f => (id, Option(f))) }.sorted
+      val grouped = run(lk)
+        .select($"id", expr("sort_array(transform(m, x -> x.fid))"))
+        .as[(Long, Seq[Long])].collect().toMap
+      assert(grouped == (1L to 4L).map(i =>
+        i -> want.getOrElse(i, Nil)).toMap)
+      assert(unwindRef(false) == wantPairs)
+      assert(pairs(run(lk, Map("$unwind" -> "$m"))) == wantPairs)
+      val preserved = (wantPairs ++ (1L to 4L).filterNot(want.contains)
+        .map(i => (i, Option.empty[Long]))).sorted
+      assert(unwindRef(true) == preserved)
+      assert(pairs(run(lk, Map("$unwind" -> Map("path" -> "$m",
+        "preserveNullAndEmptyArrays" -> true)))) == preserved)
+    }
+  }
+
+  test("$__lookupUnwind is not a user stage") {
+    val e = intercept[IllegalArgumentException] {
+      PipelineCompiler.compile(Seq(Map("$__lookupUnwind" -> Map(
+          "from" -> "f", "localField" -> "k", "foreignField" -> "k",
+          "as" -> "m"))), tables = _ => lkForeign)(lkOuter)
+    }
+    assert(e.getMessage.contains("unsupported pipeline stage"))
+  }
+
   test("spark.graft.skewSalt: salted plans return identical results") {
     val d = Seq((1L, "a", 5L), (2L, "a", 7L), (3L, "b", 1L), (4L, "a", 2L))
       .toDF("_id", "k", "v")
