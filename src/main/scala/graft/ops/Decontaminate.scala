@@ -324,13 +324,10 @@ object Decontaminate {
     import graft.functions.VectorFunctions.vec_dot
     require(threshold > 0.0 && threshold <= 1.0,
       s"semantic decontamination: threshold in (0, 1], got $threshold")
-    require(Seq("id", "t", "bkt").forall(benchBuckets.columns.contains),
-      "semanticPrecomputed: benchBuckets needs (id, t, bkt) — a " +
-        "Dedup.vectorBucketSignatures frame; got " +
-        benchBuckets.columns.mkString("(", ", ", ")"))
     val d = if (dim > 0) dim
       else Similarity.probeDim(corpus, corpusVec).getOrElse(1)
-    Dedup.requireStoreParams(benchBuckets, "semanticPrecomputed",
+    Dedup.requireStore(benchBuckets, "semanticPrecomputed",
+      "Dedup.vectorBucketSignatures", Seq("id", "t", "bkt"),
       "p_tables" -> tables, "p_planes" -> nPlanes, "p_dim" -> d)
     val c = corpus.select(col(corpusId).as("__c_id"),
       col(corpusVec).as("__cv"))

@@ -10,6 +10,14 @@ import TextFunctions._
   * scale: hash-partitioned group-bys and shingle/band bucket joins — never
   * a raw O(n²) cross join on the full corpus. The quadratic work only
   * happens inside candidate buckets.
+  *
+  * Three pair cores: [[passJoin]] (edit distance), [[groupedPairScan]]
+  * (embedding near-dup in buckets or blocks, semDeDup) and [[bandJoin]]
+  * (MinHash bands, SimHash/perceptual-hash chunks, the embedding store).
+  * Every face checks its candidate volume first, in [[candidateValve]]:
+  * `spark.graft.jaccard.maxCandidatePairs` guards exact n-gram Jaccard
+  * and the MinHash and Hamming bands, `spark.graft.embed.maxCandidatePairs`
+  * the embedding faces, `spark.graft.editdist.maxCandidatePairs` PassJoin.
   */
 object Dedup {
 
@@ -17,6 +25,12 @@ object Dedup {
     * assert it fires (same pattern as PipelineCompiler.scaleWarnSink). */
   @volatile private[graft] var denseWarnSink: String => Unit = msg =>
     org.apache.log4j.Logger.getLogger(Dedup.getClass).warn(msg)
+
+  private val JaccardValve = "spark.graft.jaccard.maxCandidatePairs"
+  private val EmbedValve = "spark.graft.embed.maxCandidatePairs"
+  private val BandKeys = Seq("band", "sig")
+  private val ChunkKeys = Seq("chunk", "key")
+  private val BucketKeys = Seq("t", "bkt")
 
   /** Frames persisted by the operators below (shingle/signature subplans
     * that would otherwise recompute once per self-join side). They are
@@ -92,6 +106,64 @@ object Dedup {
                 "parameters, or call with the store's.")
           }
         }
+    }
+  }
+
+  /** [[requireStoreParams]] after checking that `store`, a `builder`
+    * frame, carries `cols`. */
+  private[ops] def requireStore(store: DataFrame, face: String,
+      builder: String, cols: Seq[String], expected: (String, Int)*): Unit = {
+    require(cols.forall(store.columns.contains), s"$face: the store needs " +
+      s"${cols.mkString("(", ", ", ")")} — a $builder frame; got " +
+      store.columns.mkString("(", ", ", ")"))
+    requireStoreParams(store, face, expected: _*)
+  }
+
+  /** (keys…, __n): rows of `df` per key, [[candidateValve]]'s input. */
+  private def keyCounts(df: DataFrame, keys: Seq[String]): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+
+  /** Does `df`, holding `perId` rows per id, hold at most n ids? One
+    * bounded `limit` job, never a full count. */
+  private def idsAtMost(df: DataFrame, perId: Int): Long => Boolean = n => {
+    val rows = n * perId
+    rows < Int.MaxValue - 1 && df.limit(rows.toInt + 1).count() <= rows
+  }
+
+  /** The one pre-join candidate-volume valve, `valveKey` (default 2e9;
+    * 0 disables). One hot key makes a key-equi-join quadratic, so the
+    * volume is measured eagerly from [[keyCounts]] frames — Σ n·(n−1)/2
+    * over `index` (self-join), or Σ n_i·n_p with a `probe` — and the
+    * call fails fast, naming `face` and `remedy`, before any join job.
+    * At most `perPair` candidate rows meet per id pair, so when every
+    * `sized` check (an [[idsAtMost]] probe or a count in hand) holds
+    * for the largest id count per side whose worst case stays within
+    * the valve, the estimate is skipped. */
+  private def candidateValve(face: String, valveKey: String,
+      remedy: String, keys: Seq[String], index: DataFrame,
+      probe: Option[DataFrame], perPair: Double = 1,
+      sized: Seq[Long => Boolean] = Nil): Unit = {
+    val max = index.sparkSession.conf.getOption(valveKey)
+      .map(_.toLong).getOrElse(2000000000L)
+    val self = probe.isEmpty
+    def bound(n: Long): Double =
+      if (self) perPair * n * (n - 1) / 2 else perPair * n * n
+    def provablySmall: Boolean = {
+      // the largest per-side id count whose worst case fits the valve
+      var safeN = math.sqrt(max / perPair * (if (self) 2 else 1)).toLong + 1
+      while (safeN > 0 && bound(safeN) > max) safeN -= 1
+      sized.nonEmpty && safeN > 0 && sized.forall(_(safeN))
+    }
+    if (max > 0 && !provablySmall) {
+      val n = col("__n").cast("double")
+      val vol = (probe match {
+        case None => index.agg(sum(n * (n - 1) / 2))
+        case Some(p) => index.join(p.withColumnRenamed("__n", "__np"), keys)
+          .agg(sum(n * col("__np")))
+      }).head().getAs[java.lang.Double](0)
+      if (vol != null && vol > max) throw new IllegalStateException(
+        f"$face: candidate volume ${vol.doubleValue}%.3g exceeds " +
+          s"$valveKey=$max — $remedy")
     }
   }
 
@@ -229,30 +301,16 @@ object Dedup {
     val obsOpt =
       if (maxShingleFreq != 0) Some(org.apache.spark.sql.Observation())
       else None
-    // spark.graft.jaccard.maxCandidatePairs: PRE-JOIN volume valve, ON
-    // BY DEFAULT (2e9; 0 disables), and it guards BOTH branches —
-    // maxShingleFreq = 0 keeps every stop-shingle, the configuration
-    // most prone to the blowup. In a saturated shingle space the
-    // self-join's candidate volume grows ~quadratically with the corpus
-    // (measured twice: the round-8 100x rehearsal produced ~3e11
-    // candidates and filled a 72 GB disk; the round-12 regenerated
-    // corpus died the same way at 5.3e9 candidates × ~24 B of join
-    // spill each on a 73 GB-free box — with the valve unset, nothing
-    // stood between the async density warning and the disk-full crash).
-    // The warning only fires when the query ENDS — too late — so the
-    // frequency aggregate runs EAGERLY (one cheap count-by-shingle job
-    // over the persisted narrow (id, hash) frame) and the job fails
-    // FAST with the named remedies.
-    val maxCand = df.sparkSession.conf
-      .getOption("spark.graft.jaccard.maxCandidatePairs")
-      .map(_.toLong).getOrElse(2000000000L)
-    def candidateValve(cand: Double): Unit =
-      if (cand > maxCand) throw new IllegalStateException(
-        f"ngramJaccardPairs: candidate volume $cand%.3g exceeds " +
-          s"spark.graft.jaccard.maxCandidatePairs=$maxCand — the " +
-          "shingle space is too dense for an exact all-pairs join " +
+    // the valve guards BOTH branches (maxShingleFreq = 0 keeps every
+    // stop-shingle): a saturated shingle space grows the self-join
+    // ~quadratically (100x rehearsals filled a disk at 3e11 and 5.3e9
+    // candidates), and the async density warning fires too late
+    def valve(counts: DataFrame): Unit =
+      candidateValve("ngramJaccardPairs", JaccardValve,
+        "the shingle space is too dense for an exact all-pairs join " +
           "at this scale. Use minhashLshPairs for near-dup " +
-          "candidates, lower maxShingleFreq, or raise the valve.")
+          "candidates, lower maxShingleFreq, or raise the valve.",
+        Seq("sh"), counts, None)
     // set in the capped branch: the persisted per-shingle frequency
     // frame, released with the other supports once `out` materializes
     var freqCache: Option[DataFrame] = None
@@ -323,25 +381,16 @@ object Dedup {
                   "near-dup candidates or lower maxShingleFreq.")
           }
         }(scala.concurrent.ExecutionContext.global)
-        if (maxCand > 0) {
-          // the valve aggregates over the PERSISTED frequency frame (not
-          // the observed plan — the Observation must fire exactly once,
-          // on the main query), materializing the cache the main query's
-          // filter join then reuses
-          candidateValve(freqP
-            .where(col("df") <= col("__cap"))
-            .agg(coalesce(sum(col("df").cast("double") *
-              (col("df") - 1) / 2), lit(0.0)).as("cand")).head()
-            .getDouble(0))
-        }
+        // the valve aggregates over the PERSISTED frequency frame (not
+        // the observed plan — the Observation must fire exactly once,
+        // on the main query), materializing the cache the main query's
+        // filter join then reuses
+        valve(freqP.where(col("df") <= col("__cap"))
+          .select(col("sh"), col("df").as("__n")))
         sh.join(freq.where(col("df") <= col("__cap")).select("sh"), "sh")
       } else {
-        if (maxCand > 0)
-          // uncapped branch: the SAME volume aggregate, no cap filter
-          candidateValve(sh.groupBy("sh").agg(count(lit(1)).as("df"))
-            .agg(coalesce(sum(col("df").cast("double") *
-              (col("df") - 1) / 2), lit(0.0)).as("cand")).head()
-            .getDouble(0))
+        // uncapped branch: the SAME volume aggregate, no cap filter
+        valve(keyCounts(sh, Seq("sh")))
         sh
       }
     ).persist()) // reused by sizes + both self-join sides: 3 consumers
@@ -399,24 +448,74 @@ object Dedup {
     * the cross-frame join ([[minhashLshPairsBetween]]) both resolve
     * here, so precomputed reference signatures can never drift from
     * the format the delta side hashes with. */
-  private def bandFrame(sigs: DataFrame, numPerms: Int, bands: Int,
-      idAs: String): DataFrame = {
+  private def bandFrame(sigs: DataFrame, numPerms: Int, bands: Int)
+      : DataFrame = {
     val rows = numPerms / bands
     val bandStructs = (0 until bands).map { b =>
       val sigCols = (0 until rows).map(r => col(s"mh${b * rows + r}"))
       struct(lit(b).as("band"),
         concat_ws(",", sigCols.map(_.cast("string")): _*).as("sig"))
     }
-    sigs.select(col("id").as(idAs),
-      explode(array(bandStructs: _*)).as("bs"))
-      .select(col(idAs), col("bs.band").as("band"),
-        col("bs.sig").as("sig"))
+    sigs.select(col("id"), explode(array(bandStructs: _*)).as("bs"))
+      .select(col("id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
+
+  /** A [[bandJoin]] side: (id, keys… [, simhash]) `rows`, and the
+    * persisted or saved frame they come from (`perId` rows per id),
+    * which the valve probes so the join then reads the filled cache. */
+  private final case class BandSide(rows: DataFrame, sized: DataFrame,
+      perId: Int)
+
+  /** The one band-join core of the MinHash, Hamming and embedding
+    * store faces, after the [[candidateValve]] (`perPair` = bands,
+    * chunks or tables): ONE equi-join of `index` and `probe` rows on
+    * `keys` — a self-join keeping `id_i < id_p` without a `probe`. With
+    * `maxHamming` the `simhash` verify runs BEFORE the pair exchange and
+    * each id pair keeps its minimum `hamming` (an id may carry several
+    * fingerprints); otherwise one distinct. Output (id_i, id_p
+    * [, hamming]). */
+  private def bandJoin(face: String, index: BandSide,
+      probe: Option[BandSide], keys: Seq[String], perPair: Int,
+      valveKey: String, remedy: String,
+      maxHamming: Option[Int] = None): DataFrame = {
+    candidateValve(face, valveKey, remedy, keys,
+      keyCounts(index.rows, keys), probe.map(p => keyCounts(p.rows, keys)),
+      perPair, (index +: probe.toSeq).map(s => idsAtMost(s.sized, s.perId)))
+    def side(s: BandSide, as: String): DataFrame = s.rows.select(
+      (col("id").as(s"id_$as") +: keys.map(col)) ++
+        maxHamming.map(_ => col("simhash").as(s"h_$as")): _*)
+    val joined = side(index, "i")
+      .join(side(probe.getOrElse(index), "p"), keys)
+    val cand =
+      if (probe.isEmpty) joined.where(col("id_i") < col("id_p")) else joined
+    maxHamming match {
+      case Some(m) =>
+        cand.select(col("id_i"), col("id_p"),
+            expr("bit_count(h_i ^ h_p)").as("hamming"))
+          .where(col("hamming") <= m)
+          .groupBy("id_i", "id_p").agg(min("hamming").as("hamming"))
+      case None => cand.select("id_i", "id_p").distinct()
+    }
+  }
+
+  private val MinhashRemedy = "one band signature is shared by too " +
+    "many documents (boilerplate or templated pages). Drop exact " +
+    "duplicates and boilerplate first (exact, removeBoilerplateLines), " +
+    "use more rows per band (numPerms/bands), or raise the valve (0 " +
+    "disables)."
+
+  /** The MinHash self face on [[bandJoin]]: the persisted signature
+    * frame, banded, joined with itself. Output (id_a, id_b). */
+  private def minhashSelf(face: String, sigs: DataFrame, numPerms: Int,
+      bands: Int): DataFrame =
+    bandJoin(face, BandSide(bandFrame(sigs, numPerms, bands), sigs, 1),
+      None, BandKeys, bands, JaccardValve, MinhashRemedy)
+      .select(col("id_i").as("id_a"), col("id_p").as("id_b"))
 
   /** MinHash + LSH candidate pairs: signatures are split into `bands`
     * bands of numPerms/bands rows; docs sharing any band signature become
-    * candidates. The band join is a shuffle on the band key — the classic
-    * sub-quadratic near-dup plan for 100 TB corpora.
+    * candidates. The band join ([[bandJoin]]) is a shuffle on the band
+    * key — the classic sub-quadratic near-dup plan for 100 TB corpora.
     *
     * Plan shape matters: signatures are persisted (computing them costs a
     * text scan + an aggregate; without the persist the band self-join
@@ -429,13 +528,7 @@ object Dedup {
     require(numPerms % bands == 0, "numPerms must be divisible by bands")
     val sigs = tracked(
       minhashSignatures(df, idCol, textCol, k, numPerms).persist())
-    val banded = bandFrame(sigs, numPerms, bands, "id")
-    autoRelease(banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct(), sigs)
+    autoRelease(minhashSelf("minhashLshPairs", sigs, numPerms, bands), sigs)
   }
 
   /** LSH candidate pairs WITH the signature-agreement similarity
@@ -447,7 +540,7 @@ object Dedup {
     * estimate's stderr is √(J(1-J)/numPerms) — raise numPerms for a
     * tighter threshold, the cost is one wider aggregate.
     *
-    * Shape at 100 TB: the [[minhashLshPairs]] band equi-join yields
+    * Shape at 100 TB: the [[minhashLshPairs]] band join yields
     * candidate ids; the persisted signature frame joins back narrow
     * (two hash joins on id) — no text re-scan, no pairwise vector
     * shuffle. est_jaccard is decimal-rounded (18,9) for oracle
@@ -458,13 +551,7 @@ object Dedup {
     require(numPerms % bands == 0, "numPerms must be divisible by bands")
     val sigs = tracked(
       minhashSignatures(df, idCol, textCol, k, numPerms).persist())
-    val banded = bandFrame(sigs, numPerms, bands, "id")
-    val pairs = banded.as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
+    val pairs = minhashSelf("minhashJaccardEstimate", sigs, numPerms, bands)
     val sa = sigs.select(col("id").as("id_a") +:
       (0 until numPerms).map(i => col(s"mh$i").as(s"__a$i")): _*)
     val sb = sigs.select(col("id").as("id_b") +:
@@ -491,14 +578,17 @@ object Dedup {
     * Plan shape at 100 TB: band signatures from one struct-explode
     * pass per side, candidates meet on the (band, sig) equi-join —
     * the delta side is small, so AQE broadcasts it and the reference
-    * corpus never shuffles. Output: distinct (new_id, ref_id); rows
-    * whose new_id never appears are novel documents. */
+    * corpus never shuffles. The reference bands are persisted (the
+    * valve probe fills the cache). Output: distinct (new_id, ref_id);
+    * rows whose new_id never appears are novel documents. */
   def minhashLshPairsBetween(newDf: DataFrame, refDf: DataFrame,
       idCol: String, textCol: String, k: Int = 3, numPerms: Int = 12,
-      bands: Int = 4): DataFrame =
-    minhashLshPairsBetweenPrecomputed(newDf,
-      minhashBandSignatures(refDf, idCol, textCol, k, numPerms, bands),
-      idCol, textCol, k, numPerms, bands)
+      bands: Int = 4): DataFrame = {
+    val ref = tracked(minhashBandSignatures(refDf, idCol, textCol, k,
+      numPerms, bands).persist())
+    autoRelease(minhashLshPairsBetweenPrecomputed(newDf, ref, idCol,
+      textCol, k, numPerms, bands), ref)
+  }
 
   /** The persistable (id, band, sig [, p_*]) band-signature frame of a corpus
     * — [[minhashLshPairsBetween]]'s reference side, materialized.
@@ -517,7 +607,7 @@ object Dedup {
       bands: Int = 4): DataFrame = {
     require(numPerms % bands == 0, "numPerms must be divisible by bands")
     bandFrame(minhashSignatures(df, idCol, textCol, k, numPerms),
-      numPerms, bands, "id")
+      numPerms, bands)
       .withColumn("p_k", lit(k))
       .withColumn("p_perms", lit(numPerms))
       .withColumn("p_bands", lit(bands))
@@ -525,28 +615,26 @@ object Dedup {
 
   /** CROSS-FRAME MinHash LSH against a PRECOMPUTED reference: the
     * incoming shard hashes here (one scan, same permutation
-    * constants), the reference corpus arrives as a saved
-    * [[minhashBandSignatures]] frame — no reference-side text scan
-    * anywhere in the plan (PlanSpec-pinned). Candidates meet on the
-    * (band, sig) equi-join; the delta side is small, so AQE
-    * broadcasts it and the signature store never shuffles. Output:
-    * distinct (new_id, ref_id). */
+    * constants, signatures persisted), the reference corpus arrives as
+    * a saved [[minhashBandSignatures]] frame — no reference-side text
+    * scan anywhere in the plan (PlanSpec-pinned). Candidates meet on
+    * the [[bandJoin]] (band, sig) equi-join; the delta side is small,
+    * so AQE broadcasts it and the signature store never shuffles.
+    * Output: distinct (new_id, ref_id). */
   def minhashLshPairsBetweenPrecomputed(newDf: DataFrame,
       refBands: DataFrame, idCol: String, textCol: String, k: Int = 3,
       numPerms: Int = 12, bands: Int = 4): DataFrame = {
     require(numPerms % bands == 0, "numPerms must be divisible by bands")
-    require(Seq("id", "band", "sig").forall(refBands.columns.contains),
-      "minhashLshPairsBetweenPrecomputed: refBands needs (id, band, " +
-        s"sig) — a minhashBandSignatures frame; got " +
-        refBands.columns.mkString("(", ", ", ")"))
-    requireStoreParams(refBands, "minhashLshPairsBetweenPrecomputed",
+    requireStore(refBands, "minhashLshPairsBetweenPrecomputed",
+      "minhashBandSignatures", "id" +: BandKeys,
       "p_k" -> k, "p_perms" -> numPerms, "p_bands" -> bands)
-    bandFrame(minhashSignatures(newDf, idCol, textCol, k, numPerms),
-      numPerms, bands, "new_id")
-      .join(refBands.select(col("id").as("ref_id"), col("band"),
-        col("sig")), Seq("band", "sig"))
-      .select("new_id", "ref_id")
-      .distinct()
+    val sigs = tracked(
+      minhashSignatures(newDf, idCol, textCol, k, numPerms).persist())
+    autoRelease(bandJoin("minhashLshPairsBetweenPrecomputed",
+        BandSide(refBands, refBands, bands),
+        Some(BandSide(bandFrame(sigs, numPerms, bands), sigs, 1)),
+        BandKeys, bands, JaccardValve, MinhashRemedy)
+      .select(col("id_p").as("new_id"), col("id_i").as("ref_id")), sigs)
   }
 
   /** THE PassJoin segment format (Li, Deng, Feng — VLDB 2011): every
@@ -631,19 +719,14 @@ object Dedup {
     * them qualifies, and each id pair is output once.
     *
     * Two valves, read here on the driver; each message names `face`:
-    *  - `spark.graft.editdist.maxCandidatePairs` (default 2e9, 0
-    *    disables): shared tails concentrate (l, k, segment) buckets the
-    *    way common prefixes concentrate shingle buckets (a corpus of
-    *    "<anything>-v1" codes puts every same-length string in ONE
-    *    "-v1" bucket), so the exact join volume Σ |seg|·|probe| over
-    *    buckets is measured eagerly from two narrow aggregates and the
-    *    call fails fast with named remedies before the join can spill
-    *    a disk full. When the inputs are provably small — index rows
-    *    <= safeN(d+1) and probe strings <= safeN bound the volume by
-    *    safeN²·(d+1)²(2d+1)² <= the valve — one or two limit probes
-    *    replace the estimate. The self face's probe bound implies its
-    *    index bound (at most d+1 index rows per string), so it probes
-    *    once.
+    *  - `spark.graft.editdist.maxCandidatePairs`, the
+    *    [[candidateValve]]: shared tails concentrate (l, k, segment)
+    *    buckets the way common prefixes concentrate shingle buckets (a
+    *    corpus of "<anything>-v1" codes puts every same-length string
+    *    in ONE "-v1" bucket). The volume is Σ |seg|·|probe| over
+    *    buckets, at most (d+1)²(2d+1)² rows per string pair; index
+    *    strings hold d+1 rows each. The self face's probe bound implies
+    *    its index bound, so it probes once.
     *  - `spark.graft.editdist.shortBucketLimit` (default 10000, 0
     *    disables the valve AND its probes — the branch is then always
     *    planned): both factors of the nested-loop product are probed,
@@ -655,30 +738,16 @@ object Dedup {
       .select(col("id").as("id_i"), col("s").as("s_i"), col("l"),
         col("k"), col("sub"))
     val probe = edProbeFrame(probeBase, d)
-    val maxCand = conf.getOption("spark.graft.editdist.maxCandidatePairs")
-      .map(_.toLong).getOrElse(2000000000L)
-    val worstPerPair = (d + 1).toDouble * (2 * d + 1) * (2 * d + 1) *
-      (d + 1)
-    val safeN = math.sqrt(maxCand.toDouble / worstPerPair).toLong
-    def atMost(df: DataFrame, n: Long): Boolean =
-      n < Int.MaxValue - 1 && df.limit(n.toInt + 1).count() <= n
-    val provablySmall = maxCand > 0 && safeN > 0 &&
-      (self || atMost(index, safeN * (d + 1))) && atMost(probeBase, safeN)
-    if (maxCand > 0 && !provablySmall) {
-      val candVol = segs.groupBy("l", "k", "sub")
-        .agg(count(lit(1)).as("__ns"))
-        .join(probe.groupBy("l", "k", "sub")
-          .agg(count(lit(1)).as("__np")), Seq("l", "k", "sub"))
-        .agg(coalesce(sum(col("__ns").cast("double") * col("__np")),
-          lit(0.0)).as("cand")).head().getDouble(0)
-      if (candVol > maxCand) throw new IllegalStateException(
-        f"$face: segment-join candidate volume $candVol%.3g exceeds " +
-          s"spark.graft.editdist.maxCandidatePairs=$maxCand — shared " +
-          "prefixes/suffixes are concentrating the (length, segment) " +
-          "buckets. Strip common boilerplate from the strings first, " +
-          "run exact dedup before the fuzzy pass, lower maxDist, or " +
-          "raise the valve (0 disables).")
-    }
+    val segKeys = Seq("l", "k", "sub")
+    candidateValve(face, "spark.graft.editdist.maxCandidatePairs",
+      "shared prefixes/suffixes are concentrating the (length, segment) " +
+        "buckets. Strip common boilerplate from the strings first, " +
+        "run exact dedup before the fuzzy pass, lower maxDist, or " +
+        "raise the valve (0 disables).",
+      segKeys, keyCounts(segs, segKeys), Some(keyCounts(probe, segKeys)),
+      perPair = (d + 1).toDouble * (2 * d + 1) * (2 * d + 1) * (d + 1),
+      sized = (if (self) Nil else Seq(idsAtMost(index, d + 1))) :+
+        idsAtMost(probeBase, 1))
     val shortLimit = conf.getOption("spark.graft.editdist.shortBucketLimit")
       .map(_.toLong).getOrElse(10000L)
     val valveOff = shortLimit <= 0 || shortLimit >= Int.MaxValue - 1
@@ -697,7 +766,7 @@ object Dedup {
         "strings out first, or raise " +
         "spark.graft.editdist.shortBucketLimit (0 disables the valve).")
     val order = if (self) col("id_i") < col("id_p") else lit(true)
-    val longCand = segs.join(probe, Seq("l", "k", "sub")).where(order)
+    val longCand = segs.join(probe, segKeys).where(order)
       .select("id_i", "s_i", "id_p", "s_p")
     val cand =
       if (nShort == 0) longCand
@@ -811,21 +880,16 @@ object Dedup {
     * back as saved (l, k, sub) rows and its strings ride the store into
     * the verify, never a reference re-scan. Output is exactly
     * [[editDistancePairsBetween]]'s distinct (new_id, ref_id), same
-    * valves (the candidate-volume estimate aggregates the SAVED segment
-    * frame — a narrow columnar scan — against the delta probes). The
-    * store must carry (id, l, k, sub, s), and its `p_maxdist` stamp,
-    * when present, must equal `maxDist`. */
+    * valves. The store must carry (id, l, k, sub, s), and its
+    * `p_maxdist` stamp, when present, must equal `maxDist`. */
   def editDistancePairsBetweenPrecomputed(newDf: DataFrame,
       refStore: DataFrame, idCol: String, strCol: String,
       maxDist: Int = 1): DataFrame = {
     val d = maxDist
     require(d >= 1 && d <= 4,
       s"editDistancePairsBetweenPrecomputed: maxDist in [1,4], got $d")
-    require(Seq("id", "l", "k", "sub", "s").forall(refStore.columns.contains),
-      "editDistancePairsBetweenPrecomputed: refStore needs (id, l, k, " +
-        "sub, s) — an editDistanceSegmentStore frame; got " +
-        refStore.columns.mkString("(", ", ", ")"))
-    requireStoreParams(refStore, "editDistancePairsBetweenPrecomputed",
+    requireStore(refStore, "editDistancePairsBetweenPrecomputed",
+      "editDistanceSegmentStore", Seq("id", "l", "k", "sub", "s"),
       "p_maxdist" -> d)
     val newBase = tracked(edBase(newDf, idCol, strCol).persist())
     autoRelease(
@@ -868,8 +932,8 @@ object Dedup {
     * 4 chunk keys are 15 bits wide (2^15 buckets per chunk — candidate
     * volume ∝ 4·n²/2^15, vs n²/16 at the old 16-bit/4-bit layout). All
     * chunks come from ONE struct-explode pass over the fingerprint frame,
-    * and the hamming verify runs BEFORE the distinct so only surviving
-    * pairs shuffle through the dedup exchange. */
+    * and the hamming verify runs BEFORE the per-pair aggregate so only
+    * surviving pairs shuffle ([[hammingNearDup]]). */
   def simhashNearDup(df: DataFrame, idCol: String, textCol: String,
       bits: Int = 60, maxHamming: Int = 3): DataFrame =
     hammingNearDup(
@@ -877,31 +941,37 @@ object Dedup {
         .withColumnRenamed(idCol, "id"),
       "id", "simhash", bits, maxHamming)
 
+  private val HammingRemedy = "one chunk key is shared by too many " +
+    "fingerprints (blank images, empty texts, all-zero hashes). Filter " +
+    "degenerate fingerprints or exact-dedup first, lower maxHamming " +
+    "(wider chunks), or raise the valve (0 disables)."
+
+  /** The persisted (id, simhash, chunk, key) chunk frame of a caller's
+    * (idCol, hashCol) fingerprints, registered for release. */
+  private def persistedChunks(fp: DataFrame, idCol: String,
+      hashCol: String, bits: Int, maxHamming: Int): DataFrame =
+    tracked(simhashChunkFrame(
+      fp.select(col(idCol).as("id"), col(hashCol).as("simhash")),
+      bits, maxHamming).persist())
+
   /** Pigeonhole-banded hamming near-dup over ANY integer fingerprint
     * frame — the [[simhashNearDup]] machinery with the fingerprint
     * supplied by the caller: text simhash, perceptual image hash
     * ([[Multimodal.perceptualHash]]), any ≤64-bit locality-sensitive
     * code. Split into maxHamming+1 chunks, any pair within the radius
-    * agrees exactly on at least one chunk (COMPLETE recall), hamming
-    * verify pre-exchange. Output: distinct (id_a, id_b, hamming). */
+    * agrees exactly on at least one chunk (COMPLETE recall); the
+    * [[bandJoin]] verifies hamming pre-exchange. Output: one (id_a,
+    * id_b, hamming) row per id pair, the minimum over its fingerprints. */
   def hammingNearDup(fp: DataFrame, idCol: String, hashCol: String,
       bits: Int, maxHamming: Int): DataFrame = {
-    // persisted (r15, guide §2.4): the chunk frame is BOTH sides of the
-    // self-join below, and without the persist the fingerprint subplan
-    // evaluates once per side — for media fingerprints that is a second
-    // full image-decode pass, for simhash a second text-hash scan (the
-    // same reason minhashLshPairs persists its signature frame).
-    val chunked = tracked(simhashChunkFrame(
-      fp.select(col(idCol).as("id"), col(hashCol).as("simhash")),
-      bits, maxHamming).persist())
-    autoRelease(chunked.as("a")
-      .join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct(), chunked)
+    // persisted: the chunk frame is BOTH join sides, and the fingerprint
+    // subplan (an image decode, a text hash) would run once per side
+    val chunked = persistedChunks(fp, idCol, hashCol, bits, maxHamming)
+    autoRelease(bandJoin("hammingNearDup",
+        BandSide(chunked, chunked, maxHamming + 1), None, ChunkKeys,
+        maxHamming + 1, JaccardValve, HammingRemedy, Some(maxHamming))
+      .select(col("id_i").as("id_a"), col("id_p").as("id_b"),
+        col("hamming")), chunked)
   }
 
   /** The persistable (id, simhash, chunk, key [, p_*]) chunk-signature frame
@@ -945,15 +1015,17 @@ object Dedup {
     * against an existing corpus — delta×corpus chunk equi-join, never
     * corpus×corpus (the [[minhashLshPairsBetween]] /
     * [[editDistancePairsBetween]] directional shape). Convenience
-    * form that fingerprints the reference here; production ingest
-    * saves [[simhashChunkSignatures]] once and calls
+    * form that fingerprints (and persists) the reference here;
+    * production ingest saves [[simhashChunkSignatures]] once and calls
     * [[simhashNearDupBetweenPrecomputed]]. */
   def simhashNearDupBetween(newDf: DataFrame, refDf: DataFrame,
       idCol: String, textCol: String, bits: Int = 60,
-      maxHamming: Int = 3): DataFrame =
-    simhashNearDupBetweenPrecomputed(newDf,
-      simhashChunkSignatures(refDf, idCol, textCol, bits, maxHamming),
-      idCol, textCol, bits, maxHamming)
+      maxHamming: Int = 3): DataFrame = {
+    val ref = tracked(simhashChunkSignatures(refDf, idCol, textCol, bits,
+      maxHamming).persist())
+    autoRelease(simhashNearDupBetweenPrecomputed(newDf, ref, idCol,
+      textCol, bits, maxHamming), ref)
+  }
 
   /** CROSS-FRAME simhash near-dup against a PRECOMPUTED reference:
     * the incoming shard fingerprints here (one scan), the reference
@@ -962,19 +1034,15 @@ object Dedup {
     * the plan (PlanSpec-pinned); even the hamming verify reads the
     * store's `simhash` column. Candidates meet on the (chunk, key)
     * equi-join (pigeonhole-COMPLETE within `maxHamming`, so unlike
-    * the LSH stores this one has exact recall); the verify runs
-    * BEFORE the distinct so only surviving pairs shuffle through the
-    * dedup exchange. Output: distinct (new_id, ref_id), hamming <=
-    * maxHamming. */
+    * the LSH stores this one has exact recall). Output: distinct
+    * (new_id, ref_id), hamming <= maxHamming. */
   def simhashNearDupBetweenPrecomputed(newDf: DataFrame,
       refChunks: DataFrame, idCol: String, textCol: String,
       bits: Int = 60, maxHamming: Int = 3): DataFrame =
-    hammingBetweenPrecomputed(
-      TextFunctions.simhash(newDf, idCol, textCol, bits),
-      refChunks, idCol, "simhash", bits, maxHamming,
-      "simhashNearDupBetweenPrecomputed")
+    hammingStore("simhashNearDupBetweenPrecomputed",
+      TextFunctions.simhash(newDf, idCol, textCol, bits), refChunks,
+      idCol, "simhash", bits, maxHamming)
       .select("new_id", "ref_id")
-      .distinct()
 
   /** CROSS-FRAME hamming near-dup for CALLER-SUPPLIED fingerprints
     * against a PRECOMPUTED reference — the [[simhashNearDupBetweenPrecomputed]]
@@ -986,40 +1054,29 @@ object Dedup {
     * neither the reference fingerprints nor whatever produced them
     * (image DECODE, in the media pipeline) are ever recomputed — the
     * verify reads the store's own `simhash` column. Pigeonhole recall
-    * is EXACT within `maxHamming`. Output: distinct (new_id, ref_id,
-    * hamming). */
+    * is EXACT within `maxHamming`. Output: one (new_id, ref_id,
+    * hamming) row per id pair, the minimum over its fingerprints. */
   def hammingNearDupBetweenPrecomputed(fpNew: DataFrame,
       refChunks: DataFrame, idCol: String, hashCol: String,
       bits: Int, maxHamming: Int): DataFrame =
-    hammingBetweenPrecomputed(fpNew, refChunks, idCol, hashCol, bits,
-      maxHamming, "hammingNearDupBetweenPrecomputed")
+    hammingStore("hammingNearDupBetweenPrecomputed", fpNew, refChunks,
+      idCol, hashCol, bits, maxHamming)
 
-  /** Shared delta-chunks × store core of the two faces above: chunk
-    * the delta fingerprints here, equi-join the saved chunk frame on
-    * (chunk, key), hamming-verify BEFORE the distinct so only
-    * surviving pairs shuffle through the dedup exchange. */
-  private def hammingBetweenPrecomputed(fpNew: DataFrame,
-      refChunks: DataFrame, idCol: String, hashCol: String,
-      bits: Int, maxHamming: Int, face: String): DataFrame = {
-    require(Seq("id", "simhash", "chunk", "key")
-      .forall(refChunks.columns.contains),
-      s"$face: refChunks needs (id, simhash, chunk, key) — a " +
-        "simhashChunkSignatures/hammingChunkSignatures frame; got " +
-        refChunks.columns.mkString("(", ", ", ")"))
-    requireStoreParams(refChunks, face,
+  /** The two Hamming store faces: [[bandJoin]] of the saved chunks
+    * and the delta's (persisted). Output (new_id, ref_id, hamming). */
+  private def hammingStore(face: String, fpNew: DataFrame,
+      refChunks: DataFrame, idCol: String, hashCol: String, bits: Int,
+      maxHamming: Int): DataFrame = {
+    requireStore(refChunks, face,
+      "simhashChunkSignatures/hammingChunkSignatures",
+      Seq("id", "simhash") ++ ChunkKeys,
       "p_bits" -> bits, "p_maxh" -> maxHamming)
-    simhashChunkFrame(
-        fpNew.select(col(idCol).as("id"), col(hashCol).as("simhash")),
-        bits, maxHamming)
-      .select(col("id").as("new_id"), col("simhash").as("__ns"),
-        col("chunk"), col("key"))
-      .join(refChunks.select(col("id").as("ref_id"),
-        col("simhash").as("__rs"), col("chunk"), col("key")),
-        Seq("chunk", "key"))
-      .select(col("new_id"), col("ref_id"),
-        expr("bit_count(__ns ^ __rs)").as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+    val chunked = persistedChunks(fpNew, idCol, hashCol, bits, maxHamming)
+    autoRelease(bandJoin(face, BandSide(refChunks, refChunks, maxHamming + 1),
+        Some(BandSide(chunked, chunked, maxHamming + 1)), ChunkKeys,
+        maxHamming + 1, JaccardValve, HammingRemedy, Some(maxHamming))
+      .select(col("id_p").as("new_id"), col("id_i").as("ref_id"),
+        col("hamming")), chunked)
   }
 
   /** Duplicate-cluster canonicalization: connected components over a
@@ -1595,27 +1652,14 @@ object Dedup {
       case Some(bc) =>
         val base = df.select(col(idCol).as("id"), col(vecCol).as("v"),
           col(bc).as("blk"))
-        // same valve family as the jaccard path, and ON BY DEFAULT for
-        // the same reason (2e9; 0 disables): with a FIXED block domain
-        // (e.g. a label column) block sizes grow linearly with the
-        // corpus and the within-block pair work quadratically — the
-        // remedy is blocks that scale with the corpus (semDeDupKMeans
-        // cells, k ~ n/target)
-        val maxCandB = df.sparkSession.conf
-          .getOption("spark.graft.embed.maxCandidatePairs")
-          .map(_.toLong).getOrElse(2000000000L)
-        if (maxCandB > 0) {
-          val vol = base.groupBy("blk").agg(count(lit(1)).as("s"))
-            .agg(coalesce(sum(col("s").cast("double") *
-              (col("s") - 1) / 2), lit(0.0)).as("cand")).head().getDouble(0)
-          if (vol > maxCandB) throw new IllegalStateException(
-            f"embeddingNearDup: candidate volume $vol%.3g exceeds " +
-              s"spark.graft.embed.maxCandidatePairs=$maxCandB — the " +
-              "block domain is too coarse for this corpus (block sizes " +
-              "grow with the data). Use blocks that scale with the " +
-              "corpus — semDeDupKMeans cells with k ~ corpus/targetCell " +
-              "— or raise the valve.")
-        }
+        // a FIXED block domain (a label column) grows blocks linearly
+        // with the corpus and the within-block pair work quadratically
+        candidateValve("embeddingNearDup", EmbedValve,
+          "the block domain is too coarse for this corpus (block sizes " +
+            "grow with the data). Use blocks that scale with the " +
+            "corpus — semDeDupKMeans cells with k ~ corpus/targetCell " +
+            "— or raise the valve.",
+          Seq("blk"), keyCounts(base, Seq("blk")), None)
         groupedPairScan(base, Seq("blk"), threshold)
       case None if blockTables <= 0 =>
         // norms are sqrt'd ONCE PER ROW before the pair join — the
@@ -1675,40 +1719,19 @@ object Dedup {
       case None =>
         Similarity.withAllTableBuckets(base, "v", blockTables, planes, d)
     }
-    // spark.graft.embed.maxCandidatePairs: PRE-SCAN volume valve, ON BY
-    // DEFAULT (2e9; 0 disables) like the jaccard valve — the same
-    // disk-full failure mode, the same family. With 2^blockPlanes
-    // buckets per table, bucket occupancy grows linearly with the
-    // corpus and per-bucket candidates quadratically — the 100x
-    // rehearsal saturated the default 8-plane space (256 buckets, ~2000
-    // ids each) into ~10^9 candidates and died on spill disk. Every
-    // table pairs at most all n rows, so Σ_{t,bkt} s(s−1)/2 ≤
-    // tables·n(n−1)/2: when the row count is in hand (adaptive planes)
-    // and that bound is under the limit, the valve is proven safe
-    // without a job. Otherwise one occupancy aggregate over the bucket
-    // keys fails FAST, before any pair work, with the named remedy:
-    // each extra plane HALVES expected occupancy (candidates drop ~4x),
-    // so size blockPlanes ~ log2(corpus / target-bucket-size); metadata
-    // blocking (blockCol) bounds buckets by construction.
-    val maxCand = df.sparkSession.conf
-      .getOption("spark.graft.embed.maxCandidatePairs")
-      .map(_.toLong).getOrElse(2000000000L)
-    val bound = nRows.fold(Double.PositiveInfinity) { n =>
-      blockTables.toDouble * n * (n - 1) / 2 }
-    if (maxCand > 0 && bound > maxCand) {
-      val vol = sharedBuckets.getOrElse(keyed).groupBy("t", "bkt")
-        .agg(count(lit(1)).as("s"))
-        .agg(coalesce(sum(col("s").cast("double") *
-          (col("s") - 1) / 2), lit(0.0)).as("cand")).head().getDouble(0)
-      if (vol > maxCand) throw new IllegalStateException(
-        f"embeddingNearDup: candidate volume $vol%.3g exceeds " +
-          s"spark.graft.embed.maxCandidatePairs=$maxCand — the " +
-          s"$planes-plane bucket space is saturated at this " +
-          "corpus size. Raise blockPlanes (each plane halves bucket " +
-          "occupancy; size ~ log2(corpus/targetBucket)), pass " +
-          "blockCol for metadata blocking, or raise the valve.")
-    }
-    groupedPairScan(keyed, Seq("t", "bkt"), threshold)
+    // 2^blockPlanes buckets per table: occupancy grows linearly with
+    // the corpus and per-bucket candidates quadratically (the 100x
+    // rehearsal saturated an 8-plane space into ~10^9 candidates and
+    // died on spill disk). A row count in hand (adaptive planes) bounds
+    // the volume without a job; otherwise the occupancy aggregate runs.
+    candidateValve("embeddingNearDup", EmbedValve,
+      s"the $planes-plane bucket space is saturated at this " +
+        "corpus size. Raise blockPlanes (each plane halves bucket " +
+        "occupancy; size ~ log2(corpus/targetBucket)), pass " +
+        "blockCol for metadata blocking, or raise the valve.",
+      BucketKeys, keyCounts(sharedBuckets.getOrElse(keyed), BucketKeys),
+      None, blockTables, nRows.toSeq.map(n => (safeN: Long) => n <= safeN))
+    groupedPairScan(keyed, BucketKeys, threshold)
   }
 
   /** The persistable (id, t, bkt [, p_*]) hyperplane-bucket frame of an
@@ -1777,12 +1800,8 @@ object Dedup {
     * candidate shuffle (the q22 lesson) and only two columns of the
     * reference are ever read.
     *
-    * The [[embeddingNearDup]] candidate-volume valve applies
-    * (`spark.graft.embed.maxCandidatePairs`, default 2e9, 0 disables):
-    * cross-occupancy Σ_{t,bkt} n_new·n_ref over the two narrow bucket
-    * frames, failing fast with the remedy named — a saturated pinned
-    * bucket space means the store was sized for a smaller corpus and
-    * needs a rebuild at higher blockPlanes.
+    * Candidates come from [[bandJoin]]; a saturated pinned bucket
+    * space fails its valve — the store needs more blockPlanes.
     *
     * Output: distinct (new_id, ref_id), cosine >= threshold. */
   def embeddingNearDupBetweenPrecomputed(newDf: DataFrame,
@@ -1806,49 +1825,28 @@ object Dedup {
       vecCol: String, threshold: Double, blockTables: Int = 4,
       blockPlanes: Int = 12, dim: Int = 0): DataFrame = {
     import graft.functions.VectorFunctions.vec_dot
-    require(Seq("id", "t", "bkt").forall(refBuckets.columns.contains),
-      "embeddingNearDupBetweenPrecomputed: refBuckets needs (id, t, " +
-        "bkt) — a vectorBucketSignatures frame; got " +
-        refBuckets.columns.mkString("(", ", ", ")"))
     require(refVectors.columns.contains(idCol) &&
       refVectors.columns.contains(vecCol),
       s"embeddingNearDupBetweenPrecomputed: refVectors needs ($idCol, " +
         s"$vecCol); got " + refVectors.columns.mkString("(", ", ", ")"))
     val d = if (dim > 0) dim
       else Similarity.probeDim(newDf, vecCol).getOrElse(1)
-    requireStoreParams(refBuckets, "embeddingNearDupBetweenPrecomputed",
-      "p_tables" -> blockTables, "p_planes" -> blockPlanes,
-      "p_dim" -> d)
+    requireStore(refBuckets, "embeddingNearDupBetweenPrecomputed",
+      "vectorBucketSignatures", "id" +: BucketKeys,
+      "p_tables" -> blockTables, "p_planes" -> blockPlanes, "p_dim" -> d)
     val ownBkts = newBuckets.isEmpty
     val newBkts = newBuckets.getOrElse(
       tracked(vectorBucketSignatures(newDf, idCol, vecCol,
         blockTables, blockPlanes, d).persist()))
-    val refB = refBuckets.select(col("id").as("ref_id"), col("t"),
-      col("bkt"))
-    val maxCand = newDf.sparkSession.conf
-      .getOption("spark.graft.embed.maxCandidatePairs")
-      .map(_.toLong).getOrElse(2000000000L)
-    if (maxCand > 0) {
-      val vol = newBkts.groupBy("t", "bkt").agg(count(lit(1)).as("sn"))
-        .join(refB.groupBy("t", "bkt").agg(count(lit(1)).as("sr")),
-          Seq("t", "bkt"))
-        .agg(coalesce(sum(col("sn").cast("double") *
-          col("sr").cast("double")), lit(0.0)).as("cand"))
-        .head().getDouble(0)
-      if (vol > maxCand) throw new IllegalStateException(
-        f"embeddingNearDupBetweenPrecomputed: candidate volume " +
-          f"$vol%.3g exceeds " +
-          s"spark.graft.embed.maxCandidatePairs=$maxCand — the " +
-          s"$blockPlanes-plane store bucket space is saturated at " +
+    val cand = bandJoin("embeddingNearDupBetweenPrecomputed",
+        BandSide(refBuckets, refBuckets, blockTables),
+        Some(BandSide(newBkts, newBkts, blockTables)), BucketKeys,
+        blockTables, EmbedValve,
+        s"the $blockPlanes-plane store bucket space is saturated at " +
           "this corpus size. Rebuild the store with more blockPlanes " +
           "(each plane halves bucket occupancy; size ~ " +
           "log2(corpus/targetBucket)) or raise the valve.")
-    }
-    val cand = newBkts.select(col("id").as("new_id"), col("t"),
-        col("bkt"))
-      .join(refB, Seq("t", "bkt"))
-      .select("new_id", "ref_id")
-      .distinct()
+      .select(col("id_p").as("new_id"), col("id_i").as("ref_id"))
     val vn = newDf.select(col(idCol).as("new_id"),
         col(vecCol).as("__vn"))
       .withColumn("__nn", sqrt(vec_dot(col("__vn"), col("__vn"))))
@@ -1856,13 +1854,9 @@ object Dedup {
         col(vecCol).as("__vr"))
       .withColumn("__nr", sqrt(vec_dot(col("__vr"), col("__vr"))))
     val denom = col("__nn") * col("__nr")
-    // final distinct (r14 advice): duplicate ids in refVectors/newDf
-    // (e.g. a vectors sidecar with a twice-appended batch) would emit
-    // duplicate (new_id, ref_id) rows from the vector join-back — the
-    // simhash face already dedups its output; match it. The candidate
-    // frame is distinct already, so with unique ids this exchange
-    // carries only qualifying pairs (output-bound, like the simhash
-    // path's post-verify distinct).
+    // final distinct: duplicate ids in refVectors/newDf (a vectors
+    // sidecar with a twice-appended batch) would emit a pair once per
+    // duplicate from the vector join-back
     val out = cand.join(vn, "new_id").join(vr, "ref_id")
       .withColumn("__cos", when(denom === 0.0, lit(0.0))
         .otherwise(vec_dot(col("__vn"), col("__vr")) / denom))

@@ -307,8 +307,8 @@ object Multimodal {
     * ([[graft.ops.Dedup.hammingNearDup]]) — the text corpus's banded
     * dedup story applied to an image-text corpus. Decode cost is one
     * linear scan; the pair work is chunk-key equi-joins with
-    * COMPLETE recall inside the radius. Output: distinct (id_a, id_b,
-    * hamming). */
+    * COMPLETE recall inside the radius. Output: (id_a, id_b, min
+    * hamming) per id pair. */
   def mediaNearDup(media: DataFrame, maxHamming: Int = 3): DataFrame =
     Dedup.hammingNearDup(perceptualHash(media), "media_id", "phash",
       PHashBits, maxHamming)
@@ -335,7 +335,7 @@ object Multimodal {
     * decode `mapPartitions` is the delta's); candidates meet on the
     * pigeonhole (chunk, key) equi-join with EXACT recall inside the
     * radius, and the hamming verify reads the store's fingerprint.
-    * Output: distinct (new_id, ref_id, hamming). */
+    * Output: (new_id, ref_id, min hamming) per id pair. */
   def mediaNearDupBetween(newMedia: DataFrame, refChunks: DataFrame,
       maxHamming: Int = 3): DataFrame =
     Dedup.hammingNearDupBetweenPrecomputed(perceptualHash(newMedia),

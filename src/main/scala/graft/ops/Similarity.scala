@@ -330,10 +330,6 @@ object Similarity {
       k: Int = 4, minMargin: Double = 1.0, nPlanes: Int = 12,
       tables: Int = 8, dim: Int = 0): DataFrame = {
     require(k >= 1, s"bitextMineLshPrecomputed: k must be >= 1, got $k")
-    require(Seq("id", "t", "bkt").forall(refBuckets.columns.contains),
-      "bitextMineLshPrecomputed: refBuckets needs (id, t, bkt) — a " +
-        "Dedup.vectorBucketSignatures frame; got " +
-        refBuckets.columns.mkString("(", ", ", ")"))
     require(refVectors.columns.contains(idCol) &&
       refVectors.columns.contains(vecCol),
       s"bitextMineLshPrecomputed: refVectors needs ($idCol, $vecCol); " +
@@ -341,8 +337,8 @@ object Similarity {
     val d = if (dim > 0) dim
       else probeDim(a, vecCol).orElse(probeDim(refVectors, vecCol))
         .getOrElse(1)
-    graft.ops.Dedup.requireStoreParams(refBuckets,
-      "bitextMineLshPrecomputed",
+    Dedup.requireStore(refBuckets, "bitextMineLshPrecomputed",
+      "Dedup.vectorBucketSignatures", Seq("id", "t", "bkt"),
       "p_tables" -> tables, "p_planes" -> nPlanes, "p_dim" -> d)
     // persisted (r15, guide §2.4): the batch side feeds its bucket
     // emission AND the cosine join-back; it is delta-bounded by the

@@ -2725,6 +2725,17 @@ object PipelineCompiler {
       sub: Seq[Map[String, Any]], let: Map[String, Any], as: String,
       shape: LookupShape, tables: TableResolver): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+    // an `as` naming an outer field REPLACES it (Mongo): the outer keys
+    // and `let` values, which may read that field, are carried first
+    if (df.columns.contains(as)) {
+      val keyAs = keys.indices.map(i => s"__lkout$i")
+      val letAs = let.keys.toSeq.map(v => v -> s"__lklet_$v")
+      val outer = df.withColumns((keyAs.zip(keys.map(_._1)) ++
+        letAs.map { case (v, c) => c -> expr2col(let(v)) }).toMap).drop(as)
+      return keyedJoin(outer, from, keyAs.map(col).zip(keys.map(_._2)),
+        membership, sub, letAs.map { case (v, c) => v -> s"$$$c" }.toMap,
+        as, shape, tables).drop(keyAs ++ letAs.map(_._2): _*)
+    }
     val rowLocal = Set("$match", "$project", "$set", "$addFields",
       "$unset", "$replaceRoot", "$replaceWith")
     sub.foreach { st =>

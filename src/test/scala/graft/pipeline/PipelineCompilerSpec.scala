@@ -689,6 +689,61 @@ class PipelineCompilerSpec extends SparkSpec {
     }
   }
 
+  test("$lookup whose `as` names an outer field replaces it in the " +
+      "grouped and the fused $unwind shapes, also when it is the " +
+      "localField") {
+    val orders = Seq((1L, "a", Seq("a", "b"), 7), (2L, "b", Seq("b"), 8),
+      (3L, "z", Seq.empty[String], 9)).toDF("oid", "cust", "tags", "other")
+    val custs = Seq(("a", "Alpha"), ("b", "Beta")).toDF("key", "name")
+    def run(stages: Map[String, Any]*) =
+      PipelineCompiler.compile(stages, tables = _ => custs)(orders)
+    def lk(local: String, as: String) = Map("$lookup" -> Map("from" -> "c",
+      "localField" -> local, "foreignField" -> "key", "as" -> as))
+    def names(df: org.apache.spark.sql.DataFrame, as: String) =
+      df.select($"oid", expr(s"sort_array(transform($as, x -> x.name))"))
+        .as[(Long, Seq[String])].collect().toSeq.sortBy(_._1)
+    def unwound(df: org.apache.spark.sql.DataFrame, as: String) =
+      df.select($"oid", col(s"$as.name")).as[(Long, Option[String])]
+        .collect().toSeq.sorted
+    val preserve = (as: String) => Map("$unwind" -> Map("path" -> s"$$$as",
+      "preserveNullAndEmptyArrays" -> true))
+    // scalar and array localField, each also the `as` field
+    for ((local, want) <- Seq(
+        "cust" -> Seq(1L -> Seq("Alpha"), 2L -> Seq("Beta"), 3L -> Nil),
+        "tags" -> Seq(1L -> Seq("Alpha", "Beta"), 2L -> Seq("Beta"),
+          3L -> Nil))) {
+      val grouped = run(lk(local, local))
+      assert(grouped.columns.count(_ == local) == 1 &&
+        !grouped.columns.exists(_.startsWith("__lk")), local)
+      assert(names(grouped, local) == want, local)
+      val flat = want.flatMap { case (o, ns) => ns.map(n => (o, Option(n))) }
+      assert(unwound(run(lk(local, local), Map("$unwind" -> s"$$$local")),
+        local) == flat, local)
+      val kept = run(lk(local, local), preserve(local))
+      assert(kept.columns.count(_ == local) == 1, local)
+      assert(unwound(kept, local) ==
+        (flat :+ (3L -> Option.empty[String])).sorted, local)
+    }
+    // `as` names another outer field: the localField survives
+    val other = run(lk("cust", "other"))
+    assert(other.columns.count(_ == "other") == 1)
+    assert(other.select("cust").as[String].collect().sorted.toSeq ==
+      Seq("a", "b", "z"))
+    assert(names(other, "other") ==
+      Seq(1L -> Seq("Alpha"), 2L -> Seq("Beta"), 3L -> Nil))
+    // pipeline form whose `let` reads the replaced field
+    val piped = Map("$lookup" -> Map("from" -> "c",
+      "let" -> Map("c" -> "$cust"), "as" -> "cust",
+      "pipeline" -> Seq(Map("$match" -> Map("$expr" ->
+        Map("$eq" -> Seq("$key", "$$c")))))))
+    assert(names(run(piped), "cust") ==
+      Seq(1L -> Seq("Alpha"), 2L -> Seq("Beta"), 3L -> Nil))
+    assert(unwound(run(piped, Map("$unwind" -> "$cust")), "cust") ==
+      Seq(1L -> Some("Alpha"), 2L -> Some("Beta")))
+    // a fresh `as` adds one column and nothing else
+    assert(run(lk("cust", "d")).columns.toSeq == orders.columns.toSeq :+ "d")
+  }
+
   test("$__lookupUnwind is not a user stage") {
     val e = intercept[IllegalArgumentException] {
       PipelineCompiler.compile(Seq(Map("$__lookupUnwind" -> Map(

@@ -304,13 +304,13 @@ class PlanSpec extends SparkSpec {
     val docs = graft.sources.Tables.table(spark, sf, "documents")
     val df = graft.ops.Dedup.simhashNearDup(docs, "doc_id", "text")
     val plan = df.queryExecution.optimizedPlan
-    // the final distinct compiles to an Aggregate whose subtree already
-    // contains the hamming filter — candidates are cut before they shuffle
+    // the per-pair min(hamming) aggregate's subtree already contains
+    // the hamming filter — candidates are cut before they shuffle
     val topAgg = plan.collectFirst {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-          if a.groupingExpressions.exists(_.toString.contains("hamming")) => a
+          if a.aggregateExpressions.exists(_.toString.contains("hamming")) => a
     }
-    assert(topAgg.isDefined, "distinct aggregate over (id_a,id_b,hamming)")
+    assert(topAgg.isDefined, "aggregate of min(hamming) per (id_a, id_b)")
     // the verify predicate must run below the distinct: either a Filter
     // node, or (stronger) fused into the chunk self-join's condition
     val verifyBelow = topAgg.get.child.collectFirst {
