@@ -38,12 +38,23 @@ object Dedup {
     * `spark.catalog.clearCache()` also works but nukes unrelated caches. */
   private val cachedFrames =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private def tracked(df: DataFrame): DataFrame = { cachedFrames.add(df); df }
   /** Persist + track under [[releaseCaches]] — the shared-subplan reuse
-    * discipline for sibling ops packages (Decontaminate, Curation) and
-    * the per-batch caches of the streaming store loops. */
-  private[graft] def trackedPersist(df: DataFrame): DataFrame =
-    tracked(df.persist())
+    * discipline for Dedup and its sibling ops packages (Decontaminate,
+    * Curation) and the per-batch caches of the streaming store loops.
+    * A frame whose plan an existing cache entry already serves is neither
+    * persisted nor tracked: that entry belongs to someone else (Spark's
+    * cache lookup matches, e.g., a pure column-rename projection of a
+    * cached frame), and the releases below free only what a call made. */
+  private[graft] def trackedPersist(df: DataFrame): DataFrame = {
+    val cached = df.sparkSession.sharedState.cacheManager.lookupCachedData(
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    if (cached.isEmpty) cachedFrames.add(df.persist())
+    df
+  }
+  /** Unpersist `df` if [[trackedPersist]] persisted it and it is still
+    * tracked; a no-op otherwise. */
+  private def release(df: DataFrame): Unit =
+    if (cachedFrames.remove(df)) df.unpersist(false)
   /** [[autoRelease]] for sibling ops packages. */
   private[ops] def releaseOnMaterialize(result: DataFrame,
       supports: DataFrame*): DataFrame = autoRelease(result, supports: _*)
@@ -55,9 +66,10 @@ object Dedup {
   }
 
   /** Auto-release hook: when `result` FIRST materializes (any action on it
-    * or a derived frame), the support frames are unpersisted and dropped
-    * from the tracked set — long-lived sessions don't accumulate shingle/
-    * signature caches after each dedup call is consumed. Implemented as an
+    * or a derived frame), the support frames [[trackedPersist]] persisted
+    * are unpersisted and dropped from the tracked set — long-lived
+    * sessions don't accumulate shingle/signature caches after each dedup
+    * call is consumed. Implemented as an
     * in-plan `Observation` (CollectMetrics is transparent to the result),
     * so the hook costs no extra job and fires only once the supports have
     * actually served their join sides. [[releaseCaches]] stays as the
@@ -69,7 +81,7 @@ object Dedup {
     val obs = org.apache.spark.sql.Observation()
     val hooked = result.observe(obs, count(lit(1)).as("rows"))
     obs.future.foreach { _ =>
-      supports.foreach { s => s.unpersist(false); cachedFrames.remove(s) }
+      supports.foreach(release)
     }(scala.concurrent.ExecutionContext.global)
     hooked
   }
@@ -291,13 +303,12 @@ object Dedup {
     // materialized array instead of re-tokenizing per window position;
     // persisted because the frequency aggregate AND the filter join both
     // consume it (narrow (id, long) rows — cheap to cache)
-    val sh = tracked(df
+    val sh = trackedPersist(df
       .select(col(idCol).as("id"), tokens(col(textCol)).as("__toks"))
       .select(col("id"),
         explode(array_distinct(shinglesOfTokens(col("__toks"), k)))
           .as("shs"))
-      .select(col("id"), tokenHash(col("shs")).as("sh"))
-      .persist())
+      .select(col("id"), tokenHash(col("shs")).as("sh")))
     val obsOpt =
       if (maxShingleFreq != 0) Some(org.apache.spark.sql.Observation())
       else None
@@ -314,7 +325,7 @@ object Dedup {
     // set in the capped branch: the persisted per-shingle frequency
     // frame, released with the other supports once `out` materializes
     var freqCache: Option[DataFrame] = None
-    val filtered = tracked((
+    val filtered = trackedPersist((
       if (maxShingleFreq != 0) {
         // the per-shingle cap joins in as a broadcast one-row frame: AUTO
         // derives it from the corpus row count (a column-pruned count scan),
@@ -340,9 +351,8 @@ object Dedup {
         // of the cache, so it still fires exactly once — on the main
         // query, over the identical rows.
         val obs = obsOpt.get
-        val freqP = tracked(sh.groupBy("sh").agg(count(lit(1)).as("df"))
-          .crossJoin(broadcast(capDf))
-          .persist())
+        val freqP = trackedPersist(sh.groupBy("sh").agg(count(lit(1)).as("df"))
+          .crossJoin(broadcast(capDf)))
         freqCache = Some(freqP)
         val freq = freqP
           .observe(obs, sum(when(col("df") > col("__cap"), 1L)
@@ -393,7 +403,7 @@ object Dedup {
         valve(keyCounts(sh, Seq("sh")))
         sh
       }
-    ).persist()) // reused by sizes + both self-join sides: 3 consumers
+    )) // reused by sizes + both self-join sides: 3 consumers
     val sizes = filtered.groupBy("id").agg(count(lit(1)).as("sz"))
     val pairs = filtered.as("a")
       .join(filtered.as("b"),
@@ -526,8 +536,8 @@ object Dedup {
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numPerms: Int = 12, bands: Int = 4): DataFrame = {
     require(numPerms % bands == 0, "numPerms must be divisible by bands")
-    val sigs = tracked(
-      minhashSignatures(df, idCol, textCol, k, numPerms).persist())
+    val sigs = trackedPersist(
+      minhashSignatures(df, idCol, textCol, k, numPerms))
     autoRelease(minhashSelf("minhashLshPairs", sigs, numPerms, bands), sigs)
   }
 
@@ -549,8 +559,8 @@ object Dedup {
       textCol: String, k: Int = 3, numPerms: Int = 12,
       bands: Int = 4): DataFrame = {
     require(numPerms % bands == 0, "numPerms must be divisible by bands")
-    val sigs = tracked(
-      minhashSignatures(df, idCol, textCol, k, numPerms).persist())
+    val sigs = trackedPersist(
+      minhashSignatures(df, idCol, textCol, k, numPerms))
     val pairs = minhashSelf("minhashJaccardEstimate", sigs, numPerms, bands)
     val sa = sigs.select(col("id").as("id_a") +:
       (0 until numPerms).map(i => col(s"mh$i").as(s"__a$i")): _*)
@@ -584,8 +594,8 @@ object Dedup {
   def minhashLshPairsBetween(newDf: DataFrame, refDf: DataFrame,
       idCol: String, textCol: String, k: Int = 3, numPerms: Int = 12,
       bands: Int = 4): DataFrame = {
-    val ref = tracked(minhashBandSignatures(refDf, idCol, textCol, k,
-      numPerms, bands).persist())
+    val ref = trackedPersist(minhashBandSignatures(refDf, idCol, textCol, k,
+      numPerms, bands))
     autoRelease(minhashLshPairsBetweenPrecomputed(newDf, ref, idCol,
       textCol, k, numPerms, bands), ref)
   }
@@ -628,8 +638,8 @@ object Dedup {
     requireStore(refBands, "minhashLshPairsBetweenPrecomputed",
       "minhashBandSignatures", "id" +: BandKeys,
       "p_k" -> k, "p_perms" -> numPerms, "p_bands" -> bands)
-    val sigs = tracked(
-      minhashSignatures(newDf, idCol, textCol, k, numPerms).persist())
+    val sigs = trackedPersist(
+      minhashSignatures(newDf, idCol, textCol, k, numPerms))
     autoRelease(bandJoin("minhashLshPairsBetweenPrecomputed",
         BandSide(refBands, refBands, bands),
         Some(BandSide(bandFrame(sigs, numPerms, bands), sigs, 1)),
@@ -803,7 +813,7 @@ object Dedup {
       maxDist: Int = 1): DataFrame = {
     val d = maxDist
     require(d >= 1 && d <= 4, s"editDistancePairs: maxDist in [1,4], got $d")
-    val index = tracked(edSegments(edBase(df, idCol, strCol), d).persist())
+    val index = trackedPersist(edSegments(edBase(df, idCol, strCol), d))
     // one row per string: k = 0 of a long one, k = -1 of a short one
     val base = index.where(col("k") <= 0)
       .select(col("id"), col("s"), col("l").as("n"))
@@ -832,8 +842,8 @@ object Dedup {
     require(d >= 1 && d <= 4,
       s"editDistancePairsBetween: maxDist in [1,4], got $d")
     val refIndex =
-      tracked(edSegments(edBase(refDf, idCol, strCol), d).persist())
-    val newBase = tracked(edBase(newDf, idCol, strCol).persist())
+      trackedPersist(edSegments(edBase(refDf, idCol, strCol), d))
+    val newBase = trackedPersist(edBase(newDf, idCol, strCol))
     autoRelease(
       passJoin("editDistancePairsBetween", refIndex, newBase, d,
         self = false)
@@ -891,7 +901,7 @@ object Dedup {
     requireStore(refStore, "editDistancePairsBetweenPrecomputed",
       "editDistanceSegmentStore", Seq("id", "l", "k", "sub", "s"),
       "p_maxdist" -> d)
-    val newBase = tracked(edBase(newDf, idCol, strCol).persist())
+    val newBase = trackedPersist(edBase(newDf, idCol, strCol))
     autoRelease(
       passJoin("editDistancePairsBetweenPrecomputed", refStore, newBase, d,
         self = false)
@@ -950,9 +960,9 @@ object Dedup {
     * (idCol, hashCol) fingerprints, registered for release. */
   private def persistedChunks(fp: DataFrame, idCol: String,
       hashCol: String, bits: Int, maxHamming: Int): DataFrame =
-    tracked(simhashChunkFrame(
+    trackedPersist(simhashChunkFrame(
       fp.select(col(idCol).as("id"), col(hashCol).as("simhash")),
-      bits, maxHamming).persist())
+      bits, maxHamming))
 
   /** Pigeonhole-banded hamming near-dup over ANY integer fingerprint
     * frame — the [[simhashNearDup]] machinery with the fingerprint
@@ -1021,8 +1031,8 @@ object Dedup {
   def simhashNearDupBetween(newDf: DataFrame, refDf: DataFrame,
       idCol: String, textCol: String, bits: Int = 60,
       maxHamming: Int = 3): DataFrame = {
-    val ref = tracked(simhashChunkSignatures(refDf, idCol, textCol, bits,
-      maxHamming).persist())
+    val ref = trackedPersist(simhashChunkSignatures(refDf, idCol, textCol, bits,
+      maxHamming))
     autoRelease(simhashNearDupBetweenPrecomputed(newDf, ref, idCol,
       textCol, bits, maxHamming), ref)
   }
@@ -1146,9 +1156,9 @@ object Dedup {
     // probe's map side evaluates the upstream exactly once, and
     // whichever path runs afterwards reads the cache: micro graphs
     // still pay a single probe job, big graphs pay nothing extra.
-    val praw = tracked(
-      pairs.select(col(idA).as("src"), col(idB).as("dst")).persist())
-    def dropPraw(): Unit = { praw.unpersist(false); cachedFrames.remove(praw) }
+    val praw = trackedPersist(
+      pairs.select(col(idA).as("src"), col(idB).as("dst")))
+    def dropPraw(): Unit = release(praw)
     // MICRO-GRAPH fast path (r15): a near-dup pair graph is usually
     // tiny next to its corpus (it holds only ever-paired docs), and
     // mergeClusters' CONTRACTED delta graphs are tinier still — but
@@ -1373,14 +1383,13 @@ object Dedup {
       "mergeClusters: priorLabels needs (id, component) — a " +
         "duplicateClusters/mergeClusters frame; got " +
         priorLabels.columns.mkString("(", ", ", ")"))
-    val prior = tracked(priorLabels.select(col("id"), col("component"))
-      .persist())
+    val prior = trackedPersist(priorLabels.select(col("id"), col("component")))
     // persist the delta pair frame (r15, guide §2.4): it feeds BOTH the
     // contraction below and the new-ids anti-join at the end — without
     // the persist the upstream delta pair plan (usually an LSH join)
     // evaluates once per consumer
-    val e0 = tracked(newPairs
-      .select(col(idA).as("__a"), col(idB).as("__b")).persist())
+    val e0 = trackedPersist(newPairs
+      .select(col(idA).as("__a"), col(idB).as("__b")))
     val contracted = e0
       .join(prior.select(col("id").as("__a"),
         col("component").as("__ra")), Seq("__a"), "left_outer")
@@ -1500,8 +1509,7 @@ object Dedup {
     // consumers below (the changed-diff, the members semi-join, the
     // new-singleton anti-join) and is usually a fresh mergeClusters
     // plan whose upstream would otherwise evaluate once per consumer
-    val nl = tracked(newLabels.select(col("id"), col("component"))
-      .persist())
+    val nl = trackedPersist(newLabels.select(col("id"), col("component")))
     // components whose membership changed: ids new to the label frame
     // or ids whose label moved — a merge relabels the larger-root
     // side's members, and the surviving (smaller) root is exactly the
@@ -1516,10 +1524,9 @@ object Dedup {
       .distinct()
     // members of changed components — delta-bounded, the frame every
     // pruning join below broadcasts
-    val members = tracked(nl
+    val members = trackedPersist(nl
       .join(changed, Seq("component"), "left_semi")
-      .select(col("id"), col("component"))
-      .persist())
+      .select(col("id"), col("component")))
     val touchedDocs = docs.join(
       members.select(col("id").as(idCol)), Seq(idCol), "left_semi")
     val reElected = resolveClusters(touchedDocs, members, idCol,
@@ -1836,8 +1843,8 @@ object Dedup {
       "p_tables" -> blockTables, "p_planes" -> blockPlanes, "p_dim" -> d)
     val ownBkts = newBuckets.isEmpty
     val newBkts = newBuckets.getOrElse(
-      tracked(vectorBucketSignatures(newDf, idCol, vecCol,
-        blockTables, blockPlanes, d).persist()))
+      trackedPersist(vectorBucketSignatures(newDf, idCol, vecCol,
+        blockTables, blockPlanes, d)))
     val cand = bandJoin("embeddingNearDupBetweenPrecomputed",
         BandSide(refBuckets, refBuckets, blockTables),
         Some(BandSide(newBkts, newBkts, blockTables)), BucketKeys,

@@ -137,7 +137,11 @@ object Tables {
     if (moved) rename(p, bak)
     try rename(tmp, p)
     catch { case e: Throwable => if (moved) fs.rename(bak, p); throw e }
-    if (!keepBackup) fs.delete(bak, true)
+    // best effort: the swap has committed, so a failure here must not
+    // report the write as failed; a `.bak` left behind is cleared by the
+    // next swap
+    if (!keepBackup)
+      try fs.delete(bak, true) catch { case _: java.io.IOException => () }
   }
 
   /** What the footer Spark's inference reads says about a table: the schema

@@ -234,6 +234,36 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("duplicateClusters leaves its caller's cached pair frame cached") {
+    // the narrow (src, dst) frame it reads is a pure column rename of
+    // `pairs`, which Spark's cache lookup serves from the caller's entry:
+    // persisting it adds nothing, and releasing it must not drop that
+    // entry. `evals` counts the evaluations of the pair plan.
+    val evals = spark.sparkContext.longAccumulator("pair-evals")
+    val seen = udf((a: Long) => { evals.add(1); a })
+    for (edgeLimit <- Seq("200000", "0")) { // micro-graph, distributed
+      spark.conf.set("spark.graft.clusters.driverEdgeLimit", edgeLimit)
+      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+        .select(seen(col("id_a")).as("id_a"), col("id_b")).persist()
+      try {
+        pairs.count()
+        val comp = Dedup.duplicateClusters(pairs).as[(Long, Long)]
+          .collect().toMap
+        assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L,
+          11L -> 10L))
+        assert(pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+          s"driverEdgeLimit=$edgeLimit: the caller's cache was dropped")
+        val before = evals.value
+        pairs.collect()
+        assert(evals.value == before,
+          s"driverEdgeLimit=$edgeLimit: a later action recomputed the pairs")
+      } finally {
+        pairs.unpersist(true)
+        spark.conf.unset("spark.graft.clusters.driverEdgeLimit")
+      }
+    }
+  }
+
   test("kmeansGrouped matches independent per-group kmeans fits") {
     import org.apache.spark.sql.functions._
     val vecs = Seq(

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.model._
 import org.apache.spark.sql.Row
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class DependencyNetworkSpec extends SparkSpec {
 
@@ -302,7 +303,7 @@ class MigrationAppSpec extends SparkSpec {
     assert(e.getMessage.contains("is a directory"))
   }
 
-  test("a two-migration run launches only its two write jobs") {
+  test("a two-migration run on one collection launches one write job") {
     val root = freshRoot()
     val app = new MigrationApp(spark, root)
     app.setup(Seq(
@@ -311,7 +312,35 @@ class MigrationAppSpec extends SparkSpec {
       simple("first", update = Map("$set" -> Map("cat" -> "warm")))))
     val (res, jobs) = jobsIn(app.run())
     assert(res.forall(!_.hasErrors) && res.map(_.matched) == Seq(3L, 3L))
-    assert(jobs == 2)
+    assert(jobs == 1)
+  }
+
+  test("four fusable migrations: one job, one .tmp swap, one ledger write") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val root = s"counting://${freshRoot()}"
+    val app = new MigrationApp(spark, root)
+    app.setup(Seq(
+      simple("a", query = Map("cat" -> "x")),
+      simple("b", update = Map("$inc" -> Map("v" -> 1.0))),
+      simple("c", deps = Seq("a"), query = Map("cat" -> "done"),
+        update = Map("$mul" -> Map("v" -> 2.0))),
+      simple("d", update = Map("$set" -> Map("flag" -> true)))))
+    CountingFileSystem.renames.clear()
+    val (res, jobs) = jobsIn(app.run())
+    assert(res.map(r => (r.id, r.matched, r.hasErrors)) == Seq(
+      ("a", 2L, false), ("b", 3L, false), ("d", 3L, false), ("c", 2L, false)),
+      res)
+    assert(jobs == 1)
+    val renamed = CountingFileSystem.renames.asScala.toSeq
+    assert(renamed.count(_._1.endsWith("/items.parquet.tmp")) == 1, renamed)
+    assert(renamed.count(_._1.endsWith("/anser_migrations_metadata.tmp")) == 1,
+      renamed)
+    val out = spark.read.parquet(s"$root/items.parquet")
+    assert(out.columns.toSeq == Seq("_id", "cat", "v", "flag"))
+    assert(out.orderBy("_id").collect().toSeq.map(_.toString) == Seq(
+      "[1,done,4.0,true]", "[2,y,3.0,true]", "[3,done,8.0,true]"))
+    assert(app.ledger.rows().map(_._id) == Seq("a", "b", "d", "c"))
   }
 
   test("matched counts are observed in the write job, not a second scan") {
@@ -558,6 +587,209 @@ class MigrationAppSpec extends SparkSpec {
       "UTF-8") == "usurper-app")
     java.nio.file.Files.delete(leaseLocal)
   }
+
+  // ---- same-namespace groups vs one migration at a time ----
+
+  private def table(root: String, coll: String, rows: Int = 8): Unit =
+    (1 to rows).map(i => (i.toLong, Seq("x", "y", "z")(i % 3), i * 1.5,
+        i * 10L, if (i % 4 == 0) null else s"L$i"))
+      .toDF("_id", "cat", "v", "n", "legacy")
+      .write.mode("overwrite").parquet(s"$root/$coll.parquet")
+
+  private def mig(id: String, coll: String, deps: Seq[String] = Nil,
+      query: Map[String, Any] = Map.empty, limit: Int = 0) =
+    GeneratorOptions(id, deps, Namespace("db", coll), query, limit,
+      sortBy = if (limit > 0) Seq("-v") else Nil)
+
+  private def parityRegistries: Registries = {
+    val r = new Registries
+    r.registerOperation("double-n", row => {
+      val i = row.fieldIndex("n")
+      Row.fromSeq(row.toSeq.updated(i, row.getLong(i) * 2L))
+    })
+    r.registerOperation("boom-on-3", row => {
+      if (row.getLong(row.fieldIndex("_id")) == 3L)
+        throw new IllegalStateException("boom on row 3")
+      row
+    })
+    r.registerProcessor("drop-evens",
+      it => it.filter(r => r.getLong(r.fieldIndex("_id")) % 2 == 1))
+    r
+  }
+
+  private def withoutDeps(m: MigrationSpec): MigrationSpec = {
+    val o = m.options.copy(dependsOn = Nil)
+    m match {
+      case x: SimpleMigration => x.copy(options = o)
+      case x: ManualMigration => x.copy(options = o)
+      case x: StreamMigration => x.copy(options = o)
+    }
+  }
+
+  /** The migrations in `run()`'s order, each in an app of its own (a
+    * group of one): the ledger gate checked here, since a one-migration
+    * app cannot declare dependencies on migrations it does not hold. */
+  private def oneByOne(root: String, ms: Seq[MigrationSpec],
+      opts: ApplicationOptions = ApplicationOptions()): Seq[MigrationResult] = {
+    val net = new DependencyNetwork
+    ms.foreach(m => net.add(m.id, m.options.dependsOn))
+    val byId = ms.map(m => m.id -> m).toMap
+    net.topoLayers().flatten.map(byId).map { m =>
+      val app = new MigrationApp(spark, root, opts, parityRegistries)
+      val blocked = m.options.dependsOn.filterNot(app.ledger.satisfied)
+      if (blocked.nonEmpty) {
+        val r = MigrationResult(m.id, 0, hasErrors = true, Some(
+          s"blocked on unsatisfied dependencies: ${blocked.mkString(",")}"))
+        if (!opts.dryRun)
+          app.ledger.record(MigrationMetadata(m.id, m.id, true, true))
+        r
+      } else app.setup(Seq(withoutDeps(m))).run().head
+    }
+  }
+
+  private def tableState(root: String, coll: String): (String, Seq[String]) = {
+    val df = spark.read.parquet(s"$root/$coll.parquet")
+    (df.schema.treeString, df.collect().map(_.toString).sorted.toSeq)
+  }
+
+  /** Results compared on each error's first line, numbers masked: a
+    * failed job's message goes on with the task's stack trace, and it
+    * and the stage and task numbers vary from run to run. */
+  private def comparable(rs: Seq[MigrationResult]) = rs.map(r => r.copy(
+    error = r.error.map(_.linesIterator.next().replaceAll("[0-9]+", "#"))))
+
+  /** `run()` of one app over `ms` and the one-by-one run on a copy of the
+    * same tables end equal: tables, results and ledger rows. */
+  private def assertParity(ms: Seq[MigrationSpec], colls: Seq[String],
+      opts: ApplicationOptions = ApplicationOptions())
+      : Seq[MigrationResult] = {
+    val (fusedRoot, singleRoot) = (freshRoot(), freshRoot())
+    for (r <- Seq(fusedRoot, singleRoot); c <- colls) table(r, c)
+    val fused = new MigrationApp(spark, fusedRoot, opts, parityRegistries)
+      .setup(ms).run()
+    val single = oneByOne(singleRoot, ms, opts)
+    assert(comparable(fused) == comparable(single))
+    for (c <- colls)
+      assert(tableState(fusedRoot, c) == tableState(singleRoot, c), c)
+    def ledger(r: String) =
+      new MetadataLedger(spark, s"$r/anser_migrations_metadata").rows()
+    assert(ledger(fusedRoot) == ledger(singleRoot))
+    fused
+  }
+
+  test("fused groups equal one migration at a time: two interleaved " +
+      "namespaces, Manual, Stream and limit members") {
+    // order: b1 b2 a1 a2 | a3 a4 d1 s1 l1 | a5 a6; groups [b1 b2],
+    // [a1 a2 a3 a4] (a3 needs a2 and a4 needs a1, inside the group; the
+    // Manual a4 ends it), [d1] (needs a1, across namespaces), [s1] and
+    // [l1] alone, [a5 a6]
+    val ms = Seq(
+      SimpleMigration(mig("b1", "other", query = Map("cat" -> "y")),
+        Map("$set" -> Map("cat" -> "o"))),
+      SimpleMigration(mig("b2", "other"), Map("$mul" -> Map("v" -> 2.0))),
+      SimpleMigration(mig("a1", "items", query = Map("cat" -> "x")),
+        Map("$set" -> Map("cat" -> "done"))),
+      SimpleMigration(mig("a2", "items"), Map("$inc" -> Map("n" -> 5L))),
+      SimpleMigration(mig("a3", "items", Seq("a2"),
+        Map("cat" -> "done")), scala.collection.immutable.ListMap(
+        "$rename" -> Map("legacy" -> "note"), "$unset" -> Map("cat" -> ""))),
+      ManualMigration(mig("a4", "items", Seq("a1"),
+        Map("v" -> Map("$gte" -> 6.0))), "double-n"),
+      SimpleMigration(mig("d1", "other", Seq("a1"), Map("cat" -> "o")),
+        Map("$inc" -> Map("n" -> 1L))),
+      StreamMigration(mig("s1", "other", Seq("b1")), "drop-evens"),
+      SimpleMigration(mig("l1", "other", Seq("b2"), limit = 2),
+        Map("$set" -> Map("cat" -> "top"))),
+      SimpleMigration(mig("a5", "items", Seq("a4")),
+        Map("$set" -> Map("flag" -> true))),
+      SimpleMigration(mig("a6", "items", Seq("a3"),
+        Map("n" -> Map("$gt" -> 40L))), Map("$mul" -> Map("v" -> 3.0))))
+    val res = assertParity(ms, Seq("items", "other"))
+    assert(res.map(_.id) ==
+      Seq("b1", "b2", "a1", "a2", "a3", "a4", "d1", "s1", "l1", "a5", "a6"))
+    assert(res.forall(!_.hasErrors), res)
+    assert(res.map(_.matched) == Seq(3L, 8L, 2L, 8L, 2L, 5L, 3L, 8L, 2L, 8L, 5L))
+  }
+
+  test("fused groups equal one migration at a time: a compile error and " +
+      "a Manual op that throws mid-group") {
+    // [f1 f2 f3 f7 f4]: f2 fails to compile and blocks f3; the Manual f4
+    // throws on one row, so the group's write fails and it re-runs one
+    // migration at a time — f1 and f7 commit, f4 errors; then [f5 f6]:
+    // f5 needs f4 and is blocked, the independent f6 runs
+    val ms = Seq(
+      SimpleMigration(mig("f1", "items", query = Map("cat" -> "x")),
+        Map("$set" -> Map("cat" -> "p"))),
+      SimpleMigration(mig("f2", "items"), Map("$bogus" -> Map("n" -> 1))),
+      SimpleMigration(mig("f3", "items", Seq("f2")),
+        Map("$inc" -> Map("n" -> 1L))),
+      SimpleMigration(mig("f7", "items", Seq("f1")),
+        Map("$mul" -> Map("v" -> 2.0))),
+      ManualMigration(mig("f4", "items", Seq("f1")), "boom-on-3"),
+      SimpleMigration(mig("f5", "items", Seq("f4")),
+        Map("$set" -> Map("cat" -> "q"))),
+      SimpleMigration(mig("f6", "items", Seq("f7")),
+        Map("$inc" -> Map("n" -> 100L))))
+    val res = assertParity(ms, Seq("items"))
+    assert(res.map(r => (r.id, r.hasErrors)) == Seq(("f1", false),
+      ("f2", true), ("f3", true), ("f7", false), ("f4", true),
+      ("f5", true), ("f6", false)))
+    assert(res.find(_.id == "f3").get.error.get.contains("blocked"))
+    assert(res.find(_.id == "f4").get.error.get.contains("boom on row 3"))
+    assert(res.find(_.id == "f5").get.error.get.contains("blocked"))
+  }
+
+  test("a chain of 64 $inc migrations on one field equals one at a time") {
+    val ms = (1 to 64).map(i => SimpleMigration(
+      mig(s"i$i", "items", if (i == 1) Nil else Seq(s"i${i - 1}")),
+      Map("$inc" -> Map("n" -> 1L))))
+    val t0 = System.nanoTime()
+    val res = assertParity(ms, Seq("items"))
+    info(f"fused and one-by-one runs took ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    assert(res.forall(r => !r.hasErrors && r.matched == 8L))
+    // the fused app's groups, timed alone: MaxGroup members per write
+    val root = freshRoot()
+    table(root, "items")
+    val app = new MigrationApp(spark, root).setup(ms)
+    val t1 = System.nanoTime()
+    val (_, jobs) = jobsIn(app.run())
+    info(f"64-member chain: ${(System.nanoTime() - t1) / 1e6}%.0f ms, " +
+      s"$jobs jobs")
+    assert(jobs == 64 / MigrationApp.MaxGroup)
+  }
+
+  test("dry run counts a group's matches in one scan, as one at a time") {
+    val ms = Seq(
+      SimpleMigration(mig("m1", "items", query = Map("cat" -> "x")),
+        Map("$set" -> Map("cat" -> "done"))),
+      SimpleMigration(mig("m2", "items", query = Map("v" -> Map("$gt" -> 4.0))),
+        Map("$inc" -> Map("n" -> 1L))),
+      SimpleMigration(mig("m3", "items", query = Map("v" -> Map("$near" -> 1))),
+        Map("$inc" -> Map("n" -> 1L))),
+      ManualMigration(mig("m4", "items", query = Map("cat" -> "y")),
+        "double-n"),
+      SimpleMigration(mig("m5", "items", Seq("m1")),
+        Map("$inc" -> Map("n" -> 1L))),
+      SimpleMigration(mig("m6", "items", query = Map("cat" -> "z"),
+        limit = 2), Map("$set" -> Map("cat" -> "top"))),
+      SimpleMigration(mig("m7", "items", query = Map("legacy" -> null)),
+        Map("$set" -> Map("cat" -> "none"))))
+    val dry = ApplicationOptions(dryRun = true)
+    val res = assertParity(ms, Seq("items"), dry)
+    assert(res.map(r => (r.id, r.matched, r.hasErrors)) == Seq(
+      ("m1", 2L, false), ("m2", 6L, false), ("m3", 0L, true),
+      ("m4", 3L, false), ("m6", 2L, false), ("m7", 2L, false),
+      ("m5", 0L, true)), res)
+    // the group [m1 m2 m3 m4] is one aggregate, not a count job each
+    val root = freshRoot()
+    table(root, "items")
+    val few = ms.take(4)
+    val (_, fused) = jobsIn(new MigrationApp(spark, root, dry,
+      parityRegistries).setup(few).run())
+    val (_, single) = jobsIn(oneByOne(root, few, dry))
+    info(s"dry run of four members: $fused jobs fused, $single one at a time")
+    assert(fused < single, s"$fused vs $single jobs")
+  }
 }
 
 /** Test filesystem with OBJECT-STORE rename semantics: "rename" is a
@@ -575,4 +807,21 @@ class ObjStoreFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     else org.apache.hadoop.fs.FileUtil.copy(this, src, this, dst,
       /* deleteSource = */ true, getConf)
   }
+}
+
+/** Local filesystem under the `counting` scheme that records every
+  * rename (source, destination), so a spec can count table swaps and
+  * ledger writes. */
+class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("counting:///")
+  override def getScheme: String = "counting"
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    CountingFileSystem.renames.add((src.toString, dst.toString))
+    super.rename(src, dst)
+  }
+}
+
+object CountingFileSystem {
+  val renames = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
 }
