@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Hybrid-search fusion: combine independent retrieval rankings (lexical
   * BM25, exact/quantized/LSH/IVF vector top-k) into one consensus ranking
-  * with reciprocal-rank fusion — score(p) = Σ_r 1/(k0 + rank_r(p)).
+  * with reciprocal-rank fusion — score(p) = Σ_r 1/(60 + rank_r(p)).
   *
   * RRF needs only ranks, so any mix of score scales fuses cleanly. Plan
   * shape: union of the (already tiny, top-k-bounded) rankings, one hash
@@ -15,19 +15,26 @@ import org.apache.spark.sql.functions._
   */
 object Hybrid {
 
+  /** The RRF damping constant, as in the original paper. */
+  private val RrfK = 60
+
+  /** One ranking's reciprocal-rank term, `weight / (rank + 60)` — the
+    * term [[rrfFuse]] and the `$rankFusion` stage both sum. */
+  private[graft] def rrfTerm(weight: Column, rank: Column): Column =
+    weight / (rank + lit(RrfK))
+
   /** Fuse rankings shaped (query_id, neighbor_id, rank) and return the top
-    * `k` per query as (query_id, neighbor_id, score, fused_rank). `k0` is
-    * the standard RRF damping constant (60 in the original paper).
+    * `k` per query as (query_id, neighbor_id, score, fused_rank).
     *
-    * The score sum is decimal-exact (each 1/(k0+rank) term is a
-    * deterministic double; exact decimal addition makes the total
-    * independent of aggregation order). Ties break on neighbor id. */
-  def rrfFuse(rankings: Seq[DataFrame], k: Int, k0: Int = 60): DataFrame = {
+    * The score sum is decimal-exact (each [[rrfTerm]] is a deterministic
+    * double; exact decimal addition makes the total independent of
+    * aggregation order). Ties break on neighbor id. */
+  def rrfFuse(rankings: Seq[DataFrame], k: Int): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse: no rankings")
     val all = rankings.map(_.select("query_id", "neighbor_id", "rank"))
       .reduce(_.unionByName(_))
     val fused = all.groupBy("query_id", "neighbor_id")
-      .agg(sum((lit(1.0) / (col("rank") + lit(k0))).cast("decimal(28,12)"))
+      .agg(sum(rrfTerm(lit(1.0), col("rank")).cast("decimal(28,12)"))
         .cast("double").as("score"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("neighbor_id").asc)
@@ -52,8 +59,7 @@ object Hybrid {
   def hybridSearch(index: graft.ops.TextSearch.Bm25Index,
       docIdCol: String, terms: Seq[String], vectors: DataFrame,
       vecIdCol: String, vecCol: String, queryVec: Seq[Double],
-      k: Int, k0: Int = 60, legK: Int = 0, buckets: Int = 256)
-      : DataFrame = {
+      k: Int, legK: Int = 0, buckets: Int = 256): DataFrame = {
     require(k > 0, s"hybridSearch: k > 0, got $k")
     require(queryVec.nonEmpty, "hybridSearch: empty query vector")
     val kk = if (legK > 0) legK else 2 * k
@@ -66,8 +72,7 @@ object Hybrid {
     val qDf = vectors.sparkSession.range(1)
       .select(lit(-1L).as(vecIdCol), typedlit(queryVec).as(vecCol))
     val vec = Similarity.bruteForceTopK(dv, qDf, vecIdCol, vecCol, kk)
-    rrfFuse(Seq(lexLeg(index, docIdCol, terms, kk, buckets), vec),
-        k, k0)
+    rrfFuse(Seq(lexLeg(index, docIdCol, terms, kk, buckets), vec), k)
       .select("neighbor_id", "score", "fused_rank")
   }
 
@@ -96,7 +101,7 @@ object Hybrid {
   def hybridSearchIvf(index: graft.ops.TextSearch.Bm25Index,
       docIdCol: String, terms: Seq[String], ivfStore: DataFrame,
       vecIdCol: String, vecCol: String, centroids: DataFrame,
-      queryVec: Seq[Double], k: Int, k0: Int = 60, legK: Int = 0,
+      queryVec: Seq[Double], k: Int, legK: Int = 0,
       nprobe: Int = 4, buckets: Int = 256): DataFrame = {
     require(k > 0, s"hybridSearchIvf: k > 0, got $k")
     require(queryVec.nonEmpty, "hybridSearchIvf: empty query vector")
@@ -105,8 +110,7 @@ object Hybrid {
       .select(lit(-1L).as(vecIdCol), typedlit(queryVec).as(vecCol))
     val vec = Similarity.ivfTopKPrecomputed(qDf, ivfStore, vecIdCol,
       vecCol, centroids, kk, nprobe)
-    rrfFuse(Seq(lexLeg(index, docIdCol, terms, kk, buckets), vec),
-        k, k0)
+    rrfFuse(Seq(lexLeg(index, docIdCol, terms, kk, buckets), vec), k)
       .select("neighbor_id", "score", "fused_rank")
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,15 +19,28 @@ import org.apache.spark.sql.functions._
   */
 object TextSearch {
 
-  /** Score every document containing at least one of `terms` with
-    * BM25(k1, b); returns (idCol, score, matched) ranked by score desc with
-    * id-asc tie-break, top `k` (0 = all matches).
-    *
+  /** BM25's term-frequency saturation and length normalization (the
+    * Lucene defaults; `$search` text legs score with the same pair). */
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** One query term's BM25 weight in one document:
     * idf = ln(1 + (N - df + 0.5)/(df + 0.5)) (the standard non-negative
-    * variant); score = Σ_t idf(t) · tf·(k1+1)/(tf + k1·(1 - b + b·dl/avgdl)).
-    */
+    * variant) times tf·(k1+1)/(tf + k1·(1 - b + b·dl/avgdl)). Callers
+    * sum the per-term weights their own way (a decimal sum here, a
+    * per-row double sum in `$search`). */
+  private[graft] def bm25Weight(tf: Column, df: Column, nDocs: Column,
+      dl: Column, avgdl: Column): Column = {
+    val idf = log(lit(1.0) + (nDocs - df + 0.5) / (df + 0.5))
+    idf * (tf * lit(K1 + 1)) /
+      (tf + lit(K1) * (lit(1 - B) + lit(B) * dl / avgdl))
+  }
+
+  /** Score every document containing at least one of `terms` with
+    * BM25 ([[bm25Weight]]); returns (idCol, score, matched) ranked by
+    * score desc with id-asc tie-break, top `k` (0 = all matches). */
   def bm25(df: DataFrame, idCol: String, textCol: String, terms: Seq[String],
-      k1: Double = 1.2, b: Double = 0.75, k: Int = 0): DataFrame = {
+      k: Int = 0): DataFrame = {
     require(terms.nonEmpty, "bm25: empty query")
     val toks = TextFunctions.tokens(col(textCol))
     // one scan: doc length + the query-term hits only
@@ -39,24 +52,30 @@ object TextSearch {
     // corpus stats: one broadcast row (computed in-plan, no driver action)
     val stats = df.agg(count(lit(1)).as("n_docs"),
       avg(size(toks).cast("double")).as("avgdl"))
+    ranked(hits, stats, idCol, k)
+  }
+
+  /** The ranking both faces share, from their query-term `hits`
+    * (idCol, dl, term, tf — unique per (doc, term)) and a one-row
+    * `stats` frame (n_docs, avgdl): window df, broadcast stats, per-term
+    * weight, decimal sum per document, score-desc order, top `k`. */
+  private def ranked(hits: DataFrame, stats: DataFrame, idCol: String,
+      k: Int): DataFrame = {
     // per-term document frequency: hits is unique per (doc, term), so a
     // window count over `term` IS df — no self-join, no hits recompute
     val scored = hits
       .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
       .join(broadcast(stats))
-      .withColumn("idf", log(lit(1.0) +
-        (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("w", col("idf") * (col("tf") * lit(k1 + 1)) /
-        (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") /
-          col("avgdl"))))
+      .withColumn("w", bm25Weight(col("tf"), col("df"), col("n_docs"),
+        col("dl"), col("avgdl")))
       .groupBy(idCol)
       // decimal-cast before SUM: per-term weights are deterministic doubles,
       // and exact decimal addition makes the score independent of partial-
       // aggregation order (engine- and partitioning-reproducible)
       .agg(sum(col("w").cast("decimal(28,12)")).cast("double").as("score"),
         count(lit(1)).as("matched"))
-    val ranked = scored.orderBy(col("score").desc, col(idCol).asc)
-    if (k > 0) ranked.limit(k) else ranked
+    val ordered = scored.orderBy(col("score").desc, col(idCol).asc)
+    if (k > 0) ordered.limit(k) else ordered
   }
 
   /** A persisted lexical index: term-bucketed postings plus a one-row
@@ -130,8 +149,7 @@ object TextSearch {
     * 100 TB corpus actually needs (re-tokenizing everything per query
     * is the recompute column the store eliminates). */
   def bm25Precomputed(index: Bm25Index, idCol: String,
-      terms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-      k: Int = 0, buckets: Int = 256): DataFrame = {
+      terms: Seq[String], k: Int = 0, buckets: Int = 256): DataFrame = {
     require(terms.nonEmpty, "bm25Precomputed: empty query")
     graft.ops.Dedup.requireStoreParams(index.postings,
       "bm25Precomputed", "p_buckets" -> buckets)
@@ -147,18 +165,6 @@ object TextSearch {
       .select(col(idCol), col("dl"), col("term"), col("tf"))
     val stats = index.stats.select(col("n_docs"),
       (col("sum_dl") / col("n_dl")).as("avgdl"))
-    val scored = hits
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
-      .join(broadcast(stats))
-      .withColumn("idf", log(lit(1.0) +
-        (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
-      .withColumn("w", col("idf") * (col("tf") * lit(k1 + 1)) /
-        (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") /
-          col("avgdl"))))
-      .groupBy(idCol)
-      .agg(sum(col("w").cast("decimal(28,12)")).cast("double").as("score"),
-        count(lit(1)).as("matched"))
-    val ranked = scored.orderBy(col("score").desc, col(idCol).asc)
-    if (k > 0) ranked.limit(k) else ranked
+    ranked(hits, stats, idCol, k)
   }
 }

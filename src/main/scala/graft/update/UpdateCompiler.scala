@@ -46,13 +46,24 @@ object UpdateCompiler {
       arrayFilters: Seq[Map[String, Any]] = Nil,
       queryDoc: Map[String, Any] = Map.empty): DataFrame = {
     implicit val af: ArrayFilters = ArrayFilters.parse(arrayFilters, queryDoc)
-    if (!hasDollarKey(update)) return applyReplacement(df, pred, update, idCol)
-    update.foldLeft(df) { case (acc, (op, spec)) =>
-      val fields = spec match {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-        case other => throw new IllegalArgumentException(
-          s"update operator $op expects a document, got $other")
-      }
+    val conditional = !isUnconditional(pred)
+    if (!hasDollarKey(update))
+      return withMatch(df, pred, conditional)(
+        applyReplacement(_, _, update, idCol))
+    val ops = update.toSeq.map { case (op, spec) => op -> (spec match {
+      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
+      case other => throw new IllegalArgumentException(
+        s"update operator $op expects a document, got $other")
+    }) }
+    withMatch(df, pred, conditional && ops.map(_._2.size).sum > 1)(
+      applyOperators(_, _, ops))
+  }
+
+  /** The operator writes of [[applyUpdate]], in document order. */
+  private def applyOperators(df: DataFrame, pred: Column,
+      ops: Seq[(String, Map[String, Any])])(
+      implicit af: ArrayFilters): DataFrame =
+    ops.foldLeft(df) { case (acc, (op, fields)) =>
       op match {
         case "$set" =>
           fields.foldLeft(acc) { case (d, (path, v)) =>
@@ -230,7 +241,21 @@ object UpdateCompiler {
           throw new IllegalArgumentException(s"unsupported update operator: $other")
       }
     }
-  }
+
+  /** Runs an update's `writes` against the match as it stood BEFORE the
+    * update. With `snapshot`, `pred` is evaluated once into a hidden
+    * column ahead of every write (and dropped after): each write
+    * rewrites columns the predicate may read, and a lazily composed
+    * `when(pred, …)` in a later write would otherwise re-read the new
+    * values, so `{$set: {cat: "done"}, $inc: {n: 1}}` under the query
+    * `{cat: "x"}` would skip the `$inc`. A literal `true` or a lone
+    * write needs no snapshot. */
+  private def withMatch(df: DataFrame, pred: Column, snapshot: Boolean)(
+      writes: (DataFrame, Column) => DataFrame): DataFrame =
+    if (!snapshot) writes(df, pred)
+    else writes(df.withColumn(MatchCol, pred), col(MatchCol)).drop(MatchCol)
+
+  private val MatchCol = "__upd_match"
 
   /** Replacement-document branch: id kept, listed fields set, all other
     * top-level fields nulled on matching rows (Mongo replace semantics;
@@ -253,44 +278,38 @@ object UpdateCompiler {
       case other => throw new IllegalArgumentException(
         s"$what expects a document, got $other")
     }
-    // the match predicate is materialized ONCE before any stage runs:
-    // stages rewrite the very columns the predicate reads, and a lazily
-    // composed `when(pred, …)` in a later blend would otherwise re-read
-    // the mutated values
-    val predTmp = "__updpipe_pred"
-    val p = col(predTmp)
-    val out = stages.foldLeft(df.withColumn(predTmp, pred)) {
-      (acc, stageRaw) =>
-      val stage = asDoc(stageRaw, "update pipeline stage")
-      require(stage.size == 1,
-        s"update pipeline stage: exactly one operator, got ${stage.keys}")
-      stage.head match {
-        case ("$set", spec) => pipelineSet(acc, p, asDoc(spec, "$set"))
-        case ("$addFields", spec) =>
-          pipelineSet(acc, p, asDoc(spec, "$addFields"))
-        case ("$unset", spec) =>
-          val paths = spec match {
-            case s: Seq[_] => s.map(_.toString)
-            case one => Seq(one.toString)
-          }
-          paths.foldLeft(acc)((d, path) => unsetPath(d, path, p))
-        case ("$replaceWith", spec) =>
-          pipelineReplaceRoot(acc, p, spec, idCol, predTmp)
-        case ("$replaceRoot", spec) =>
-          pipelineReplaceRoot(acc, p,
-            asDoc(spec, "$replaceRoot").getOrElse("newRoot",
-              throw new IllegalArgumentException(
-                "$replaceRoot requires newRoot")), idCol, predTmp)
-        case ("$project", _) => throw new IllegalArgumentException(
-          "update pipeline $project: unsupported — conditional schema " +
-            "surgery has no columnar equivalent; use $unset for removals " +
-            "and $set for computed fields")
-        case (other, _) => throw new IllegalArgumentException(
-          s"update pipeline: unsupported stage $other " +
-            "($set/$addFields/$unset/$replaceRoot/$replaceWith)")
+    withMatch(df, pred, snapshot = true) { (staged, p) =>
+      stages.foldLeft(staged) { (acc, stageRaw) =>
+        val stage = asDoc(stageRaw, "update pipeline stage")
+        require(stage.size == 1,
+          s"update pipeline stage: exactly one operator, got ${stage.keys}")
+        stage.head match {
+          case ("$set", spec) => pipelineSet(acc, p, asDoc(spec, "$set"))
+          case ("$addFields", spec) =>
+            pipelineSet(acc, p, asDoc(spec, "$addFields"))
+          case ("$unset", spec) =>
+            val paths = spec match {
+              case s: Seq[_] => s.map(_.toString)
+              case one => Seq(one.toString)
+            }
+            paths.foldLeft(acc)((d, path) => unsetPath(d, path, p))
+          case ("$replaceWith", spec) =>
+            pipelineReplaceRoot(acc, p, spec, idCol)
+          case ("$replaceRoot", spec) =>
+            pipelineReplaceRoot(acc, p,
+              asDoc(spec, "$replaceRoot").getOrElse("newRoot",
+                throw new IllegalArgumentException(
+                  "$replaceRoot requires newRoot")), idCol)
+          case ("$project", _) => throw new IllegalArgumentException(
+            "update pipeline $project: unsupported — conditional schema " +
+              "surgery has no columnar equivalent; use $unset for removals " +
+              "and $set for computed fields")
+          case (other, _) => throw new IllegalArgumentException(
+            s"update pipeline: unsupported stage $other " +
+              "($set/$addFields/$unset/$replaceRoot/$replaceWith)")
+        }
       }
     }
-    out.drop(predTmp)
   }
 
   /** One pipeline $set/$addFields stage: all expressions evaluated
@@ -313,7 +332,7 @@ object UpdateCompiler {
     * struct; matched rows take its fields (absent fields go null), other
     * rows keep theirs. `idCol` is preserved, like replacement updates. */
   private def pipelineReplaceRoot(df: DataFrame, pred: Column,
-      newRoot: Any, idCol: String, predTmp: String): DataFrame = {
+      newRoot: Any, idCol: String): DataFrame = {
     import graft.pipeline.PipelineCompiler.expr2col
     val rootCol = expr2col(newRoot)
     val rootType = df.select(rootCol.as("__r")).schema.head.dataType match {
@@ -324,7 +343,7 @@ object UpdateCompiler {
     }
     val staged = df.withColumn("__updroot", rootCol)
     val newNames = rootType.fieldNames.toSeq
-    val existing = df.columns.toSeq.filterNot(_ == predTmp)
+    val existing = df.columns.toSeq.filterNot(_ == MatchCol)
     val kept = existing.filterNot(_ == idCol).foldLeft(staged) { (d, c) =>
       if (newNames.contains(c))
         d.withColumn(c, when(pred, col("__updroot").getField(c))
@@ -341,7 +360,7 @@ object UpdateCompiler {
 
   private def applyReplacement(df: DataFrame, pred: Column,
       doc: Map[String, Any], idCol: String): DataFrame = {
-    val existing = df.columns.toSeq
+    val existing = df.columns.toSeq.filterNot(_ == MatchCol)
     val replaced = existing.filterNot(_ == idCol).foldLeft(df) { (d, c) =>
       doc.get(c) match {
         case Some(v) => d.withColumn(c, when(pred, toLit(v)).otherwise(col(c)))

@@ -6,34 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * candidate-volume throw and the band/chunk/bucket-keyed equi-joins
   * live in one place each (`Dedup.candidateValve`, `Dedup.bandJoin`),
   * so a hand-written copy shows up here as a count change. Comment
-  * lines are skipped; runs from the project root. */
+  * lines are skipped ([[SourceCensus]]). */
 class PairCoreCensusSpec extends AnyFunSuite {
 
-  private def scalaFiles(dir: java.io.File): Seq[java.io.File] =
-    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) scalaFiles(f)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    }
-
-  /** (file name, code lines joined) for every main source file. */
-  private lazy val code: Seq[(String, String)] = {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: $root missing")
-    scalaFiles(root).map { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try f.getName -> src.getLines().filterNot { l =>
-        val t = l.trim
-        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-      }.mkString("\n")
-      finally src.close()
-    }
-  }
-
-  /** Matches of `re` per file, files without one left out. */
-  private def census(re: String): Map[String, Int] =
-    code.map { case (f, c) => f -> re.r.findAllIn(c).size }
-      .filter(_._2 > 0).toMap
+  import SourceCensus.{census, code}
 
   test("one candidate-volume throw; no message spells out a valve key") {
     assert(census("\"[^\"\\n]*candidate volume") == Map("Dedup.scala" -> 1))

@@ -277,7 +277,7 @@ class DataPipelineOpsSpec extends SparkSpec {
 
   test("bm25 matches the textbook formula and ranks deterministically") {
     val out = TextSearch.bm25(corpus, "doc_id", "text",
-      Seq("apple", "cherry"), k1 = 1.2, b = 0.75)
+      Seq("apple", "cherry"))
       .as[(Long, Double, Long)].collect()
     // N=3, avgdl=(3+2+3)/3; df(apple)=1, df(cherry)=2
     val n = 3.0; val avgdl = 8.0 / 3.0

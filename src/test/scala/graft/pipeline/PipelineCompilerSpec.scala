@@ -2452,6 +2452,29 @@ class SearchStagesSpec extends graft.SparkSpec {
     assert(err.getMessage.contains("no text/phrase leg"))
   }
 
+  test("$search highlight tokenizes the path with its leg's analyzer") {
+    val d = Seq((1L, "Stream, filter!"), (2L, "nothing here"))
+      .toDF("id", "txt")
+    def hits(searchDoc: Map[String, Any]): Seq[String] =
+      PipelineCompiler.compile(Seq(
+        Map("$search" -> (searchDoc ++
+          Map("highlight" -> Map("path" -> "txt")))),
+        Map("$project" -> Map("id" -> 1,
+          "hl" -> Map("$meta" -> "searchHighlights")))))(d)
+        .where($"id" === 1)
+        .selectExpr("transform(hl, p -> p.texts[1].value)")
+        .collect().head.getSeq[String](0)
+    // lucene.standard analyzes "Stream," to "stream", which the query
+    // matches: one passage for it
+    assert(hits(Map("analyzer" -> "lucene.standard",
+      "text" -> Map("query" -> "stream", "path" -> "txt"))) ==
+      Seq("stream"))
+    // a {value, multi} path names the highlight path too
+    assert(hits(Map("text" -> Map("query" -> "Filter",
+      "path" -> Map("value" -> "txt", "multi" -> "lucene.standard")))) ==
+      Seq("filter"))
+  }
+
   test("$search geoWithin/geoShape legs: box, circle, within/disjoint/contains") {
     val d = Seq((1L, Seq(0.1, 0.1)), (2L, Seq(0.3, 0.0)),
       (3L, Seq(0.9, 0.9)), (4L, Seq(-0.2, 0.05)))

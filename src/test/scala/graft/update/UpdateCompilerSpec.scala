@@ -370,4 +370,28 @@ class UpdateCompilerSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("unsupported stage"))
   }
+
+  test("every write tests the match as it stood before the update") {
+    val d = Seq((1L, "x", 1), (2L, "y", 1)).toDF("_id", "cat", "n")
+    def upd(u: Map[String, Any]) =
+      UpdateCompiler.applyUpdate(d, $"cat" === "x", u)
+        .orderBy("_id").as[(Long, String, Int)].collect().toSeq
+    // the $set unmatches row 1 for a lazily re-read predicate; Mongo
+    // still applies the $inc to the document the query matched
+    assert(upd(scala.collection.immutable.ListMap(
+      "$set" -> Map("cat" -> "done"), "$inc" -> Map("n" -> 1))) ==
+      Seq((1L, "done", 2), (2L, "y", 1)))
+    // the same within one operator: both fields of the $set
+    assert(upd(Map("$set" -> scala.collection.immutable.ListMap(
+      "cat" -> "done", "n" -> 5))) ==
+      Seq((1L, "done", 5), (2L, "y", 1)))
+    // and across a replacement document's fields
+    assert(upd(scala.collection.immutable.ListMap(
+      "cat" -> "done", "n" -> 5)) ==
+      Seq((1L, "done", 5), (2L, "y", 1)))
+    // the snapshot column never leaks into the result
+    assert(UpdateCompiler.applyUpdate(d, $"cat" === "x",
+      Map("$set" -> Map("cat" -> "done", "n" -> 5))).columns.toSeq ==
+      Seq("_id", "cat", "n"))
+  }
 }
