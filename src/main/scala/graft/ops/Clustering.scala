@@ -176,56 +176,59 @@ object Clustering {
     // parquet scan would run the whole (cell, dim) aggregate's map side
     // on one or two cores — fix the parallelism up front (no-op when the
     // source is already parallel; measured 4x at the 100x rehearsal)
-    val data = Partitioning.ensureMinPartitions(
+    // Persisted once per fit: every Lloyd step reads it, and without the
+    // cache each step would re-read the source and re-run the round-robin
+    // Exchange of a one-split source. Released when the fit returns.
+    val data = Dedup.trackedPersist(Partitioning.ensureMinPartitions(
       df.select(col(idCol).as("__vid"),
-        col(vecCol).cast("array<double>").as("__v")))
-    // The centroid table is k rows — bounded DRIVER state (the class the
-    // IVF/PQ literal fold already puts it in), so the whole loop holds it
-    // driver-side: each Lloyd step is one collect with one Exchange of
-    // its own (assignment folded into the scan, one (cell, dim)
-    // aggregate, k·dim rows collected); a one-split source adds the
-    // round-robin Exchange above, and adaptive execution runs each
-    // Exchange as its own job — three jobs per step in ProfileProbe
-    // q130_semdedup at sf0.01.
-    // No checkpoints and no growing lineage — every step's plan restarts
-    // from the scan with this generation's centroids as literals.
-    // deterministic seed: the k smallest-id vectors
-    var centSeq: Seq[(Long, Array[Double])] = data.orderBy("__vid")
-      .limit(k)
-      .select(col("__vid").cast("long"), col("__v")).collect().toSeq
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    for (_ <- 1 to iters) {
-      val assigned =
-        withNearestCentroid(data, "__v", centSeq, "centroid_id")
-      // component-wise mean via exact decimal sums (partitioning-invariant).
-      // ONE exchange per Lloyd step (r16, guide §2.4): the per-(cell, dim)
-      // means — k·dim bounded rows, the driver-state class this loop
-      // already lives in — collect directly and assemble into arrays
-      // driver-side; the former second groupBy (collect_list + array_sort
-      // per cell) was a second full shuffle per iteration for what is a
-      // driver-side regroup of a few thousand rows. Values and positional
-      // order are identical by construction (posexplode emits contiguous
-      // 0-based positions, so filling by index = the old pos-sorted list).
-      val meanRows = assigned
-        .select(col("centroid_id"), posexplode(col("__v"))
-          .as(Seq("pos", "x")))
-        .groupBy("centroid_id", "pos")
-        .agg((sum(col("x").cast("decimal(28,12)")).cast("double") /
-          count(lit(1))).as("m"))
-        .collect()
-      val fresh: Map[Long, Array[Double]] = meanRows
-        .groupBy(_.getLong(0))
-        .map { case (cid, rs) =>
-          val arr = new Array[Double](rs.map(_.getInt(1)).max + 1)
-          rs.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
-          cid -> arr
-        }
-      // empty cells keep their previous centroid
-      centSeq = centSeq.map { case (cid, old) =>
-        (cid, fresh.getOrElse(cid, old)) }
-    }
-    centSeq
+        col(vecCol).cast("array<double>").as("__v"))))
+    try {
+      // The centroid table is k rows — bounded DRIVER state (the class the
+      // IVF/PQ literal fold already puts it in), so the whole loop holds it
+      // driver-side: each Lloyd step is one collect over the cached frame
+      // with one Exchange of its own (assignment folded into the scan, one
+      // (cell, dim) aggregate, k·dim rows collected), which adaptive
+      // execution runs as a map-stage job and a result job.
+      // No checkpoints and no growing lineage — every step's plan restarts
+      // from the cached frame with this generation's centroids as literals.
+      // deterministic seed: the k smallest-id vectors
+      var centSeq: Seq[(Long, Array[Double])] = data.orderBy("__vid")
+        .limit(k)
+        .select(col("__vid").cast("long"), col("__v")).collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .sortBy(_._1)
+      for (_ <- 1 to iters) {
+        val assigned =
+          withNearestCentroid(data, "__v", centSeq, "centroid_id")
+        // component-wise mean via exact decimal sums (partitioning-invariant).
+        // ONE exchange per Lloyd step (r16, guide §2.4): the per-(cell, dim)
+        // means — k·dim bounded rows, the driver-state class this loop
+        // already lives in — collect directly and assemble into arrays
+        // driver-side; the former second groupBy (collect_list + array_sort
+        // per cell) was a second full shuffle per iteration for what is a
+        // driver-side regroup of a few thousand rows. Values and positional
+        // order are identical by construction (posexplode emits contiguous
+        // 0-based positions, so filling by index = the old pos-sorted list).
+        val meanRows = assigned
+          .select(col("centroid_id"), posexplode(col("__v"))
+            .as(Seq("pos", "x")))
+          .groupBy("centroid_id", "pos")
+          .agg((sum(col("x").cast("decimal(28,12)")).cast("double") /
+            count(lit(1))).as("m"))
+          .collect()
+        val fresh: Map[Long, Array[Double]] = meanRows
+          .groupBy(_.getLong(0))
+          .map { case (cid, rs) =>
+            val arr = new Array[Double](rs.map(_.getInt(1)).max + 1)
+            rs.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
+            cid -> arr
+          }
+        // empty cells keep their previous centroid
+        centSeq = centSeq.map { case (cid, old) =>
+          (cid, fresh.getOrElse(cid, old)) }
+      }
+      centSeq
+    } finally Dedup.release(data)
   }
 
   /** Grouped k-means: ONE Lloyd iteration trains EVERY group's codebook

@@ -53,7 +53,7 @@ object Dedup {
   }
   /** Unpersist `df` if [[trackedPersist]] persisted it and it is still
     * tracked; a no-op otherwise. */
-  private def release(df: DataFrame): Unit =
+  private[ops] def release(df: DataFrame): Unit =
     if (cachedFrames.remove(df)) df.unpersist(false)
   /** [[autoRelease]] for sibling ops packages. */
   private[ops] def releaseOnMaterialize(result: DataFrame,

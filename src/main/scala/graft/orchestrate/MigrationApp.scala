@@ -1,9 +1,14 @@
 package graft.orchestrate
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row,
+  SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, InSet}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
 import graft.model._
 import graft.query.QueryCompiler
+import graft.sources.Tables
 import graft.update.UpdateCompiler
 
 /** Executor-side registries for imperative migrations — reference
@@ -48,19 +53,20 @@ final case class MigrationResult(id: String, matched: Long, hasErrors: Boolean,
   *
   * The unit of execution is a same-namespace GROUP: a maximal run of
   * consecutive migrations (in topo order) on one namespace, at most
-  * [[MigrationApp.MaxGroup]] long. Its members' transforms chain onto one
-  * read of the table, and the group publishes once: one lease, one
-  * table swap, one ledger write for all its rows. So N migrations on one
-  * collection are one rewrite, not N. A crash is all-or-nothing per
-  * group: the table and the ledger stay as they were before it, and every
-  * member re-runs. A limit migration and a Stream migration run alone
-  * (the limit keeps its work-list job, post-write uniqueness check and
-  * backup), and a Manual member ends its group: its union reads the
-  * upstream twice, so no upstream is evaluated more than twice in one
-  * write. A member that fails to compile fails alone, before the write,
-  * and blocks its dependents; if the group's write throws, the group
-  * re-runs member by member, one swap each, with the outcomes of running
-  * the migrations one at a time.
+  * [[MigrationApp.MaxGroup]] long; only a Stream migration runs alone.
+  * Its members' transforms chain onto one read of the table, and the
+  * group publishes once: one lease, one table swap, one ledger write for
+  * all its rows. So N migrations on one collection are one rewrite, not
+  * N. A limit member picks its work list with one job over the chained
+  * frame at its place, the table the one-at-a-time path would read; a
+  * Manual member passes every row through one pass, the op applied to
+  * the matching ones. A crash is all-or-nothing per group: the table and
+  * the ledger stay as they were before it, and every member re-runs. A
+  * member that fails to compile fails alone, before the write, and
+  * blocks its dependents; if the group's write or its swap fence throws
+  * (a lost lease, a limit key that is not unique), nothing is published
+  * and the group re-runs member by member, one swap each, with the
+  * outcomes of running the migrations one at a time.
   */
 final class MigrationApp(
     spark: SparkSession,
@@ -104,30 +110,25 @@ final class MigrationApp(
   }
 
   /** The group that starts `order`: its head, then the following
-    * migrations on the same namespace up to a limit or Stream migration
-    * (which run alone) or the first Manual one (which ends it). */
+    * migrations on the same namespace, up to a Stream migration (which
+    * runs alone: its processor may drop or add rows). */
   private def nextGroup(order: Seq[MigrationSpec]): Seq[MigrationSpec] = {
-    def alone(s: MigrationSpec) =
-      s.options.limit > 0 || s.isInstanceOf[StreamMigration]
-    def ends(s: MigrationSpec) = s.isInstanceOf[ManualMigration]
+    def alone(s: MigrationSpec) = s.isInstanceOf[StreamMigration]
     val head = order.head
-    if (alone(head) || ends(head)) Seq(head)
-    else {
-      val more = order.tail.take(MigrationApp.MaxGroup - 1)
-        .takeWhile(s => s.options.ns == head.options.ns && !alone(s))
-      val cut = more.indexWhere(ends)
-      head +: (if (cut < 0) more else more.take(cut + 1))
-    }
+    if (alone(head)) Seq(head)
+    else head +: order.tail.take(MigrationApp.MaxGroup - 1)
+      .takeWhile(s => s.options.ns == head.options.ns && !alone(s))
   }
 
-  /** One migration at a time: the ledger gate, one read, transform and
-    * swap each, one ledger write each. */
+  /** One migration at a time: the ledger gate, then a group of one (one
+    * read, transform and swap), one ledger write each. */
   private def runAlone(group: Seq[MigrationSpec]): Seq[MigrationResult] =
     group.map { spec =>
-      val blocked = spec.options.dependsOn.filterNot(ledger.satisfied)
+      val deps = spec.options.dependsOn
+      val blocked = deps.filterNot(ledger.satisfied)
       val res =
         if (blocked.nonEmpty) blockedOn(spec, blocked)
-        else runOne(spec)
+        else execute(Seq(spec), deps.toSet).fold(failed(spec, _), _.head)
       if (!options.dryRun) ledger.record(metadata(res))
       res
     }
@@ -147,27 +148,32 @@ final class MigrationApp(
     * anything. */
   private def runGroup(group: Seq[MigrationSpec]): Seq[MigrationResult] = {
     val done = ledger.rows().filter(_.satisfied).map(_._id).toSet
-    val outcome =
-      if (options.dryRun) countGroup(group, done) else writeGroup(group, done)
-    outcome match {
-      case Some(results) =>
+    execute(group, done) match {
+      case Right(results) =>
         if (!options.dryRun) ledger.record(results.map(metadata): _*)
         results
-      case None => runAlone(group)
+      case Left(_) => runAlone(group)
     }
   }
 
+  /** A group's results, or what it threw before publishing anything.
+    * `done` holds the satisfied migrations outside the group. */
+  private def execute(group: Seq[MigrationSpec],
+      done: Set[String]): Either[Exception, Seq[MigrationResult]] =
+    if (options.dryRun) countGroup(group, done) else writeGroup(group, done)
+
   /** Dry run of a group: one scan of the unmodified table counts every
-    * member's matches, one `sum(when(pred))` column each. */
+    * member's matches, one `sum(when(pred))` column each (a limit
+    * member's predicate is its work list over that table). */
   private def countGroup(group: Seq[MigrationSpec],
-      done: Set[String]): Option[Seq[MigrationResult]] =
+      done: Set[String]): Either[Exception, Seq[MigrationResult]] =
     try {
-      val raw = graft.sources.Tables.load(spark, group.head.options.ns.path(root))
+      val raw = Tables.load(spark, group.head.options.ns.path(root))
       val preds = group.map { spec =>
         val blocked = spec.options.dependsOn.filterNot(done)
         if (blocked.nonEmpty) Left(blockedOn(spec, blocked))
         else try {
-          val pred = QueryCompiler.compile(spec.options.query)
+          val (pred, _) = predicate(spec, raw)
           raw.where(pred) // analysis only: a bad query fails alone
           Right(pred)
         } catch { case e: Exception => Left(failed(spec, e)) }
@@ -178,28 +184,36 @@ final class MigrationApp(
       val counts =
         if (sums.isEmpty) Iterator.empty
         else raw.agg(sums.head, sums.tail: _*).head().toSeq.iterator
-      Some(group.zip(preds).map {
+      Right(group.zip(preds).map {
         case (_, Left(r)) => r
         case (spec, Right(_)) => MigrationResult(spec.id,
           counts.next().asInstanceOf[Long], hasErrors = false)
       })
-    } catch { case _: Exception => None }
+    } catch { case e: Exception => Left(e) }
 
   /** A group's write: under one lease, one torn-swap recovery, one read,
     * each member's transform chained onto the previous member's frame,
-    * and one fenced swap. None when anything throws before the swap
-    * commits. */
+    * and one fenced swap. The lease spans the whole read→transform→swap
+    * window, so two apps migrating one namespace serialize (or fail fast
+    * after leaseWaitMs), never interleaving their swaps. The fence runs
+    * after the tmp write and before the commit rename
+    * ([[Tables.replace]]): a lease that changed hands
+    * ([[NamespaceLease.verifyHeld]]) or a limit member that matched more
+    * rows than its work list has keys aborts the swap with NOTHING
+    * mutated (only the orphaned `.tmp` remains, and the next swap's
+    * mode("overwrite") replaces it). Left when anything throws before
+    * the swap commits. */
   private def writeGroup(group: Seq[MigrationSpec],
-      done: Set[String]): Option[Seq[MigrationResult]] = {
+      done: Set[String]): Either[Exception, Seq[MigrationResult]] = {
     val ns = group.head.options.ns
     val path = ns.path(root)
     val ids = group.map(_.id).toSet
     var published = false
     try lease.withLease(ns) {
       recoverTornSwap(path)
-      var frame = graft.sources.Tables.load(spark, path)
-      val chained = collection.mutable.Map
-        .empty[String, org.apache.spark.sql.Observation]
+      var frame = Tables.load(spark, path)
+      val chained = collection.mutable.Map.empty[String, Observation]
+      val checks = collection.mutable.ListBuffer.empty[() => Unit]
       // a member's result when it is blocked or fails to compile
       val early = group.map { spec =>
         // a dependency inside the group counts only if that member is
@@ -208,158 +222,117 @@ final class MigrationApp(
           if (ids(d)) chained.contains(d) else done(d))
         if (blocked.nonEmpty) Some(blockedOn(spec, blocked))
         else try {
-          val obs = org.apache.spark.sql.Observation()
-          frame = transform(spec, frame,
-            QueryCompiler.compile(spec.options.query), obs)
+          val obs = Observation()
+          val (pred, check) = predicate(spec, frame)
+          frame = transform(spec, frame, pred, obs)
           chained(spec.id) = obs
+          checks ++= check.map(c => () => c(observed(obs)))
           None
         } catch { case e: Exception => Some(failed(spec, e)) }
       }
-      if (chained.nonEmpty) graft.sources.Tables.replace(frame, path,
-        fence = () => lease.verifyHeld(ns))
+      if (chained.nonEmpty) Tables.replace(frame, path,
+        fence = () => { lease.verifyHeld(ns); checks.foreach(_()) })
       published = true
-      Some(group.zip(early).map {
+      Right(group.zip(early).map {
         case (_, Some(r)) => r
         case (spec, None) =>
           try MigrationResult(spec.id, observed(chained(spec.id)),
             hasErrors = false)
           catch { case e: Exception => failed(spec, e) }
       })
-    } catch { case _: Exception if !published => None }
+    } catch { case e: Exception if !published => Left(e) }
   }
 
   /** Count of documents still matching a migration's query — reference
     * PendingMigrationOperations (migration_helper_legacy.go:101-120). */
   def pendingMigrationOperations(spec: MigrationSpec): Long = {
-    val df = graft.sources.Tables.load(spark, spec.options.ns.path(root))
+    val df = Tables.load(spark, spec.options.ns.path(root))
     df.where(QueryCompiler.compile(spec.options.query)).count()
   }
 
-  /** Dry runs only read — no lease. Real runs hold the namespace lease
-    * across the whole read→transform→swap window, so two apps migrating
-    * the same namespace serialize (or fail fast after leaseWaitMs) —
-    * never interleave the directory swap. */
-  private def runOne(spec: MigrationSpec): MigrationResult =
-    if (options.dryRun) runOneInner(spec)
-    else try lease.withLease(spec.options.ns)(runOneInner(spec))
-    catch {
-      case e: IllegalStateException => // lease acquisition failed fast
-        MigrationResult(spec.id, 0, hasErrors = true, Some(e.getMessage))
-    }
-
-  private def runOneInner(spec: MigrationSpec): MigrationResult = {
+  /** The rows of `df` that `spec` migrates, and for a limit migration
+    * the check of the write's matched count against its work list.
+    * Limit semantics (generator_simple.go:77-79,127-129): cap the rows
+    * migrated, selected deterministically by a sorted work list of at
+    * most `limit` keys. One job collects the keys (driver state bounded
+    * by `limit`); the rows are marked by key-set membership, which adds
+    * no join and no exchange to the write. The job runs on `df` without
+    * its observe nodes, so the earlier members' matched counts still
+    * come from the write. The key must identify rows: a key that turns
+    * out not unique over-applies the limit, which the check reports. */
+  private def predicate(spec: MigrationSpec,
+      df: DataFrame): (Column, Option[Long => Unit]) = {
     val opts = spec.options
-    val path = opts.ns.path(root)
-    var workListFrame: Option[DataFrame] = None
-    try {
-      if (!options.dryRun) recoverTornSwap(path)
-      val raw = graft.sources.Tables.load(spark, path)
-      // Limit semantics (generator_simple.go:77-79,127-129): cap the rows
-      // migrated, selected deterministically (sorted work-list), marked via
-      // a key join rather than a driver-side collect so it scales. The join
-      // key must identify rows: workList keys are deduped so the left_outer
-      // join can never multiply source rows (the corruption hazard); raw
-      // keys that turn out non-unique only over-apply the limit, which the
-      // matched-vs-worklist check below surfaces as an error result.
-      val keyCol = opts.idColumn.getOrElse(raw.columns.head)
-      var workListKeys = -1L
-      val (df, pred) =
-        if (opts.limit > 0) {
-          val sortCols = graft.db.GraftQuery.parseSort(opts.sortBy) :+ col(keyCol)
-          val workList = raw.where(QueryCompiler.compile(opts.query))
-            .orderBy(sortCols: _*).limit(opts.limit)
-            .select(col(keyCol)).dropDuplicates(keyCol)
-            .withColumn("__hit", lit(true)).persist()
-          workListFrame = Some(workList)
-          workListKeys = workList.count()
-          val marked = raw.join(broadcast(workList), Seq(keyCol), "left_outer")
-          (marked, coalesce(col("__hit"), lit(false)))
-        } else (raw, QueryCompiler.compile(opts.query))
-      if (options.dryRun) {
-        // dry-run's whole purpose is the match count — one counting scan
-        val matched = df.where(pred).count()
-        return MigrationResult(spec.id, matched, hasErrors = false)
-      }
-
-      // Non-dry-run: the match count is OBSERVED inside the write job
-      // (CollectMetrics) rather than counted in a separate scan — one pass
-      // over the table per migration (db/wrapper.go's ChangeInfo comes back
-      // with the write for the same reason).
-      val obs = org.apache.spark.sql.Observation()
-      val out = transform(spec, df, pred, obs)
-      // the limit path validates AFTER the write (the matched count only
-      // exists once the write job ran), so its pre-swap backup must outlive
-      // the swap: on validation failure the original table is restored —
-      // a non-unique idColumn errors AND leaves the data un-migrated.
-      // `fence` is the data-path fencing check
-      // ([[NamespaceLease.verifyHeld]]), run after the (long) tmp write
-      // and immediately before the first commit rename: if the lease
-      // changed hands while this app was paused or slow, the swap aborts
-      // with NOTHING mutated (only the orphaned `.tmp` remains, and the
-      // next swap's mode("overwrite") replaces it).
-      val keepBackup = workListKeys >= 0
-      graft.sources.Tables.replace(out.drop("__hit"), path, keepBackup,
-        fence = () => lease.verifyHeld(spec.options.ns))
-      val matched = observed(obs)
-      if (workListKeys >= 0 && matched > workListKeys) {
-        restoreBackup(path)
-        throw new IllegalStateException(
+    val query = QueryCompiler.compile(opts.query)
+    if (opts.limit <= 0) (query, None)
+    else {
+      val keyCol = opts.idColumn.getOrElse(df.columns.head)
+      val sortCols = graft.db.GraftQuery.parseSort(opts.sortBy) :+ col(keyCol)
+      val top = PlanBridge.unobserved(df).where(query)
+        .orderBy(sortCols: _*).limit(opts.limit).select(col(keyCol))
+      val toCatalyst = CatalystTypeConverters
+        .createToCatalystConverter(top.schema.head.dataType)
+      val keys = top.collect().map(r => toCatalyst(r.get(0))).toSet
+      val hit = ColumnBridge.column(
+        InSet(ColumnBridge.expression(col(keyCol)), keys))
+      (coalesce(hit, lit(false)), Some { matched =>
+        if (matched > keys.size) throw new IllegalStateException(
           s"limit work-list key '$keyCol' is not unique in ${opts.ns}: " +
-            s"$matched rows matched ${workListKeys} work-list keys; " +
-            "the original table was restored from backup; configure " +
+            s"$matched rows matched ${keys.size} work-list keys; " +
+            "the table was left unchanged; configure " +
             "GeneratorOptions.idColumn with a unique column")
-      }
-      if (keepBackup) deleteBackup(path)
-      MigrationResult(spec.id, matched, hasErrors = false)
-    } catch {
-      case e: Exception =>
-        MigrationResult(spec.id, 0, hasErrors = true, Some(e.getMessage))
-    } finally workListFrame.foreach(_.unpersist(false))
+      })
+    }
   }
 
   /** One migration's transform of `df`, its match count observed into
     * `obs`. Throws when the update or the registered op does not compile. */
-  private def transform(spec: MigrationSpec, df: DataFrame,
-      pred: org.apache.spark.sql.Column,
-      obs: org.apache.spark.sql.Observation): DataFrame = spec match {
+  private def transform(spec: MigrationSpec, df: DataFrame, pred: Column,
+      obs: Observation): DataFrame = spec match {
     case SimpleMigration(_, update) =>
-      val observed = df.observe(obs,
-        sum(when(pred, 1L).otherwise(0L)).as("matched"))
-      UpdateCompiler.applyUpdate(observed, pred, update)
+      UpdateCompiler.applyUpdate(observeMatched(df, pred, obs), pred, update)
     case ManualMigration(_, opName) =>
       val op = registries.operation(opName).getOrElse(throw new
         IllegalArgumentException(s"operation $opName is not registered"))
-      mapRows(df, pred, obs, it => it.map(op))
+      // one pass over the upstream, its partitioning kept: every row goes
+      // through, and only the matching ones reach the op (a null
+      // predicate does not match)
+      val schema = df.schema
+      val n = schema.length
+      observeMatched(df, pred, obs)
+        .select(col("*"), coalesce(pred, lit(false)))
+        .mapPartitions(_.map { r =>
+          val row = new GenericRowWithSchema(Array.tabulate(n)(r.get), schema)
+          if (r.getBoolean(n)) op(row) else row
+        })(Encoders.row(schema))
     case StreamMigration(_, procName) =>
       val proc = registries.processor(procName).getOrElse(throw new
         IllegalArgumentException(s"processor $procName is not registered"))
-      mapRows(df, pred, obs, proc)
+      // the processor consumes the whole matching stream and may drop or
+      // add rows: the matching rows go through it, the others are kept.
+      // The count is observed before the processor, on the matching side
+      // only, so the union's other side never double-counts.
+      val transformed = df.where(pred)
+        .observe(obs, count(lit(1)).as("matched"))
+        .mapPartitions(proc)(Encoders.row(df.schema))
+      df.where(!coalesce(pred, lit(false))).unionByName(transformed)
   }
+
+  /** The match count is OBSERVED inside the write job (CollectMetrics),
+    * not counted in a separate scan (db/wrapper.go's ChangeInfo comes
+    * back with the write for the same reason). */
+  private def observeMatched(df: DataFrame, pred: Column,
+      obs: Observation): DataFrame =
+    df.observe(obs, sum(when(pred, 1L).otherwise(0L)).as("matched"))
 
   /** The match count a write observed. Blocking get: the write executed
     * the CollectMetrics node, the listener delivers the row
     * asynchronously moments later. */
-  private def observed(obs: org.apache.spark.sql.Observation): Long =
+  private def observed(obs: Observation): Long =
     obs.get.get("matched") match {
       case Some(n: Number) => n.longValue()
       case _ => 0L
     }
-
-  /** Imperative path (manual/stream): matching rows pass through the user
-    * function per partition; non-matching rows are preserved. Requires the
-    * function to keep the schema. The matched count is observed on the
-    * matching branch (before the user function, which may drop rows), so
-    * the union's other branch never double-counts. */
-  private def mapRows(df: DataFrame, pred: org.apache.spark.sql.Column,
-      obs: org.apache.spark.sql.Observation,
-      f: Iterator[Row] => Iterator[Row]): DataFrame = {
-    val schema = df.schema
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val transformed = df.where(pred)
-      .observe(obs, count(lit(1)).as("matched"))
-      .mapPartitions(f)(enc)
-    df.where(!coalesce(pred, lit(false))).unionByName(transformed)
-  }
 
   // resolved from the ROOT path, not fs.defaultFS: the tmp/bak/commit
   // renames must run on the filesystem that actually holds the tables
@@ -369,7 +342,7 @@ final class MigrationApp(
   private def fs = new org.apache.hadoop.fs.Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Crash recovery for the table swap ([[graft.sources.Tables.replace]]),
+  /** Crash recovery for the table swap ([[Tables.replace]]),
     * run under the namespace lease before touching the table. The only
     * torn state a crash can leave (every step is an atomic rename) is
     * "table renamed away to `.bak`, replacement not yet renamed in": roll
@@ -391,15 +364,6 @@ final class MigrationApp(
       fs.delete(new org.apache.hadoop.fs.Path(path + ".tmp"), true)
     }
   }
-
-  private def restoreBackup(path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + ".bak")
-    if (fs.exists(bak)) { fs.delete(p, true); fs.rename(bak, p) }
-  }
-
-  private def deleteBackup(path: String): Unit =
-    fs.delete(new org.apache.hadoop.fs.Path(path + ".bak"), true)
 }
 
 /** Per-namespace write lease making the atomic-swap write path safe under

@@ -115,13 +115,14 @@ object Tables {
 
   /** Replaces the table at `path` with `df` without ever losing it —
     * the one table swap (`$out`, `$merge`, migration write-back). `df` is
-    * written to `<path>.tmp`; `fence` runs (a migration's lease check);
-    * the old table steps aside to `<path>.bak`; the tmp is renamed in;
-    * `.bak` is deleted unless `keepBackup`. Every step is a rename, so
-    * the old table survives a failure anywhere: a failed rename in moves
-    * it back here, and a crash between the renames leaves it at `.bak`
-    * (MigrationApp rolls that back before its next write). */
-  def replace(df: DataFrame, path: String, keepBackup: Boolean = false,
+    * written to `<path>.tmp`; `fence` runs (a migration's lease and
+    * limit checks), and when it throws nothing else happens; the old
+    * table steps aside to `<path>.bak`; the tmp is renamed in; `.bak` is
+    * deleted. Every step is a rename, so the old table survives a
+    * failure anywhere: a failed rename in moves it back here, and a
+    * crash between the renames leaves it at `.bak` (MigrationApp rolls
+    * that back before its next write). */
+  def replace(df: DataFrame, path: String,
       fence: () => Unit = () => ()): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
@@ -140,8 +141,7 @@ object Tables {
     // best effort: the swap has committed, so a failure here must not
     // report the write as failed; a `.bak` left behind is cleared by the
     // next swap
-    if (!keepBackup)
-      try fs.delete(bak, true) catch { case _: java.io.IOException => () }
+    try fs.delete(bak, true) catch { case _: java.io.IOException => () }
   }
 
   /** What the footer Spark's inference reads says about a table: the schema

@@ -674,15 +674,17 @@ class MigrationAppSpec extends SparkSpec {
     def ledger(r: String) =
       new MetadataLedger(spark, s"$r/anser_migrations_metadata").rows()
     assert(ledger(fusedRoot) == ledger(singleRoot))
+    for (c <- colls)
+      assert(!new java.io.File(s"$fusedRoot/$c.parquet.bak").exists(), c)
     fused
   }
 
   test("fused groups equal one migration at a time: two interleaved " +
       "namespaces, Manual, Stream and limit members") {
     // order: b1 b2 a1 a2 | a3 a4 d1 s1 l1 | a5 a6; groups [b1 b2],
-    // [a1 a2 a3 a4] (a3 needs a2 and a4 needs a1, inside the group; the
-    // Manual a4 ends it), [d1] (needs a1, across namespaces), [s1] and
-    // [l1] alone, [a5 a6]
+    // [a1 a2 a3 a4] (a3 needs a2 and a4 needs a1, inside the group),
+    // [d1] (needs a1, across namespaces), [s1] alone (Stream), [l1]
+    // (the next migration is on the other namespace), [a5 a6]
     val ms = Seq(
       SimpleMigration(mig("b1", "other", query = Map("cat" -> "y")),
         Map("$set" -> Map("cat" -> "o"))),
@@ -758,6 +760,180 @@ class MigrationAppSpec extends SparkSpec {
     assert(jobs == 64 / MigrationApp.MaxGroup)
   }
 
+  test("fused groups equal one migration at a time: a limit member " +
+      "after a Manual member and before a dependent member") {
+    // one group p1 p5 | p2 | p3 | p4: the limit p3 picks its work list
+    // over the frame p1, p5 and the Manual p2 leave, and p4 reads p3's
+    // marks
+    val ms = Seq(
+      SimpleMigration(mig("p1", "items", query = Map("cat" -> "x")),
+        Map("$set" -> Map("cat" -> "done"))),
+      ManualMigration(mig("p2", "items", Seq("p1"),
+        Map("v" -> Map("$gte" -> 6.0))), "double-n"),
+      SimpleMigration(mig("p3", "items", Seq("p2"),
+        Map("n" -> Map("$gt" -> 40L)), limit = 3),
+        Map("$set" -> Map("cat" -> "top"))),
+      SimpleMigration(mig("p4", "items", Seq("p3"), Map("cat" -> "top")),
+        Map("$inc" -> Map("n" -> 1L))),
+      SimpleMigration(mig("p5", "items"), Map("$mul" -> Map("v" -> 2.0))))
+    val res = assertParity(ms, Seq("items"))
+    assert(res.map(r => (r.id, r.matched, r.hasErrors)).sortBy(_._1) == Seq(
+      ("p1", 2L, false), ("p2", 7L, false), ("p3", 3L, false),
+      ("p4", 3L, false), ("p5", 8L, false)), res)
+  }
+
+  test("fused groups equal one migration at a time: two limit members " +
+      "in one group, and one whose work list is empty") {
+    val ms = Seq(
+      SimpleMigration(mig("q1", "items", query = Map("cat" -> "y"),
+        limit = 2), Map("$set" -> Map("cat" -> "top"))),
+      SimpleMigration(mig("q2", "items", Seq("q1"), limit = 3),
+        Map("$inc" -> Map("n" -> 1L))),
+      SimpleMigration(mig("q3", "items", Seq("q2"), Map("cat" -> "top")),
+        Map("$mul" -> Map("v" -> 2.0))),
+      SimpleMigration(mig("q4", "items", Seq("q3"), Map("cat" -> "none"),
+        limit = 2), Map("$set" -> Map("cat" -> "never"))))
+    val res = assertParity(ms, Seq("items"))
+    assert(res.map(r => (r.id, r.matched, r.hasErrors)) == Seq(
+      ("q1", 2L, false), ("q2", 3L, false), ("q3", 2L, false),
+      ("q4", 0L, false)), res)
+    // the top two y rows by v (7 and 4), then the top three of all (8,
+    // 7 and 6), each marked exactly once
+    val root = freshRoot()
+    table(root, "items")
+    new MigrationApp(spark, root).setup(ms).run()
+    assert(spark.read.parquet(s"$root/items.parquet").orderBy("_id")
+      .select("_id", "cat", "n").collect().map(_.toString).toSeq == Seq(
+        "[1,y,10]", "[2,z,20]", "[3,x,30]", "[4,top,40]", "[5,z,50]",
+        "[6,x,61]", "[7,top,71]", "[8,z,81]"))
+  }
+
+  test("fused groups equal one migration at a time: a limit with a " +
+      "non-unique key aborts its group before the commit") {
+    // one group u1 u4 | u2 | u3; u2's key `cat` is not unique, so the
+    // group's fence throws after the tmp write, nothing is published,
+    // and the members re-run one at a time: u1 and u4 commit, u2 errors
+    // with the table left unchanged, u3 is blocked on it
+    val ms = Seq(
+      SimpleMigration(mig("u1", "items", query = Map("cat" -> "x")),
+        Map("$set" -> Map("cat" -> "done"))),
+      SimpleMigration(mig("u2", "items", Seq("u1"), limit = 2)
+        .copy(idColumn = Some("cat")), Map("$set" -> Map("legacy" -> "lim"))),
+      SimpleMigration(mig("u3", "items", Seq("u2")),
+        Map("$inc" -> Map("n" -> 1L))),
+      SimpleMigration(mig("u4", "items"), Map("$mul" -> Map("v" -> 2.0))))
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val root = freshRoot()
+    table(root, "items")
+    val app = new MigrationApp(spark, s"counting://$root").setup(ms)
+    CountingFileSystem.renames.clear()
+    val direct = app.run()
+    // the group's swap never renamed its table away: only the two
+    // one-at-a-time swaps of u1 and u4 did
+    val renamed = CountingFileSystem.renames.asScala.toSeq
+    assert(renamed.count(_._1.endsWith("/items.parquet")) == 2, renamed)
+    val res = assertParity(ms, Seq("items"))
+    assert(comparable(res) == comparable(direct))
+    assert(res.map(r => (r.id, r.hasErrors)).sortBy(_._1) == Seq(
+      ("u1", false), ("u2", true), ("u3", true), ("u4", false)), res)
+    val u2 = res.find(_.id == "u2").get.error.get
+    assert(u2.contains("not unique") && u2.contains("left unchanged"), u2)
+    assert(res.find(_.id == "u3").get.error.get.contains("blocked"))
+    assert(spark.read.parquet(s"$root/items.parquet")
+      .where($"legacy" === "lim").count() == 0)
+  }
+
+  test("a migrate-shaped DAG on one collection: at most two jobs, one " +
+      ".tmp swap, one ledger write, the input's file count") {
+    // $set, $inc, $rename+$unset, Manual and limit+sortBy in three topo
+    // layers: one group, whose limit member adds one work-list job
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.counting.impl", classOf[CountingFileSystem].getName)
+    val local = freshRoot()
+    table(local, "items")
+    def files = new java.io.File(s"$local/items.parquet").list()
+      .count(_.endsWith(".parquet"))
+    val before = files
+    val root = s"counting://$local"
+    val ms = Seq(
+      SimpleMigration(mig("m_set", "items",
+        query = Map("v" -> Map("$lt" -> 5.0))), Map("$set" -> Map("cat" -> "low"))),
+      SimpleMigration(mig("m_inc", "items",
+        query = Map("v" -> Map("$gt" -> 10.0))), Map("$inc" -> Map("n" -> 5L))),
+      SimpleMigration(mig("m_rename", "items", Seq("m_set"),
+        Map("cat" -> "low")), scala.collection.immutable.ListMap(
+        "$rename" -> Map("legacy" -> "note"), "$unset" -> Map("cat" -> ""))),
+      SimpleMigration(mig("m_limit", "items", Seq("m_rename", "m_manual"),
+        Map("cat" -> "z"), limit = 1).copy(idColumn = Some("_id")),
+        Map("$set" -> Map("cat" -> "top"))),
+      ManualMigration(mig("m_manual", "items", Seq("m_inc"),
+        Map("v" -> Map("$gte" -> 9.0))), "double-n"))
+    val app = new MigrationApp(spark, root, registries = parityRegistries)
+      .setup(ms)
+    CountingFileSystem.renames.clear()
+    val (res, jobs) = jobsIn(app.run())
+    assert(res.map(r => (r.id, r.matched, r.hasErrors)).sortBy(_._1) == Seq(
+      ("m_inc", 2L, false), ("m_limit", 1L, false), ("m_manual", 3L, false),
+      ("m_rename", 3L, false), ("m_set", 3L, false)), res)
+    assert(jobs <= 2, s"$jobs jobs")
+    val renamed = CountingFileSystem.renames.asScala.toSeq
+    assert(renamed.count(_._1.endsWith("/items.parquet.tmp")) == 1, renamed)
+    assert(renamed.count(_._1.endsWith("/anser_migrations_metadata.tmp")) == 1,
+      renamed)
+    assert(files == before)
+    assert(spark.read.parquet(s"$root/items.parquet")
+      .where($"cat" === "top").select("_id").as[Long].collect().sorted
+      .toSeq == Seq(8L))
+    assert(assertParity(ms, Seq("items")).forall(!_.hasErrors))
+  }
+
+  test("an action on the unobserved plan binds none of its Observations") {
+    import org.apache.spark.sql.functions.{count, lit}
+    def observedRange(obs: org.apache.spark.sql.Observation) =
+      spark.range(0, 100, 1, 4).toDF().observe(obs, count(lit(1)).as("n"))
+    // the hazard: a limit reads only the first partition, and the
+    // Observation keeps the partial count of that first action
+    val bound = org.apache.spark.sql.Observation()
+    val plain = observedRange(bound)
+    plain.limit(1).collect()
+    plain.collect()
+    assert(bound.get("n") != 100L)
+    val obs = org.apache.spark.sql.Observation()
+    val df = observedRange(obs)
+    org.apache.spark.sql.graftbridge.PlanBridge.unobserved(df).limit(1)
+      .collect()
+    df.collect()
+    assert(obs.get("n") == 100L)
+  }
+
+  test("a Manual member's op sees only the matching rows; a null " +
+      "predicate does not match") {
+    // legacy > "L3": true for L5, L6 and L7, false for L1..L3, and SQL
+    // NULL for the rows whose legacy is null (4 and 8)
+    val root = freshRoot()
+    table(root, "items")
+    val regs = new Registries
+    regs.registerOperation("record-and-double", row => {
+      val id = row.getLong(row.fieldIndex("_id"))
+      ManualOpSeen.ids.add(id)
+      val i = row.fieldIndex("n")
+      Row.fromSeq(row.toSeq.updated(i, row.getLong(i) * 2L))
+    })
+    ManualOpSeen.ids.clear()
+    val app = new MigrationApp(spark, root, registries = regs).setup(Seq(
+      SimpleMigration(mig("s1", "items"), Map("$inc" -> Map("v" -> 1.0))),
+      ManualMigration(mig("op", "items", Seq("s1"),
+        Map("legacy" -> Map("$gt" -> "L3"))), "record-and-double")))
+    val res = app.run()
+    assert(res.map(r => (r.id, r.matched, r.hasErrors)) ==
+      Seq(("s1", 8L, false), ("op", 3L, false)), res)
+    assert(ManualOpSeen.ids.asScala.toSeq.sorted == Seq(5L, 6L, 7L))
+    assert(spark.read.parquet(s"$root/items.parquet").orderBy("_id")
+      .select("n").as[Long].collect().toSeq ==
+      Seq(10L, 20L, 30L, 40L, 100L, 120L, 140L, 80L))
+  }
+
   test("dry run counts a group's matches in one scan, as one at a time") {
     val ms = Seq(
       SimpleMigration(mig("m1", "items", query = Map("cat" -> "x")),
@@ -820,6 +996,12 @@ class CountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     CountingFileSystem.renames.add((src.toString, dst.toString))
     super.rename(src, dst)
   }
+}
+
+/** The `_id`s a Manual spec's op was called with (local mode: the
+  * executors share the driver's JVM). */
+object ManualOpSeen {
+  val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
 }
 
 object CountingFileSystem {
